@@ -432,3 +432,17 @@ def test_compiled_codecs_match_interpreters_exactly():
     ]:
         assert (to_native_c(payload)
                 == ConnectToAvro().to_native(cschema, payload))
+
+
+@pytest.mark.parametrize("union", [
+    ["null", "long", "string"],  # more than one value branch
+    ["long", "string"],          # no null branch
+    ["null", "null"],            # no value branch
+])
+def test_compiled_encoder_rejects_non_optional_unions(union):
+    from ticdc_spark.codec.debezium_avro import compile_avro_encoder
+
+    schema = {"type": "record", "name": "T", "fields": [
+        {"name": "u", "type": union}]}
+    with pytest.raises(ValueError, match=r"only \[null, T\] unions"):
+        compile_avro_encoder(schema, {})

@@ -91,13 +91,24 @@ def test_multi_batch_record_set():
     assert [(o, len(rs)) for o, rs in out] == [(0, 1), (1, 2)]
 
 
-def test_zstd_content_size_parse():
+def test_zstd_batch_without_content_size(monkeypatch):
+    """A streaming zstd frame (no Frame_Content_Size, RFC 8878 §3.1.1.1)
+    is a legal batch payload: other producers write them."""
     import pyarrow as pa
 
-    for n in (0, 1, 100, 1 << 17):
-        payload = b"z" * n
-        frame = pa.compress(payload, codec="zstd", asbytes=True)
-        assert kw._zstd_content_size(frame) == n
+    def streaming_zstd(codec, payload):
+        sink = pa.BufferOutputStream()
+        with pa.CompressedOutputStream(sink, "zstd") as out:
+            out.write(payload)
+        frame = sink.getvalue().to_pybytes()
+        assert frame[4] >> 6 == 0 and not frame[4] & 0x20  # no content size
+        return frame
+
+    monkeypatch.setattr(kw, "_compress", streaming_zstd)
+    batch = kw.encode_record_batch(_recs(), compression="zstd")
+    monkeypatch.undo()
+    [(_, recs)] = kw.decode_record_batches(batch)
+    assert [r.value for r in recs] == [b"v1" * 50, b"tombstone-value", None, b""]
 
 
 # ------------------------------------------------------------------ framing
@@ -147,13 +158,21 @@ def test_live_handshake_metadata_produce_fetch(broker):
         assert c.fetch_all("topic-a", 0) == []
 
 
-def test_live_corrupt_batch_rejected(broker):
+def test_live_corrupt_batch_rejected(broker, monkeypatch):
+    bad_crc = bytearray(kw.encode_record_batch([Record(b"a", b"b")]))
+    bad_crc[-1] ^= 0xFF
+    # a valid CRC32C over an LZ4 frame whose one block is garbage: the
+    # codec's error must map to CORRUPT_MESSAGE, not drop the connection
+    garbage_frame = (bytes.fromhex("04224d18604082") + b"\x08\x00\x00\x00"
+                     + b"\xff" * 8 + b"\x00" * 4)
+    monkeypatch.setattr(kw, "_compress", lambda codec, payload: garbage_frame)
+    bad_lz4 = kw.encode_record_batch([Record(b"a", b"b")], compression="lz4")
+    monkeypatch.undo()
     with KafkaConn.from_bootstrap(broker.bootstrap) as c:
-        rs = bytearray(kw.encode_record_batch([Record(b"a", b"b")]))
-        rs[-1] ^= 0xFF
-        resp = kw.dec_produce_response(
-            c._call(kw.API_PRODUCE, 3, kw.enc_produce_request({"t": {0: bytes(rs)}})))
-        assert resp["t"][0] == (2, -1)  # CORRUPT_MESSAGE
+        for rs in (bytes(bad_crc), bad_lz4):
+            resp = kw.dec_produce_response(
+                c._call(kw.API_PRODUCE, 3, kw.enc_produce_request({"t": {0: rs}})))
+            assert resp["t"][0] == (2, -1)  # CORRUPT_MESSAGE
         # log untouched
         assert broker.high_watermark("t", 0) == 0
 

@@ -345,10 +345,13 @@ def avro_decode(buf: bytes, pos: int, schema, named: dict):
 def compile_avro_encoder(schema, named: dict):
     """avro_encode specialized to ``schema`` -> fn(value) -> bytes."""
     schema = _resolve(schema, named)
-    if isinstance(schema, list):  # union — all are ["null", T] here
+    if isinstance(schema, list):  # union: only ["null", T] is encodable
+        if len(schema) != 2 or schema.count("null") != 1:
+            raise ValueError(
+                f"only [null, T] unions are supported, got {schema!r}")
         null_tag = zigzag_encode(schema.index("null"))
-        bi, branch = next((i, b) for i, b in enumerate(schema)
-                          if b != "null")
+        bi = 1 - schema.index("null")
+        branch = schema[bi]
         tag = zigzag_encode(bi)
         enc = compile_avro_encoder(branch, named)
         return lambda v: null_tag if v is None else tag + enc(v)

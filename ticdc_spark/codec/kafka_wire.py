@@ -17,9 +17,8 @@ ApiVersions exchange (v3 first, v0 down-negotiation on error 35):
 
 Shared by both families: record batch magic v2 with CRC32C (Castagnoli)
 over attributes..end and zigzag-varint record bodies; compression codecs
-none/gzip/lz4/zstd (lz4 = LZ4 frame, via this repo's pure-Python codec;
-zstd via pyarrow); KIP-98 idempotent/transactional batch attributes and
-control records.
+none/gzip/lz4/zstd (lz4 = LZ4 frame; see codec/compression.py); KIP-98
+idempotent/transactional batch attributes and control records.
 
 Reference behavior being reproduced: `pkg/sink/kafka/*` drives sarama/franz-go
 producers speaking exactly these frames; this module lets the Spark sink
@@ -31,8 +30,9 @@ All from the public spec — no reference code consulted for bytes.
 from __future__ import annotations
 
 import struct
-import zlib
 from dataclasses import dataclass, field
+
+from ticdc_spark.codec import native_accel as _na
 
 # ---------------------------------------------------------------- crc32c
 
@@ -55,19 +55,9 @@ def _make_tables(n: int = 8) -> list[list[int]]:
 
 _T = _make_tables(8)
 
-try:  # C kernel (byte-exact — see native_accel.py); optional
-    from ticdc_spark.codec import native_accel as _na
 
-    _NATIVE = _na.LIB is not None
-except Exception:  # noqa: BLE001 — accelerator only, never required
-    _na = None
-    _NATIVE = False
-
-
-def crc32c(data: bytes, crc: int = 0) -> int:
+def _crc32c_py(data: bytes, crc: int = 0) -> int:
     """CRC-32C (Castagnoli), slicing-by-8. crc32c(b"123456789") == 0xE3069283."""
-    if _NATIVE:  # C kernel (exact function — see native_accel.py)
-        return _na.crc32c(data, crc)
     crc = crc ^ 0xFFFFFFFF
     n = len(data)
     i = 0
@@ -91,6 +81,11 @@ def crc32c(data: bytes, crc: int = 0) -> int:
         crc = t0[(crc ^ data[i]) & 0xFF] ^ (crc >> 8)
         i += 1
     return crc ^ 0xFFFFFFFF
+
+
+# the C kernel when the host could build it (same function — see
+# native_accel.py), else the pure-Python loop above
+crc32c = _na.crc32c if _na.LIB is not None else _crc32c_py
 
 
 # ---------------------------------------------------------------- primitives
@@ -245,66 +240,30 @@ _CODEC_NAMES = {
     "lz4": COMPRESSION_LZ4,
     "zstd": COMPRESSION_ZSTD,
 }
+_CODEC_IDS = {v: k for k, v in _CODEC_NAMES.items()}
+
+
+def _codec_name(codec: int) -> str:
+    """The codec/compression.py name for a batch's compression bits."""
+    if codec not in _CODEC_IDS:
+        raise ValueError(f"unsupported kafka compression codec {codec}")
+    return _CODEC_IDS[codec]
 
 
 def _compress(codec: int, payload: bytes) -> bytes:
     if codec == COMPRESSION_NONE:
         return payload
-    if codec == COMPRESSION_GZIP:
-        import gzip
+    from ticdc_spark.codec import compression
 
-        return gzip.compress(payload, mtime=0)
-    if codec == COMPRESSION_LZ4:
-        from ticdc_spark.codec.lz4_snappy import lz4_frame_compress
-
-        return lz4_frame_compress(payload)
-    if codec == COMPRESSION_ZSTD:
-        import pyarrow as pa
-
-        return pa.compress(payload, codec="zstd", asbytes=True)
-    raise ValueError(f"unsupported kafka compression codec {codec}")
+    return compression.compress(_codec_name(codec), payload)
 
 
 def _decompress(codec: int, payload: bytes) -> bytes:
     if codec == COMPRESSION_NONE:
         return payload
-    if codec == COMPRESSION_GZIP:
-        import gzip
+    from ticdc_spark.codec import compression
 
-        return gzip.decompress(payload)
-    if codec == COMPRESSION_LZ4:
-        from ticdc_spark.codec.lz4_snappy import lz4_frame_decompress
-
-        return lz4_frame_decompress(payload)
-    if codec == COMPRESSION_ZSTD:
-        import pyarrow as pa
-
-        # Kafka doesn't prefix a decompressed length for zstd batches, but
-        # the zstd frame header (RFC 8878 §3.1.1.1) carries the content size
-        # when written non-streaming — parse it for pyarrow's API.
-        size = _zstd_content_size(payload)
-        return pa.decompress(payload, decompressed_size=size, codec="zstd", asbytes=True)
-    raise ValueError(f"unsupported kafka compression codec {codec}")
-
-
-def _zstd_content_size(frame: bytes) -> int:
-    if frame[:4] != b"\x28\xb5\x2f\xfd":
-        raise ValueError("not a zstd frame")
-    fhd = frame[4]
-    fcs_flag = fhd >> 6
-    single_segment = (fhd >> 5) & 1
-    dict_flag = fhd & 0x03
-    pos = 5 + (0 if single_segment else 1)
-    pos += (0, 1, 2, 4)[dict_flag]
-    if fcs_flag == 0:
-        if not single_segment:
-            raise ValueError("zstd frame has no content size (streaming frame)")
-        return frame[pos]
-    if fcs_flag == 1:
-        return struct.unpack_from("<H", frame, pos)[0] + 256
-    if fcs_flag == 2:
-        return struct.unpack_from("<I", frame, pos)[0]
-    return struct.unpack_from("<Q", frame, pos)[0]
+    return compression.decompress(_codec_name(codec), payload)
 
 
 @dataclass

@@ -1,42 +1,28 @@
-"""Native (C, via ctypes) kernels for the byte-level codec hot loops.
+"""Native (C, via ctypes) crc32c kernel for the Kafka and Pulsar wire.
 
-The wire/codec paths checksum and (de)compress every payload byte in
-pure Python — crc32c ~5 MB/s, LZ4 block ~2 MB/s on this interpreter —
-which dominates the live-wire round-trip walls (guide §4.2: hand whole
-buffers to native code; the Python layer keeps doing the protocol
-framing).  This module compiles a ~300-line C translation of exactly
-those kernels with the system compiler ONCE per host (cached under the
-temp dir, keyed by the source hash, atomic rename so concurrent Spark
-workers race benignly) and exposes them via ctypes.
+Every record batch (Kafka) and every frame (Pulsar) carries a CRC-32C
+(Castagnoli) over its payload.  The pure-Python slicing-by-8 loop in
+``kafka_wire._crc32c_py`` runs at ~5 MB/s, which dominated the live-wire
+round trips, so this module hands whole buffers to a small C kernel
+built once per host (``ticdc_spark/native_build.py``).  Compression is
+not here: pyarrow ships native lz4/snappy/zstd (``codec/compression.py``)
+but no crc32c.
 
-Byte-exactness contract: the C compressors are line-by-line ports of
-the pure-Python ones in ``lz4_snappy.py`` (same greedy hash-table
-match search, same emit rules), so compressed OUTPUT BYTES are
-identical — message-size gates (max-message-bytes, claim-check
-thresholds) and every golden test see no difference.  The hash/CRC
-kernels are exact functions.  The decompressors return an error code
-on any malformed stream and the caller falls back to the pure-Python
-implementation, which raises the pinned error message — native handles
-only the (universal) well-formed case.
-
-If no compiler is available or anything fails, ``LIB`` stays ``None``
-and every consumer keeps the pure-Python path: this module is a
-strict accelerator, never a dependency.
+The kernel computes the same function as the Python loop and is checked
+against the public vector before use.  If no compiler is available or
+anything fails, ``LIB`` stays ``None`` and ``kafka_wire.crc32c`` is the
+Python loop: this module is a strict accelerator, never a dependency.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import tempfile
+
+from ticdc_spark.native_build import load_c_library
 
 _C_SOURCE = r"""
 #include <stdint.h>
 #include <stddef.h>
-#include <string.h>
-#include <stdlib.h>
 
 /* ------------------------------------------------ crc32c (Castagnoli) */
 /* slicing-by-8; tables generated on first call (benign race: idempotent) */
@@ -73,434 +59,25 @@ uint32_t ticdc_crc32c(const uint8_t *data, size_t n, uint32_t crc) {
         crc = CT[0][(crc ^ data[i]) & 0xFF] ^ (crc >> 8);
     return crc ^ 0xFFFFFFFFu;
 }
-
-/* ------------------------------------------------ xxHash32 */
-#define XXP1 2654435761u
-#define XXP2 2246822519u
-#define XXP3 3266489917u
-#define XXP4  668265263u
-#define XXP5  374761393u
-
-static inline uint32_t rotl32(uint32_t x, int r) {
-    return (x << r) | (x >> (32 - r));
-}
-static inline uint32_t rd32le(const uint8_t *p) {
-    return (uint32_t)p[0] | ((uint32_t)p[1] << 8)
-         | ((uint32_t)p[2] << 16) | ((uint32_t)p[3] << 24);
-}
-
-uint32_t ticdc_xxh32(const uint8_t *data, size_t n, uint32_t seed) {
-    size_t i = 0;
-    uint32_t h;
-    if (n >= 16) {
-        uint32_t v1 = seed + XXP1 + XXP2, v2 = seed + XXP2;
-        uint32_t v3 = seed, v4 = seed - XXP1;
-        while (i + 16 <= n) {
-            v1 = rotl32(v1 + rd32le(data + i)      * XXP2, 13) * XXP1;
-            v2 = rotl32(v2 + rd32le(data + i + 4)  * XXP2, 13) * XXP1;
-            v3 = rotl32(v3 + rd32le(data + i + 8)  * XXP2, 13) * XXP1;
-            v4 = rotl32(v4 + rd32le(data + i + 12) * XXP2, 13) * XXP1;
-            i += 16;
-        }
-        h = rotl32(v1, 1) + rotl32(v2, 7) + rotl32(v3, 12) + rotl32(v4, 18);
-    } else {
-        h = seed + XXP5;
-    }
-    h += (uint32_t)n;
-    while (i + 4 <= n) {
-        h = rotl32(h + rd32le(data + i) * XXP3, 17) * XXP4;
-        i += 4;
-    }
-    while (i < n) {
-        h = rotl32(h + (uint32_t)data[i] * XXP5, 11) * XXP1;
-        i++;
-    }
-    h ^= h >> 15; h *= XXP2;
-    h ^= h >> 13; h *= XXP3;
-    h ^= h >> 16;
-    return h;
-}
-
-/* ------------------------------------------------ LZ4 block format */
-/* exact port of lz4_snappy.lz4_block_compress: greedy, 16-bit
-   multiplicative hash, single-slot table (dict overwrite), limit n-12,
-   match extension capped at n-5 */
-static inline uint32_t hash4(const uint8_t *b, size_t i) {
-    uint32_t v = rd32le(b + i);
-    return (uint32_t)(((uint64_t)v * 2654435761ULL) >> 16) & 0xFFFF;
-}
-
-static size_t lz4_emit(uint8_t *out, size_t o, const uint8_t *src,
-                       size_t lit_start, size_t lit_len,
-                       int64_t match_len, uint32_t offset) {
-    unsigned tok_lit = lit_len >= 15 ? 15u : (unsigned)lit_len;
-    unsigned tok_mat = 0;
-    if (match_len >= 0) {
-        int64_t m = match_len - 4;
-        tok_mat = m >= 15 ? 15u : (unsigned)m;
-    }
-    out[o++] = (uint8_t)((tok_lit << 4) | tok_mat);
-    int64_t rest = (int64_t)lit_len - 15;
-    while (rest >= 0) {
-        out[o++] = rest >= 255 ? 255 : (uint8_t)rest;
-        rest -= 255;
-    }
-    memcpy(out + o, src + lit_start, lit_len);
-    o += lit_len;
-    if (match_len < 0) return o;
-    out[o++] = (uint8_t)(offset & 0xFF);
-    out[o++] = (uint8_t)((offset >> 8) & 0xFF);
-    rest = (match_len - 4) - 15;
-    while (rest >= 0) {
-        out[o++] = rest >= 255 ? 255 : (uint8_t)rest;
-        rest -= 255;
-    }
-    return o;
-}
-
-/* hash tables: per-thread statics with generation stamps, so a call on
-   a 400-byte payload does not pay a 512 KiB malloc+memset (the
-   per-value compression paths make millions of small calls) */
-static __thread int64_t lz4_tab[65536];
-static __thread uint32_t lz4_gen_mark[65536];
-static __thread uint32_t lz4_gen = 0;
-static __thread int64_t sn_tab[65536];
-static __thread uint32_t sn_gen_mark[65536];
-static __thread uint32_t sn_gen = 0;
-
-int64_t ticdc_lz4_block_compress(const uint8_t *src, size_t n,
-                                 uint8_t *out, size_t cap) {
-    (void)cap;  /* caller sizes out at n + n/255 + 64: worst case */
-    if (n == 0) { out[0] = 0; return 1; }
-    if (++lz4_gen == 0) {  /* wrapped: reset marks once per 2^32 calls */
-        memset(lz4_gen_mark, 0, sizeof(lz4_gen_mark));
-        lz4_gen = 1;
-    }
-    const uint32_t gen = lz4_gen;
-    int64_t *table = lz4_tab;
-    uint32_t *mark = lz4_gen_mark;
-    size_t anchor = 0, i = 0, o = 0;
-    int64_t limit = (int64_t)n - 12;
-    while ((int64_t)i <= limit) {
-        uint32_t h = hash4(src, i);
-        int64_t cand = (mark[h] == gen) ? table[h] : -1;
-        table[h] = (int64_t)i;
-        mark[h] = gen;
-        if (cand >= 0 && i - (size_t)cand <= 0xFFFF
-                && memcmp(src + cand, src + i, 4) == 0) {
-            size_t m_end = i + 4, c_end = (size_t)cand + 4;
-            size_t hard_end = n - 5;
-            while (m_end < hard_end && src[m_end] == src[c_end]) {
-                m_end++; c_end++;
-            }
-            int64_t match_len = (int64_t)(m_end - i);
-            o = lz4_emit(out, o, src, anchor, i - anchor, match_len,
-                         (uint32_t)(i - (size_t)cand));
-            i = m_end;
-            anchor = i;
-        } else {
-            i++;
-        }
-    }
-    o = lz4_emit(out, o, src, anchor, n - anchor, -1, 0);
-    return (int64_t)o;
-}
-
-/* returns bytes written; -1 = malformed/unsupported (caller falls back
-   to the Python decoder for the exact pinned error), -2 = cap too small */
-int64_t ticdc_lz4_block_decompress(const uint8_t *src, size_t n,
-                                   uint8_t *out, size_t cap) {
-    size_t i = 0, o = 0;
-    while (i < n) {
-        unsigned token = src[i++];
-        size_t lit_len = token >> 4;
-        if (lit_len == 15) {
-            for (;;) {
-                if (i >= n) return -1;
-                unsigned b = src[i++];
-                lit_len += b;
-                if (b != 255) break;
-            }
-        }
-        if (i + lit_len > n) return -1;
-        if (o + lit_len > cap) return -2;
-        memcpy(out + o, src + i, lit_len);
-        o += lit_len; i += lit_len;
-        if (i >= n) break;            /* last sequence: literals only */
-        if (i + 2 > n) return -1;
-        uint32_t offset = (uint32_t)src[i] | ((uint32_t)src[i+1] << 8);
-        i += 2;
-        if (offset == 0) return -1;
-        size_t match_len = (token & 0xF) + 4;
-        if ((token & 0xF) == 15) {
-            for (;;) {
-                if (i >= n) return -1;
-                unsigned b = src[i++];
-                match_len += b;
-                if (b != 255) break;
-            }
-        }
-        if (offset > o) return -1;
-        if (o + match_len > cap) return -2;
-        size_t start = o - offset;
-        for (size_t k = 0; k < match_len; k++)   /* overlap-legal copy */
-            out[o + k] = out[start + k];
-        o += match_len;
-    }
-    return (int64_t)o;
-}
-
-/* ------------------------------------------------ Snappy */
-static size_t snappy_uvarint(uint8_t *out, size_t o, uint64_t v) {
-    for (;;) {
-        uint8_t b = v & 0x7F;
-        v >>= 7;
-        if (v) out[o++] = b | 0x80;
-        else { out[o++] = b; return o; }
-    }
-}
-
-static size_t snappy_literal(uint8_t *out, size_t o, const uint8_t *data,
-                             size_t n) {
-    if (n == 0) return o;
-    if (n <= 60) {
-        out[o++] = (uint8_t)((n - 1) << 2);
-    } else if (n <= 0x100) {
-        out[o++] = 60 << 2;
-        out[o++] = (uint8_t)(n - 1);
-    } else if (n <= 0x10000) {
-        out[o++] = 61 << 2;
-        out[o++] = (uint8_t)((n - 1) & 0xFF);
-        out[o++] = (uint8_t)(((n - 1) >> 8) & 0xFF);
-    } else {
-        out[o++] = 62 << 2;
-        size_t v = n - 1;
-        out[o++] = (uint8_t)(v & 0xFF);
-        out[o++] = (uint8_t)((v >> 8) & 0xFF);
-        out[o++] = (uint8_t)((v >> 16) & 0xFF);
-    }
-    memcpy(out + o, data, n);
-    return o + n;
-}
-
-int64_t ticdc_snappy_compress(const uint8_t *src, size_t n,
-                              uint8_t *out, size_t cap) {
-    (void)cap;  /* caller sizes out at n + n/2 + 64: worst case */
-    size_t o = snappy_uvarint(out, 0, (uint64_t)n);
-    if (++sn_gen == 0) {
-        memset(sn_gen_mark, 0, sizeof(sn_gen_mark));
-        sn_gen = 1;
-    }
-    const uint32_t gen = sn_gen;
-    int64_t *table = sn_tab;
-    uint32_t *mark = sn_gen_mark;
-    size_t anchor = 0, i = 0;
-    while (i + 4 <= n) {
-        uint32_t h = hash4(src, i);
-        int64_t cand = (mark[h] == gen) ? table[h] : -1;
-        table[h] = (int64_t)i;
-        mark[h] = gen;
-        if (cand >= 0 && i - (size_t)cand <= 0xFFFF
-                && memcmp(src + cand, src + i, 4) == 0) {
-            size_t m_end = i + 4, c_end = (size_t)cand + 4;
-            while (m_end < n && src[m_end] == src[c_end]) {
-                m_end++; c_end++;
-            }
-            o = snappy_literal(out, o, src + anchor, i - anchor);
-            size_t offset = i - (size_t)cand;
-            size_t length = m_end - i;
-            while (length > 0) {             /* copy2, 64-byte chunks */
-                size_t chunk = length < 64 ? length : 64;
-                if (chunk < 4 && length > chunk) chunk = length;
-                out[o++] = (uint8_t)(((chunk - 1) << 2) | 0x02);
-                out[o++] = (uint8_t)(offset & 0xFF);
-                out[o++] = (uint8_t)((offset >> 8) & 0xFF);
-                length -= chunk;
-            }
-            i = m_end;
-            anchor = i;
-        } else {
-            i++;
-        }
-    }
-    o = snappy_literal(out, o, src + anchor, n - anchor);
-    return (int64_t)o;
-}
-
-/* cap must be the uvarint-declared size; -1 = malformed OR output size
-   mismatch (caller falls back to Python for the exact pinned error) */
-int64_t ticdc_snappy_decompress(const uint8_t *src, size_t n,
-                                uint8_t *out, size_t cap,
-                                size_t i /* offset past the uvarint */) {
-    size_t o = 0;
-    while (i < n) {
-        unsigned tag = src[i++];
-        unsigned kind = tag & 0x03;
-        size_t length, offset;
-        if (kind == 0) {                 /* literal */
-            length = (tag >> 2) + 1;
-            if (length > 60) {
-                size_t extra = length - 60;
-                if (i + extra > n) return -1;
-                length = 1;
-                for (size_t k = 0; k < extra; k++)
-                    length += (size_t)src[i + k] << (8 * k);
-                i += extra;
-            }
-            if (i + length > n) return -1;
-            if (o + length > cap) return -1;
-            memcpy(out + o, src + i, length);
-            o += length; i += length;
-            continue;
-        }
-        if (kind == 1) {                 /* copy1 */
-            if (i + 1 > n) return -1;
-            length = ((tag >> 2) & 0x07) + 4;
-            offset = ((size_t)(tag >> 5) << 8) | src[i];
-            i += 1;
-        } else if (kind == 2) {          /* copy2 */
-            if (i + 2 > n) return -1;
-            length = (tag >> 2) + 1;
-            offset = (size_t)src[i] | ((size_t)src[i+1] << 8);
-            i += 2;
-        } else {                         /* copy4 */
-            if (i + 4 > n) return -1;
-            length = (tag >> 2) + 1;
-            offset = (size_t)src[i] | ((size_t)src[i+1] << 8)
-                   | ((size_t)src[i+2] << 16) | ((size_t)src[i+3] << 24);
-            i += 4;
-        }
-        if (offset == 0 || offset > o) return -1;
-        if (o + length > cap) return -1;
-        size_t start = o - offset;
-        for (size_t k = 0; k < length; k++)
-            out[o + k] = out[start + k];
-        o += length;
-    }
-    if (o != cap) return -1;
-    return (int64_t)o;
-}
 """
 
 
-def _build_lib() -> ctypes.CDLL | None:
-    """Compile (once per host) and load the kernel library.
-
-    The .so is cached under the temp dir keyed by the source hash, so
-    every Spark worker process on the host reuses one compilation; the
-    write is tmp-file + atomic rename, so concurrent compiles (32
-    workers importing at once) race benignly.  Any failure — no
-    compiler, sandboxed cc, bad cache — returns None and the codecs
-    stay pure-Python.
-    """
-    if os.environ.get("TICDC_SPARK_NO_NATIVE") == "1":
-        return None  # A/B kill switch: forces the pure-Python paths
-    try:
-        src_hash = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-        # per-user, 0o700: a world-writable shared dir would let another
-        # local user pre-plant a .so at the predictable path
-        cache_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"ticdc_spark_accel_{getattr(os, 'getuid', lambda: 0)()}")
-        so_path = os.path.join(cache_dir, f"accel_{src_hash}.so")
-        if not os.path.exists(so_path):
-            os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-            c_path = os.path.join(cache_dir, f"accel_{src_hash}.c")
-            tmp_so = os.path.join(
-                cache_dir, f".accel_{src_hash}.{os.getpid()}.so")
-            with open(c_path, "w") as f:
-                f.write(_C_SOURCE)
-            proc = subprocess.run(
-                ["cc", "-O3", "-fPIC", "-shared", "-o", tmp_so, c_path],
-                capture_output=True, timeout=120)
-            if proc.returncode != 0:
-                return None
-            os.rename(tmp_so, so_path)  # atomic on same filesystem
-        lib = ctypes.CDLL(so_path)
-        lib.ticdc_crc32c.restype = ctypes.c_uint32
-        lib.ticdc_crc32c.argtypes = [
-            ctypes.c_char_p, ctypes.c_size_t, ctypes.c_uint32]
-        lib.ticdc_xxh32.restype = ctypes.c_uint32
-        lib.ticdc_xxh32.argtypes = [
-            ctypes.c_char_p, ctypes.c_size_t, ctypes.c_uint32]
-        buf_sig = [ctypes.c_char_p, ctypes.c_size_t,
-                   ctypes.c_char_p, ctypes.c_size_t]
-        for fn in ("ticdc_lz4_block_compress", "ticdc_lz4_block_decompress",
-                   "ticdc_snappy_compress"):
-            getattr(lib, fn).restype = ctypes.c_int64
-            getattr(lib, fn).argtypes = buf_sig
-        lib.ticdc_snappy_decompress.restype = ctypes.c_int64
-        lib.ticdc_snappy_decompress.argtypes = buf_sig + [ctypes.c_size_t]
-        # self-check against the public vectors before trusting the build
-        if lib.ticdc_crc32c(b"123456789", 9, 0) != 0xE3069283:
-            return None
-        if lib.ticdc_xxh32(b"abc", 3, 0) != 0x32D153FF:
-            return None
-        return lib
-    except Exception:  # noqa: BLE001 — accelerator only, never required
+def _load() -> ctypes.CDLL | None:
+    lib = load_c_library("accel", _C_SOURCE)
+    if lib is None:
         return None
+    lib.ticdc_crc32c.restype = ctypes.c_uint32
+    lib.ticdc_crc32c.argtypes = [
+        ctypes.c_char_p, ctypes.c_size_t, ctypes.c_uint32]
+    # self-check against the public vector before trusting the build
+    if lib.ticdc_crc32c(b"123456789", 9, 0) != 0xE3069283:
+        return None
+    return lib
 
 
-LIB = _build_lib()
-
-
-def _as_bytes(data) -> bytes:
-    return data if isinstance(data, bytes) else bytes(data)
+LIB = _load()
 
 
 def crc32c(data, crc: int = 0) -> int:
-    data = _as_bytes(data)
+    data = data if isinstance(data, bytes) else bytes(data)
     return LIB.ticdc_crc32c(data, len(data), crc)
-
-
-def xxh32(data, seed: int = 0) -> int:
-    data = _as_bytes(data)
-    return LIB.ticdc_xxh32(data, len(data), seed)
-
-
-def lz4_block_compress(src) -> bytes | None:
-    """None -> caller should use the pure-Python path."""
-    src = _as_bytes(src)
-    cap = len(src) + len(src) // 255 + 64
-    out = ctypes.create_string_buffer(cap)
-    n = LIB.ticdc_lz4_block_compress(src, len(src), out, cap)
-    if n < 0:
-        return None
-    return out.raw[:n]
-
-
-def lz4_block_decompress(src, size_hint: int = 0) -> bytes | None:
-    """None -> malformed or cap issues; caller falls back to Python
-    (which raises the pinned error message on truly bad input)."""
-    src = _as_bytes(src)
-    cap = max(size_hint, 4 * len(src) + 1024)
-    for _ in range(8):
-        out = ctypes.create_string_buffer(cap)
-        n = LIB.ticdc_lz4_block_decompress(src, len(src), out, cap)
-        if n == -2:  # capacity: grow and retry (ratio > cap/len)
-            cap *= 8
-            continue
-        if n < 0:
-            return None
-        return out.raw[:n]
-    return None
-
-
-def snappy_compress(src) -> bytes | None:
-    src = _as_bytes(src)
-    cap = len(src) + len(src) // 2 + 64
-    out = ctypes.create_string_buffer(cap)
-    n = LIB.ticdc_snappy_compress(src, len(src), out, cap)
-    if n < 0:
-        return None
-    return out.raw[:n]
-
-
-def snappy_decompress(src, expected: int, header_len: int) -> bytes | None:
-    """None -> malformed/mismatch; caller falls back to Python."""
-    src = _as_bytes(src)
-    out = ctypes.create_string_buffer(max(expected, 1))
-    n = LIB.ticdc_snappy_decompress(src, len(src), out, expected, header_len)
-    if n < 0:
-        return None
-    return out.raw[:n]

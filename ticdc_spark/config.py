@@ -853,24 +853,19 @@ def mysql_batch_options(cfg) -> dict:
     }
 
 
-# large-message-handle-compression -> internal codec name: the reference
-# compresses with snappy BLOCK encoding (klauspost snappy.Encode) and the
-# LZ4 FRAME format (pierrec lz4.NewWriter) — `pkg/compression/compress.go`
-_LM_COMPRESSION_CODECS = {"snappy": "snappy", "lz4": "lz4-frame"}
-
-
 def large_message_compression(cfg) -> str | None:
     """The value-compression codec from [sink.kafka-config.
     large-message-handle] large-message-handle-compression
     (`pkg/config/large_message.go:33`), or None when off.  The
     reference applies it to EVERY encoded message value (canal/open/
     simple encoders call common.Compress unconditionally), so the
-    max-message-bytes gates measure compressed sizes."""
+    max-message-bytes gates measure compressed sizes.  The names are
+    `codec/compression.py` codec names: snappy is a raw block
+    (klauspost snappy.Encode) and lz4 the LZ4 frame format (pierrec
+    lz4.NewWriter), as in `pkg/compression/compress.go`."""
     comp = (cfg.large_message_handle or {}).get(
         "large-message-handle-compression", "none") or "none"
-    if comp == "none":
-        return None
-    return _LM_COMPRESSION_CODECS[comp]
+    return None if comp == "none" else comp
 
 
 # [sink.pulsar-config] client tuning defaults

@@ -22,19 +22,16 @@ EXACT adjacency + search equality against the Python graph on uniform,
 clustered (10-gaussian) and the real parquet corpora.
 
 Same deployment contract as ``codec/native_accel.py``: compiled once
-per host with the system ``cc`` (cached by source hash, atomic rename),
-``TICDC_SPARK_NO_NATIVE=1`` disables it, and any failure falls back to
-the pure-Python ``_HnswGraph`` — strict accelerator, never a
-dependency.
+per host with the system ``cc`` (``ticdc_spark/native_build.py``), and
+any failure falls back to the pure-Python ``_HnswGraph`` — strict
+accelerator, never a dependency.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import tempfile
+
+from ticdc_spark.native_build import load_c_library
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -442,44 +439,17 @@ int64_t ticdc_hnsw_neighbors(void *vh, int64_t level, int64_t node,
 
 
 def _build_lib() -> ctypes.CDLL | None:
-    """Compile (once per host, cached by source hash) and load; any
-    failure returns None and callers keep the pure-Python graph."""
-    if os.environ.get("TICDC_SPARK_NO_NATIVE") == "1":
+    """Compile (once per host) and load; any failure returns None and
+    callers keep the pure-Python graph."""
+    # -ffp-contract=off pins scalar mul+add rounding so the host ISA
+    # (-march=native, for the SIMD-across-candidates pair kernel) cannot
+    # change any computed distance; the fallback set drops -march=native.
+    lib = load_c_library("hnsw", _C_SOURCE,
+                         (("-O3", "-march=native", "-ffp-contract=off"),
+                          ("-O3", "-ffp-contract=off")))
+    if lib is None:
         return None
     try:
-        # -ffp-contract=off pins scalar mul+add rounding so the host ISA
-        # (-march=native, for the SIMD-across-candidates pair kernel)
-        # cannot change any computed distance; flags are part of the
-        # cache key so flag changes recompile.
-        flag_sets = (["-O3", "-march=native", "-ffp-contract=off"],
-                     ["-O3", "-ffp-contract=off"])
-        src_hash = hashlib.sha256(
-            (_C_SOURCE + repr(flag_sets)).encode()).hexdigest()[:16]
-        # per-user, 0o700: a world-writable shared dir would let another
-        # local user pre-plant a .so at the predictable path
-        cache_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"ticdc_spark_accel_{getattr(os, 'getuid', lambda: 0)()}")
-        so_path = os.path.join(cache_dir, f"hnsw_{src_hash}.so")
-        if not os.path.exists(so_path):
-            os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-            c_path = os.path.join(cache_dir, f"hnsw_{src_hash}.c")
-            tmp_so = os.path.join(
-                cache_dir, f".hnsw_{src_hash}.{os.getpid()}.so")
-            with open(c_path, "w") as f:
-                f.write(_C_SOURCE)
-            ok = False
-            for flags in flag_sets:
-                proc = subprocess.run(
-                    ["cc", *flags, "-fPIC", "-shared", "-o", tmp_so, c_path],
-                    capture_output=True, timeout=120)
-                if proc.returncode == 0:
-                    ok = True
-                    break
-            if not ok:
-                return None
-            os.rename(tmp_so, so_path)
-        lib = ctypes.CDLL(so_path)
         dp = ctypes.POINTER(ctypes.c_double)
         lp = ctypes.POINTER(ctypes.c_int64)
         ip = ctypes.POINTER(ctypes.c_int32)

@@ -147,40 +147,12 @@ def resolve_claim_check(msgs: DataFrame, claim_store: DataFrame,
 
 
 # -- compression (`pkg/compression/`, `codec/common/compress.go`) ------------
-# The reference compresses large message payloads with lz4/snappy/zstd
-# (`pkg/compression/compression.go:29-33`).  lz4 (block + frame) and
-# snappy are from-scratch pure-Python wire-format implementations
-# (`codec/lz4_snappy.py`) — interpreter-bound throughput, correct bytes,
-# byte cross-validated against the native codecs pyarrow bundles
-# (tests/test_lz4_snappy.py).  zstd wraps pyarrow's native zstd
-# (`codec/zstd_arrow.py` — RFC 8878 frames, same wire bytes as the
-# reference's klauspost writer); zlib/lzma round out the set.
-_COMPRESS_CODECS = {
-    "zlib": ("zlib", "compress", "decompress"),
-    "lzma": ("lzma", "compress", "decompress"),
-    "lz4": ("ticdc_spark.codec.lz4_snappy",
-            "lz4_block_compress", "lz4_block_decompress"),
-    "lz4-frame": ("ticdc_spark.codec.lz4_snappy",
-                  "lz4_frame_compress", "lz4_frame_decompress"),
-    "snappy": ("ticdc_spark.codec.lz4_snappy",
-               "snappy_compress", "snappy_decompress"),
-    "zstd": ("ticdc_spark.codec.zstd_arrow",
-             "zstd_compress", "zstd_decompress"),
-}
-
-
-def _codec_fns(codec: str):
-    if codec not in _COMPRESS_CODECS:
-        raise ValueError(
-            f"unknown compression codec: {codec} "
-            f"(available: {sorted(_COMPRESS_CODECS)}; reference set is "
-            "lz4/snappy/zstd, compress.go)"
-        )
-    import importlib
-
-    mod_name, c, d = _COMPRESS_CODECS[codec]
-    mod = importlib.import_module(mod_name)
-    return getattr(mod, c), getattr(mod, d)
+# The reference compresses message values with lz4/snappy/zstd
+# (`pkg/compression/compression.go:29-33`).  `codec/compression.py` owns
+# every codec: lz4 (the LZ4 frame format), snappy (a raw block) and zstd
+# are pyarrow's native codecs; gzip/zlib/lzma are the standard library's.
+# The UDFs capture only the codec NAME: pyarrow Codecs do not pickle, so
+# each Python worker builds and caches its own.
 
 
 def compress_values(df: DataFrame, codec: str = "zlib",
@@ -189,8 +161,11 @@ def compress_values(df: DataFrame, codec: str = "zlib",
     pandas UDF (the payload bytes can't be expressed as column algebra);
     sits at the very end of the sink path so nothing downstream of it
     needs codegen."""
-    compress, _ = _codec_fns(codec)
     from pyspark.sql.functions import pandas_udf
+
+    from ticdc_spark.codec import compression
+
+    compression.check_codec(codec)
 
     @pandas_udf("binary")
     def _compress(s):
@@ -198,7 +173,8 @@ def compress_values(df: DataFrame, codec: str = "zlib",
 
         return pd.Series([
             None if v is None
-            else compress(v.encode() if isinstance(v, str) else v)
+            else compression.compress(
+                codec, v.encode() if isinstance(v, str) else v)
             for v in s
         ])
 
@@ -208,15 +184,19 @@ def compress_values(df: DataFrame, codec: str = "zlib",
 def decompress_values(df: DataFrame, codec: str = "zlib",
                       col: str = "value") -> DataFrame:
     """Inverse of ``compress_values`` (consumer side): binary → string."""
-    _, decompress = _codec_fns(codec)
     from pyspark.sql.functions import pandas_udf
+
+    from ticdc_spark.codec import compression
+
+    compression.check_codec(codec)
 
     @pandas_udf("string")
     def _decompress(s):
         import pandas as pd
 
         return pd.Series([
-            None if v is None else decompress(bytes(v)).decode()
+            None if v is None
+            else compression.decompress(codec, bytes(v)).decode()
             for v in s
         ])
 

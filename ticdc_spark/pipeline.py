@@ -88,7 +88,7 @@ class ChangefeedConfig:
     #  "max-message-bytes": N}
     large_message_handle: dict | None = None
     handle_key_fields: tuple = ("id",)
-    # lz4/snappy/zstd in the reference; zlib/lzma in this container
+    # value codec from ?compression= (codec/compression.py names)
     compression: str | None = None
     # --- ReplicaConfig top-level (`pkg/config/replica_config.go:151`) ---
     case_sensitive: bool = False  # reference default false since v6.x

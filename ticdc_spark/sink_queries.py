@@ -4024,8 +4024,8 @@ def q_avro_confluent_roundtrip(spark, sf_dir):
 # speaking ApiVersions/Metadata/Produce v3/Fetch v4 with v2 record batches,
 # CRC32C-verified on ingest).  The fetch kernel additionally asserts offset
 # contiguity 0..hw-1 per partition, so at-least-once delivery with no
-# duplicates is checked inside the plan.  lz4-compressed batches exercise
-# this repo's pure-Python LZ4 frame codec on the actual wire.
+# duplicates is checked inside the plan.  lz4-compressed batches put LZ4
+# frames (codec/compression.py) on the actual wire.
 # ---------------------------------------------------------------------------
 @register(
     "kafka_live_roundtrip",
@@ -5125,7 +5125,7 @@ def q_lm_compression_from_toml(spark, sf_dir):
         'large-message-handle-compression = "lz4"\n'
         "max-message-bytes = 1048576\n")
     codec = large_message_compression(cfg)
-    assert codec == "lz4-frame"  # reference lz4 = the FRAME format
+    assert codec == "lz4"  # the LZ4 FRAME format, as in the reference
     frame = build_pipeline(events_changelog(spark, sf_dir), cfg)
     plain = decompress_values(frame, codec=codec)
     return (plain.groupBy(
