@@ -299,3 +299,52 @@ def test_assignment_user_data_roundtrip_codec():
     _, user2 = kw.dec_consumer_assignment_full(
         kw.enc_consumer_assignment({"t": [1]}))
     assert user2 == b""
+
+
+def test_concurrent_joiners_of_empty_group_form_one_generation():
+    """KIP-134 initial rebalance delay: members joining an EMPTY group
+    together land in ONE generation on their first join — none completes
+    a generation alone and keeps partitions a later generation hands out
+    again — so the group is fully formed without any settle wait.  More
+    joiners than cores, with a short thread switch interval."""
+    import sys
+    import time
+
+    n = 6
+    with KafkaBroker() as broker:
+        _fill(broker, "t", 8, 1)
+        members = [ConsumerGroupMember(broker.bootstrap, "gi", ["t"])
+                   for _ in range(n)]
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            got: dict[int, dict] = {}
+            threads = [
+                threading.Thread(
+                    target=lambda i=i, m=m: got.__setitem__(
+                        i, m.join_and_sync()))
+                for i, m in enumerate(members)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(30)
+            assert not any(t.is_alive() for t in threads)
+            assert {m.generation for m in members} == {1}
+            assert all(m.group_size == n for m in members)
+            assert sorted(p for a in got.values()
+                          for p in a.get("t", [])) == list(range(8))
+        finally:
+            sys.setswitchinterval(switch)
+            for m in members:
+                m.close()
+        # only an EMPTY group waits: a lone member's first join completes
+        # only once the delay it armed is over; its rejoin of the
+        # now-stable group arms no delay (the settle fast path)
+        with ConsumerGroupMember(broker.bootstrap, "gi2", ["t"]) as solo:
+            solo.join_and_sync()
+            group = broker.groups["gi2"]
+            armed = group._initial_until
+            assert 0 < armed <= time.monotonic()
+            solo.join_and_sync()
+            assert group._initial_until == armed
+            assert solo.generation == 2

@@ -150,3 +150,27 @@ def test_acks_0_produce_frame_then_immediate_fetch(spark):
         got = fetch_df(spark, b.bootstrap, [("t0", 0), ("t0", 1)])
         assert got.count() == 500
         assert 0 in b.seen_produce_acks
+
+
+def test_produce_all_sends_every_partition_in_one_request():
+    """A broadcast is ONE Produce request carrying a batch per partition
+    (the changefeed's DDL and watermark broadcasts); every partition's
+    error code is checked, so one unknown partition fails the call."""
+    with KafkaBroker(default_partitions=3) as b:
+        b.create_topic("a", 3)
+        b.create_topic("b", 2)
+        with KafkaConn.from_bootstrap(b.bootstrap) as c:
+            n0 = len(b.seen_produce_acks)
+            c.produce_all({
+                "a": {p: [Record(None, b"a%d" % p)] for p in range(3)},
+                "b": {p: [Record(None, b"b%d" % p)] for p in range(2)},
+            })
+            assert len(b.seen_produce_acks) == n0 + 1
+            for t, n in (("a", 3), ("b", 2)):
+                for p in range(n):
+                    got = c.fetch_all(t, p)
+                    assert [(off, r.value) for off, r in got] == [
+                        (0, b"%s%d" % (t.encode(), p))]
+            with pytest.raises(IOError, match="a/7 failed: error_code=3"):
+                c.produce_all({"a": {0: [Record(None, b"x")],
+                                     7: [Record(None, b"y")]}})

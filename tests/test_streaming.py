@@ -106,3 +106,39 @@ def test_resolved_frames_written_per_epoch(spark, sf_dir, tmp_path):
         # the changefeed watermark is the max over dispatcher watermarks
         assert max(e.resolved_ts for e in events) == \
             by_epoch[epoch]["resolved_ts"]
+
+
+def test_progress_log_replay_rewrites_only_the_last_entry(tmp_path):
+    """A replayed epoch (crash after the flush, before the bookkeeping)
+    replaces the log's last entry; a new epoch appends and leaves every
+    earlier byte as it was.  The log is long enough that finding its last
+    line crosses the 4 KB read chunk."""
+    from ticdc_spark.streaming.changefeed import Changefeed
+
+    cf = Changefeed("cf_log", ChangefeedConfig(), str(tmp_path))
+
+    def entry(epoch, rows):
+        return {"changefeed": "cf_log", "epoch": epoch, "resolved_ts": epoch,
+                "rows": rows, "wall_ts": 0.0, "pad": "x" * 40}
+
+    for epoch in range(100):
+        cf._append_progress(entry(epoch, 1))
+    with open(cf.progress_path, "rb") as f:
+        before = f.read()
+    assert len(before) > 4096
+
+    cf._append_progress(entry(99, 2))  # replay of the last epoch
+    with open(cf.progress_path, "rb") as f:
+        replayed = f.read()
+    lines = [json.loads(ln) for ln in replayed.splitlines()]
+    assert [e["epoch"] for e in lines] == list(range(100))
+    assert lines[-1]["rows"] == 2
+    kept = before[:before.rindex(b"\n", 0, len(before) - 1) + 1]
+    assert replayed.startswith(kept)
+
+    cf._append_progress(entry(100, 3))  # a new epoch appends
+    with open(cf.progress_path, "rb") as f:
+        after = f.read()
+    assert after.startswith(replayed)
+    assert json.loads(after.splitlines()[-1])["epoch"] == 100
+    assert cf.stats()["rows"] == 99 + 2 + 3

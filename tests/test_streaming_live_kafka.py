@@ -476,3 +476,169 @@ def test_overwrite_resume_forward_with_syncpoint(spark, sf_dir, tmp_path):
             sp2 = [_json.loads(ln)["primary_ts"] for ln in f if ln.strip()]
         assert sp2[:len(sp1)] == sp1
         assert sp2 == sorted(set(sp2))
+
+
+def test_live_changefeed_commit_order_per_partition(spark, sf_dir, tmp_path):
+    """Every partition's log is in commit order: the produce sorts on the
+    replay key AFTER its (topic, partition) shuffle, because a shuffle
+    concatenates the sorted runs of its inputs.  The input is a shuffled
+    copy of the events in many row groups, scanned as several splits, so
+    neither the file's row order nor a single split orders it."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    t = t.take(random.Random(7).sample(range(t.num_rows), t.num_rows))
+    pq.write_table(t, str(src / "events.parquet"), row_group_size=64)
+    cfg = ChangefeedConfig(**CFG, n_partitions=4)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8k")
+    try:
+        with KafkaBroker(default_partitions=4) as broker:
+            cf = Changefeed("cf_order", cfg, str(tmp_path / "work"),
+                            live_bootstrap=broker.bootstrap)
+            cf.start(spark, str(src), available_now=True)
+            cf.wait(240)
+            n_data = 0
+            with KafkaConn.from_bootstrap(broker.bootstrap) as c:
+                for topic, parts in broker.topics.items():
+                    for p in parts:
+                        es = [m["es"] for m in (
+                            json.loads(rec.value.decode())
+                            for _, rec in c.fetch_all(topic, p))
+                            if m["type"] != "TIDB_WATERMARK"]
+                        n_data += len(es)
+                        assert es == sorted(es), f"{topic}/{p} out of order"
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert n_data == build_pipeline(
+        events_changelog(spark, str(src)), cfg).count()
+
+
+def _split_by_time(sf_dir, tmp_path, n=3):
+    """The events cut into ``n`` commit-time slices: a stream dir with one
+    file per slice (one epoch each), and one batch dir per slice."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/events.parquet").sort_by("ts")
+    k = t.num_rows // n
+    ones = []
+    for i in range(n):
+        part = t.slice(i * k, k if i < n - 1 else None)
+        d = tmp_path / "stream" / "events.parquet" / f"batch={i}"
+        d.mkdir(parents=True)
+        pq.write_table(part, str(d / "events.parquet"))
+        one = tmp_path / f"slice{i}"
+        one.mkdir()
+        pq.write_table(part, str(one / "events.parquet"))
+        ones.append(str(one))
+    return str(tmp_path / "stream"), ones
+
+
+@pytest.mark.parametrize("live", [True, False], ids=["live", "file"])
+def test_epoch_summary_matches_batch_aggregate(spark, sf_dir, tmp_path, live):
+    """The checkpoint is what the flush reported: each epoch's progress
+    rows/resolved_ts and its resolved frame's per-table (ts, seq) equal a
+    batch groupBy("table_id") over that epoch's input — on the live wire
+    (the produce tasks' summary) and on the file sink (one aggregate)."""
+    import contextlib
+    import glob
+    import os
+
+    from ticdc_spark.codec.resolved_event import decode_batch
+
+    stream, slices = _split_by_time(sf_dir, tmp_path)
+    cfg = ChangefeedConfig(**CFG, n_partitions=4)
+    want = []
+    for d in slices:
+        per_tbl = build_pipeline(events_changelog(spark, d), cfg).groupBy(
+            "table_id").agg(F.count(F.lit(1)).alias("n"),
+                            F.max("commit_ts").alias("ts"),
+                            F.max("seq").alias("seq")).collect()
+        want.append((sum(r["n"] for r in per_tbl),
+                     max(r["ts"] for r in per_tbl),
+                     sorted((r["table_id"], r["ts"], r["seq"])
+                            for r in per_tbl)))
+    work = str(tmp_path / "work")
+    with (KafkaBroker(default_partitions=4) if live
+          else contextlib.nullcontext()) as broker:
+        cf = Changefeed("cf_sum", cfg, work,
+                        live_bootstrap=broker.bootstrap if live else None)
+        cf.start(spark, stream, available_now=True)
+        cf.wait(240)
+    got = []
+    with open(cf.progress_path) as f:
+        for e in map(json.loads, f):
+            frame = os.path.join(work, "resolved", "cf_sum",
+                                 f"epoch={e['epoch']}.bin")
+            with open(frame, "rb") as fb:
+                events = decode_batch(fb.read())
+            assert all(ev.epoch == e["epoch"] for ev in events)
+            got.append((e["rows"], e["resolved_ts"], sorted(
+                (ev.dispatcher_id[0], ev.resolved_ts, ev.seq)
+                for ev in events)))
+    assert sorted(got) == sorted(want)
+    assert len(glob.glob(os.path.join(work, "resolved", "cf_sum", "*"))) \
+        == len(slices)
+
+
+@pytest.mark.parametrize("live", [True, False], ids=["live", "file"])
+def test_filtered_out_epoch_records_nothing(spark, sf_dir, tmp_path, live):
+    """A filter rule that drops every table: the epoch reports 0 rows, so
+    no progress entry, no resolved frame and no watermark broadcast."""
+    import contextlib
+    import os
+
+    cfg = ChangefeedConfig(**CFG, n_partitions=4,
+                           filter_rules=["nosuch.*"])
+    with (KafkaBroker(default_partitions=4) if live
+          else contextlib.nullcontext()) as broker:
+        cf = Changefeed("cf_none", cfg, str(tmp_path),
+                        live_bootstrap=broker.bootstrap if live else None)
+        cf.start(spark, sf_dir, available_now=True)
+        cf.wait(240)
+        assert cf.query.lastProgress["numInputRows"] > 0
+        if live:
+            data, marks = _drain(broker)
+            assert not data and not marks
+    assert not os.path.exists(cf.progress_path)
+    assert not os.path.exists(os.path.join(str(tmp_path), "resolved"))
+
+
+def test_live_rewind_starts_past_the_progress_log(spark, sf_dir, tmp_path):
+    """A live changefeed writes no sink epoch dirs, so a rewind takes its
+    epoch-id namespace from the progress log: the rewound run's epochs
+    get fresh ids, every progress entry keeps a unique epoch id, and each
+    has its own resolved frame."""
+    import os
+
+    from ticdc_spark.streaming.registry import ChangefeedRegistry
+
+    stream, slices = _split_by_time(sf_dir, tmp_path)
+    rewind_ts = events_changelog(spark, slices[0]).agg(
+        F.max("commit_ts")).first()[0]
+    toml = ('[sink]\n'
+            'dispatchers = [{matcher = ["test.tp_*"], '
+            'partition = "index-value", '
+            'topic = "cdc_{schema}_{table}"}]\n')
+    work = str(tmp_path / "work")
+    with KafkaBroker(default_partitions=16) as broker:
+        reg = ChangefeedRegistry(work, live=True)
+        reg.create(
+            "cf_ids", toml,
+            sink_uri=f"kafka://{broker.bootstrap}/cdc?protocol=canal-json")
+        reg.run("cf_ids", spark, stream, timeout_s=240)
+        reg.pause("cf_ids")
+        reg.resume("cf_ids", overwrite_checkpoint_ts=rewind_ts)
+        reg.run("cf_ids", spark, stream, timeout_s=240)
+        cf = reg.get("cf_ids")
+    with open(cf.progress_path) as f:
+        epochs = [json.loads(ln)["epoch"] for ln in f]
+    # the rewound run re-delivers every slice but the first
+    assert epochs == [0, 1, 2, 4, 5]
+    assert cf.epoch_offset == len(slices)
+    assert sorted(os.listdir(os.path.join(work, "resolved", "cf_ids"))) \
+        == [f"epoch={e}.bin" for e in epochs]

@@ -30,6 +30,10 @@ def with_sort_keys(cl: DataFrame, partition_keys: list[str] | None = None) -> Da
 
 
 def ordered(cl: DataFrame, partition_keys: list[str] | None = None) -> DataFrame:
-    """Physically cluster for an ordered sink: shuffle by table, sort inside."""
+    """Physically cluster for an ordered sink: shuffle by table, sort inside
+    on whichever of ``SORT_KEYS`` the frame carries.  The sort must sit
+    AFTER the shuffle: an Exchange concatenates its inputs' sorted runs."""
     partition_keys = partition_keys or ["table_id"]
-    return cl.repartition(*partition_keys).sortWithinPartitions(*SORT_KEYS)
+    keys = [k for k in SORT_KEYS if k in cl.columns]
+    clustered = cl.repartition(*partition_keys)
+    return clustered.sortWithinPartitions(*keys) if keys else clustered

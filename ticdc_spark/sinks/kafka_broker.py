@@ -973,6 +973,11 @@ class _Group:
     (awaiting the leader's SyncGroup) -> Stable."""
 
     REBALANCE_WINDOW_S = 2.0
+    #: KIP-134 group.initial.rebalance.delay.ms: the first rebalance of an
+    #: EMPTY group waits this long for more joiners, re-armed per new
+    #: joiner and capped by REBALANCE_WINDOW_S — otherwise the first of
+    #: several concurrent joiners completes a generation alone
+    INITIAL_REBALANCE_DELAY_S = 0.2
 
     def __init__(self):
         self.lock = threading.Lock()
@@ -988,6 +993,10 @@ class _Group:
         self._next_member = 0
         # KIP-345 static membership: group.instance.id -> member_id
         self.static: dict[str, str] = {}
+        # monotonic time before which an empty group's first rebalance
+        # may not complete (0: no initial delay pending)
+        self._initial_until = 0.0
+        self._initial_cap = 0.0
 
     def join(self, member_id: str, metadata: bytes,
              instance_id: str | None = None) -> dict:
@@ -1000,26 +1009,35 @@ class _Group:
             elif not member_id:
                 self._next_member += 1
                 member_id = f"member-{self._next_member}"
+            now = time.monotonic()
             if not self.rebalancing:
                 self.rebalancing = True
                 self.joined = {}
+                if not self.members:
+                    self._initial_cap = now + self.REBALANCE_WINDOW_S
+            if not self.members and member_id not in self.joined:
+                self._initial_until = min(
+                    now + self.INITIAL_REBALANCE_DELAY_S, self._initial_cap)
+                self.cond.notify_all()  # waiters re-read the delay
             self.joined[member_id] = metadata
-            my_generation = self.generation + 1
             # barrier: wait until every member of the PREVIOUS stable set
-            # has rejoined (plus any newcomers), or the window lapses and
-            # stragglers are evicted — then the first waiter completes
-            # the rebalance for everyone
-            deadline = time.monotonic() + self.REBALANCE_WINDOW_S
+            # has rejoined (plus any newcomers) and an empty group's
+            # initial delay is over, or the window lapses and stragglers
+            # are evicted — then the first waiter completes the
+            # rebalance for everyone
+            deadline = now + self.REBALANCE_WINDOW_S
             while self.rebalancing:
                 expected = set(self.members) | set(self.joined)
-                if set(self.joined) >= expected:
+                wait_initial = self._initial_until - time.monotonic()
+                if set(self.joined) >= expected and wait_initial <= 0:
                     self._complete()
                     break
                 remaining = deadline - time.monotonic()
                 if remaining <= 0:
                     self._complete()  # evict stragglers
                     break
-                self.cond.wait(remaining)
+                self.cond.wait(min(remaining, wait_initial)
+                               if wait_initial > 0 else remaining)
             if member_id not in self.members:
                 # a concurrent completion evicted us (joined after the
                 # window closed) — caller should retry

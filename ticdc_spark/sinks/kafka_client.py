@@ -400,23 +400,42 @@ class KafkaConn:
             producer_id=pid, producer_epoch=pepoch,
             base_sequence=base_sequence, transactional=transactional,
         )
+        resp = self._produce_request({topic: {partition: record_set}}, acks)
+        return -1 if resp is None else resp[topic][partition][1]
+
+    def produce_all(self, batches: dict[str, dict[int, list[kw.Record]]]
+                    ) -> None:
+        """Produce one batch per partition in ONE Produce request
+        (acks=-1); any partition's error fails the call.  The broadcast
+        shape: a control message to every partition costs one round
+        trip, not one per partition."""
+        self._produce_request({
+            topic: {p: kw.encode_record_batch(recs)
+                    for p, recs in parts.items()}
+            for topic, parts in batches.items()})
+
+    def _produce_request(self, topic_data: dict[str, dict[int, bytes]],
+                         acks: int = -1) -> dict | None:
+        """Send encoded record sets and check every partition's error
+        code -> the decoded response ``{topic: {partition: (err, base)}}``;
+        acks=0 waits for nothing and returns None."""
         ver = self._ver[kw.API_PRODUCE]
         enc = (kw.enc_produce_request_v9 if ver >= 9
                else kw.enc_produce_request)
-        body = enc({topic: {partition: record_set}}, acks=acks)
+        body = enc(topic_data, acks=acks)
         if acks == 0:
             self._send_only(kw.API_PRODUCE, ver, body)
-            return -1
-        if ver >= 9:
-            resp = kw.dec_produce_response_v9(
-                self._call(kw.API_PRODUCE, ver, body))
-        else:
-            resp = kw.dec_produce_response(
-                self._call(kw.API_PRODUCE, ver, body))
-        err, base = resp[topic][partition]
-        if err:
-            raise IOError(f"produce to {topic}/{partition} failed: error_code={err}")
-        return base
+            return None
+        dec = (kw.dec_produce_response_v9 if ver >= 9
+               else kw.dec_produce_response)
+        resp = dec(self._call(kw.API_PRODUCE, ver, body))
+        for topic, parts in topic_data.items():
+            for partition in parts:
+                err, _base = resp[topic][partition]
+                if err:
+                    raise IOError(f"produce to {topic}/{partition} failed: "
+                                  f"error_code={err}")
+        return resp
 
     def fetch_all(self, topic: str, partition: int, from_offset: int = 0,
                   isolation: str = "read_uncommitted",

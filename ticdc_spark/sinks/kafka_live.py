@@ -42,21 +42,69 @@ def start_broker(n_partitions: int = 16, flexible_only: bool = True):
     return broker
 
 
+#: what each produce task reports per (topic, table_id) it sent: the row
+#: count, the commit-ts range and the max seq (null where the frame does
+#: not carry the column) — a changefeed's checkpoint is built from these
+SUMMARY_SCHEMA = ("topic string, table_id long, rows long, min_ts long, "
+                  "max_ts long, max_seq long")
+_SUMMARY_FIELDS = [f.split() for f in SUMMARY_SCHEMA.split(", ")]
+_SUMMARY_COLS = [name for name, _ in _SUMMARY_FIELDS]
+_SUMMARY_KEYS = ("topic", "table_id")
+#: summary column -> (frame column, aggregate), besides the row count
+_SUMMARY_AGGS = {"min_ts": ("commit_ts", "min"),
+                 "max_ts": ("commit_ts", "max"),
+                 "max_seq": ("seq", "max")}
+
+
+def _summarize(pdf):
+    """One pandas batch's SUMMARY_SCHEMA rows."""
+    aggs = {"rows": (pdf.columns[0], "size")}
+    aggs.update({out: agg for out, agg in _SUMMARY_AGGS.items()
+                 if agg[0] in pdf})
+    keys = [c for c in _SUMMARY_KEYS if c in pdf]
+    out = pdf.groupby(keys, sort=False, dropna=False).agg(**aggs).reset_index()
+    for c in _SUMMARY_COLS:
+        if c not in out:
+            out[c] = None
+    return out[_SUMMARY_COLS]
+
+
+def summarize(frame: DataFrame) -> list:
+    """SUMMARY_SCHEMA rows of a frame that is not produced here (the file
+    and DB sinks' epoch), from one aggregate grouped like a produce task's."""
+    cols = set(frame.columns)
+    out = frame.groupBy(*[c for c in _SUMMARY_KEYS if c in cols]).agg(
+        F.count(F.lit(1)).alias("rows"),
+        *[getattr(F, fn)(c).alias(name)
+          for name, (c, fn) in _SUMMARY_AGGS.items() if c in cols])
+    return out.select(*[
+        F.col(name) if name in out.columns
+        else F.lit(None).cast(typ).alias(name)
+        for name, typ in _SUMMARY_FIELDS]).collect()
+
+
 def produce_frame(
     frame: DataFrame, bootstrap: str, compression: str = "none", max_retry: int = 5,
     sasl: tuple[str, str, str] | None = None, tls_ca: bytes | None = None,
     client_id: str = "ticdc-spark", acks: int = -1,
     kafka_version: str | None = None, tls_insecure: bool = False,
-) -> None:
-    """Distributed produce of a (topic, partition, key, value) frame.
+) -> list:
+    """Distributed produce of a (topic, partition, key, value) frame;
+    returns the tasks' SUMMARY_SCHEMA rows (a few per task).
 
-    Each task groups its rows by (topic, partition) and sends batches of
-    ≤512 records per Produce request over its own connection. A dropped
-    connection reconnects and resends the in-flight batch with capped
-    exponential backoff, ``max_retry`` attempts per batch — the
-    reference's producer retry budget (`pkg/sink/kafka` defaultMaxRetry=5;
-    at-least-once: a drop between append and receipt duplicates the batch,
-    which the consumer's idempotent apply absorbs)."""
+    The frame is clustered by (topic, partition) and, on whichever of the
+    replay keys (``commit_ts, start_ts, dml_order, seq``) it carries,
+    sorted inside each partition AFTER that shuffle, so every partition's
+    log is in commit order.  Each task groups its rows by (topic,
+    partition) and sends batches of ≤512 records per Produce request over
+    its own connection. A dropped connection reconnects and resends the
+    in-flight batch with capped exponential backoff, ``max_retry``
+    attempts per batch — the reference's producer retry budget
+    (`pkg/sink/kafka` defaultMaxRetry=5; at-least-once: a drop between
+    append and receipt duplicates the batch, which the consumer's
+    idempotent apply absorbs)."""
+    from ticdc_spark.operators.ordering import SORT_KEYS, ordered
+
     cols = dict(frame.dtypes)
     if "key" not in cols:  # keyless frames ride null keys, like the reference
         key_col = F.lit(None).cast("binary")
@@ -65,14 +113,16 @@ def produce_frame(
     else:
         key_col = F.col("key")
     val_col = F.col("value").cast("binary") if cols.get("value") == "string" else F.col("value")
-    shaped = (
+    summarized = [c for c in ("table_id", "commit_ts", "seq") if c in cols]
+    shaped = ordered(
         frame.select(
             "topic", F.col("partition").cast("int").alias("partition"),
             key_col.alias("key"), val_col.alias("value"),
-        )
+            *[c for c in ("table_id", *SORT_KEYS) if c in cols],
+        ),
         # co-locate each (topic, partition) so batches aren't 1-row sprays
-        .repartition("topic", "partition")
-    )
+        ["topic", "partition"],
+    ).select("topic", "partition", "key", "value", *summarized)
 
     def _send(batches):
         import time as _time
@@ -125,13 +175,13 @@ def produce_frame(
                     _time.sleep(min(0.1 * (2 ** attempt), 2.0))
 
         pending: dict[tuple[str, int], list] = {}
-        n_sent = 0
+        summaries = []
         try:
             # rows arrive as Arrow/pandas batches (guide §4.1: batch the
             # boundary, not the rows); binary cells come through as
             # bytes already — same Record payloads as the pickled path
             for pdf in batches:
-                n_sent += len(pdf)
+                summaries.append(_summarize(pdf))
                 for t, p, k, v in zip(pdf["topic"].tolist(),
                                       pdf["partition"].tolist(),
                                       pdf["key"].tolist(),
@@ -159,12 +209,10 @@ def produce_frame(
         finally:
             if state["conn"] is not None:
                 state["conn"].close()
-        import pandas as _pd
+        # reported only once every batch is acknowledged
+        yield from summaries
 
-        yield _pd.DataFrame({"n_sent": [n_sent]})
-
-    shaped.mapInPandas(_send, "n_sent long").write.format("noop").mode(
-        "overwrite").save()
+    return shaped.mapInPandas(_send, SUMMARY_SCHEMA).collect()
 
 
 def fetch_df(spark: SparkSession, bootstrap: str, topic_partitions: list[tuple[str, int]],

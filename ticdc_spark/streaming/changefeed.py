@@ -10,8 +10,15 @@ collapses into one ``StreamingQuery``:
 - resume   = ``start()`` with the same checkpoint dir
 - remove   = stop + delete checkpoint
 - checkpointTs (A2: min over dispatcher watermarks,
-  `maintainer/maintainer.go:83-88`) = per-batch max commit_ts recorded in
-  the progress log written by foreachBatch
+  `maintainer/maintainer.go:83-88`) = what the epoch's flush reported:
+  as in the reference, where checkpointTs follows what the sink flushed,
+  the flush is the epoch's only pass over its rows.  The live Kafka
+  produce tasks return a summary per (topic, table) — rows, commit-ts
+  range, max seq — and the progress log entry, the resolved frame, the
+  syncpoints and the watermark broadcast are built from those few rows
+  with no further Spark job (file/DB sinks: one per-table aggregate,
+  ``kafka_live.summarize``, before the write).  One epoch is one data
+  pass, the Structured Streaming (SIGMOD 2018) micro-batch model.
 
 The data plane transform is EXACTLY the batch pipeline
 (`pipeline.build_pipeline``) applied inside the micro-batch — batch and
@@ -30,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ticdc_spark import failpoint
+from ticdc_spark.operators.ordering import SORT_KEYS
 from ticdc_spark.pipeline import ChangefeedConfig
 from ticdc_spark.sources.changelog import stream_changelog
 
@@ -78,6 +86,26 @@ def bump_schema_registry(path: str, ddl: dict) -> None:
         }) + "\n")
 
 
+def _last_entry(f) -> tuple[int, dict | None]:
+    """(start offset, parsed JSON) of the last newline-terminated line of
+    the binary JSON-lines file ``f``; (size, None) when it is empty."""
+    end = f.seek(0, os.SEEK_END)
+    pos = end - 1  # the last line's own newline
+    start = 0
+    while pos > 0:
+        step = min(4096, pos)
+        f.seek(pos - step)
+        i = f.read(step).rfind(b"\n")
+        if i >= 0:
+            start = pos - step + i + 1
+            break
+        pos -= step
+    if start >= end:
+        return end, None
+    f.seek(start)
+    return start, json.loads(f.read())
+
+
 class Changefeed:
     """One changefeed = one Structured Streaming query + checkpoint dir."""
 
@@ -121,25 +149,56 @@ class Changefeed:
 
     # -- sink --------------------------------------------------------------
     def _foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """Ordered sink write + resolved-ts bookkeeping (W1/A2).
+        """One epoch = one data pass; the checkpoint is what the flush
+        reported (W1/A2).
 
-        Rows are clustered by topic/partition and written sorted on the
-        replay key, mirroring the reference's per-dispatcher ordered flush;
-        the per-batch watermark (max commit_ts) is appended to the progress
-        log — the changefeed's checkpointTs.
+        Live Kafka: the produce is the epoch's only pass over its rows.
+        It clusters them by (topic, partition), sorts each partition on
+        the replay key (the reference's per-dispatcher ordered flush), and
+        its tasks report a summary per (topic, table): rows, commit-ts
+        range, max seq.  File and DB sinks take the same summary from one
+        per-table aggregate over the pre-compile frame
+        (``kafka_live.summarize``), then write.
+        ``_commit_epoch`` builds the progress entry (the changefeed's
+        checkpointTs), the resolved frame, the syncpoints and the
+        watermark broadcast from those few rows, with no further Spark
+        job; an epoch that reports 0 rows records nothing.
         """
-        if batch_df.isEmpty():
-            return
         epoch_id += self.epoch_offset  # rewind-generation namespace
+        live_mq = (self.live_bootstrap is not None
+                   and self._sink_compile is None
+                   and not {"stmt", "path"} & set(batch_df.columns))
+        if not live_mq:
+            # the summary comes from the PRE-compile frame: a compiled DB
+            # stmt batch drops commit_ts, but the checkpoint must still
+            # advance for MySQL sinks (the reference advances checkpointTs
+            # for every sink); otherwise /synced stays false, syncpoints
+            # skip, and gc_safepoint ignores the changefeed
+            from ticdc_spark.sinks.kafka_live import summarize
+
+            summary = summarize(batch_df)
+            if not sum(r["rows"] for r in summary):
+                return
         # chaos hook: crash BEFORE any sink effect — a restart must
         # re-deliver this epoch from the stream checkpoint with no loss
         failpoint.inject("changefeed/before-flush", {"epoch": epoch_id})
-        # resolved-ts comes from the PRE-compile frame: a compiled DB stmt
-        # batch drops commit_ts, but the checkpoint must still advance for
-        # MySQL sinks (the reference advances checkpointTs for every sink);
-        # otherwise /synced stays false, syncpoints skip, and gc_safepoint
-        # ignores the changefeed
-        pre_df = batch_df
+        if live_mq:
+            # real wire produce (flexible Produce record batches from
+            # executors); no filesystem sink — a Kafka changefeed's only
+            # artifacts are the broker log + the progress bookkeeping below
+            summary = self._produce_live(batch_df)
+            if not sum(r["rows"] for r in summary):
+                return
+        else:
+            self._write_sink(batch_df, epoch_id)
+        # chaos hook: crash AFTER the sink effect but BEFORE progress
+        # bookkeeping — restart re-delivers the epoch; the sink write is
+        # idempotent under replay
+        failpoint.inject("changefeed/after-flush", {"epoch": epoch_id})
+        self._commit_epoch(epoch_id, summary, live_mq)
+
+    def _write_sink(self, pre_df: DataFrame, epoch_id: int) -> None:
+        """File and DB sinks: redo WAL, sink compile, ordered write."""
         # [consistent] level=eventual: persist the redo WAL for this
         # epoch BEFORE the sink flush (the reference's ordering — redo
         # logs must be durable before the sink may apply, so recovery
@@ -156,11 +215,12 @@ class Changefeed:
                 .mode("overwrite").format("json").save(os.path.join(
                     self.work_dir, "redo", self.changefeed_id,
                     f"epoch={epoch_id}"))
+        batch_df = pre_df
         if self._sink_compile is not None:
             # DB/storage sinks compile at flush time (windows/aggregates
             # are batch-only constructs) — reference shape: the sink owns
             # batching/SQL-gen at write, not the stream DAG
-            batch_df = self._sink_compile(batch_df)
+            batch_df = self._sink_compile(pre_df)
         cols = set(batch_df.columns)
         # sink-shape dispatch (compile_changefeed): MQ frames carry
         # value/topic, DB SQL batches carry stmt, storage frames carry
@@ -173,94 +233,109 @@ class Changefeed:
         else:
             out_cols = [c for c in ("topic", "partition", "value")
                         if c in cols]
-        sort_cols = [c for c in ("commit_ts", "start_ts", "dml_order", "seq")
-                     if c in cols]
+        sort_cols = [c for c in SORT_KEYS if c in cols]
         ordered = (
             batch_df.sortWithinPartitions(*sort_cols)
             if sort_cols else batch_df
         )
-        live_mq = self.live_bootstrap is not None and "stmt" not in cols \
-            and "path" not in cols
-        if live_mq:
-            # real wire produce (flexible Produce record batches from
-            # executors); no filesystem sink — a Kafka changefeed's only
-            # artifacts are the broker log + the progress bookkeeping below
-            from ticdc_spark.sinks.kafka_live import produce_frame
-
-            live_cols = [c for c in ("topic", "partition", "key", "value")
-                         if c in cols]
-            barriers = self._pending_ddl_barriers(ordered, cols)
-            if barriers:
-                from ticdc_spark.streaming.barrier import split_batch_at_ddl
-
-                by_ts = {d["commit_ts"]: d for d in (self.ddl_events or [])}
-                topics = [r["topic"] for r in
-                          ordered.select("topic").distinct().collect()]
-                book = self._ddl_book()
-                # cut the epoch at each barrier: pre rows flush, the DDL
-                # message broadcasts to every partition, post rows flush
-                # against the bumped schema version (W3 on the live wire)
-                split_batch_at_ddl(
-                    ordered.select(*live_cols, "commit_ts"),
-                    barriers,
-                    lambda seg, _i: produce_frame(
-                        seg.select(*live_cols), self.live_bootstrap),
-                    lambda ts: self._apply_live_ddl(by_ts[ts], topics, book),
-                )
-            else:
-                produce_frame(ordered.select(*live_cols), self.live_bootstrap)
         # mode=overwrite per epoch dir: foreachBatch retries re-run with
         # the SAME epoch_id, so the write is idempotent under replay —
         # the Spark analog of the reference's replace-mode dedup on
         # restart (`basic_dispatcher.go:156-161`)
-        writer = None if live_mq else (
+        writer = (
             ordered.select(*(out_cols or ["value"]))
             .write.mode("overwrite")
             .partitionBy(*[c for c in ("topic",) if c in out_cols])
             .format("json")
         )
-        if writer is not None:
-            if self.compression:  # lz4/snappy/zstd analog (pkg/compression)
-                writer = writer.option("compression", self.compression)
-            writer.save(os.path.join(self.sink_dir, f"epoch={epoch_id}"))
-        # chaos hook: crash AFTER the sink effect but BEFORE progress
-        # bookkeeping — restart re-delivers the epoch; the overwrite
-        # above makes the replay idempotent
-        failpoint.inject("changefeed/after-flush", {"epoch": epoch_id})
-        ts_df = batch_df if "commit_ts" in cols else (
-            pre_df if "commit_ts" in pre_df.columns else None
+        if self.compression:  # lz4/snappy/zstd analog (pkg/compression)
+            writer = writer.option("compression", self.compression)
+        writer.save(os.path.join(self.sink_dir, f"epoch={epoch_id}"))
+
+    def _produce_live(self, batch_df: DataFrame) -> list:
+        """Produce the epoch to the live wire; returns the produce tasks'
+        summary rows (those of every segment on a DDL-barrier epoch)."""
+        from ticdc_spark.sinks.kafka_live import produce_frame
+
+        cols = set(batch_df.columns)
+        frame = batch_df.select(*[
+            c for c in ("topic", "partition", "key", "value", "table_id",
+                        *SORT_KEYS) if c in cols])
+        barriers, topics = self._pending_ddl_barriers(frame)
+        if not barriers:
+            return produce_frame(frame, self.live_bootstrap)
+        from ticdc_spark.streaming.barrier import split_batch_at_ddl
+
+        by_ts = {d["commit_ts"]: d for d in self.ddl_events}
+        book = self._ddl_book()
+        summary: list = []
+        # cut the epoch at each barrier: pre rows flush, the DDL message
+        # broadcasts to every partition, post rows flush against the
+        # bumped schema version (W3 on the live wire)
+        split_batch_at_ddl(
+            frame, barriers,
+            lambda seg, _i: summary.extend(
+                produce_frame(seg, self.live_bootstrap)),
+            lambda ts: self._apply_live_ddl(by_ts[ts], topics, book),
         )
-        if ts_df is not None:
-            stats = ts_df.agg(
-                F.max("commit_ts").alias("resolved_ts"),
-                F.min("commit_ts").alias("min_ts"),
-                F.count(F.lit(1)).alias("n_rows"),
-            ).collect()[0]
-            self._write_resolved_frame(ts_df, epoch_id)
-        else:  # no ts anywhere; progress is row-count only
-            stats = {"resolved_ts": None, "min_ts": None,
-                     "n_rows": batch_df.count()}
+        return summary
+
+    def _commit_epoch(self, epoch_id: int, summary: list,
+                      live_mq: bool) -> None:
+        """Checkpoint bookkeeping from the flush's summary rows
+        (``kafka_live.SUMMARY_SCHEMA``, a few per task): the progress
+        entry, the resolved frame, the syncpoints and, on the live wire,
+        the watermark broadcast.  No Spark job runs here."""
+        rows = [r.asDict() for r in summary]
+        stamped = [r for r in rows if r.get("max_ts") is not None]
+        resolved_ts = max((r["max_ts"] for r in stamped), default=None)
+        if stamped:
+            self._write_resolved_frame(stamped, epoch_id)
+        self._append_progress({
+            "changefeed": self.changefeed_id,
+            "epoch": epoch_id,
+            "resolved_ts": resolved_ts,
+            "rows": sum(r["rows"] for r in rows),
+            "wall_ts": time.time(),
+        })
+        if resolved_ts is None:  # no ts anywhere; progress is row-count only
+            return
+        if getattr(self.cfg, "enable_sync_point", False):
+            self._write_syncpoints(min(r["min_ts"] for r in stamped),
+                                   resolved_ts)
+        if live_mq:
+            self._produce_live_watermarks(
+                sorted({r["topic"] for r in rows}), int(resolved_ts))
+
+    def _append_progress(self, entry: dict) -> None:
+        """Append the epoch's progress line.  Replay (a crash between the
+        flush and this point) must not double-count rows, and a replayed
+        epoch can only be the LAST entry — Spark never re-runs an epoch
+        after a later one ran, and a rewound run's ids start past the
+        log's last entry (``next_epoch``) — so that entry alone is
+        checked and dropped; the log is never re-read."""
         os.makedirs(os.path.dirname(self.progress_path), exist_ok=True)
-        # epoch replay (crash between flush and this point) must not
-        # double-count rows: drop any prior entry for this epoch
+        with open(self.progress_path, "a+b") as f:
+            start, last = _last_entry(f)
+            if last is not None and last["epoch"] == entry["epoch"]:
+                f.truncate(start)
+            f.write(json.dumps(entry).encode() + b"\n")
+
+    def next_epoch(self) -> int:
+        """First epoch id past every epoch this changefeed recorded: its
+        sink's ``epoch=*`` dirs and its progress log's last entry (the
+        only record a live Kafka changefeed keeps).  A rewound run starts
+        its epoch-id namespace here."""
+        import glob
+
+        ids = [int(os.path.basename(p).split("=", 1)[1])
+               for p in glob.glob(os.path.join(self.sink_dir, "epoch=*"))]
         if os.path.exists(self.progress_path):
-            with open(self.progress_path) as f:
-                kept = [ln for ln in f if json.loads(ln)["epoch"] != epoch_id]
-            with open(self.progress_path, "w") as f:
-                f.writelines(kept)
-        with open(self.progress_path, "a") as f:
-            f.write(json.dumps({
-                "changefeed": self.changefeed_id,
-                "epoch": epoch_id,
-                "resolved_ts": stats["resolved_ts"],
-                "rows": stats["n_rows"],
-                "wall_ts": time.time(),
-            }) + "\n")
-        if (getattr(self.cfg, "enable_sync_point", False)
-                and stats["resolved_ts"] is not None):
-            self._write_syncpoints(stats["min_ts"], stats["resolved_ts"])
-        if live_mq and stats["resolved_ts"] is not None:
-            self._produce_live_watermarks(batch_df, int(stats["resolved_ts"]))
+            with open(self.progress_path, "rb") as f:
+                _, last = _last_entry(f)
+            if last is not None:
+                ids.append(last["epoch"])
+        return max(ids) + 1 if ids else 0
 
     def _ddl_book(self):
         from ticdc_spark.streaming.barrier import DDLTsBook
@@ -268,18 +343,24 @@ class Changefeed:
         return DDLTsBook(os.path.join(
             self.work_dir, "ddl", f"{self.changefeed_id}.book.jsonl"))
 
-    def _pending_ddl_barriers(self, ordered: DataFrame, cols: set) -> list[int]:
+    def _pending_ddl_barriers(self, frame: DataFrame
+                              ) -> tuple[list[int], list[str]]:
         """Unapplied DDL commit timestamps at or below this batch's max
-        commit ts (barriers beyond the batch wait for a later epoch)."""
-        if not self.ddl_events or "commit_ts" not in cols:
-            return []
+        commit ts (barriers beyond the batch wait for a later epoch), and
+        the batch's topics the DDL broadcasts to — one aggregate, run
+        only while a DDL is pending."""
+        if not self.ddl_events or "commit_ts" not in frame.columns:
+            return [], []
         book = self._ddl_book()
         pending = sorted(d["commit_ts"] for d in self.ddl_events
                          if book.should_apply(d["commit_ts"]))
         if not pending:
-            return []
-        mx = ordered.agg(F.max("commit_ts")).first()[0]
-        return [t for t in pending if mx is not None and t <= mx]
+            return [], []
+        mx, topics = frame.agg(F.max("commit_ts"),
+                               F.collect_set("topic")).first()
+        if mx is None:
+            return [], []
+        return [t for t in pending if t <= mx], sorted(topics)
 
     def _apply_live_ddl(self, ddl: dict, topics: list[str], book) -> None:
         """Exactly-once DDL application at the barrier: broadcast the
@@ -290,24 +371,16 @@ class Changefeed:
         re-broadcasts on replay (at-least-once, consumer dedups), the
         same contract as the data path."""
         from ticdc_spark.codec.canal_json import CANAL_DDL_EVENT_TYPE
-        from ticdc_spark.codec.kafka_wire import Record
-        from ticdc_spark.sinks.kafka_client import KafkaConn
 
         etype = CANAL_DDL_EVENT_TYPE.get(ddl.get("ddl_type", ""), "QUERY")
-        value = (
+        self._broadcast(topics, (
             '{"id":0,"database":"%s","table":"%s","pkNames":null,'
             '"isDdl":true,"type":"%s","es":%d,"ts":0,"sql":"%s",'
             '"sqlType":null,"mysqlType":null,"data":null,"old":null}'
             % (ddl.get("schema_name", ""), ddl.get("table_name", ""),
                etype, ddl["commit_ts"] // 1000,
                ddl.get("query", "").replace('"', '\\"'))
-        ).encode()
-        with KafkaConn.from_bootstrap(self.live_bootstrap) as conn:
-            md = conn.metadata(topics)
-            for topic in topics:
-                for p in [pt["index"]
-                          for pt in md["topics"][topic]["partitions"]]:
-                    conn.produce(topic, p, [Record(None, value)])
+        ).encode())
         # chaos hook: crash AFTER the wire broadcast but BEFORE the
         # registry bump + DDLTsBook record (the reference's
         # checkpoint_race_ddl_crash window) — restart replays the epoch
@@ -323,51 +396,57 @@ class Changefeed:
         bump_schema_registry(path, ddl)
         book.record(ddl["commit_ts"])
 
-    def _produce_live_watermarks(self, batch_df: DataFrame, resolved_ts: int) -> None:
+    def _produce_live_watermarks(self, topics: list[str], resolved_ts: int) -> None:
         """W1 live: after the flush, broadcast the epoch's resolved ts as a
         canal-json TIDB_WATERMARK message to EVERY partition of every topic
         seen this epoch (the reference's kafka sink broadcasts checkpoint
         events exactly like DDLs — `canal_json_encoder.go:406-441` +
         broadcast; see canal_checkpoints / kafka_ddl_broadcast)."""
-        from ticdc_spark.sinks.kafka_client import KafkaConn
-        from ticdc_spark.codec.kafka_wire import Record
-
-        topics = [r["topic"] for r in batch_df.select("topic").distinct().collect()]
-        value = (
+        self._broadcast(topics, (
             '{"id":0,"database":"","table":"","pkNames":null,"isDdl":false,'
             '"type":"TIDB_WATERMARK","es":%d,"ts":0,"sql":"","sqlType":null,'
             '"mysqlType":null,"data":null,"old":null,'
             '"_tidb":{"watermarkTs":%d}}' % (resolved_ts // 1000, resolved_ts)
-        ).encode()
+        ).encode())
+
+    def _broadcast(self, topics: list[str], value: bytes) -> None:
+        """One keyless control message to EVERY partition of ``topics``,
+        sent as ONE Produce request (every partition's error checked)."""
+        from ticdc_spark.codec.kafka_wire import Record
+        from ticdc_spark.sinks.kafka_client import KafkaConn
+
         with KafkaConn.from_bootstrap(self.live_bootstrap) as conn:
             md = conn.metadata(topics)
-            for topic in topics:
-                for p in [pt["index"] for pt in md["topics"][topic]["partitions"]]:
-                    conn.produce(topic, p, [Record(None, value)])
+            conn.produce_all({
+                t: {pt["index"]: [Record(None, value)]
+                    for pt in md["topics"][t]["partitions"]}
+                for t in topics})
 
-    def _write_resolved_frame(self, ts_df: DataFrame, epoch_id: int) -> None:
+    def _write_resolved_frame(self, summary: list[dict], epoch_id: int) -> None:
         """W1 on the wire: the per-dispatcher watermarks of this epoch
         as ONE BatchResolvedEvent frame (`resolved_ts_event.go`,
         codec/resolved_event.py) — the artifact a mixed deployment's
-        consumer reads to advance its frontier.  Per-table max is a
-        control-plane aggregate (one row per dispatcher); the write is
-        per-epoch overwrite, idempotent under foreachBatch replay."""
-        if "table_id" not in ts_df.columns:
-            return
+        consumer reads to advance its frontier.  Per-table max ts and
+        seq over the flush's summary rows (one event per dispatcher);
+        the write is per-epoch overwrite, idempotent under foreachBatch
+        replay."""
         from ticdc_spark.codec.resolved_event import (
             ResolvedEvent,
             encode_batch,
         )
 
-        per_tbl = ts_df.groupBy("table_id").agg(
-            F.max("commit_ts").alias("ts"),
-            (F.max("seq") if "seq" in ts_df.columns
-             else F.lit(0)).alias("seq"),
-        ).collect()
+        per_tbl: dict[int, tuple[int, int]] = {}
+        for r in summary:
+            if r.get("table_id") is None:
+                continue
+            ts, seq = per_tbl.get(r["table_id"], (r["max_ts"], 0))
+            per_tbl[r["table_id"]] = (max(ts, r["max_ts"]),
+                                      max(seq, r["max_seq"] or 0))
+        if not per_tbl:
+            return
         events = [
-            ResolvedEvent(int(r["ts"]), int(epoch_id), int(r["seq"] or 0),
-                          (int(r["table_id"]), 0))
-            for r in sorted(per_tbl, key=lambda r: r["table_id"])
+            ResolvedEvent(int(ts), int(epoch_id), int(seq), (int(tid), 0))
+            for tid, (ts, seq) in sorted(per_tbl.items())
         ]
         path = os.path.join(self.work_dir, "resolved", self.changefeed_id)
         os.makedirs(path, exist_ok=True)
@@ -460,8 +539,6 @@ class Changefeed:
         """Latest resolved ts from the progress log (A2)."""
         if not os.path.exists(self.progress_path):
             return None
-        last = None
-        with open(self.progress_path) as f:
-            for line in f:
-                last = json.loads(line)
+        with open(self.progress_path, "rb") as f:
+            _, last = _last_entry(f)
         return last["resolved_ts"] if last else None

@@ -169,7 +169,6 @@ class ChangefeedRegistry:
         if changefeed_id not in state:
             raise KeyError(changefeed_id)
         if overwrite_checkpoint_ts is not None:
-            import glob
             import shutil
 
             if overwrite_checkpoint_ts <= 0:
@@ -177,13 +176,8 @@ class ChangefeedRegistry:
             cf = self.get(changefeed_id)
             cf.stop()
             shutil.rmtree(cf.checkpoint_dir, ignore_errors=True)
-            # next epoch namespace: past every epoch dir already written
-            existing = [
-                int(os.path.basename(p).split("=", 1)[1])
-                for p in glob.glob(os.path.join(cf.sink_dir, "epoch=*"))
-            ]
-            state[changefeed_id]["epoch_offset"] = (
-                max(existing) + 1 if existing else 0)
+            # next epoch namespace: past every epoch already recorded
+            state[changefeed_id]["epoch_offset"] = cf.next_epoch()
             state[changefeed_id]["overwrite_checkpoint_ts"] = (
                 overwrite_checkpoint_ts)
             # DDLs beyond the rewind point must re-apply on replay
