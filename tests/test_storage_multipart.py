@@ -13,6 +13,8 @@ invalid-completion error.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from ticdc_spark.sinks.azblob_server import AzBlobClient, MiniAzureBlobServer
@@ -225,6 +227,11 @@ def test_put_files_multipart_threshold(spark):
 
 # ------------------------------------------------- sink chaos (failpoints)
 
+# well under HttpWire's 60 s read timeout: a dropped connection must be
+# seen as EOF, not waited out
+_RECONNECT_BOUND_S = 40
+
+
 def test_put_files_multipart_survives_dropped_parts(spark):
     """Chaos: the endpoint kills connections mid-UploadPart (parts
     unrecorded); the sink's retry reconnects, ListParts-resumes the SAME
@@ -240,10 +247,12 @@ def test_put_files_multipart_survives_dropped_parts(spark):
     try:
         with MiniS3Server() as srv:
             failpoint.enable("storage/drop-upload-part", "2*return(1)")
+            t0 = time.monotonic()
             s3_live.put_files(df, srv.endpoint, srv.access_key,
                               srv.secret_key, scheme="s3",
                               multipart_threshold=64 * 1024,
                               part_size=64 * 1024)
+            assert time.monotonic() - t0 < _RECONNECT_BOUND_S
             assert failpoint.active()["storage/drop-upload-part"] == 2
             with S3Client(srv.endpoint, srv.access_key,
                           srv.secret_key) as c:
@@ -270,10 +279,12 @@ def test_put_files_multipart_survives_lost_complete_response(spark):
         with MiniS3Server() as srv:
             failpoint.enable("storage/drop-complete-response",
                              "1*return(1)")
+            t0 = time.monotonic()
             s3_live.put_files(df, srv.endpoint, srv.access_key,
                               srv.secret_key, scheme="s3",
                               multipart_threshold=64 * 1024,
                               part_size=64 * 1024)
+            assert time.monotonic() - t0 < _RECONNECT_BOUND_S
             assert failpoint.active()[
                 "storage/drop-complete-response"] == 1
             with S3Client(srv.endpoint, srv.access_key,
@@ -282,3 +293,27 @@ def test_put_files_multipart_survives_lost_complete_response(spark):
             assert got.decode().splitlines() == [v for _, _, v in rows]
     finally:
         failpoint.disable_all()
+
+
+def test_client_pool_evicts_oldest(monkeypatch):
+    """The per-worker pool holds at most 65 clients; past that the
+    OLDEST is closed and dropped, and the newest stays pooled."""
+    from ticdc_spark.sinks import s3_live
+
+    class _Fake:
+        closed = False
+
+        def close(self):
+            self.closed = True
+
+    monkeypatch.setattr(s3_live, "_CLIENT_POOL", {})
+    monkeypatch.setattr(s3_live, "_client", lambda *a: _Fake())
+    clients = [s3_live._pooled_client(f"http://h:{i}", "a", "b", "s3")
+               for i in range(66)]
+    keys = list(s3_live._CLIENT_POOL)
+    assert len(keys) == 65
+    assert clients[0].closed
+    assert all(k[1] != "http://h:0" for k in keys)
+    assert keys[-1][1] == "http://h:65"
+    assert s3_live._CLIENT_POOL[keys[-1]] is clients[-1]
+    assert not any(c.closed for c in clients[1:])

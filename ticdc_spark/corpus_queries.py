@@ -80,7 +80,7 @@ SELECT key, truly_present, all_set = 1 AS bloom_hit FROM checked
 """
 
 
-@register("bloom_membership", _BLOOM_ORACLE)
+@register("bloom_membership", _BLOOM_ORACLE, bench="plan")
 def q_bloom_membership(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     bloom = bloom_build(docs.select(F.md5("text").alias("key")))
@@ -125,7 +125,7 @@ FROM a
 """
 
 
-@register("mixture_weights", _MIX_ORACLE)
+@register("mixture_weights", _MIX_ORACLE, bench="plan")
 def q_mixture_weights(spark, sf_dir):
     return mixture_weights(_docs(spark, sf_dir), token_budget=_MIX_BUDGET)
 
@@ -158,7 +158,7 @@ FROM scored GROUP BY 1
 """
 
 
-@register("bigram_logprob", _BIGRAM_ORACLE)
+@register("bigram_logprob", _BIGRAM_ORACLE, bench="plan")
 def q_bigram_logprob(spark, sf_dir):
     return bigram_logprob(_docs(spark, sf_dir))
 
@@ -183,7 +183,7 @@ FROM w GROUP BY 1
 """
 
 
-@register("quality_classifier", _QC_ORACLE)
+@register("quality_classifier", _QC_ORACLE, bench="plan")
 def q_quality_classifier(spark, sf_dir):
     return quality_classifier(_docs(spark, sf_dir))
 
@@ -217,7 +217,7 @@ FROM ranked
 """
 
 
-@register("ccnet_buckets", _CCNET_ORACLE)
+@register("ccnet_buckets", _CCNET_ORACLE, bench="plan")
 def q_ccnet_buckets(spark, sf_dir):
     from pyspark.sql import Window
 
@@ -269,7 +269,7 @@ FROM s
 """
 
 
-@register("seeded_shuffle", _SHUFFLE_ORACLE)
+@register("seeded_shuffle", _SHUFFLE_ORACLE, bench="plan")
 def q_seeded_shuffle(spark, sf_dir):
     from pyspark.sql import Window
 
@@ -383,7 +383,8 @@ def _bpe_train_oracle(k: int) -> str:
               f"FROM ({union})")
 
 
-@register("bpe_train_merges", _bpe_train_oracle(_BPE_TRAIN_K))
+# bench "build": the merge loop trains (collects) at construction
+@register("bpe_train_merges", _bpe_train_oracle(_BPE_TRAIN_K), bench="build")
 def q_bpe_train_merges(spark, sf_dir):
     from ticdc_spark.llm.text import bpe_train_merges
 

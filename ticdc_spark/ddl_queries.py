@@ -287,7 +287,7 @@ FROM tables CROSS JOIN tape
 """
 
 
-@register("ddl_job_fetch", _JOB_FETCH_ORACLE)
+@register("ddl_job_fetch", _JOB_FETCH_ORACLE, bench="plan")
 def q_ddl_job_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize binary tidb_ddl_job RawKV frames for every changelog
     table (Done + Synced + Running + Cancelled jobs, plus a decoy row in

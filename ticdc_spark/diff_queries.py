@@ -102,7 +102,7 @@ FROM sck FULL OUTER JOIN tck USING (chunk_id)
 """
 
 
-@register("table_diff_chunks", _CHUNKS_ORACLE)
+@register("table_diff_chunks", _CHUNKS_ORACLE, bench="plan")
 def q_table_diff_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, tgt = _pair(spark, sf_dir)
     return diff_chunks(src, tgt, "k", _COLS, _CHUNK)
@@ -168,7 +168,7 @@ WHERE kind = 'extra'
 """
 
 
-@register("table_diff_fix_sql", _FIX_ORACLE)
+@register("table_diff_fix_sql", _FIX_ORACLE, bench="plan")
 def q_table_diff_fix_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, tgt = _pair(spark, sf_dir)
     return fix_sql(src, tgt, "k", _COLS, _CHUNK, "tpch", "orders")

@@ -73,6 +73,7 @@ def _marker_ratio_sql(markers: tuple[str, ...]) -> str:
     "dedup_exact",
     "SELECT md5(text) AS content_hash, count(*) AS n_dups, "
     "min(doc_id) AS keep_doc_id FROM documents GROUP BY 1",
+    bench="plan",
 )
 def q_dedup_exact(spark, sf_dir):
     return exact_dedup(_docs(spark, sf_dir))
@@ -99,7 +100,7 @@ WHERE round(n_inter::DOUBLE / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.8
 """
 
 
-@register("dedup_ngram_jaccard", _JACCARD_ORACLE)
+@register("dedup_ngram_jaccard", _JACCARD_ORACLE, bench="plan")
 def q_dedup_ngram_jaccard(spark, sf_dir):
     return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.8)
 
@@ -173,7 +174,7 @@ SELECT * FROM verified WHERE jaccard >= 0.8
 """
 
 
-@register("dedup_minhash_lsh", _LSH_PAIRS_ORACLE)
+@register("dedup_minhash_lsh", _LSH_PAIRS_ORACLE, bench="plan")
 def q_dedup_minhash_lsh(spark, sf_dir):
     return minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.8)
 
@@ -200,7 +201,9 @@ HAVING count(*) > {MAX_BUCKET_OCCUPANCY}
 """
 
 
-@register("dedup_minhash_lsh_hot_buckets", _LSH_HOT_BUCKETS_ORACLE)
+@register("dedup_minhash_lsh_hot_buckets", _LSH_HOT_BUCKETS_ORACLE,
+    bench="plan",
+)
 def q_dedup_minhash_lsh_hot_buckets(spark, sf_dir):
     """Recall-accounting side of the minhash LSH skew guard: the
     dropped (band, bucket) keys and how many pairs each would have
@@ -225,7 +228,7 @@ SELECT doc_id, CAST({_BIT_VOTES} AS BIGINT) AS simhash FROM h
 """
 
 
-@register("dedup_simhash", _SIMHASH_ORACLE)
+@register("dedup_simhash", _SIMHASH_ORACLE, bench="plan")
 def q_dedup_simhash(spark, sf_dir):
     return simhash(_docs(spark, sf_dir))
 
@@ -265,6 +268,7 @@ _ALL_MARKERS = MARKERS["en"] + MARKERS["de"] + MARKERS["fr"]
     "round(0.3 * least(len(toks)::DOUBLE / 100.0, 1.0) "
     f"+ 0.4 * ({_marker_ratio_sql(_ALL_MARKERS)}) "
     "+ 0.3 * (len(list_distinct(toks))::DOUBLE / len(toks)), 6) AS quality FROM t",
+    bench="plan",
 )
 def q_text_quality(spark, sf_dir):
     return quality_score(_docs(spark, sf_dir))
@@ -277,6 +281,7 @@ def q_text_quality(spark, sf_dir):
     "SELECT doc_id, n_chars, measured_chars, len(toks)::BIGINT AS n_tokens, "
     "list_sum(list_transform(toks, x -> ceil(length(x) / 4.0)::BIGINT))::BIGINT "
     "AS n_subwords_est FROM t",
+    bench="plan",
 )
 def q_token_stats(spark, sf_dir):
     return token_stats(_docs(spark, sf_dir))
@@ -325,7 +330,7 @@ SELECT q_id, c_id, cos_sim, rank FROM ranked WHERE rank <= 10
 """
 
 
-@register("similarity_knn", _KNN_ORACLE)
+@register("similarity_knn", _KNN_ORACLE, bench="plan")
 def q_similarity_knn(spark, sf_dir):
     return brute_force_knn(_emb(spark, sf_dir), n_queries=20, k=10)
 
@@ -357,7 +362,7 @@ SELECT q_id, c_id, cos_sim, rank FROM ranked WHERE rank <= 3
 """
 
 
-@register("similarity_lsh_knn", _LSH_KNN_ORACLE)
+@register("similarity_lsh_knn", _LSH_KNN_ORACLE, bench="plan")
 def q_similarity_lsh_knn(spark, sf_dir):
     return lsh_knn(_emb(spark, sf_dir), n_queries=20, k=3)
 
@@ -371,6 +376,7 @@ def q_similarity_lsh_knn(spark, sf_dir):
     "16 + (ascii(substring(text, 1, 1)) % 64)::BIGINT AS fake_width, "
     "16 + (ascii(substring(text, 2, 1)) % 64)::BIGINT AS fake_height "
     "FROM documents",
+    bench="plan",
 )
 def q_multimodal_features(spark, sf_dir):
     return extract_features(_docs(spark, sf_dir))
@@ -581,7 +587,7 @@ FROM st
 """
 
 
-@register("doc_chunking", _CHUNK_ORACLE)
+@register("doc_chunking", _CHUNK_ORACLE, bench="plan")
 def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(_docs(spark, sf_dir))
 
@@ -619,6 +625,7 @@ _PII_RED_SQL = (
     f"CAST(len(regexp_extract_all(text, '{PII_PHONE}')) AS BIGINT) AS n_phones, "
     f"{_PII_RED_SQL} AS redacted_text, "
     f"md5({_PII_RED_SQL}) AS redacted_fp FROM aug",
+    bench="plan",
 )
 def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -667,7 +674,10 @@ FROM lab
 """
 
 
-@register("dedup_clusters", _CLUSTERS_ORACLE)
+# bench "build": the label-propagation loop (joins + counts) runs at
+# construction; the returned frame is only the final labeled join, and
+# timing that tail alone under-reports and fakes a super-linear scale ratio
+@register("dedup_clusters", _CLUSTERS_ORACLE, bench="build")
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(_docs(spark, sf_dir), threshold=0.8)
 
@@ -721,7 +731,8 @@ FROM clus c JOIN q ON q.doc_id = c.doc_id
 """
 
 
-@register("dedup_clusters_keep_best", _KEEP_BEST_ORACLE)
+# bench "build": the same construction-time loop as dedup_clusters
+@register("dedup_clusters_keep_best", _KEEP_BEST_ORACLE, bench="build")
 def q_dedup_clusters_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -787,7 +798,7 @@ WHERE q.quality >= 0.45 AND {_SAMPLE_U.replace("doc_id", "d.doc_id")} < {_FRAC_S
 """
 
 
-@register("training_manifest", _MANIFEST_ORACLE)
+@register("training_manifest", _MANIFEST_ORACLE, bench="plan")
 def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return training_manifest(_docs(spark, sf_dir))
 
@@ -859,7 +870,7 @@ FROM corp c LEFT JOIN hits USING (doc_id)
 """
 
 
-@register("decontaminate", _DECONTAM_ORACLE)
+@register("decontaminate", _DECONTAM_ORACLE, bench="plan")
 def q_decontaminate(spark, sf_dir):
     from ticdc_spark.llm.dedup import decontaminate
 
@@ -906,7 +917,7 @@ FROM m
 """
 
 
-@register("repetition_metrics", _REP_ORACLE)
+@register("repetition_metrics", _REP_ORACLE, bench="plan")
 def q_repetition_metrics(spark, sf_dir):
     from ticdc_spark.llm.text import repetition_metrics
 
@@ -1065,7 +1076,7 @@ SELECT doc_id, term, tf, df, score, rk FROM ranked WHERE rk <= 5
 """
 
 
-@register("tfidf_keywords", _TFIDF_SQL)
+@register("tfidf_keywords", _TFIDF_SQL, bench="plan")
 def q_tfidf_keywords(spark, sf_dir):
     return tfidf_keywords(_docs(spark, sf_dir), k=5)
 
@@ -1090,7 +1101,7 @@ GROUP BY doc_id
 """
 
 
-@register("unigram_logprob", _UNIGRAM_SQL)
+@register("unigram_logprob", _UNIGRAM_SQL, bench="plan")
 def q_unigram_logprob(spark, sf_dir):
     return unigram_logprob(_docs(spark, sf_dir))
 
@@ -1119,7 +1130,7 @@ FROM chunks GROUP BY 1 HAVING count(*) > 1
 """
 
 
-@register("dedup_chunks", _CHUNK_DUP_SQL)
+@register("dedup_chunks", _CHUNK_DUP_SQL, bench="plan")
 def q_dedup_chunks(spark, sf_dir):
     """Duplicated chunk windows across the corpus: chunk → md5 →
     hash-groupBy, keeping only fingerprints with more than one copy.
@@ -1171,7 +1182,7 @@ FROM ranked WHERE rk = 1
 """
 
 
-@register("dedup_semantic", _SEMDEDUP_ORACLE)
+@register("dedup_semantic", _SEMDEDUP_ORACLE, bench="plan")
 def q_dedup_semantic(spark, sf_dir):
     base = _emb(spark, sf_dir).select("vec_id", "embedding")
     twins = base.filter(F.col("vec_id") % 50 == 0).select(
@@ -1211,7 +1222,7 @@ FROM pd
 """
 
 
-@register("dedup_exact_substring", _SUBSTR_ORACLE)
+@register("dedup_exact_substring", _SUBSTR_ORACLE, bench="plan")
 def q_dedup_exact_substring(spark, sf_dir):
     return substring_dup_stats(_docs(spark, sf_dir))
 
@@ -1251,7 +1262,7 @@ FROM sc GROUP BY doc_id
 """
 
 
-@register("dsir_importance", _DSIR_ORACLE)
+@register("dsir_importance", _DSIR_ORACLE, bench="plan")
 def q_dsir_importance(spark, sf_dir):
     return dsir_importance(_docs(spark, sf_dir))
 
@@ -1283,7 +1294,7 @@ FROM c
 """
 
 
-@register("sequence_packing", _PACK_ORACLE)
+@register("sequence_packing", _PACK_ORACLE, bench="plan")
 def q_sequence_packing(spark, sf_dir):
     return sequence_packing(_docs(spark, sf_dir))
 
@@ -1313,7 +1324,7 @@ WHERE round(n_inter::DOUBLE / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.8
 """
 
 
-@register("dedup_ngram_jaccard_pruned", _JACCARD_PRUNED_ORACLE)
+@register("dedup_ngram_jaccard_pruned", _JACCARD_PRUNED_ORACLE, bench="plan")
 def q_dedup_ngram_jaccard_pruned(spark, sf_dir):
     from ticdc_spark.llm.dedup import ngram_jaccard_pairs_pruned
 
@@ -1343,7 +1354,7 @@ ORDER BY n DESC, pair LIMIT 50
 """
 
 
-@register("bpe_pair_stats", _BPE_ORACLE)
+@register("bpe_pair_stats", _BPE_ORACLE, bench="plan")
 def q_bpe_pair_stats(spark, sf_dir):
     from ticdc_spark.llm.text import bpe_pair_stats
 
@@ -1375,7 +1386,7 @@ JOIN tot tb ON tb.source = src_b
 """
 
 
-@register("source_overlap_matrix", _OVERLAP_ORACLE)
+@register("source_overlap_matrix", _OVERLAP_ORACLE, bench="plan")
 def q_source_overlap_matrix(spark, sf_dir):
     from ticdc_spark.llm.dedup import source_overlap_matrix
 
@@ -1416,7 +1427,7 @@ FROM tot t LEFT JOIN cleaned c USING (doc_id)
 """
 
 
-@register("substring_excise", _EXCISE_ORACLE)
+@register("substring_excise", _EXCISE_ORACLE, bench="plan")
 def q_substring_excise(spark, sf_dir):
     from ticdc_spark.llm.dedup import substring_excise
 
@@ -1463,7 +1474,7 @@ _PQ_CODES_ORACLE = "SELECT vec_id, " + ", ".join(
 ) + " FROM embeddings"
 
 
-@register("pq_codes", _PQ_CODES_ORACLE)
+@register("pq_codes", _PQ_CODES_ORACLE, bench="plan")
 def q_pq_codes(spark, sf_dir):
     return pq_codes(_emb(spark, sf_dir))
 
@@ -1501,7 +1512,7 @@ SELECT q_id, c_id, approx_d2, rank FROM ranked WHERE rank <= 3
 """
 
 
-@register("pq_adc_knn", _PQ_ADC_ORACLE)
+@register("pq_adc_knn", _PQ_ADC_ORACLE, bench="plan")
 def q_pq_adc_knn(spark, sf_dir):
     return pq_adc_knn(_emb(spark, sf_dir))
 
@@ -1581,7 +1592,7 @@ FROM ranked GROUP BY q_id
 """
 
 
-@register("hnsw_recall_at_k", _HNSW_TWIN_ORACLE)
+@register("hnsw_recall_at_k", _HNSW_TWIN_ORACLE, bench="plan")
 def q_hnsw_recall_at_k(spark, sf_dir):
     from ticdc_spark.llm.similarity import hnsw_knn
 
@@ -1648,7 +1659,9 @@ FROM ranked r JOIN q ON q.q_id = r.q_id GROUP BY r.q_id
 """
 
 
-@register("vector_changefeed_ann", _VEC_CF_ANN_ORACLE)
+# bench "build": the query-set collect at construction runs the mount
+# chain; the HNSW build runs at the action
+@register("vector_changefeed_ann", _VEC_CF_ANN_ORACLE, bench="build")
 def q_vector_changefeed_ann(spark, sf_dir):
     from pyspark.sql import Window
 
@@ -1770,7 +1783,7 @@ SELECT q_id, c_id, approx_d2, rank FROM ranked WHERE rank <= 3
 """
 
 
-@register("ivf_pq_knn", _IVFPQ_ORACLE)
+@register("ivf_pq_knn", _IVFPQ_ORACLE, bench="plan")
 def q_ivf_pq_knn(spark, sf_dir):
     return ivf_pq_knn(_emb(spark, sf_dir))
 
@@ -1813,7 +1826,7 @@ SELECT q_id, c_id, dot_i, rank FROM ranked WHERE rank <= 3
 """
 
 
-@register("sq_dot_topk", _SQ_TOPK_ORACLE)
+@register("sq_dot_topk", _SQ_TOPK_ORACLE, bench="plan")
 def q_sq_dot_topk(spark, sf_dir):
     return sq_dot_topk(_emb(spark, sf_dir))
 
@@ -1857,7 +1870,7 @@ SELECT q_id, c_id, dot_x, rank FROM ranked WHERE rank <= 3
 """
 
 
-@register("sq_rerank_topk", _SQ_RERANK_ORACLE)
+@register("sq_rerank_topk", _SQ_RERANK_ORACLE, bench="plan")
 def q_sq_rerank_topk(spark, sf_dir):
     return sq_dot_topk(_emb(spark, sf_dir), rerank=64)
 
@@ -1901,7 +1914,7 @@ FROM agg a JOIN top_lang tl USING (source)
 """.format(marker=_marker_ratio_sql(_ALL_MARKERS))
 
 
-@register("dataset_card", _CARD_ORACLE)
+@register("dataset_card", _CARD_ORACLE, bench="plan")
 def q_dataset_card(spark, sf_dir):
     """Per-source corpus datasheet.  Per-doc quality is integer-scaled
     (q6 = round(quality*1e6)) before summation so the aggregate is
@@ -1965,7 +1978,7 @@ FROM words GROUP BY doc_id
 """
 
 
-@register("bpe_encode_stats", _BPE_ENC_ORACLE)
+@register("bpe_encode_stats", _BPE_ENC_ORACLE, bench="plan")
 def q_bpe_encode_stats(spark, sf_dir):
     return bpe_encode_stats(_docs(spark, sf_dir))
 
@@ -2044,7 +2057,7 @@ FROM m
 """
 
 
-@register("winnowing_fingerprint", _WINNOW_ORACLE)
+@register("winnowing_fingerprint", _WINNOW_ORACLE, bench="plan")
 def q_winnowing_fingerprint(spark, sf_dir):
     from ticdc_spark.llm.text import winnowing_fingerprints
 
@@ -2090,7 +2103,7 @@ GROUP BY 1, 2 HAVING count(*) >= 3
 """
 
 
-@register("winnowing_near_dup", _WINNOW_PAIR_ORACLE)
+@register("winnowing_near_dup", _WINNOW_PAIR_ORACLE, bench="plan")
 def q_winnowing_near_dup(spark, sf_dir):
     from ticdc_spark.llm.text import winnowing_near_dup
 
@@ -2161,7 +2174,8 @@ def q_unigram_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests pin the clustered-corpus behavior in
 # tests/test_hostile_fixtures.py).  Oracle: exact brute-force twin
 # rank — the ADC-shortlist + exact-rerank pipeline must agree with it.
-@register("pq_trained_rerank_recall", _HNSW_TWIN_ORACLE)
+# Bench "build": the PQ training sample collects at construction.
+@register("pq_trained_rerank_recall", _HNSW_TWIN_ORACLE, bench="build")
 def q_pq_trained_rerank_recall(spark, sf_dir):
     from ticdc_spark.llm.similarity import pq_adc_knn, pq_codebooks_trained
 

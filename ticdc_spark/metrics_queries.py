@@ -60,7 +60,7 @@ FROM (SELECT pk, commit_ts, {tso} AS tso FROM changelog)
 """.format(tso=_TSO_SQL)
 
 
-@register("tso_functions", f"WITH {CHANGELOG_SQL} {_TSO_ORACLE}")
+@register("tso_functions", f"WITH {CHANGELOG_SQL} {_TSO_ORACLE}", bench="plan")
 def q_tso(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = _with_tso(events_changelog(spark, sf_dir))
     return cl.select(
@@ -98,7 +98,9 @@ FROM ranked GROUP BY table_name
 """.format(tso=_TSO_SQL)
 
 
-@register("checkpoint_lag_percentiles", f"WITH {CHANGELOG_SQL} {_LAG_ORACLE}")
+@register("checkpoint_lag_percentiles", f"WITH {CHANGELOG_SQL} {_LAG_ORACLE}",
+    bench="plan",
+)
 def q_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _with_tso(events_changelog(spark, sf_dir)).select("table_name", "tso")
     now = F.broadcast(base.agg(F.max("tso").alias("now_tso")))
@@ -160,7 +162,7 @@ JOIN (SELECT event_type, count(DISTINCT user_id) AS n_exact
 """
 
 
-@register("hll_user_estimate", _HLL_EST_ORACLE)
+@register("hll_user_estimate", _HLL_EST_ORACLE, bench="plan")
 def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type distinct-user estimate with the exact count
     alongside (the exact column is the correctness audit; at 100 TB
@@ -185,7 +187,7 @@ def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ticdc_spark.operators import scan_window as _sw  # noqa: E402
 
 
-@register("adaptive_scan_window", _sw.oracle_sql(CHANGELOG_SQL))
+@register("adaptive_scan_window", _sw.oracle_sql(CHANGELOG_SQL), bench="plan")
 def q_adaptive_scan_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = events_changelog(spark, sf_dir)
     return _sw.fold_controller_pandas(_sw.congestion_tape(cl))
@@ -236,7 +238,7 @@ WHERE k.n_exact >= 50
 """
 
 
-@register("cms_heavy_hitters", _CMS_HH_ORACLE)
+@register("cms_heavy_hitters", _CMS_HH_ORACLE, bench="plan")
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point queries against the grid for every key whose exact count
     is ≥ 50 — the CMS guarantee (est ≥ exact) is auditable row-by-row.
@@ -321,7 +323,7 @@ LEFT JOIN __crc_out c ON c.s = b.s_col
 """
 
 
-@register("partition_inertia_index_value", _INERTIA_IV_ORACLE)
+@register("partition_inertia_index_value", _INERTIA_IV_ORACLE, bench="plan")
 def q_partition_inertia_index_value(
         spark: SparkSession, sf_dir: str) -> DataFrame:
     """index_value.go:31-60 — Write(schema, table) then one
@@ -380,7 +382,7 @@ FROM dec
 """
 
 
-@register("eventstore_key_codec", _KEY_ORACLE)
+@register("eventstore_key_codec", _KEY_ORACLE, bench="plan")
 def q_eventstore_key_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = events_changelog(spark, sf_dir)
     key_hex = F.concat(
@@ -448,7 +450,7 @@ FROM hist
 """
 
 
-@register("lag_histogram", _HIST_ORACLE)
+@register("lag_histogram", _HIST_ORACLE, bench="plan")
 def q_lag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _with_tso(events_changelog(spark, sf_dir)).select("table_name", "tso")
     now = F.broadcast(base.agg(F.max("tso").alias("now_tso")))
@@ -533,7 +535,7 @@ FROM enc e JOIN dec d USING (table_id), gmin g
 """
 
 
-@register("batch_resolved_codec", _RESOLVED_BATCH_ORACLE)
+@register("batch_resolved_codec", _RESOLVED_BATCH_ORACLE, bench="plan")
 def q_batch_resolved_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = events_changelog(spark, sf_dir)
     disp = cl.groupBy("table_id").agg(
@@ -629,7 +631,7 @@ FROM txn
 """
 
 
-@register("dml_event_frames", _DML_FRAMES_ORACLE)
+@register("dml_event_frames", _DML_FRAMES_ORACLE, bench="plan")
 def q_dml_event_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = events_changelog(spark, sf_dir)
     rt = F.when(F.col("op") == "D", F.lit("00")) \

@@ -30,6 +30,17 @@ from ticdc_spark.codec import (
 )
 from ticdc_spark.codec.avro_codec import encode_avro_json
 from ticdc_spark.codec.simple_protocol import encode_simple
+from ticdc_spark.operators import (
+    apply_event_filters,
+    apply_expr_filter,
+    apply_table_filter,
+    compact_changelog,
+    delete_handle_key_only,
+    only_updated_columns,
+    route,
+    select_columns,
+    split_updates,
+)
 
 
 def _debezium_avro(df):
@@ -42,17 +53,7 @@ def _avro_confluent(df):
     from ticdc_spark.codec.avro_protocol import encode_avro_binary_df
 
     return encode_avro_binary_df(df)
-from ticdc_spark.operators import (
-    apply_event_filters,
-    apply_expr_filter,
-    apply_table_filter,
-    compact_changelog,
-    delete_handle_key_only,
-    only_updated_columns,
-    route,
-    select_columns,
-    split_updates,
-)
+
 
 # protocol enum per `pkg/config/sink_protocol.go:33-44`
 ENCODERS = {
@@ -298,22 +299,7 @@ def _encode(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
 
 
 def build_pipeline(cl: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
-    payload_fields = [f.name for f in cl.schema["after"].dataType.fields]
-    cl = apply_replication_window(cl, cfg)
-    df = apply_table_filter(
-        cl, cfg.filter_rules, case_sensitive=cfg.case_sensitive
-    )
-    if cfg.event_filters:
-        df = apply_event_filters(df, cfg.event_filters)
-    if cfg.expr_filter:
-        ef = dict(cfg.expr_filter)
-        matcher = ef.pop("matcher", ["*.*"])
-        kwargs = {k.replace("-", "_"): v for k, v in ef.items()}
-        df = apply_expr_filter(df, matcher, payload_fields, **kwargs)
-    if cfg.column_selectors:
-        df = select_columns(df, cfg.column_selectors)
-    if cfg.split_updates:
-        df = split_updates(df)
+    df = build_pipeline_uncoded(cl, cfg)
     # filters are done — rebalance single-split inputs before the
     # per-row-heavy encode/route stages (see sources.changelog.scale_out)
     from ticdc_spark.sources.changelog import scale_out

@@ -37,6 +37,15 @@ from ticdc_spark.sources.changelog import (
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+# How bench.py times a benched query (unbenched queries are absent):
+# - "plan": the query function only plans; time the noop write alone.
+# - "build": real work (an iterative trainer or convergence loop) runs at
+#   construction; time construction plus write.
+# - "endpoint": construction produces/applies through an in-process
+#   protocol endpoint; time both, and skip the query at 10x, where the
+#   number would measure that single-host stand-in, not the Spark plan.
+BENCH: dict[str, str] = {}
+BENCH_TAGS = ("plan", "build", "endpoint")
 
 FLAT_COLS = [
     "schema_name", "table_name", "table_id", "op", "commit_ts", "start_ts",
@@ -61,11 +70,16 @@ def _flatten(cl: DataFrame, extra: list | None = None) -> DataFrame:
     return cl.select(*(cols + (extra or [])))
 
 
-def register(name: str, oracle: str | None):
+def register(name: str, oracle: str | None, bench: str | None = None):
+    if bench is not None and bench not in BENCH_TAGS:
+        raise ValueError(f"{name}: bench tag {bench!r} not in {BENCH_TAGS}")
+
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if bench is not None:
+            BENCH[name] = bench
         return fn
 
     return deco
@@ -77,6 +91,7 @@ def register(name: str, oracle: str | None):
 @register(
     "changelog_mount",
     f"WITH {CHANGELOG_SQL} SELECT {_FLAT_SELECT} FROM changelog",
+    bench="plan",
 )
 def q_changelog_mount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flat_changelog(spark, sf_dir)
@@ -95,6 +110,7 @@ _BINARY_FLAT = (
 @register(
     "mount_binary_rows",
     f"WITH {CHANGELOG_SQL} SELECT {_BINARY_FLAT} FROM changelog",
+    bench="plan",
 )
 def q_mount_binary_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The changelog is serialized into real RawKV frames (record keys +
@@ -125,6 +141,7 @@ _ZH_CASE = ("CASE CAST(pk % 4 AS INT) "
     "charset_gbk_mount",
     f"WITH {CHANGELOG_SQL} SELECT pk, seq, op, {_ZH_CASE} AS txt "
     "FROM changelog",
+    bench="plan",
 )
 def q_charset_gbk_mount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A gbk-charset string column rides the binary wire in its OWN
@@ -185,6 +202,7 @@ _JSON_CASE = ("CASE CAST(pk % 4 AS INT) "
     "mount_binary_json",
     f"WITH {CHANGELOG_SQL} SELECT pk, seq, op, {_JSON_CASE} AS j "
     "FROM changelog",
+    bench="plan",
 )
 def q_mount_binary_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON column values ride the binary wire in TiDB's binary JSON
@@ -339,7 +357,7 @@ SELECT {_FLAT_SELECT} FROM split
 """
 
 
-@register("update_split", _P2_ORACLE)
+@register("update_split", _P2_ORACLE, bench="plan")
 def q_update_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _flatten(split_updates(events_changelog(spark, sf_dir)))
 
@@ -384,7 +402,7 @@ FROM n WHERE net_op IS NOT NULL
 """
 
 
-@register("compaction", _A1_ORACLE)
+@register("compaction", _A1_ORACLE, bench="plan")
 def q_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = compact_changelog(events_changelog(spark, sf_dir))
     return out.select(
@@ -408,6 +426,7 @@ def q_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "row_number() OVER (PARTITION BY table_id "
     "ORDER BY commit_ts, start_ts, dml_order, seq) AS sort_rank "
     "FROM changelog",
+    bench="plan",
 )
 def q_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = flat_changelog(spark, sf_dir)
@@ -559,6 +578,7 @@ _R_KEY = "coalesce(after_id, before_id)::VARCHAR"
     f"CAST(CASE WHEN ({_R_SCOPE_SIGNUP}) THEN commit_ts % 16 "
     f"ELSE {_MD5_32_SQL.format(key=_R_KEY)} % 16 END AS INTEGER) AS partition "
     "FROM changelog",
+    bench="plan",
 )
 def q_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = events_changelog(spark, sf_dir)
@@ -704,7 +724,7 @@ FROM changelog
 """
 
 
-@register("mount_handle_fill", _HANDLE_FILL_ORACLE)
+@register("mount_handle_fill", _HANDLE_FILL_ORACLE, bench="plan")
 def q_mount_handle_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ticdc_spark.sources.binary_mount import (
         mount_binary_rows,
@@ -770,6 +790,7 @@ _VEC_CASE = ("CASE CAST(pk % 4 AS INT) "
     "mount_binary_vector",
     f"WITH {CHANGELOG_SQL} SELECT pk, seq, op, {_VEC_CASE} AS vec "
     "FROM changelog",
+    bench="plan",
 )
 def q_mount_binary_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ticdc_spark.sources.binary_mount import (

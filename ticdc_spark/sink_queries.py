@@ -53,6 +53,7 @@ CASE WHEN op = 'U' THEN {_image_json_sql('before')} ELSE 'null' END || '}}'
 @register(
     "codec_canal_json",
     f"WITH {CHANGELOG_SQL} SELECT seq, {_CANAL_SQL} AS value FROM changelog",
+    bench="plan",
 )
 def q_codec_canal_json(spark, sf_dir):
     return encode_canal_json(scale_out(events_changelog(spark, sf_dir))).select("seq", "value")
@@ -75,6 +76,7 @@ _CSV_SQL = (
 @register(
     "codec_csv",
     f"WITH {CHANGELOG_SQL} SELECT seq, {_CSV_SQL} AS value FROM changelog",
+    bench="plan",
 )
 def q_codec_csv(spark, sf_dir):
     return encode_csv(scale_out(events_changelog(spark, sf_dir))).select("seq", "value")
@@ -105,6 +107,7 @@ _CSV_OV_SQL = (
     "codec_csv_old_value",
     f"WITH {CHANGELOG_SQL} SELECT seq, {_CSV_OV_SQL} AS value "
     "FROM changelog",
+    bench="plan",
 )
 def q_codec_csv_old_value(spark, sf_dir):
     return encode_csv(
@@ -179,7 +182,7 @@ def _mysql_oracle(safe_mode: bool) -> str:
     )
 
 
-@register("mysql_sql_gen", _mysql_oracle(safe_mode=False))
+@register("mysql_sql_gen", _mysql_oracle(safe_mode=False), bench="plan")
 def q_mysql_sql_gen(spark, sf_dir):
     out = sql_for_rows(scale_out(events_changelog(spark, sf_dir)), safe_mode=False)
     return out.select("seq", "op", "stmt")
@@ -232,7 +235,7 @@ FROM g WHERE last_op <> 'D'
 """
 
 
-@register("materialize_state", _MATERIALIZE_ORACLE)
+@register("materialize_state", _MATERIALIZE_ORACLE, bench="plan")
 def q_materialize_state(spark, sf_dir):
     return materialize_state(split_updates(events_changelog(spark, sf_dir)))
 
@@ -267,6 +270,7 @@ _MD5_32_SQL = "(('0x' || substr(md5(coalesce(after_id, before_id)::VARCHAR), 1, 
     "'cdc_' || schema_name || '_' || table_name AS topic, "
     f"CAST({_MD5_32_SQL} % 16 AS INTEGER) AS partition, "
     f"{_OPEN_KEY_SQL} AS key, {_CANAL_SQL} AS value FROM changelog",
+    bench="plan",
 )
 def q_kafka_messages(spark, sf_dir):
     return kafka_messages(
@@ -559,7 +563,7 @@ from ticdc_spark.operators.compaction import compact_changelog_salted  # noqa: E
 from ticdc_spark.queries import ORACLES as _ORACLES  # noqa: E402
 
 
-@register("compaction_salted", _ORACLES["compaction"])
+@register("compaction_salted", _ORACLES["compaction"], bench="plan")
 def q_compaction_salted(spark, sf_dir):
     out = compact_changelog_salted(events_changelog(spark, sf_dir))
     return out.select(
@@ -620,6 +624,7 @@ def _lineitem_changelog(spark, sf_dir):
     "CAST(SUM(CAST(val AS DECIMAL(18,2))) AS DOUBLE) AS sum_val, "
     "min(commit_ts) AS min_ts, max(commit_ts) AS max_ts "
     "FROM li_changelog GROUP BY op",
+    bench="plan",
 )
 def q_lineitem_changelog_stats(spark, sf_dir):
     cl = _lineitem_changelog(spark, sf_dir)
@@ -645,6 +650,7 @@ printf('%.2f', val) || '","k":"' || k::VARCHAR || '"}]}'
 @register(
     "codec_canal_lineitem",
     f"WITH {_LI_CTE} SELECT pk, commit_ts, {_LI_CANAL} AS value FROM li_changelog",
+    bench="plan",
 )
 def q_codec_canal_lineitem(spark, sf_dir):
     cl = scale_out(_lineitem_changelog(spark, sf_dir))
@@ -1146,6 +1152,7 @@ _BATCH_FRAME = (
     "SELECT topic, partition, count(*) AS n_messages, "
     f"string_agg({_BATCH_FRAME}, '' ORDER BY commit_ts, seq) AS batch "
     "FROM msgs GROUP BY 1, 2",
+    bench="plan",
 )
 def q_open_protocol_batch(spark, sf_dir):
     routed = route(
@@ -1262,7 +1269,7 @@ FROM g
 """
 
 
-@register("mysql_sql_multirow", _MULTIROW_ORACLE)
+@register("mysql_sql_multirow", _MULTIROW_ORACLE, bench="plan")
 def q_mysql_sql_multirow(spark, sf_dir):
     compacted = compact_changelog(events_changelog(spark, sf_dir))
     return multirow_batches(compacted, max_txn_row=256)
@@ -1657,6 +1664,7 @@ _SPLIT_ROWS = 500
     f" {_SCAN_ORDER}) AS scan_rn FROM changelog) "
     f"SELECT table_id, seq, scan_rn, (scan_rn - 1) // {_SPLIT_ROWS} AS chunk "
     "FROM ordered",
+    bench="plan",
 )
 def q_scan_chunk_split(spark, sf_dir):
     cl = events_changelog(spark, sf_dir)
@@ -1756,7 +1764,9 @@ FROM g WHERE last_op <> 'D'
 """
 
 
-@register("open_protocol_consumer_roundtrip", _REPLAY_STATE_ORACLE)
+@register("open_protocol_consumer_roundtrip", _REPLAY_STATE_ORACLE,
+    bench="plan",
+)
 def q_open_protocol_consumer_roundtrip(spark, sf_dir):
     cl = split_updates(events_changelog(spark, sf_dir, parallel=True))
     decoded = decode_open_protocol(encode_open_protocol(cl).select("key", "value"))
@@ -1798,7 +1808,7 @@ def q_simple_consumer_roundtrip(spark, sf_dir):
     return replay_to_state(decoded, order_col="commit_ts")
 
 
-@register("storage_consumer_roundtrip", _REPLAY_STATE_ORACLE)
+@register("storage_consumer_roundtrip", _REPLAY_STATE_ORACLE, bench="plan")
 def q_storage_consumer_roundtrip(spark, sf_dir):
     """K4 e2e: csv-encode → storage path layout → storage consumer
     (path-derived table + sidecar columns) → replay. The file-layout
@@ -1964,7 +1974,7 @@ FROM g WHERE last_op <> 'D'
 """
 
 
-@register("redo_apply_state", _REDO_STATE_SQL)
+@register("redo_apply_state", _REDO_STATE_SQL, bench="plan")
 def q_redo_apply_state(spark, sf_dir):
     cl = events_changelog(spark, sf_dir)
     rows = split_updates_deferred(redo_window(cl, quartile_bounds(cl)))
@@ -2104,7 +2114,7 @@ FROM flat
 """
 
 
-@register("span_split_write_bytes", _SPAN_WB_SQL)
+@register("span_split_write_bytes", _SPAN_WB_SQL, bench="plan")
 def q_span_split_write_bytes(spark, sf_dir):
     regions = synthetic_regions(events_changelog(spark, sf_dir))
     return split_spans_write_bytes(regions, spans_num=4)
@@ -2298,7 +2308,7 @@ FROM batched GROUP BY 1, 2, 3
 """
 
 
-@register("txn_flush_batches", _TXN_BATCH_SQL)
+@register("txn_flush_batches", _TXN_BATCH_SQL, bench="plan")
 def q_txn_flush_batches(spark, sf_dir):
     """Txn-aligned flush batches: no start_ts spans two batches by
     construction; per-batch stats are the oracle surface."""
@@ -2388,7 +2398,7 @@ def _balance_inputs(spark, sf_dir):
     return assign, nodes
 
 
-@register("scheduler_balance", _BALANCE_SQL)
+@register("scheduler_balance", _BALANCE_SQL, bench="plan")
 def q_scheduler_balance(spark, sf_dir):
     """Balance plan over a deliberately imbalanced span→node assignment
     (node_3 starts empty); every under-floor node is topped up to
@@ -2487,7 +2497,7 @@ FROM agg
 """
 
 
-@register("table_progress", _TP_ORACLE)
+@register("table_progress", _TP_ORACLE, bench="plan")
 def q_table_progress(spark, sf_dir):
     from ticdc_spark.operators.table_progress import (
         flush_frontier, table_progress,
@@ -2613,7 +2623,7 @@ FROM changelog
     "{AFTER}", _dbz_img_sql("after"))
 
 
-@register("codec_debezium_full", _DBZ_FULL_ORACLE)
+@register("codec_debezium_full", _DBZ_FULL_ORACLE, bench="plan")
 def q_codec_debezium_full(spark, sf_dir):
     return encode_debezium_full(
         scale_out(events_changelog(spark, sf_dir)),
@@ -2828,7 +2838,7 @@ FROM agg
 """
 
 
-@register("routing_rules_asof", _ROUTE_ASOF_ORACLE)
+@register("routing_rules_asof", _ROUTE_ASOF_ORACLE, bench="plan")
 def q_routing_rules_asof(spark, sf_dir):
     from ticdc_spark.operators.routing import route_bindings_asof
 
@@ -2877,7 +2887,7 @@ FROM ids GROUP BY node_id
 """
 
 
-@register("dispatcher_set_checksum", _SET_CK_ORACLE)
+@register("dispatcher_set_checksum", _SET_CK_ORACLE, bench="plan")
 def q_dispatcher_set_checksum(spark, sf_dir):
     """Per-node set digest over the span assignment. The reference
     tracks 128-bit dispatcher ids as two uint64 halves; here each half
@@ -3139,7 +3149,7 @@ FROM mergeable WHERE merge_group < {_MERGE_BATCH_CAP}
 """
 
 
-@register("span_merge_groups", _SPAN_MERGE_SQL)
+@register("span_merge_groups", _SPAN_MERGE_SQL, bench="plan")
 def q_span_merge_groups(spark, sf_dir):
     from ticdc_spark.plans.span_split import choose_merged_spans
 
@@ -3182,7 +3192,7 @@ _REDO_V2_ORACLE = (
 )
 
 
-@register("redo_v2_roundtrip", _REDO_V2_ORACLE)
+@register("redo_v2_roundtrip", _REDO_V2_ORACLE, bench="plan")
 def q_redo_v2_roundtrip(spark, sf_dir):
     import pandas as pd
 
@@ -3313,7 +3323,7 @@ _DML_CHUNK_ORACLE = (
 )
 
 
-@register("dml_event_chunk_roundtrip", _DML_CHUNK_ORACLE)
+@register("dml_event_chunk_roundtrip", _DML_CHUNK_ORACLE, bench="plan")
 def q_dml_event_chunk_roundtrip(spark, sf_dir):
     import pandas as pd
 
@@ -3447,7 +3457,7 @@ FROM changelog
 """
 
 
-@register("debezium_avro_roundtrip", _DBZ_AVRO_ORACLE)
+@register("debezium_avro_roundtrip", _DBZ_AVRO_ORACLE, bench="plan")
 def q_debezium_avro_roundtrip(spark, sf_dir):
     import json as _json
 
@@ -3529,7 +3539,9 @@ FROM wm
 """
 
 
-@register("debezium_avro_watermark_roundtrip", _DBZ_AVRO_WM_ORACLE)
+@register("debezium_avro_watermark_roundtrip", _DBZ_AVRO_WM_ORACLE,
+    bench="plan",
+)
 def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
     import json as _json
 
@@ -3619,7 +3631,7 @@ FROM tabs
 """
 
 
-@register("avro_checkpoint_ddl_events", _AVRO_CP_DDL_ORACLE)
+@register("avro_checkpoint_ddl_events", _AVRO_CP_DDL_ORACLE, bench="plan")
 def q_avro_checkpoint_ddl_events(spark, sf_dir):
     import pandas as pd
 
@@ -3689,6 +3701,7 @@ def q_avro_checkpoint_ddl_events(spark, sf_dir):
     f"{_CANAL_SQL} AS value, "
     f"CASE WHEN length({_CANAL_SQL}) > {_LM_MAX} THEN true END AS key_ok "
     "FROM changelog",
+    bench="plan",
 )
 def q_claim_check_storage_roundtrip(spark, sf_dir):
     import os
@@ -3739,6 +3752,7 @@ def q_claim_check_storage_roundtrip(spark, sf_dir):
     f"{_CANAL_SQL} AS value, "
     f"CASE WHEN length({_CANAL_SQL}) > {_LM_MAX} "
     f"THEN {_CANAL_SQL} END AS stored_object FROM changelog",
+    bench="plan",
 )
 def q_claim_check_raw_value_roundtrip(spark, sf_dir):
     import os
@@ -3819,7 +3833,7 @@ def _chunk_typed_oracle() -> str:
         "{JCASE}", _chunk_case(_chunk_typed_json_texts()))
 
 
-@register("dml_event_chunk_typed", _chunk_typed_oracle())
+@register("dml_event_chunk_typed", _chunk_typed_oracle(), bench="plan")
 def q_dml_event_chunk_typed(spark, sf_dir):
     import pandas as pd
 
@@ -3954,7 +3968,7 @@ FROM changelog
 """
 
 
-@register("avro_confluent_roundtrip", _AVRO_RT_ORACLE)
+@register("avro_confluent_roundtrip", _AVRO_RT_ORACLE, bench="plan")
 def q_avro_confluent_roundtrip(spark, sf_dir):
     import pandas as pd
 
@@ -4033,6 +4047,7 @@ def q_avro_confluent_roundtrip(spark, sf_dir):
     "'cdc_' || schema_name || '_' || table_name AS topic, "
     f"CAST({_MD5_32_SQL} % 16 AS INTEGER) AS partition, "
     f"{_OPEN_KEY_SQL} AS key, {_CANAL_SQL} AS value FROM changelog",
+    bench="endpoint",
 )
 def q_kafka_live_roundtrip(spark, sf_dir):
     from ticdc_spark.sinks.kafka_live import kafka_live_roundtrip
@@ -4058,6 +4073,7 @@ def q_kafka_live_roundtrip(spark, sf_dir):
     "'cdc_' || schema_name || '_' || table_name AS topic, "
     f"CAST({_MD5_32_SQL} % 16 AS INTEGER) AS partition, "
     f"{_OPEN_KEY_SQL} AS key, {_CANAL_SQL} AS value FROM changelog",
+    bench="endpoint",
 )
 def q_kafka_live_gssapi_roundtrip(spark, sf_dir):
     from ticdc_spark.sinks.kafka_live import kafka_live_gssapi_roundtrip
@@ -4090,6 +4106,7 @@ def q_kafka_live_gssapi_roundtrip(spark, sf_dir):
     "SELECT probe_ts, found_ts, CASE WHEN found_ts = -1 THEN CAST(-1 AS BIGINT) "
     "ELSE (SELECT count(*) FROM changelog c2 WHERE c2.commit_ts < h.found_ts) "
     "END AS log_offset FROM hits h",
+    bench="endpoint",
 )
 def q_kafka_list_offsets_by_ts(spark, sf_dir):
     from ticdc_spark.sinks.kafka_live import kafka_list_offsets_by_ts
@@ -4120,6 +4137,7 @@ _TP_TABLES = ["tp_click", "tp_error", "tp_purchase", "tp_signup", "tp_view"]
     "SELECT table_name, k_id AS id, "
     "CAST(printf('%.2f', last_val) AS DOUBLE) AS val, last_k AS k "
     "FROM g WHERE last_op <> 'D'",
+    bench="endpoint",
 )
 def q_mysql_live_apply(spark, sf_dir):
     from ticdc_spark.sinks.mysql_live import mysql_live_apply
@@ -4146,6 +4164,7 @@ def q_mysql_live_apply(spark, sf_dir):
     "CAST(printf('%.2f', last_val) AS DOUBLE) AS val, last_k AS k, "
     "CAST(printf('%.2f', last_val) AS DOUBLE) * 2 AS val2 "
     "FROM g WHERE last_op <> 'D'",
+    bench="endpoint",
 )
 def q_mysql_live_apply_generated_column(spark, sf_dir):
     from ticdc_spark.sinks.mysql_live import mysql_live_apply_generated_column
@@ -4167,6 +4186,7 @@ def q_mysql_live_apply_generated_column(spark, sf_dir):
     f"WITH {CHANGELOG_SQL} SELECT "
     "'persistent://public/default/cdc_' || schema_name || '_' || table_name "
     f"AS topic, {_OPEN_KEY_SQL} AS key, {_CANAL_SQL} AS value FROM changelog",
+    bench="endpoint",
 )
 def q_pulsar_live_roundtrip(spark, sf_dir):
     from ticdc_spark.sinks.pulsar_live import pulsar_live_roundtrip
@@ -4200,6 +4220,7 @@ def q_pulsar_live_roundtrip(spark, sf_dir):
     "SELECT table_name, k_id AS id, "
     "CAST(printf('%.2f', last_val) AS DOUBLE) AS val, last_k AS k "
     "FROM g WHERE last_op <> 'D'",
+    bench="endpoint",
 )
 def q_pipeline_live_end_to_end(spark, sf_dir):
     from ticdc_spark.codec.canal_json import encode_canal_json
@@ -4248,6 +4269,7 @@ def q_pipeline_live_end_to_end(spark, sf_dir):
     "'cdc_' || schema_name || '_' || table_name AS topic, "
     f"CAST({_MD5_32_SQL} % 16 AS INTEGER) AS partition, "
     f"{_OPEN_KEY_SQL} AS key, {_CANAL_SQL} AS value FROM changelog",
+    bench="endpoint",
 )
 def q_kafka_consumer_group_roundtrip(spark, sf_dir):
     from ticdc_spark.sinks.kafka_live import (
@@ -4278,7 +4300,7 @@ def q_kafka_consumer_group_roundtrip(spark, sf_dir):
 # (`downstreamadapter/sink/cloudstorage` with the AWS SDK replaced by this
 # repo's wire client; signatures validated against the official AWS vector).
 # ---------------------------------------------------------------------------
-@register("storage_live_s3_roundtrip", _REPLAY_STATE_ORACLE)
+@register("storage_live_s3_roundtrip", _REPLAY_STATE_ORACLE, bench="endpoint")
 def q_storage_live_s3_roundtrip(spark, sf_dir):
     from ticdc_spark.sinks.s3_live import storage_live_s3_roundtrip
 
@@ -4291,7 +4313,7 @@ def q_storage_live_s3_roundtrip(spark, sf_dir):
 # scheme-independent; what changes is the live wire dialect — GCS JSON
 # API with Bearer auth and nextPageToken paging, Azure Blob REST with
 # SharedKey HMAC signing and NextMarker paging.
-@register("storage_live_gcs_roundtrip", _REPLAY_STATE_ORACLE)
+@register("storage_live_gcs_roundtrip", _REPLAY_STATE_ORACLE, bench="endpoint")
 def q_storage_live_gcs_roundtrip(spark, sf_dir):
     from ticdc_spark.sinks.s3_live import storage_live_roundtrip
 
@@ -4299,7 +4321,9 @@ def q_storage_live_gcs_roundtrip(spark, sf_dir):
     return storage_live_roundtrip(cl, scheme="gcs")
 
 
-@register("storage_live_azblob_roundtrip", _REPLAY_STATE_ORACLE)
+@register("storage_live_azblob_roundtrip", _REPLAY_STATE_ORACLE,
+    bench="endpoint",
+)
 def q_storage_live_azblob_roundtrip(spark, sf_dir):
     from ticdc_spark.sinks.s3_live import storage_live_roundtrip
 
@@ -4315,7 +4339,9 @@ def q_storage_live_azblob_roundtrip(spark, sf_dir):
 # it).  Same replayed-state oracle as the single-shot roundtrips: the
 # assembled bytes must be indistinguishable.  GCS-resumable and Azure
 # block-list multiparts are pinned in tests/test_storage_multipart.py.
-@register("storage_live_multipart_roundtrip", _REPLAY_STATE_ORACLE)
+@register("storage_live_multipart_roundtrip", _REPLAY_STATE_ORACLE,
+    bench="endpoint",
+)
 def q_storage_live_multipart_roundtrip(spark, sf_dir):
     from ticdc_spark.sinks.s3_live import storage_live_roundtrip
 
@@ -4342,6 +4368,7 @@ def q_storage_live_multipart_roundtrip(spark, sf_dir):
     "FROM keyed GROUP BY 1, 2) "
     "SELECT table_name, k_id AS id, last_val AS val, last_k AS k "
     "FROM g WHERE last_op <> 'D'",
+    bench="endpoint",
 )
 def q_mysql_live_apply_prepared(spark, sf_dir):
     from ticdc_spark.sinks.mysql_live import mysql_live_apply_prepared
@@ -4363,7 +4390,7 @@ def q_mysql_live_apply_prepared(spark, sf_dir):
 _LIVE_REGISTRIES: list = []
 
 
-@register("avro_live_registry_roundtrip", _AVRO_RT_ORACLE)
+@register("avro_live_registry_roundtrip", _AVRO_RT_ORACLE, bench="endpoint")
 def q_avro_live_registry_roundtrip(spark, sf_dir):
     import pandas as pd
 
@@ -4816,7 +4843,9 @@ def q_mysql_live_apply_multirow_from_toml(spark, sf_dir):
 # file batch rides the local-disk enqueue/drain stage before its PUT.
 # Same replayed state as the direct path — the spool must be invisible
 # to the data.
-@register("storage_live_spool_roundtrip", _REPLAY_STATE_ORACLE)
+@register("storage_live_spool_roundtrip", _REPLAY_STATE_ORACLE,
+    bench="endpoint",
+)
 def q_storage_live_spool_roundtrip(spark, sf_dir):
     import tempfile
 
@@ -4855,6 +4884,7 @@ def q_storage_live_spool_roundtrip(spark, sf_dir):
     "  WHERE op = 'U' AND before_id IS NOT NULL"
     "    AND before_id <> after_id"
     ") SELECT table_name, kind, COUNT(*) AS n FROM kinds GROUP BY 1, 2",
+    bench="endpoint",
 )
 def q_kafka_live_raw_change_event(spark, sf_dir):
     from ticdc_spark.config import parse_changefeed_config
@@ -4919,6 +4949,7 @@ def q_kafka_live_raw_change_event(spark, sf_dir):
     "  FROM changelog WHERE op = 'U' AND before_id <> after_id"
     ") SELECT table_name, op, table_id AS rk_table_id, handle AS rk_handle, "
     "COUNT(*) AS n FROM sp GROUP BY 1, 2, 3, 4",
+    bench="plan",
 )
 def q_canal_rowkey_from_toml(spark, sf_dir):
     from ticdc_spark.config import parse_changefeed_config
@@ -5074,6 +5105,7 @@ auth-tls-private-key-path = "{key_path}"
     "    strftime(make_timestamp(commit_ts), '%Y-%m-%d')"
     "  FROM marked"
     ") SELECT mode, path, COUNT(*) AS n FROM both_modes GROUP BY 1, 2",
+    bench="plan",
 )
 def q_storage_partition_separator_from_toml(spark, sf_dir):
     from ticdc_spark.config import parse_changefeed_config
@@ -5110,6 +5142,7 @@ def q_storage_partition_separator_from_toml(spark, sf_dir):
     "CASE op WHEN 'I' THEN 'INSERT' WHEN 'U' THEN 'UPDATE' "
     "ELSE 'DELETE' END AS canal_type, COUNT(*) AS n "
     "FROM split GROUP BY 1, 2",
+    bench="plan",
 )
 def q_lm_compression_from_toml(spark, sf_dir):
     from ticdc_spark.config import (large_message_compression,

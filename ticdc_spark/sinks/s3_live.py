@@ -80,7 +80,8 @@ def _pooled_client(endpoint: str, cred1: str, cred2: str, scheme: str):
     c = _CLIENT_POOL.get(key)
     if c is None:
         if len(_CLIENT_POOL) > 64:  # bound sockets held by a long worker
-            _, old = _CLIENT_POOL.popitem()
+            # dicts keep insertion order: evict the oldest client
+            old = _CLIENT_POOL.pop(next(iter(_CLIENT_POOL)))
             try:
                 old.close()
             except Exception:  # noqa: BLE001

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import base64
 import hashlib
+import socket
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlsplit
@@ -134,6 +135,13 @@ class MiniS3Server:
                     return None, uid
                 return up, uid
 
+            def _drop_connection(self):
+                # shutdown first: rfile/wfile still hold the fd, so a
+                # bare close() sends no FIN and the client only notices
+                # at its read timeout
+                self.connection.shutdown(socket.SHUT_RDWR)
+                self.connection.close()
+
             def _upload_part(self, bucket: str, key: str, q: dict,
                              body: bytes):
                 from ticdc_spark import failpoint
@@ -142,7 +150,7 @@ class MiniS3Server:
                     # chaos: kill the connection mid-upload with the
                     # part UNRECORDED — the client must reconnect,
                     # ListParts, and resume
-                    self.connection.close()
+                    self._drop_connection()
                     return
                 pn = int(q["partNumber"][0])
                 if not 1 <= pn <= 10000:
@@ -219,7 +227,7 @@ class MiniS3Server:
                     # chaos: the completion COMMITTED but the response
                     # is lost — the client's retry sees NoSuchUpload and
                     # must verify the object instead of failing
-                    self.connection.close()
+                    self._drop_connection()
                     return
                 mp_etag = (hashlib.md5(b"".join(digests)).hexdigest()
                            + f"-{len(listed)}")

@@ -30,7 +30,13 @@ def streaming_txn_match(events: DataFrame, timeout_ms: int = 60_000) -> DataFram
     and commit records (kind='C', commit_ts set), keyed by (start_ts, pk).
 
     Emits matched committed rows; prewrites lacking a commit are dropped
-    when their state times out (the matcher's rollback GC)."""
+    when their state times out (the matcher's rollback GC).  The horizon
+    is event time: a txn's state expires once the watermark (newest
+    start_ts seen minus ``timeout_ms``) passes its own start_ts, and a
+    commit arriving later than that is late data.  Event time, unlike a
+    processing-time timeout, lets a bounded (``availableNow``) run end:
+    Spark runs no-data batches only while the watermark still moves."""
+    from pyspark.sql import functions as F
 
     def match(key, pdfs, state):
         import pandas as pd
@@ -60,12 +66,17 @@ def streaming_txn_match(events: DataFrame, timeout_ms: int = 60_000) -> DataFram
             })
         else:
             state.update((ops, seqs, commit_ts))
-            state.setTimeoutDuration(timeout_ms)
+            # start_ts is epoch µs; the timeout is an epoch-ms instant
+            state.setTimeoutTimestamp(start_ts // 1000)
             yield pd.DataFrame(columns=[
                 "start_ts", "pk", "op", "seq", "commit_ts"])
 
-    return events.groupBy("start_ts", "pk").applyInPandasWithState(
-        match, MATCHED_SCHEMA, STATE_SCHEMA, "append", "ProcessingTimeTimeout"
+    return (
+        events.withColumn("_start_time", F.timestamp_micros("start_ts"))
+        .withWatermark("_start_time", f"{timeout_ms} milliseconds")
+        .groupBy("start_ts", "pk")
+        .applyInPandasWithState(match, MATCHED_SCHEMA, STATE_SCHEMA,
+                                "append", "EventTimeTimeout")
     )
 
 

@@ -107,6 +107,7 @@ def q_orders_changelog_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orders_canal_encode",
     f"WITH {ORDERS_CL_SQL} SELECT seq, {_canal_sql(ORDERS_PAYLOAD_FIELDS)} AS value "
     "FROM orders_cl",
+    bench="plan",
 )
 def q_orders_canal_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = scale_out(orders_changelog(spark, sf_dir))
@@ -180,7 +181,7 @@ FROM n WHERE net_op IS NOT NULL
 """
 
 
-@register("orders_compact_typed", _TYPED_COMPACT_ORACLE)
+@register("orders_compact_typed", _TYPED_COMPACT_ORACLE, bench="plan")
 def q_orders_compact_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plan note: string payload fields (status/priority/odate) put
     min_by/max_by string values in the agg buffer, so Spark picks
@@ -531,6 +532,7 @@ _WIRE_ROWS_SQL = ", ".join(
     "SELECT * FROM (VALUES " + _WIRE_ROWS_SQL
     + ") AS v(subject, schema_id, version, confluent_header, glue_header)"
     " ORDER BY subject",
+    bench="plan",
 )
 def q_avro_registry_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive both registry clients end-to-end: register each table's
@@ -707,6 +709,7 @@ _SIMPLE_AVRO_IMG = ", ".join(
     "simple_avro_roundtrip",
     f"WITH {ORDERS_CL_SQL} SELECT seq, op, commit_ts, {_SIMPLE_AVRO_IMG} "
     "FROM orders_cl",
+    bench="plan",
 )
 def q_simple_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ticdc_spark.codec.simple_avro import (
@@ -758,6 +761,7 @@ def q_mount_exotic_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     "|| dec_txt || ',\"' || tm_txt || '\",\"' "
     "|| replace(js_txt, '\"', '\"\"') || '\"' AS value "
     "FROM exotic_cl",
+    bench="plan",
 )
 def q_codec_csv_exotic(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = encode_csv(exotic_changelog(spark, sf_dir))

@@ -91,6 +91,7 @@ def q_url_normalize(spark, sf_dir):
     f"SELECT {_URL_NORM_SQL} AS norm_url, min(doc_id) AS keep_doc_id, "
     "count(*) AS n_docs, count(DISTINCT source) AS n_sources "
     "FROM documents GROUP BY 1",
+    bench="plan",
 )
 def q_url_dedup(spark, sf_dir):
     return url_dedup(_with_url(_docs(spark, sf_dir)))
@@ -164,7 +165,7 @@ FROM flagged GROUP BY doc_id
 """
 
 
-@register("paragraph_dedup", _PARA_ORACLE)
+@register("paragraph_dedup", _PARA_ORACLE, bench="plan")
 def q_paragraph_dedup(spark, sf_dir):
     return paragraph_dedup(_para_synth(_docs(spark, sf_dir)))
 
@@ -253,7 +254,7 @@ FROM agg
 """
 
 
-@register("c4_line_filter", _C4_ORACLE)
+@register("c4_line_filter", _C4_ORACLE, bench="plan")
 def q_c4_line_filter(spark, sf_dir):
     return c4_line_filter(_c4_synth(_docs(spark, sf_dir)))
 
@@ -310,7 +311,7 @@ FROM sc
 """
 
 
-@register("gopher_rules", _GOPHER_ORACLE)
+@register("gopher_rules", _GOPHER_ORACLE, bench="plan")
 def q_gopher_rules(spark, sf_dir):
     d = _docs(spark, sf_dir)
     planted = d.select(
@@ -365,7 +366,7 @@ FROM ranked GROUP BY source
 """
 
 
-@register("curation_pipeline", _CURATION_ORACLE)
+@register("curation_pipeline", _CURATION_ORACLE, bench="plan")
 def q_curation_pipeline(spark, sf_dir):
     from ticdc_spark.llm.web import curation_pipeline
 
@@ -409,7 +410,7 @@ FROM d GROUP BY domain
 """
 
 
-@register("domain_stats", _DOM_ORACLE)
+@register("domain_stats", _DOM_ORACLE, bench="plan")
 def q_domain_stats(spark, sf_dir):
     from ticdc_spark.llm.web import domain_stats
 
@@ -628,7 +629,7 @@ def _full_synth(docs: DataFrame) -> DataFrame:
                     F.array_join(paras, "\n\n").alias("text"))
 
 
-@register("curation_pipeline_full", _FULL_ORACLE)
+@register("curation_pipeline_full", _FULL_ORACLE, bench="plan")
 def q_curation_pipeline_full(spark, sf_dir):
     from ticdc_spark.llm.web import curation_pipeline_full
 
