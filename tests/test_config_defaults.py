@@ -446,3 +446,22 @@ def test_lm_compression_validation():
     assert large_message_compression(cfg_lz4) == "lz4"
     none = parse_changefeed_config('sink-uri = "kafka://h:9092/cdc"\n')
     assert large_message_compression(none) is None
+
+
+def test_memory_quota_must_be_a_positive_integer():
+    """memory-quota bounds each epoch's admitted bytes; a bad value is
+    refused when the config is parsed (TOML/JSON) or built directly,
+    not later inside Spark when the stream starts."""
+    import pytest
+
+    from ticdc_spark.pipeline import ChangefeedConfig
+
+    assert parse_changefeed_config("memory-quota = 1").memory_quota == 1
+    for bad in ("0", "-1", "1.5", '"1GiB"', "true"):
+        with pytest.raises(ValueError, match="memory-quota"):
+            parse_changefeed_config(f"memory-quota = {bad}")
+    with pytest.raises(ValueError, match="memory-quota"):
+        parse_changefeed_config('{"memory-quota": 0}', fmt="json")
+    for bad in (0, -5, 2.0, "1024", None):
+        with pytest.raises(ValueError, match="memory-quota"):
+            ChangefeedConfig(memory_quota=bad)

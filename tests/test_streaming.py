@@ -142,3 +142,48 @@ def test_progress_log_replay_rewrites_only_the_last_entry(tmp_path):
     assert after.startswith(replayed)
     assert json.loads(after.splitlines()[-1])["epoch"] == 100
     assert cf.stats()["rows"] == 99 + 2 + 3
+
+
+def test_syncpoints_resume_past_the_ledgers_last_line(tmp_path,
+                                                      monkeypatch):
+    """The next epoch's syncpoints start at the first boundary past the
+    ledger's last line, even when the epoch's rows start below it; the
+    ledger is appended to, and only its last line is parsed.  The ledger
+    is long enough that finding that line crosses the 4 KB read chunk."""
+    import os
+    import types
+
+    from ticdc_spark.streaming import changefeed as cf_mod
+
+    iv = 1_000_000
+    cf = Changefeed("cf_sp", ChangefeedConfig(
+        enable_sync_point=True, sync_point_interval_us=iv), str(tmp_path))
+    path = os.path.join(str(tmp_path), "syncpoint", "cf_sp.jsonl")
+    os.makedirs(os.path.dirname(path))
+    with open(path, "w") as f:
+        for i in range(1, 101):
+            f.write(json.dumps({"changefeed": "cf_sp", "primary_ts": i * iv,
+                                "secondary_ts": i * iv,
+                                "created_at": 0.0}) + "\n")
+    with open(path, "rb") as f:
+        before = f.read()
+    assert len(before) > 4096
+
+    parsed = []
+
+    def loads(s):
+        parsed.append(s)
+        return json.loads(s)
+
+    monkeypatch.setattr(cf_mod, "json",
+                        types.SimpleNamespace(loads=loads, dumps=json.dumps))
+    cf._write_syncpoints(5 * iv, 103 * iv + 7)
+    monkeypatch.undo()
+
+    assert len(parsed) == 1
+    with open(path, "rb") as f:
+        after = f.read()
+    assert after.startswith(before)
+    new = [json.loads(ln) for ln in after[len(before):].splitlines()]
+    assert [e["primary_ts"] for e in new] == [101 * iv, 102 * iv, 103 * iv]
+    assert {e["secondary_ts"] for e in new} == {103 * iv + 7}

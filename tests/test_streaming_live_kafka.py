@@ -520,7 +520,8 @@ def test_live_changefeed_commit_order_per_partition(spark, sf_dir, tmp_path):
 
 def _split_by_time(sf_dir, tmp_path, n=3):
     """The events cut into ``n`` commit-time slices: a stream dir with one
-    file per slice (one epoch each), and one batch dir per slice."""
+    file per slice (one epoch each under ``memory_quota=1``), and one
+    batch dir per slice."""
     import pyarrow.parquet as pq
 
     t = pq.read_table(f"{sf_dir}/events.parquet").sort_by("ts")
@@ -551,7 +552,7 @@ def test_epoch_summary_matches_batch_aggregate(spark, sf_dir, tmp_path, live):
     from ticdc_spark.codec.resolved_event import decode_batch
 
     stream, slices = _split_by_time(sf_dir, tmp_path)
-    cfg = ChangefeedConfig(**CFG, n_partitions=4)
+    cfg = ChangefeedConfig(**CFG, n_partitions=4, memory_quota=1)
     want = []
     for d in slices:
         per_tbl = build_pipeline(events_changelog(spark, d), cfg).groupBy(
@@ -620,7 +621,8 @@ def test_live_rewind_starts_past_the_progress_log(spark, sf_dir, tmp_path):
     stream, slices = _split_by_time(sf_dir, tmp_path)
     rewind_ts = events_changelog(spark, slices[0]).agg(
         F.max("commit_ts")).first()[0]
-    toml = ('[sink]\n'
+    toml = ('memory-quota = 1\n'
+            '[sink]\n'
             'dispatchers = [{matcher = ["test.tp_*"], '
             'partition = "index-value", '
             'topic = "cdc_{schema}_{table}"}]\n')
@@ -642,3 +644,93 @@ def test_live_rewind_starts_past_the_progress_log(spark, sf_dir, tmp_path):
     assert cf.epoch_offset == len(slices)
     assert sorted(os.listdir(os.path.join(work, "resolved", "cf_ids"))) \
         == [f"epoch={e}.bin" for e in epochs]
+
+
+@pytest.mark.parametrize("quota, epochs", [(None, 1), (1, 3)],
+                         ids=["default_quota", "quota_1"])
+def test_backlog_epochs_follow_memory_quota(spark, sf_dir, tmp_path,
+                                            quota, epochs):
+    """Three files present before the start are a backlog: under the
+    default memory-quota (1 GiB) they drain in ONE epoch, under
+    memory-quota = 1 in one epoch per file.  Either way the progress log
+    accounts for the batch pipeline's rows up to its max commit ts, the
+    broker holds exactly the batch pipeline's records, and every
+    partition is in commit order across the file boundaries."""
+    stream, _slices = _split_by_time(sf_dir, tmp_path)
+    cfg = ChangefeedConfig(**CFG, n_partitions=4,
+                           **({} if quota is None else {"memory_quota": quota}))
+    batch = build_pipeline(events_changelog(spark, sf_dir), cfg)
+    n_rows, max_ts = batch.agg(F.count(F.lit(1)), F.max("commit_ts")).first()
+    with KafkaBroker(default_partitions=4) as broker:
+        cf = Changefeed("cf_backlog", cfg, str(tmp_path / "work"),
+                        live_bootstrap=broker.bootstrap)
+        cf.start(spark, stream, available_now=True)
+        assert cf.wait(240) is True
+        data, _marks = _drain(broker)
+    with open(cf.progress_path) as f:
+        log = [json.loads(ln) for ln in f]
+    assert len(log) == epochs
+    assert sum(e["rows"] for e in log) == n_rows
+    assert log[-1]["resolved_ts"] == max_ts
+    expected = {(r["topic"], r["partition"], r["value"])
+                for r in batch.select("topic", "partition", "value").collect()}
+    assert set(data) == expected and len(data) == len(expected)
+    per_part: dict = {}
+    for topic, p, v in data:
+        per_part.setdefault((topic, p), []).append(json.loads(v)["es"])
+    for (topic, p), es in per_part.items():
+        assert es == sorted(es), f"{topic}/{p} out of order"
+
+
+def test_live_epoch_splits_at_two_ddl_barriers(spark, sf_dir, tmp_path):
+    """One backlog epoch spanning two DDLs splits at both: on every
+    partition each DDL arrives exactly once and in ts order, the data
+    before, between and after them stays within the barriers, nothing is
+    lost against the batch plan, and the schema registry reads versions
+    [1, 2]."""
+    import os
+
+    stream, _slices = _split_by_time(sf_dir, tmp_path)
+    tss = sorted(r[0] for r in
+                 events_changelog(spark, sf_dir).select("commit_ts").collect())
+    ddls = [{"commit_ts": tss[len(tss) * i // 3], "schema_name": "test",
+             "table_name": "tp_click", "ddl_type": "add-column",
+             "query": f"ALTER TABLE tp_click ADD COLUMN c{i} INT"}
+            for i in (1, 2)]
+    # data es (ms) between barriers, boundaries inclusive at ms precision
+    edges = [float("-inf"), *(d["commit_ts"] // 1000 for d in ddls),
+             float("inf")]
+    cfg = ChangefeedConfig(**CFG, n_partitions=4)
+    work = str(tmp_path / "work")
+    with KafkaBroker(default_partitions=4) as broker:
+        cf = Changefeed("cf_ddl2", cfg, work,
+                        live_bootstrap=broker.bootstrap)
+        cf.ddl_events = ddls
+        cf.start(spark, stream, available_now=True)
+        assert cf.wait(240) is True
+        with KafkaConn.from_bootstrap(broker.bootstrap) as c:
+            for topic, parts in broker.topics.items():
+                for p in parts:
+                    msgs = [json.loads(rec.value.decode())
+                            for _, rec in c.fetch_all(topic, p)]
+                    at = [i for i, m in enumerate(msgs) if m.get("isDdl")]
+                    assert [msgs[i]["sql"] for i in at] \
+                        == [d["query"] for d in ddls], f"{topic}/{p}"
+                    cuts = [-1, *at, len(msgs)]
+                    for j in range(3):
+                        for m in msgs[cuts[j] + 1:cuts[j + 1]]:
+                            if m["type"] != "TIDB_WATERMARK":
+                                assert edges[j] <= m["es"] <= edges[j + 1], \
+                                    f"{topic}/{p} segment {j}"
+        data, _marks = _drain(broker)
+    with open(cf.progress_path) as f:
+        assert len(f.readlines()) == 1  # both barriers in one epoch
+    data = [d for d in data if '"isDdl":true' not in d[2]]
+    batch = build_pipeline(events_changelog(spark, sf_dir), cfg)
+    expected = {(r["topic"], r["partition"], r["value"])
+                for r in batch.select("topic", "partition", "value").collect()}
+    assert set(data) == expected and len(data) == len(expected)
+    with open(os.path.join(work, "schema_versions", "cf_ddl2.jsonl")) as f:
+        versions = [json.loads(ln) for ln in f]
+    assert [v["version"] for v in versions] == [1, 2]
+    assert [v["ddl_ts"] for v in versions] == [d["commit_ts"] for d in ddls]

@@ -226,6 +226,15 @@ class ChangefeedConfig:
     # when enable-tls is on (`pkg/sink/kafka/options.go:423-425`)
     insecure_skip_verify: bool = False
 
+    def __post_init__(self) -> None:
+        # memory-quota bounds each epoch's admitted bytes (the stream's
+        # maxBytesPerTrigger); reject what Spark would only refuse once
+        # the changefeed starts
+        q = self.memory_quota
+        if isinstance(q, bool) or not isinstance(q, int) or q <= 0:
+            raise ValueError(
+                f"memory-quota must be a positive integer, got {q!r}")
+
 
 def apply_replication_window(cl: DataFrame,
                              cfg: ChangefeedConfig) -> DataFrame:

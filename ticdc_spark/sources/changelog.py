@@ -171,18 +171,26 @@ def scale_out(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def stream_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_changelog(spark: SparkSession, sf_dir: str,
+                     max_bytes_per_trigger: int) -> DataFrame:
     """Streaming changelog over the same parquet (availableNow-compatible).
 
     Mirrors the reference's log subscription (S1): a readStream that feeds
     the identical mount expressions — the batch and stream plans share all
     operator code downstream.
+
+    ``max_bytes_per_trigger`` bounds what one epoch admits (the
+    changefeed's ``memory-quota``), so a backlog drains in as few epochs
+    as the bound allows.  It counts on-disk (compressed parquet) file
+    bytes, not decoded rows; an epoch always admits at least one file,
+    then adds files while the running total stays within the bound —
+    a bound of 1 makes every file its own epoch.
     """
     schema = read_table(spark, sf_dir, "events").schema
     raw = (
         spark.readStream.format("parquet")
         .schema(schema)
-        .option("maxFilesPerTrigger", 1)
+        .option("maxBytesPerTrigger", max_bytes_per_trigger)
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )

@@ -34,8 +34,9 @@ def split_batch_at_ddl(
 
     The segment assignment is a single column expression (no driver-side
     row iteration); each segment flush is one filtered write — at scale
-    this is K extra passes over the cached batch for K DDLs in the batch
-    (K is ~always 0 or 1).
+    this is K extra passes over the cached batch for K DDLs in the batch.
+    An epoch admits as many files as the changefeed's memory-quota allows,
+    so an epoch that drains a backlog routinely spans K >= 2 DDLs.
     """
     barriers = sorted(set(ddl_commit_ts))
     if not barriers:

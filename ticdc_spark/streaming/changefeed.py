@@ -19,6 +19,11 @@ collapses into one ``StreamingQuery``:
   with no further Spark job (file/DB sinks: one per-table aggregate,
   ``kafka_live.summarize``, before the write).  One epoch is one data
   pass, the Structured Streaming (SIGMOD 2018) micro-batch model.
+- epoch size = the changefeed's ``memory-quota``
+  (`pkg/config/server.go:44-45`, 1 GiB default): each epoch admits
+  source files up to that many on-disk bytes (at least one file), so a
+  changefeed that fell behind catches up in a few large epochs instead
+  of paying the per-epoch fixed cost once per file.
 
 The data plane transform is EXACTLY the batch pipeline
 (`pipeline.build_pipeline``) applied inside the micro-batch — batch and
@@ -464,23 +469,23 @@ class Changefeed:
         path = os.path.join(self.work_dir, "syncpoint",
                             f"{self.changefeed_id}.jsonl")
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        last = 0
-        if os.path.exists(path):
-            with open(path) as f:
-                for line in f:
-                    last = json.loads(line)["primary_ts"]
-        # first boundary strictly above what's already written, anchored
-        # at the stream's own ts domain (commit_ts is epoch-micros, so
-        # anchoring at 0 would enumerate ~50 years of boundaries)
-        start = ((max(last, min_ts - 1) // interval) + 1) * interval
-        with open(path, "a") as f:
+        with open(path, "a+b") as f:
+            # the ledger is append-only and ascending: its last line is
+            # the highest boundary written
+            _, entry = _last_entry(f)
+            last = entry["primary_ts"] if entry else 0
+            # first boundary strictly above what's already written,
+            # anchored at the stream's own ts domain (commit_ts is
+            # epoch-micros, so anchoring at 0 would enumerate ~50 years
+            # of boundaries)
+            start = ((max(last, min_ts - 1) // interval) + 1) * interval
             for ts in range(start, resolved_ts + 1, interval):
                 f.write(json.dumps({
                     "changefeed": self.changefeed_id,
                     "primary_ts": ts,
                     "secondary_ts": resolved_ts,
                     "created_at": time.time(),
-                }) + "\n")
+                }).encode() + b"\n")
 
     # -- lifecycle ---------------------------------------------------------
     def start(self, spark: SparkSession, sf_dir: str, available_now: bool = True):
@@ -489,7 +494,7 @@ class Changefeed:
             compile_sink_tail, sink_scheme,
         )
 
-        cl = stream_changelog(spark, sf_dir)
+        cl = stream_changelog(spark, sf_dir, self.cfg.memory_quota)
         scheme = sink_scheme(self.cfg)
         if scheme in DB_SCHEMES or scheme in STORAGE_SCHEMES:
             # stream the streaming-safe filter prefix; the sink-specific
@@ -510,9 +515,11 @@ class Changefeed:
         self.query = writer.start()
         return self.query
 
-    def wait(self, timeout_s: float = 300.0) -> None:
+    def wait(self, timeout_s: float = 300.0) -> bool:
+        """True once the query has terminated, False if ``timeout_s``
+        ran out first."""
         assert self.query is not None
-        self.query.awaitTermination(timeout_s)
+        return self.query.awaitTermination(timeout_s)
 
     def stop(self) -> None:
         if self.query is not None and self.query.isActive:
