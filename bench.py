@@ -39,6 +39,21 @@ def warm_up(spark, sf_dir: str) -> None:
         lambda it: it, "id long"))
 
 
+def pyworker_task_ms(spark, runs: int = 5) -> float:
+    """Median wall ms of ``runs`` warm no-op one-row ``mapInPandas``
+    tasks: the fixed cost every Python-worker task pays before its
+    first row (worker hand-off, task setup, import-cache invalidation).
+    Measured after ``warm_up``, so a Python, pyspark or PYTHONPATH change
+    that makes task setup expensive shows in ``bench_out.json``."""
+    df = spark.range(0, 1, 1, 1).mapInPandas(lambda it: it, "id long")
+    walls = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        noop(df)
+        walls.append(time.perf_counter() - t0)
+    return round(statistics.median(walls) * 1000, 1)
+
+
 def _min_wall(fn, runs: int = 2) -> float:
     """Min wall seconds of ``runs`` calls: run 1 pays codegen/JIT and
     co-tenant spikes last seconds, so the min is the steady state."""
@@ -130,6 +145,7 @@ def main() -> None:
     pipeline_out = build_pipeline(events_changelog(spark, sf_dir), cfg)
 
     warm_up(spark, sf_dir)
+    task_ms = pyworker_task_ms(spark)
 
     n_rows = events_changelog(spark, sf_dir).count()
     # select("value") prunes frame metadata; the encoder and every
@@ -319,8 +335,8 @@ def main() -> None:
         _write_result_snapshot(
             timings, sf, pipeline_rows_per_s, rows_10x, t_10x,
             scale_probes, {}, nx, queries_10x, blowups_10x, failed,
-            n_rows, samples, loadavg_start, steal_start, bench_t0,
-            final=False)
+            n_rows, samples, task_ms, loadavg_start, steal_start,
+            bench_t0, final=False)
         nx_dir = _materialize_nx(spark, sf_dir, nx)
 
         def _shuffle_write_bytes() -> int | None:
@@ -402,14 +418,14 @@ def main() -> None:
     _write_result_snapshot(
         timings, sf, pipeline_rows_per_s, rows_10x, t_10x, scale_probes,
         scale_probes_nx, nx, queries_10x, blowups_10x, failed, n_rows,
-        samples, loadavg_start, steal_start, bench_t0, final=True)
+        samples, task_ms, loadavg_start, steal_start, bench_t0, final=True)
 
 
 def _write_result_snapshot(timings, sf, pipeline_rows_per_s, rows_10x,
                            t_10x, scale_probes, scale_probes_nx, nx,
                            queries_10x, blowups_10x, failed, n_rows,
-                           samples, loadavg_start, steal_start, bench_t0,
-                           final: bool) -> None:
+                           samples, task_ms, loadavg_start, steal_start,
+                           bench_t0, final: bool) -> None:
     """Build the result document and persist it to bench_out.json; the
     final call also prints it as the single last stdout line.  Called
     once BEFORE the nx probe block and once at the end, so an external
@@ -443,6 +459,7 @@ def _write_result_snapshot(timings, sf, pipeline_rows_per_s, rows_10x,
         "blowups_10x": blowups_10x,
         "failed": failed,
         "changelog_rows": n_rows,
+        "pyworker_task_ms": task_ms,
         # host-noise provenance (VERDICT r3 #8): reported per-query
         # values are min-of-samples (steady state); medians + load
         # expose a noisy window without re-running
@@ -481,6 +498,7 @@ def _write_result_snapshot(timings, sf, pipeline_rows_per_s, rows_10x,
             "n_failed": len(failed),
             "pipeline_rows_per_s": pipeline_rows_per_s,
             "pipeline_rows_per_s_10x": round(rows_10x / t_10x, 1),
+            "pyworker_task_ms": task_ms,
             "blowups_10x": blowups_10x,
             "scale_probes_nx_factor": nx,
             "scale_probes_nx_per_row_ratio": {

@@ -99,3 +99,27 @@ def test_s3_tls_still_works_over_http_wire():
         c.close()
     finally:
         srv.stop()
+
+
+def test_http_wire_half_open_peer_fails_a_small_request_fast():
+    """A peer that accepts the connection and never answers fails a small
+    request after the half-open guard, not the 60 s connection bound; a
+    large body keeps the long bound."""
+    import time
+
+    from ticdc_spark.sinks.http_wire import GUARD_S
+
+    lsock = socket.socket()
+    lsock.bind(("127.0.0.1", 0))
+    lsock.listen(1)
+    port = lsock.getsockname()[1]
+    w = HttpWire("127.0.0.1", port)
+    assert w.request_timeout(0) == GUARD_S < 60
+    assert w.request_timeout(512 << 20) == 60
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError):
+        w.request("PUT", "/b/k", body=b"x" * 1024)
+        w.getresponse()
+    assert time.monotonic() - t0 < 3 * GUARD_S
+    assert w._sock is None  # closed: a retry reconnects
+    lsock.close()

@@ -144,6 +144,68 @@ def test_progress_log_replay_rewrites_only_the_last_entry(tmp_path):
     assert cf.stats()["rows"] == 99 + 2 + 3
 
 
+def test_stats_reads_only_the_first_and_last_entries(tmp_path,
+                                                     monkeypatch):
+    """``stats`` equals the full-parse totals of a >4 KB progress log
+    whose last epoch was replayed, and parses exactly two lines: the
+    last entry carries the cumulative rows and epochs."""
+    import types
+
+    from ticdc_spark.streaming import changefeed as cf_mod
+
+    cf = Changefeed("cf_st", ChangefeedConfig(), str(tmp_path))
+    for epoch in range(100):
+        cf._append_progress({"changefeed": "cf_st", "epoch": epoch,
+                             "resolved_ts": epoch, "rows": epoch % 7,
+                             "wall_ts": 1000.0 + epoch})
+    cf._append_progress({"changefeed": "cf_st", "epoch": 99,
+                         "resolved_ts": 99, "rows": 50, "wall_ts": 1200.0})
+    with open(cf.progress_path, "rb") as f:
+        text = f.read()
+    assert len(text) > 4096
+    entries = [json.loads(ln) for ln in text.splitlines()]
+    rows = sum(e["rows"] for e in entries)
+    expected = {"epochs": 100, "rows": rows,
+                "rows_per_sec": round(rows / 200.0, 1)}
+
+    parsed = []
+
+    def loads(s):
+        parsed.append(s)
+        return json.loads(s)
+
+    monkeypatch.setattr(cf_mod, "json",
+                        types.SimpleNamespace(loads=loads, dumps=json.dumps))
+    got = cf.stats()
+    monkeypatch.undo()
+    assert got == expected
+    assert len(parsed) == 2
+
+
+def test_stats_and_append_fall_back_on_a_log_without_totals(tmp_path):
+    """A progress log written before entries carried cumulative totals
+    is parsed in full once: ``stats`` sums it, and the next appended
+    entry starts carrying the totals."""
+    import os
+
+    cf = Changefeed("cf_old", ChangefeedConfig(), str(tmp_path))
+    os.makedirs(os.path.dirname(cf.progress_path))
+    with open(cf.progress_path, "w") as f:
+        for epoch in range(3):
+            f.write(json.dumps({"changefeed": "cf_old", "epoch": epoch,
+                                "resolved_ts": epoch, "rows": 10,
+                                "wall_ts": 10.0 * epoch}) + "\n")
+    assert cf.stats() == {"epochs": 3, "rows": 30, "rows_per_sec": 1.5}
+    cf._append_progress({"changefeed": "cf_old", "epoch": 2,
+                         "resolved_ts": 2, "rows": 5, "wall_ts": 20.0})
+    cf._append_progress({"changefeed": "cf_old", "epoch": 3,
+                         "resolved_ts": 3, "rows": 4, "wall_ts": 30.0})
+    with open(cf.progress_path) as f:
+        last = json.loads(f.read().splitlines()[-1])
+    assert (last["total_rows"], last["epochs"]) == (29, 4)
+    assert cf.stats() == {"epochs": 4, "rows": 29, "rows_per_sec": 1.0}
+
+
 def test_syncpoints_resume_past_the_ledgers_last_line(tmp_path,
                                                       monkeypatch):
     """The next epoch's syncpoints start at the first boundary past the

@@ -3,6 +3,14 @@
 Local testing runs on ``local[N]``; the same config block is what we would
 ship to a 1000-executor cluster (AQE on, UTC, Arrow) — only master/memory
 and ``spark.sql.shuffle.partitions`` change with cluster size.
+
+Python workers fork from the engine's own daemon
+(``ticdc_spark.worker_daemon``), which is ``pyspark.daemon`` with a
+stat guard on ``zipimporter.invalidate_caches``.  Without it, every
+Python task (each ``mapInPandas``/``mapInArrow``/RDD stage, including
+a live epoch's Kafka produce) re-reads the whole directory of
+``pyspark.zip``, the py4j zip and the spark-core jar before touching a
+row: ~180 ms of fixed cost per task on CPython < 3.13.
 """
 
 from __future__ import annotations
@@ -10,6 +18,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding this ``ticdc_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "ticdc_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -47,6 +58,11 @@ def get_spark(app_name: str = "ticdc_spark", shuffle_partitions: int | None = No
         # worker crash retries instead of failing the bench/suite run.
         .config("spark.task.maxFailures", "4")
         .config("spark.python.worker.faulthandler.enabled", "true")
+        .config("spark.python.daemon.module", "ticdc_spark.worker_daemon")
+        # the daemon and the engine's UDFs import ticdc_spark in the
+        # worker, which starts in the driver's working directory: put
+        # this checkout on the worker path wherever the driver started
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # testdata parquet stores TIMESTAMP(NANOS); Spark reads them as
         # LongType nanos under this flag (sources/changelog.py converts).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

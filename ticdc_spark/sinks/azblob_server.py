@@ -342,10 +342,10 @@ class AzBlobClient:
             if tls_ca is None:
                 raise ValueError("https endpoint needs tls_ca (pinned CA)")
             cert, key = tls_client_cert or (None, None)
-            self.conn = HttpWire(self.host, self.port, timeout=60,
+            self.conn = HttpWire(self.host, self.port,
                                  context=client_context(tls_ca, cert, key))
         else:
-            self.conn = HttpWire(self.host, self.port, timeout=60)
+            self.conn = HttpWire(self.host, self.port)
 
     def _build_req(self, method: str, path: str, query: dict[str, str],
                    body: bytes = b"",

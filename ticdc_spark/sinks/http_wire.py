@@ -16,11 +16,22 @@ Framing assumptions, valid for every mini server in this repo (all are
 Content-Length (no chunked transfer), HEAD/204/304 responses have no
 body, keep-alive is on (protocol_version HTTP/1.1).  A mid-response
 EOF raises ConnectionError so caller retry loops reconnect.
+
+Half-open guard: a peer that accepts a connection and never answers
+would hold every request for the connection's full ``timeout``.  So
+each request waits at most ``GUARD_S`` plus its body's transfer time at
+``MIN_RATE``, capped at ``timeout``: a small request fails in seconds,
+a large upload keeps the long bound.  A timed-out read closes the
+connection, so the caller's retry reconnects instead of reading a late
+reply to the wrong request.
 """
 
 from __future__ import annotations
 
 import socket
+
+GUARD_S = 5.0  # per-request wait for a bodiless or small request
+MIN_RATE = 1 << 20  # bytes/s a large body is allowed to take beyond it
 
 
 class _Resp:
@@ -62,7 +73,7 @@ class HttpWire:
 
     def _connect(self) -> None:
         s = socket.create_connection((self.host, self.port),
-                                     timeout=self.timeout)
+                                     timeout=self.request_timeout(0))
         s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         if self._context is not None:
             s = self._context.wrap_socket(s, server_hostname=self.host)
@@ -85,6 +96,21 @@ class HttpWire:
             self._sock = None
         self._pending = 0
 
+    def request_timeout(self, nbytes: int) -> float:
+        """Socket timeout for a request (or pipelined batch) whose
+        bodies total ``nbytes``."""
+        return min(self.timeout, GUARD_S + nbytes / MIN_RATE)
+
+    def _send(self, data: bytes, nbytes: int) -> None:
+        if self._sock is None:
+            self._connect()
+        self._sock.settimeout(self.request_timeout(nbytes))
+        try:
+            self._sock.sendall(data)
+        except TimeoutError:
+            self.close()
+            raise
+
     # -- encode / decode -------------------------------------------------
 
     def _encode(self, method: str, url: str, body: bytes | None,
@@ -105,6 +131,13 @@ class HttpWire:
         return head + (body or b"")
 
     def _read_response(self, method: str) -> _Resp:
+        try:
+            return self._parse_response(method)
+        except TimeoutError:
+            self.close()
+            raise
+
+    def _parse_response(self, method: str) -> _Resp:
         f = self._rfile
         line = f.readline(65536)
         if not line:
@@ -152,10 +185,8 @@ class HttpWire:
 
     def request(self, method: str, url: str, body: bytes | None = None,
                 headers: dict | None = None) -> None:
-        if self._sock is None:
-            self._connect()
         self._last_method = method
-        self._sock.sendall(self._encode(method, url, body, headers))
+        self._send(self._encode(method, url, body, headers), len(body or b""))
         self._pending += 1
 
     def getresponse(self) -> _Resp:
@@ -170,9 +201,7 @@ class HttpWire:
         propagates (callers fall back to per-item requests)."""
         if not reqs:
             return []
-        if self._sock is None:
-            self._connect()
         buf = b"".join(self._encode(m, u, b, h) for m, u, b, h in reqs)
-        self._sock.sendall(buf)
+        self._send(buf, sum(len(b or b"") for _m, _u, b, _h in reqs))
         self._pending += len(reqs)
         return [self._read_response(m) for m, _u, _b, _h in reqs]

@@ -42,10 +42,10 @@ class S3Client:
             if tls_ca is None:
                 raise ValueError("https endpoint needs tls_ca (pinned CA)")
             cert, key = tls_client_cert or (None, None)
-            self.conn = HttpWire(self.host, self.port, timeout=60,
+            self.conn = HttpWire(self.host, self.port,
                                  context=client_context(tls_ca, cert, key))
         else:
-            self.conn = HttpWire(self.host, self.port, timeout=60)
+            self.conn = HttpWire(self.host, self.port)
 
     def close(self):
         self.conn.close()

@@ -111,6 +111,19 @@ def _last_entry(f) -> tuple[int, dict | None]:
     return start, json.loads(f.read())
 
 
+def _log_totals(f, last: dict | None) -> tuple[int, int]:
+    """(rows, epochs) of the progress log ``f`` whose last entry is
+    ``last``: its cumulative fields, or one full parse of a log written
+    before entries carried them."""
+    if last is None:
+        return 0, 0
+    if "total_rows" in last:
+        return last["total_rows"], last["epochs"]
+    f.seek(0)
+    entries = [json.loads(line) for line in f.read().splitlines()]
+    return sum(e["rows"] for e in entries), len(entries)
+
+
 class Changefeed:
     """One changefeed = one Structured Streaming query + checkpoint dir."""
 
@@ -318,12 +331,18 @@ class Changefeed:
         epoch can only be the LAST entry — Spark never re-runs an epoch
         after a later one ran, and a rewound run's ids start past the
         log's last entry (``next_epoch``) — so that entry alone is
-        checked and dropped; the log is never re-read."""
+        checked and dropped.  Each entry carries the log's cumulative
+        ``total_rows`` and ``epochs``, taken from the last entry (or
+        from the entry it replaces), so neither this nor ``stats``
+        re-reads the log."""
         os.makedirs(os.path.dirname(self.progress_path), exist_ok=True)
         with open(self.progress_path, "a+b") as f:
             start, last = _last_entry(f)
+            rows, epochs = _log_totals(f, last)
             if last is not None and last["epoch"] == entry["epoch"]:
+                rows, epochs = rows - last["rows"], epochs - 1
                 f.truncate(start)
+            entry.update(total_rows=rows + entry["rows"], epochs=epochs + 1)
             f.write(json.dumps(entry).encode() + b"\n")
 
     def next_epoch(self) -> int:
@@ -527,17 +546,19 @@ class Changefeed:
 
     def stats(self) -> dict:
         """Changefeed statistics (cli_changefeed_statistics.go shape):
-        totals + throughput derived from the progress log."""
-        if not os.path.exists(self.progress_path):
+        totals + throughput from the progress log's first and last
+        entries (the last carries the cumulative totals)."""
+        last = None
+        if os.path.exists(self.progress_path):
+            with open(self.progress_path, "rb") as f:
+                first = f.readline()
+                _, last = _last_entry(f)
+                rows, epochs = _log_totals(f, last)
+        if last is None:
             return {"epochs": 0, "rows": 0, "rows_per_sec": None}
-        entries = []
-        with open(self.progress_path) as f:
-            for line in f:
-                entries.append(json.loads(line))
-        rows = sum(e["rows"] for e in entries)
-        elapsed = entries[-1]["wall_ts"] - entries[0]["wall_ts"]
+        elapsed = last["wall_ts"] - json.loads(first)["wall_ts"]
         return {
-            "epochs": len(entries),
+            "epochs": epochs,
             "rows": rows,
             "rows_per_sec": round(rows / elapsed, 1) if elapsed > 0 else None,
         }
