@@ -19,6 +19,7 @@ import pytest
 
 from ticdc_spark.sinks.azblob_server import AzBlobClient, MiniAzureBlobServer
 from ticdc_spark.sinks.gcs_server import GCSClient, MiniGCSServer
+from ticdc_spark.sinks.http_wire import GUARD_S
 from ticdc_spark.sinks.s3_client import S3Client, S3Error
 from ticdc_spark.sinks.s3_server import MiniS3Server
 
@@ -227,9 +228,23 @@ def test_put_files_multipart_threshold(spark):
 
 # ------------------------------------------------- sink chaos (failpoints)
 
-# well under HttpWire's 60 s read timeout: a dropped connection must be
-# seen as EOF, not waited out
-_RECONNECT_BOUND_S = 40
+# a dropped connection must be seen as EOF, not waited out: one
+# waited-out request alone costs HttpWire's half-open guard (GUARD_S).
+# _put_warm keeps the session's and the upload path's first-run cost
+# (seconds on a fresh session) out of the timed window.
+_RECONNECT_BOUND_S = GUARD_S
+
+
+def _put_warm(spark, srv):
+    """One untimed multipart put_files into ``srv`` before the chaos."""
+    from ticdc_spark.sinks import s3_live
+
+    rows = [("warm", "w.csv", f"w{i},{'x' * 120}") for i in range(1000)]
+    s3_live.put_files(
+        spark.createDataFrame(
+            rows, "path string, file_name string, value string").coalesce(1),
+        srv.endpoint, srv.access_key, srv.secret_key, scheme="s3",
+        multipart_threshold=64 * 1024, part_size=64 * 1024)
 
 
 def test_put_files_multipart_survives_dropped_parts(spark):
@@ -246,6 +261,7 @@ def test_put_files_multipart_survives_dropped_parts(spark):
         rows, "path string, file_name string, value string").coalesce(1)
     try:
         with MiniS3Server() as srv:
+            _put_warm(spark, srv)
             failpoint.enable("storage/drop-upload-part", "2*return(1)")
             t0 = time.monotonic()
             s3_live.put_files(df, srv.endpoint, srv.access_key,
@@ -277,6 +293,7 @@ def test_put_files_multipart_survives_lost_complete_response(spark):
         rows, "path string, file_name string, value string").coalesce(1)
     try:
         with MiniS3Server() as srv:
+            _put_warm(spark, srv)
             failpoint.enable("storage/drop-complete-response",
                              "1*return(1)")
             t0 = time.monotonic()

@@ -1,6 +1,7 @@
 """The engine's PySpark daemon: the stat guard on
 ``zipimporter.invalidate_caches`` skips unchanged archives, still
-re-reads a changed one, and is what ``get_spark``'s workers run under."""
+re-reads a changed one, and is what ``get_spark``'s workers run under;
+its workers fork with ``PRELOAD`` already imported and still produce."""
 
 from __future__ import annotations
 
@@ -79,3 +80,48 @@ def test_spark_workers_run_under_the_guard(spark):
 
     got = spark.range(0, 1, 1, 1).mapInPandas(probe, "m string").collect()
     assert [r.m for r in got] == ["ticdc_spark.worker_daemon"]
+
+
+def test_spark_workers_fork_with_preload(spark):
+    names = worker_daemon.PRELOAD
+
+    def probe(it):
+        import sys
+
+        # read before this UDF imports anything itself
+        missing = [n for n in names if n not in sys.modules]
+        daemon = sys.modules.get("ticdc_spark.worker_daemon")
+        preloaded = bool(getattr(daemon, "preloaded", False))
+        import pandas as pd
+
+        for _ in it:
+            pass
+        yield pd.DataFrame({"missing": [",".join(missing)],
+                            "preloaded": [preloaded]})
+
+    got = spark.range(0, 4, 1, 4).mapInPandas(
+        probe, "missing string, preloaded boolean").collect()
+    assert [(r.missing, r.preloaded) for r in got] == [("", True)] * 4
+
+
+def test_live_produce_on_preloaded_workers(spark):
+    """The produce path (sockets, the ctypes crc32c kernel, Arrow and
+    pandas) works in workers forked after the daemon loaded it."""
+    import pyspark.sql.functions as F
+
+    from ticdc_spark.sinks.kafka_broker import KafkaBroker
+    from ticdc_spark.sinks.kafka_client import KafkaConn
+    from ticdc_spark.sinks.kafka_live import produce_frame
+
+    with KafkaBroker(default_partitions=3) as b:
+        frame = spark.range(0, 3000, 1, 3).select(
+            F.lit("t").alias("topic"),
+            (F.col("id") % 3).cast("int").alias("partition"),
+            F.col("id").cast("string").alias("key"),
+            F.concat(F.lit("v"), F.col("id")).alias("value"),
+            F.col("id").alias("seq"))
+        produce_frame(frame, b.bootstrap)
+        with KafkaConn.from_bootstrap(b.bootstrap, sasl=None) as c:
+            for p in range(3):
+                got = [int(r.key) for _, r in c.fetch_all("t", p)]
+                assert got == list(range(p, 3000, 3))

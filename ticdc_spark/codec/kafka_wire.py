@@ -275,28 +275,36 @@ class Record:
     offset_delta: int = 0
 
 
-def _enc_record(rec: Record) -> bytes:
-    body = bytearray()
-    body += b"\x00"  # attributes
-    body += enc_varint(rec.timestamp_delta)
-    body += enc_varint(rec.offset_delta)
-    if rec.key is None:
-        body += enc_varint(-1)
-    else:
-        body += enc_varint(len(rec.key)) + rec.key
-    if rec.value is None:
-        body += enc_varint(-1)
-    else:
-        body += enc_varint(len(rec.value)) + rec.value
-    body += enc_varint(len(rec.headers))
-    for hk, hv in rec.headers:
-        kb = hk.encode("utf-8")
-        body += enc_varint(len(kb)) + kb
-        if hv is None:
-            body += enc_varint(-1)
-        else:
-            body += enc_varint(len(hv)) + hv
-    return enc_varint(len(body)) + bytes(body)
+# zigzag varints of -1..8190: null markers, lengths, deltas and header
+# counts of ordinary records; anything larger goes through enc_varint
+_VARINTS = tuple(enc_varint(v) for v in range(-1, 8191))
+_NULL = _VARINTS[0]
+
+
+def _vi(v: int) -> bytes:
+    return _VARINTS[v + 1] if -1 <= v < 8191 else enc_varint(v)
+
+
+def _enc_record(rec: Record, offset_delta: int) -> bytes:
+    key, value, headers = rec.key, rec.value, rec.headers
+    hdrs = b""
+    if headers:
+        parts = []
+        for hk, hv in headers:
+            kb = hk.encode("utf-8")
+            parts += (_vi(len(kb)), kb,
+                      _NULL if hv is None else _vi(len(hv)), hv or b"")
+        hdrs = b"".join(parts)
+    ts = _vi(rec.timestamp_delta)
+    off = _vi(offset_delta)
+    kl = _NULL if key is None else _vi(len(key))
+    vl = _NULL if value is None else _vi(len(value))
+    hn = _vi(len(headers))
+    key, value = key or b"", value or b""
+    size = (1 + len(ts) + len(off) + len(kl) + len(key) + len(vl)
+            + len(value) + len(hn) + len(hdrs))
+    return b"".join((_vi(size), b"\x00", ts, off, kl, key, vl, value, hn,
+                     hdrs))
 
 
 def encode_record_batch(
@@ -315,13 +323,9 @@ def encode_record_batch(
     (producer_id, base_sequence) marks the batch idempotent — the broker
     dedups retries by sequence (KIP-98)."""
     codec = _CODEC_NAMES[compression]
-    recs = []
-    max_ts_delta = 0
-    for i, r in enumerate(records):
-        r2 = Record(r.key, r.value, r.headers, r.timestamp_delta, i)
-        max_ts_delta = max(max_ts_delta, r.timestamp_delta)
-        recs.append(_enc_record(r2))
-    payload = _compress(codec, b"".join(recs))
+    max_ts_delta = max([0] + [r.timestamp_delta for r in records])
+    payload = _compress(codec, b"".join(
+        [_enc_record(r, i) for i, r in enumerate(records)]))
     attributes = codec  # bits 0-2 compression
     if transactional:
         attributes |= 0x10  # bit 4 (KIP-98)

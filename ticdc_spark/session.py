@@ -10,7 +10,14 @@ stat guard on ``zipimporter.invalidate_caches``.  Without it, every
 Python task (each ``mapInPandas``/``mapInArrow``/RDD stage, including
 a live epoch's Kafka produce) re-reads the whole directory of
 ``pyspark.zip``, the py4j zip and the spark-core jar before touching a
-row: ~180 ms of fixed cost per task on CPython < 3.13.
+row: ~180 ms of fixed cost per task on CPython < 3.13.  The daemon also
+imports the engine's task modules (``worker_daemon.PRELOAD``: pyarrow,
+pandas, the live Kafka produce path) before its first fork, so a worker
+starts warm.  That matters whenever a worker is new: a stage that runs
+more Python tasks than there are idle workers forks one mid-stage (a
+backlog epoch's produce split in two), and Spark stops workers left idle
+for a minute, so the epoch after a quiet minute forks again.  A cold
+fork would import ~380 modules in its first task.
 """
 
 from __future__ import annotations
@@ -52,6 +59,12 @@ def get_spark(app_name: str = "ticdc_spark", shuffle_partitions: int | None = No
         # default store evicts at 1000 stages and deltas go negative)
         .config("spark.ui.retainedStages", "100000")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # HotSpot never JIT-compiles a method over 8000 bytecode bytes
+        # (DontCompileHugeMethods), so a whole-stage method past that runs
+        # interpreted; at this limit Spark runs such a stage without
+        # whole-stage codegen instead (a one-stage changelog + canal-json
+        # encode: 2.6 -> 1.6 s at sf0.1).  Stages under it are unchanged.
+        .config("spark.sql.codegen.hugeMethodLimit", "8000")
         # local mode defaults to task maxFailures=1: one transient Python
         # worker death (co-tenant memory spike on this host) aborts the
         # whole job.  A real cluster runs with 4; match it so a single

@@ -1,5 +1,6 @@
 """The engine's PySpark daemon: ``pyspark.daemon`` with a stat-guarded
-``zipimporter.invalidate_caches``.
+``zipimporter.invalidate_caches`` and the engine's task imports loaded
+before the first fork.
 
 Every PySpark task starts with ``setup_spark_files``, which calls
 ``importlib.invalidate_caches()``.  Before CPython 3.13 (gh-103200 made
@@ -13,9 +14,23 @@ warm reused worker, re-reads 16 importers and ~27k entries (~180 ms on
 when its ``(st_mtime_ns, st_size)`` differs from the stat taken before
 that importer's last read, or when ``stat`` fails; a changed archive is
 still re-read.  ``__main__`` installs it on ``zipimport.zipimporter``,
-primes the daemon's importers and runs ``pyspark.daemon.manager()``
-unchanged, so every forked worker inherits the guard and the primed
-stats.
+primes the daemon's importers, imports ``PRELOAD``, sets ``preloaded``
+and runs ``pyspark.daemon.manager()`` unchanged, so every forked worker
+inherits the guard, the primed stats and the loaded modules.
+
+Warm forks matter because workers come and go: the daemon forks a new
+worker whenever a stage runs more Python tasks than there are idle
+workers (a backlog epoch whose produce stage AQE splits in two), and
+Spark's worker factory stops a worker left idle for a minute
+(``PythonWorkerFactory``'s idle timeout), so the next epoch after a
+quiet minute forks again.  Without ``PRELOAD`` such a worker imports
+pandas, pyarrow and the produce path (~380 modules, 0.12-0.18 s before
+the UDF's first row, ~0.4 s of task wall) in the middle of the epoch it
+holds up.  The daemon holds those modules once (~60 MB more RSS); a
+forked worker starts with them mapped copy-on-write.  Importing numpy and
+pyarrow starts native threads in the daemon (the BLAS pool, jemalloc's
+background thread); both libraries register ``pthread_atfork``
+handlers, and a forked worker starts its own threads when it needs them.
 
 ``get_spark`` names this package in ``spark.python.daemon.module``
 (``pyspark.daemon`` ignores a ``spark.python.worker.module`` whose name
@@ -29,6 +44,28 @@ from __future__ import annotations
 
 import os
 import zipimport
+
+# What a cold worker imports in its first produce task (~380 modules):
+# the Arrow-UDF runtime every mapInPandas/mapInArrow task loads
+# (pyarrow's pandas shim imports pyarrow.vendored.version lazily), the
+# live produce path (``kafka_live`` holds the produce UDF and pulls in
+# the ``sinks`` package; its ``_send`` imports ``kafka_client``, which
+# brings ``kafka_wire`` and ``native_accel``) and ``encodings.idna``,
+# which the socket layer loads to encode a host name.
+# ``pyspark.sql.pandas.serializers`` is not listed: ``pyspark.worker``
+# already imports it in the daemon.
+PRELOAD = (
+    "pyarrow",
+    "pandas",
+    "pyarrow.pandas_compat",
+    "pyarrow.vendored.version",
+    "ticdc_spark.sinks.kafka_live",
+    "ticdc_spark.sinks.kafka_client",
+    "encodings.idna",
+)
+
+# set by ``__main__`` once PRELOAD is imported, before the first fork
+preloaded = False
 
 _reread = zipimport.zipimporter.invalidate_caches
 

@@ -1,0 +1,112 @@
+"""Codec microbenchmark: payload compression and the Kafka record batch.
+
+    python tools/codec_microbench.py [--records N] [--repeat R]
+
+Imports ``ticdc_spark`` from the checkout holding this script, so the
+same file run from two checkouts compares them.  Prints one JSON line:
+
+- ``compression``: for each ``compression.CODECS`` entry, compress and
+  decompress MB/s (uncompressed MB over the best of R calls) on ~1 MB of
+  canal-JSON-like messages;
+- ``kafka_batch``: ``encode_record_batch`` and ``decode_record_batches``
+  µs per record (best of R passes) over N records with 150-450 B
+  canal-JSON-like values and 20 B keys, uncompressed, in batches of 512
+  records as the live produce sends them.
+
+The inputs come from a fixed seed, so two runs time the same bytes.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import random
+import string
+import sys
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from ticdc_spark.codec import compression  # noqa: E402
+from ticdc_spark.codec import kafka_wire as kw  # noqa: E402
+
+_BATCH = 512
+
+
+def _message(rng: random.Random) -> bytes:
+    cols = {f"c{i}": rng.randrange(10 ** rng.randrange(1, 9))
+            for i in range(rng.randrange(3, 12))}
+    cols["note"] = "".join(rng.choices(string.ascii_lowercase + " ",
+                                       k=rng.randrange(0, 300)))
+    msg = {"database": "tpch", "table": rng.choice(("orders", "lineitem")),
+           "type": rng.choice(("INSERT", "UPDATE", "DELETE")),
+           "ts": rng.randrange(1 << 40), "data": [cols]}
+    return json.dumps(msg, separators=(",", ":")).encode()
+
+
+def _records(n: int, rng: random.Random) -> list[kw.Record]:
+    out = []
+    while len(out) < n:
+        value = _message(rng)
+        if 150 <= len(value) <= 450:
+            out.append(kw.Record(b"%020d" % rng.randrange(10 ** 20), value))
+    return out
+
+
+def _best(fn, repeat: int) -> float:
+    best = float("inf")
+    for _ in range(repeat):
+        t = time.perf_counter()
+        fn()
+        best = min(best, time.perf_counter() - t)
+    return best
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--records", type=int, default=15_360)
+    ap.add_argument("--repeat", type=int, default=7)
+    args = ap.parse_args(argv)
+    rng = random.Random(1)
+
+    payload = b"\n".join(_message(rng) for _ in range(4_000))
+    mb = len(payload) / 1e6
+    codecs = {}
+    for name in compression.CODECS:
+        packed = compression.compress(name, payload)
+        assert compression.decompress(name, packed) == payload, name
+        codecs[name] = {
+            "compress_mb_s": round(mb / _best(
+                lambda: compression.compress(name, payload), args.repeat), 1),
+            "decompress_mb_s": round(mb / _best(
+                lambda: compression.decompress(name, packed), args.repeat), 1),
+            "ratio": round(len(payload) / len(packed), 2),
+        }
+
+    records = _records(args.records, rng)
+    chunks = [records[i:i + _BATCH] for i in range(0, len(records), _BATCH)]
+    record_set = b"".join(kw.encode_record_batch(c) for c in chunks)
+    decoded = [r for _, rs in kw.decode_record_batches(record_set) for r in rs]
+    assert [r.value for r in decoded] == [r.value for r in records]
+    us = 1e6 / len(records)
+    encode_s = _best(lambda: [kw.encode_record_batch(c) for c in chunks],
+                     args.repeat)
+    decode_s = _best(lambda: kw.decode_record_batches(record_set), args.repeat)
+    print(json.dumps({
+        "metric": "codec_microbench",
+        "payload_mb": round(mb, 3),
+        "compression": codecs,
+        "kafka_batch": {
+            "records": len(records),
+            "bytes_per_record": round(len(record_set) / len(records), 1),
+            "encode_us_per_record": round(encode_s * us, 2),
+            "decode_us_per_record": round(decode_s * us, 2),
+        },
+        "crc32c": "native" if kw.crc32c is not kw._crc32c_py else "python",
+    }))
+
+
+if __name__ == "__main__":
+    main()
