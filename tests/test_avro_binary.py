@@ -1,24 +1,45 @@
-"""Golden-byte tests for the pure-Python Avro binary codec.
+"""Golden-byte tests for the flat-record Avro binary path.
 
 Byte expectations hand-derived from the Avro spec (§Binary Encoding)
 and the Confluent wire format (magic 0 + 4-byte big-endian schema id,
-`confluent_schema_registry.go:39-42`).
+`confluent_schema_registry.go:39-42`).  The records are the native
+``avro`` protocol's (`avro_protocol._flat_schemas`), compiled by the
+shared codec; the headers are the schema managers'.
 """
 
 from __future__ import annotations
 
 import struct
 
-from ticdc_spark.codec.avro_binary import (
-    decode_record,
-    encode_record,
+from ticdc_spark.codec.avro import (
+    compile_avro_decoder,
+    compile_avro_encoder,
+    read_whole,
     zigzag_decode,
     zigzag_encode,
+)
+from ticdc_spark.codec.avro_protocol import _flat_schemas
+from ticdc_spark.codec.schema_registry import (
+    ConfluentSchemaManager,
+    GlueSchemaManager,
+    parse_msg_header,
 )
 
 FIELDS = ["okey", "cust", "price", "status"]
 TYPES = {"okey": "long", "cust": "long", "price": "double", "status": "string"}
 PK = ("okey",)
+_, VALUE_SCHEMA = _flat_schemas(FIELDS, TYPES, PK)
+ENCODE = compile_avro_encoder(VALUE_SCHEMA, {})
+DECODE = compile_avro_decoder(VALUE_SCHEMA, {})
+
+
+def encode_record(rec: dict, header: bytes) -> bytes:
+    return header + ENCODE(rec)
+
+
+def decode_record(buf: bytes):
+    ref, pos = parse_msg_header(buf)
+    return ref, read_whole(DECODE, buf, pos, "avro")
 
 
 def test_zigzag_golden():
@@ -36,7 +57,7 @@ def test_zigzag_golden():
 
 def test_record_golden_bytes():
     rec = {"okey": 5, "cust": None, "price": 1.5, "status": "ab"}
-    buf = encode_record(rec, FIELDS, TYPES, PK, schema_id=1)
+    buf = encode_record(rec, ConfluentSchemaManager.get_msg_header(1))
     expected = (
         b"\x00" + (1).to_bytes(4, "big")  # confluent envelope
         + b"\x0a"                          # okey: non-null pk, zigzag(5)
@@ -45,34 +66,32 @@ def test_record_golden_bytes():
         + b"\x02" + b"\x04" + b"ab"        # status: branch 1 + len 2 + utf8
     )
     assert buf == expected
-    schema_id, back = decode_record(buf, FIELDS, TYPES, PK)
+    schema_id, back = decode_record(buf)
     assert schema_id == 1
     assert back == rec
 
 
 def test_record_roundtrip_unicode_and_negatives():
     rec = {"okey": -9, "cust": 2**40, "price": -0.125, "status": "héllo\n∂"}
-    buf = encode_record(rec, FIELDS, TYPES, PK, schema_id=7)
-    schema_id, back = decode_record(buf, FIELDS, TYPES, PK)
+    buf = encode_record(rec, ConfluentSchemaManager.get_msg_header(7))
+    schema_id, back = decode_record(buf)
     assert schema_id == 7
     assert back == rec
 
 
 def test_glue_envelope_roundtrip():
-    from ticdc_spark.codec.avro_binary import glue_header
-
     uid = "123e4567-e89b-12d3-a456-426614174000"
-    hdr = glue_header(uid)
+    hdr = GlueSchemaManager.get_msg_header(uid)
     assert hdr[:2] == bytes([3, 0]) and len(hdr) == 18
     rec = {"okey": 42, "cust": 7, "price": 2.25, "status": None}
-    buf = encode_record(rec, FIELDS, TYPES, PK, schema_id=0, header=hdr)
-    ref, back = decode_record(buf, FIELDS, TYPES, PK)
+    buf = encode_record(rec, hdr)
+    ref, back = decode_record(buf)
     assert ref == uid
     assert back == rec
 
 
 def test_glue_dataframe_path(spark, sf_dir):
-    from ticdc_spark.codec.avro_binary import (
+    from ticdc_spark.codec.avro_protocol import (
         decode_avro_binary,
         encode_avro_binary,
     )
@@ -110,8 +129,8 @@ def test_property_roundtrip_random_records():
     )
     def check(okey, cust, price, status, sid):
         rec = {"okey": okey, "cust": cust, "price": price, "status": status}
-        buf = encode_record(rec, FIELDS, TYPES, PK, schema_id=sid)
-        got_id, back = decode_record(buf, FIELDS, TYPES, PK)
+        buf = encode_record(rec, ConfluentSchemaManager.get_msg_header(sid))
+        got_id, back = decode_record(buf)
         assert got_id == sid
         assert back == rec
 

@@ -224,3 +224,18 @@ def test_full_type_table_schema_and_roundtrip():
                             columns=cols, tidb_extension=False)
     out = decode_message(mgr, "tw-value", blob)
     assert out == row
+
+
+def test_glue_registry_roundtrip():
+    """The one header parser reads the Glue header too, so a Glue
+    manager's messages decode through the same registry-driven path."""
+    from ticdc_spark.codec.schema_registry import GlueSchemaManager
+
+    mgr = GlueSchemaManager("default")
+    row = {"id": 5, "val": None, "k": -1}
+    blob = encode_row_value(mgr, "tp", "db", "tbl", row, "U", 77)
+    assert blob[:2] == b"\x03\x00"
+    native = decode_message(mgr, "tp-value", blob)
+    assert {k: native[k] for k in row} == row and native[TIDB_OP] == "u"
+    key = encode_row_key(mgr, "tp", "db", "tbl", row)
+    assert decode_message(mgr, "tp-key", key) == {"id": 5}

@@ -694,3 +694,75 @@ def test_resume_with_overwrite_checkpoint_ts(spark, sf_dir, tmp_path):
     st = _json.load(open(f"{tmp_path}/changefeeds.json"))
     assert st["cf_rw"]["overwrite_checkpoint_ts"] == ts_mid
     assert st["cf_rw"]["epoch_offset"] > 0
+
+
+@pytest.mark.parametrize("proto", [
+    "simple-avro", "canal-json-tidb", "debezium", "avro"])
+def test_handle_key_only_fallback_uses_stream_protocol_options(
+        spark, sf_dir, proto):
+    """An oversized row's handle-key-only message is encoded with the
+    stream's protocol options, so it decodes like the stream's normal
+    messages: simple-avro stays Avro binary, canal-json keeps `_tidb`,
+    debezium keeps its schema envelope, avro keeps its extension fields."""
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from ticdc_spark.codec.avro import compile_avro_decoder, read_whole
+    from ticdc_spark.codec.avro_protocol import (
+        struct_columns,
+        table_value_schema,
+    )
+    from ticdc_spark.codec.schema_registry import parse_msg_header
+    from ticdc_spark.codec.simple_avro import decode_message
+    from ticdc_spark.pipeline import ChangefeedConfig, build_pipeline
+    from ticdc_spark.sources.changelog import events_changelog
+
+    src = events_changelog(spark, sf_dir).limit(200)
+    cl = spark.createDataFrame(src.collect(), src.schema)
+    opts = {
+        "simple-avro": dict(protocol="simple", encoding_format="avro"),
+        "canal-json-tidb": dict(protocol="canal-json", tidb_extension=True),
+        "debezium": dict(protocol="debezium"),
+        "avro": dict(protocol="avro", tidb_extension=True),
+    }[proto]
+    full = build_pipeline(cl, ChangefeedConfig(**opts))
+    sizes = sorted(r[0] for r in full.select(F.length("value")).collect()
+                   if r[0] is not None)
+    max_bytes = sizes[len(sizes) // 2]
+    out = build_pipeline(cl, ChangefeedConfig(**opts, large_message_handle={
+        "large-message-handle-option": "handle-key-only",
+        "max-message-bytes": max_bytes}))
+    rows = out.select("schema_name", "table_name", "op", "is_large",
+                      "value").collect()
+    assert any(r["is_large"] for r in rows)
+    assert any(r["is_large"] is False for r in rows)
+    all_fields = {f.name for f in cl.schema["after"].dataType.fields}
+    for r in rows:
+        if r["value"] is None:  # avro delete tombstone
+            assert proto == "avro" and r["op"] == "D"
+            continue
+        fields = {"id"} if r["is_large"] else all_fields
+        if proto == "simple-avro":
+            p = decode_message(bytes(r["value"]))["payload"]
+            assert set(p["old"] if r["op"] == "D" else p["data"]) == fields
+        elif proto == "canal-json-tidb":
+            doc = json.loads(r["value"])
+            assert "_tidb" in doc and set(doc["data"][0]) == fields
+        elif proto == "debezium":
+            doc = json.loads(r["value"])
+            img = doc["payload"]["after"] or doc["payload"]["before"]
+            assert set(doc) == {"schema", "payload"} and set(img) == fields
+        else:
+            columns = struct_columns(StructType(
+                [f for f in cl.schema["after"].dataType.fields
+                 if f.name in fields]))
+            schema = table_value_schema(r["schema_name"], r["table_name"],
+                                        columns)
+            buf = bytes(r["value"])
+            _, pos = parse_msg_header(buf)
+            got = read_whole(compile_avro_decoder(schema, {}), buf, pos,
+                             "avro")
+            assert set(got) == fields | {
+                "_tidb_op", "_tidb_commit_ts", "_tidb_commit_physical_time"}

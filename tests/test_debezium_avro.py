@@ -10,17 +10,19 @@ import struct
 
 import pytest
 
+from ticdc_spark.codec.avro import (
+    avro_decode,
+    avro_encode,
+    collect_named_schemas,
+    sanitize_name,
+)
 from ticdc_spark.codec.debezium_avro import (
     DECIMAL_CONNECT_NAME,
     ConnectToAvro,
-    avro_decode,
-    avro_encode,
     avro_native_to_connect_payload,
     avro_to_connect_schema,
-    collect_named_schemas,
     decode_debezium_avro_payload,
     encode_debezium_avro_payload,
-    sanitize_name,
     subject_for,
 )
 from ticdc_spark.codec.schema_registry import (
@@ -365,16 +367,11 @@ def test_compiled_codecs_match_interpreters_exactly():
     unions, records, arrays, decimals, bytes, all primitives."""
     from decimal import Decimal
 
-    from ticdc_spark.codec.debezium_avro import (
-        ConnectToAvro,
-        avro_decode,
-        avro_encode,
-        avro_native_to_connect_payload,
-        collect_named_schemas,
+    from ticdc_spark.codec.avro import (
         compile_avro_decoder,
         compile_avro_encoder,
-        compile_connect_to_native,
     )
+    from ticdc_spark.codec.debezium_avro import compile_connect_to_native
 
     schema = {
         "type": "record", "name": "T", "namespace": "ns", "fields": [
@@ -440,7 +437,7 @@ def test_compiled_codecs_match_interpreters_exactly():
     ["null", "null"],            # no value branch
 ])
 def test_compiled_encoder_rejects_non_optional_unions(union):
-    from ticdc_spark.codec.debezium_avro import compile_avro_encoder
+    from ticdc_spark.codec.avro import compile_avro_encoder
 
     schema = {"type": "record", "name": "T", "fields": [
         {"name": "u", "type": union}]}

@@ -58,6 +58,18 @@ def test_stdlib_roundtrip(codec, data):
     _roundtrip(codec, data)
 
 
+def test_gzip_compresses_at_level_6():
+    """gzip runs at zlib's and Kafka clients' level 6: the header's XFL
+    byte is 0 (level 9 writes 2, level 1 writes 4), and the bytes equal
+    the stdlib's at that level."""
+    import gzip
+
+    data = b"abcdefgh" * 1000 + bytes(range(256))
+    out = compress("gzip", data)
+    assert out[8] == 0
+    assert out == gzip.compress(data, compresslevel=6, mtime=0)
+
+
 def test_lz4_compresses_repetitive_input():
     data = b"abcdefgh" * 1000
     assert len(compress("lz4", data)) < len(data) // 10

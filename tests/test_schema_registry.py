@@ -17,6 +17,7 @@ from ticdc_spark.codec.schema_registry import (
     InMemoryConfluentRegistry,
     InMemoryTransport,
     RegistryError,
+    parse_msg_header,
     registry_http_server,
     topic_name_to_schema_subject,
 )
@@ -164,13 +165,21 @@ def test_glue_missing_registry_rejected():
 # -- integration with the avro schema generator ----------------------------
 
 def test_registry_consistent_with_avro_binary_envelope():
-    """The header the manager caches must byte-match the Confluent
-    envelope prefix `encode_record` writes (`codec/avro_binary.py`)."""
-    from ticdc_spark.codec.avro_binary import encode_record
+    """The header the manager caches is the Confluent envelope prefix of
+    an encoded message, and ``parse_msg_header`` reads it back."""
+    from ticdc_spark.codec.avro_protocol import encode_row_key
 
     mgr, _ = _mgr()
     sid = mgr.register("cdc_test_t1-value", SCHEMA_A)
     header = mgr.get_msg_header(sid)
-    rec = encode_record({"id": 5}, ["id"], {"id": "long"}, ("id",),
-                        schema_id=sid)
-    assert rec[:5] == header
+    assert parse_msg_header(header + b"\x0a") == (sid, 5)
+    rec = encode_row_key(mgr, "cdc_test_t1", "test", "t1", {"id": 5})
+    _, key_header = mgr.get_cached_or_register(
+        "cdc_test_t1-key", 1, lambda: pytest.fail("cached"))
+    assert rec[:5] == key_header and rec[5:] == b"\x0a"
+    glue = GlueSchemaManager("default")
+    vid = glue.register("t", SCHEMA_A)
+    assert parse_msg_header(glue.get_msg_header(vid)) == (vid, 18)
+    for bad in (b"", b"\x00\x00", b"\x01\x00\x00\x00\x01", b"\x03\x00"):
+        with pytest.raises(ValueError, match="bad confluent envelope"):
+            parse_msg_header(bad)

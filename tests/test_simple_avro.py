@@ -8,12 +8,8 @@ from __future__ import annotations
 
 import pytest
 
-from ticdc_spark.codec.simple_avro import (
-    decode_message,
-    decode_value,
-    encode_message,
-    encode_value,
-)
+from ticdc_spark.codec.avro import avro_decode, avro_encode
+from ticdc_spark.codec.simple_avro import decode_message, encode_message
 
 _N = "com.pingcap.simple.avro."
 
@@ -118,11 +114,12 @@ def test_trailing_bytes_rejected():
 
 
 def test_empty_map_and_array_encode_as_zero_block():
-    assert encode_value({}, {"type": "map", "values": ["null", "long"]}) \
+    assert avro_encode({}, {"type": "map", "values": ["null", "long"]},
+                       {}) == b"\x00"
+    assert avro_encode([], {"type": "array", "items": "string"}, {}) \
         == b"\x00"
-    assert encode_value([], {"type": "array", "items": "string"}) == b"\x00"
-    v, pos = decode_value(b"\x00", 0, {"type": "map",
-                                       "values": ["null", "long"]})
+    v, pos = avro_decode(b"\x00", 0, {"type": "map",
+                                      "values": ["null", "long"]}, {})
     assert v == {} and pos == 1
 
 

@@ -1,14 +1,14 @@
-"""avro encoder (SURVEY §2.11) — JSON encoding + gated binary path.
+"""avro-json: the Avro JSON encoding of a changelog row (SURVEY §2.11).
 
 Reference: `pkg/sink/codec/avro/arvo.go:267-601` — per-table Avro
 schemas with union types; schema-registry integration.
 
-This container has no spark-avro jar, so the default output is the
-**Avro JSON encoding** (spec §JSON Encoding: union values appear as
-``{"branch": value}``, e.g. ``{"long": 5}`` / ``null``) — deterministic
+This is the debug twin of the binary ``avro`` protocol
+(`codec/avro_protocol.py`): the **Avro JSON encoding** (spec §JSON
+Encoding: union values appear as ``{"branch": value}``, e.g.
+``{"long": 5}`` / ``null``) built as column algebra — deterministic
 strings, oracle-checkable, and exactly what a schema-registry debug
-consumer shows. When the jar is present (`try_to_avro`), the same
-record column feeds ``to_avro`` for the binary wire path.
+consumer shows.
 """
 
 from __future__ import annotations
@@ -66,75 +66,3 @@ def encode_avro_json(cl: DataFrame) -> DataFrame:
         F.lit("}"),
     )
     return cl.withColumn("value", value)
-
-
-def try_to_avro(cl: DataFrame, column: str = "after"):
-    """Binary Avro via spark-avro when the jar is on the classpath."""
-    try:
-        from pyspark.sql.avro.functions import to_avro
-
-        out = cl.withColumn("value", to_avro(F.col(column)))
-        out.limit(1).collect()  # force resolution; raises if jar absent
-        return out
-    except Exception:
-        return None
-
-
-# -- schema-registry documents ----------------------------------------------
-_SPARK_TO_AVRO = {
-    "long": "long", "bigint": "long", "int": "int", "integer": "int",
-    "double": "double", "float": "float", "string": "string",
-    "binary": "bytes", "date": "int", "boolean": "boolean",
-}
-
-
-def avro_schema_document(
-    schema_name: str,
-    table_name: str,
-    payload: StructType,
-    mysql_types: dict[str, str],
-    pk_fields: tuple[str, ...] = ("id",),
-    keyspace: str = "default",
-) -> list[dict]:
-    """The Confluent-registry documents the avro encoder registers per
-    table (`avro/arvo.go:352-407` columns2AvroSchema + subjects
-    `helper.go:27-28,143`): one ``<topic>-value`` record over all
-    columns and one ``<topic>-key`` record over the handle key. Handle
-    columns are NOT NULL (direct type); others are ``["null", T]`` with
-    ``default: null``; every leaf carries
-    ``connect.parameters.tidb_type`` (`helper.go:106-109,32`).
-
-    Plan-time metadata, computed once per (table, schema version) on
-    the driver — exactly the cardinality the reference's registry calls
-    have; nothing per-row."""
-    import json
-
-    def field(f):
-        leaf = {
-            "type": _SPARK_TO_AVRO[f.dataType.simpleString()],
-            "connect.parameters": {
-                "tidb_type": mysql_types[f.name].upper()
-            },
-        }
-        if f.name in pk_fields:
-            return {"name": f.name, "type": leaf}
-        return {"name": f.name, "type": ["null", leaf], "default": None}
-
-    topic = f"cdc_{schema_name}_{table_name}"
-    namespace = f"{keyspace}.{schema_name}"
-    docs = []
-    for suffix, fields in (
-        ("-value", list(payload.fields)),
-        ("-key", [f for f in payload.fields if f.name in pk_fields]),
-    ):
-        body = {
-            "type": "record",
-            "name": table_name,
-            "namespace": namespace,
-            "fields": [field(f) for f in fields],
-        }
-        docs.append({
-            "subject": topic + suffix,
-            "schema_json": json.dumps(body, separators=(",", ":")),
-        })
-    return docs

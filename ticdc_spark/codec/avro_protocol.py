@@ -1,9 +1,11 @@
 """Native ``avro`` protocol — per-table Confluent-binary messages.
 
 Reference: `pkg/sink/codec/avro/arvo.go` (BatchEncoder) + `helper.go`.
-The JSON-encoding twin stays in `codec/avro_codec.py` (it predates this
-module and remains the registered debug representation); this module is
-the real wire shape:
+The Avro JSON-encoding debug twin (protocol ``avro-json``) is
+`codec/avro_codec.py`; this module is the real wire shape, the one
+builder of table schemas (the registry documents of
+``avro_schema_document`` and the flat-record path come from it too), and
+its bytes come from the shared Avro codec (`codec/avro.py`):
 
 - value schema (`columns2AvroSchema` :352-406): record named
   ``SanitizeName(table)`` in namespace
@@ -23,27 +25,30 @@ the real wire shape:
 - DELETE value (`encodeValue` :128-141): a Kafka tombstone (None)
   unless enable-tidb-extension AND avro-enable-watermark, in which
   case the 9-byte ``deleteByte(3) | commitTs u64 BE`` marker.
-- envelope = confluent header + avro binary (`toEnvelope` :709-720).
+- envelope = registry header + avro binary (`toEnvelope` :709-720); the
+  header is the schema manager's (`codec/schema_registry.py`).
 """
 
 from __future__ import annotations
 
 import json
 
-from ticdc_spark.codec.debezium_avro import (
-    avro_decode,
-    avro_encode,
+from ticdc_spark.codec.avro import (
     compile_avro_decoder,
     compile_avro_encoder,
+    read_whole,
     sanitize_name,
 )
-
-_ = (avro_decode, avro_encode)  # re-exported reference interpreters
+from ticdc_spark.codec.schema_registry import (
+    ConfluentSchemaManager,
+    GlueSchemaManager,
+    parse_msg_header,
+)
 
 # compiled encoders keyed by schema-dict identity (sound because the
 # entry holds a strong ref to the schema, so its id cannot be reused
-# while the entry lives; the memoized default-column schemas above are
-# stable objects, customs recompile after an eviction)
+# while the entry lives; the memoized schemas below are stable objects,
+# so each table version compiles once)
 _ENCODER_MEMO: dict = {}
 
 
@@ -172,64 +177,130 @@ def mysql_col(name: str, mysql_type: str, not_null: bool = False,
     raise ValueError(f"unknown mysql type: {mysql_type}")
 
 
-# the per-row encoders below rebuild these schema dicts on every call
-# (guide §4.5: heavyweight init per row); the dicts are pure functions
-# of their arguments, so memoize the DEFAULT-columns shape — column
-# tuples are dicts (unhashable), so the cache keys on the module
-# default by identity and custom column sets fall through to a rebuild.
+# the per-row encoders below would rebuild these schema dicts on every
+# call (guide §4.5: heavyweight init per row); the dicts are pure
+# functions of their arguments, so memoize them per column-meta OBJECT
+# (by identity, holding a strong ref so the id cannot be reused): the
+# module default and a DataFrame encoder's frame-derived metas each
+# build once per table.
 # FROZEN CONTRACT: table_value_schema/table_key_schema return the
-# memoized dict ITSELF — callers must treat it as immutable (mutating
-# it would corrupt every later encode of that table).  Callers that
-# need to extend a schema must copy.deepcopy it first.
+# memoized dict ITSELF, and a column-meta tuple must not change after
+# its first use — callers must treat both as immutable (mutating either
+# would corrupt every later encode of that table).  Callers that need to
+# extend a schema must copy.deepcopy it first.
 _SCHEMA_MEMO: dict = {}
+
+
+def _memoized(key: tuple, columns, build) -> dict:
+    hit = _SCHEMA_MEMO.get(key)
+    if hit is not None and hit[0] is columns:
+        return hit[1]
+    out = build()
+    if len(_SCHEMA_MEMO) > 1024:
+        _SCHEMA_MEMO.clear()
+    _SCHEMA_MEMO[key] = (columns, out)
+    return out
 
 
 def table_value_schema(schema_name: str, table_name: str,
                        columns=PAYLOAD_AVRO_COLUMNS,
                        tidb_extension: bool = True,
                        keyspace: str = "default") -> dict:
-    memo_key = None
-    if columns is PAYLOAD_AVRO_COLUMNS:
-        memo_key = ("v", schema_name, table_name, tidb_extension, keyspace)
-        got = _SCHEMA_MEMO.get(memo_key)
-        if got is not None:
-            return got
-    top = {
-        "type": "record",
-        "name": sanitize_name(table_name),
-        "namespace": avro_namespace(keyspace, schema_name),
-        "fields": [_column_field(c) for c in columns],
-    }
-    if tidb_extension:
-        top["fields"] += [
-            {"name": TIDB_OP, "type": "string", "default": ""},
-            {"name": TIDB_COMMIT_TS, "type": "long", "default": 0},
-            {"name": TIDB_PHYSICAL_TIME, "type": "long", "default": 0},
-        ]
-    if memo_key is not None:
-        _SCHEMA_MEMO[memo_key] = top
-    return top
+    def build():
+        top = {
+            "type": "record",
+            "name": sanitize_name(table_name),
+            "namespace": avro_namespace(keyspace, schema_name),
+            "fields": [_column_field(c) for c in columns],
+        }
+        if tidb_extension:
+            top["fields"] += [
+                {"name": TIDB_OP, "type": "string", "default": ""},
+                {"name": TIDB_COMMIT_TS, "type": "long", "default": 0},
+                {"name": TIDB_PHYSICAL_TIME, "type": "long", "default": 0},
+            ]
+        return top
+
+    return _memoized(("v", id(columns), schema_name, table_name,
+                      tidb_extension, keyspace), columns, build)
 
 
 def table_key_schema(schema_name: str, table_name: str,
                      columns=PAYLOAD_AVRO_COLUMNS,
                      keyspace: str = "default") -> dict:
-    memo_key = None
-    if columns is PAYLOAD_AVRO_COLUMNS:
-        memo_key = ("k", schema_name, table_name, keyspace)
-        got = _SCHEMA_MEMO.get(memo_key)
-        if got is not None:
-            return got
-    out = {
-        "type": "record",
-        "name": sanitize_name(table_name),
-        "namespace": avro_namespace(keyspace, schema_name),
-        "fields": [_column_field(c) for c in columns
-                   if c.get("handle")],
-    }
-    if memo_key is not None:
-        _SCHEMA_MEMO[memo_key] = out
-    return out
+    return _memoized(
+        ("k", id(columns), schema_name, table_name, keyspace), columns,
+        lambda: {
+            "type": "record",
+            "name": sanitize_name(table_name),
+            "namespace": avro_namespace(keyspace, schema_name),
+            "fields": [_column_field(c) for c in columns
+                       if c.get("handle")],
+        })
+
+
+# Spark payload types as Avro primitives, and the TiDB type a column
+# reports when no MySQL type is given
+_SPARK_TO_AVRO = {
+    "long": "long", "bigint": "long", "int": "int", "integer": "int",
+    "double": "double", "float": "float", "string": "string",
+    "binary": "bytes", "date": "int", "boolean": "boolean",
+}
+_SPARK_TO_TIDB = {"string": "varchar", "binary": "blob"}
+# Python value per Avro primitive, for Arrow-batched encoders
+_TO_NATIVE = {"long": int, "int": int, "double": float, "float": float,
+              "string": str, "bytes": bytes, "boolean": bool}
+
+
+def struct_columns(payload, mysql_types: dict | None = None,
+                   pk_fields: tuple[str, ...] = ("id",)) -> tuple:
+    """Column metas (see :func:`_column_field`) for a Spark payload
+    struct: the Avro primitive of each field's Spark type, ``tidb_type``
+    from ``mysql_types`` (else from the Spark type), and the
+    ``pk_fields`` as NOT NULL handle columns.  On the events payload this
+    equals ``PAYLOAD_AVRO_COLUMNS``."""
+    out = []
+    for f in payload.fields:
+        t = f.dataType.simpleString()
+        col = {"name": f.name, "avro": _SPARK_TO_AVRO[t],
+               "tidb_type": (mysql_types or {}).get(
+                   f.name, _SPARK_TO_TIDB.get(t, t)).upper()}
+        if f.name in pk_fields:
+            col.update(not_null=True, handle=True)
+        out.append(col)
+    return tuple(out)
+
+
+def avro_schema_document(
+    schema_name: str,
+    table_name: str,
+    payload,
+    mysql_types: dict[str, str],
+    pk_fields: tuple[str, ...] = ("id",),
+    keyspace: str = "default",
+) -> list[dict]:
+    """The Confluent-registry documents the avro encoder registers per
+    table (`avro/arvo.go:352-407` columns2AvroSchema + subjects
+    `helper.go:27-28,143`): one ``<topic>-value`` record over all
+    columns (no TiDB extension) and one ``<topic>-key`` record over the
+    handle key, built by :func:`table_value_schema` /
+    :func:`table_key_schema` from :func:`struct_columns`.
+
+    Plan-time metadata, computed once per (table, schema version) on
+    the driver — exactly the cardinality the reference's registry calls
+    have; nothing per-row."""
+    columns = struct_columns(payload, mysql_types, pk_fields)
+    topic = f"cdc_{schema_name}_{table_name}"
+    return [
+        {"subject": topic + suffix,
+         "schema_json": json.dumps(schema, separators=(",", ":"))}
+        for suffix, schema in (
+            ("-value", table_value_schema(schema_name, table_name, columns,
+                                          False, keyspace)),
+            ("-key", table_key_schema(schema_name, table_name, columns,
+                                      keyspace)),
+        )
+    ]
 
 
 def _register(mgr, subject: str, schema: dict, version: int = 1) -> bytes:
@@ -282,9 +353,7 @@ def decode_message(mgr, subject: str, data: bytes) -> dict | None:
         return None
     if len(data) == 9 and data[0] == DELETE_BYTE:
         return {"_delete_commit_ts": int.from_bytes(data[1:], "big")}
-    if len(data) < 5 or data[0] != 0:
-        raise ValueError("bad confluent envelope")
-    schema_id = int.from_bytes(data[1:5], "big")
+    schema_id, pos = parse_msg_header(data)
     parsed = getattr(mgr, "_parsed_schemas", None)
     if parsed is None:
         parsed = mgr._parsed_schemas = {}
@@ -292,81 +361,173 @@ def decode_message(mgr, subject: str, data: bytes) -> dict | None:
     if dec is None:
         schema = json.loads(mgr.lookup(subject, schema_id))
         dec = parsed[schema_id] = compile_avro_decoder(schema, {})
-    native, pos = dec(data, 5)
-    if pos != len(data):
-        raise ValueError(f"trailing bytes: {len(data) - pos}")
-    return native
+    return read_whole(dec, data, pos, "avro")
 
 
 def encode_avro_binary_df(cl, tidb_extension: bool = True,
                           avro_enable_watermark: bool = False,
-                          keyspace: str = "default"):
-    """DataFrame encoder (ENCODERS["avro-confluent"]): binary key/value
-    columns; Arrow-batched, per-batch in-memory registry (deployments
-    swap in the REST/Glue managers from codec/schema_registry.py)."""
+                          keyspace: str = "default",
+                          pk_fields: tuple[str, ...] = ("id",)):
+    """DataFrame encoder (``ENCODERS["avro"]``): binary key/value
+    columns over the columns of the frame's ``after`` struct
+    (:func:`struct_columns`, ``pk_fields`` the handle); Arrow-batched,
+    per-batch in-memory registry (deployments swap in the REST/Glue
+    managers from codec/schema_registry.py)."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    names = [c["name"] for c in PAYLOAD_AVRO_COLUMNS]
+    columns = struct_columns(cl.schema["after"].dataType,
+                             pk_fields=pk_fields)
 
-    def _make(mode: str):
-        def conv(schema_name, table_name, op, commit_ts, c_id, c_val,
-                 c_k):
-            from ticdc_spark.codec.schema_registry import (
-                ConfluentSchemaManager,
-                InMemoryConfluentRegistry,
-                InMemoryTransport,
-            )
+    def _make(mode: str, cols: tuple):
+        native = [(c["name"], _TO_NATIVE[c["avro"]]) for c in cols]
 
-            mgr = ConfluentSchemaManager(
-                "http://registry.local",
-                transport=InMemoryTransport(InMemoryConfluentRegistry()))
+        def conv(schema_name, table_name, op, commit_ts, image):
+            mgr = ConfluentSchemaManager.in_memory()
             # plain lists once per batch instead of .iloc per cell —
-            # the 14 Series.iloc calls per row otherwise cost more than
-            # the avro encode itself (guide §4.2: keep the per-row loop
+            # per-row Series.iloc calls otherwise cost more than the
+            # avro encode itself (guide §4.2: keep the per-row loop
             # over native containers)
             sn_l, tn_l = schema_name.tolist(), table_name.tolist()
             op_l, cts_l = op.tolist(), commit_ts.tolist()
-            cols_l = [c.tolist() for c in (c_id, c_val, c_k)]
+            cols_l = [(n, [None if pd.isna(v) else to(v)
+                           for v in image[n].tolist()])
+                      for n, to in native]
             out = []
             for i in range(len(op_l)):
-                row = {}
-                for j, n in enumerate(names):
-                    v = cols_l[j][i]
-                    row[n] = None if pd.isna(v) else (
-                        float(v) if n == "val" else int(v))
+                row = {n: vals[i] for n, vals in cols_l}
                 topic = f"{sn_l[i]}.{tn_l[i]}"
                 if mode == "key":
                     out.append(encode_row_key(
-                        mgr, topic, sn_l[i],
-                        tn_l[i], row, keyspace=keyspace))
+                        mgr, topic, sn_l[i], tn_l[i], row, columns,
+                        keyspace=keyspace))
                 else:
                     out.append(encode_row_value(
-                        mgr, topic, sn_l[i],
-                        tn_l[i], row, op_l[i],
-                        int(cts_l[i]),
+                        mgr, topic, sn_l[i], tn_l[i], row, op_l[i],
+                        int(cts_l[i]), columns,
                         tidb_extension=tidb_extension,
                         avro_enable_watermark=avro_enable_watermark,
                         keyspace=keyspace))
             return pd.Series(out, dtype=object)
 
         conv.__annotations__ = {
-            k: pd.Series for k in
-            ["schema_name", "table_name", "op", "commit_ts",
-             "c_id", "c_val", "c_k", "return"]}
+            "schema_name": pd.Series, "table_name": pd.Series,
+            "op": pd.Series, "commit_ts": pd.Series,
+            "image": pd.DataFrame, "return": pd.Series}
         return pandas_udf(conv, "binary")
 
     # key uses the pre-image for deletes; value uses the after image
     img_key = F.when(F.col("op") == "D", F.col("before")) \
         .otherwise(F.col("after"))
-    key_args = [F.col("schema_name"), F.col("table_name"), F.col("op"),
-                F.col("commit_ts")] + [img_key.getField(n) for n in names]
-    val_args = [F.col("schema_name"), F.col("table_name"), F.col("op"),
-                F.col("commit_ts")] + [F.col("after").getField(n)
-                                       for n in names]
-    return (cl.withColumn("key", _make("key")(*key_args))
-            .withColumn("value", _make("value")(*val_args)))
+    handle = tuple(c for c in columns if c.get("handle"))
+    meta = [F.col("schema_name"), F.col("table_name"), F.col("op"),
+            F.col("commit_ts")]
+    return (cl.withColumn("key", _make("key", handle)(*meta, F.struct(*[
+                img_key.getField(c["name"]).alias(c["name"])
+                for c in handle])))
+            .withColumn("value", _make("value", columns)(*meta, F.struct(*[
+                F.col("after").getField(c["name"]).alias(c["name"])
+                for c in columns]))))
+
+
+# -- flat-record path: key/value Avro records over ``before_*``/``after_*``
+# columns with caller-chosen registry ids, in the Confluent or the Glue
+# envelope.  The reference's MQ oracle strategy (SURVEY §5: the
+# kafka-consumer decode-and-apply path is the oracle) drives it through
+# a consumer round trip.
+_PASS = ["op", "commit_ts", "seq"]
+
+
+def _flat_schemas(fields, types: dict, pk_fields) -> tuple[dict, dict]:
+    """(key, value) records: handle fields bare, the rest ``["null", T]``."""
+    columns = tuple(
+        {"name": f, "avro": types[f], "tidb_type": types[f].upper(),
+         "not_null": f in pk_fields, "handle": f in pk_fields}
+        for f in fields)
+    return (table_key_schema("", "flat", columns),
+            table_value_schema("", "flat", columns, tidb_extension=False))
+
+
+def encode_avro_binary(flat, fields: list[str], types: dict[str, str],
+                       pk_fields: tuple[str, ...], key_schema_id: int = 2,
+                       value_schema_id: int = 1,
+                       registry: str = "confluent"):
+    """Flat changelog (``before_*``/``after_*`` columns) → avro-binary
+    ``key``/``value`` in the chosen registry envelope. Delete: key from
+    pre image, value null (tombstone). ``registry="glue"`` derives a
+    deterministic schema-version UUID per message class from the
+    numeric id (stand-in for the registry's assigned UUID)."""
+    import hashlib
+
+    from pyspark.sql.types import StructType
+
+    ids = (key_schema_id, value_schema_id)
+    if registry == "glue":
+        khdr, vhdr = (GlueSchemaManager.get_msg_header(
+            hashlib.md5(f"schema:{i}".encode()).hexdigest()) for i in ids)
+    elif registry == "confluent":
+        khdr, vhdr = (ConfluentSchemaManager.get_msg_header(i) for i in ids)
+    else:
+        raise ValueError(f"unknown registry: {registry}")
+    out_schema = StructType([flat.schema[c] for c in _PASS]) \
+        .add("key", "binary").add("value", "binary")
+    key_schema, value_schema = _flat_schemas(fields, types, pk_fields)
+    ffields = list(fields)
+
+    def _encode_batches(batches):
+        import pandas as pd
+
+        kenc = compile_avro_encoder(key_schema, {})
+        venc = compile_avro_encoder(value_schema, {})
+        for pdf in batches:
+            images = {img: [[None if pd.isna(v) else v
+                             for v in pdf[f"{img}_{f}"].tolist()]
+                            for f in ffields]
+                      for img in ("before", "after")}
+            keys, vals = [], []
+            for i, op in enumerate(pdf["op"].tolist()):
+                cols = images["before" if op == "D" else "after"]
+                rec = {f: c[i] for f, c in zip(ffields, cols)}
+                keys.append(khdr + kenc(rec))
+                vals.append(None if op == "D" else vhdr + venc(rec))
+            out = pdf[_PASS].copy()
+            out["key"] = keys
+            out["value"] = vals
+            yield out
+
+    return flat.mapInPandas(_encode_batches, schema=out_schema)
+
+
+def decode_avro_binary(encoded, fields: list[str], types: dict[str, str],
+                       pk_fields: tuple[str, ...]):
+    """Consumer side: envelope bytes → typed columns. Tombstoned deletes
+    recover only the handle key; other columns come back NULL."""
+    from pyspark.sql.types import StructType
+
+    out_schema = StructType([encoded.schema[c] for c in _PASS])
+    for f in fields:
+        out_schema.add(f, types[f])
+    key_schema, value_schema = _flat_schemas(fields, types, pk_fields)
+    ffields = list(fields)
+
+    def _decode_batches(batches):
+        import pandas as pd
+
+        kdec = compile_avro_decoder(key_schema, {})
+        vdec = compile_avro_decoder(value_schema, {})
+        for pdf in batches:
+            rows = []
+            passed = zip(*(pdf[c].tolist() for c in _PASS))
+            for pas, k, v in zip(passed, pdf["key"].tolist(),
+                                 pdf["value"].tolist()):
+                buf, dec = (bytes(k), kdec) if v is None else (bytes(v), vdec)
+                _, pos = parse_msg_header(buf)
+                rec = read_whole(dec, buf, pos, "avro")
+                rows.append([*pas, *(rec.get(f) for f in ffields)])
+            yield pd.DataFrame(rows, columns=_PASS + ffields)
+
+    return encoded.mapInPandas(_decode_batches, schema=out_schema)
 
 
 # -- non-row events (`encoder.go:105-147`): magic-byte framed ----------------

@@ -30,18 +30,31 @@ Conversion rules (avro.go:669-778):
   native carries raw bytes.
 
 Field names are sanitized to Avro rules through the same
-``sanitize_name`` the Avro-binary codec uses.
+``sanitize_name`` the native ``avro`` protocol uses, and the bytes come
+from the shared Avro codec (`codec/avro.py`): its compiler on the per-row
+paths, its interpreter for one-off messages.
 """
 
 from __future__ import annotations
 
 import base64
 import json
-from functools import lru_cache
-import struct
 from decimal import Decimal
 
-from ticdc_spark.codec.avro_binary import zigzag_decode, zigzag_encode
+from ticdc_spark.codec.avro import (
+    avro_decode,
+    avro_encode,
+    collect_named_schemas,
+    compile_avro_decoder,
+    compile_avro_encoder,
+    read_whole,
+    resolve_named,
+    sanitize_name,
+)
+from ticdc_spark.codec.schema_registry import (
+    ConfluentSchemaManager,
+    parse_msg_header,
+)
 
 DECIMAL_CONNECT_NAME = "org.apache.kafka.connect.data.Decimal"
 KEY_SUFFIX = "-key"
@@ -57,19 +70,6 @@ _AVRO_TO_CONNECT = {
     "int": "int32", "long": "int64", "float": "float",
     "double": "double",
 }
-
-
-@lru_cache(maxsize=4096)
-def sanitize_name(name: str) -> str:
-    """common.SanitizeName (`codec/common/helper.go:423-447`): invalid
-    chars replace with '_', a leading digit gains a '_' prefix; the
-    empty string stays empty (getAvroNamespace branches on that).
-    Memoized: the per-row encode path calls it once per field name and
-    the name universe is the schema's, not the data's."""
-    out = "".join(c if c.isalnum() or c == "_" else "_" for c in name)
-    if out and out[0].isdigit():
-        out = "_" + out
-    return out
 
 
 def _sanitize_full_name(full: str) -> str:
@@ -200,313 +200,6 @@ class ConnectToAvro:
         raise ValueError(f"unsupported connect type: {typ}")
 
 
-def collect_named_schemas(schema, named: dict | None = None) -> dict:
-    """collectAvroNamedSchemas: fullname → record schema dict."""
-    if named is None:
-        named = {}
-    if isinstance(schema, dict):
-        if schema.get("type") == "record":
-            full = schema["name"]
-            if schema.get("namespace"):
-                full = schema["namespace"] + "." + schema["name"]
-            named[full] = schema
-            for f in schema["fields"]:
-                collect_named_schemas(f["type"], named)
-        elif schema.get("type") == "array":
-            collect_named_schemas(schema["items"], named)
-    elif isinstance(schema, list):
-        for b in schema:
-            collect_named_schemas(b, named)
-    return named
-
-
-def _resolve(schema, named: dict):
-    if isinstance(schema, str) and schema in named:
-        return named[schema]
-    return schema
-
-
-def _decimal_to_bytes(value: Decimal, scale: int) -> bytes:
-    unscaled = int(value.scaleb(scale).to_integral_value())
-    n = max(1, (unscaled.bit_length() + 8) // 8)
-    return unscaled.to_bytes(n, "big", signed=True)
-
-
-def _bytes_to_decimal_str(raw: bytes, scale: int) -> str:
-    unscaled = int.from_bytes(raw, "big", signed=True)
-    d = Decimal(unscaled).scaleb(-scale)
-    return f"{d:.{scale}f}" if scale > 0 else str(d)
-
-
-def avro_encode(value, schema, named: dict) -> bytes:
-    """Avro binary for a converted schema tree (spec binary encoding)."""
-    schema = _resolve(schema, named)
-    if isinstance(schema, list):  # union — all are ["null", T] here
-        if value is None:
-            return zigzag_encode(schema.index("null"))
-        for i, branch in enumerate(schema):
-            if branch != "null":
-                return zigzag_encode(i) + avro_encode(value, branch, named)
-        raise ValueError("union has no non-null branch")
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            out = bytearray()
-            for f in schema["fields"]:
-                out += avro_encode(value.get(f["name"]), f["type"], named)
-            return bytes(out)
-        if t == "array":
-            out = bytearray()
-            if value:
-                out += zigzag_encode(len(value))
-                for item in value:
-                    out += avro_encode(item, schema["items"], named)
-            out += zigzag_encode(0)
-            return bytes(out)
-        if t == "bytes" and schema.get("logicalType") == "decimal":
-            raw = _decimal_to_bytes(Decimal(str(value)), schema["scale"])
-            return zigzag_encode(len(raw)) + raw
-        schema = t  # annotated primitive
-    if schema == "null":
-        return b""
-    if schema == "boolean":
-        return bytes([1 if value else 0])
-    if schema in ("int", "long"):
-        return zigzag_encode(int(value))
-    if schema == "float":
-        return struct.pack("<f", float(value))
-    if schema == "double":
-        return struct.pack("<d", float(value))
-    if schema == "string":
-        raw = value.encode("utf-8")
-        return zigzag_encode(len(raw)) + raw
-    if schema == "bytes":
-        raw = bytes(value)
-        return zigzag_encode(len(raw)) + raw
-    raise ValueError(f"unknown avro schema: {schema!r}")
-
-
-def avro_decode(buf: bytes, pos: int, schema, named: dict):
-    schema = _resolve(schema, named)
-    if isinstance(schema, list):
-        i, pos = zigzag_decode(buf, pos)
-        return avro_decode(buf, pos, schema[i], named)
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            out = {}
-            for f in schema["fields"]:
-                out[f["name"]], pos = avro_decode(buf, pos, f["type"],
-                                                  named)
-            return out, pos
-        if t == "array":
-            items = []
-            while True:
-                n, pos = zigzag_decode(buf, pos)
-                if n == 0:
-                    break
-                if n < 0:
-                    _, pos = zigzag_decode(buf, pos)
-                    n = -n
-                for _ in range(n):
-                    v, pos = avro_decode(buf, pos, schema["items"], named)
-                    items.append(v)
-            return items, pos
-        if t == "bytes" and schema.get("logicalType") == "decimal":
-            n, pos = zigzag_decode(buf, pos)
-            return (_bytes_to_decimal_str(buf[pos:pos + n],
-                                          schema["scale"]), pos + n)
-        schema = t
-    if schema == "null":
-        return None, pos
-    if schema == "boolean":
-        return buf[pos] == 1, pos + 1
-    if schema in ("int", "long"):
-        return zigzag_decode(buf, pos)
-    if schema == "float":
-        return struct.unpack_from("<f", buf, pos)[0], pos + 4
-    if schema == "double":
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if schema == "string":
-        n, pos = zigzag_decode(buf, pos)
-        return buf[pos:pos + n].decode("utf-8"), pos + n
-    if schema == "bytes":
-        n, pos = zigzag_decode(buf, pos)
-        return bytes(buf[pos:pos + n]), pos + n
-    raise ValueError(f"unknown avro schema: {schema!r}")
-
-
-# -- compiled per-schema codecs (guide §4.5: pay the schema dispatch
-# once per table version, not once per value).  Each compiler walks the
-# schema tree a single time and returns a closure tree; outputs are
-# byte/value-identical to the interpreters above (pinned by tests).
-
-
-def compile_avro_encoder(schema, named: dict):
-    """avro_encode specialized to ``schema`` -> fn(value) -> bytes."""
-    schema = _resolve(schema, named)
-    if isinstance(schema, list):  # union: only ["null", T] is encodable
-        if len(schema) != 2 or schema.count("null") != 1:
-            raise ValueError(
-                f"only [null, T] unions are supported, got {schema!r}")
-        null_tag = zigzag_encode(schema.index("null"))
-        bi = 1 - schema.index("null")
-        branch = schema[bi]
-        tag = zigzag_encode(bi)
-        enc = compile_avro_encoder(branch, named)
-        return lambda v: null_tag if v is None else tag + enc(v)
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            fields = [(f["name"], compile_avro_encoder(f["type"], named))
-                      for f in schema["fields"]]
-
-            def _record(v, _fields=fields):
-                return b"".join(e(v.get(n)) for n, e in _fields)
-
-            return _record
-        if t == "array":
-            item = compile_avro_encoder(schema["items"], named)
-            zero = zigzag_encode(0)
-
-            def _array(v, _item=item, _zero=zero):
-                if not v:
-                    return _zero
-                return (zigzag_encode(len(v))
-                        + b"".join(_item(x) for x in v) + _zero)
-
-            return _array
-        if t == "bytes" and schema.get("logicalType") == "decimal":
-            scale = schema["scale"]
-
-            def _decimal(v, _scale=scale):
-                raw = _decimal_to_bytes(Decimal(str(v)), _scale)
-                return zigzag_encode(len(raw)) + raw
-
-            return _decimal
-        schema = t  # annotated primitive
-    if schema == "null":
-        return lambda v: b""
-    if schema == "boolean":
-        return lambda v: b"\x01" if v else b"\x00"
-    if schema in ("int", "long"):
-        return lambda v: zigzag_encode(int(v))
-    if schema == "float":
-        return lambda v: struct.pack("<f", float(v))
-    if schema == "double":
-        return lambda v: struct.pack("<d", float(v))
-    if schema == "string":
-
-        def _string(v):
-            raw = v.encode("utf-8")
-            return zigzag_encode(len(raw)) + raw
-
-        return _string
-    if schema == "bytes":
-
-        def _bytes(v):
-            raw = bytes(v)
-            return zigzag_encode(len(raw)) + raw
-
-        return _bytes
-    raise ValueError(f"unknown avro schema: {schema!r}")
-
-
-def compile_avro_decoder(schema, named: dict, to_connect: bool = False):
-    """avro_decode specialized to ``schema`` -> fn(buf, pos) ->
-    (value, pos).  With ``to_connect`` the closure fuses
-    avro_native_to_connect_payload in (record keys use connect.field,
-    bytes come back base64) so no intermediate native tree is built."""
-    schema = _resolve(schema, named)
-    if isinstance(schema, list):
-        branches = [compile_avro_decoder(b, named, to_connect)
-                    for b in schema]
-
-        def _union(buf, pos, _branches=branches):
-            i, pos = zigzag_decode(buf, pos)
-            return _branches[i](buf, pos)
-
-        return _union
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            fields = [(f.get("connect.field", f["name"]) if to_connect
-                       else f["name"],
-                       compile_avro_decoder(f["type"], named, to_connect))
-                      for f in schema["fields"]]
-
-            def _record(buf, pos, _fields=fields):
-                out = {}
-                for name, dec in _fields:
-                    out[name], pos = dec(buf, pos)
-                return out, pos
-
-            return _record
-        if t == "array":
-            item = compile_avro_decoder(schema["items"], named, to_connect)
-
-            def _array(buf, pos, _item=item):
-                items = []
-                while True:
-                    n, pos = zigzag_decode(buf, pos)
-                    if n == 0:
-                        break
-                    if n < 0:
-                        _, pos = zigzag_decode(buf, pos)
-                        n = -n
-                    for _ in range(n):
-                        v, pos = _item(buf, pos)
-                        items.append(v)
-                return items, pos
-
-            return _array
-        if t == "bytes" and schema.get("logicalType") == "decimal":
-            scale = schema["scale"]
-
-            def _decimal(buf, pos, _scale=scale):
-                n, pos = zigzag_decode(buf, pos)
-                return (_bytes_to_decimal_str(buf[pos:pos + n], _scale),
-                        pos + n)
-
-            return _decimal
-        schema = t
-    if schema == "null":
-        return lambda buf, pos: (None, pos)
-    if schema == "boolean":
-        return lambda buf, pos: (buf[pos] == 1, pos + 1)
-    if schema in ("int", "long"):
-        return zigzag_decode
-    if schema == "float":
-        return lambda buf, pos: (struct.unpack_from("<f", buf, pos)[0],
-                                 pos + 4)
-    if schema == "double":
-        return lambda buf, pos: (struct.unpack_from("<d", buf, pos)[0],
-                                 pos + 8)
-    if schema == "string":
-
-        def _string(buf, pos):
-            n, pos = zigzag_decode(buf, pos)
-            return buf[pos:pos + n].decode("utf-8"), pos + n
-
-        return _string
-    if schema == "bytes":
-        if to_connect:  # payload view renders bytes as base64 text
-
-            def _bytes_b64(buf, pos):
-                n, pos = zigzag_decode(buf, pos)
-                return (base64.standard_b64encode(
-                    buf[pos:pos + n]).decode("ascii"), pos + n)
-
-            return _bytes_b64
-
-        def _bytes(buf, pos):
-            n, pos = zigzag_decode(buf, pos)
-            return bytes(buf[pos:pos + n]), pos + n
-
-        return _bytes
-    raise ValueError(f"unknown avro schema: {schema!r}")
-
-
 def compile_connect_to_native(schema: dict):
     """ConnectToAvro().to_native specialized to ``schema`` -> fn(payload)
     -> native tree (sanitize_name and field dispatch paid once)."""
@@ -589,7 +282,7 @@ def compile_connect_to_native(schema: dict):
 
 
 def avro_to_connect_schema(schema, named: dict, field: str = "") -> dict:
-    schema = _resolve(schema, named)
+    schema = resolve_named(schema, named)
     if isinstance(schema, list):
         non_null = [b for b in schema if b != "null"]
         if len(non_null) != 1:
@@ -656,7 +349,7 @@ def _restore_connect_metadata(connect: dict, avro: dict) -> None:
 def avro_native_to_connect_payload(schema, native, named: dict):
     """Decoded native values → Connect-JSON payload values (bytes back
     to base64 strings, decimals already strings)."""
-    schema = _resolve(schema, named)
+    schema = resolve_named(schema, named)
     if native is None:
         return None
     if isinstance(schema, list):
@@ -718,15 +411,12 @@ def decode_debezium_avro_payload(data: bytes, schema_manager,
                                  subject: str) -> dict:
     """confluent header + binary → Debezium JSON message dict
     (avro_decoder.go toDebeziumJSON)."""
-    if len(data) < 5 or data[0] != 0:
-        raise ValueError("bad confluent envelope")
-    schema_id = struct.unpack_from(">I", data, 1)[0]
+    schema_id, pos = parse_msg_header(data)
     avro_schema = json.loads(schema_manager.lookup(subject, schema_id))
     named = collect_named_schemas(avro_schema)
-    native, pos = avro_decode(data, 5, avro_schema, named)
-    if pos != len(data):
-        raise ValueError(f"trailing bytes after avro value: "
-                         f"{len(data) - pos}")
+    native = read_whole(
+        lambda b, p: avro_decode(b, p, avro_schema, named), data, pos,
+        "debezium-avro")
     return {
         "schema": avro_to_connect_schema(avro_schema, named),
         "payload": avro_native_to_connect_payload(avro_schema, native,
@@ -766,16 +456,7 @@ def encode_debezium_avro_df(cl, cluster_id: str = "ticdc-spark"):
         def conv(json_col, topic):
             import json as _json
 
-            from ticdc_spark.codec.schema_registry import (
-                ConfluentSchemaManager,
-                InMemoryConfluentRegistry,
-                InMemoryTransport,
-            )
-
-            mgr = ConfluentSchemaManager(
-                "http://registry.local",
-                transport=InMemoryTransport(InMemoryConfluentRegistry()))
-            codec = DebeziumAvroCodecCache(mgr)
+            codec = DebeziumAvroCodecCache(ConfluentSchemaManager.in_memory())
             return pd.Series([
                 codec.encode(_json.loads(j), t, suffix)
                 for j, t in zip(json_col, topic)], dtype=object)
@@ -819,15 +500,7 @@ def debezium_avro_watermarks(watermarks, cluster_id: str = "ticdc-spark",
         def conv(json_col):
             import json as _json
 
-            from ticdc_spark.codec.schema_registry import (
-                ConfluentSchemaManager,
-                InMemoryConfluentRegistry,
-                InMemoryTransport,
-            )
-
-            mgr = ConfluentSchemaManager(
-                "http://registry.local",
-                transport=InMemoryTransport(InMemoryConfluentRegistry()))
+            mgr = ConfluentSchemaManager.in_memory()
             return pd.Series([
                 encode_debezium_avro_payload(_json.loads(j), "", suffix,
                                              mgr)
@@ -903,9 +576,7 @@ class DebeziumAvroCodecCache:
         return header + enc(to_native(payload))
 
     def decode(self, data: bytes, subject: str) -> dict:
-        if len(data) < 5 or data[0] != 0:
-            raise ValueError("bad confluent envelope")
-        schema_id = struct.unpack_from(">I", data, 1)[0]
+        schema_id, pos = parse_msg_header(data)
         ent = self._dec.get((subject, schema_id))
         if ent is None:
             avro_schema = json.loads(self.mgr.lookup(subject, schema_id))
@@ -917,8 +588,5 @@ class DebeziumAvroCodecCache:
                                         to_connect=True))
             self._dec[(subject, schema_id)] = ent
         connect, dec = ent
-        payload, pos = dec(data, 5)
-        if pos != len(data):
-            raise ValueError(f"trailing bytes after avro value: "
-                             f"{len(data) - pos}")
-        return {"schema": connect, "payload": payload}
+        return {"schema": connect,
+                "payload": read_whole(dec, data, pos, "debezium-avro")}

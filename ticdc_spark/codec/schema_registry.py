@@ -215,6 +215,15 @@ class ConfluentSchemaManager:
             raise RegistryError(
                 f"unexpected response from Schema Registry: {status} {text!r}")
 
+    @classmethod
+    def in_memory(cls, **kw) -> "ConfluentSchemaManager":
+        """A manager over a fresh in-process registry: the per-batch
+        registry of the Arrow-batched encoders (a deployment passes its
+        REST registry URL instead)."""
+        return cls("http://registry.local",
+                   transport=InMemoryTransport(InMemoryConfluentRegistry()),
+                   **kw)
+
     # -- retry loop (httpRetry) -------------------------------------------
     def _do(self, method: str, path: str, body: str | None) -> tuple[int, str]:
         headers = {"Accept": _ACCEPT}
@@ -478,3 +487,18 @@ class GlueSchemaManager:
     @property
     def registry_type(self) -> str:
         return "glue"
+
+
+def parse_msg_header(data: bytes) -> tuple[int | str, int]:
+    """Inverse of both managers' ``get_msg_header``: (schema ref, offset
+    of the Avro body).  A leading 0 is the Confluent header (4-byte
+    big-endian id); a leading 3 is the Glue header (compression byte,
+    16-byte schema-version UUID, `getGlueSchemaIDFromHeader`,
+    `glue_schema_registry.go:346-352`).  The ref is what the matching
+    manager's ``lookup`` takes."""
+    if len(data) >= 5 and data[0] == MAGIC_BYTE:
+        return int.from_bytes(data[1:5], "big"), 5
+    if len(data) >= 18 and data[0] == GLUE_HEADER_VERSION:
+        return str(_uuid.UUID(bytes=bytes(data[2:18]))), 18
+    raise ValueError("avro: bad confluent envelope (neither a Confluent "
+                     "nor a Glue registry header)")

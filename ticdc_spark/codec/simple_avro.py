@@ -3,27 +3,31 @@ shape for the self-describing protocol (`pkg/sink/codec/simple/avro.go`,
 schema `pkg/sink/codec/simple/message.json`; JSON twin in
 `simple_protocol.py`).
 
-A small generic Avro *binary* encoder/decoder (Avro 1.11 spec: zigzag
-varints, length-prefixed strings/bytes, field-order records, index-
-prefixed enums/unions, block-framed maps/arrays) drives the reference's
-``com.pingcap.simple.avro.Message`` schema, reproduced below field-for-
-field in declaration order (order is load-bearing: Avro binary carries
-no field names).  All four message kinds are supported: WATERMARK,
-BOOTSTRAP, DDL, DML.
+``SCHEMAS`` reproduces the reference's ``com.pingcap.simple.avro.Message``
+schema field-for-field in declaration order (order is load-bearing: Avro
+binary carries no field names), as Avro JSON records keyed by full name.
+Messages of all four kinds (WATERMARK, BOOTSTRAP, DDL, DML) encode and
+decode through the shared Avro interpreter (`codec/avro.py`), which
+resolves those names; the per-row DML path has its own compiled pair,
+pinned byte-identical to the interpreter.
 
 DataFrame path: Arrow-batched ``mapInPandas`` — byte assembly is not
 expressible as column algebra, and per-batch Python over Arrow is the
-sanctioned shape for wire codecs (same justification as
-`avro_binary.py:226`).
+sanctioned shape for wire codecs.
 """
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
-from ticdc_spark.codec.avro_binary import zigzag_decode, zigzag_encode
+from ticdc_spark.codec.avro import (
+    avro_decode,
+    avro_encode,
+    read_whole,
+    zigzag_decode,
+    zigzag_encode,
+)
 
 # -- the reference schema (message.json), declaration order preserved --------
 _N = "com.pingcap.simple.avro."
@@ -33,42 +37,48 @@ _VALUE_UNION = [
     _N + "Timestamp", _N + "UnsignedBigint",
 ]
 
+
+def _record(*fields) -> dict:
+    return {"type": "record",
+            "fields": [{"name": n, "type": t} for n, t in fields]}
+
+
 SCHEMAS: dict[str, dict] = {
-    _N + "DataType": {"type": "record", "fields": [
+    _N + "DataType": _record(
         ("mysqlType", "string"), ("charset", "string"),
         ("collate", "string"), ("length", "long"),
         ("decimal", ["null", "int"]),
         ("elements", ["null", {"type": "array", "items": "string"}]),
         ("unsigned", ["null", "boolean"]),
         ("zerofill", ["null", "boolean"]),
-    ]},
-    _N + "ColumnSchema": {"type": "record", "fields": [
+    ),
+    _N + "ColumnSchema": _record(
         ("name", "string"), ("dataType", _N + "DataType"),
         ("nullable", "boolean"), ("default", ["null", "string"]),
-    ]},
-    _N + "IndexSchema": {"type": "record", "fields": [
+    ),
+    _N + "IndexSchema": _record(
         ("name", "string"), ("unique", "boolean"), ("primary", "boolean"),
         ("nullable", "boolean"),
         ("columns", {"type": "array", "items": "string"}),
-    ]},
-    _N + "TableSchema": {"type": "record", "fields": [
+    ),
+    _N + "TableSchema": _record(
         ("database", "string"), ("table", "string"), ("tableID", "long"),
         ("version", "long"),
         ("columns", {"type": "array", "items": _N + "ColumnSchema"}),
         ("indexes", {"type": "array", "items": _N + "IndexSchema"}),
-    ]},
-    _N + "Checksum": {"type": "record", "fields": [
+    ),
+    _N + "Checksum": _record(
         ("version", "int"), ("corrupted", "boolean"),
         ("current", "long"), ("previous", "long"),
-    ]},
-    _N + "Watermark": {"type": "record", "fields": [
+    ),
+    _N + "Watermark": _record(
         ("version", "int"), ("commitTs", "long"), ("buildTs", "long"),
-    ]},
-    _N + "Bootstrap": {"type": "record", "fields": [
+    ),
+    _N + "Bootstrap": _record(
         ("version", "int"), ("buildTs", "long"),
         ("tableSchema", _N + "TableSchema"),
-    ]},
-    _N + "DDL": {"type": "record", "fields": [
+    ),
+    _N + "DDL": _record(
         ("version", "int"),
         ("type", {"type": "enum", "symbols": [
             "CREATE", "ALTER", "ERASE", "RENAME", "TRUNCATE",
@@ -76,14 +86,14 @@ SCHEMAS: dict[str, dict] = {
         ("sql", "string"), ("commitTs", "long"), ("buildTs", "long"),
         ("tableSchema", ["null", _N + "TableSchema"]),
         ("preTableSchema", ["null", _N + "TableSchema"]),
-    ]},
-    _N + "Timestamp": {"type": "record", "fields": [
+    ),
+    _N + "Timestamp": _record(
         ("location", "string"), ("value", "string"),
-    ]},
-    _N + "UnsignedBigint": {"type": "record", "fields": [
+    ),
+    _N + "UnsignedBigint": _record(
         ("value", "long"),
-    ]},
-    _N + "DML": {"type": "record", "fields": [
+    ),
+    _N + "DML": _record(
         ("version", "int"), ("database", "string"), ("table", "string"),
         ("tableID", "long"),
         ("type", {"type": "enum", "symbols": ["INSERT", "UPDATE",
@@ -95,161 +105,14 @@ SCHEMAS: dict[str, dict] = {
         ("checksum", ["null", _N + "Checksum"]),
         ("data", ["null", {"type": "map", "values": _VALUE_UNION}]),
         ("old", ["null", {"type": "map", "values": _VALUE_UNION}]),
-    ]},
-    _N + "Message": {"type": "record", "fields": [
+    ),
+    _N + "Message": _record(
         ("type", {"type": "enum", "symbols": ["WATERMARK", "BOOTSTRAP",
                                               "DDL", "DML"]}),
         ("payload", [_N + "Watermark", _N + "Bootstrap", _N + "DDL",
                      _N + "DML"]),
-    ]},
+    ),
 }
-
-
-def _resolve(t):
-    return SCHEMAS[t] if isinstance(t, str) and t.startswith(_N) else t
-
-
-# -- generic Avro binary (spec §binary encoding) -----------------------------
-def _union_branch(val, branches: list) -> int:
-    """Pick the union branch for a Python value.  Typed wrappers pass
-    through as ("<branch name>", value) tuples; plain values map
-    null→null, bool→boolean, int→long/int, float→double/float,
-    str→string, bytes→bytes, dict→first record/map branch."""
-    def kind(b):
-        b = _resolve(b)
-        return b["type"] if isinstance(b, dict) else b
-
-    if isinstance(val, tuple) and len(val) == 2 and isinstance(val[0], str):
-        for i, b in enumerate(branches):
-            if (isinstance(b, str)
-                    and (b == val[0] or b.split(".")[-1] == val[0])) \
-                    or kind(b) == val[0]:
-                return i
-        raise ValueError(f"no union branch named {val[0]!r}")
-    want: tuple[str, ...]
-    if val is None:
-        want = ("null",)
-    elif isinstance(val, bool):
-        want = ("boolean",)
-    elif isinstance(val, int):
-        want = ("long", "int")
-    elif isinstance(val, float):
-        want = ("double", "float")
-    elif isinstance(val, str):
-        want = ("string",)
-    elif isinstance(val, (bytes, bytearray)):
-        want = ("bytes",)
-    elif isinstance(val, dict):
-        want = ("record", "map")
-    elif isinstance(val, list):
-        want = ("array",)
-    else:
-        raise ValueError(f"unencodable union value: {val!r}")
-    for w in want:
-        for i, b in enumerate(branches):
-            if kind(b) == w:
-                return i
-    raise ValueError(f"no union branch for {val!r} in {branches!r}")
-
-
-def encode_value(val, schema) -> bytes:
-    schema = _resolve(schema)
-    if isinstance(schema, list):  # union
-        i = _union_branch(val, schema)
-        inner = val[1] if isinstance(val, tuple) else val
-        return zigzag_encode(i) + encode_value(inner, schema[i])
-    if isinstance(schema, str):
-        if schema == "null":
-            return b""
-        if schema == "boolean":
-            return bytes([1 if val else 0])
-        if schema in ("int", "long"):
-            return zigzag_encode(int(val))
-        if schema == "float":
-            return struct.pack("<f", float(val))
-        if schema == "double":
-            return struct.pack("<d", float(val))
-        if schema in ("string", "bytes"):
-            raw = val.encode("utf-8") if isinstance(val, str) else bytes(val)
-            return zigzag_encode(len(raw)) + raw
-        raise ValueError(f"unknown avro type: {schema}")
-    t = schema["type"]
-    if t == "record":
-        out = bytearray()
-        for fname, ftype in schema["fields"]:
-            out += encode_value(val.get(fname), ftype)
-        return bytes(out)
-    if t == "enum":
-        return zigzag_encode(schema["symbols"].index(val))
-    if t == "array":
-        out = bytearray()
-        if val:
-            out += zigzag_encode(len(val))
-            for item in val:
-                out += encode_value(item, schema["items"])
-        out += zigzag_encode(0)
-        return bytes(out)
-    if t == "map":
-        out = bytearray()
-        if val:
-            out += zigzag_encode(len(val))
-            for k, v in val.items():
-                out += encode_value(k, "string")
-                out += encode_value(v, schema["values"])
-        out += zigzag_encode(0)
-        return bytes(out)
-    raise ValueError(f"unknown avro schema: {schema!r}")
-
-
-def decode_value(buf: bytes, pos: int, schema):
-    schema = _resolve(schema)
-    if isinstance(schema, list):
-        i, pos = zigzag_decode(buf, pos)
-        return decode_value(buf, pos, schema[i])
-    if isinstance(schema, str):
-        if schema == "null":
-            return None, pos
-        if schema == "boolean":
-            return buf[pos] == 1, pos + 1
-        if schema in ("int", "long"):
-            return zigzag_decode(buf, pos)
-        if schema == "float":
-            return struct.unpack_from("<f", buf, pos)[0], pos + 4
-        if schema == "double":
-            return struct.unpack_from("<d", buf, pos)[0], pos + 8
-        if schema in ("string", "bytes"):
-            n, pos = zigzag_decode(buf, pos)
-            raw = bytes(buf[pos:pos + n])
-            return (raw.decode("utf-8") if schema == "string" else raw,
-                    pos + n)
-        raise ValueError(f"unknown avro type: {schema}")
-    t = schema["type"]
-    if t == "record":
-        out = {}
-        for fname, ftype in schema["fields"]:
-            out[fname], pos = decode_value(buf, pos, ftype)
-        return out, pos
-    if t == "enum":
-        i, pos = zigzag_decode(buf, pos)
-        return schema["symbols"][i], pos
-    if t in ("array", "map"):
-        items: list | dict = [] if t == "array" else {}
-        while True:
-            n, pos = zigzag_decode(buf, pos)
-            if n == 0:
-                break
-            if n < 0:  # spec: negative count precedes a byte size
-                _, pos = zigzag_decode(buf, pos)
-                n = -n
-            for _ in range(n):
-                if t == "map":
-                    k, pos = decode_value(buf, pos, "string")
-                    items[k], pos = decode_value(buf, pos, schema["values"])
-                else:
-                    v, pos = decode_value(buf, pos, schema["items"])
-                    items.append(v)
-        return items, pos
-    raise ValueError(f"unknown avro schema: {schema!r}")
 
 
 # -- message level -----------------------------------------------------------
@@ -259,26 +122,28 @@ _KIND_TO_BRANCH = {"WATERMARK": "Watermark", "BOOTSTRAP": "Bootstrap",
 
 def encode_message(kind: str, payload: dict) -> bytes:
     """One ``Message`` record: enum + payload union (branch picked by
-    kind — the reference wraps payloads the same way, `avro.go:146-212`)."""
-    return encode_value(
+    kind — the reference wraps payloads the same way, `avro.go:146-212`).
+    Multi-branch union values follow the shared interpreter's rules: a
+    ``("Timestamp", {...})`` tuple names its branch, a plain value picks
+    the first branch of its type."""
+    return avro_encode(
         {"type": kind, "payload": (_KIND_TO_BRANCH[kind], payload)},
-        _N + "Message",
+        _N + "Message", SCHEMAS,
     )
 
 
 def decode_message(buf: bytes) -> dict:
-    out, pos = decode_value(buf, 0, _N + "Message")
-    if pos != len(buf):
-        raise ValueError(f"trailing bytes after message: {len(buf) - pos}")
-    return out
+    return read_whole(
+        lambda b, pos: avro_decode(b, pos, _N + "Message", SCHEMAS),
+        buf, 0, "simple-avro")
 
 
 # -- compiled DML fast path --------------------------------------------------
-# The generic kernel interprets the schema per value — fine for control
-# messages, too slow for the per-row DML hot path.  The compiled codec
-# emits byte-identical output (pinned by test_simple_avro) with zero
-# schema interpretation: branch indexes and key bytes precomputed, one
-# flat function per row.
+# The interpreter walks the schema per value — fine for control
+# messages, too slow for the per-row DML hot path.  The generic compiler
+# (`codec/avro.py`) takes no multi-branch union, so the value maps get
+# their own codec: byte-identical output (pinned by test_simple_avro),
+# branch indexes and key bytes precomputed, one flat function per row.
 _B_LONG = zigzag_encode(1)                     # union branch 1 -> 0x02
 _B_DOUBLE = zigzag_encode(3)                   # branch 3 -> 0x06
 _B_STRING = zigzag_encode(4)                   # branch 4 -> 0x08
@@ -354,10 +219,10 @@ def compile_dml_decoder(fields: list[str], types: dict[str, str]):
     shape use :func:`decode_message`)."""
     import struct as _struct
 
-    def decode(buf: bytes):
-        if buf[:2] != _DML_PREFIX:
-            raise ValueError("not a DML message")
-        pos = 2
+    def _decode(buf: bytes, pos: int):
+        if buf[pos:pos + 2] != _DML_PREFIX:
+            raise ValueError("simple-avro: not a DML message")
+        pos += 2
         _v, pos = zigzag_decode(buf, pos)           # version
         n, pos = zigzag_decode(buf, pos)            # database
         pos += n
@@ -375,7 +240,7 @@ def compile_dml_decoder(fields: list[str], types: dict[str, str]):
             b, pos = zigzag_decode(buf, pos)
             if b != 0:
                 raise ValueError(
-                    "compiled decoder: non-null optional field")
+                    "simple-avro: compiled decoder: non-null optional field")
 
         def read_map(pos):
             branch, pos = zigzag_decode(buf, pos)
@@ -403,15 +268,17 @@ def compile_dml_decoder(fields: list[str], types: dict[str, str]):
                         img[key] = buf[pos:pos + sl].decode("utf-8")
                         pos += sl
                     else:
-                        raise ValueError(f"unexpected value branch {vb}")
+                        raise ValueError(
+                            f"simple-avro: unexpected value branch {vb}")
             return img, pos
 
         data, pos = read_map(pos)
         old, pos = read_map(pos)
-        if pos != len(buf):
-            raise ValueError("trailing bytes")
         op = ("INSERT", "UPDATE", "DELETE")[op_i]
-        return op, (data if op != "DELETE" else old)
+        return (op, (data if op != "DELETE" else old)), pos
+
+    def decode(buf: bytes):
+        return read_whole(_decode, buf, 0, "simple-avro")
 
     return decode
 

@@ -252,7 +252,9 @@ def apply_replication_window(cl: DataFrame,
 
 
 def _encode(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
-    """Protocol encode with the [sink.csv] options applied when set."""
+    """Protocol encode with the stream's protocol options applied
+    ([sink.csv], canal-json extension, debezium schema envelope, avro
+    extension/watermark, simple encoding-format)."""
     if cfg.protocol not in ENCODERS:
         raise ValueError(
             f"unknown protocol: {cfg.protocol} (known: {sorted(ENCODERS)})"
@@ -286,7 +288,8 @@ def _encode(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
 
         return encode_avro_binary_df(
             df, tidb_extension=cfg.tidb_extension,
-            avro_enable_watermark=cfg.avro_enable_watermark)
+            avro_enable_watermark=cfg.avro_enable_watermark,
+            pk_fields=tuple(cfg.handle_key_fields))
     if cfg.protocol == "debezium":
         if not cfg.debezium_disable_schema:
             # reference default: the Connect schema envelope rides
@@ -366,7 +369,8 @@ def build_pipeline(cl: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
                                   **({"claim_store_uri": uri} if uri
                                      else {}))
         elif opt == "handle-key-only":
-            # oversized rows re-encode with only the handle columns —
+            # oversized rows re-encode with only the handle columns,
+            # through the same protocol options as the full encode —
             # both encodes inline on one frame + a `when`, NOT a
             # self-join (an extra shuffle per message would dominate)
             from pyspark.sql import functions as F
@@ -377,10 +381,9 @@ def build_pipeline(cl: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
 
             hk = list(cfg.handle_key_fields)
             full = df.withColumnRenamed("value", "_value_full")
-            small = ENCODERS[cfg.protocol](
-                select_columns_physical(full, hk,
-                                        pk_fields=tuple(hk))
-            )
+            small = _encode(
+                select_columns_physical(full, hk, pk_fields=tuple(hk)),
+                cfg)
             if lm_codec:
                 # the handle-key re-encode is compressed too (the
                 # reference's encoder compresses the fallback message

@@ -3465,11 +3465,7 @@ def q_debezium_avro_roundtrip(spark, sf_dir):
 
     from ticdc_spark.codec.debezium import encode_debezium_full
     from ticdc_spark.codec.debezium_avro import DebeziumAvroCodecCache
-    from ticdc_spark.codec.schema_registry import (
-        ConfluentSchemaManager,
-        InMemoryConfluentRegistry,
-        InMemoryTransport,
-    )
+    from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
     from ticdc_spark.codec.debezium import encode_debezium_key
 
     cl = scale_out(events_changelog(spark, sf_dir))
@@ -3483,10 +3479,7 @@ def q_debezium_avro_roundtrip(spark, sf_dir):
               "after_id long, after_val double, after_k long")
 
     def run(batches):
-        registry = InMemoryConfluentRegistry()
-        mgr = ConfluentSchemaManager(
-            "http://registry.local", transport=InMemoryTransport(registry))
-        codec = DebeziumAvroCodecCache(mgr)
+        codec = DebeziumAvroCodecCache(ConfluentSchemaManager.in_memory())
         cols = ["seq", "schema_name", "table_name", "commit_ts", "op",
                 "ts_ms", "key_id", "before_id", "before_val", "before_k",
                 "after_id", "after_val", "after_k"]
@@ -3515,13 +3508,13 @@ def q_debezium_avro_roundtrip(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Debezium-Avro WATERMARK wire (`encoder.go:41-49` EncodeCheckpointEvent
-# under debezium-avro, codec/debezium_avro.py:546): the JSON checkpoint
+# under debezium-avro, debezium_avro_watermarks): the JSON checkpoint
 # envelopes convert through the Connect→Avro path with topic "" so the
 # subject falls back to the message's own schema name
 # (`<cluster>.watermark.Key` / `.Envelope` — debeziumAvroSubject,
 # avro.go:224-232), then decode back purely from the registered schema.
 # The double gate (enable-tidb-extension AND avro-enable-watermark →
-# else skipped) is pinned in tests/test_debezium_avro.py:329.
+# else skipped) is pinned in tests/test_debezium_avro.py.
 # ---------------------------------------------------------------------------
 _DBZ_AVRO_WM_ORACLE = f"""
 WITH {CHANGELOG_SQL},
@@ -3555,11 +3548,7 @@ def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
         encode_debezium_avro_payload,
         subject_for,
     )
-    from ticdc_spark.codec.schema_registry import (
-        ConfluentSchemaManager,
-        InMemoryConfluentRegistry,
-        InMemoryTransport,
-    )
+    from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
 
     cl = events_changelog(spark, sf_dir)
     boundary = ((F.col("commit_ts")
@@ -3574,9 +3563,7 @@ def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
               "db string, tbl string, cluster_id string, key_fields int")
 
     def run(batches):
-        mgr = ConfluentSchemaManager(
-            "http://registry.local",
-            transport=InMemoryTransport(InMemoryConfluentRegistry()))
+        mgr = ConfluentSchemaManager.in_memory()
         codec = DebeziumAvroCodecCache(mgr)
         for pdf in batches:
             out = []
@@ -3606,7 +3593,7 @@ def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Native-Avro NON-ROW events (`encoder.go:105-147` EncodeCheckpointEvent
 # checkpointByte(2)|ts, EncodeDDLEvent ddlByte(1)+JSON doc; consumer
-# dispatch on the magic byte — codec/avro_protocol.py:315-351): the
+# dispatch on the magic byte — avro_protocol.decode_event): the
 # changelog's hour boundaries become checkpoint frames and its distinct
 # tables become DDL frames; both decode back through decode_event.
 # ---------------------------------------------------------------------------
@@ -3977,11 +3964,7 @@ def q_avro_confluent_roundtrip(spark, sf_dir):
         encode_row_key,
         encode_row_value,
     )
-    from ticdc_spark.codec.schema_registry import (
-        ConfluentSchemaManager,
-        InMemoryConfluentRegistry,
-        InMemoryTransport,
-    )
+    from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
     from ticdc_spark.queries import _flatten
     from ticdc_spark.sources.changelog import events_changelog
 
@@ -3994,9 +3977,7 @@ def q_avro_confluent_roundtrip(spark, sf_dir):
         return None if pd.isna(v) else v
 
     def run(batches):
-        mgr = ConfluentSchemaManager(
-            "http://registry.local",
-            transport=InMemoryTransport(InMemoryConfluentRegistry()))
+        mgr = ConfluentSchemaManager.in_memory()
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):

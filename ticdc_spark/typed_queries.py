@@ -411,7 +411,7 @@ def q_simple_ddl_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
 # avro schema-registry documents: the -key/-value subjects the avro
 # encoder would register per table (golden oracle, hand-spelled)
 # ---------------------------------------------------------------------------
-from ticdc_spark.codec.avro_codec import avro_schema_document  # noqa: E402
+from ticdc_spark.codec.avro_protocol import avro_schema_document  # noqa: E402
 from ticdc_spark.sources.changelog import events_changelog  # noqa: E402
 
 
@@ -470,27 +470,32 @@ _AVRO_ROWS_SQL = ", ".join(
 )
 
 
+def _avro_docs(spark: SparkSession, sf_dir: str) -> list[dict]:
+    """Registry documents of the three changelog shapes (unified events,
+    typed orders at its latest version, composite-key lineitem), derived
+    from their RUNTIME DataFrame schemas."""
+    ev = events_changelog(spark, sf_dir)
+    oc = orders_changelog(spark, sf_dir)
+    lc = lineitem_changelog(spark, sf_dir)
+    return (avro_schema_document(
+        "test", "tp_click", ev.schema["after"].dataType,
+        {"id": "bigint", "val": "double", "k": "bigint"}, ("id",))
+        + avro_schema_document(
+            "tpch", "orders", oc.schema["after"].dataType, _MYSQL,
+            ("okey",))
+        + avro_schema_document(
+            "tpch", "lineitem", lc.schema["after"].dataType, _LI_MYSQL,
+            ("okey", "line")))
+
+
 @register(
     "avro_registry_schemas",
     "SELECT * FROM (VALUES " + _AVRO_ROWS_SQL
     + ") AS v(subject, schema_json)",
 )
 def q_avro_registry_schemas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents derived from the RUNTIME DataFrame schemas of the three
-    changelog shapes (unified events, typed orders at its latest version,
-    composite-key lineitem) — the oracle is the hand-spelled golden."""
-    docs = []
-    ev = events_changelog(spark, sf_dir)
-    docs += avro_schema_document(
-        "test", "tp_click", ev.schema["after"].dataType,
-        {"id": "bigint", "val": "double", "k": "bigint"}, ("id",))
-    oc = orders_changelog(spark, sf_dir)
-    docs += avro_schema_document(
-        "tpch", "orders", oc.schema["after"].dataType, _MYSQL, ("okey",))
-    lc = lineitem_changelog(spark, sf_dir)
-    docs += avro_schema_document(
-        "tpch", "lineitem", lc.schema["after"].dataType, _LI_MYSQL,
-        ("okey", "line"))
+    """:func:`_avro_docs` — the oracle is the hand-spelled golden."""
+    docs = _avro_docs(spark, sf_dir)
     return spark.createDataFrame(
         [(d["subject"], d["schema_json"]) for d in docs],
         "subject string, schema_json string",
@@ -544,26 +549,11 @@ def q_avro_registry_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     (monotone Confluent ids in registration order; Glue uuid5 ids)."""
     from ticdc_spark.codec.schema_registry import (
         ConfluentSchemaManager, GlueSchemaManager,
-        InMemoryConfluentRegistry, InMemoryTransport,
     )
 
-    docs = []
-    ev = events_changelog(spark, sf_dir)
-    docs += avro_schema_document(
-        "test", "tp_click", ev.schema["after"].dataType,
-        {"id": "bigint", "val": "double", "k": "bigint"}, ("id",))
-    oc = orders_changelog(spark, sf_dir)
-    docs += avro_schema_document(
-        "tpch", "orders", oc.schema["after"].dataType, _MYSQL, ("okey",))
-    lc = lineitem_changelog(spark, sf_dir)
-    docs += avro_schema_document(
-        "tpch", "lineitem", lc.schema["after"].dataType, _LI_MYSQL,
-        ("okey", "line"))
+    docs = _avro_docs(spark, sf_dir)
 
-    mgr = ConfluentSchemaManager(
-        "http://registry.local",
-        transport=InMemoryTransport(InMemoryConfluentRegistry()),
-        backoff_s=0.001)
+    mgr = ConfluentSchemaManager.in_memory(backoff_s=0.001)
     glue = GlueSchemaManager("default")
     rows = []
     for d in docs:
@@ -679,7 +669,7 @@ _AVRO_TYPES = {"okey": "long", "cust": "long", "price": "double",
     "FROM orders_cl",
 )
 def q_avro_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ticdc_spark.codec.avro_binary import (
+    from ticdc_spark.codec.avro_protocol import (
         decode_avro_binary,
         encode_avro_binary,
     )
@@ -695,7 +685,7 @@ def q_avro_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # simple protocol, Avro encoding-format (`pkg/sink/codec/simple/avro.go`,
 # schema message.json): full Message-record wire bytes through the
-# generic Avro-binary kernel, proven by consumer round-trip.  Deletes
+# compiled DML codec, proven by consumer round-trip.  Deletes
 # carry the full old image (unlike the Confluent path's key-only
 # tombstone), so the oracle recovers every before_* field for D rows.
 # ---------------------------------------------------------------------------
