@@ -187,8 +187,7 @@ def main() -> None:
     # with data volume.  Queries still above 1s after two runs get a
     # third sample — co-tenant spikes on this host last seconds, and a
     # spike across BOTH samples of a slow query otherwise fakes a
-    # regression (r2 observed scheduler_balance at 3.25s vs a 0.65s
-    # steady state).
+    # regression.
     for pass_no in range(3):
         for name in headline:
             if pass_no and name not in timings:

@@ -19,6 +19,15 @@ from ticdc_spark.llm.dedup import (
 )
 
 
+#: one genuine near-dup pair (Jaccard above 0.6) that no guard may drop
+_NEAR_DUP_PAIR = [
+    (1000, "a unique long document about distributed query engines "
+           "and shuffle partitioning strategies in apache spark"),
+    (1001, "a unique long document about distributed query engines "
+           "and shuffle partitioning strategy in apache spark"),
+]
+
+
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -27,13 +36,7 @@ def test_mega_cluster_dropped(spark):
     # 80 identical docs (> cap of 64) + one genuine near-dup pair.
     boiler = [(i, "the same boilerplate footer text repeated verbatim "
                   "across every page of the crawl " * 3) for i in range(80)]
-    pair = [
-        (1000, "a unique long document about distributed query engines "
-               "and shuffle partitioning strategies in apache spark"),
-        (1001, "a unique long document about distributed query engines "
-               "and shuffle partitioning strategy in apache spark"),
-    ]
-    docs = _docs(spark, boiler + pair)
+    docs = _docs(spark, boiler + _NEAR_DUP_PAIR)
 
     hot = minhash_lsh_hot_buckets(docs).collect()
     # the identical docs share every band -> all N_BANDS buckets are hot
@@ -46,6 +49,22 @@ def test_mega_cluster_dropped(spark):
     # mega-cluster pairs are gone; the genuine near-dup pair survives
     assert (1000, 1001) in ids
     assert all(a >= 1000 for a, _ in ids)
+
+
+def test_hot_bucket_is_counted_never_collected(spark):
+    """A degenerate bucket (25x the cap) yields no pairs, and the guard
+    is an occupancy window BELOW the member-list aggregate: a hot
+    bucket's list is never built.  The window rides the aggregate's
+    (band, bucket) Exchange, so the plan keeps its 9 shuffles."""
+    docs = _docs(spark, [(i, "identical boilerplate " * 10)
+                         for i in range(200)] + _NEAR_DUP_PAIR)
+    out = minhash_lsh_pairs(docs, threshold=0.6, max_bucket=8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # a tree string lists each operator above its child
+    assert (plan.index("partial_collect_list(doc_id")
+            < plan.index("Window [count(1)"))
+    assert plan.count("Exchange") - plan.count("BroadcastExchange") <= 9
+    assert {(r.a_id, r.b_id) for r in out.collect()} == {(1000, 1001)}
 
 
 def test_guard_noop_below_cap(spark):

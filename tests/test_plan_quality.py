@@ -27,17 +27,13 @@ _SHUFFLE_BUDGET = [
     ("codec_canal_json", 1, "encode itself is map-only; 1 = ordering rank"),
     ("compaction", 1, "the per-pk fold shuffles once"),
     ("ordering", 1, "replay-rank window"),
-    ("scan_chunk_split", 1, "chunking reuses the replay-rank shuffle"),
     ("training_manifest", 1, "rewritten to a single window shuffle"),
     ("repetition_metrics", 1, "explicit spread repartition only"),
     ("redo_log_files", 1, "file-assignment window per table"),
     ("redo_apply", 3, "apply-order window + two 1-row bounds aggs"),
-    ("span_split_write_bytes", 2, "region agg + per-table pandas regroup"),
-    ("span_merge_groups", 2, "span agg + per-table pandas walk"),
     ("mount_handle_fill", 1, "map-only + the synthesize spread"),
     ("redo_v2_roundtrip", 1, "map-only WAL roundtrip + scale_out spread"),
     ("domain_stats", 2, "two-phase distinct agg on the domain key"),
-    ("dml_event_frames", 1, "per-txn metadata aggregate"),
 ]
 
 
@@ -156,23 +152,19 @@ def test_kafka_writer_plan_validates_without_broker(spark, sf_dir):
 
 def test_round2_operator_shuffle_budgets(spark, sf_dir):
     """Round-2 operators: the binary mounter and job fetcher are
-    map-only Arrow passes (+ one fetcher orderBy); table progress is one
-    per-table window + one aggregate on the same key (AQE may fuse);
-    substring dedup pays the gram aggregation and the per-doc fold;
-    semantic dedup's candidate join shuffles on the cell key plus the
-    per-item rank window; scheduler balance keeps exactly one span-side
-    exchange plus tiny literal-side shuffles."""
+    map-only Arrow passes (+ one fetcher orderBy); substring dedup pays
+    the gram aggregation and the per-doc fold; semantic dedup's
+    candidate join shuffles on the cell key plus the per-item rank
+    window."""
     budgets = [
         ("mount_binary_rows", 1),  # the synthesize spread
         ("ddl_job_fetch", 2),       # synthesize spread + commit-ts orderBy
-        ("table_progress", 1),      # window + agg fuse on the same key
         ("dedup_exact_substring", 2),
         # r8 restructure: gram agg + dup-start fold + doc-keyed join;
         # token rows stay inside their document array end to end
         ("substring_excise", 4),
         ("dedup_semantic", 1),      # cell-key join; rank window fuses
         ("dsir_importance", 4),     # term agg, totals, doc fold, rebal
-        ("scheduler_balance", 5),   # victim window + tiny literal sides
     ]
     for name, budget in budgets:
         p = _plan(QUERIES[name](spark, sf_dir))
@@ -193,14 +185,12 @@ def test_metrics_operator_shuffle_budgets(spark, sf_dir):
     """TSO decompose is map-only (zero exchanges — stays in whole-stage
     codegen); lag percentiles pay the per-table window plus the 1-row
     pd-now aggregate; the HLL estimate pays cells→registers→group plus
-    the exact-count audit join; the scan-window controller pays the
-    per-tick aggregation and the per-changefeed Arrow fold."""
+    the exact-count audit join."""
     budgets = [
         ("tso_functions", 0),
         ("checkpoint_lag_percentiles", 3),
         ("hll_registers", 1),
         ("hll_user_estimate", 5),
-        ("adaptive_scan_window", 4),
         ("cms_counters", 1),
         ("partition_inertia_index_value", 0),
         ("partition_inertia_table", 1),
@@ -218,36 +208,6 @@ def test_tso_and_hll_stay_in_codegen(spark, sf_dir):
     for name in ("tso_functions", "hll_registers", "hll_user_estimate"):
         p = _plan(QUERIES[name](spark, sf_dir))
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, name
-
-
-def test_span_and_area_windows_partition_on_multi_key_input(spark, sf_dir):
-    """The two WindowExec sites that print single-partition on one-table
-    fixtures (literal-folded keys) MUST hash-partition the moment the
-    input carries real key variety — per-span scan ranks and per-area
-    flow-control carry-forwards scale with span/area count, never with
-    a global sort."""
-    from pyspark.sql import functions as F
-
-    from ticdc_spark.operators.flow_control import (
-        area_flow_control,
-        usage_samples,
-    )
-    from ticdc_spark.operators.scan_progress import chunk_scan_atomic
-    from ticdc_spark.sources.changelog import events_changelog
-
-    cl = events_changelog(spark, sf_dir)  # many table_ids
-    p = _plan(chunk_scan_atomic(cl, 1000))
-    assert "hashpartitioning(table_id" in p
-    win_feeds_single = "Exchange SinglePartition" in p.split("Window")[1][:400] \
-        if "Window" in p else False
-    assert not win_feeds_single, p
-
-    # two areas: vary the schema name so the area key survives folding
-    two_area = cl.withColumn(
-        "schema_name",
-        F.when(F.col("table_id") % 2 == 0, "test").otherwise("test2"))
-    p2 = _plan(area_flow_control(usage_samples(two_area), quota_bytes=800))
-    assert "hashpartitioning(area" in p2
 
 
 def test_session3_operator_shuffle_budgets(spark, sf_dir):
@@ -283,17 +243,12 @@ def test_debezium_schema_block_is_a_projection(spark, sf_dir):
     # the Avro-variant roundtrip stays map-only after its spread shuffle
     rt = _plan(QUERIES["debezium_avro_roundtrip"](spark, sf_dir))
     assert rt.count("Exchange") <= 1  # the scale_out spread only
-    # chunk-payload wire roundtrip is map-only after its keyed spread
-    chunk = _plan(QUERIES["dml_event_chunk_roundtrip"](spark, sf_dir))
-    assert chunk.count("Exchange") <= 1
 
 
 def test_round3_wire_query_shuffle_budgets(spark, sf_dir):
     """Round-3 wire roundtrips stay map-only after their spread
-    exchange; the typed chunk query likewise."""
+    exchange."""
     for name, budget in [
-        ("dml_event_chunk_roundtrip", 1),  # keyed txn spread only
-        ("dml_event_chunk_typed", 1),      # keyed txn spread only
         ("avro_confluent_roundtrip", 1),   # scale_out spread only
         ("mount_binary_json", 1),          # synthesize spread
         # round-5: the materialized-state fan-out keeps the tail at 6

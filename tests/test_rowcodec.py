@@ -10,9 +10,16 @@ image dispatch, v1/v2 format sniffing, record-key handles).
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 from pyspark.sql import functions as F
 
+from ticdc_spark.codec.binary_json import (
+    binary_to_json,
+    json_to_binary,
+    render_json,
+)
 from ticdc_spark.codec.rowcodec import (
     _COMPACT_BYTES,
     _FLOAT,
@@ -373,6 +380,60 @@ def test_decode_image_absent_column_fills_default():
                              use_v1)
         out2 = _decode_image(img2, dec_cols)
         assert out2["a"] is None and out2["b"] is None
+
+
+# --- binary JSON (`pkg/types/json_binary.go` grammar) ---------------------
+
+def test_json_scalar_goldens():
+    assert json_to_binary(None) == b"\x04\x00"
+    assert json_to_binary(True) == b"\x04\x01"
+    assert json_to_binary(False) == b"\x04\x02"
+    assert json_to_binary(5) == b"\x09" + struct.pack("<q", 5)
+    assert json_to_binary((1 << 63) + 1) == \
+        b"\x0a" + struct.pack("<Q", (1 << 63) + 1)
+    assert json_to_binary(2.5) == b"\x0b" + struct.pack("<d", 2.5)
+    assert json_to_binary("hi") == b"\x0c\x02hi"
+
+
+def test_json_array_golden():
+    doc = json_to_binary([1, "ab", None])
+    # type 0x03 | count=3 | size | entries 5B each | data
+    assert doc[0] == 0x03
+    count, size = struct.unpack_from("<II", doc, 1)
+    assert count == 3
+    data_start = 8 + 5 * 3
+    # entry 0: int64 at data_start
+    assert doc[1 + 8] == 0x09
+    assert struct.unpack_from("<I", doc, 1 + 9)[0] == data_start
+    # entry 1: string at data_start+8
+    assert doc[1 + 13] == 0x0C
+    assert struct.unpack_from("<I", doc, 1 + 14)[0] == data_start + 8
+    # entry 2: literal nil inlined
+    assert doc[1 + 18] == 0x04 and doc[1 + 19] == 0x00
+    assert size == len(doc) - 1
+    assert binary_to_json(doc) == [1, "ab", None]
+
+
+def test_json_object_key_order_and_roundtrip():
+    obj = {"bb": 1, "a": 2, "ccc": [True, {"k": None}], "z": 0.5}
+    doc = json_to_binary(obj)
+    assert doc[0] == 0x01
+    assert binary_to_json(doc) == obj
+    # keys sorted by (length, bytes): a, z, bb, ccc
+    count, size = struct.unpack_from("<II", doc, 1)
+    assert count == 4 and size == len(doc) - 1
+    koff, klen = struct.unpack_from("<IH", doc, 1 + 8)
+    assert doc[1 + koff:1 + koff + klen] == b"a"
+
+
+def test_json_nested_depth_roundtrip():
+    obj = {"a": [{"b": [1, [2, [3, "deep"]]]}], "n": None}
+    assert binary_to_json(json_to_binary(obj)) == obj
+
+
+def test_render_json():
+    assert render_json({"bb": [1, None], "a": True}) == \
+        '{"a": true, "bb": [1, null]}'
 
 
 # --- JSON column values (TiDB binary JSON through both row formats) ---------

@@ -1,57 +1,12 @@
-"""Stateful streaming: txn matcher with applyInPandasWithState; syncpoint
-as a watermarked windowed aggregation."""
+"""Spark-native stateful streaming: the W2 syncpoint as a watermarked
+tumbling-window aggregation, and sessionization as a session_window
+aggregation — each checked against its batch equivalent."""
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import functions as F
 
 from ticdc_spark.sources.changelog import events_changelog
-from ticdc_spark.streaming.stateful import streaming_txn_match
-
-
-def _txn_event_stream(spark, sf_dir, with_commits: bool):
-    """Rate-limited memory stream shaped like the matcher input."""
-    cl = events_changelog(spark, sf_dir).limit(100)
-    prewrites = cl.select(
-        "start_ts", "pk", "op", "seq",
-        F.lit(None).cast("long").alias("commit_ts"),
-        F.lit("P").alias("kind"),
-    )
-    commits = cl.select(
-        "start_ts", "pk",
-        F.lit(None).cast("string").alias("op"),
-        F.lit(None).cast("long").alias("seq"),
-        "commit_ts",
-        F.lit("C").alias("kind"),
-    )
-    return prewrites.unionByName(commits) if with_commits else prewrites
-
-
-def test_streaming_txn_match(spark, sf_dir, tmp_path):
-    src_dir = str(tmp_path / "src")
-    _txn_event_stream(spark, sf_dir, with_commits=True).write.parquet(src_dir)
-    static = spark.read.parquet(src_dir)
-    stream = (
-        spark.readStream.schema(static.schema).parquet(src_dir)
-    )
-    matched = streaming_txn_match(stream)
-    q = (
-        matched.writeStream.format("memory").queryName("txn_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # the bounded run must end on its own once the input is drained
-    assert q.awaitTermination(20) is True
-    out = spark.sql("SELECT * FROM txn_out WHERE start_ts IS NOT NULL")
-    n_out = out.count()
-    n_expected = 100  # every prewrite has a commit in the fixture
-    assert n_out == n_expected
-    # every matched row carries the commit ts of its txn
-    assert out.filter(F.col("commit_ts").isNull()).count() == 0
 
 
 def test_streaming_syncpoint_window(spark, sf_dir, tmp_path):
@@ -145,60 +100,3 @@ def test_streaming_session_window_matches_batch(spark, sf_dir):
             "FROM sess_stream GROUP BY 1").collect()
     }
     assert got == expected
-
-
-def test_streaming_scan_window_matches_batch_fold(spark, sf_dir, tmp_path):
-    """The live controller (state store, incremental window) converges
-    to exactly the batch fold's final state — across multiple
-    micro-batches, so state genuinely persists through the store."""
-    import time as _time
-
-    from ticdc_spark.operators import scan_window as sw
-    from ticdc_spark.streaming.stateful import streaming_scan_window
-
-    cl = events_changelog(spark, sf_dir)
-    stats = sw.congestion_tape(cl)
-    reports = stats.select("table_name", "ts", "lastr", "rel")
-
-    src = tmp_path / "sw_src"
-    src.mkdir()
-    # two file batches split on ts so the state store carries the
-    # controller across triggers (maxFilesPerTrigger=1, modTime order)
-    reports.filter("ts < 100").coalesce(1).write.parquet(
-        str(src / "a.parquet"))
-    _time.sleep(1.1)
-    reports.filter("ts >= 100").coalesce(1).write.parquet(
-        str(src / "b.parquet"))
-
-    static = spark.read.parquet(str(src / "a.parquet"))
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*.parquet")
-    )
-    out = streaming_scan_window(stream)
-    q = (
-        out.writeStream.format("memory").queryName("sw_out")
-        .option("checkpointLocation", str(tmp_path / "sw_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-
-    from pyspark.sql import functions as F
-
-    emitted = spark.sql("SELECT * FROM sw_out")
-    assert emitted.select("upto_ts").distinct().count() >= 2  # >1 batch
-    last = (
-        emitted.withColumn(
-            "rn", F.row_number().over(
-                __import__("pyspark.sql.window", fromlist=["Window"])
-                .Window.partitionBy("table_name")
-                .orderBy(F.desc("upto_ts"))))
-        .filter("rn = 1").drop("rn", "upto_ts")
-    )
-    want = {r["table_name"]: r.asDict()
-            for r in sw.fold_controller_pandas(stats).collect()}
-    got = {r["table_name"]: r.asDict() for r in last.collect()}
-    assert got == want

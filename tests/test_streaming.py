@@ -75,39 +75,6 @@ def test_ddl_barrier_split(spark, sf_dir):
     assert flushed[0][1] == sum(1 for r in rows if r["commit_ts"] <= ddl_ts)
 
 
-def test_resolved_frames_written_per_epoch(spark, sf_dir, tmp_path):
-    """W1 wire artifact: each epoch leaves one BatchResolvedEvent frame
-    whose per-dispatcher watermarks agree with the progress log."""
-    import glob
-    import json
-    import os
-
-    from ticdc_spark.codec.resolved_event import decode_batch
-    from ticdc_spark.pipeline import ChangefeedConfig
-    from ticdc_spark.streaming.changefeed import Changefeed
-
-    cfg = ChangefeedConfig(protocol="canal-json")
-    cf = Changefeed("cf_resolved", cfg, str(tmp_path))
-    cf.start(spark, sf_dir, available_now=True)
-    cf.wait(240)
-    frames = sorted(glob.glob(
-        os.path.join(str(tmp_path), "resolved", "cf_resolved", "*.bin")))
-    assert frames
-    progress = [json.loads(ln) for ln in open(cf.progress_path)]
-    by_epoch = {p["epoch"]: p for p in progress}
-    for fp in frames:
-        epoch = int(os.path.basename(fp).split("=")[1].split(".")[0])
-        events = decode_batch(open(fp, "rb").read())
-        assert events, fp
-        # dispatchers sorted, one per table, epoch stamped
-        tids = [e.dispatcher_id[0] for e in events]
-        assert tids == sorted(set(tids))
-        assert all(e.epoch == epoch for e in events)
-        # the changefeed watermark is the max over dispatcher watermarks
-        assert max(e.resolved_ts for e in events) == \
-            by_epoch[epoch]["resolved_ts"]
-
-
 def test_progress_log_replay_rewrites_only_the_last_entry(tmp_path):
     """A replayed epoch (crash after the flush, before the bookkeeping)
     replaces the log's last entry; a new epoch appends and leaves every

@@ -166,12 +166,13 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.8,
     Jaccard. Output identical shape to ngram_jaccard_pairs (the LSH is a
     recall-optimizing candidate generator, not a different metric).
 
-    Skew guard (the 100 TB shape, same pattern as
-    :func:`ngram_jaccard_pairs_pruned`): band buckets with occupancy
-    above ``max_bucket`` are dropped from candidate generation via a
-    broadcast anti-join against the (tiny) hot-bucket set, so the
-    self-join is skew-free by construction — no single (band, bucket)
-    key can exceed max_bucket²/2 pairs.
+    Skew guard (the 100 TB shape): band buckets with occupancy above
+    ``max_bucket`` are dropped from candidate generation before any
+    member list is built — a window count over (band, bucket) filters
+    the band rows, then the groupBy collects only the buckets that
+    survive.  So the self-join is skew-free by construction (no
+    single (band, bucket) key can exceed max_bucket²/2 pairs) and no
+    task ever holds a hot bucket's list in memory.
 
     The shingle table feeds three subtrees (signatures + both sides of
     the verify join) — cache it so the split/slice work runs once."""
@@ -186,15 +187,16 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.8,
             ])
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
-    # hot-bucket guard FUSED into candidate generation: one groupBy on
-    # (band, bucket) builds each bucket's member list AND its occupancy
-    # (the list's size), so the former occupancy-count aggregation and
-    # broadcast anti-join disappear — same surviving buckets, same
-    # members, two fewer passes over the band table (guide §2.4).
+    # hot-bucket guard ahead of the member lists: the occupancy window
+    # and the groupBy share one hash partitioning on (band, bucket), so
+    # the guard adds no Exchange; the window's row buffer spills, and a
+    # bucket over the cap never reaches collect_list
+    occupancy = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
     buckets = (
-        bands.groupBy("band", "bucket")
+        bands.withColumn("_n", occupancy)
+        .filter(F.col("_n") <= max_bucket)
+        .groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("_ds"))
-        .filter(F.size("_ds") <= max_bucket)
     )
     cand = (
         _bucket_pairs(buckets)

@@ -180,20 +180,6 @@ def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# W4 — adaptive scan window (`pkg/eventservice/scan_window.go`): the
-# full EMA/pressure/brake controller folded over a per-changefeed
-# congestion tape; the oracle runs the identical fold as a recursive CTE.
-# ---------------------------------------------------------------------------
-from ticdc_spark.operators import scan_window as _sw  # noqa: E402
-
-
-@register("adaptive_scan_window", _sw.oracle_sql(CHANGELOG_SQL), bench="plan")
-def q_adaptive_scan_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cl = events_changelog(spark, sf_dir)
-    return _sw.fold_controller_pandas(_sw.congestion_tape(cl))
-
-
-# ---------------------------------------------------------------------------
 # Count-Min sketch: counter grid + heavy-hitter point queries.  The hot-
 # key signal ahead of skew mitigation (the reference's write-bytes
 # splitter reads the same kind of per-span heat,
@@ -469,196 +455,3 @@ def q_lag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = (F.expr("shiftleft(1L, cast(bucket as int))") - 1).cast("long")
     return hist.select("table_name", "bucket", lo.alias("lo_ms"),
                        hi.alias("hi_ms"), "c")
-
-
-# ---------------------------------------------------------------------------
-# ResolvedEvent / BatchResolvedEvent wire proof
-# (`pkg/common/event/resolved_ts_event.go`, codec/resolved_event.py):
-# per-dispatcher watermarks encoded into one batch frame (16B header +
-# 40B v1 payload each), re-split by walking headers, decoded, and
-# checked against the originals — all as engine-portable hex algebra.
-# The batch itself is control-plane sized (one event per dispatcher).
-# ---------------------------------------------------------------------------
-def _behex(col, width: int):
-    return F.lower(F.lpad(F.hex(col), width, "0"))
-
-
-def _le64(hexcol):
-    """LE byte order of a 16-hex-char BE u64 rendering."""
-    return F.concat(*[F.substring(hexcol, p, 2)
-                      for p in (15, 13, 11, 9, 7, 5, 3, 1)])
-
-
-_RE_EVENT_HEX_CHARS = 112  # (16 header + 40 payload) * 2
-
-
-def _le64_sql(h: str) -> str:
-    return "||".join(f"substr({h}, {p}, 2)" for p in (15, 13, 11, 9, 7, 5, 3, 1))
-
-
-_RESOLVED_BATCH_ORACLE = f"""
-WITH {CHANGELOG_SQL},
-disp AS (
-  SELECT table_id, max(commit_ts) AS resolved_ts, 1 AS epoch,
-         max(seq) AS seq
-  FROM changelog GROUP BY table_id),
-enc AS (
-  SELECT *,
-         'da7a6a6a' || '0003' || '0001' || '0000000000000028'
-         || printf('%016x', resolved_ts) || printf('%016x', epoch)
-         || printf('%016x', seq)
-         || {_le64_sql("printf('%016x', table_id)")}
-         || '0000000000000000' AS event_hex
-  FROM disp),
-batch AS (SELECT string_agg(event_hex, '' ORDER BY table_id) AS b,
-                 count(*) AS n FROM enc),
-split AS (
-  SELECT substr(b, g.i * {_RE_EVENT_HEX_CHARS} + 1,
-                {_RE_EVENT_HEX_CHARS}) AS ev
-  FROM batch, LATERAL (SELECT unnest(generate_series(0, n - 1)) AS i) g),
-dec AS (
-  SELECT ('0x' || {_le64_sql("substr(ev, 81, 16)")})::BIGINT AS table_id,
-         ('0x' || substr(ev, 33, 16))::BIGINT AS dec_resolved_ts,
-         ('0x' || substr(ev, 49, 16))::BIGINT AS dec_epoch,
-         ('0x' || substr(ev, 65, 16))::BIGINT AS dec_seq,
-         (substr(ev, 1, 8) = 'da7a6a6a' AND substr(ev, 9, 4) = '0003'
-          AND substr(ev, 13, 4) = '0001'
-          AND substr(ev, 17, 16) = '0000000000000028') AS header_ok
-  FROM split),
-gmin AS (SELECT min(dec_resolved_ts) AS global_resolved_ts FROM dec)
-SELECT e.table_id, e.event_hex, d.dec_resolved_ts, d.dec_epoch, d.dec_seq,
-       d.header_ok,
-       (d.dec_resolved_ts = e.resolved_ts AND d.dec_epoch = e.epoch
-        AND d.dec_seq = e.seq) AS roundtrip_ok,
-       g.global_resolved_ts
-FROM enc e JOIN dec d USING (table_id), gmin g
-"""
-
-
-@register("batch_resolved_codec", _RESOLVED_BATCH_ORACLE, bench="plan")
-def q_batch_resolved_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cl = events_changelog(spark, sf_dir)
-    disp = cl.groupBy("table_id").agg(
-        F.max("commit_ts").alias("resolved_ts"),
-        F.lit(1).cast("long").alias("epoch"),
-        F.max("seq").alias("seq"),
-    )
-    event_hex = F.concat(
-        F.lit("da7a6a6a"), F.lit("0003"), F.lit("0001"),
-        F.lit("0000000000000028"),
-        _behex(F.col("resolved_ts"), 16), _behex(F.col("epoch"), 16),
-        _behex(F.col("seq"), 16),
-        _le64(_behex(F.col("table_id"), 16)),
-        F.lit("0000000000000000"),
-    )
-    enc = disp.select("*", event_hex.alias("event_hex"))
-    batch = enc.agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct("table_id", "event_hex"))),
-                lambda x: x["event_hex"],
-            ), "").alias("b"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    W = _RE_EVENT_HEX_CHARS
-    # dynamic substring start requires the expr form of transform
-    split = batch.select(
-        F.explode(F.expr(
-            f"transform(sequence(0, cast(n - 1 as int)), "
-            f"i -> substring(b, i * {W} + 1, {W}))")).alias("ev"))
-
-    def dhex(pos: int) -> F.Column:
-        return F.conv(F.substring("ev", pos, 16), 16, 10).cast("long")
-
-    dec = split.select(
-        F.conv(_le64(F.substring("ev", 81, 16)), 16, 10)
-        .cast("long").alias("table_id"),
-        dhex(33).alias("dec_resolved_ts"),
-        dhex(49).alias("dec_epoch"),
-        dhex(65).alias("dec_seq"),
-        ((F.substring("ev", 1, 8) == "da7a6a6a")
-         & (F.substring("ev", 9, 4) == "0003")
-         & (F.substring("ev", 13, 4) == "0001")
-         & (F.substring("ev", 17, 16) == "0000000000000028"))
-        .alias("header_ok"),
-    )
-    gmin = dec.agg(F.min("dec_resolved_ts").alias("global_resolved_ts"))
-    return (
-        enc.join(F.broadcast(dec), "table_id")
-        .crossJoin(F.broadcast(gmin))
-        .select(
-            "table_id", "event_hex", "dec_resolved_ts", "dec_epoch",
-            "dec_seq", "header_ok",
-            ((F.col("dec_resolved_ts") == F.col("resolved_ts"))
-             & (F.col("dec_epoch") == F.col("epoch"))
-             & (F.col("dec_seq") == F.col("seq"))).alias("roundtrip_ok"),
-            "global_resolved_ts",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# DMLEvent v1 metadata frames (`pkg/common/event/dml_event.go:883-948`,
-# codec/control_events.py): one frame per txn with length/row-type
-# framing — engine-portable hex algebra, cross-checked against the
-# Python codec in tests/test_control_events_query.py.  Row order inside
-# a txn is the EventStore replay order (dml_order, seq); row keys ride
-# separately (the mounted chunk), so n_row_keys = 0 here.
-# ---------------------------------------------------------------------------
-_DML_FRAMES_ORACLE = f"""
-WITH {CHANGELOG_SQL},
-txn AS (
-  SELECT table_id, commit_ts, start_ts,
-         count(*) AS length, min(seq) AS seq,
-         sum(64 + pk % 97)::BIGINT AS approx_size,
-         string_agg(CASE op WHEN 'D' THEN '00' WHEN 'I' THEN '01'
-                            ELSE '02' END, ''
-                    ORDER BY dml_order, seq) AS row_types_hex
-  FROM changelog GROUP BY table_id, commit_ts, start_ts)
-SELECT table_id, commit_ts, start_ts, length, seq, approx_size,
-       'da7a6a6a' || '0000' || '0001'
-       || printf('%016x', 80 + length)
-       || {_le64_sql("printf('%016x', table_id)")} || '0000000000000000'
-       || printf('%016x', table_id) || printf('%016x', start_ts)
-       || printf('%016x', commit_ts) || printf('%016x', seq)
-       || printf('%016x', 1)
-       || printf('%08x', length) || printf('%016x', approx_size)
-       || printf('%08x', 0)
-       || printf('%08x', length) || row_types_hex
-       || printf('%08x', 0) AS frame_hex
-FROM txn
-"""
-
-
-@register("dml_event_frames", _DML_FRAMES_ORACLE, bench="plan")
-def q_dml_event_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cl = events_changelog(spark, sf_dir)
-    rt = F.when(F.col("op") == "D", F.lit("00")) \
-          .when(F.col("op") == "I", F.lit("01")).otherwise(F.lit("02"))
-    txn = cl.groupBy("table_id", "commit_ts", "start_ts").agg(
-        F.count(F.lit(1)).alias("length"),
-        F.min("seq").alias("seq"),
-        F.sum(64 + F.pmod(F.col("pk"), F.lit(97))).alias("approx_size"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct("dml_order", "seq", rt.alias("rt")))),
-                lambda x: x["rt"],
-            ), "").alias("row_types_hex"),
-    )
-    frame = F.concat(
-        F.lit("da7a6a6a"), F.lit("0000"), F.lit("0001"),
-        _behex(F.lit(80) + F.col("length"), 16),
-        _le64(_behex(F.col("table_id"), 16)), F.lit("0000000000000000"),
-        _behex(F.col("table_id"), 16), _behex(F.col("start_ts"), 16),
-        _behex(F.col("commit_ts"), 16), _behex(F.col("seq"), 16),
-        _behex(F.lit(1), 16),
-        _behex(F.col("length"), 8), _behex(F.col("approx_size"), 16),
-        _behex(F.lit(0), 8),
-        _behex(F.col("length"), 8), F.col("row_types_hex"),
-        _behex(F.lit(0), 8),
-    )
-    return txn.select(
-        "table_id", "commit_ts", "start_ts", "length", "seq",
-        "approx_size", frame.alias("frame_hex"))

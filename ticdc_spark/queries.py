@@ -208,7 +208,7 @@ def q_mount_binary_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON column values ride the binary wire in TiDB's binary JSON
     format (object keys re-sorted by (len, bytes), literals inlined in
     value entries) and mount back to the MySQL-style text rendering —
-    byte-level layout is pinned by tests/test_chunk_codec.py; this
+    byte-level layout is pinned by tests/test_rowcodec.py; this
     query pins the end-to-end mount path on both row formats."""
     from ticdc_spark.sources.binary_mount import (
         mount_binary_rows,

@@ -397,29 +397,6 @@ def q_update_only_columns_filter(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# J2 — prewrite/commit transaction matching
-# ---------------------------------------------------------------------------
-from ticdc_spark.operators.txn_matcher import match_transactions, split_prewrite_commit  # noqa: E402
-
-
-@register(
-    "txn_matching",
-    f"WITH {CHANGELOG_SQL}, "
-    "prewrites AS (SELECT start_ts, pk, op, seq FROM changelog), "
-    "commits AS (SELECT start_ts, pk, commit_ts FROM changelog) "
-    "SELECT p.start_ts, p.pk, p.op, p.seq, c.commit_ts "
-    "FROM prewrites p JOIN commits c ON p.start_ts = c.start_ts AND p.pk = c.pk",
-)
-def q_txn_matching(spark, sf_dir):
-    cl = events_changelog(spark, sf_dir)
-    prewrites, commits = split_prewrite_commit(cl)
-    matched = match_transactions(
-        prewrites.select("start_ts", "pk", "op", "seq"), commits
-    )
-    return matched.select("start_ts", "pk", "op", "seq", "commit_ts")
-
-
-# ---------------------------------------------------------------------------
 # F6/F7 — DDL classification + allow-list (DDL stream synthesized
 # deterministically from the changelog: every 20th event becomes a DDL)
 # ---------------------------------------------------------------------------
@@ -1645,89 +1622,6 @@ def q_start_ts_gate(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# O3: scan limits + resumable scan cursors (scanProgress)
-# ---------------------------------------------------------------------------
-from ticdc_spark.operators.scan_progress import (  # noqa: E402
-    chunk_scan_atomic,
-    chunk_scan_split,
-    scan_cursors,
-)
-
-_SCAN_ORDER = "ORDER BY commit_ts, start_ts, dml_order, seq"
-_SPLIT_ROWS = 500
-
-
-@register(
-    "scan_chunk_split",
-    f"WITH {CHANGELOG_SQL}, ordered AS ("
-    "  SELECT table_id, seq, row_number() OVER (PARTITION BY table_id "
-    f" {_SCAN_ORDER}) AS scan_rn FROM changelog) "
-    f"SELECT table_id, seq, scan_rn, (scan_rn - 1) // {_SPLIT_ROWS} AS chunk "
-    "FROM ordered",
-    bench="plan",
-)
-def q_scan_chunk_split(spark, sf_dir):
-    cl = events_changelog(spark, sf_dir)
-    return chunk_scan_split(cl, _SPLIT_ROWS).select(
-        "table_id", "seq", "scan_rn", "chunk")
-
-
-@register(
-    "scan_chunk_atomic",
-    "WITH li AS (SELECT CAST(7 AS BIGINT) AS table_id, "
-    "  epoch_us(l_shipdate) AS commit_ts, epoch_us(l_shipdate) - 1 AS start_ts, "
-    "  CASE l_returnflag WHEN 'R' THEN 1 WHEN 'A' THEN 2 ELSE 3 END AS dml_order, "
-    "  CAST(l_orderkey * 10 + l_linenumber AS BIGINT) AS seq FROM lineitem), "
-    "ordered AS (SELECT *, row_number() OVER (PARTITION BY table_id "
-    f" {_SCAN_ORDER}) AS scan_rn FROM li), "
-    "txn_first AS (SELECT *, min(scan_rn) OVER (PARTITION BY table_id, "
-    "  commit_ts, start_ts) AS first_rn FROM ordered) "
-    "SELECT table_id, seq, scan_rn, (first_rn - 1) // 1000 AS chunk "
-    "FROM txn_first",
-)
-def q_scan_chunk_atomic(spark, sf_dir):
-    from ticdc_spark.sources.typed import lineitem_changelog
-
-    cl = lineitem_changelog(spark, sf_dir)
-    return chunk_scan_atomic(cl, 1000).select(
-        "table_id", "seq", "scan_rn", "chunk")
-
-
-@register(
-    "scan_resume_cursors",
-    f"WITH {CHANGELOG_SQL}, ordered AS ("
-    "  SELECT table_id, commit_ts, start_ts, dml_order, seq, row_number() OVER ("
-    f"    PARTITION BY table_id {_SCAN_ORDER}) AS scan_rn FROM changelog), "
-    f"chunked AS (SELECT *, (scan_rn - 1) // {_SPLIT_ROWS} AS chunk FROM ordered), "
-    "tails AS (SELECT table_id, chunk, count(*) AS chunk_rows, "
-    "  arg_max(commit_ts, scan_rn) AS tail_cts, "
-    "  arg_max(start_ts, scan_rn) AS tail_sts, "
-    "  arg_max(dml_order, scan_rn) AS tail_dml, "
-    "  arg_max(seq, scan_rn) AS tail_seq "
-    "  FROM chunked GROUP BY 1, 2), "
-    "txn_span AS (SELECT table_id, commit_ts, start_ts, max(chunk) AS txn_max "
-    "  FROM chunked GROUP BY 1, 2, 3), "
-    "ts_span AS (SELECT table_id, commit_ts, max(chunk) AS ts_max "
-    "  FROM chunked GROUP BY 1, 2) "
-    "SELECT t.table_id, t.chunk, t.chunk_rows, t.tail_cts AS cursor_commit_ts, "
-    "  CASE WHEN x.txn_max > t.chunk OR c.ts_max > t.chunk "
-    "       THEN t.tail_sts ELSE 0 END AS cursor_start_ts, "
-    "  CASE WHEN x.txn_max > t.chunk THEN t.tail_dml END AS cursor_dml_order, "
-    "  CASE WHEN x.txn_max > t.chunk THEN t.tail_seq END AS cursor_pos, "
-    "  CASE WHEN x.txn_max > t.chunk THEN 'row' "
-    "       WHEN c.ts_max > t.chunk THEN 'txn' "
-    "       ELSE 'boundary' END AS form "
-    "FROM tails t "
-    "JOIN txn_span x ON t.table_id = x.table_id "
-    "  AND t.tail_cts = x.commit_ts AND t.tail_sts = x.start_ts "
-    "JOIN ts_span c ON t.table_id = c.table_id AND t.tail_cts = c.commit_ts",
-)
-def q_scan_resume_cursors(spark, sf_dir):
-    cl = events_changelog(spark, sf_dir)
-    return scan_cursors(chunk_scan_split(cl, _SPLIT_ROWS))
-
-
-# ---------------------------------------------------------------------------
 # Consumer decode round-trips for the remaining MQ protocols
 # (`cmd/kafka-consumer/writer.go:88-147` decodes EVERY protocol and
 # applies to the downstream; the oracle is the directly-applied
@@ -1982,145 +1876,6 @@ def q_redo_apply_state(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# R7 — table-span splitting (plans/span_split.py)
-# ---------------------------------------------------------------------------
-from ticdc_spark.plans.span_split import (  # noqa: E402
-    split_spans_region_count, split_spans_write_bytes, synthetic_regions,
-)
-
-_REGIONS_CTE = """
-regions AS (
-    SELECT schema_name, table_name, pk // 64 AS region_idx,
-           (pk // 64) * 64 AS start_key, (pk // 64 + 1) * 64 AS end_key,
-           (count(*) * 32 + sum(pk % 97))::BIGINT AS written_bytes
-    FROM changelog GROUP BY 1, 2, 3
-)
-"""
-
-# region-count stepper (region_count_splitter.go:69-209): span_count /
-# regionPerSpan / remain arithmetic, remainder spans first; threshold 8,
-# 4 regions per span, spans_num=0 path.
-_SPAN_RC_SQL = f"""
-WITH {CHANGELOG_SQL}, {_REGIONS_CTE.strip()},
-ranked AS (
-    SELECT *,
-        row_number() OVER (PARTITION BY schema_name, table_name
-            ORDER BY region_idx) - 1 AS i,
-        count(*) OVER (PARTITION BY schema_name, table_name) AS n
-    FROM regions
-),
-p AS (
-    SELECT *,
-        (n <= 8) AS skip,
-        (n // 4 > 1000) AS cap_hit,
-        (n % 4 = 0) AS even,
-        CASE WHEN (n // 4 > 1000) THEN 1000
-             WHEN (n % 4 = 0) THEN n // 4
-             ELSE n // 4 + 1 END AS span_count
-    FROM ranked
-),
-q AS (
-    SELECT *,
-        CASE WHEN cap_hit THEN n // 1000 WHEN even THEN 4
-             ELSE n // span_count END AS rps
-    FROM p
-),
-r AS (
-    SELECT *,
-        CASE WHEN cap_hit THEN n % 1000 WHEN even THEN 0
-             ELSE n - rps * span_count END AS remain
-    FROM q
-),
-assigned AS (
-    SELECT *,
-        CASE WHEN skip THEN 0
-             WHEN i < remain * (rps + 1) THEN i // (rps + 1)
-             ELSE remain + (i - remain * (rps + 1)) // rps END AS span_id
-    FROM r
-)
-SELECT schema_name, table_name, span_id,
-       min(start_key) AS start_key, max(end_key) AS end_key,
-       count(*) AS region_count, sum(written_bytes)::BIGINT AS written_bytes
-FROM assigned GROUP BY 1, 2, 3
-"""
-
-
-@register("span_split_region_count", _SPAN_RC_SQL)
-def q_span_split_region_count(spark, sf_dir):
-    regions = synthetic_regions(events_changelog(spark, sf_dir))
-    return split_spans_region_count(
-        regions, region_count_per_span=4, region_threshold=8
-    )
-
-
-# write-bytes greedy (write_bytes_splitter.go:105-226) — the sequential
-# algorithm runs per table in applyInPandas on the Spark side; the oracle
-# replays the identical state machine as a DuckDB recursive CTE over the
-# per-table weight list (one recursion step per region).
-_SPAN_WB_SQL = f"""
-WITH RECURSIVE {CHANGELOG_SQL}, {_REGIONS_CTE.strip()},
-agg AS (
-    SELECT schema_name, table_name,
-           list(written_bytes + 1 ORDER BY region_idx) AS ws,
-           list(start_key ORDER BY region_idx) AS sk,
-           list(end_key ORDER BY region_idx) AS ek,
-           count(*)::BIGINT AS n,
-           (sum(written_bytes) + count(*))::BIGINT AS total
-    FROM regions GROUP BY 1, 2
-),
-st AS (
-    SELECT schema_name, table_name, ws, sk, ek, n, total, total // 4 AS lim,
-           0::BIGINT AS i, 0::BIGINT AS span_start, 0::BIGINT AS span_w,
-           4::BIGINT AS rest_spans, total AS rest_weight,
-           []::STRUCT(s BIGINT, e BIGINT, w BIGINT)[] AS spans,
-           false AS done
-    FROM agg
-    UNION ALL
-    SELECT schema_name, table_name, ws, sk, ek, n, total, lim,
-           CASE WHEN brk THEN i ELSE i + 1 END,
-           CASE WHEN emit THEN i + 1 ELSE span_start END,
-           CASE WHEN emit OR brk THEN 0 ELSE w1 END,
-           CASE WHEN emit THEN rs1 - 1 ELSE rs1 END,
-           CASE WHEN emit THEN rest_weight - w1 ELSE rest_weight END,
-           CASE WHEN brk THEN list_append(spans,
-                    {{'s': span_start, 'e': n - 1, 'w': rest_weight}})
-                WHEN emit THEN list_append(spans,
-                    {{'s': span_start, 'e': i, 'w': w1}})
-                ELSE spans END,
-           brk OR (emit AND i = n - 1) OR (NOT emit AND i = n - 1)
-    FROM (
-        SELECT *,
-            span_w + ws[i + 1] AS w1,
-            n - i AS rest_regions,
-            (rest_spans = 1 AND rest_weight < lim) AS brk,
-            CASE WHEN rest_spans = 1 AND NOT brk THEN rest_weight // lim
-                 ELSE rest_spans END AS rs1,
-            (NOT brk) AND (rest_regions <= rs1 OR w1 > lim) AS emit
-        FROM st WHERE NOT done
-    )
-),
-final AS (SELECT * FROM st WHERE done),
-flat AS (
-    SELECT schema_name, table_name, ws, sk, ek,
-           u.sp.s AS s_i, u.sp.e AS e_i, u.sp.w AS weight
-    FROM final, unnest(final.spans) AS u(sp)
-)
-SELECT schema_name, table_name,
-       row_number() OVER (PARTITION BY schema_name, table_name
-           ORDER BY s_i) - 1 AS span_id,
-       sk[s_i + 1] AS start_key, ek[e_i + 1] AS end_key,
-       e_i - s_i + 1 AS region_count, weight
-FROM flat
-"""
-
-
-@register("span_split_write_bytes", _SPAN_WB_SQL, bench="plan")
-def q_span_split_write_bytes(spark, sf_dir):
-    regions = synthetic_regions(events_changelog(spark, sf_dir))
-    return split_spans_write_bytes(regions, spans_num=4)
-
-
-# ---------------------------------------------------------------------------
 # DDL create-view normalization (operators/ddl_normalizer.py)
 # ---------------------------------------------------------------------------
 from ticdc_spark.operators.ddl_normalizer import normalize_create_view  # noqa: E402
@@ -2188,97 +1943,6 @@ def q_canal_consumer_roundtrip(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# A3 — flow-control memory accounting (operators/flow_control.py)
-# ---------------------------------------------------------------------------
-from ticdc_spark.operators.flow_control import (  # noqa: E402
-    area_flow_control, circuit_breaker, path_flow_control, usage_samples,
-)
-
-_FC_SAMPLES_CTE = """
-samples AS (
-    SELECT schema_name AS area, table_name AS path,
-           commit_ts - commit_ts % 600000000 AS bucket_ts,
-           (count(*) * 64 + sum(pk % 41))::BIGINT AS usage_bytes
-    FROM changelog GROUP BY 1, 2, 3
-)
-"""
-
-_FC_PATH_SQL = f"""
-WITH {CHANGELOG_SQL}, {_FC_SAMPLES_CTE.strip()},
-m AS (
-    SELECT *, usage_bytes * 100 // 800 AS usage_pct,
-           CASE WHEN usage_bytes * 100 // 800 > 20 THEN 1
-                WHEN usage_bytes * 100 // 800 < 10 THEN 0 END AS marker
-    FROM samples
-)
-SELECT area, path, bucket_ts, usage_bytes, usage_pct,
-       coalesce(last_value(marker IGNORE NULLS) OVER (
-           PARTITION BY area, path ORDER BY bucket_ts
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)
-       AS path_paused
-FROM m
-"""
-
-
-@register("flow_control_paths", _FC_PATH_SQL)
-def q_flow_control_paths(spark, sf_dir):
-    s = usage_samples(events_changelog(spark, sf_dir))
-    return path_flow_control(s, quota_bytes=800)
-
-
-_FC_AREA_SQL = f"""
-WITH {CHANGELOG_SQL}, {_FC_SAMPLES_CTE.strip()},
-a AS (
-    SELECT area, bucket_ts, sum(usage_bytes)::BIGINT AS usage_bytes
-    FROM samples GROUP BY 1, 2
-),
-m AS (
-    SELECT *, usage_bytes * 100 // 800 AS usage_pct,
-           CASE WHEN usage_bytes * 100 // 800 > 80 THEN 1
-                WHEN usage_bytes * 100 // 800 < 50 THEN 0 END AS marker
-    FROM a
-)
-SELECT area, bucket_ts, usage_bytes, usage_pct,
-       coalesce(last_value(marker IGNORE NULLS) OVER (
-           PARTITION BY area ORDER BY bucket_ts
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)
-       AS area_paused
-FROM m
-"""
-
-
-@register("flow_control_areas", _FC_AREA_SQL)
-def q_flow_control_areas(spark, sf_dir):
-    s = usage_samples(events_changelog(spark, sf_dir))
-    return area_flow_control(s, quota_bytes=800)
-
-
-_FC_BREAKER_SQL = f"""
-WITH {CHANGELOG_SQL}, {_FC_SAMPLES_CTE.strip()},
-a AS (
-    SELECT area, bucket_ts, sum(usage_bytes)::BIGINT AS area_bytes
-    FROM samples GROUP BY 1, 2
-    HAVING sum(usage_bytes) * 100 > 800 * 85
-),
-ranked AS (
-    SELECT s.area, s.bucket_ts, a.area_bytes, s.path, s.usage_bytes,
-           row_number() OVER (PARTITION BY s.area, s.bucket_ts
-               ORDER BY s.usage_bytes DESC, s.path DESC) AS rn
-    FROM samples s JOIN a ON s.area = a.area AND s.bucket_ts = a.bucket_ts
-)
-SELECT area, bucket_ts, area_bytes, path AS discard_path,
-       usage_bytes AS discard_bytes
-FROM ranked WHERE rn = 1
-"""
-
-
-@register("flow_control_breaker", _FC_BREAKER_SQL)
-def q_flow_control_breaker(spark, sf_dir):
-    s = usage_samples(events_changelog(spark, sf_dir))
-    return circuit_breaker(s, quota_bytes=800, global_pct=85)
-
-
-# ---------------------------------------------------------------------------
 # A5/§2.12 — transaction-atomicity flush batches (sinks/mysql.py)
 # ---------------------------------------------------------------------------
 from ticdc_spark.sinks.mysql import txn_flush_batches  # noqa: E402
@@ -2320,191 +1984,6 @@ def q_txn_flush_batches(spark, sf_dir):
         F.min("commit_ts").alias("first_ts"),
         F.max("commit_ts").alias("last_ts"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Scheduler balance planning (plans/scheduler.py — pkg/scheduler/balance.go)
-# ---------------------------------------------------------------------------
-from ticdc_spark.plans.scheduler import balance_spans, check_balance_status  # noqa: E402
-
-_BALANCE_SETUP = """
-spans AS (
-    SELECT DISTINCT table_id * 100000 + pk // 64 AS span_id FROM changelog
-),
-assign AS (
-    SELECT span_id,
-           'node_' || (CASE WHEN span_id % 10 < 6 THEN 0
-                            WHEN span_id % 10 < 9 THEN 1 ELSE 2 END) AS node_id
-    FROM spans
-),
-nodes AS (SELECT 'node_' || i AS node_id FROM range(4) t(i)),
-loads AS (
-    SELECT n.node_id, count(a.span_id) AS load
-    FROM nodes n LEFT JOIN assign a USING (node_id) GROUP BY 1
-),
-tot AS (SELECT sum(load) // count(*) AS floor_limit FROM loads),
-dd AS (SELECT sum(greatest(floor_limit - load, 0))::BIGINT AS d FROM loads, tot)
-"""
-
-_BALANCE_SQL = f"""
-WITH {CHANGELOG_SQL}, {_BALANCE_SETUP.strip()},
-takes AS (
-    SELECT a.span_id, a.node_id, l.load,
-           row_number() OVER (PARTITION BY a.node_id ORDER BY a.span_id) AS e
-    FROM assign a JOIN loads l USING (node_id)
-),
-takes2 AS (
-    SELECT *, row_number() OVER (
-        ORDER BY load - e DESC, node_id ASC, e ASC) AS take_rank
-    FROM takes
-),
-slots AS (
-    SELECT l.node_id, l.load,
-           unnest(generate_series(1::BIGINT, ((SELECT floor_limit FROM tot) - l.load)::BIGINT)) AS f
-    FROM loads l WHERE l.load < (SELECT floor_limit FROM tot)
-),
-slots2 AS (
-    SELECT node_id AS to_node, load + f AS prio, f,
-           row_number() OVER (ORDER BY load + f ASC, node_id ASC, f ASC) AS slot_rank
-    FROM slots
-),
-moved AS (
-    SELECT t.span_id, s.to_node, t.take_rank AS move_rank
-    FROM takes2 t JOIN slots2 s ON t.take_rank = s.slot_rank
-    WHERE t.take_rank <= (SELECT d FROM dd)
-)
-SELECT a.span_id, a.node_id AS node_id_before,
-       coalesce(m.to_node, a.node_id) AS node_id_after,
-       m.move_rank
-FROM assign a LEFT JOIN moved m USING (span_id)
-"""
-
-
-def _balance_inputs(spark, sf_dir):
-    cl = events_changelog(spark, sf_dir)
-    # the span list feeds several scheduler subtrees (loads, victims,
-    # slots); cache the one changelog-wide distinct so the big scan runs
-    # once — everything downstream is node-count metadata
-    spans = cl.select(
-        (F.col("table_id") * 100000 + F.expr("pk div 64")).alias("span_id")
-    ).distinct().cache()
-    idx = F.when(F.col("span_id") % 10 < 6, F.lit(0)).when(
-        F.col("span_id") % 10 < 9, F.lit(1)
-    ).otherwise(F.lit(2))
-    assign = spans.withColumn("node_id", F.concat(F.lit("node_"), idx))
-    nodes = spark.range(4).select(
-        F.concat(F.lit("node_"), F.col("id")).alias("node_id")
-    )
-    return assign, nodes
-
-
-@register("scheduler_balance", _BALANCE_SQL, bench="plan")
-def q_scheduler_balance(spark, sf_dir):
-    """Balance plan over a deliberately imbalanced span→node assignment
-    (node_3 starts empty); every under-floor node is topped up to
-    floor(total/4) from the most-loaded nodes, heap-pop order."""
-    assign, nodes = _balance_inputs(spark, sf_dir)
-    return balance_spans(assign, nodes)
-
-
-@register(
-    "scheduler_balance_status",
-    f"WITH {CHANGELOG_SQL}, {_BALANCE_SETUP.strip()} SELECT d AS move_size FROM dd",
-)
-def q_scheduler_balance_status(spark, sf_dir):
-    assign, nodes = _balance_inputs(spark, sf_dir)
-    return check_balance_status(assign, nodes)
-
-
-_DRAIN_SQL = f"""
-WITH {CHANGELOG_SQL}, {_BALANCE_SETUP.strip()},
-survivors AS (SELECT node_id FROM nodes WHERE node_id <> 'node_0'),
-sloads AS (
-    SELECT s.node_id, count(a.span_id) AS load
-    FROM survivors s LEFT JOIN assign a USING (node_id) GROUP BY 1
-),
-victims AS (
-    SELECT span_id, row_number() OVER (ORDER BY span_id) AS take_rank
-    FROM assign WHERE node_id = 'node_0'
-),
-vd AS (SELECT count(*) AS d FROM victims),
-slots AS (
-    SELECT l.node_id, l.load,
-           unnest(generate_series(1::BIGINT, (SELECT d FROM vd)::BIGINT)) AS f
-    FROM sloads l
-),
-slots2 AS (
-    SELECT node_id AS to_node, f,
-           row_number() OVER (ORDER BY load + f ASC, node_id ASC, f ASC) AS slot_rank
-    FROM slots
-),
-moved AS (
-    SELECT v.span_id, s.to_node, v.take_rank AS move_rank
-    FROM victims v JOIN slots2 s ON v.take_rank = s.slot_rank
-)
-SELECT a.span_id, a.node_id AS node_id_before,
-       coalesce(m.to_node, a.node_id) AS node_id_after,
-       m.move_rank
-FROM assign a LEFT JOIN moved m USING (span_id)
-"""
-
-
-@register("scheduler_drain", _DRAIN_SQL)
-def q_scheduler_drain(spark, sf_dir):
-    """Drain node_0 (the most loaded): its spans spread across the
-    survivors by least-loaded slot priority."""
-    from ticdc_spark.plans.scheduler import drain_node
-
-    assign, nodes = _balance_inputs(spark, sf_dir)
-    return drain_node(assign, nodes, "node_0")
-
-
-# ---------------------------------------------------------------------------
-# A5 — table-progress tracking (`downstreamadapter/dispatcher/
-# table_progress.go`): checkpoint/lastSynced per table over a flushed
-# prefix of the sink order
-# ---------------------------------------------------------------------------
-
-_TP_ORACLE = f"""
-WITH {CHANGELOG_SQL},
-marked AS (
-    SELECT schema_name, table_name, commit_ts,
-           row_number() OVER (PARTITION BY schema_name, table_name
-                              ORDER BY commit_ts, start_ts, seq)
-             <= CAST(floor(count(*) OVER (PARTITION BY schema_name,
-                                          table_name) * 0.7) AS BIGINT)
-             AS flushed
-    FROM changelog
-),
-agg AS (
-    SELECT schema_name, table_name,
-           count(*) AS n_events,
-           sum(CASE WHEN NOT flushed THEN 1 ELSE 0 END) AS n_inflight,
-           max(commit_ts) AS max_commit,
-           min(CASE WHEN NOT flushed THEN commit_ts END) AS min_unflushed,
-           max(CASE WHEN flushed THEN commit_ts END) AS max_flushed
-    FROM marked GROUP BY 1, 2
-)
-SELECT schema_name, table_name,
-       CAST(n_events AS BIGINT) AS n_events,
-       CAST(n_inflight AS BIGINT) AS n_inflight,
-       CAST(coalesce(min_unflushed - 1, max_commit - 1, 0) AS BIGINT)
-           AS checkpoint_ts,
-       CAST(coalesce(max_flushed, 0) AS BIGINT) AS last_synced_ts,
-       CAST(max_commit AS BIGINT) AS max_commit_ts,
-       n_inflight = 0 AS empty
-FROM agg
-"""
-
-
-@register("table_progress", _TP_ORACLE, bench="plan")
-def q_table_progress(spark, sf_dir):
-    from ticdc_spark.operators.table_progress import (
-        flush_frontier, table_progress,
-    )
-
-    cl = events_changelog(spark, sf_dir)
-    return table_progress(flush_frontier(cl, 0.7))
 
 
 # ---------------------------------------------------------------------------
@@ -2687,76 +2166,6 @@ def q_codec_debezium_watermark(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# BasicSchedule (`pkg/scheduler/basic.go:23-56`): absent tasks to the
-# least-loaded nodes, capped at available size
-# ---------------------------------------------------------------------------
-
-_BASIC_AVAIL = 10
-
-_BASIC_SQL = f"""
-WITH {CHANGELOG_SQL},
-spans AS (
-    SELECT DISTINCT table_id * 100000 + pk // 8 AS span_id FROM changelog
-),
-absent AS (SELECT span_id FROM spans WHERE span_id % 3 = 1),
-assigned AS (
-    SELECT span_id,
-           'node_' || (CASE WHEN span_id % 10 < 6 THEN 0
-                            WHEN span_id % 10 < 9 THEN 1 ELSE 2 END) AS node_id
-    FROM spans WHERE span_id % 3 <> 1
-),
-nodes AS (SELECT 'node_' || i AS node_id FROM range(4) t(i)),
-loads AS (
-    SELECT n.node_id, count(a.span_id) AS load
-    FROM nodes n LEFT JOIN assigned a USING (node_id) GROUP BY 1
-),
-dd AS (SELECT least(count(*), {_BASIC_AVAIL})::BIGINT AS d FROM absent),
-ranked AS (
-    SELECT span_id, row_number() OVER (ORDER BY span_id) AS assign_rank
-    FROM absent
-),
-slots AS (
-    SELECT l.node_id, l.load + f.f AS q,
-           row_number() OVER (ORDER BY l.load + f.f, l.node_id) AS slot_rank
-    FROM loads l, dd, LATERAL (
-        SELECT unnest(generate_series(1, dd.d)) AS f) f
-)
-SELECT r.span_id,
-       CASE WHEN r.assign_rank <= dd.d THEN s.node_id END AS node_id,
-       CASE WHEN r.assign_rank <= dd.d
-            THEN CAST(r.assign_rank AS BIGINT) END AS assign_rank
-FROM ranked r
-CROSS JOIN dd
-LEFT JOIN slots s ON s.slot_rank = r.assign_rank
-"""
-
-
-@register("scheduler_basic", _BASIC_SQL)
-def q_scheduler_basic(spark, sf_dir):
-    """Absent spans (span_id % 3 == 1) scheduled onto the least-loaded
-    nodes given the remaining assignment; capped at 50 per tick."""
-    from ticdc_spark.plans.scheduler import assign_absent
-
-    cl = events_changelog(spark, sf_dir)
-    # finer span granularity than the balance queries (pk div 8) so the
-    # absent set exceeds the per-tick cap at the driver's SF
-    spans = cl.select(
-        (F.col("table_id") * 100000 + F.expr("pk div 8")).alias("span_id")
-    ).distinct().cache()
-    absent = spans.filter(F.col("span_id") % 3 == 1)
-    assigned = spans.filter(F.col("span_id") % 3 != 1).withColumn(
-        "node_id",
-        F.concat(F.lit("node_"), F.when(F.col("span_id") % 10 < 6, F.lit(0))
-                 .when(F.col("span_id") % 10 < 9, F.lit(1))
-                 .otherwise(F.lit(2))),
-    )
-    nodes = spark.range(4).select(
-        F.concat(F.lit("node_"), F.col("id")).alias("node_id"))
-    return assign_absent(absent, assigned, nodes,
-                         available_size=_BASIC_AVAIL)
-
-
-# ---------------------------------------------------------------------------
 # DDL query rewriting for routed tables (`pkg/routing/
 # ddl_query_rewriter.go`): renamed targets rewritten inside the DDL
 # text; strings/comments/columns untouched; multi-statement per-stmt
@@ -2919,65 +2328,6 @@ def q_dispatcher_set_checksum(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Span coverage verification (`pkg/spanz/btree_map.go:128` FindHoles):
-# holes and overlaps in each table's dispatcher span set
-# ---------------------------------------------------------------------------
-
-_HOLES_ORACLE = f"""
-WITH {CHANGELOG_SQL},
-regions AS (
-    SELECT table_id, pk // 8 AS region_idx FROM changelog GROUP BY 1, 2
-),
-spans AS (
-    SELECT table_id, region_idx * 8 AS start_key,
-           (region_idx + 1) * 8 AS end_key
-    FROM regions
-    -- poke deterministic damage: drop every 5th region (holes) and
-    -- stretch every 7th span 16 keys right (overlaps)
-    WHERE region_idx % 5 <> 2
-),
-damaged AS (
-    SELECT table_id, start_key,
-           CASE WHEN (start_key // 8) % 7 = 3 THEN end_key + 4
-                ELSE end_key END AS end_key
-    FROM spans
-),
-m AS (
-    SELECT *, lag(end_key) OVER (PARTITION BY table_id
-                                 ORDER BY start_key, end_key) AS prev_end
-    FROM damaged
-)
-SELECT table_id, 'hole' AS kind, prev_end AS gap_start,
-       start_key AS gap_end
-FROM m WHERE prev_end IS NOT NULL AND prev_end < start_key
-UNION ALL
-SELECT table_id, 'overlap' AS kind, start_key AS gap_start,
-       least(prev_end, end_key) AS gap_end
-FROM m WHERE prev_end IS NOT NULL AND prev_end > start_key
-"""
-
-
-@register("span_coverage_holes", _HOLES_ORACLE)
-def q_span_coverage_holes(spark, sf_dir):
-    from ticdc_spark.plans.span_split import find_span_holes
-
-    cl = events_changelog(spark, sf_dir)
-    regions = cl.select(
-        "table_id", F.expr("pk div 8").alias("region_idx")).distinct()
-    spans = (
-        regions.filter(F.col("region_idx") % 5 != 2)
-        .select(
-            "table_id",
-            (F.col("region_idx") * 8).alias("start_key"),
-            F.when((F.col("region_idx") % 7) == 3,
-                   (F.col("region_idx") + 1) * 8 + 4)
-            .otherwise((F.col("region_idx") + 1) * 8).alias("end_key"),
-        )
-    )
-    return find_span_holes(spans)
-
-
-# ---------------------------------------------------------------------------
 # MySQL-sink DDL transforms: VECTOR->LONGBLOB formatting
 # (`pkg/sink/mysql/format_ddl.go:27-61`) and anonymous-index name
 # restoration (`pkg/sink/mysql/ddl_index_rewrite.go:25-110`) —
@@ -3075,106 +2425,6 @@ def q_mysql_index_name_restore(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# R7 — span MERGE chooser (scale-in), the inverse of span splitting:
-# `maintainer/replica/split_span_checker.go:768-871` chooseMergedSpans.
-# Greedy run accumulation in start-key order with three break rules
-# (node change, region cap 3/4*threshold, traffic cap 3/4*threshold);
-# runs >= 2 spans become merge groups, capped per table.  The oracle
-# replays the identical walk as a DuckDB recursive CTE.
-# ---------------------------------------------------------------------------
-_MERGE_REGION_THRESHOLD = 16    # cap 12
-_MERGE_WRITE_THRESHOLD = 9000   # cap 6750
-_MERGE_BATCH_CAP = 5
-
-_SPAN_MERGE_SQL = f"""
-WITH RECURSIVE {CHANGELOG_SQL},
-spans0 AS (
-    SELECT table_id, pk // 8 AS region_idx,
-           (pk // 8) * 8 AS start_key, (pk // 8 + 1) * 8 AS end_key,
-           CAST(1 + (pk // 8) % 5 AS BIGINT) AS region_count,
-           ((sum(pk % 97) * 7) % 5000)::BIGINT AS traffic,
-           'node_' || ((pk // 8) // 3 % 3)::VARCHAR AS node_id
-    FROM changelog GROUP BY table_id, pk // 8
-),
-spans AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY table_id ORDER BY start_key) AS rn
-    FROM spans0
-),
-walk AS (
-    SELECT table_id, rn, node_id, region_count, traffic,
-           start_key, end_key,
-           1 AS run_id, region_count AS run_regions,
-           traffic AS run_traffic
-    FROM spans WHERE rn = 1
-    UNION ALL
-    SELECT s.table_id, s.rn, s.node_id, s.region_count, s.traffic,
-           s.start_key, s.end_key,
-           CASE WHEN s.node_id <> w.node_id
-                     OR w.run_regions + s.region_count
-                        > {_MERGE_REGION_THRESHOLD // 4 * 3}
-                     OR 4 * (w.run_traffic + s.traffic)
-                        > {3 * _MERGE_WRITE_THRESHOLD}
-                THEN w.run_id + 1 ELSE w.run_id END,
-           CASE WHEN s.node_id <> w.node_id
-                     OR w.run_regions + s.region_count
-                        > {_MERGE_REGION_THRESHOLD // 4 * 3}
-                     OR 4 * (w.run_traffic + s.traffic)
-                        > {3 * _MERGE_WRITE_THRESHOLD}
-                THEN s.region_count ELSE w.run_regions + s.region_count END,
-           CASE WHEN s.node_id <> w.node_id
-                     OR w.run_regions + s.region_count
-                        > {_MERGE_REGION_THRESHOLD // 4 * 3}
-                     OR 4 * (w.run_traffic + s.traffic)
-                        > {3 * _MERGE_WRITE_THRESHOLD}
-                THEN s.traffic ELSE w.run_traffic + s.traffic END
-    FROM walk w JOIN spans s
-      ON s.table_id = w.table_id AND s.rn = w.rn + 1
-),
-runs AS (
-    SELECT table_id, run_id, min(start_key) AS start_key,
-           max(end_key) AS end_key, count(*) AS n_spans,
-           sum(region_count)::BIGINT AS region_count,
-           sum(traffic)::BIGINT AS traffic, min(node_id) AS node_id
-    FROM walk GROUP BY table_id, run_id
-),
-mergeable AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY table_id ORDER BY run_id) - 1 AS merge_group
-    FROM runs WHERE n_spans >= 2
-)
-SELECT table_id, merge_group, start_key, end_key, n_spans,
-       region_count, traffic, node_id
-FROM mergeable WHERE merge_group < {_MERGE_BATCH_CAP}
-"""
-
-
-@register("span_merge_groups", _SPAN_MERGE_SQL, bench="plan")
-def q_span_merge_groups(spark, sf_dir):
-    from ticdc_spark.plans.span_split import choose_merged_spans
-
-    cl = events_changelog(spark, sf_dir)
-    spans = (
-        cl.groupBy("table_id", F.expr("pk div 8").alias("region_idx"))
-        .agg(
-            (F.col("region_idx") * 8).alias("start_key"),
-            ((F.col("region_idx") + 1) * 8).alias("end_key"),
-            ((F.sum(F.pmod(F.col("pk"), F.lit(97))) * 7) % 5000)
-            .alias("traffic"),
-        )
-        .withColumn("region_count",
-                    (F.col("region_idx") % 5 + 1).cast("long"))
-        .withColumn("node_id", F.concat(
-            F.lit("node_"),
-            F.expr("cast(region_idx div 3 % 3 as string)")))
-    )
-    return choose_merged_spans(
-        spans, region_threshold=_MERGE_REGION_THRESHOLD,
-        write_threshold=_MERGE_WRITE_THRESHOLD,
-        batch_cap=_MERGE_BATCH_CAP)
-
-
-# ---------------------------------------------------------------------------
 # K6 — redo v2 WIRE roundtrip (`pkg/redo/codec/codec.go`,
 # `pkg/redo/writer/writer.go:77-85`, codec/msgpack_redo.py): the
 # changelog serialized into version-prefixed msgpack RedoLog records
@@ -3250,185 +2500,6 @@ def q_redo_v2_roundtrip(spark, sf_dir):
                 "schema_name", "table_name", "table_id", "op",
                 "commit_ts", "start_ts", "before_id", "before_val",
                 "before_k", "after_id", "after_val", "after_k"])
-
-    return cl.mapInPandas(run, schema)
-
-
-# ---------------------------------------------------------------------------
-# Wire family — BatchDMLEvent WITH the chunk row payload
-# (`pkg/common/event/dml_event.go:241-330`: metadata frames followed by
-# the TiDB chunk-codec buffer over the table's field slice; decode
-# walks the frames out and AssembleRows reassembles the shared chunk).
-# One BatchDMLEvent per table per partition; txns in commit-ts order;
-# row keys ride as encoded record keys (RowKeys per logical row).
-# Identity oracle — the decoded walk must reproduce the changelog
-# (pk travels as the record key; seq is txn metadata, not per-row).
-# Arrow-batched mapInPandas: the per-row byte codec is the sanctioned
-# slow path, map-only, scales linearly with executors.
-# ---------------------------------------------------------------------------
-def _txn_slices(pdf):
-    """Sorted changelog frame → per-table txn row-ranges, vectorized.
-
-    Returns ``(pdf_sorted, tables)`` where ``tables`` is
-    ``[(table_id, [(commit_ts, start_ts, seq_min, lo, hi), ...]), ...]``
-    with ``[lo, hi)`` row ranges into the sorted frame.  Replaces the
-    nested ``groupby`` + ``itertuples`` walk: on a changelog where most
-    txns are 1-2 rows, pandas pays ~2 ms per sub-frame (namedtuple
-    class build + iloc chains — measured 32 s of a 38 s sf0.1 run);
-    numpy boundary detection over the sorted arrays is ~ns/row.
-    """
-    import numpy as np
-
-    pdf = pdf.sort_values(
-        ["table_id", "commit_ts", "start_ts", "dml_order", "seq"],
-        kind="mergesort", ignore_index=True)
-    tid = pdf["table_id"].to_numpy()
-    cts = pdf["commit_ts"].to_numpy()
-    sts = pdf["start_ts"].to_numpy()
-    seq = pdf["seq"].to_numpy()
-    n = len(pdf)
-    chg = np.flatnonzero(
-        (tid[1:] != tid[:-1]) | (cts[1:] != cts[:-1])
-        | (sts[1:] != sts[:-1])) + 1
-    bounds = np.concatenate(([0], chg, [n]))
-    seq_min = np.minimum.reduceat(seq, bounds[:-1])
-    tables: list = []
-    cur_tid = None
-    for i in range(len(bounds) - 1):
-        lo, hi = int(bounds[i]), int(bounds[i + 1])
-        t = int(tid[lo])
-        if cur_tid != t:
-            cur: list = []
-            tables.append((t, cur))
-            cur_tid = t
-        cur.append((int(cts[lo]), int(sts[lo]), int(seq_min[i]), lo, hi))
-    return pdf, tables
-
-
-def _chunk_spread(cl):
-    """Hash-spread the single-split changelog across cores on txn keys
-    (table_id, commit_ts, start_ts) so whole txns stay co-located while
-    the per-row byte codec parallelizes (``scale_out`` rationale; keyed
-    instead of round-robin so no txn splits across BatchDMLEvents)."""
-    par = cl.sparkSession.sparkContext.defaultParallelism
-    return cl.repartition(par, "table_id", "commit_ts", "start_ts")
-
-
-_DML_CHUNK_COLS = ("table_id, op, commit_ts, start_ts, pk, "
-                   "before_id, before_val, before_k, "
-                   "after_id, after_val, after_k")
-
-_DML_CHUNK_ORACLE = (
-    f"WITH {CHANGELOG_SQL} SELECT {_DML_CHUNK_COLS} FROM changelog"
-)
-
-
-@register("dml_event_chunk_roundtrip", _DML_CHUNK_ORACLE, bench="plan")
-def q_dml_event_chunk_roundtrip(spark, sf_dir):
-    import pandas as pd
-
-    from ticdc_spark.codec.chunk_codec import (
-        TYPE_DOUBLE,
-        TYPE_LONGLONG,
-        ChunkCodec,
-    )
-    from ticdc_spark.codec.control_events import (
-        OP_TO_ROW_TYPE,
-        ROW_TYPE_DELETE,
-        ROW_TYPE_INSERT,
-        ROW_TYPE_UPDATE,
-        DMLEventMeta,
-    )
-    from ticdc_spark.codec.dml_event import (
-        BatchDMLEvent,
-        decode_batch_dml_event,
-        encode_batch_dml_event,
-        iter_row_changes,
-    )
-    from ticdc_spark.codec.rowcodec import (
-        decode_record_key,
-        encode_record_key,
-    )
-    from ticdc_spark.queries import _flatten
-    from ticdc_spark.sources.changelog import events_changelog
-
-    cl = _chunk_spread(_flatten(events_changelog(spark, sf_dir)))
-    schema = ("table_id long, op string, commit_ts long, start_ts long, "
-              "pk long, before_id long, before_val double, before_k long, "
-              "after_id long, after_val double, after_k long")
-    field_types = [TYPE_LONGLONG, TYPE_DOUBLE, TYPE_LONGLONG]
-    codec = ChunkCodec(field_types)
-    rt_to_op = {ROW_TYPE_INSERT: "I", ROW_TYPE_UPDATE: "U",
-                ROW_TYPE_DELETE: "D"}
-
-    def _ni(v):
-        return None if v is None or v != v else int(v)
-
-    def _nf(v):
-        return None if v is None or v != v else float(v)
-
-    def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf, tables = _txn_slices(pdf)
-            op_l = pdf["op"].tolist()
-            pk_l = pdf["pk"].tolist()
-            bid_l = pdf["before_id"].tolist()
-            bval_l = pdf["before_val"].tolist()
-            bk_l = pdf["before_k"].tolist()
-            aid_l = pdf["after_id"].tolist()
-            aval_l = pdf["after_val"].tolist()
-            ak_l = pdf["after_k"].tolist()
-            out = []
-            for table_id, txns in tables:
-                events, ids, vals, ks = [], [], [], []
-                prev_total = 0
-                for cts, sts, seq_min, lo, hi in txns:
-                    row_types, row_keys = [], []
-                    approx = 0
-                    for i in range(lo, hi):
-                        rt = OP_TO_ROW_TYPE[op_l[i]]
-                        row_types.append(rt)
-                        pk = int(pk_l[i])
-                        row_keys.append(encode_record_key(table_id, pk))
-                        approx += 64 + pk % 97
-                        if rt in (ROW_TYPE_UPDATE, ROW_TYPE_DELETE):
-                            ids.append(_ni(bid_l[i]))
-                            vals.append(_nf(bval_l[i]))
-                            ks.append(_ni(bk_l[i]))
-                        if rt in (ROW_TYPE_UPDATE, ROW_TYPE_INSERT):
-                            ids.append(_ni(aid_l[i]))
-                            vals.append(_nf(aval_l[i]))
-                            ks.append(_ni(ak_l[i]))
-                    events.append(DMLEventMeta(
-                        dispatcher_id=(table_id, 0),
-                        physical_table_id=table_id,
-                        start_ts=sts, commit_ts=cts,
-                        seq=seq_min, epoch=1,
-                        length=len(row_types), approximate_size=approx,
-                        previous_total_offset=prev_total,
-                        row_types=tuple(row_types),
-                        row_keys=tuple(row_keys)))
-                    prev_total += len(row_types)
-                blob = encode_batch_dml_event(
-                    BatchDMLEvent(tuple(events), (tuple(ids), tuple(vals),
-                                                  tuple(ks))), codec)
-                # --- the wire image decodes back to the rows ---
-                dec = decode_batch_dml_event(blob, codec)
-                key_iters = [iter(ev.row_keys) for ev in dec.events]
-                for idx, rt, pre, post in iter_row_changes(dec):
-                    ev = dec.events[idx]
-                    _, pk = decode_record_key(next(key_iters[idx]))
-                    b = pre if pre is not None else (None,) * 3
-                    a = post if post is not None else (None,) * 3
-                    out.append((ev.physical_table_id, rt_to_op[rt],
-                                ev.commit_ts, ev.start_ts, pk,
-                                b[0], b[1], b[2], a[0], a[1], a[2]))
-            yield pd.DataFrame(out, columns=[
-                "table_id", "op", "commit_ts", "start_ts", "pk",
-                "before_id", "before_val", "before_k",
-                "after_id", "after_val", "after_k"])
 
     return cl.mapInPandas(run, schema)
 
@@ -3766,171 +2837,6 @@ def q_claim_check_raw_value_roundtrip(spark, sf_dir):
                         resolved["claim_location"] == F.col("_o_loc"),
                         "left")
     return out.select("seq", "is_large", "value", "stored_object")
-
-
-# ---------------------------------------------------------------------------
-# BatchDMLEvent chunk payload — TYPED column coverage: a string column
-# (unicode), a TiDB binary-JSON column, and a NEWDECIMAL column (the
-# 40-byte MyDecimal struct image) ride the chunk buffer next to the
-# numeric fields.  Same wire layout as dml_event_chunk_roundtrip
-# (`pkg/common/event/dml_event.go:241-330`, TiDB util/chunk/codec.go);
-# the identity oracle pins every type's decode.  Values derive from pk
-# so both sides compute them closed-form.
-# ---------------------------------------------------------------------------
-_CHUNK_TXT = ["plain ascii", "unicode 中文 ✓", "", "tail"]
-_CHUNK_DEC = ["0", "12.3400", "-0.001", "99999.999"]
-
-
-def _chunk_typed_json_texts():
-    from ticdc_spark.queries import _json_fixture_texts
-
-    return _json_fixture_texts()
-
-
-def _chunk_case(vals, col="pk"):
-    return ("CASE CAST(" + col + " % 4 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{v}'" for i, v in enumerate(vals))
-            + " END")
-
-
-_CHUNK_ENUM = ("red", "green", "blue")
-_CHUNK_SET = ("a", "b", "c")
-_SET_NAMES = ["", "a", "b", "a,b", "c", "a,c", "b,c", "a,b,c"]
-
-_CHUNK_TYPED_ORACLE = f"""
-WITH {CHANGELOG_SQL}
-SELECT table_id, op, commit_ts, start_ts, pk,
-       {_chunk_case(_CHUNK_TXT)} AS txt,
-       {{JCASE}} AS j,
-       {_chunk_case(_CHUNK_DEC)} AS dec,
-       (pk % 3 + 1)::BIGINT AS en_ord,
-       CASE CAST(pk % 3 AS INT) {' '.join(
-           f"WHEN {i} THEN '{n}'" for i, n in enumerate(_CHUNK_ENUM))}
-       END AS en,
-       (pk % 8)::BIGINT AS st_mask,
-       CASE CAST(pk % 8 AS INT) {' '.join(
-           f"WHEN {i} THEN '{n}'" for i, n in enumerate(_SET_NAMES))}
-       END AS st
-FROM changelog
-"""
-
-
-def _chunk_typed_oracle() -> str:
-    return _CHUNK_TYPED_ORACLE.replace(
-        "{JCASE}", _chunk_case(_chunk_typed_json_texts()))
-
-
-@register("dml_event_chunk_typed", _chunk_typed_oracle(), bench="plan")
-def q_dml_event_chunk_typed(spark, sf_dir):
-    import pandas as pd
-
-    from ticdc_spark.codec.binary_json import (
-        binary_to_json,
-        json_to_binary,
-        render_json,
-    )
-    from ticdc_spark.codec.chunk_codec import (
-        TYPE_ENUM,
-        TYPE_JSON,
-        TYPE_LONGLONG,
-        TYPE_NEWDECIMAL,
-        TYPE_SET,
-        TYPE_VARCHAR,
-        ChunkCodec,
-    )
-    from ticdc_spark.codec.control_events import (
-        OP_TO_ROW_TYPE,
-        ROW_TYPE_UPDATE,
-        DMLEventMeta,
-    )
-    from ticdc_spark.codec.dml_event import (
-        BatchDMLEvent,
-        decode_batch_dml_event,
-        encode_batch_dml_event,
-        iter_row_changes,
-    )
-    from ticdc_spark.queries import _flatten
-    from ticdc_spark.sources.changelog import events_changelog
-
-    import json as _json
-
-    cl = _chunk_spread(_flatten(events_changelog(spark, sf_dir)).select(
-        "table_id", "pk", "op", "commit_ts", "start_ts", "dml_order",
-        "seq"))
-    schema = ("table_id long, op string, commit_ts long, start_ts long, "
-              "pk long, txt string, j string, dec string, "
-              "en_ord long, en string, st_mask long, st string")
-    codec = ChunkCodec([TYPE_LONGLONG, TYPE_VARCHAR, TYPE_JSON,
-                        TYPE_NEWDECIMAL, TYPE_ENUM, TYPE_SET])
-    jtexts = _chunk_typed_json_texts()
-    jdocs = [json_to_binary(_json.loads(t)) for t in jtexts]
-    rt_to_op = {v: k for k, v in OP_TO_ROW_TYPE.items()}
-
-    def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf, tables = _txn_slices(pdf)
-            op_l = pdf["op"].tolist()
-            pk_l = pdf["pk"].tolist()
-            out = []
-            for table_id, txns in tables:
-                events, pks, txts, js, decs = [], [], [], [], []
-                ens, sts_col = [], []
-                prev = 0
-                for cts, sts, seq_min, lo, hi in txns:
-                    rts = []
-                    for i in range(lo, hi):
-                        rt = OP_TO_ROW_TYPE[op_l[i]]
-                        rts.append(rt)
-                        n_phys = 2 if rt == ROW_TYPE_UPDATE else 1
-                        for _ in range(n_phys):
-                            pk = int(pk_l[i])
-                            m = pk % 4
-                            pks.append(pk)
-                            txts.append(_CHUNK_TXT[m])
-                            js.append(jdocs[m])
-                            decs.append(_CHUNK_DEC[m])
-                            # appendNameValue pairs: enum 1-based
-                            # ordinal + name; SET u64 bitmask + the
-                            # comma-joined members (multi-member masks
-                            # included — codec.go appendNameValue)
-                            ens.append((pk % 3 + 1,
-                                        _CHUNK_ENUM[pk % 3]))
-                            sts_col.append((pk % 8,
-                                            _SET_NAMES[pk % 8]))
-                    events.append(DMLEventMeta(
-                        dispatcher_id=(table_id, 0),
-                        physical_table_id=table_id,
-                        start_ts=sts, commit_ts=cts,
-                        seq=seq_min, epoch=1,
-                        length=len(rts), approximate_size=0,
-                        previous_total_offset=prev,
-                        row_types=tuple(rts), row_keys=()))
-                    prev += len(rts)
-                blob = encode_batch_dml_event(
-                    BatchDMLEvent(tuple(events),
-                                  (tuple(pks), tuple(txts), tuple(js),
-                                   tuple(decs), tuple(ens),
-                                   tuple(sts_col))), codec)
-                dec_b = decode_batch_dml_event(blob, codec)
-                for idx, rt, pre, post in iter_row_changes(dec_b):
-                    ev = dec_b.events[idx]
-                    row = post if post is not None else pre
-                    out.append((
-                        ev.physical_table_id, rt_to_op[rt],
-                        ev.commit_ts, ev.start_ts, row[0],
-                        row[1].decode("utf-8"),
-                        render_json(binary_to_json(row[2])),
-                        row[3],
-                        row[4][0], row[4][1],
-                        row[5][0], row[5][1],
-                    ))
-            yield pd.DataFrame(out, columns=[
-                "table_id", "op", "commit_ts", "start_ts", "pk",
-                "txt", "j", "dec", "en_ord", "en", "st_mask", "st"])
-
-    return cl.mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------

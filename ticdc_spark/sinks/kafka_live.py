@@ -42,18 +42,16 @@ def start_broker(n_partitions: int = 16, flexible_only: bool = True):
     return broker
 
 
-#: what each produce task reports per (topic, table_id) it sent: the row
-#: count, the commit-ts range and the max seq (null where the frame does
-#: not carry the column) — a changefeed's checkpoint is built from these
-SUMMARY_SCHEMA = ("topic string, table_id long, rows long, min_ts long, "
-                  "max_ts long, max_seq long")
+#: what each produce task reports per topic it sent: the row count and
+#: the commit-ts range (null where the frame does not carry commit_ts) —
+#: a changefeed's checkpoint is built from these
+SUMMARY_SCHEMA = "topic string, rows long, min_ts long, max_ts long"
 _SUMMARY_FIELDS = [f.split() for f in SUMMARY_SCHEMA.split(", ")]
 _SUMMARY_COLS = [name for name, _ in _SUMMARY_FIELDS]
-_SUMMARY_KEYS = ("topic", "table_id")
+_SUMMARY_KEYS = ("topic",)
 #: summary column -> (frame column, aggregate), besides the row count
 _SUMMARY_AGGS = {"min_ts": ("commit_ts", "min"),
-                 "max_ts": ("commit_ts", "max"),
-                 "max_seq": ("seq", "max")}
+                 "max_ts": ("commit_ts", "max")}
 
 
 def _summarize(pdf):
@@ -113,12 +111,12 @@ def produce_frame(
     else:
         key_col = F.col("key")
     val_col = F.col("value").cast("binary") if cols.get("value") == "string" else F.col("value")
-    summarized = [c for c in ("table_id", "commit_ts", "seq") if c in cols]
+    summarized = ["commit_ts"] if "commit_ts" in cols else []
     shaped = ordered(
         frame.select(
             "topic", F.col("partition").cast("int").alias("partition"),
             key_col.alias("key"), val_col.alias("value"),
-            *[c for c in ("table_id", *SORT_KEYS) if c in cols],
+            *[c for c in SORT_KEYS if c in cols],
         ),
         # co-locate each (topic, partition) so batches aren't 1-row sprays
         ["topic", "partition"],

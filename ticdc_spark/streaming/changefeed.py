@@ -13,12 +13,14 @@ collapses into one ``StreamingQuery``:
   `maintainer/maintainer.go:83-88`) = what the epoch's flush reported:
   as in the reference, where checkpointTs follows what the sink flushed,
   the flush is the epoch's only pass over its rows.  The live Kafka
-  produce tasks return a summary per (topic, table) — rows, commit-ts
-  range, max seq — and the progress log entry, the resolved frame, the
-  syncpoints and the watermark broadcast are built from those few rows
-  with no further Spark job (file/DB sinks: one per-table aggregate,
-  ``kafka_live.summarize``, before the write).  One epoch is one data
-  pass, the Structured Streaming (SIGMOD 2018) micro-batch model.
+  produce tasks return a summary per topic — rows and commit-ts range —
+  and the progress log entry, the syncpoints and the watermark
+  broadcast are built from those few rows with no further Spark job
+  (file/DB sinks: one aggregate, ``kafka_live.summarize``, before the
+  write).  The resolved ts reaches downstream through the progress
+  log's ``resolved_ts`` and the live WATERMARK broadcast.  One epoch is
+  one data pass, the Structured Streaming (SIGMOD 2018) micro-batch
+  model.
 - epoch size = the changefeed's ``memory-quota``
   (`pkg/config/server.go:44-45`, 1 GiB default): each epoch admits
   source files up to that many on-disk bytes (at least one file), so a
@@ -173,14 +175,13 @@ class Changefeed:
         Live Kafka: the produce is the epoch's only pass over its rows.
         It clusters them by (topic, partition), sorts each partition on
         the replay key (the reference's per-dispatcher ordered flush), and
-        its tasks report a summary per (topic, table): rows, commit-ts
-        range, max seq.  File and DB sinks take the same summary from one
-        per-table aggregate over the pre-compile frame
-        (``kafka_live.summarize``), then write.
+        its tasks report a summary per topic: rows and commit-ts range.
+        File and DB sinks take the same summary from one aggregate over
+        the pre-compile frame (``kafka_live.summarize``), then write.
         ``_commit_epoch`` builds the progress entry (the changefeed's
-        checkpointTs), the resolved frame, the syncpoints and the
-        watermark broadcast from those few rows, with no further Spark
-        job; an epoch that reports 0 rows records nothing.
+        checkpointTs), the syncpoints and the watermark broadcast from
+        those few rows, with no further Spark job; an epoch that reports
+        0 rows records nothing.
         """
         epoch_id += self.epoch_offset  # rewind-generation namespace
         live_mq = (self.live_bootstrap is not None
@@ -277,8 +278,8 @@ class Changefeed:
 
         cols = set(batch_df.columns)
         frame = batch_df.select(*[
-            c for c in ("topic", "partition", "key", "value", "table_id",
-                        *SORT_KEYS) if c in cols])
+            c for c in ("topic", "partition", "key", "value", *SORT_KEYS)
+            if c in cols])
         barriers, topics = self._pending_ddl_barriers(frame)
         if not barriers:
             return produce_frame(frame, self.live_bootstrap)
@@ -302,13 +303,11 @@ class Changefeed:
                       live_mq: bool) -> None:
         """Checkpoint bookkeeping from the flush's summary rows
         (``kafka_live.SUMMARY_SCHEMA``, a few per task): the progress
-        entry, the resolved frame, the syncpoints and, on the live wire,
-        the watermark broadcast.  No Spark job runs here."""
+        entry, the syncpoints and, on the live wire, the watermark
+        broadcast.  No Spark job runs here."""
         rows = [r.asDict() for r in summary]
         stamped = [r for r in rows if r.get("max_ts") is not None]
         resolved_ts = max((r["max_ts"] for r in stamped), default=None)
-        if stamped:
-            self._write_resolved_frame(stamped, epoch_id)
         self._append_progress({
             "changefeed": self.changefeed_id,
             "epoch": epoch_id,
@@ -445,37 +444,6 @@ class Changefeed:
                 t: {pt["index"]: [Record(None, value)]
                     for pt in md["topics"][t]["partitions"]}
                 for t in topics})
-
-    def _write_resolved_frame(self, summary: list[dict], epoch_id: int) -> None:
-        """W1 on the wire: the per-dispatcher watermarks of this epoch
-        as ONE BatchResolvedEvent frame (`resolved_ts_event.go`,
-        codec/resolved_event.py) — the artifact a mixed deployment's
-        consumer reads to advance its frontier.  Per-table max ts and
-        seq over the flush's summary rows (one event per dispatcher);
-        the write is per-epoch overwrite, idempotent under foreachBatch
-        replay."""
-        from ticdc_spark.codec.resolved_event import (
-            ResolvedEvent,
-            encode_batch,
-        )
-
-        per_tbl: dict[int, tuple[int, int]] = {}
-        for r in summary:
-            if r.get("table_id") is None:
-                continue
-            ts, seq = per_tbl.get(r["table_id"], (r["max_ts"], 0))
-            per_tbl[r["table_id"]] = (max(ts, r["max_ts"]),
-                                      max(seq, r["max_seq"] or 0))
-        if not per_tbl:
-            return
-        events = [
-            ResolvedEvent(int(ts), int(epoch_id), int(seq), (int(tid), 0))
-            for tid, (ts, seq) in sorted(per_tbl.items())
-        ]
-        path = os.path.join(self.work_dir, "resolved", self.changefeed_id)
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, f"epoch={epoch_id}.bin"), "wb") as f:
-            f.write(encode_batch(events))
 
     def _write_syncpoints(self, min_ts: int, resolved_ts: int) -> None:
         """W2 syncpoint writer (`mysql_writer_for_syncpoint.go:33-67`):

@@ -1,4 +1,5 @@
-"""Codec microbenchmark: payload compression and the Kafka record batch.
+"""Codec microbenchmark: payload compression, the Kafka record batch and
+the Avro message codecs.
 
     python tools/codec_microbench.py [--records N] [--repeat R]
 
@@ -11,7 +12,11 @@ same file run from two checkouts compares them.  Prints one JSON line:
 - ``kafka_batch``: ``encode_record_batch`` and ``decode_record_batches``
   µs per record (best of R passes) over N records with 150-450 B
   canal-JSON-like values and 20 B keys, uncompressed, in batches of 512
-  records as the live produce sends them.
+  records as the live produce sends them;
+- ``avro``: µs per row (best of R passes over N rows) for the native
+  ``avro`` protocol's Confluent value encode, key encode and value
+  decode, and for the debezium-avro codec cache's encode and decode of
+  wire JSON, each through an in-memory schema registry.
 
 The inputs come from a fixed seed, so two runs time the same bytes.
 """
@@ -64,6 +69,51 @@ def _best(fn, repeat: int) -> float:
     return best
 
 
+def _avro(n: int, repeat: int) -> dict:
+    from ticdc_spark.codec.avro_protocol import (
+        decode_message,
+        encode_row_key,
+        encode_row_value,
+    )
+    from ticdc_spark.codec.debezium_avro import DebeziumAvroCodecCache
+    from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
+
+    def per_row(fn, items) -> float:
+        fn(items[0])  # registers the schema outside the timing
+        return round(_best(lambda: [fn(x) for x in items], repeat)
+                     / len(items) * 1e6, 2)
+
+    m = ConfluentSchemaManager.in_memory()
+    rows = [{"id": i, "val": i * 0.5, "k": i * 7} for i in range(n)]
+    blobs = [encode_row_value(m, "t", "s", "tbl", r, "U", 1 << 20)
+             for r in rows]
+    codec = DebeziumAvroCodecCache(ConfluentSchemaManager.in_memory())
+    dbz_schema = {"type": "struct", "name": "dbz.tbl.Envelope", "fields": [
+        {"field": "id", "type": "int64"},
+        {"field": "val", "type": "double", "optional": True},
+        {"field": "k", "type": "int64", "optional": True},
+        {"field": "note", "type": "string", "optional": True},
+    ]}
+    msgs = [json.dumps({"payload": {**r, "note": f"n{r['id']}"},
+                        "schema": dbz_schema}, separators=(",", ":"))
+            for r in rows]
+    dblobs = [codec.encode_wire_json(j, "t", "-value") for j in msgs]
+    return {
+        "rows": n,
+        "confluent_value_encode_us": per_row(
+            lambda r: encode_row_value(m, "t", "s", "tbl", r, "U", 1 << 20),
+            rows),
+        "confluent_key_encode_us": per_row(
+            lambda r: encode_row_key(m, "t", "s", "tbl", r), rows),
+        "confluent_value_decode_us": per_row(
+            lambda b: decode_message(m, "t-value", b), blobs),
+        "debezium_encode_us": per_row(
+            lambda j: codec.encode_wire_json(j, "t", "-value"), msgs),
+        "debezium_decode_us": per_row(
+            lambda b: codec.decode(b, "t-value"), dblobs),
+    }
+
+
 def main(argv=None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--records", type=int, default=15_360)
@@ -104,6 +154,7 @@ def main(argv=None) -> None:
             "encode_us_per_record": round(encode_s * us, 2),
             "decode_us_per_record": round(decode_s * us, 2),
         },
+        "avro": _avro(args.records, args.repeat),
         "crc32c": "native" if kw.crc32c is not kw._crc32c_py else "python",
     }))
 

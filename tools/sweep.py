@@ -6,8 +6,12 @@ Each shard gets every Nth query name (sorted), its own SparkSession
 (SPARK_GRAFT_CPUS caps its cores), and prints RED lines + progress.
 Exit 0 iff every checked query matched.
 
-Usage: python sweep.py SF_DIR SHARD NSHARDS
-       for i in 0 1 2; do python sweep.py dir $i 3 > shard$i.log & done
+The comparison itself is ``tests/oracle_harness.py`` (the module the
+parity test uses); the script puts ``tests/`` and the checkout holding
+it on ``sys.path``, so it runs from any directory.
+
+Usage: python tools/sweep.py SF_DIR SHARD NSHARDS
+       for i in 0 1 2; do python tools/sweep.py dir $i 3 > shard$i.log & done
 """
 
 from __future__ import annotations
@@ -16,13 +20,15 @@ import os
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> None:
     sf_dir = sys.argv[1]
     shard = int(sys.argv[2]) if len(sys.argv) > 2 else 0
     nshards = int(sys.argv[3]) if len(sys.argv) > 3 else 1
 
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests"))
+    sys.path[:0] = [ROOT, os.path.join(ROOT, "tests")]
     from oracle_harness import compare, run_oracle
 
     from ticdc_spark.queries import ORACLES, QUERIES
