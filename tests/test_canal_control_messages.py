@@ -1,0 +1,40 @@
+"""The canal-json DDL and TIDB_WATERMARK messages a live changefeed
+broadcasts: valid JSON for any SQL text, and unchanged bytes for text
+that needs no escape."""
+
+import json
+
+from ticdc_spark.codec.canal_json import (canal_ddl_message,
+                                          canal_watermark_message)
+
+
+def test_ddl_message_is_valid_json_for_any_sql():
+    sql = ('CREATE TABLE `tü` (\n  c VARCHAR(8) DEFAULT "a\\b"'
+           " COMMENT '中文'\n)")
+    msg = canal_ddl_message({"schema_name": "db", "table_name": "tü",
+                             "commit_ts": 1_700_000_123_456, "query": sql,
+                             "ddl_type": "create-table"})
+    m = json.loads(msg)
+    assert m["sql"] == sql
+    assert (m["database"], m["table"], m["type"], m["es"], m["isDdl"]) == (
+        "db", "tü", "CREATE", 1_700_000_123, True)
+    assert "中文".encode() in msg  # non-ASCII travels as UTF-8, unescaped
+
+
+def test_plain_messages_keep_their_bytes():
+    ddl = {"schema_name": "db", "table_name": "t",
+           "commit_ts": 1_700_000_123_456, "query": "DROP TABLE t",
+           "ddl_type": "drop-table"}
+    assert canal_ddl_message(ddl) == (
+        b'{"id":0,"database":"db","table":"t","pkNames":null,"isDdl":true,'
+        b'"type":"ERASE","es":1700000123,"ts":0,"sql":"DROP TABLE t",'
+        b'"sqlType":null,"mysqlType":null,"data":null,"old":null}')
+    assert canal_ddl_message({"commit_ts": 0, "ddl_type": "unknown"}) == (
+        b'{"id":0,"database":"","table":"","pkNames":null,"isDdl":true,'
+        b'"type":"QUERY","es":0,"ts":0,"sql":"","sqlType":null,'
+        b'"mysqlType":null,"data":null,"old":null}')
+    assert canal_watermark_message(1_700_000_123_456) == (
+        b'{"id":0,"database":"","table":"","pkNames":null,"isDdl":false,'
+        b'"type":"TIDB_WATERMARK","es":1700000123,"ts":0,"sql":"",'
+        b'"sqlType":null,"mysqlType":null,"data":null,"old":null,'
+        b'"_tidb":{"watermarkTs":1700000123456}}')

@@ -77,7 +77,7 @@ def test_sasl_gssapi_live_roundtrip(kdc):
         from ticdc_spark.codec import kafka_wire as kw
 
         with KafkaConn.from_bootstrap(b.bootstrap) as c2:
-            r = c2._call(kw.API_METADATA, 1, kw.enc_metadata_request(None))
+            r = c2._call(kw.API_METADATA, 1, kw.enc_metadata_request(1, None))
             assert r.i16() == kw.ERR_ILLEGAL_SASL_STATE
 
 

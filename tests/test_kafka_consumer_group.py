@@ -178,7 +178,7 @@ def test_group_plane_all_flexible_only():
             import struct as _struct
 
             r = c._call(kw.API_JOIN_GROUP, 2,
-                        kw.enc_join_group_request("g", "", ["t"]))
+                        kw.enc_join_group_request(2, "g", "", ["t"]))
             assert r.i16() == kw.ERR_UNSUPPORTED_VERSION
             # txn family end-to-end over the flexible frames
             txn = c.init_producer_id("cf-flex")

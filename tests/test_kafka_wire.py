@@ -169,15 +169,15 @@ def test_request_response_framing():
     assert (api_key, ver, corr, cid) == (kw.API_PRODUCE, 3, 7, "cid")
     assert r.raw(4) == b"BODY"
 
-    resp = kw.frame_response(7, b"OK")
+    resp = kw.frame_response(kw.API_PRODUCE, 3, 7, b"OK")
     rr = Reader(resp[4:])
     assert rr.i32() == 7 and rr.raw(2) == b"OK"
 
 
 def test_produce_request_codec_roundtrip():
     rs = kw.encode_record_batch([Record(b"k", b"v")])
-    body = kw.enc_produce_request({"t": {0: rs, 3: rs}}, acks=-1)
-    txn, acks, timeout, td = kw.dec_produce_request(Reader(body))
+    body = kw.enc_produce_request(3, {"t": {0: rs, 3: rs}}, acks=-1)
+    txn, acks, timeout, td = kw.dec_produce_request(Reader(body), 3)
     assert txn is None and acks == -1 and set(td["t"]) == {0, 3}
     assert td["t"][0] == rs
 
@@ -218,8 +218,8 @@ def test_live_corrupt_batch_rejected(broker, monkeypatch):
     monkeypatch.undo()
     with KafkaConn.from_bootstrap(broker.bootstrap) as c:
         for rs in (bytes(bad_crc), bad_lz4):
-            resp = kw.dec_produce_response(
-                c._call(kw.API_PRODUCE, 3, kw.enc_produce_request({"t": {0: rs}})))
+            resp = kw.dec_produce_response(c._call(
+                kw.API_PRODUCE, 3, kw.enc_produce_request(3, {"t": {0: rs}})), 3)
             assert resp["t"][0] == (2, -1)  # CORRUPT_MESSAGE
         # log untouched
         assert broker.high_watermark("t", 0) == 0
@@ -228,8 +228,8 @@ def test_live_corrupt_batch_rejected(broker, monkeypatch):
 def test_live_unknown_partition(broker):
     with KafkaConn.from_bootstrap(broker.bootstrap) as c:
         rs = kw.encode_record_batch([Record(b"a", b"b")])
-        resp = kw.dec_produce_response(
-            c._call(kw.API_PRODUCE, 3, kw.enc_produce_request({"t": {9: rs}})))
+        resp = kw.dec_produce_response(c._call(
+            kw.API_PRODUCE, 3, kw.enc_produce_request(3, {"t": {9: rs}})), 3)
         assert resp["t"][9] == (3, -1)  # UNKNOWN_TOPIC_OR_PARTITION
 
 
@@ -516,11 +516,11 @@ def test_oauthbearer_with_live_token_endpoint():
             conn = KafkaConn.from_bootstrap(b.bootstrap)
             _kw.dec_sasl_handshake_response(conn._call(
                 _kw.API_SASL_HANDSHAKE, 1,
-                _kw.enc_sasl_handshake_request("OAUTHBEARER")))
+                _kw.enc_sasl_handshake_request(1, "OAUTHBEARER")), 1)
             err, msg, body = _kw.dec_sasl_authenticate_response(conn._call(
                 _kw.API_SASL_AUTHENTICATE, 0,
                 _kw.enc_sasl_authenticate_request(
-                    oauth2.oauthbearer_initial_response(forged))))
+                    0, oauth2.oauthbearer_initial_response(forged))), 0)
             assert err == _kw.ERR_SASL_AUTHENTICATION_FAILED
             assert b"invalid_token" in body
             conn.close()
@@ -555,8 +555,8 @@ def test_truncated_tail_batch_keeps_log_consistent(broker):
         # cut the second batch inside its header (<12 bytes of tail left
         # after the first batch) — decode_record_batches tolerates this
         rs = good + tail[:8]
-        resp = kw.dec_produce_response(
-            c._call(kw.API_PRODUCE, 3, kw.enc_produce_request({"tt": {0: rs}})))
+        resp = kw.dec_produce_response(c._call(
+            kw.API_PRODUCE, 3, kw.enc_produce_request(3, {"tt": {0: rs}})), 3)
         assert resp["tt"][0] == (0, 0)
         # a follow-up produce must get base offset 2, not a duplicate 0
         base = c.produce("tt", 0, [Record(b"k2", b"v2")])
@@ -573,7 +573,7 @@ def test_produce_acks0_sends_no_response(broker):
         c._corr += 1
         c.sock.sendall(kw.frame_request(
             kw.API_PRODUCE, 3, c._corr, c.client_id,
-            kw.enc_produce_request({"t0": {0: rs}}, acks=0)))
+            kw.enc_produce_request(3, {"t0": {0: rs}}, acks=0)))
         # next call reuses the same socket; any stray produce response
         # would surface as a correlation-id mismatch here
         md = c.metadata(["t0"])
@@ -609,35 +609,43 @@ def test_flexible_primitives_roundtrip():
     assert kw.enc_uvarint(300) == b"\xac\x02"
     r = Reader(kw.enc_uvarint(300))
     assert r.uvarint() == 300
-    assert kw.enc_compact_str(None) == b"\x00"
-    assert kw.enc_compact_str("") == b"\x01"
-    r = Reader(kw.enc_compact_str("topic-a") + kw.enc_compact_bytes(b"xyz"))
-    assert r.compact_string() == "topic-a"
-    assert r.compact_bytes() == b"xyz"
+    w = kw.Writer(flexible=True)
+    w.string(None)
+    w.string("")
+    w.string("topic-a")
+    w.bytes_(b"xyz")
+    buf = w.done()
+    assert buf[:2] == b"\x00\x01"  # null, then empty
+    r = Reader(buf, flexible=True)
+    assert r.string() is None and r.string() == ""
+    assert r.string() == "topic-a"
+    assert r.bytes_() == b"xyz"
     # tagged fields: unknown tags must be skipped cleanly
     tagged = kw.enc_uvarint(2) + kw.enc_uvarint(5) + kw.enc_uvarint(3) + b"abc" \
         + kw.enc_uvarint(9) + kw.enc_uvarint(1) + b"z" + b"\xde\xad"
-    r = Reader(tagged)
+    r = Reader(tagged, flexible=True)
     r.skip_tags()
     assert r.raw(2) == b"\xde\xad"
 
 
 def test_produce_v9_fetch_v12_codec_roundtrip():
     rs = kw.encode_record_batch([Record(b"k", b"v")])
-    body = kw.enc_produce_request_v9({"t": {0: rs}}, acks=-1)
-    txn, acks, _, data = kw.dec_produce_request_v9(Reader(body))
+    body = kw.enc_produce_request(9, {"t": {0: rs}}, acks=-1)
+    txn, acks, _, data = kw.dec_produce_request(Reader(body), 9)
     assert txn is None and acks == -1 and data == {"t": {0: rs}}
-    resp = kw.enc_produce_response_v9({"t": {0: (0, 42)}})
-    assert kw.dec_produce_response_v9(Reader(resp)) == {"t": {0: (0, 42)}}
+    resp = kw.enc_produce_response(9, {"t": {0: (0, 42)}})
+    assert kw.dec_produce_response(Reader(resp), 9) == {"t": {0: (0, 42)}}
 
-    fbody = kw.enc_fetch_request_v12("t", 1, 5, isolation=1)
-    assert kw.dec_fetch_request_v12(Reader(fbody)) == (1, [("t", 1, 5, 1 << 26)])
-    fresp = kw.enc_fetch_response_v12([("t", 1, 0, 9, rs)])
-    assert kw.dec_fetch_response_v12(Reader(fresp)) == [("t", 1, 0, 9, 9, [], rs)]
+    fbody = kw.enc_fetch_request(12, [("t", 1, 5, 1 << 26)], isolation=1)
+    assert kw.dec_fetch_request(Reader(fbody), 12) == (
+        1, 0, -1, [("t", 1, 5, 1 << 26)], [])
+    fresp = kw.enc_fetch_response(12, [("t", 1, 0, 9, rs)])
+    assert kw.dec_fetch_response(Reader(fresp), 12) == (
+        0, 0, [("t", 1, 0, 9, 9, [], rs)])
     # 7-tuple form carries lso + aborted ranges through
-    fresp = kw.enc_fetch_response_v12([("t", 1, 0, 9, rs, 4, [(1000, 2)])])
-    assert kw.dec_fetch_response_v12(Reader(fresp)) == [
-        ("t", 1, 0, 9, 4, [(1000, 2)], rs)]
+    fresp = kw.enc_fetch_response(12, [("t", 1, 0, 9, rs, 4, [(1000, 2)])])
+    assert kw.dec_fetch_response(Reader(fresp), 12) == (
+        0, 0, [("t", 1, 0, 9, 4, [(1000, 2)], rs)])
 
 
 def test_apiversions_v3_negotiation_and_flexible_live():
@@ -668,8 +676,28 @@ def test_flexible_only_broker_rejects_classic_versions():
             # hand-rolled classic Produce v3 -> error 35
             rs = kw.encode_record_batch([Record(b"a", b"b")])
             r = c._call(kw.API_PRODUCE, 3,
-                        kw.enc_produce_request({"t": {0: rs}}))
+                        kw.enc_produce_request(3, {"t": {0: rs}}))
             assert r.i16() == kw.ERR_UNSUPPORTED_VERSION
+
+
+def test_broker_refuses_versions_without_a_layout(broker):
+    """The broker advertises Metadata 1..9 and Produce 3..9, but the codec
+    lays out only the classic floor and the flexible version of each: a
+    version in between is answered UNSUPPORTED_VERSION, not with another
+    version's body."""
+    assert broker.supported[kw.API_METADATA] == (1, 9)
+    assert broker.supported[kw.API_PRODUCE] == (3, 9)
+    rs = kw.encode_record_batch([Record(b"k", b"v")])
+    # Metadata v4 adds allow_auto_topic_creation to the v1 body
+    metadata_v4 = kw.enc_metadata_request(1, ["t"]) + b"\x01"
+    # Produce v5's request body is the v3 one
+    produce_v5 = kw.enc_produce_request(3, {"t": {0: rs}})
+    with KafkaConn.from_bootstrap(broker.bootstrap) as c:
+        for api, version, body in ((kw.API_METADATA, 4, metadata_v4),
+                                   (kw.API_PRODUCE, 5, produce_v5)):
+            r = c._call(api, version, body)
+            assert r.i16() == kw.ERR_UNSUPPORTED_VERSION
+    assert broker.high_watermark("t", 0) == 0
 
 
 def test_list_offsets_by_timestamp_live(broker):
@@ -1038,7 +1066,8 @@ def test_fetch_session_seek_forget_and_recovery(broker):
         got = fs.poll()
         assert [r.value for _, r in got[("fz", 1)]] == [b"w3"]
         # raw-frame check: unknown session id -> top-level error 69
-        body = kw2.enc_fetch_request_v12_session(424242, 5, [])
+        body = kw2.enc_fetch_request(12, [], session_id=424242,
+                                     session_epoch=5)
         r = c._call(kw2.API_FETCH, 12, body)
-        err, sid, parts = kw2.dec_fetch_response_v12_session(r)
+        err, sid, parts = kw2.dec_fetch_response(r, 12)
         assert err == kw2.ERR_FETCH_SESSION_ID_NOT_FOUND

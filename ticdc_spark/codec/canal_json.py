@@ -17,6 +17,8 @@ Java SQL types (java.go): BIGINT → -5, DOUBLE → 8.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -200,6 +202,35 @@ CANAL_DDL_EVENT_TYPE = {
     "drop-schema": "QUERY",
     "other": "QUERY",
 }
+
+
+def _json_message(fields: dict) -> bytes:
+    # escapes what the SQL text needs; text that needs no escape keeps
+    # the bytes of the concatenated frames below
+    return json.dumps(fields, separators=(",", ":"),
+                      ensure_ascii=False).encode()
+
+
+def canal_ddl_message(ddl: dict) -> bytes:
+    """The DDL message a live changefeed broadcasts at a DDL barrier:
+    ``encode_canal_json_ddl``'s frame for one DDL event dict
+    (schema_name, table_name, commit_ts, query, ddl_type)."""
+    return _json_message({
+        "id": 0, "database": ddl.get("schema_name", ""),
+        "table": ddl.get("table_name", ""), "pkNames": None, "isDdl": True,
+        "type": CANAL_DDL_EVENT_TYPE.get(ddl.get("ddl_type", ""), "QUERY"),
+        "es": ddl["commit_ts"] // 1000, "ts": 0, "sql": ddl.get("query", ""),
+        "sqlType": None, "mysqlType": None, "data": None, "old": None})
+
+
+def canal_watermark_message(resolved_ts: int) -> bytes:
+    """The TIDB_WATERMARK message a live changefeed broadcasts after each
+    epoch: ``canal_checkpoints``' frame for one resolved ts."""
+    return _json_message({
+        "id": 0, "database": "", "table": "", "pkNames": None,
+        "isDdl": False, "type": "TIDB_WATERMARK", "es": resolved_ts // 1000,
+        "ts": 0, "sql": "", "sqlType": None, "mysqlType": None, "data": None,
+        "old": None, "_tidb": {"watermarkTs": resolved_ts}})
 
 
 def encode_canal_json_ddl(ddl: DataFrame) -> DataFrame:

@@ -1,21 +1,27 @@
 """Kafka wire protocol — byte codec for the subset a producer/consumer needs.
 
 Layouts follow the public Kafka protocol guide (kafka.apache.org/protocol).
-TWO header/field families coexist, negotiated per-connection via a real
-ApiVersions exchange (v3 first, v0 down-negotiation on error 35):
+Each API message has ONE encoder ``enc_X(version, ...)`` and ONE decoder
+``dec_X(reader, version)``, the way Kafka's own clients generate theirs
+from a message schema's ``validVersions`` and ``flexibleVersions``: the
+version sets the message's flexible flag on the ``Writer``/``Reader``,
+and ``if version >= N`` gates cover the fields that differ between
+versions. The flag picks the string, bytes and array encoding:
 
-- CLASSIC (non-flexible) versions — plain big-endian primitives, request
-  header v1, response header v0: ApiVersions v0, Metadata v1, Produce v3,
-  Fetch v4, ListOffsets v0, and the group/txn families' legacy versions.
-- FLEXIBLE (KIP-482) versions — compact (unsigned-varint-length) strings/
-  arrays/bytes + tagged fields, request header v2 / response header v1:
-  ApiVersions v3, Metadata v9, Produce v9, Fetch v12, ListOffsets v7
-  (incl. by-timestamp), FindCoordinator v3, JoinGroup v6, SyncGroup v4,
-  Heartbeat v4, OffsetCommit v8, OffsetFetch v6, LeaveGroup v4,
-  InitProducerId v2, AddPartitionsToTxn v3, EndTxn v3.
-  (ApiVersions responses always carry header v0 — the bootstrap quirk.)
+- CLASSIC versions — plain big-endian lengths, request header v1,
+  response header v0.
+- FLEXIBLE (KIP-482) versions — compact (unsigned-varint length + 1)
+  strings/arrays/bytes and tagged-field blocks, request header v2,
+  response header v1. ApiVersions responses keep header v0 at every
+  version (the bootstrap quirk).
 
-Shared by both families: record batch magic v2 with CRC32C (Castagnoli)
+``VERSIONS`` lists the versions the codec lays out per API: the classic
+floor and the flexible version a post-2.4 broker offers, or the one
+version of the admin and SASL messages. The client negotiates among them
+with a real ApiVersions exchange (v3 first, v0 down-negotiation on
+error 35); the broker answers UNSUPPORTED_VERSION for any other version.
+
+Shared by every version: record batch magic v2 with CRC32C (Castagnoli)
 over attributes..end and zigzag-varint record bodies; compression codecs
 none/gzip/lz4/zstd (lz4 = LZ4 frame; see codec/compression.py); KIP-98
 idempotent/transactional batch attributes and control records.
@@ -23,7 +29,7 @@ idempotent/transactional batch attributes and control records.
 Reference behavior being reproduced: `pkg/sink/kafka/*` drives sarama/franz-go
 producers speaking exactly these frames; this module lets the Spark sink
 exercise a real TCP round-trip in-process (see sinks/kafka_broker.py, whose
-default `flexible_only` mode refuses classic versions).
+`flexible_only` mode refuses classic versions).
 All from the public spec — no reference code consulted for bytes.
 """
 
@@ -91,25 +97,17 @@ crc32c = _na.crc32c if _na.LIB is not None else _crc32c_py
 # ---------------------------------------------------------------- primitives
 
 
-def enc_str(s: str | None) -> bytes:
-    if s is None:
-        return struct.pack(">h", -1)
-    b = s.encode("utf-8")
-    return struct.pack(">h", len(b)) + b
-
-
-def enc_bytes(b: bytes | None) -> bytes:
-    if b is None:
-        return struct.pack(">i", -1)
-    return struct.pack(">i", len(b)) + b
-
-
 class Reader:
-    __slots__ = ("buf", "pos")
+    """Reads one message. ``flexible`` (KIP-482) switches strings, bytes
+    and arrays to their compact form and makes ``skip_tags`` read a
+    tagged-fields block; each decoder sets it from its API's version."""
 
-    def __init__(self, buf: bytes, pos: int = 0):
+    __slots__ = ("buf", "pos", "flexible")
+
+    def __init__(self, buf: bytes, pos: int = 0, flexible: bool = False):
         self.buf = buf
         self.pos = pos
+        self.flexible = flexible
 
     def _unpack(self, fmt: str, size: int):
         v = struct.unpack_from(fmt, self.buf, self.pos)[0]
@@ -131,8 +129,11 @@ class Reader:
     def u32(self):
         return self._unpack(">I", 4)
 
+    def _len(self, fmt: str, size: int) -> int:
+        return self.uvarint() - 1 if self.flexible else self._unpack(fmt, size)
+
     def string(self) -> str | None:
-        n = self.i16()
+        n = self._len(">h", 2)
         if n < 0:
             return None
         s = self.buf[self.pos : self.pos + n].decode("utf-8")
@@ -140,12 +141,16 @@ class Reader:
         return s
 
     def bytes_(self) -> bytes | None:
-        n = self.i32()
+        n = self._len(">i", 4)
         if n < 0:
             return None
         b = self.buf[self.pos : self.pos + n]
         self.pos += n
         return b
+
+    def array_len(self) -> int:
+        """-> element count; -1 for a null array."""
+        return self._len(">i", 4)
 
     def varint(self) -> int:
         shift = 0
@@ -159,16 +164,6 @@ class Reader:
             shift += 7
         return (result >> 1) ^ -(result & 1)  # zigzag decode
 
-    def raw(self, n: int) -> bytes:
-        b = self.buf[self.pos : self.pos + n]
-        self.pos += n
-        return b
-
-    def remaining(self) -> int:
-        return len(self.buf) - self.pos
-
-    # -- flexible-version (KIP-482) primitives
-
     def uvarint(self) -> int:
         shift = 0
         result = 0
@@ -180,32 +175,79 @@ class Reader:
                 return result
             shift += 7
 
-    def compact_string(self) -> str | None:
-        n = self.uvarint() - 1
-        if n < 0:
-            return None
-        s = self.buf[self.pos : self.pos + n].decode("utf-8")
-        self.pos += n
-        return s
-
-    def compact_bytes(self) -> bytes | None:
-        n = self.uvarint() - 1
-        if n < 0:
-            return None
+    def raw(self, n: int) -> bytes:
         b = self.buf[self.pos : self.pos + n]
         self.pos += n
         return b
 
-    def compact_array_len(self) -> int:
-        """-> element count; -1 for a null array."""
-        return self.uvarint() - 1
+    def remaining(self) -> int:
+        return len(self.buf) - self.pos
 
     def skip_tags(self) -> None:
-        """Skip a tagged-fields block (we define none)."""
+        """Skip a flexible message's tagged-fields block (we define no
+        tagged field); a classic message has none."""
+        if not self.flexible:
+            return
         for _ in range(self.uvarint()):
             self.uvarint()  # tag
             size = self.uvarint()
             self.pos += size
+
+
+class Writer:
+    """Builds one message: collects its parts and joins them once, so a
+    record set is copied into the message one time. ``flexible`` picks
+    the encodings as in ``Reader``; ``tags`` writes an empty
+    tagged-fields block only when it is set."""
+
+    __slots__ = ("parts", "flexible")
+
+    def __init__(self, flexible: bool = False):
+        self.parts: list[bytes] = []
+        self.flexible = flexible
+
+    def pack(self, fmt: str, *values) -> None:
+        self.parts.append(struct.pack(fmt, *values))
+
+    def _len(self, fmt: str, n: int) -> None:
+        self.parts.append(enc_uvarint(n + 1) if self.flexible
+                          else struct.pack(fmt, n))
+
+    def string(self, s: str | None) -> None:
+        if s is None:
+            self._len(">h", -1)
+            return
+        b = s.encode("utf-8")
+        self._len(">h", len(b))
+        self.parts.append(b)
+
+    def bytes_(self, b: bytes | None) -> None:
+        self._len(">i", -1 if b is None else len(b))
+        if b is not None:
+            self.parts.append(b)
+
+    def array_len(self, n: int) -> None:
+        """n = element count; -1 writes a null array."""
+        self._len(">i", n)
+
+    def tags(self) -> None:
+        if self.flexible:
+            self.parts.append(b"\x00")  # zero tagged fields
+
+    def done(self) -> bytes:
+        return b"".join(self.parts)
+
+
+def enc_uvarint(v: int) -> bytes:
+    out = bytearray()
+    while True:
+        b = v & 0x7F
+        v >>= 7
+        if v:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return bytes(out)
 
 
 def enc_varint(v: int) -> bytes:
@@ -224,7 +266,6 @@ def enc_varint(v: int) -> bytes:
 
 def zigzag(v: int) -> int:
     return (v << 1) ^ (v >> 63) if v < 0 else (v << 1)
-
 
 # ---------------------------------------------------------------- record batch v2
 
@@ -403,1276 +444,6 @@ def decode_record_batches(buf: bytes) -> list[tuple[int, list[Record]]]:
         out.append((base_offset, records))
     return out
 
-
-# ---------------------------------------------------------------- request framing
-
-API_PRODUCE = 0
-API_FETCH = 1
-API_METADATA = 3
-API_API_VERSIONS = 18
-
-SUPPORTED = {API_PRODUCE: (3, 3), API_FETCH: (4, 4), API_METADATA: (1, 1), API_API_VERSIONS: (0, 0)}
-
-
-def frame_request(api_key: int, api_version: int, correlation_id: int, client_id: str, body: bytes) -> bytes:
-    hdr = struct.pack(">hhi", api_key, api_version, correlation_id) + enc_str(client_id)
-    msg = hdr + body
-    return struct.pack(">i", len(msg)) + msg
-
-
-def parse_request_header(buf: bytes) -> tuple[int, int, int, str | None, Reader]:
-    """Header v1, or v2 (same + tagged fields) when (api_key, version)
-    is flexible — the header version is derivable from those two i16s,
-    which is why the protocol put them first."""
-    r = Reader(buf)
-    api_key = r.i16()
-    api_version = r.i16()
-    corr = r.i32()
-    client_id = r.string()
-    if is_flexible(api_key, api_version):
-        r.skip_tags()
-    return api_key, api_version, corr, client_id, r
-
-
-def frame_response(correlation_id: int, body: bytes) -> bytes:
-    msg = struct.pack(">i", correlation_id) + body
-    return struct.pack(">i", len(msg)) + msg
-
-
-def frame_response_flex(correlation_id: int, body: bytes) -> bytes:
-    """Response header v1: correlation id + tagged fields (ApiVersions
-    responses are the exception — always header v0)."""
-    msg = struct.pack(">i", correlation_id) + b"\x00" + body
-    return struct.pack(">i", len(msg)) + msg
-
-
-# --------- ApiVersions v0
-
-
-def enc_api_versions_response(supported: dict[int, tuple[int, int]] | None = None) -> bytes:
-    supported = SUPPORTED if supported is None else supported
-    body = struct.pack(">h", 0)  # error_code
-    body += struct.pack(">i", len(supported))
-    for key, (lo, hi) in sorted(supported.items()):
-        body += struct.pack(">hhh", key, lo, hi)
-    return body
-
-
-def dec_api_versions_response(r: Reader) -> dict[int, tuple[int, int]]:
-    err = r.i16()
-    if err:
-        raise IOError(f"ApiVersions error {err}")
-    n = r.i32()
-    return {r.i16(): (r.i16(), r.i16()) for _ in range(n)}
-
-
-# --------- Metadata v1
-
-
-def enc_metadata_request(topics: list[str] | None) -> bytes:
-    if topics is None:
-        return struct.pack(">i", -1)
-    body = struct.pack(">i", len(topics))
-    for t in topics:
-        body += enc_str(t)
-    return body
-
-
-def dec_metadata_request(r: Reader) -> list[str] | None:
-    n = r.i32()
-    if n < 0:
-        return None
-    return [r.string() for _ in range(n)]
-
-
-def enc_metadata_response(
-    host: str, port: int, topics: dict[str, int], node_id: int = 0
-) -> bytes:
-    """``topics`` values: partition count, or (error_code, 0) for a
-    topic the broker refuses to auto-create (UNKNOWN_TOPIC_OR_PARTITION
-    when auto.create.topics.enable=false)."""
-    body = struct.pack(">i", 1)  # one broker
-    body += struct.pack(">i", node_id) + enc_str(host) + struct.pack(">i", port) + enc_str(None)
-    body += struct.pack(">i", node_id)  # controller_id
-    body += struct.pack(">i", len(topics))
-    for name, spec in sorted(topics.items()):
-        terr, n_parts = spec if isinstance(spec, tuple) else (0, spec)
-        body += struct.pack(">h", terr) + enc_str(name) + struct.pack(">?", False)
-        body += struct.pack(">i", n_parts)
-        for p in range(n_parts):
-            body += struct.pack(">hiii", 0, p, node_id, 1) + struct.pack(">i", node_id)
-            body += struct.pack(">i", 1) + struct.pack(">i", node_id)
-    return body
-
-
-def dec_metadata_response(r: Reader) -> dict:
-    brokers = []
-    for _ in range(r.i32()):
-        brokers.append({"node_id": r.i32(), "host": r.string(), "port": r.i32(), "rack": r.string()})
-    controller = r.i32()
-    topics = {}
-    for _ in range(r.i32()):
-        err = r.i16()
-        name = r.string()
-        r._unpack(">?", 1)  # is_internal
-        parts = []
-        for _ in range(r.i32()):
-            perr = r.i16()
-            idx = r.i32()
-            leader = r.i32()
-            replicas = [r.i32() for _ in range(r.i32())]
-            isr = [r.i32() for _ in range(r.i32())]
-            parts.append({"error": perr, "index": idx, "leader": leader, "replicas": replicas, "isr": isr})
-        topics[name] = {"error": err, "partitions": parts}
-    return {"brokers": brokers, "controller": controller, "topics": topics}
-
-
-# --------- Produce v3
-
-
-def enc_produce_request(
-    topic_data: dict[str, dict[int, bytes]], acks: int = -1, timeout_ms: int = 30000
-) -> bytes:
-    body = enc_str(None)  # transactional_id
-    body += struct.pack(">hi", acks, timeout_ms)
-    body += struct.pack(">i", len(topic_data))
-    for topic, parts in topic_data.items():
-        body += enc_str(topic) + struct.pack(">i", len(parts))
-        for idx, record_set in parts.items():
-            body += struct.pack(">i", idx) + enc_bytes(record_set)
-    return body
-
-
-def dec_produce_request(r: Reader) -> tuple[str | None, int, int, dict[str, dict[int, bytes]]]:
-    txn_id = r.string()
-    acks = r.i16()
-    timeout = r.i32()
-    topic_data: dict[str, dict[int, bytes]] = {}
-    for _ in range(r.i32()):
-        topic = r.string()
-        parts = {}
-        for _ in range(r.i32()):
-            idx = r.i32()
-            parts[idx] = r.bytes_()
-        topic_data[topic] = parts
-    return txn_id, acks, timeout, topic_data
-
-
-def enc_produce_response(results: dict[str, dict[int, tuple[int, int]]]) -> bytes:
-    """results: topic -> partition -> (error_code, base_offset)."""
-    body = struct.pack(">i", len(results))
-    for topic, parts in results.items():
-        body += enc_str(topic) + struct.pack(">i", len(parts))
-        for idx, (err, base_offset) in parts.items():
-            body += struct.pack(">ihqq", idx, err, base_offset, -1)  # log_append_time
-    body += struct.pack(">i", 0)  # throttle_time_ms (trails in Produce v1-v5)
-    return body
-
-
-def dec_produce_response(r: Reader) -> dict[str, dict[int, tuple[int, int]]]:
-    out: dict[str, dict[int, tuple[int, int]]] = {}
-    for _ in range(r.i32()):
-        topic = r.string()
-        parts = {}
-        for _ in range(r.i32()):
-            idx = r.i32()
-            err = r.i16()
-            base_offset = r.i64()
-            r.i64()  # log_append_time
-            parts[idx] = (err, base_offset)
-        out[topic] = parts
-    r.i32()  # throttle_time_ms
-    return out
-
-
-# --------- Fetch v4
-
-
-def enc_fetch_request(
-    topic: str, partition: int, fetch_offset: int, max_bytes: int = 1 << 26,
-    isolation: int = 0
-) -> bytes:
-    body = struct.pack(">iiii", -1, 100, 1, max_bytes)  # replica_id, max_wait, min_bytes, max_bytes
-    body += bytes([isolation])  # 0 READ_UNCOMMITTED | 1 READ_COMMITTED
-    body += struct.pack(">i", 1) + enc_str(topic) + struct.pack(">i", 1)
-    body += struct.pack(">iqi", partition, fetch_offset, max_bytes)
-    return body
-
-
-def dec_fetch_request(r: Reader) -> tuple[int, list[tuple[str, int, int, int]]]:
-    r.i32()  # replica_id
-    r.i32()  # max_wait
-    r.i32()  # min_bytes
-    r.i32()  # max_bytes
-    isolation = r.i8()
-    out = []
-    for _ in range(r.i32()):
-        topic = r.string()
-        for _ in range(r.i32()):
-            partition = r.i32()
-            offset = r.i64()
-            pmax = r.i32()
-            out.append((topic, partition, offset, pmax))
-    return isolation, out
-
-
-def enc_fetch_response(
-    parts: list
-) -> bytes:
-    """parts: [(topic, partition, error_code, high_watermark, record_set)]
-    or 7-tuples adding (last_stable_offset, aborted:[(pid, first_off)])."""
-    by_topic: dict[str, list] = {}
-    for p in parts:
-        topic, idx, err, hw, rs = p[:5]
-        lso, aborted = (p[5], p[6]) if len(p) > 5 else (hw, [])
-        by_topic.setdefault(topic, []).append((idx, err, hw, lso, aborted, rs))
-    body = struct.pack(">i", 0)  # throttle_time_ms (leads in Fetch v1+)
-    body += struct.pack(">i", len(by_topic))
-    for topic, plist in by_topic.items():
-        body += enc_str(topic) + struct.pack(">i", len(plist))
-        for idx, err, hw, lso, aborted, rs in plist:
-            body += struct.pack(">ihqq", idx, err, hw, lso)
-            body += struct.pack(">i", len(aborted))
-            for pid, first in aborted:
-                body += struct.pack(">qq", pid, first)
-            body += enc_bytes(rs)
-    return body
-
-
-def dec_fetch_response(r: Reader) -> list[tuple]:
-    """-> [(topic, idx, err, hw, lso, aborted:[(pid, first)], record_set)]."""
-    r.i32()  # throttle
-    out = []
-    for _ in range(r.i32()):
-        topic = r.string()
-        for _ in range(r.i32()):
-            idx = r.i32()
-            err = r.i16()
-            hw = r.i64()
-            lso = r.i64()
-            aborted = [(r.i64(), r.i64()) for _ in range(r.i32())]
-            rs = r.bytes_() or b""
-            out.append((topic, idx, err, hw, lso, aborted, rs))
-    return out
-
-
-# ---------------------------------------------------------------- groups
-# Consumer-group coordination (what the reference's cmd/kafka-consumer
-# does through sarama): FindCoordinator v1, JoinGroup v2, SyncGroup v1,
-# Heartbeat v1, LeaveGroup v1, OffsetCommit v3, OffsetFetch v3 — all
-# non-flexible versions, layouts from the public protocol guide.
-
-API_OFFSET_COMMIT = 8
-API_OFFSET_FETCH = 9
-API_FIND_COORDINATOR = 10
-API_JOIN_GROUP = 11
-API_HEARTBEAT = 12
-API_LEAVE_GROUP = 13
-API_SYNC_GROUP = 14
-
-SUPPORTED.update({
-    API_OFFSET_COMMIT: (3, 3), API_OFFSET_FETCH: (3, 3),
-    API_FIND_COORDINATOR: (1, 1), API_JOIN_GROUP: (2, 2),
-    API_HEARTBEAT: (1, 1), API_LEAVE_GROUP: (1, 1), API_SYNC_GROUP: (1, 1),
-})
-
-# error codes used by the group plane
-ERR_OFFSET_OUT_OF_RANGE = 1
-ERR_COORDINATOR_NOT_AVAILABLE = 15
-ERR_ILLEGAL_GENERATION = 22
-ERR_UNKNOWN_MEMBER_ID = 25
-ERR_REBALANCE_IN_PROGRESS = 27
-
-
-def enc_find_coordinator_request(key: str, key_type: int = 0) -> bytes:
-    return enc_str(key) + struct.pack(">b", key_type)
-
-
-def dec_find_coordinator_request(r: Reader) -> tuple[str, int]:
-    return r.string(), r.i8()
-
-
-def enc_find_coordinator_response(node_id: int, host: str, port: int) -> bytes:
-    return (struct.pack(">ih", 0, 0) + enc_str(None)
-            + struct.pack(">i", node_id) + enc_str(host) + struct.pack(">i", port))
-
-
-def dec_find_coordinator_response(r: Reader) -> tuple[str, int]:
-    r.i32()  # throttle
-    err = r.i16()
-    r.string()  # error_message
-    if err:
-        raise IOError(f"FindCoordinator error {err}")
-    r.i32()  # node_id
-    return r.string(), r.i32()
-
-
-def enc_join_group_request(
-    group_id: str, member_id: str, topics: list[str],
-    session_timeout_ms: int = 10000, rebalance_timeout_ms: int = 3000,
-) -> bytes:
-    # embedded "consumer" protocol metadata: version, topics, userdata
-    md = struct.pack(">h", 0) + struct.pack(">i", len(topics))
-    for t in topics:
-        md += enc_str(t)
-    md += enc_bytes(b"")
-    body = enc_str(group_id)
-    body += struct.pack(">ii", session_timeout_ms, rebalance_timeout_ms)
-    body += enc_str(member_id) + enc_str("consumer")
-    body += struct.pack(">i", 1) + enc_str("range") + enc_bytes(md)
-    return body
-
-
-def dec_join_group_request(r: Reader) -> dict:
-    group_id = r.string()
-    session_timeout = r.i32()
-    rebalance_timeout = r.i32()
-    member_id = r.string()
-    protocol_type = r.string()
-    protocols = []
-    for _ in range(r.i32()):
-        protocols.append((r.string(), r.bytes_()))
-    return {"group_id": group_id, "session_timeout": session_timeout,
-            "rebalance_timeout": rebalance_timeout, "member_id": member_id,
-            "protocol_type": protocol_type, "protocols": protocols}
-
-
-def dec_consumer_metadata(md: bytes) -> list[str]:
-    r = Reader(md)
-    r.i16()  # version
-    return [r.string() for _ in range(r.i32())]
-
-
-def enc_join_group_response(
-    error_code: int, generation: int, protocol: str, leader: str,
-    member_id: str, members: list[tuple[str, bytes]],
-) -> bytes:
-    body = struct.pack(">ih", 0, error_code)
-    body += struct.pack(">i", generation)
-    body += enc_str(protocol) + enc_str(leader) + enc_str(member_id)
-    body += struct.pack(">i", len(members))
-    for mid, md in members:
-        body += enc_str(mid) + enc_bytes(md)
-    return body
-
-
-def dec_join_group_response(r: Reader) -> dict:
-    r.i32()  # throttle
-    err = r.i16()
-    generation = r.i32()
-    protocol = r.string()
-    leader = r.string()
-    member_id = r.string()
-    members = [(r.string(), r.bytes_()) for _ in range(r.i32())]
-    return {"error": err, "generation": generation, "protocol": protocol,
-            "leader": leader, "member_id": member_id, "members": members}
-
-
-def enc_consumer_assignment(topic_partitions: dict[str, list[int]],
-                            user_data: bytes = b"") -> bytes:
-    """``user_data`` is the consumer protocol's assignor-metadata field
-    (what sticky/cooperative assignors use); this repo's range assignor
-    carries the generation's member count in it so followers can detect
-    a fully-formed group without polling."""
-    out = struct.pack(">h", 0) + struct.pack(">i", len(topic_partitions))
-    for t, parts in sorted(topic_partitions.items()):
-        out += enc_str(t) + struct.pack(">i", len(parts))
-        for p in parts:
-            out += struct.pack(">i", p)
-    return out + enc_bytes(user_data)
-
-
-def dec_consumer_assignment(buf: bytes) -> dict[str, list[int]]:
-    out, _ = dec_consumer_assignment_full(buf)
-    return out
-
-
-def dec_consumer_assignment_full(
-        buf: bytes) -> tuple[dict[str, list[int]], bytes]:
-    """-> (assignment, user_data)."""
-    if not buf:
-        return {}, b""
-    r = Reader(buf)
-    r.i16()  # version
-    out: dict[str, list[int]] = {}
-    for _ in range(r.i32()):
-        t = r.string()
-        out[t] = [r.i32() for _ in range(r.i32())]
-    user = r.bytes_() if r.remaining() else b""
-    return out, user or b""
-
-
-def enc_sync_group_request(
-    group_id: str, generation: int, member_id: str,
-    assignments: list[tuple[str, bytes]],
-) -> bytes:
-    body = enc_str(group_id) + struct.pack(">i", generation) + enc_str(member_id)
-    body += struct.pack(">i", len(assignments))
-    for mid, a in assignments:
-        body += enc_str(mid) + enc_bytes(a)
-    return body
-
-
-def dec_sync_group_request(r: Reader) -> dict:
-    group_id = r.string()
-    generation = r.i32()
-    member_id = r.string()
-    assignments = [(r.string(), r.bytes_()) for _ in range(r.i32())]
-    return {"group_id": group_id, "generation": generation,
-            "member_id": member_id, "assignments": assignments}
-
-
-def enc_sync_group_response(error_code: int, assignment: bytes) -> bytes:
-    return struct.pack(">ih", 0, error_code) + enc_bytes(assignment)
-
-
-def dec_sync_group_response(r: Reader) -> tuple[int, bytes]:
-    r.i32()
-    return r.i16(), (r.bytes_() or b"")
-
-
-def enc_heartbeat_request(group_id: str, generation: int, member_id: str) -> bytes:
-    return enc_str(group_id) + struct.pack(">i", generation) + enc_str(member_id)
-
-
-def dec_heartbeat_request(r: Reader) -> tuple[str, int, str]:
-    return r.string(), r.i32(), r.string()
-
-
-def enc_error_only_response(error_code: int) -> bytes:
-    return struct.pack(">ih", 0, error_code)
-
-
-def dec_error_only_response(r: Reader) -> int:
-    r.i32()
-    return r.i16()
-
-
-def enc_leave_group_request(group_id: str, member_id: str) -> bytes:
-    return enc_str(group_id) + enc_str(member_id)
-
-
-def dec_leave_group_request(r: Reader) -> tuple[str, str]:
-    return r.string(), r.string()
-
-
-def enc_offset_commit_request(
-    group_id: str, generation: int, member_id: str,
-    offsets: dict[tuple[str, int], int],
-) -> bytes:
-    body = enc_str(group_id) + struct.pack(">i", generation) + enc_str(member_id)
-    body += struct.pack(">q", -1)  # retention_time_ms
-    by_topic: dict[str, list[tuple[int, int]]] = {}
-    for (t, p), off in offsets.items():
-        by_topic.setdefault(t, []).append((p, off))
-    body += struct.pack(">i", len(by_topic))
-    for t, parts in by_topic.items():
-        body += enc_str(t) + struct.pack(">i", len(parts))
-        for p, off in parts:
-            body += struct.pack(">iq", p, off) + enc_str(None)
-    return body
-
-
-def dec_offset_commit_request(r: Reader) -> dict:
-    group_id = r.string()
-    generation = r.i32()
-    member_id = r.string()
-    r.i64()  # retention
-    offsets: dict[tuple[str, int], int] = {}
-    for _ in range(r.i32()):
-        t = r.string()
-        for _ in range(r.i32()):
-            p = r.i32()
-            off = r.i64()
-            r.string()  # metadata
-            offsets[(t, p)] = off
-    return {"group_id": group_id, "generation": generation,
-            "member_id": member_id, "offsets": offsets}
-
-
-def enc_offset_commit_response(results: dict[tuple[str, int], int]) -> bytes:
-    by_topic: dict[str, list[tuple[int, int]]] = {}
-    for (t, p), err in results.items():
-        by_topic.setdefault(t, []).append((p, err))
-    body = struct.pack(">i", 0)
-    body += struct.pack(">i", len(by_topic))
-    for t, parts in by_topic.items():
-        body += enc_str(t) + struct.pack(">i", len(parts))
-        for p, err in parts:
-            body += struct.pack(">ih", p, err)
-    return body
-
-
-def dec_offset_commit_response(r: Reader) -> dict[tuple[str, int], int]:
-    r.i32()
-    out = {}
-    for _ in range(r.i32()):
-        t = r.string()
-        for _ in range(r.i32()):
-            p = r.i32()
-            out[(t, p)] = r.i16()
-    return out
-
-
-def enc_offset_fetch_request(group_id: str, topic_partitions: dict[str, list[int]]) -> bytes:
-    body = enc_str(group_id)
-    body += struct.pack(">i", len(topic_partitions))
-    for t, parts in topic_partitions.items():
-        body += enc_str(t) + struct.pack(">i", len(parts))
-        for p in parts:
-            body += struct.pack(">i", p)
-    return body
-
-
-def dec_offset_fetch_request(r: Reader) -> tuple[str, dict[str, list[int]]]:
-    group_id = r.string()
-    out: dict[str, list[int]] = {}
-    for _ in range(r.i32()):
-        t = r.string()
-        out[t] = [r.i32() for _ in range(r.i32())]
-    return group_id, out
-
-
-def enc_offset_fetch_response(offsets: dict[tuple[str, int], int]) -> bytes:
-    by_topic: dict[str, list[tuple[int, int]]] = {}
-    for (t, p), off in offsets.items():
-        by_topic.setdefault(t, []).append((p, off))
-    body = struct.pack(">i", 0)
-    body += struct.pack(">i", len(by_topic))
-    for t, parts in by_topic.items():
-        body += enc_str(t) + struct.pack(">i", len(parts))
-        for p, off in parts:
-            body += struct.pack(">iq", p, off) + enc_str(None) + struct.pack(">h", 0)
-    body += struct.pack(">h", 0)  # top-level error
-    return body
-
-
-def dec_offset_fetch_response(r: Reader) -> dict[tuple[str, int], int]:
-    r.i32()
-    out = {}
-    for _ in range(r.i32()):
-        t = r.string()
-        for _ in range(r.i32()):
-            p = r.i32()
-            off = r.i64()
-            r.string()
-            err = r.i16()
-            if err:
-                raise IOError(f"OffsetFetch error {err} on {t}/{p}")
-            out[(t, p)] = off
-    r.i16()
-    return out
-
-
-# ---------------------------------------------------------------- admin
-# CreateTopics v2 + DescribeConfigs v0 — what the reference's topic
-# manager does through sarama's ClusterAdminClient (`pkg/sink/kafka/
-# admin.go` CreateTopic, options.go getTopicConfig/getBrokerConfig).
-
-API_CREATE_TOPICS = 19
-API_DESCRIBE_CONFIGS = 32
-
-SUPPORTED.update({API_CREATE_TOPICS: (2, 2), API_DESCRIBE_CONFIGS: (0, 0)})
-
-RESOURCE_TOPIC = 2
-RESOURCE_BROKER = 4
-
-ERR_TOPIC_ALREADY_EXISTS = 36
-ERR_INVALID_PARTITIONS = 37
-ERR_INVALID_REPLICATION_FACTOR = 38
-
-
-def enc_create_topics_request(
-    topics: list[tuple[str, int, int, dict[str, str]]],
-    timeout_ms: int = 10000, validate_only: bool = False,
-) -> bytes:
-    """topics: [(name, num_partitions, replication_factor, configs)]."""
-    body = struct.pack(">i", len(topics))
-    for name, n_parts, repl, configs in topics:
-        body += enc_str(name) + struct.pack(">ih", n_parts, repl)
-        body += struct.pack(">i", 0)  # manual assignments: none
-        body += struct.pack(">i", len(configs))
-        for k, v in configs.items():
-            body += enc_str(k) + enc_str(v)
-    body += struct.pack(">i?", timeout_ms, validate_only)
-    return body
-
-
-def dec_create_topics_request(r: Reader) -> tuple[list[tuple[str, int, int, dict]], bool]:
-    out = []
-    for _ in range(r.i32()):
-        name = r.string()
-        n_parts = r.i32()
-        repl = r.i16()
-        for _ in range(r.i32()):  # assignments
-            r.i32()
-            for _ in range(r.i32()):
-                r.i32()
-        configs = {}
-        for _ in range(r.i32()):
-            ck = r.string()  # NB: dict[k]=v evaluates the VALUE first
-            configs[ck] = r.string()
-        out.append((name, n_parts, repl, configs))
-    r.i32()  # timeout
-    validate_only = r._unpack(">?", 1)
-    return out, validate_only
-
-
-def enc_create_topics_response(results: dict[str, tuple[int, str | None]]) -> bytes:
-    body = struct.pack(">i", 0)
-    body += struct.pack(">i", len(results))
-    for name, (err, msg) in results.items():
-        body += enc_str(name) + struct.pack(">h", err) + enc_str(msg)
-    return body
-
-
-def dec_create_topics_response(r: Reader) -> dict[str, tuple[int, str | None]]:
-    r.i32()
-    out = {}
-    for _ in range(r.i32()):
-        name = r.string()
-        out[name] = (r.i16(), r.string())
-    return out
-
-
-def enc_describe_configs_request(
-    resources: list[tuple[int, str, list[str] | None]],
-) -> bytes:
-    body = struct.pack(">i", len(resources))
-    for rtype, name, keys in resources:
-        body += struct.pack(">b", rtype) + enc_str(name)
-        if keys is None:
-            body += struct.pack(">i", -1)
-        else:
-            body += struct.pack(">i", len(keys))
-            for k in keys:
-                body += enc_str(k)
-    return body
-
-
-def dec_describe_configs_request(r: Reader) -> list[tuple[int, str, list[str] | None]]:
-    out = []
-    for _ in range(r.i32()):
-        rtype = r.i8()
-        name = r.string()
-        n = r.i32()
-        keys = None if n < 0 else [r.string() for _ in range(n)]
-        out.append((rtype, name, keys))
-    return out
-
-
-def enc_describe_configs_response(
-    results: list[tuple[int, str | None, int, str, dict[str, str | None]]],
-) -> bytes:
-    """results: [(error_code, error_message, resource_type, name, configs)]."""
-    body = struct.pack(">i", 0)
-    body += struct.pack(">i", len(results))
-    for err, msg, rtype, name, configs in results:
-        body += struct.pack(">h", err) + enc_str(msg)
-        body += struct.pack(">b", rtype) + enc_str(name)
-        body += struct.pack(">i", len(configs))
-        for k, v in configs.items():
-            body += enc_str(k) + enc_str(v)
-            body += struct.pack(">???", False, True, False)  # ro/default/sensitive
-    return body
-
-
-def dec_describe_configs_response(r: Reader) -> list[tuple[int, str, dict[str, str | None]]]:
-    r.i32()
-    out = []
-    for _ in range(r.i32()):
-        err = r.i16()
-        r.string()  # error_message
-        rtype = r.i8()
-        name = r.string()
-        configs = {}
-        for _ in range(r.i32()):
-            k = r.string()
-            v = r.string()
-            r.raw(3)  # read_only, is_default, is_sensitive
-            configs[k] = v
-        if err:
-            raise IOError(f"DescribeConfigs error {err} on {rtype}/{name}")
-        out.append((rtype, name, configs))
-    return out
-
-
-# ---------------------------------------------------------------- sasl
-# SaslHandshake v1 + SaslAuthenticate v0 — the authentication surface the
-# reference's sarama config drives (sarama_config.go SASL mechanisms:
-# PLAIN, SCRAM-SHA-256/512).
-
-API_SASL_HANDSHAKE = 17
-API_SASL_AUTHENTICATE = 36
-
-SUPPORTED.update({API_SASL_HANDSHAKE: (1, 1), API_SASL_AUTHENTICATE: (0, 0)})
-
-ERR_ILLEGAL_SASL_STATE = 34
-ERR_UNSUPPORTED_SASL_MECHANISM = 33
-ERR_SASL_AUTHENTICATION_FAILED = 58
-
-
-def enc_sasl_handshake_request(mechanism: str) -> bytes:
-    return enc_str(mechanism)
-
-
-def dec_sasl_handshake_request(r: Reader) -> str:
-    return r.string()
-
-
-def enc_sasl_handshake_response(error_code: int, mechanisms: list[str]) -> bytes:
-    body = struct.pack(">h", error_code) + struct.pack(">i", len(mechanisms))
-    for m in mechanisms:
-        body += enc_str(m)
-    return body
-
-
-def dec_sasl_handshake_response(r: Reader) -> tuple[int, list[str]]:
-    err = r.i16()
-    return err, [r.string() for _ in range(r.i32())]
-
-
-def enc_sasl_authenticate_request(auth_bytes: bytes) -> bytes:
-    return enc_bytes(auth_bytes)
-
-
-def dec_sasl_authenticate_request(r: Reader) -> bytes:
-    return r.bytes_() or b""
-
-
-def enc_sasl_authenticate_response(error_code: int, error_message: str | None,
-                                   auth_bytes: bytes) -> bytes:
-    return struct.pack(">h", error_code) + enc_str(error_message) + enc_bytes(auth_bytes)
-
-
-def dec_sasl_authenticate_response(r: Reader) -> tuple[int, str | None, bytes]:
-    return r.i16(), r.string(), (r.bytes_() or b"")
-
-
-# ---------------------------------------------------------------- offsets
-# ListOffsets v1 (key 2): how consumers seek earliest (-2) / latest (-1)
-# before fetching — sarama's OffsetOldest/OffsetNewest.
-
-API_LIST_OFFSETS = 2
-
-SUPPORTED.update({API_LIST_OFFSETS: (1, 1)})
-
-OFFSET_EARLIEST = -2
-OFFSET_LATEST = -1
-
-
-def enc_list_offsets_request(topic: str, partition: int, timestamp: int) -> bytes:
-    body = struct.pack(">i", -1)  # replica_id
-    body += struct.pack(">i", 1) + enc_str(topic) + struct.pack(">i", 1)
-    body += struct.pack(">iq", partition, timestamp)
-    return body
-
-
-def dec_list_offsets_request(r: Reader) -> list[tuple[str, int, int]]:
-    r.i32()  # replica_id
-    out = []
-    for _ in range(r.i32()):
-        topic = r.string()
-        for _ in range(r.i32()):
-            partition = r.i32()
-            ts = r.i64()
-            out.append((topic, partition, ts))
-    return out
-
-
-def enc_list_offsets_response(results: list[tuple[str, int, int, int, int]]) -> bytes:
-    """results: [(topic, partition, error_code, timestamp, offset)]."""
-    by_topic: dict[str, list] = {}
-    for t, p, err, ts, off in results:
-        by_topic.setdefault(t, []).append((p, err, ts, off))
-    body = struct.pack(">i", len(by_topic))
-    for t, parts in by_topic.items():
-        body += enc_str(t) + struct.pack(">i", len(parts))
-        for p, err, ts, off in parts:
-            body += struct.pack(">ihqq", p, err, ts, off)
-    return body
-
-
-def dec_list_offsets_response(r: Reader) -> dict[tuple[str, int], tuple[int, int]]:
-    out = {}
-    for _ in range(r.i32()):
-        topic = r.string()
-        for _ in range(r.i32()):
-            p = r.i32()
-            err = r.i16()
-            r.i64()  # timestamp
-            off = r.i64()
-            if err:
-                raise IOError(f"ListOffsets error {err} on {topic}/{p}")
-            out[(topic, p)] = (err, off)
-    return out
-
-
-# ---------------------------------------------------------------- flexible
-# KIP-482 flexible versions: compact (uvarint-length+1) strings/arrays/
-# bytes and tagged-field blocks, request header v2 / response header v1.
-# One modern version pair per hot API — Produce v9, Fetch v12,
-# ListOffsets v7, negotiated via a real ApiVersions v3 exchange — which
-# is what any post-2.4 broker speaks with the reference's sarama
-# configuration (`pkg/sink/kafka/sarama_config.go`). Layouts from the
-# public protocol guide (kafka.apache.org/protocol); no reference code
-# consulted for bytes.
-
-ERR_UNSUPPORTED_VERSION = 35
-
-# first flexible version per api key (from the protocol guide's
-# "flexibleVersions" in each message spec)
-FLEXIBLE_SINCE = {
-    API_PRODUCE: 9,
-    API_FETCH: 12,
-    API_LIST_OFFSETS: 6,
-    API_METADATA: 9,
-    API_API_VERSIONS: 3,
-}
-
-
-def is_flexible(api_key: int, api_version: int) -> bool:
-    lo = FLEXIBLE_SINCE.get(api_key)
-    return lo is not None and api_version >= lo
-
-
-def enc_uvarint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def enc_compact_str(s: str | None) -> bytes:
-    if s is None:
-        return b"\x00"
-    b = s.encode("utf-8")
-    return enc_uvarint(len(b) + 1) + b
-
-
-def enc_compact_bytes(b: bytes | None) -> bytes:
-    if b is None:
-        return b"\x00"
-    return enc_uvarint(len(b) + 1) + b
-
-
-def enc_compact_array_len(n: int) -> bytes:
-    """n = element count; -1 encodes a null array."""
-    return enc_uvarint(n + 1)
-
-
-def enc_tags() -> bytes:
-    return b"\x00"  # zero tagged fields
-
-
-def frame_request_flex(api_key: int, api_version: int, correlation_id: int,
-                       client_id: str, body: bytes) -> bytes:
-    """Request header v2: like v1 (client_id stays a NON-compact nullable
-    string) plus a trailing tagged-fields block."""
-    hdr = (struct.pack(">hhi", api_key, api_version, correlation_id)
-           + enc_str(client_id) + enc_tags())
-    msg = hdr + body
-    return struct.pack(">i", len(msg)) + msg
-
-
-# --------- ApiVersions v3 (flexible; response header stays v0 — the
-# protocol's bootstrap special case so old clients can parse the error)
-
-
-def enc_api_versions_request_v3(name: str = "ticdc-spark",
-                                version: str = "4") -> bytes:
-    return enc_compact_str(name) + enc_compact_str(version) + enc_tags()
-
-
-def dec_api_versions_request_v3(r: Reader) -> tuple[str, str]:
-    name = r.compact_string()
-    ver = r.compact_string()
-    r.skip_tags()
-    return name, ver
-
-
-def enc_api_versions_response_v3(supported: dict[int, tuple[int, int]],
-                                 error_code: int = 0) -> bytes:
-    body = struct.pack(">h", error_code)
-    body += enc_compact_array_len(len(supported))
-    for key, (lo, hi) in sorted(supported.items()):
-        body += struct.pack(">hhh", key, lo, hi) + enc_tags()
-    body += struct.pack(">i", 0)  # throttle_time_ms
-    body += enc_tags()
-    return body
-
-
-def dec_api_versions_response_v3(r: Reader) -> dict[int, tuple[int, int]]:
-    err = r.i16()
-    if err:
-        raise IOError(f"ApiVersions error {err}")
-    out = {}
-    for _ in range(r.compact_array_len()):
-        key, lo, hi = r.i16(), r.i16(), r.i16()
-        r.skip_tags()
-        out[key] = (lo, hi)
-    r.i32()  # throttle
-    r.skip_tags()
-    return out
-
-
-# --------- Produce v9 (flexible)
-
-
-def enc_produce_request_v9(
-    topic_data: dict[str, dict[int, bytes]], acks: int = -1,
-    timeout_ms: int = 30000, txn_id: str | None = None
-) -> bytes:
-    body = enc_compact_str(txn_id)
-    body += struct.pack(">hi", acks, timeout_ms)
-    body += enc_compact_array_len(len(topic_data))
-    for topic, parts in topic_data.items():
-        body += enc_compact_str(topic) + enc_compact_array_len(len(parts))
-        for idx, record_set in parts.items():
-            body += struct.pack(">i", idx) + enc_compact_bytes(record_set)
-            body += enc_tags()
-        body += enc_tags()
-    body += enc_tags()
-    return body
-
-
-def dec_produce_request_v9(r: Reader) -> tuple[str | None, int, int, dict[str, dict[int, bytes]]]:
-    txn_id = r.compact_string()
-    acks = r.i16()
-    timeout = r.i32()
-    topic_data: dict[str, dict[int, bytes]] = {}
-    for _ in range(r.compact_array_len()):
-        topic = r.compact_string()
-        parts = {}
-        for _ in range(r.compact_array_len()):
-            idx = r.i32()
-            parts[idx] = r.compact_bytes()
-            r.skip_tags()
-        r.skip_tags()
-        topic_data[topic] = parts
-    r.skip_tags()
-    return txn_id, acks, timeout, topic_data
-
-
-def enc_produce_response_v9(results: dict[str, dict[int, tuple[int, int]]]) -> bytes:
-    """results: topic -> partition -> (error_code, base_offset)."""
-    body = enc_compact_array_len(len(results))
-    for topic, parts in results.items():
-        body += enc_compact_str(topic) + enc_compact_array_len(len(parts))
-        for idx, (err, base_offset) in parts.items():
-            body += struct.pack(">ihqqq", idx, err, base_offset, -1, 0)
-            body += enc_compact_array_len(0)  # record_errors
-            body += enc_compact_str(None)  # error_message
-            body += enc_tags()
-        body += enc_tags()
-    body += struct.pack(">i", 0)  # throttle
-    body += enc_tags()
-    return body
-
-
-def dec_produce_response_v9(r: Reader) -> dict[str, dict[int, tuple[int, int]]]:
-    out: dict[str, dict[int, tuple[int, int]]] = {}
-    for _ in range(r.compact_array_len()):
-        topic = r.compact_string()
-        parts = {}
-        for _ in range(r.compact_array_len()):
-            idx = r.i32()
-            err = r.i16()
-            base_offset = r.i64()
-            r.i64()  # log_append_time
-            r.i64()  # log_start_offset
-            for _ in range(r.compact_array_len()):  # record_errors
-                r.i32()
-                r.compact_string()
-                r.skip_tags()
-            r.compact_string()  # error_message
-            r.skip_tags()
-            parts[idx] = (err, base_offset)
-        r.skip_tags()
-        out[topic] = parts
-    r.i32()  # throttle
-    r.skip_tags()
-    return out
-
-
-# --------- Fetch v12 (flexible)
-
-
-def enc_fetch_request_v12(
-    topic: str, partition: int, fetch_offset: int, max_bytes: int = 1 << 26,
-    isolation: int = 0
-) -> bytes:
-    """Sessionless single-partition fetch (session_id=0, epoch=-1)."""
-    return enc_fetch_request_v12_session(
-        0, -1, [(topic, partition, fetch_offset, max_bytes)],
-        isolation=isolation, max_bytes=max_bytes)
-
-
-def enc_fetch_request_v12_session(
-    session_id: int, session_epoch: int,
-    wants: list[tuple[str, int, int, int]],
-    forgotten: list[tuple[str, list[int]]] | None = None,
-    isolation: int = 0, max_bytes: int = 1 << 26,
-) -> bytes:
-    """KIP-227 fetch: epoch -1 = sessionless, 0 = full request opening a
-    session, >0 = incremental (``wants`` lists only CHANGED partitions,
-    ``forgotten`` removes partitions from the session)."""
-    body = struct.pack(">iiii", -1, 100, 1, max_bytes)
-    body += bytes([isolation])  # 0 READ_UNCOMMITTED | 1 READ_COMMITTED
-    body += struct.pack(">ii", session_id, session_epoch)
-    by_topic: dict[str, list[tuple[int, int, int]]] = {}
-    for topic, partition, offset, pmax in wants:
-        by_topic.setdefault(topic, []).append((partition, offset, pmax))
-    body += enc_compact_array_len(len(by_topic))
-    for topic, plist in by_topic.items():
-        body += enc_compact_str(topic)
-        body += enc_compact_array_len(len(plist))
-        for partition, offset, pmax in plist:
-            body += struct.pack(">iiqiqi", partition, -1, offset, -1, -1,
-                                pmax)
-            body += enc_tags()  # partition
-        body += enc_tags()  # topic
-    forgotten = forgotten or []
-    body += enc_compact_array_len(len(forgotten))
-    for topic, parts in forgotten:
-        body += enc_compact_str(topic)
-        body += enc_compact_array_len(len(parts))
-        for p in parts:
-            body += struct.pack(">i", p)
-        body += enc_tags()
-    body += enc_compact_str("")  # rack_id
-    body += enc_tags()
-    return body
-
-
-def dec_fetch_request_v12(r: Reader) -> tuple[int, list[tuple[str, int, int, int]]]:
-    isolation, _sid, _epoch, wants, _forgotten = (
-        dec_fetch_request_v12_session(r))
-    return isolation, wants
-
-
-def dec_fetch_request_v12_session(
-    r: Reader,
-) -> tuple[int, int, int, list[tuple[str, int, int, int]],
-           list[tuple[str, list[int]]]]:
-    """-> (isolation, session_id, session_epoch, wants, forgotten)."""
-    r.i32()  # replica_id
-    r.i32()  # max_wait
-    r.i32()  # min_bytes
-    r.i32()  # max_bytes
-    isolation = r.i8()
-    session_id = r.i32()
-    session_epoch = r.i32()
-    out = []
-    for _ in range(max(r.compact_array_len(), 0)):
-        topic = r.compact_string()
-        for _ in range(max(r.compact_array_len(), 0)):
-            partition = r.i32()
-            r.i32()  # current_leader_epoch
-            offset = r.i64()
-            r.i32()  # last_fetched_epoch
-            r.i64()  # log_start_offset
-            pmax = r.i32()
-            r.skip_tags()
-            out.append((topic, partition, offset, pmax))
-        r.skip_tags()
-    forgotten: list[tuple[str, list[int]]] = []
-    for _ in range(max(r.compact_array_len(), 0)):
-        topic = r.compact_string()
-        parts = [r.i32() for _ in range(max(r.compact_array_len(), 0))]
-        r.skip_tags()
-        forgotten.append((topic, parts))
-    r.compact_string()  # rack_id
-    r.skip_tags()
-    return isolation, session_id, session_epoch, out, forgotten
-
-
-def enc_fetch_response_v12(
-    parts: list, session_id: int = 0, error_code: int = 0
-) -> bytes:
-    """parts: 5-tuples (topic, partition, error_code, hw, record_set) or
-    7-tuples adding (last_stable_offset, aborted:[(pid, first_off)]).
-    ``session_id``/``error_code``: KIP-227 session fields (error 69 =
-    FETCH_SESSION_ID_NOT_FOUND, 71 = INVALID_FETCH_SESSION_EPOCH)."""
-    by_topic: dict[str, list] = {}
-    for p in parts:
-        topic, idx, err, hw, rs = p[:5]
-        lso, aborted = (p[5], p[6]) if len(p) > 5 else (hw, [])
-        by_topic.setdefault(topic, []).append((idx, err, hw, lso, aborted, rs))
-    body = struct.pack(">ihi", 0, error_code, session_id)
-    body += enc_compact_array_len(len(by_topic))
-    for topic, plist in by_topic.items():
-        body += enc_compact_str(topic) + enc_compact_array_len(len(plist))
-        for idx, err, hw, lso, aborted, rs in plist:
-            body += struct.pack(">ihqqq", idx, err, hw, lso, 0)
-            body += enc_compact_array_len(len(aborted))
-            for pid, first in aborted:
-                body += struct.pack(">qq", pid, first) + enc_tags()
-            body += struct.pack(">i", -1)  # preferred_read_replica
-            body += enc_compact_bytes(rs)
-            body += enc_tags()
-        body += enc_tags()
-    body += enc_tags()
-    return body
-
-
-def dec_fetch_response_v12(r: Reader) -> list[tuple]:
-    """-> [(topic, idx, err, hw, lso, aborted:[(pid, first)], record_set)]."""
-    top_err, _sid, out = dec_fetch_response_v12_session(r)
-    if top_err:
-        raise IOError(f"fetch error {top_err}")
-    return out
-
-
-def dec_fetch_response_v12_session(
-        r: Reader) -> tuple[int, int, list[tuple]]:
-    """-> (top_error_code, session_id, parts) — the session-aware shape
-    (KIP-227 errors 69/71 surface instead of raising, so a client can
-    fall back to a full request)."""
-    r.i32()  # throttle
-    top_err = r.i16()
-    session_id = r.i32()
-    out = []
-    for _ in range(r.compact_array_len()):
-        topic = r.compact_string()
-        for _ in range(r.compact_array_len()):
-            idx = r.i32()
-            err = r.i16()
-            hw = r.i64()
-            lso = r.i64()
-            r.i64()  # log_start_offset
-            n_aborted = r.compact_array_len()
-            aborted = []
-            for _ in range(max(n_aborted, 0)):
-                aborted.append((r.i64(), r.i64()))
-                r.skip_tags()
-            r.i32()  # preferred_read_replica
-            rs = r.compact_bytes() or b""
-            r.skip_tags()
-            out.append((topic, idx, err, hw, lso, aborted, rs))
-        r.skip_tags()
-    r.skip_tags()
-    return top_err, session_id, out
-
-
-# KIP-227 session error codes
-ERR_FETCH_SESSION_ID_NOT_FOUND = 69
-ERR_INVALID_FETCH_SESSION_EPOCH = 71
-
-# KIP-345 static membership
-ERR_FENCED_INSTANCE_ID = 82
-
-
-# --------- ListOffsets v7 (flexible) — adds real timestamp lookup
-
-
-def enc_list_offsets_request_v7(topic: str, partition: int,
-                                timestamp: int) -> bytes:
-    body = struct.pack(">ib", -1, 0)  # replica_id, isolation_level
-    body += enc_compact_array_len(1)
-    body += enc_compact_str(topic)
-    body += enc_compact_array_len(1)
-    body += struct.pack(">iiq", partition, -1, timestamp)
-    body += enc_tags()  # partition
-    body += enc_tags()  # topic
-    body += enc_tags()
-    return body
-
-
-def dec_list_offsets_request_v7(r: Reader) -> list[tuple[str, int, int]]:
-    r.i32()  # replica_id
-    r.i8()  # isolation
-    out = []
-    for _ in range(r.compact_array_len()):
-        topic = r.compact_string()
-        for _ in range(r.compact_array_len()):
-            partition = r.i32()
-            r.i32()  # current_leader_epoch
-            ts = r.i64()
-            r.skip_tags()
-            out.append((topic, partition, ts))
-        r.skip_tags()
-    r.skip_tags()
-    return out
-
-
-def enc_list_offsets_response_v7(
-    results: list[tuple[str, int, int, int, int]]
-) -> bytes:
-    """results: [(topic, partition, error_code, timestamp, offset)]."""
-    by_topic: dict[str, list] = {}
-    for t, p, err, ts, off in results:
-        by_topic.setdefault(t, []).append((p, err, ts, off))
-    body = struct.pack(">i", 0)  # throttle
-    body += enc_compact_array_len(len(by_topic))
-    for t, parts in by_topic.items():
-        body += enc_compact_str(t) + enc_compact_array_len(len(parts))
-        for p, err, ts, off in parts:
-            body += struct.pack(">ihqqi", p, err, ts, off, -1)
-            body += enc_tags()
-        body += enc_tags()
-    body += enc_tags()
-    return body
-
-
-def dec_list_offsets_response_v7(r: Reader) -> dict[tuple[str, int], tuple[int, int]]:
-    r.i32()  # throttle
-    out = {}
-    for _ in range(r.compact_array_len()):
-        topic = r.compact_string()
-        for _ in range(r.compact_array_len()):
-            p = r.i32()
-            err = r.i16()
-            ts = r.i64()
-            off = r.i64()
-            r.i32()  # leader_epoch
-            r.skip_tags()
-            if err:
-                raise IOError(f"ListOffsets error {err} on {topic}/{p}")
-            out[(topic, p)] = (ts, off)
-        r.skip_tags()
-    r.skip_tags()
-    return out
-
-
-# --------- InitProducerId v1 (KIP-98 idempotent producer)
-
-API_INIT_PRODUCER_ID = 22
-SUPPORTED[API_INIT_PRODUCER_ID] = (1, 1)
-
-ERR_OUT_OF_ORDER_SEQUENCE = 45
-ERR_DUPLICATE_SEQUENCE = 46
-ERR_UNKNOWN_PRODUCER_ID = 59
-
-
-def enc_init_producer_id_request(txn_id: str | None = None,
-                                 txn_timeout_ms: int = 60000) -> bytes:
-    return enc_str(txn_id) + struct.pack(">i", txn_timeout_ms)
-
-
-def dec_init_producer_id_request(r: Reader) -> tuple[str | None, int]:
-    return r.string(), r.i32()
-
-
-def enc_init_producer_id_response(producer_id: int,
-                                  producer_epoch: int = 0,
-                                  error_code: int = 0) -> bytes:
-    return struct.pack(">ihqh", 0, error_code, producer_id, producer_epoch)
-
-
-def dec_init_producer_id_response(r: Reader) -> tuple[int, int]:
-    r.i32()  # throttle
-    err = r.i16()
-    if err:
-        raise IOError(f"InitProducerId error {err}")
-    return r.i64(), r.i16()
-
-
 def batch_producer_meta(record_set: bytes) -> tuple[int, int, int, int]:
     """(producer_id, producer_epoch, base_sequence, record_count) of the
     FIRST batch in a record set — what the broker's sequence check
@@ -1686,16 +457,6 @@ def batch_producer_meta(record_set: bytes) -> tuple[int, int, int, int]:
     n = struct.unpack_from(">i", record_set, 57)[0]
     return pid, pepoch, base_seq, n
 
-
-# --------- Transactions (KIP-98 second half: markers + READ_COMMITTED)
-
-API_ADD_PARTITIONS_TO_TXN = 24
-API_END_TXN = 26
-SUPPORTED[API_ADD_PARTITIONS_TO_TXN] = (0, 0)
-SUPPORTED[API_END_TXN] = (1, 1)
-
-ERR_INVALID_PRODUCER_EPOCH = 47
-ERR_INVALID_TXN_STATE = 48
 
 ATTR_TRANSACTIONAL = 0x10  # batch attributes bit 4
 ATTR_CONTROL = 0x20        # batch attributes bit 5
@@ -1725,264 +486,748 @@ def batch_attributes(record_set: bytes, pos: int = 0) -> int:
     return struct.unpack_from(">h", record_set, pos + 21)[0]
 
 
-def enc_add_partitions_to_txn_request(
-    txn_id: str, producer_id: int, producer_epoch: int,
-    topic_partitions: dict[str, list[int]]) -> bytes:
-    body = enc_str(txn_id) + struct.pack(">qh", producer_id, producer_epoch)
-    body += struct.pack(">i", len(topic_partitions))
-    for topic, parts in topic_partitions.items():
-        body += enc_str(topic) + struct.pack(">i", len(parts))
-        for p in parts:
-            body += struct.pack(">i", p)
-    return body
+# ---------------------------------------------------------------- api keys
+
+API_PRODUCE = 0
+API_FETCH = 1
+API_LIST_OFFSETS = 2
+API_METADATA = 3
+API_OFFSET_COMMIT = 8
+API_OFFSET_FETCH = 9
+API_FIND_COORDINATOR = 10
+API_JOIN_GROUP = 11
+API_HEARTBEAT = 12
+API_LEAVE_GROUP = 13
+API_SYNC_GROUP = 14
+API_SASL_HANDSHAKE = 17
+API_API_VERSIONS = 18
+API_CREATE_TOPICS = 19
+API_INIT_PRODUCER_ID = 22
+API_ADD_PARTITIONS_TO_TXN = 24
+API_END_TXN = 26
+API_DESCRIBE_CONFIGS = 32
+API_SASL_AUTHENTICATE = 36
+
+# the versions each encoder and decoder lays out: the classic floor, then
+# the flexible version a modern sarama/franz-go client (the reference's
+# target, `pkg/sink/kafka/sarama_config.go`) negotiates against a
+# post-2.4 broker; admin and SASL messages have one version
+VERSIONS = {
+    API_API_VERSIONS: (0, 3),
+    API_METADATA: (1, 9),
+    API_PRODUCE: (3, 9),
+    API_FETCH: (4, 12),
+    API_LIST_OFFSETS: (1, 7),
+    API_FIND_COORDINATOR: (1, 3),
+    API_JOIN_GROUP: (2, 6),
+    API_SYNC_GROUP: (1, 4),
+    API_HEARTBEAT: (1, 4),
+    API_LEAVE_GROUP: (1, 4),
+    API_OFFSET_COMMIT: (3, 8),
+    API_OFFSET_FETCH: (3, 6),
+    API_INIT_PRODUCER_ID: (1, 2),
+    API_ADD_PARTITIONS_TO_TXN: (0, 3),
+    API_END_TXN: (1, 3),
+    API_CREATE_TOPICS: (2,),
+    API_DESCRIBE_CONFIGS: (0,),
+    API_SASL_HANDSHAKE: (1,),
+    API_SASL_AUTHENTICATE: (0,),
+}
+
+# first flexible version per api key (the "flexibleVersions" of each
+# message spec in the protocol guide)
+FLEXIBLE_SINCE = {
+    API_PRODUCE: 9, API_FETCH: 12, API_LIST_OFFSETS: 6, API_METADATA: 9,
+    API_API_VERSIONS: 3, API_FIND_COORDINATOR: 3, API_JOIN_GROUP: 6,
+    API_SYNC_GROUP: 4, API_HEARTBEAT: 4, API_LEAVE_GROUP: 4,
+    API_OFFSET_COMMIT: 8, API_OFFSET_FETCH: 6, API_INIT_PRODUCER_ID: 2,
+    API_ADD_PARTITIONS_TO_TXN: 3, API_END_TXN: 3,
+}
+
+ERR_ILLEGAL_GENERATION = 22
+ERR_REBALANCE_IN_PROGRESS = 27
+ERR_UNSUPPORTED_SASL_MECHANISM = 33
+ERR_ILLEGAL_SASL_STATE = 34
+ERR_UNSUPPORTED_VERSION = 35
+ERR_TOPIC_ALREADY_EXISTS = 36
+ERR_INVALID_PARTITIONS = 37
+ERR_INVALID_REPLICATION_FACTOR = 38
+ERR_OUT_OF_ORDER_SEQUENCE = 45
+ERR_INVALID_PRODUCER_EPOCH = 47
+ERR_INVALID_TXN_STATE = 48
+ERR_SASL_AUTHENTICATION_FAILED = 58
+# KIP-227 session error codes
+ERR_FETCH_SESSION_ID_NOT_FOUND = 69
+ERR_INVALID_FETCH_SESSION_EPOCH = 71
+
+RESOURCE_TOPIC = 2
+RESOURCE_BROKER = 4
+
+OFFSET_EARLIEST = -2
+OFFSET_LATEST = -1
 
 
-def dec_add_partitions_to_txn_request(r: Reader) -> tuple[str, int, int, dict[str, list[int]]]:
-    txn_id = r.string()
-    pid = r.i64()
-    epoch = r.i16()
-    tps: dict[str, list[int]] = {}
-    for _ in range(r.i32()):
-        topic = r.string()
-        tps[topic] = [r.i32() for _ in range(r.i32())]
-    return txn_id, pid, epoch, tps
+def is_flexible(api_key: int, api_version: int) -> bool:
+    lo = FLEXIBLE_SINCE.get(api_key)
+    return lo is not None and api_version >= lo
 
 
-def enc_add_partitions_to_txn_response(
-    results: dict[str, dict[int, int]]) -> bytes:
-    body = struct.pack(">ii", 0, len(results))  # throttle
-    for topic, parts in results.items():
-        body += enc_str(topic) + struct.pack(">i", len(parts))
-        for p, err in parts.items():
-            body += struct.pack(">ih", p, err)
-    return body
-
-
-def dec_add_partitions_to_txn_response(r: Reader) -> dict[str, dict[int, int]]:
-    r.i32()  # throttle
-    out: dict[str, dict[int, int]] = {}
-    for _ in range(r.i32()):
-        topic = r.string()
-        parts = {}
-        for _ in range(r.i32()):
-            p = r.i32()
-            parts[p] = r.i16()
-        out[topic] = parts
+def _by_topic(rows) -> dict[str, list]:
+    """[(topic, value)] -> {topic: [value]} in first-seen order."""
+    out: dict[str, list] = {}
+    for topic, value in rows:
+        out.setdefault(topic, []).append(value)
     return out
 
 
-def enc_end_txn_request(txn_id: str, producer_id: int, producer_epoch: int,
-                        committed: bool) -> bytes:
-    return (enc_str(txn_id)
-            + struct.pack(">qh?", producer_id, producer_epoch, committed))
+# ---------------------------------------------------------------- framing
 
 
-def dec_end_txn_request(r: Reader) -> tuple[str, int, int, bool]:
-    return (r.string(), r.i64(), r.i16(),
-            bool(r._unpack(">?", 1)))
+def frame_request(api_key: int, api_version: int, correlation_id: int,
+                  client_id: str, body: bytes) -> bytes:
+    """Request header v1, or v2 (v1 plus a tagged-fields block) for a
+    flexible version; the client id stays a classic string in both."""
+    w = Writer()
+    w.pack(">hhi", api_key, api_version, correlation_id)
+    w.string(client_id)
+    w.flexible = is_flexible(api_key, api_version)
+    w.tags()
+    hdr = w.done()
+    return b"".join((struct.pack(">i", len(hdr) + len(body)), hdr, body))
 
 
-def enc_end_txn_response(error_code: int = 0) -> bytes:
-    return struct.pack(">ih", 0, error_code)
+def parse_request_header(buf: bytes) -> tuple[int, int, int, str | None, Reader]:
+    """The header version is derivable from (api_key, api_version), which
+    is why the protocol put them first."""
+    r = Reader(buf)
+    api_key = r.i16()
+    api_version = r.i16()
+    corr = r.i32()
+    client_id = r.string()
+    r.flexible = is_flexible(api_key, api_version)
+    r.skip_tags()
+    return api_key, api_version, corr, client_id, r
 
 
-def dec_end_txn_response(r: Reader) -> int:
-    r.i32()  # throttle
-    return r.i16()
+def _response_header_v1(api_key: int, api_version: int) -> bool:
+    # ApiVersions responses keep header v0 at every version, so a client
+    # can read the error a broker sends for a version it doesn't know
+    return api_key != API_API_VERSIONS and is_flexible(api_key, api_version)
 
 
-# --------- Metadata v9 (flexible)
+def frame_response(api_key: int, api_version: int, correlation_id: int,
+                   body: bytes) -> bytes:
+    """Response header v0, or v1 (v0 plus a tagged-fields block) for a
+    flexible version."""
+    hdr = struct.pack(">i", correlation_id)
+    if _response_header_v1(api_key, api_version):
+        hdr += b"\x00"
+    return b"".join((struct.pack(">i", len(hdr) + len(body)), hdr, body))
 
 
-def enc_metadata_request_v9(topics: list[str] | None) -> bytes:
-    if topics is None:
-        body = enc_compact_array_len(-1)
-    else:
-        body = enc_compact_array_len(len(topics))
-        for t in topics:
-            body += enc_compact_str(t) + enc_tags()
-    body += b"\x01\x00\x00"  # allow_auto_topic_creation, 2x include_*_ops
-    body += enc_tags()
-    return body
+def parse_response_header(buf: bytes, api_key: int,
+                          api_version: int) -> tuple[int, Reader]:
+    """-> (correlation id, reader at the body)."""
+    r = Reader(buf, flexible=_response_header_v1(api_key, api_version))
+    corr = r.i32()
+    r.skip_tags()
+    return corr, r
 
 
-def dec_metadata_request_v9(r: Reader) -> list[str] | None:
-    n = r.compact_array_len()
-    if n < 0:
-        r.i8()
-        r.i8()
-        r.i8()
+# ---------------------------------------------------------------- ApiVersions
+
+
+def enc_api_versions_request(version: int, software_name: str = "ticdc-spark",
+                             software_version: str = "4") -> bytes:
+    w = Writer(is_flexible(API_API_VERSIONS, version))
+    if version >= 3:
+        w.string(software_name)
+        w.string(software_version)
+    w.tags()
+    return w.done()
+
+
+def dec_api_versions_request(r: Reader, version: int) -> tuple[str | None, str | None]:
+    r.flexible = is_flexible(API_API_VERSIONS, version)
+    name = software_version = None
+    if version >= 3:
+        name, software_version = r.string(), r.string()
+    r.skip_tags()
+    return name, software_version
+
+
+def enc_api_versions_response(version: int, supported: dict[int, tuple[int, int]],
+                              error_code: int = 0) -> bytes:
+    w = Writer(is_flexible(API_API_VERSIONS, version))
+    w.pack(">h", error_code)
+    w.array_len(len(supported))
+    for key, (lo, hi) in sorted(supported.items()):
+        w.pack(">hhh", key, lo, hi)
+        w.tags()
+    if version >= 1:
+        w.pack(">i", 0)  # throttle_time_ms
+    w.tags()
+    return w.done()
+
+
+def dec_api_versions_response(r: Reader, version: int) -> dict[int, tuple[int, int]]:
+    r.flexible = is_flexible(API_API_VERSIONS, version)
+    err = r.i16()
+    if err:
+        raise IOError(f"ApiVersions error {err}")
+    out = {}
+    for _ in range(r.array_len()):
+        key, lo, hi = r.i16(), r.i16(), r.i16()
         r.skip_tags()
-        return None
-    out = []
-    for _ in range(n):
-        out.append(r.compact_string())
-        r.skip_tags()
-    r.i8()  # allow_auto_topic_creation
-    r.i8()  # include_cluster_authorized_operations
-    r.i8()  # include_topic_authorized_operations
+        out[key] = (lo, hi)
+    if version >= 1:
+        r.i32()  # throttle_time_ms
     r.skip_tags()
     return out
 
 
-def enc_metadata_response_v9(
-    host: str, port: int, topics: dict[str, int], node_id: int = 0
+# ---------------------------------------------------------------- Metadata
+
+
+def enc_metadata_request(version: int, topics: list[str] | None) -> bytes:
+    w = Writer(is_flexible(API_METADATA, version))
+    w.array_len(-1 if topics is None else len(topics))
+    for t in topics or ():
+        w.string(t)
+        w.tags()
+    if version >= 4:
+        w.pack(">?", True)  # allow_auto_topic_creation
+    if version >= 8:
+        w.pack(">??", False, False)  # include_{cluster,topic}_authorized_operations
+    w.tags()
+    return w.done()
+
+
+def dec_metadata_request(r: Reader, version: int) -> list[str] | None:
+    r.flexible = is_flexible(API_METADATA, version)
+    n = r.array_len()
+    topics = None if n < 0 else []
+    for _ in range(n):
+        topics.append(r.string())
+        r.skip_tags()
+    if version >= 4:
+        r.i8()  # allow_auto_topic_creation
+    if version >= 8:
+        r.raw(2)  # include_{cluster,topic}_authorized_operations
+    r.skip_tags()
+    return topics
+
+
+def enc_metadata_response(
+    version: int, host: str, port: int, topics: dict[str, int], node_id: int = 0
 ) -> bytes:
-    body = struct.pack(">i", 0)  # throttle
-    body += enc_compact_array_len(1)  # brokers
-    body += struct.pack(">i", node_id) + enc_compact_str(host)
-    body += struct.pack(">i", port) + enc_compact_str(None) + enc_tags()
-    body += enc_compact_str("ticdc-spark-cluster")
-    body += struct.pack(">i", node_id)  # controller_id
-    body += enc_compact_array_len(len(topics))
+    """``topics`` values: partition count, or (error_code, 0) for a
+    topic the broker refuses to auto-create (UNKNOWN_TOPIC_OR_PARTITION
+    when auto.create.topics.enable=false)."""
+    w = Writer(is_flexible(API_METADATA, version))
+    if version >= 3:
+        w.pack(">i", 0)  # throttle_time_ms
+    w.array_len(1)  # one broker
+    w.pack(">i", node_id)
+    w.string(host)
+    w.pack(">i", port)
+    w.string(None)  # rack
+    w.tags()
+    if version >= 2:
+        w.string("ticdc-spark-cluster")
+    w.pack(">i", node_id)  # controller_id
+    w.array_len(len(topics))
     for name, spec in sorted(topics.items()):
         terr, n_parts = spec if isinstance(spec, tuple) else (0, spec)
-        body += struct.pack(">h", terr) + enc_compact_str(name) + b"\x00"
-        body += enc_compact_array_len(n_parts)
+        w.pack(">h", terr)
+        w.string(name)
+        w.pack(">?", False)  # is_internal
+        w.array_len(n_parts)
         for p in range(n_parts):
-            body += struct.pack(">hiii", 0, p, node_id, 0)
-            body += enc_compact_array_len(1) + struct.pack(">i", node_id)
-            body += enc_compact_array_len(1) + struct.pack(">i", node_id)
-            body += enc_compact_array_len(0)  # offline_replicas
-            body += enc_tags()
-        body += struct.pack(">i", -2147483648)  # topic_authorized_operations
-        body += enc_tags()
-    body += struct.pack(">i", -2147483648)  # cluster_authorized_operations
-    body += enc_tags()
-    return body
+            w.pack(">hii", 0, p, node_id)  # error_code, index, leader
+            if version >= 7:
+                w.pack(">i", 0)  # leader_epoch
+            for _ in range(2):  # replicas, isr
+                w.array_len(1)
+                w.pack(">i", node_id)
+            if version >= 5:
+                w.array_len(0)  # offline_replicas
+            w.tags()
+        if version >= 8:
+            w.pack(">i", -2147483648)  # topic_authorized_operations
+        w.tags()
+    if version >= 8:
+        w.pack(">i", -2147483648)  # cluster_authorized_operations
+    w.tags()
+    return w.done()
 
 
-def dec_metadata_response_v9(r: Reader) -> dict:
-    r.i32()  # throttle
+def dec_metadata_response(r: Reader, version: int) -> dict:
+    r.flexible = is_flexible(API_METADATA, version)
+    if version >= 3:
+        r.i32()  # throttle_time_ms
     brokers = []
-    for _ in range(r.compact_array_len()):
-        node_id = r.i32()
-        host = r.compact_string()
-        port = r.i32()
-        rack = r.compact_string()
+    for _ in range(r.array_len()):
+        brokers.append({"node_id": r.i32(), "host": r.string(), "port": r.i32(),
+                        "rack": r.string()})
         r.skip_tags()
-        brokers.append({"node_id": node_id, "host": host, "port": port,
-                        "rack": rack})
-    r.compact_string()  # cluster_id
+    if version >= 2:
+        r.string()  # cluster_id
     controller = r.i32()
     topics = {}
-    for _ in range(r.compact_array_len()):
+    for _ in range(r.array_len()):
         err = r.i16()
-        name = r.compact_string()
+        name = r.string()
         r.i8()  # is_internal
         parts = []
-        for _ in range(r.compact_array_len()):
-            perr = r.i16()
-            idx = r.i32()
-            leader = r.i32()
-            r.i32()  # leader_epoch
-            replicas = [r.i32() for _ in range(r.compact_array_len())]
-            isr = [r.i32() for _ in range(r.compact_array_len())]
-            for _ in range(r.compact_array_len()):  # offline
-                r.i32()
+        for _ in range(r.array_len()):
+            perr, idx, leader = r.i16(), r.i32(), r.i32()
+            if version >= 7:
+                r.i32()  # leader_epoch
+            replicas = [r.i32() for _ in range(r.array_len())]
+            isr = [r.i32() for _ in range(r.array_len())]
+            if version >= 5:
+                for _ in range(r.array_len()):  # offline_replicas
+                    r.i32()
             r.skip_tags()
             parts.append({"error": perr, "index": idx, "leader": leader,
                           "replicas": replicas, "isr": isr})
-        r.i32()  # topic_authorized_operations
+        if version >= 8:
+            r.i32()  # topic_authorized_operations
         r.skip_tags()
         topics[name] = {"error": err, "partitions": parts}
-    r.i32()  # cluster_authorized_operations
+    if version >= 8:
+        r.i32()  # cluster_authorized_operations
     r.skip_tags()
     return {"brokers": brokers, "controller": controller, "topics": topics}
 
 
-# --------- KIP-482 flexible versions of the group/txn families.
-# Same logical payloads as the classic codecs above, re-framed with
-# compact strings/arrays/bytes + tagged fields (request header v2 /
-# response header v1): FindCoordinator v3, JoinGroup v6, SyncGroup v4,
-# Heartbeat v4, LeaveGroup v4, OffsetCommit v8, OffsetFetch v6,
-# InitProducerId v2, AddPartitionsToTxn v3, EndTxn v3 — the versions a
-# modern franz-go/sarama client (the reference's target,
-# `pkg/sink/kafka/sarama_config.go`) negotiates against a post-2.4
-# broker.  Layouts from the public protocol guide
-# (kafka.apache.org/protocol), like the rest of this module.
-
-FLEXIBLE_SINCE.update({
-    API_FIND_COORDINATOR: 3, API_JOIN_GROUP: 6, API_SYNC_GROUP: 4,
-    API_HEARTBEAT: 4, API_LEAVE_GROUP: 4, API_OFFSET_COMMIT: 8,
-    API_OFFSET_FETCH: 6, API_INIT_PRODUCER_ID: 2,
-    API_ADD_PARTITIONS_TO_TXN: 3, API_END_TXN: 3,
-})
-
-SUPPORTED.update({
-    API_FIND_COORDINATOR: (1, 3), API_JOIN_GROUP: (2, 6),
-    API_SYNC_GROUP: (1, 4), API_HEARTBEAT: (1, 4),
-    API_LEAVE_GROUP: (1, 4), API_OFFSET_COMMIT: (3, 8),
-    API_OFFSET_FETCH: (3, 6), API_INIT_PRODUCER_ID: (1, 2),
-    API_ADD_PARTITIONS_TO_TXN: (0, 3), API_END_TXN: (1, 3),
-})
+# ---------------------------------------------------------------- Produce
 
 
-def enc_find_coordinator_request_v3(key: str, key_type: int = 0) -> bytes:
-    return enc_compact_str(key) + struct.pack(">b", key_type) + enc_tags()
+def enc_produce_request(
+    version: int, topic_data: dict[str, dict[int, bytes]], acks: int = -1,
+    timeout_ms: int = 30000, txn_id: str | None = None
+) -> bytes:
+    w = Writer(is_flexible(API_PRODUCE, version))
+    w.string(txn_id)
+    w.pack(">hi", acks, timeout_ms)
+    w.array_len(len(topic_data))
+    for topic, parts in topic_data.items():
+        w.string(topic)
+        w.array_len(len(parts))
+        for idx, record_set in parts.items():
+            w.pack(">i", idx)
+            w.bytes_(record_set)
+            w.tags()
+        w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_find_coordinator_request_v3(r: Reader) -> tuple[str, int]:
-    key = r.compact_string()
-    key_type = r.i8()
+def dec_produce_request(
+        r: Reader, version: int
+) -> tuple[str | None, int, int, dict[str, dict[int, bytes]]]:
+    r.flexible = is_flexible(API_PRODUCE, version)
+    txn_id = r.string()
+    acks = r.i16()
+    timeout = r.i32()
+    topic_data: dict[str, dict[int, bytes]] = {}
+    for _ in range(r.array_len()):
+        topic = r.string()
+        parts = {}
+        for _ in range(r.array_len()):
+            idx = r.i32()
+            parts[idx] = r.bytes_()
+            r.skip_tags()
+        r.skip_tags()
+        topic_data[topic] = parts
+    r.skip_tags()
+    return txn_id, acks, timeout, topic_data
+
+
+def enc_produce_response(version: int,
+                         results: dict[str, dict[int, tuple[int, int]]]) -> bytes:
+    """results: topic -> partition -> (error_code, base_offset)."""
+    w = Writer(is_flexible(API_PRODUCE, version))
+    w.array_len(len(results))
+    for topic, parts in results.items():
+        w.string(topic)
+        w.array_len(len(parts))
+        for idx, (err, base_offset) in parts.items():
+            w.pack(">ihqq", idx, err, base_offset, -1)  # log_append_time
+            if version >= 5:
+                w.pack(">q", 0)  # log_start_offset
+            if version >= 8:
+                w.array_len(0)  # record_errors
+                w.string(None)  # error_message
+            w.tags()
+        w.tags()
+    w.pack(">i", 0)  # throttle_time_ms
+    w.tags()
+    return w.done()
+
+
+def dec_produce_response(r: Reader, version: int) -> dict[str, dict[int, tuple[int, int]]]:
+    r.flexible = is_flexible(API_PRODUCE, version)
+    out: dict[str, dict[int, tuple[int, int]]] = {}
+    for _ in range(r.array_len()):
+        topic = r.string()
+        parts = {}
+        for _ in range(r.array_len()):
+            idx = r.i32()
+            err = r.i16()
+            base_offset = r.i64()
+            r.i64()  # log_append_time
+            if version >= 5:
+                r.i64()  # log_start_offset
+            if version >= 8:
+                for _ in range(r.array_len()):  # record_errors
+                    r.i32()
+                    r.string()
+                    r.skip_tags()
+                r.string()  # error_message
+            r.skip_tags()
+            parts[idx] = (err, base_offset)
+        r.skip_tags()
+        out[topic] = parts
+    r.i32()  # throttle_time_ms
+    r.skip_tags()
+    return out
+
+
+# ---------------------------------------------------------------- Fetch
+
+
+def enc_fetch_request(
+    version: int, wants: list[tuple[str, int, int, int]], isolation: int = 0,
+    max_bytes: int = 1 << 26, session_id: int = 0, session_epoch: int = -1,
+    forgotten: list[tuple[str, list[int]]] | None = None,
+) -> bytes:
+    """``wants``: [(topic, partition, fetch_offset, partition_max_bytes)].
+    KIP-227 sessions (v7+): epoch -1 = sessionless, 0 = full request
+    opening a session, >0 = incremental (``wants`` lists only CHANGED
+    partitions, ``forgotten`` removes partitions from the session)."""
+    w = Writer(is_flexible(API_FETCH, version))
+    w.pack(">iiii", -1, 100, 1, max_bytes)  # replica_id, max_wait, min_bytes, max_bytes
+    w.pack(">b", isolation)  # 0 READ_UNCOMMITTED | 1 READ_COMMITTED
+    if version >= 7:
+        w.pack(">ii", session_id, session_epoch)
+    by_topic = _by_topic((t, (p, off, pmax)) for t, p, off, pmax in wants)
+    w.array_len(len(by_topic))
+    for topic, plist in by_topic.items():
+        w.string(topic)
+        w.array_len(len(plist))
+        for partition, offset, pmax in plist:
+            w.pack(">i", partition)
+            if version >= 9:
+                w.pack(">i", -1)  # current_leader_epoch
+            w.pack(">q", offset)
+            if version >= 12:
+                w.pack(">i", -1)  # last_fetched_epoch
+            if version >= 5:
+                w.pack(">q", -1)  # log_start_offset
+            w.pack(">i", pmax)
+            w.tags()
+        w.tags()
+    if version >= 7:
+        forgotten = forgotten or []
+        w.array_len(len(forgotten))
+        for topic, parts in forgotten:
+            w.string(topic)
+            w.array_len(len(parts))
+            for p in parts:
+                w.pack(">i", p)
+            w.tags()
+    if version >= 11:
+        w.string("")  # rack_id
+    w.tags()
+    return w.done()
+
+
+def dec_fetch_request(
+    r: Reader, version: int,
+) -> tuple[int, int, int, list[tuple[str, int, int, int]],
+           list[tuple[str, list[int]]]]:
+    """-> (isolation, session_id, session_epoch, wants, forgotten); a
+    classic request reads as sessionless (0, -1)."""
+    r.flexible = is_flexible(API_FETCH, version)
+    r.raw(16)  # replica_id, max_wait, min_bytes, max_bytes
+    isolation = r.i8()
+    session_id, session_epoch = (r.i32(), r.i32()) if version >= 7 else (0, -1)
+    wants = []
+    for _ in range(r.array_len()):
+        topic = r.string()
+        for _ in range(r.array_len()):
+            partition = r.i32()
+            if version >= 9:
+                r.i32()  # current_leader_epoch
+            offset = r.i64()
+            if version >= 12:
+                r.i32()  # last_fetched_epoch
+            if version >= 5:
+                r.i64()  # log_start_offset
+            wants.append((topic, partition, offset, r.i32()))
+            r.skip_tags()
+        r.skip_tags()
+    forgotten: list[tuple[str, list[int]]] = []
+    if version >= 7:
+        for _ in range(r.array_len()):
+            topic = r.string()
+            forgotten.append((topic, [r.i32() for _ in range(r.array_len())]))
+            r.skip_tags()
+    if version >= 11:
+        r.string()  # rack_id
+    r.skip_tags()
+    return isolation, session_id, session_epoch, wants, forgotten
+
+
+def enc_fetch_response(
+    version: int, parts: list, session_id: int = 0, error_code: int = 0
+) -> bytes:
+    """parts: 5-tuples (topic, partition, error_code, hw, record_set) or
+    7-tuples adding (last_stable_offset, aborted:[(pid, first_off)]).
+    ``session_id``/``error_code``: KIP-227 session fields (v7+; error 69 =
+    FETCH_SESSION_ID_NOT_FOUND, 71 = INVALID_FETCH_SESSION_EPOCH)."""
+    w = Writer(is_flexible(API_FETCH, version))
+    w.pack(">i", 0)  # throttle_time_ms
+    if version >= 7:
+        w.pack(">hi", error_code, session_id)
+    by_topic = _by_topic((p[0], p[1:]) for p in parts)
+    w.array_len(len(by_topic))
+    for topic, plist in by_topic.items():
+        w.string(topic)
+        w.array_len(len(plist))
+        for idx, err, hw, rs, *txn in plist:
+            lso, aborted = txn or (hw, [])
+            w.pack(">ihqq", idx, err, hw, lso)
+            if version >= 5:
+                w.pack(">q", 0)  # log_start_offset
+            w.array_len(len(aborted))
+            for pid, first in aborted:
+                w.pack(">qq", pid, first)
+                w.tags()
+            if version >= 11:
+                w.pack(">i", -1)  # preferred_read_replica
+            w.bytes_(rs)
+            w.tags()
+        w.tags()
+    w.tags()
+    return w.done()
+
+
+def dec_fetch_response(r: Reader, version: int) -> tuple[int, int, list[tuple]]:
+    """-> (top_error_code, session_id, [(topic, idx, err, hw, lso,
+    aborted:[(pid, first)], record_set)]) — KIP-227 errors 69/71 surface
+    instead of raising, so a client can fall back to a full request."""
+    r.flexible = is_flexible(API_FETCH, version)
+    r.i32()  # throttle_time_ms
+    top_err, session_id = (r.i16(), r.i32()) if version >= 7 else (0, 0)
+    out = []
+    for _ in range(r.array_len()):
+        topic = r.string()
+        for _ in range(r.array_len()):
+            idx, err, hw, lso = r.i32(), r.i16(), r.i64(), r.i64()
+            if version >= 5:
+                r.i64()  # log_start_offset
+            aborted = []
+            for _ in range(r.array_len()):
+                aborted.append((r.i64(), r.i64()))
+                r.skip_tags()
+            if version >= 11:
+                r.i32()  # preferred_read_replica
+            rs = r.bytes_() or b""
+            r.skip_tags()
+            out.append((topic, idx, err, hw, lso, aborted, rs))
+        r.skip_tags()
+    r.skip_tags()
+    return top_err, session_id, out
+
+
+# ---------------------------------------------------------------- ListOffsets
+# how consumers seek earliest (-2) / latest (-1) / by timestamp before
+# fetching — sarama's OffsetOldest/OffsetNewest and GetOffset(ts)
+
+
+def enc_list_offsets_request(version: int, topic: str, partition: int,
+                             timestamp: int) -> bytes:
+    w = Writer(is_flexible(API_LIST_OFFSETS, version))
+    w.pack(">i", -1)  # replica_id
+    if version >= 2:
+        w.pack(">b", 0)  # isolation_level
+    w.array_len(1)
+    w.string(topic)
+    w.array_len(1)
+    w.pack(">i", partition)
+    if version >= 4:
+        w.pack(">i", -1)  # current_leader_epoch
+    w.pack(">q", timestamp)
+    w.tags()  # partition
+    w.tags()  # topic
+    w.tags()
+    return w.done()
+
+
+def dec_list_offsets_request(r: Reader, version: int) -> list[tuple[str, int, int]]:
+    r.flexible = is_flexible(API_LIST_OFFSETS, version)
+    r.i32()  # replica_id
+    if version >= 2:
+        r.i8()  # isolation_level
+    out = []
+    for _ in range(r.array_len()):
+        topic = r.string()
+        for _ in range(r.array_len()):
+            partition = r.i32()
+            if version >= 4:
+                r.i32()  # current_leader_epoch
+            out.append((topic, partition, r.i64()))
+            r.skip_tags()
+        r.skip_tags()
+    r.skip_tags()
+    return out
+
+
+def enc_list_offsets_response(
+    version: int, results: list[tuple[str, int, int, int, int]]
+) -> bytes:
+    """results: [(topic, partition, error_code, timestamp, offset)]."""
+    w = Writer(is_flexible(API_LIST_OFFSETS, version))
+    if version >= 2:
+        w.pack(">i", 0)  # throttle_time_ms
+    by_topic = _by_topic((t, rest) for t, *rest in results)
+    w.array_len(len(by_topic))
+    for t, parts in by_topic.items():
+        w.string(t)
+        w.array_len(len(parts))
+        for p, err, ts, off in parts:
+            w.pack(">ihqq", p, err, ts, off)
+            if version >= 4:
+                w.pack(">i", -1)  # leader_epoch
+            w.tags()
+        w.tags()
+    w.tags()
+    return w.done()
+
+
+def dec_list_offsets_response(
+        r: Reader, version: int) -> dict[tuple[str, int], tuple[int, int]]:
+    """-> {(topic, partition): (timestamp, offset)}."""
+    r.flexible = is_flexible(API_LIST_OFFSETS, version)
+    if version >= 2:
+        r.i32()  # throttle_time_ms
+    out = {}
+    for _ in range(r.array_len()):
+        topic = r.string()
+        for _ in range(r.array_len()):
+            p, err, ts, off = r.i32(), r.i16(), r.i64(), r.i64()
+            if version >= 4:
+                r.i32()  # leader_epoch
+            r.skip_tags()
+            if err:
+                raise IOError(f"ListOffsets error {err} on {topic}/{p}")
+            out[(topic, p)] = (ts, off)
+        r.skip_tags()
+    r.skip_tags()
+    return out
+
+
+# ---------------------------------------------------------------- groups
+# Consumer-group coordination (what the reference's cmd/kafka-consumer
+# does through sarama): FindCoordinator, JoinGroup, SyncGroup, Heartbeat,
+# LeaveGroup, OffsetCommit, OffsetFetch.
+
+
+def enc_find_coordinator_request(version: int, key: str, key_type: int = 0) -> bytes:
+    w = Writer(is_flexible(API_FIND_COORDINATOR, version))
+    w.string(key)
+    w.pack(">b", key_type)
+    w.tags()
+    return w.done()
+
+
+def dec_find_coordinator_request(r: Reader, version: int) -> tuple[str, int]:
+    r.flexible = is_flexible(API_FIND_COORDINATOR, version)
+    key, key_type = r.string(), r.i8()
     r.skip_tags()
     return key, key_type
 
 
-def enc_find_coordinator_response_v3(node_id: int, host: str,
-                                     port: int) -> bytes:
-    return (struct.pack(">ih", 0, 0) + enc_compact_str(None)
-            + struct.pack(">i", node_id) + enc_compact_str(host)
-            + struct.pack(">i", port) + enc_tags())
+def enc_find_coordinator_response(version: int, node_id: int, host: str,
+                                  port: int) -> bytes:
+    w = Writer(is_flexible(API_FIND_COORDINATOR, version))
+    w.pack(">ih", 0, 0)  # throttle_time_ms, error_code
+    w.string(None)  # error_message
+    w.pack(">i", node_id)
+    w.string(host)
+    w.pack(">i", port)
+    w.tags()
+    return w.done()
 
 
-def dec_find_coordinator_response_v3(r: Reader) -> tuple[str, int]:
-    r.i32()  # throttle
+def dec_find_coordinator_response(r: Reader, version: int) -> tuple[str, int]:
+    r.flexible = is_flexible(API_FIND_COORDINATOR, version)
+    r.i32()  # throttle_time_ms
     err = r.i16()
-    r.compact_string()  # error_message
+    r.string()  # error_message
     if err:
         raise IOError(f"FindCoordinator error {err}")
     r.i32()  # node_id
-    host = r.compact_string()
-    port = r.i32()
+    host, port = r.string(), r.i32()
     r.skip_tags()
     return host, port
 
 
-def enc_join_group_request_v6(
-    group_id: str, member_id: str, topics: list[str],
+def enc_consumer_metadata(topics: list[str]) -> bytes:
+    """The "consumer" protocol metadata a JoinGroup carries: version,
+    topics, user data. It keeps its classic framing in every JoinGroup
+    version (opaque to the broker, versioned separately)."""
+    w = Writer()
+    w.pack(">h", 0)
+    w.array_len(len(topics))
+    for t in topics:
+        w.string(t)
+    w.bytes_(b"")
+    return w.done()
+
+
+def dec_consumer_metadata(md: bytes) -> list[str]:
+    r = Reader(md)
+    r.i16()  # version
+    return [r.string() for _ in range(r.i32())]
+
+
+def enc_join_group_request(
+    version: int, group_id: str, member_id: str, topics: list[str],
     session_timeout_ms: int = 10000, rebalance_timeout_ms: int = 3000,
     group_instance_id: str | None = None,
 ) -> bytes:
-    # the embedded "consumer" protocol metadata blob keeps its own
-    # classic framing (it's opaque to the broker, versioned separately)
-    md = struct.pack(">h", 0) + struct.pack(">i", len(topics))
-    for t in topics:
-        md += enc_str(t)
-    md += enc_bytes(b"")
-    body = enc_compact_str(group_id)
-    body += struct.pack(">ii", session_timeout_ms, rebalance_timeout_ms)
-    body += enc_compact_str(member_id)
-    body += enc_compact_str(group_instance_id)  # KIP-345 static member
-    body += enc_compact_str("consumer")
-    body += enc_compact_array_len(1)
-    body += enc_compact_str("range") + enc_compact_bytes(md) + enc_tags()
-    return body + enc_tags()
+    w = Writer(is_flexible(API_JOIN_GROUP, version))
+    w.string(group_id)
+    w.pack(">ii", session_timeout_ms, rebalance_timeout_ms)
+    w.string(member_id)
+    if version >= 5:
+        w.string(group_instance_id)  # KIP-345 static member
+    w.string("consumer")
+    w.array_len(1)
+    w.string("range")
+    w.bytes_(enc_consumer_metadata(topics))
+    w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_join_group_request_v6(r: Reader) -> dict:
-    group_id = r.compact_string()
+def dec_join_group_request(r: Reader, version: int) -> dict:
+    r.flexible = is_flexible(API_JOIN_GROUP, version)
+    group_id = r.string()
     session_timeout = r.i32()
     rebalance_timeout = r.i32()
-    member_id = r.compact_string()
-    group_instance_id = r.compact_string()
-    protocol_type = r.compact_string()
+    member_id = r.string()
+    group_instance_id = r.string() if version >= 5 else None
+    protocol_type = r.string()
     protocols = []
-    for _ in range(max(r.compact_array_len(), 0)):
-        name = r.compact_string()
-        md = r.compact_bytes()
+    for _ in range(r.array_len()):
+        protocols.append((r.string(), r.bytes_()))
         r.skip_tags()
-        protocols.append((name, md))
     r.skip_tags()
     return {"group_id": group_id, "session_timeout": session_timeout,
             "rebalance_timeout": rebalance_timeout, "member_id": member_id,
@@ -1990,219 +1235,307 @@ def dec_join_group_request_v6(r: Reader) -> dict:
             "protocol_type": protocol_type, "protocols": protocols}
 
 
-def enc_join_group_response_v6(
-    error_code: int, generation: int, protocol: str, leader: str,
+def enc_join_group_response(
+    version: int, error_code: int, generation: int, protocol: str, leader: str,
     member_id: str, members: list[tuple[str, bytes]],
 ) -> bytes:
-    body = struct.pack(">ih", 0, error_code)
-    body += struct.pack(">i", generation)
-    body += enc_compact_str(protocol) + enc_compact_str(leader)
-    body += enc_compact_str(member_id)
-    body += enc_compact_array_len(len(members))
+    w = Writer(is_flexible(API_JOIN_GROUP, version))
+    w.pack(">ihi", 0, error_code, generation)
+    w.string(protocol)
+    w.string(leader)
+    w.string(member_id)
+    w.array_len(len(members))
     for mid, md in members:
-        body += (enc_compact_str(mid) + enc_compact_str(None)
-                 + enc_compact_bytes(md) + enc_tags())
-    return body + enc_tags()
+        w.string(mid)
+        if version >= 5:
+            w.string(None)  # group_instance_id
+        w.bytes_(md)
+        w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_join_group_response_v6(r: Reader) -> dict:
-    r.i32()  # throttle
+def dec_join_group_response(r: Reader, version: int) -> dict:
+    r.flexible = is_flexible(API_JOIN_GROUP, version)
+    r.i32()  # throttle_time_ms
     err = r.i16()
     generation = r.i32()
-    protocol = r.compact_string()
-    leader = r.compact_string()
-    member_id = r.compact_string()
+    protocol = r.string()
+    leader = r.string()
+    member_id = r.string()
     members = []
-    for _ in range(max(r.compact_array_len(), 0)):
-        mid = r.compact_string()
-        r.compact_string()  # group_instance_id
-        md = r.compact_bytes()
+    for _ in range(r.array_len()):
+        mid = r.string()
+        if version >= 5:
+            r.string()  # group_instance_id
+        members.append((mid, r.bytes_()))
         r.skip_tags()
-        members.append((mid, md))
     r.skip_tags()
     return {"error": err, "generation": generation, "protocol": protocol,
             "leader": leader, "member_id": member_id, "members": members}
 
 
-def enc_sync_group_request_v4(
-    group_id: str, generation: int, member_id: str,
-    assignments: list[tuple[str, bytes]],
-    group_instance_id: str | None = None,
+def enc_consumer_assignment(topic_partitions: dict[str, list[int]],
+                            user_data: bytes = b"") -> bytes:
+    """``user_data`` is the consumer protocol's assignor-metadata field
+    (what sticky/cooperative assignors use); this repo's range assignor
+    carries the generation's member count in it so followers can detect
+    a fully-formed group without polling."""
+    w = Writer()
+    w.pack(">h", 0)
+    w.array_len(len(topic_partitions))
+    for t, parts in sorted(topic_partitions.items()):
+        w.string(t)
+        w.array_len(len(parts))
+        for p in parts:
+            w.pack(">i", p)
+    w.bytes_(user_data)
+    return w.done()
+
+
+def dec_consumer_assignment(buf: bytes) -> dict[str, list[int]]:
+    out, _ = dec_consumer_assignment_full(buf)
+    return out
+
+
+def dec_consumer_assignment_full(
+        buf: bytes) -> tuple[dict[str, list[int]], bytes]:
+    """-> (assignment, user_data)."""
+    if not buf:
+        return {}, b""
+    r = Reader(buf)
+    r.i16()  # version
+    out: dict[str, list[int]] = {}
+    for _ in range(r.i32()):
+        t = r.string()
+        out[t] = [r.i32() for _ in range(r.i32())]
+    user = r.bytes_() if r.remaining() else b""
+    return out, user or b""
+
+
+def enc_sync_group_request(
+    version: int, group_id: str, generation: int, member_id: str,
+    assignments: list[tuple[str, bytes]], group_instance_id: str | None = None,
 ) -> bytes:
-    body = enc_compact_str(group_id) + struct.pack(">i", generation)
-    body += enc_compact_str(member_id)
-    body += enc_compact_str(group_instance_id)
-    body += enc_compact_array_len(len(assignments))
+    w = Writer(is_flexible(API_SYNC_GROUP, version))
+    w.string(group_id)
+    w.pack(">i", generation)
+    w.string(member_id)
+    if version >= 3:
+        w.string(group_instance_id)
+    w.array_len(len(assignments))
     for mid, a in assignments:
-        body += enc_compact_str(mid) + enc_compact_bytes(a) + enc_tags()
-    return body + enc_tags()
+        w.string(mid)
+        w.bytes_(a)
+        w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_sync_group_request_v4(r: Reader) -> dict:
-    group_id = r.compact_string()
+def dec_sync_group_request(r: Reader, version: int) -> dict:
+    r.flexible = is_flexible(API_SYNC_GROUP, version)
+    group_id = r.string()
     generation = r.i32()
-    member_id = r.compact_string()
-    group_instance_id = r.compact_string()
+    member_id = r.string()
+    group_instance_id = r.string() if version >= 3 else None
     assignments = []
-    for _ in range(max(r.compact_array_len(), 0)):
-        mid = r.compact_string()
-        a = r.compact_bytes()
+    for _ in range(r.array_len()):
+        assignments.append((r.string(), r.bytes_()))
         r.skip_tags()
-        assignments.append((mid, a))
     r.skip_tags()
     return {"group_id": group_id, "generation": generation,
-            "member_id": member_id,
-            "group_instance_id": group_instance_id,
+            "member_id": member_id, "group_instance_id": group_instance_id,
             "assignments": assignments}
 
 
-def enc_sync_group_response_v4(error_code: int, assignment: bytes) -> bytes:
-    return (struct.pack(">ih", 0, error_code)
-            + enc_compact_bytes(assignment) + enc_tags())
+def enc_sync_group_response(version: int, error_code: int, assignment: bytes) -> bytes:
+    w = Writer(is_flexible(API_SYNC_GROUP, version))
+    w.pack(">ih", 0, error_code)  # throttle_time_ms, error_code
+    w.bytes_(assignment)
+    w.tags()
+    return w.done()
 
 
-def dec_sync_group_response_v4(r: Reader) -> tuple[int, bytes]:
-    r.i32()
-    err = r.i16()
-    a = r.compact_bytes() or b""
+def dec_sync_group_response(r: Reader, version: int) -> tuple[int, bytes]:
+    r.flexible = is_flexible(API_SYNC_GROUP, version)
+    r.i32()  # throttle_time_ms
+    err, assignment = r.i16(), r.bytes_() or b""
     r.skip_tags()
-    return err, a
+    return err, assignment
 
 
-def enc_heartbeat_request_v4(group_id: str, generation: int,
-                             member_id: str,
-                             group_instance_id: str | None = None) -> bytes:
-    return (enc_compact_str(group_id) + struct.pack(">i", generation)
-            + enc_compact_str(member_id)
-            + enc_compact_str(group_instance_id) + enc_tags())
+def enc_heartbeat_request(version: int, group_id: str, generation: int,
+                          member_id: str,
+                          group_instance_id: str | None = None) -> bytes:
+    w = Writer(is_flexible(API_HEARTBEAT, version))
+    w.string(group_id)
+    w.pack(">i", generation)
+    w.string(member_id)
+    if version >= 3:
+        w.string(group_instance_id)
+    w.tags()
+    return w.done()
 
 
-def dec_heartbeat_request_v4(r: Reader) -> tuple[str, int, str, str | None]:
-    group_id = r.compact_string()
-    generation = r.i32()
-    member_id = r.compact_string()
-    group_instance_id = r.compact_string()
+def dec_heartbeat_request(r: Reader, version: int) -> tuple[str, int, str, str | None]:
+    r.flexible = is_flexible(API_HEARTBEAT, version)
+    group_id, generation, member_id = r.string(), r.i32(), r.string()
+    group_instance_id = r.string() if version >= 3 else None
     r.skip_tags()
     return group_id, generation, member_id, group_instance_id
 
 
-def enc_error_only_response_flex(error_code: int) -> bytes:
-    return struct.pack(">ih", 0, error_code) + enc_tags()
+def enc_heartbeat_response(version: int, error_code: int) -> bytes:
+    w = Writer(is_flexible(API_HEARTBEAT, version))
+    w.pack(">ih", 0, error_code)  # throttle_time_ms, error_code
+    w.tags()
+    return w.done()
 
 
-def dec_error_only_response_flex(r: Reader) -> int:
-    r.i32()
+def dec_heartbeat_response(r: Reader, version: int) -> int:
+    r.flexible = is_flexible(API_HEARTBEAT, version)
+    r.i32()  # throttle_time_ms
     err = r.i16()
     r.skip_tags()
     return err
 
 
-def enc_leave_group_request_v4(group_id: str, member_id: str) -> bytes:
-    # v3+ switched the single member field to a members array
-    return (enc_compact_str(group_id) + enc_compact_array_len(1)
-            + enc_compact_str(member_id) + enc_compact_str(None)
-            + enc_tags() + enc_tags())
+def enc_leave_group_request(version: int, group_id: str, member_id: str) -> bytes:
+    w = Writer(is_flexible(API_LEAVE_GROUP, version))
+    w.string(group_id)
+    if version >= 3:  # the single member became a members array
+        w.array_len(1)
+        w.string(member_id)
+        w.string(None)  # group_instance_id
+        w.tags()
+    else:
+        w.string(member_id)
+    w.tags()
+    return w.done()
 
 
-def dec_leave_group_request_v4(r: Reader) -> tuple[str, list[str]]:
-    group_id = r.compact_string()
+def dec_leave_group_request(r: Reader, version: int) -> tuple[str, list[str]]:
+    r.flexible = is_flexible(API_LEAVE_GROUP, version)
+    group_id = r.string()
+    if version < 3:
+        return group_id, [r.string()]
     members = []
-    for _ in range(max(r.compact_array_len(), 0)):
-        mid = r.compact_string()
-        r.compact_string()  # group_instance_id
+    for _ in range(r.array_len()):
+        members.append(r.string())
+        r.string()  # group_instance_id
         r.skip_tags()
-        members.append(mid)
     r.skip_tags()
     return group_id, members
 
 
-def enc_leave_group_response_v4(error_code: int,
-                                members: list[str]) -> bytes:
-    body = struct.pack(">ih", 0, error_code)
-    body += enc_compact_array_len(len(members))
-    for mid in members:
-        body += (enc_compact_str(mid) + enc_compact_str(None)
-                 + struct.pack(">h", 0) + enc_tags())
-    return body + enc_tags()
+def enc_leave_group_response(version: int, error_code: int,
+                             members: list[str]) -> bytes:
+    w = Writer(is_flexible(API_LEAVE_GROUP, version))
+    w.pack(">ih", 0, error_code)  # throttle_time_ms, error_code
+    if version >= 3:
+        w.array_len(len(members))
+        for mid in members:
+            w.string(mid)
+            w.string(None)  # group_instance_id
+            w.pack(">h", 0)
+            w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_leave_group_response_v4(r: Reader) -> int:
-    r.i32()
+def dec_leave_group_response(r: Reader, version: int) -> int:
+    r.flexible = is_flexible(API_LEAVE_GROUP, version)
+    r.i32()  # throttle_time_ms
     err = r.i16()
-    for _ in range(max(r.compact_array_len(), 0)):
-        r.compact_string()
-        r.compact_string()
-        member_err = r.i16()
-        r.skip_tags()
-        err = err or member_err
+    if version >= 3:
+        for _ in range(r.array_len()):
+            r.string()
+            r.string()
+            member_err = r.i16()
+            r.skip_tags()
+            err = err or member_err
     r.skip_tags()
     return err
 
 
-def enc_offset_commit_request_v8(
-    group_id: str, generation: int, member_id: str,
-    offsets: dict[tuple[str, int], int],
-    group_instance_id: str | None = None,
+def enc_offset_commit_request(
+    version: int, group_id: str, generation: int, member_id: str,
+    offsets: dict[tuple[str, int], int], group_instance_id: str | None = None,
 ) -> bytes:
-    body = enc_compact_str(group_id) + struct.pack(">i", generation)
-    body += enc_compact_str(member_id)
-    body += enc_compact_str(group_instance_id)
-    by_topic: dict[str, list[tuple[int, int]]] = {}
-    for (t, p), off in offsets.items():
-        by_topic.setdefault(t, []).append((p, off))
-    body += enc_compact_array_len(len(by_topic))
+    w = Writer(is_flexible(API_OFFSET_COMMIT, version))
+    w.string(group_id)
+    w.pack(">i", generation)
+    w.string(member_id)
+    if version >= 7:
+        w.string(group_instance_id)
+    if 2 <= version <= 4:
+        w.pack(">q", -1)  # retention_time_ms
+    by_topic = _by_topic((t, (p, off)) for (t, p), off in offsets.items())
+    w.array_len(len(by_topic))
     for t, parts in by_topic.items():
-        body += enc_compact_str(t) + enc_compact_array_len(len(parts))
+        w.string(t)
+        w.array_len(len(parts))
         for p, off in parts:
-            body += struct.pack(">iqi", p, off, -1)  # leader_epoch -1
-            body += enc_compact_str(None) + enc_tags()
-        body += enc_tags()
-    return body + enc_tags()
+            w.pack(">iq", p, off)
+            if version >= 6:
+                w.pack(">i", -1)  # committed_leader_epoch
+            w.string(None)  # metadata
+            w.tags()
+        w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_offset_commit_request_v8(r: Reader) -> dict:
-    group_id = r.compact_string()
+def dec_offset_commit_request(r: Reader, version: int) -> dict:
+    r.flexible = is_flexible(API_OFFSET_COMMIT, version)
+    group_id = r.string()
     generation = r.i32()
-    member_id = r.compact_string()
-    group_instance_id = r.compact_string()
+    member_id = r.string()
+    group_instance_id = r.string() if version >= 7 else None
+    if 2 <= version <= 4:
+        r.i64()  # retention_time_ms
     offsets: dict[tuple[str, int], int] = {}
-    for _ in range(max(r.compact_array_len(), 0)):
-        t = r.compact_string()
-        for _ in range(max(r.compact_array_len(), 0)):
+    for _ in range(r.array_len()):
+        t = r.string()
+        for _ in range(r.array_len()):
             p = r.i32()
             off = r.i64()
-            r.i32()  # leader_epoch
-            r.compact_string()  # metadata
+            if version >= 6:
+                r.i32()  # committed_leader_epoch
+            r.string()  # metadata
             r.skip_tags()
             offsets[(t, p)] = off
         r.skip_tags()
     r.skip_tags()
     return {"group_id": group_id, "generation": generation,
-            "member_id": member_id,
-            "group_instance_id": group_instance_id, "offsets": offsets}
+            "member_id": member_id, "group_instance_id": group_instance_id,
+            "offsets": offsets}
 
 
-def enc_offset_commit_response_v8(
-        results: dict[tuple[str, int], int]) -> bytes:
-    by_topic: dict[str, list[tuple[int, int]]] = {}
-    for (t, p), err in results.items():
-        by_topic.setdefault(t, []).append((p, err))
-    body = struct.pack(">i", 0)
-    body += enc_compact_array_len(len(by_topic))
+def enc_offset_commit_response(version: int,
+                               results: dict[tuple[str, int], int]) -> bytes:
+    w = Writer(is_flexible(API_OFFSET_COMMIT, version))
+    w.pack(">i", 0)  # throttle_time_ms
+    by_topic = _by_topic((t, (p, err)) for (t, p), err in results.items())
+    w.array_len(len(by_topic))
     for t, parts in by_topic.items():
-        body += enc_compact_str(t) + enc_compact_array_len(len(parts))
+        w.string(t)
+        w.array_len(len(parts))
         for p, err in parts:
-            body += struct.pack(">ih", p, err) + enc_tags()
-        body += enc_tags()
-    return body + enc_tags()
+            w.pack(">ih", p, err)
+            w.tags()
+        w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_offset_commit_response_v8(r: Reader) -> dict[tuple[str, int], int]:
-    r.i32()
+def dec_offset_commit_response(r: Reader, version: int) -> dict[tuple[str, int], int]:
+    r.flexible = is_flexible(API_OFFSET_COMMIT, version)
+    r.i32()  # throttle_time_ms
     out = {}
-    for _ in range(max(r.compact_array_len(), 0)):
-        t = r.compact_string()
-        for _ in range(max(r.compact_array_len(), 0)):
+    for _ in range(r.array_len()):
+        t = r.string()
+        for _ in range(r.array_len()):
             p = r.i32()
             out[(t, p)] = r.i16()
             r.skip_tags()
@@ -2211,58 +1544,67 @@ def dec_offset_commit_response_v8(r: Reader) -> dict[tuple[str, int], int]:
     return out
 
 
-def enc_offset_fetch_request_v6(
-        group_id: str, topic_partitions: dict[str, list[int]]) -> bytes:
-    body = enc_compact_str(group_id)
-    body += enc_compact_array_len(len(topic_partitions))
+def enc_offset_fetch_request(version: int, group_id: str,
+                             topic_partitions: dict[str, list[int]]) -> bytes:
+    w = Writer(is_flexible(API_OFFSET_FETCH, version))
+    w.string(group_id)
+    w.array_len(len(topic_partitions))
     for t, parts in topic_partitions.items():
-        body += enc_compact_str(t) + enc_compact_array_len(len(parts))
+        w.string(t)
+        w.array_len(len(parts))
         for p in parts:
-            body += struct.pack(">i", p)
-        body += enc_tags()
-    return body + enc_tags()
+            w.pack(">i", p)
+        w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_offset_fetch_request_v6(
-        r: Reader) -> tuple[str, dict[str, list[int]]]:
-    group_id = r.compact_string()
+def dec_offset_fetch_request(r: Reader, version: int) -> tuple[str, dict[str, list[int]]]:
+    r.flexible = is_flexible(API_OFFSET_FETCH, version)
+    group_id = r.string()
     out: dict[str, list[int]] = {}
-    for _ in range(max(r.compact_array_len(), 0)):
-        t = r.compact_string()
-        out[t] = [r.i32() for _ in range(max(r.compact_array_len(), 0))]
+    for _ in range(r.array_len()):
+        t = r.string()
+        out[t] = [r.i32() for _ in range(r.array_len())]
         r.skip_tags()
     r.skip_tags()
     return group_id, out
 
 
-def enc_offset_fetch_response_v6(
-        offsets: dict[tuple[str, int], int]) -> bytes:
-    by_topic: dict[str, list[tuple[int, int]]] = {}
-    for (t, p), off in offsets.items():
-        by_topic.setdefault(t, []).append((p, off))
-    body = struct.pack(">i", 0)
-    body += enc_compact_array_len(len(by_topic))
+def enc_offset_fetch_response(version: int,
+                              offsets: dict[tuple[str, int], int]) -> bytes:
+    w = Writer(is_flexible(API_OFFSET_FETCH, version))
+    w.pack(">i", 0)  # throttle_time_ms
+    by_topic = _by_topic((t, (p, off)) for (t, p), off in offsets.items())
+    w.array_len(len(by_topic))
     for t, parts in by_topic.items():
-        body += enc_compact_str(t) + enc_compact_array_len(len(parts))
+        w.string(t)
+        w.array_len(len(parts))
         for p, off in parts:
-            body += struct.pack(">iqi", p, off, -1)  # leader_epoch -1
-            body += enc_compact_str(None) + struct.pack(">h", 0)
-            body += enc_tags()
-        body += enc_tags()
-    body += struct.pack(">h", 0)  # top-level error
-    return body + enc_tags()
+            w.pack(">iq", p, off)
+            if version >= 5:
+                w.pack(">i", -1)  # committed_leader_epoch
+            w.string(None)  # metadata
+            w.pack(">h", 0)  # error_code
+            w.tags()
+        w.tags()
+    w.pack(">h", 0)  # top-level error
+    w.tags()
+    return w.done()
 
 
-def dec_offset_fetch_response_v6(r: Reader) -> dict[tuple[str, int], int]:
-    r.i32()
+def dec_offset_fetch_response(r: Reader, version: int) -> dict[tuple[str, int], int]:
+    r.flexible = is_flexible(API_OFFSET_FETCH, version)
+    r.i32()  # throttle_time_ms
     out = {}
-    for _ in range(max(r.compact_array_len(), 0)):
-        t = r.compact_string()
-        for _ in range(max(r.compact_array_len(), 0)):
+    for _ in range(r.array_len()):
+        t = r.string()
+        for _ in range(r.array_len()):
             p = r.i32()
             off = r.i64()
-            r.i32()  # leader_epoch
-            r.compact_string()  # metadata
+            if version >= 5:
+                r.i32()  # committed_leader_epoch
+            r.string()  # metadata
             err = r.i16()
             r.skip_tags()
             if err:
@@ -2274,86 +1616,102 @@ def dec_offset_fetch_response_v6(r: Reader) -> dict[tuple[str, int], int]:
     return out
 
 
-def enc_init_producer_id_request_v2(txn_id: str | None = None,
-                                    txn_timeout_ms: int = 60000) -> bytes:
-    return (enc_compact_str(txn_id) + struct.pack(">i", txn_timeout_ms)
-            + enc_tags())
+# ---------------------------------------------------------------- producer ids and transactions
+# KIP-98: InitProducerId for idempotent produces, AddPartitionsToTxn and
+# EndTxn for transactional ones.
 
 
-def dec_init_producer_id_request_v2(r: Reader) -> tuple[str | None, int]:
-    txn_id = r.compact_string()
-    timeout = r.i32()
+def enc_init_producer_id_request(version: int, txn_id: str | None = None,
+                                 txn_timeout_ms: int = 60000) -> bytes:
+    w = Writer(is_flexible(API_INIT_PRODUCER_ID, version))
+    w.string(txn_id)
+    w.pack(">i", txn_timeout_ms)
+    w.tags()
+    return w.done()
+
+
+def dec_init_producer_id_request(r: Reader, version: int) -> tuple[str | None, int]:
+    r.flexible = is_flexible(API_INIT_PRODUCER_ID, version)
+    txn_id, timeout = r.string(), r.i32()
     r.skip_tags()
     return txn_id, timeout
 
 
-def enc_init_producer_id_response_v2(producer_id: int,
-                                     producer_epoch: int = 0,
-                                     error_code: int = 0) -> bytes:
-    return (struct.pack(">ihqh", 0, error_code, producer_id,
-                        producer_epoch) + enc_tags())
+def enc_init_producer_id_response(version: int, producer_id: int,
+                                  producer_epoch: int = 0,
+                                  error_code: int = 0) -> bytes:
+    w = Writer(is_flexible(API_INIT_PRODUCER_ID, version))
+    w.pack(">ihqh", 0, error_code, producer_id, producer_epoch)
+    w.tags()
+    return w.done()
 
 
-def dec_init_producer_id_response_v2(r: Reader) -> tuple[int, int]:
-    r.i32()  # throttle
-    err = r.i16()
-    pid = r.i64()
-    epoch = r.i16()
+def dec_init_producer_id_response(r: Reader, version: int) -> tuple[int, int]:
+    r.flexible = is_flexible(API_INIT_PRODUCER_ID, version)
+    r.i32()  # throttle_time_ms
+    err, pid, epoch = r.i16(), r.i64(), r.i16()
     r.skip_tags()
     if err:
         raise IOError(f"InitProducerId error {err}")
     return pid, epoch
 
 
-def enc_add_partitions_to_txn_request_v3(
-    txn_id: str, producer_id: int, producer_epoch: int,
+def enc_add_partitions_to_txn_request(
+    version: int, txn_id: str, producer_id: int, producer_epoch: int,
     topic_partitions: dict[str, list[int]],
 ) -> bytes:
-    body = enc_compact_str(txn_id)
-    body += struct.pack(">qh", producer_id, producer_epoch)
-    body += enc_compact_array_len(len(topic_partitions))
+    w = Writer(is_flexible(API_ADD_PARTITIONS_TO_TXN, version))
+    w.string(txn_id)
+    w.pack(">qh", producer_id, producer_epoch)
+    w.array_len(len(topic_partitions))
     for t, parts in topic_partitions.items():
-        body += enc_compact_str(t) + enc_compact_array_len(len(parts))
+        w.string(t)
+        w.array_len(len(parts))
         for p in parts:
-            body += struct.pack(">i", p)
-        body += enc_tags()
-    return body + enc_tags()
+            w.pack(">i", p)
+        w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_add_partitions_to_txn_request_v3(
-        r: Reader) -> tuple[str, int, int, dict[str, list[int]]]:
-    txn_id = r.compact_string()
-    pid = r.i64()
-    epoch = r.i16()
+def dec_add_partitions_to_txn_request(
+        r: Reader, version: int) -> tuple[str, int, int, dict[str, list[int]]]:
+    r.flexible = is_flexible(API_ADD_PARTITIONS_TO_TXN, version)
+    txn_id, pid, epoch = r.string(), r.i64(), r.i16()
     tps: dict[str, list[int]] = {}
-    for _ in range(max(r.compact_array_len(), 0)):
-        t = r.compact_string()
-        tps[t] = [r.i32() for _ in range(max(r.compact_array_len(), 0))]
+    for _ in range(r.array_len()):
+        t = r.string()
+        tps[t] = [r.i32() for _ in range(r.array_len())]
         r.skip_tags()
     r.skip_tags()
     return txn_id, pid, epoch, tps
 
 
-def enc_add_partitions_to_txn_response_v3(
-        results: dict[str, dict[int, int]]) -> bytes:
-    body = struct.pack(">i", 0)
-    body += enc_compact_array_len(len(results))
+def enc_add_partitions_to_txn_response(
+        version: int, results: dict[str, dict[int, int]]) -> bytes:
+    w = Writer(is_flexible(API_ADD_PARTITIONS_TO_TXN, version))
+    w.pack(">i", 0)  # throttle_time_ms
+    w.array_len(len(results))
     for t, parts in results.items():
-        body += enc_compact_str(t) + enc_compact_array_len(len(parts))
+        w.string(t)
+        w.array_len(len(parts))
         for p, err in parts.items():
-            body += struct.pack(">ih", p, err) + enc_tags()
-        body += enc_tags()
-    return body + enc_tags()
+            w.pack(">ih", p, err)
+            w.tags()
+        w.tags()
+    w.tags()
+    return w.done()
 
 
-def dec_add_partitions_to_txn_response_v3(
-        r: Reader) -> dict[str, dict[int, int]]:
-    r.i32()
+def dec_add_partitions_to_txn_response(
+        r: Reader, version: int) -> dict[str, dict[int, int]]:
+    r.flexible = is_flexible(API_ADD_PARTITIONS_TO_TXN, version)
+    r.i32()  # throttle_time_ms
     out: dict[str, dict[int, int]] = {}
-    for _ in range(max(r.compact_array_len(), 0)):
-        t = r.compact_string()
+    for _ in range(r.array_len()):
+        t = r.string()
         parts: dict[int, int] = {}
-        for _ in range(max(r.compact_array_len(), 0)):
+        for _ in range(r.array_len()):
             p = r.i32()
             parts[p] = r.i16()
             r.skip_tags()
@@ -2363,28 +1721,221 @@ def dec_add_partitions_to_txn_response_v3(
     return out
 
 
-def enc_end_txn_request_v3(txn_id: str, producer_id: int,
-                           producer_epoch: int, committed: bool) -> bytes:
-    return (enc_compact_str(txn_id)
-            + struct.pack(">qh?", producer_id, producer_epoch, committed)
-            + enc_tags())
+def enc_end_txn_request(version: int, txn_id: str, producer_id: int,
+                        producer_epoch: int, committed: bool) -> bytes:
+    w = Writer(is_flexible(API_END_TXN, version))
+    w.string(txn_id)
+    w.pack(">qh?", producer_id, producer_epoch, committed)
+    w.tags()
+    return w.done()
 
 
-def dec_end_txn_request_v3(r: Reader) -> tuple[str, int, int, bool]:
-    txn_id = r.compact_string()
-    pid = r.i64()
-    epoch = r.i16()
-    committed = r.i8() != 0
+def dec_end_txn_request(r: Reader, version: int) -> tuple[str, int, int, bool]:
+    r.flexible = is_flexible(API_END_TXN, version)
+    txn_id, pid, epoch, committed = r.string(), r.i64(), r.i16(), r.i8() != 0
     r.skip_tags()
     return txn_id, pid, epoch, committed
 
 
-def enc_end_txn_response_v3(error_code: int = 0) -> bytes:
-    return struct.pack(">ih", 0, error_code) + enc_tags()
+def enc_end_txn_response(version: int, error_code: int = 0) -> bytes:
+    w = Writer(is_flexible(API_END_TXN, version))
+    w.pack(">ih", 0, error_code)  # throttle_time_ms, error_code
+    w.tags()
+    return w.done()
 
 
-def dec_end_txn_response_v3(r: Reader) -> int:
-    r.i32()
+def dec_end_txn_response(r: Reader, version: int) -> int:
+    r.flexible = is_flexible(API_END_TXN, version)
+    r.i32()  # throttle_time_ms
     err = r.i16()
     r.skip_tags()
     return err
+
+
+# ---------------------------------------------------------------- admin
+# CreateTopics v2 + DescribeConfigs v0 — what the reference's topic
+# manager does through sarama's ClusterAdminClient (`pkg/sink/kafka/
+# admin.go` CreateTopic, options.go getTopicConfig/getBrokerConfig).
+# Each has one (classic) version; ``version`` keeps the calling shape.
+
+
+def enc_create_topics_request(
+    version: int, topics: list[tuple[str, int, int, dict[str, str]]],
+    timeout_ms: int = 10000, validate_only: bool = False,
+) -> bytes:
+    """topics: [(name, num_partitions, replication_factor, configs)]."""
+    w = Writer()
+    w.array_len(len(topics))
+    for name, n_parts, repl, configs in topics:
+        w.string(name)
+        w.pack(">ih", n_parts, repl)
+        w.array_len(0)  # manual assignments: none
+        w.array_len(len(configs))
+        for k, v in configs.items():
+            w.string(k)
+            w.string(v)
+    w.pack(">i?", timeout_ms, validate_only)
+    return w.done()
+
+
+def dec_create_topics_request(
+        r: Reader, version: int) -> tuple[list[tuple[str, int, int, dict]], bool]:
+    out = []
+    for _ in range(r.array_len()):
+        name = r.string()
+        n_parts = r.i32()
+        repl = r.i16()
+        for _ in range(r.array_len()):  # assignments
+            r.i32()
+            for _ in range(r.array_len()):
+                r.i32()
+        configs = {}
+        for _ in range(r.array_len()):
+            ck = r.string()  # NB: dict[k]=v evaluates the VALUE first
+            configs[ck] = r.string()
+        out.append((name, n_parts, repl, configs))
+    r.i32()  # timeout
+    return out, r.i8() != 0
+
+
+def enc_create_topics_response(version: int,
+                               results: dict[str, tuple[int, str | None]]) -> bytes:
+    w = Writer()
+    w.pack(">i", 0)  # throttle_time_ms
+    w.array_len(len(results))
+    for name, (err, msg) in results.items():
+        w.string(name)
+        w.pack(">h", err)
+        w.string(msg)
+    return w.done()
+
+
+def dec_create_topics_response(
+        r: Reader, version: int) -> dict[str, tuple[int, str | None]]:
+    r.i32()  # throttle_time_ms
+    out = {}
+    for _ in range(r.array_len()):
+        name = r.string()
+        out[name] = (r.i16(), r.string())
+    return out
+
+
+def enc_describe_configs_request(
+    version: int, resources: list[tuple[int, str, list[str] | None]],
+) -> bytes:
+    w = Writer()
+    w.array_len(len(resources))
+    for rtype, name, keys in resources:
+        w.pack(">b", rtype)
+        w.string(name)
+        w.array_len(-1 if keys is None else len(keys))
+        for k in keys or ():
+            w.string(k)
+    return w.done()
+
+
+def dec_describe_configs_request(
+        r: Reader, version: int) -> list[tuple[int, str, list[str] | None]]:
+    out = []
+    for _ in range(r.array_len()):
+        rtype = r.i8()
+        name = r.string()
+        n = r.array_len()
+        keys = None if n < 0 else [r.string() for _ in range(n)]
+        out.append((rtype, name, keys))
+    return out
+
+
+def enc_describe_configs_response(
+    version: int, results: list[tuple[int, str | None, int, str, dict[str, str | None]]],
+) -> bytes:
+    """results: [(error_code, error_message, resource_type, name, configs)]."""
+    w = Writer()
+    w.pack(">i", 0)  # throttle_time_ms
+    w.array_len(len(results))
+    for err, msg, rtype, name, configs in results:
+        w.pack(">h", err)
+        w.string(msg)
+        w.pack(">b", rtype)
+        w.string(name)
+        w.array_len(len(configs))
+        for k, v in configs.items():
+            w.string(k)
+            w.string(v)
+            w.pack(">???", False, True, False)  # read_only, is_default, is_sensitive
+    return w.done()
+
+
+def dec_describe_configs_response(
+        r: Reader, version: int) -> list[tuple[int, str, dict[str, str | None]]]:
+    r.i32()  # throttle_time_ms
+    out = []
+    for _ in range(r.array_len()):
+        err = r.i16()
+        r.string()  # error_message
+        rtype = r.i8()
+        name = r.string()
+        configs = {}
+        for _ in range(r.array_len()):
+            k = r.string()
+            configs[k] = r.string()
+            r.raw(3)  # read_only, is_default, is_sensitive
+        if err:
+            raise IOError(f"DescribeConfigs error {err} on {rtype}/{name}")
+        out.append((rtype, name, configs))
+    return out
+
+
+# ---------------------------------------------------------------- sasl
+# SaslHandshake v1 + SaslAuthenticate v0 — the authentication surface the
+# reference's sarama config drives (sarama_config.go SASL mechanisms:
+# PLAIN, SCRAM-SHA-256/512). One (classic) version each.
+
+
+def enc_sasl_handshake_request(version: int, mechanism: str) -> bytes:
+    w = Writer()
+    w.string(mechanism)
+    return w.done()
+
+
+def dec_sasl_handshake_request(r: Reader, version: int) -> str:
+    return r.string()
+
+
+def enc_sasl_handshake_response(version: int, error_code: int,
+                                mechanisms: list[str]) -> bytes:
+    w = Writer()
+    w.pack(">h", error_code)
+    w.array_len(len(mechanisms))
+    for m in mechanisms:
+        w.string(m)
+    return w.done()
+
+
+def dec_sasl_handshake_response(r: Reader, version: int) -> tuple[int, list[str]]:
+    err = r.i16()
+    return err, [r.string() for _ in range(r.array_len())]
+
+
+def enc_sasl_authenticate_request(version: int, auth_bytes: bytes) -> bytes:
+    w = Writer()
+    w.bytes_(auth_bytes)
+    return w.done()
+
+
+def dec_sasl_authenticate_request(r: Reader, version: int) -> bytes:
+    return r.bytes_() or b""
+
+
+def enc_sasl_authenticate_response(version: int, error_code: int,
+                                   error_message: str | None,
+                                   auth_bytes: bytes) -> bytes:
+    w = Writer()
+    w.pack(">h", error_code)
+    w.string(error_message)
+    w.bytes_(auth_bytes)
+    return w.done()
+
+
+def dec_sasl_authenticate_response(r: Reader, version: int) -> tuple[int, str | None, bytes]:
+    return r.i16(), r.string(), (r.bytes_() or b"")

@@ -8,17 +8,11 @@ answers ``GetTableInfo(tableID, ts)`` = "largest version ≤ ts"
 ``tableVersion`` in paths (`dml_event.go:399-403`).
 
 Spark-first: the registry is a small dimension DataFrame
-(table_id, version_ts, version, schema_json) — **broadcast** as-of join:
-equi-join on table_id (broadcast, no shuffle of the fact side), filter
-``version_ts <= commit_ts``, keep the max version via ``max_by`` over a
-window-free groupBy… except that would shuffle. Cheaper at scale: join +
-filter + ``max_by`` grouped by the fact row's unique key is avoidable
-entirely when the registry is small: broadcast the *sorted version list
-per table* and resolve with an array expression (binary-search-free
-``filter + array_max``) — zero shuffle, pure map.
-
-Both strategies are provided; the query registry uses the map-side one
-(`bind` = array lookup), which is the 100 TB-safe plan.
+(table_id, version_ts, version, schema_json). A join + filter +
+``max_by`` as-of join would shuffle on the fact row's key; since the
+registry is small, ``asof_bind_schema`` instead inlines the *sorted
+version list* and resolves each row with an array expression
+(``filter + array_max``) — zero shuffle, pure map, the 100 TB-safe plan.
 """
 
 from __future__ import annotations
@@ -52,14 +46,11 @@ def schema_registry_df(spark: SparkSession, table_ids: list[int]) -> DataFrame:
     )
 
 
-def asof_bind_schema(cl: DataFrame, registry: DataFrame | None = None) -> DataFrame:
+def asof_bind_schema(cl: DataFrame) -> DataFrame:
     """Attach ``schema_version`` = max version with version_ts <= commit_ts.
 
     Map-side resolution: the (tiny) version list becomes an array literal
-    filtered per row — no join, no shuffle. With a per-table registry
-    DataFrame, the same is achieved by ``F.broadcast(registry)`` +
-    groupBy max_by (provided for the general case in
-    ``asof_bind_schema_join``)."""
+    filtered per row — no join, no shuffle."""
     pairs = sorted(SCHEMA_VERSIONS, key=lambda p: p[1])
     versions = F.array(*[
         F.struct(F.lit(v).alias("version"), F.lit(ts).alias("version_ts"))
@@ -69,18 +60,3 @@ def asof_bind_schema(cl: DataFrame, registry: DataFrame | None = None) -> DataFr
     bound = F.array_max(F.transform(applicable, lambda s: s["version"]))
     return cl.withColumn("schema_version", bound)
 
-
-def asof_bind_schema_join(cl: DataFrame, registry: DataFrame) -> DataFrame:
-    """General as-of join form: broadcast registry, filter, max_by.
-
-    The groupBy is keyed by the fact row identity (table_id, seq) so the
-    shuffle is on the fact side — use only when the registry is too big
-    or too dynamic for the literal-array strategy."""
-    joined = cl.join(
-        F.broadcast(registry.select("table_id", "version", "version_ts")),
-        "table_id",
-    ).filter(F.col("version_ts") <= F.col("commit_ts"))
-    keys = [c for c in cl.columns]
-    return joined.groupBy(*keys).agg(
-        F.max_by("version", "version_ts").alias("schema_version")
-    )

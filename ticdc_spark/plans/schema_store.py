@@ -13,10 +13,9 @@ per-action handler (`logservice/schemastore/persist_storage_ddl_handlers.go:
 This is the driver-side control plane of the Spark engine (schemas are
 small metadata): handlers mutate an in-memory multi-version map; the
 data plane consumes it either as a broadcast registry DataFrame
-(``registry_df`` → `plans/schema_registry.asof_bind_schema_join`) or as
-literal as-of expressions compiled into the changelog mount
-(`sources/typed.py`). Spark structural notes per handler are in each
-method docstring.
+(``registry_rows``) or as literal as-of expressions compiled into the
+changelog mount (`sources/typed.py`). Spark structural notes per handler
+are in each method docstring.
 
 Covers ALL 38 reference action types
 (`persist_storage_ddl_handlers.go:120-462`): schema/table/column DDL,
@@ -535,7 +534,7 @@ class SchemaStore:
     # -- data-plane export --------------------------------------------------
     def registry_rows(self) -> list[tuple[int, int, str, str, str]]:
         """(table_id, version_ts, schema, table, columns_ddl) rows for a
-        broadcast registry DataFrame (`asof_bind_schema_join`)."""
+        broadcast registry DataFrame."""
         rows = []
         for tid, versions in sorted(self._versions.items()):
             for vts, info in versions:

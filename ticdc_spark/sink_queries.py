@@ -2922,8 +2922,8 @@ def q_avro_confluent_roundtrip(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # K2 live — the kafka frame produced to a REAL wire-protocol endpoint and
 # fetched back (`pkg/sink/kafka` round trip; broker = sinks/kafka_broker.py
-# speaking ApiVersions/Metadata/Produce v3/Fetch v4 with v2 record batches,
-# CRC32C-verified on ingest).  The fetch kernel additionally asserts offset
+# speaking ApiVersions/Metadata/Produce/Fetch at their flexible versions
+# with v2 record batches, CRC32C-verified on ingest).  The fetch kernel additionally asserts offset
 # contiguity 0..hw-1 per partition, so at-least-once delivery with no
 # duplicates is checked inside the plan.  lz4-compressed batches put LZ4
 # frames (codec/compression.py) on the actual wire.

@@ -1,7 +1,7 @@
 """In-process Kafka broker speaking the real wire protocol over TCP.
 
-Serves ApiVersions v0, Metadata v1, Produce v3, Fetch v4 (the subset
-`codec/kafka_wire.py` frames) against an in-memory log — one
+Serves every API `codec/kafka_wire.py` encodes, at each version it lays
+out (``kw.VERSIONS``), against an in-memory log — one
 append-only list of record batches per (topic, partition), with base
 offsets rewritten on append exactly like a real broker.
 
@@ -220,29 +220,18 @@ class KafkaBroker:
                 self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
         self.host = host
         self.default_partitions = default_partitions
-        # advertised version ranges: classic fixed versions PLUS the
-        # flexible pair (Produce v9 / Fetch v12 / ListOffsets v7,
-        # ApiVersions v3).  flexible_only=True drops the non-flexible
-        # produce/fetch/list-offsets floors — the modern-broker shape a
-        # post-2.4 cluster presents to sarama
+        # advertised version ranges span the codec's versions per API;
+        # flexible_only floors every API that has a flexible version at
+        # it (ApiVersions keeps v0 for the bootstrap) — the modern-broker
+        # shape a post-2.4 cluster presents to sarama
         # (`pkg/sink/kafka/sarama_config.go` negotiates past v9/v12)
-        self.supported = dict(kw.SUPPORTED)
-        self.supported[kw.API_PRODUCE] = (9, 9) if flexible_only else (3, 9)
-        self.supported[kw.API_FETCH] = (12, 12) if flexible_only else (4, 12)
-        self.supported[kw.API_LIST_OFFSETS] = ((7, 7) if flexible_only
-                                               else (1, 7))
-        self.supported[kw.API_METADATA] = (9, 9) if flexible_only else (1, 9)
-        self.supported[kw.API_API_VERSIONS] = (0, 3)
-        if flexible_only:
-            # the group/txn families floor at their KIP-482 versions too
-            # — a flexible_only broker serves NO classic frames at all
-            for api in (kw.API_FIND_COORDINATOR, kw.API_JOIN_GROUP,
-                        kw.API_SYNC_GROUP, kw.API_HEARTBEAT,
-                        kw.API_LEAVE_GROUP, kw.API_OFFSET_COMMIT,
-                        kw.API_OFFSET_FETCH, kw.API_INIT_PRODUCER_ID,
-                        kw.API_ADD_PARTITIONS_TO_TXN, kw.API_END_TXN):
-                flex = kw.FLEXIBLE_SINCE[api]
-                self.supported[api] = (flex, self.supported[api][1])
+        self.supported = {}
+        for api, versions in kw.VERSIONS.items():
+            lo, hi = versions[0], versions[-1]
+            if (flexible_only and api != kw.API_API_VERSIONS
+                    and kw.is_flexible(api, hi)):
+                lo = hi
+            self.supported[api] = (lo, hi)
         # when sasl_users is set, every API except ApiVersions/SaslHandshake/
         # SaslAuthenticate is rejected with ILLEGAL_SASL_STATE until the
         # connection authenticates — real listener semantics (SASL_PLAINTEXT)
@@ -398,7 +387,10 @@ class KafkaBroker:
         """Test-introspection handle on a partition's log."""
         return self._get_topic(topic, create=False)[partition]
 
-    def _sasl_authenticate(self, auth: bytes, conn_state: dict) -> bytes:
+    def _sasl_authenticate(self, auth: bytes, conn_state: dict
+                           ) -> tuple[int, str | None, bytes]:
+        """-> the SaslAuthenticate response's (error_code, error_message,
+        auth_bytes)."""
         import base64
         import os as _os
 
@@ -406,15 +398,13 @@ class KafkaBroker:
 
         mech = conn_state.get("mechanism")
         if self.sasl_users is None or mech is None:
-            return kw.enc_sasl_authenticate_response(
-                kw.ERR_ILLEGAL_SASL_STATE, "handshake first", b"")
+            return kw.ERR_ILLEGAL_SASL_STATE, "handshake first", b""
         if mech == "GSSAPI":
             from ticdc_spark.codec import gssapi as _gss
 
             if self.gssapi_service is None:
-                return kw.enc_sasl_authenticate_response(
-                    kw.ERR_UNSUPPORTED_SASL_MECHANISM,
-                    "GSSAPI not configured", b"")
+                return (kw.ERR_UNSUPPORTED_SASL_MECHANISM,
+                        "GSSAPI not configured", b"")
             st = conn_state.setdefault("gss", {"phase": "context"})
             try:
                 if st["phase"] == "context":
@@ -423,52 +413,44 @@ class KafkaBroker:
                         auth, self._gssapi_key)
                     st.update(phase="offer", key=session_key,
                               client=info["cname"])
-                    return kw.enc_sasl_authenticate_response(0, None, reply)
+                    return 0, None, reply
                 if st["phase"] == "offer":
                     # round 2 (empty client bytes): RFC 4752 offer out
                     st["phase"] = "choice"
-                    return kw.enc_sasl_authenticate_response(
-                        0, None, _gss.sec_layer_offer(st["key"]))
+                    return 0, None, _gss.sec_layer_offer(st["key"])
                 if st["phase"] == "choice":
                     _gss.verify_sec_layer_choice(st["key"], auth)
                     conn_state["authenticated"] = True
                     st["phase"] = "done"
-                    return kw.enc_sasl_authenticate_response(0, None, b"")
+                    return 0, None, b""
             except (ValueError, AssertionError, KeyError) as e:
                 conn_state["gss"] = {"phase": "context"}
-                return kw.enc_sasl_authenticate_response(
-                    kw.ERR_SASL_AUTHENTICATION_FAILED, str(e), b"")
-            return kw.enc_sasl_authenticate_response(
-                kw.ERR_ILLEGAL_SASL_STATE, "GSSAPI already complete", b"")
+                return kw.ERR_SASL_AUTHENTICATION_FAILED, str(e), b""
+            return kw.ERR_ILLEGAL_SASL_STATE, "GSSAPI already complete", b""
         if mech == "OAUTHBEARER":
             from ticdc_spark.codec import oauth2 as _oauth2
 
             if self.oauth_jwt_secret is None:
-                return kw.enc_sasl_authenticate_response(
-                    kw.ERR_UNSUPPORTED_SASL_MECHANISM, "OAUTHBEARER not configured", b"")
+                return kw.ERR_UNSUPPORTED_SASL_MECHANISM, "OAUTHBEARER not configured", b""
             token = _oauth2.parse_oauthbearer_response(auth)
             claims = (None if token is None else _oauth2.jwt_verify(
                 token, self.oauth_jwt_secret, self.oauth_now))
             if claims is None:
                 # RFC 7628 §3.2.2: failure returns a JSON body; the client
                 # must answer \x01 before the connection fails
-                return kw.enc_sasl_authenticate_response(
-                    kw.ERR_SASL_AUTHENTICATION_FAILED,
-                    "Authentication failed",
-                    b'{"status":"invalid_token"}')
+                return (kw.ERR_SASL_AUTHENTICATION_FAILED,
+                        "Authentication failed", b'{"status":"invalid_token"}')
             conn_state["authenticated"] = True
-            return kw.enc_sasl_authenticate_response(0, None, b"")
+            return 0, None, b""
         if mech == "PLAIN":
             try:
                 _zid, user, pw = auth.decode("utf-8").split("\x00")
             except ValueError:
-                return kw.enc_sasl_authenticate_response(
-                    kw.ERR_SASL_AUTHENTICATION_FAILED, "malformed PLAIN", b"")
+                return kw.ERR_SASL_AUTHENTICATION_FAILED, "malformed PLAIN", b""
             if self.sasl_users.get(user) != pw:
-                return kw.enc_sasl_authenticate_response(
-                    kw.ERR_SASL_AUTHENTICATION_FAILED, "Authentication failed", b"")
+                return kw.ERR_SASL_AUTHENTICATION_FAILED, "Authentication failed", b""
             conn_state["authenticated"] = True
-            return kw.enc_sasl_authenticate_response(0, None, b"")
+            return 0, None, b""
         # SCRAM-SHA-256/512: two SaslAuthenticate rounds
         algo = "sha512" if mech == "SCRAM-SHA-512" else "sha256"
         if conn_state["scram"] is None:
@@ -482,29 +464,24 @@ class KafkaBroker:
                     dict(p.split("=", 1)
                          for p in client_first.split(",")[2:])["n"])
             except (KeyError, ValueError):
-                return kw.enc_sasl_authenticate_response(
-                    kw.ERR_SASL_AUTHENTICATION_FAILED, "malformed client-first", b"")
+                return kw.ERR_SASL_AUTHENTICATION_FAILED, "malformed client-first", b""
             if user not in self.sasl_users:
-                return kw.enc_sasl_authenticate_response(
-                    kw.ERR_SASL_AUTHENTICATION_FAILED, "unknown user", b"")
+                return kw.ERR_SASL_AUTHENTICATION_FAILED, "unknown user", b""
             server_first = _scram.server_first_message(
                 client_first,
                 base64.b64encode(_os.urandom(12)).decode(),
                 _os.urandom(16), 4096)
             conn_state["scram"] = (user, client_first, server_first)
-            return kw.enc_sasl_authenticate_response(
-                0, None, server_first.encode("utf-8"))
+            return 0, None, server_first.encode("utf-8")
         user, client_first, server_first = conn_state["scram"]
         ok, server_final = _scram.server_verify_final(
             client_first, server_first, auth.decode("utf-8"),
             self.sasl_users[user], algo=algo)
         if not ok:
             conn_state["scram"] = None
-            return kw.enc_sasl_authenticate_response(
-                kw.ERR_SASL_AUTHENTICATION_FAILED, "Authentication failed", b"")
+            return kw.ERR_SASL_AUTHENTICATION_FAILED, "Authentication failed", b""
         conn_state["authenticated"] = True
-        return kw.enc_sasl_authenticate_response(
-            0, None, server_final.encode("utf-8"))
+        return 0, None, server_final.encode("utf-8")
 
     def _get_group(self, group_id: str) -> "_Group":
         with self._groups_lock:
@@ -518,44 +495,46 @@ class KafkaBroker:
 
     def _dispatch(self, payload: bytes, conn_state: dict | None = None) -> bytes:
         conn_state = conn_state if conn_state is not None else {"authenticated": True}
-        api_key, api_version, corr, _client, r = kw.parse_request_header(payload)
-        lo_hi = self.supported.get(api_key)
-        if lo_hi is None or not (lo_hi[0] <= api_version <= lo_hi[1]):
-            if api_key == kw.API_API_VERSIONS:
-                # a real broker answers an unknown ApiVersions version
-                # with error 35 IN v0 FORMAT plus its ranges, so the
-                # client can down-negotiate instead of disconnecting
-                return kw.frame_response(corr, struct.pack(">h", 35) + kw.enc_api_versions_response(self.supported)[2:])
-            # UNSUPPORTED_VERSION (35) shaped as an ApiVersions v0 response
-            return kw.frame_response(corr, struct.pack(">hi", 35, 0))
+        api_key, v, corr, _client, r = kw.parse_request_header(payload)
+
+        def reply(body: bytes) -> bytes:
+            return kw.frame_response(api_key, v, corr, body)
+
+        def refuse(error_code: int, supported: dict | None = None) -> bytes:
+            # an error shaped as an ApiVersions v0 response: a client can
+            # read it whatever version it sent
+            return kw.frame_response(kw.API_API_VERSIONS, 0, corr,
+                                     kw.enc_api_versions_response(
+                                         0, supported or {}, error_code))
+
+        lo, hi = self.supported.get(api_key, (0, -1))
+        if not lo <= v <= hi or v not in kw.VERSIONS.get(api_key, ()):
+            # UNSUPPORTED_VERSION also for an advertised version the codec
+            # has no layout for; to an unknown ApiVersions version a real
+            # broker adds its ranges, so the client can down-negotiate
+            # instead of disconnecting
+            return refuse(kw.ERR_UNSUPPORTED_VERSION,
+                          self.supported if api_key == kw.API_API_VERSIONS
+                          else None)
         if api_key == kw.API_API_VERSIONS:
-            # response header stays v0 even for v3 (bootstrap special case)
-            if api_version >= 3:
-                kw.dec_api_versions_request_v3(r)
-                return kw.frame_response(
-                    corr, kw.enc_api_versions_response_v3(self.supported))
-            return kw.frame_response(
-                corr, kw.enc_api_versions_response(self.supported))
+            kw.dec_api_versions_request(r, v)
+            return reply(kw.enc_api_versions_response(v, self.supported))
         if api_key == kw.API_SASL_HANDSHAKE:
-            mech = kw.dec_sasl_handshake_request(r)
+            mech = kw.dec_sasl_handshake_request(r, v)
             if self.sasl_users is None or mech not in self.sasl_mechanisms:
-                return kw.frame_response(corr, kw.enc_sasl_handshake_response(
-                    kw.ERR_UNSUPPORTED_SASL_MECHANISM, self.sasl_mechanisms))
+                return reply(kw.enc_sasl_handshake_response(
+                    v, kw.ERR_UNSUPPORTED_SASL_MECHANISM, self.sasl_mechanisms))
             conn_state["mechanism"] = mech
             conn_state["scram"] = None
-            return kw.frame_response(
-                corr, kw.enc_sasl_handshake_response(0, self.sasl_mechanisms))
+            return reply(kw.enc_sasl_handshake_response(v, 0, self.sasl_mechanisms))
         if api_key == kw.API_SASL_AUTHENTICATE:
-            return kw.frame_response(corr, self._sasl_authenticate(
-                kw.dec_sasl_authenticate_request(r), conn_state))
+            return reply(kw.enc_sasl_authenticate_response(v, *self._sasl_authenticate(
+                kw.dec_sasl_authenticate_request(r, v), conn_state)))
         if not conn_state.get("authenticated"):
             # pre-auth API use on a SASL listener
-            return kw.frame_response(
-                corr, struct.pack(">hi", kw.ERR_ILLEGAL_SASL_STATE, 0))
+            return refuse(kw.ERR_ILLEGAL_SASL_STATE)
         if api_key == kw.API_METADATA:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_METADATA]
-            names = (kw.dec_metadata_request_v9(r) if flex
-                     else kw.dec_metadata_request(r))
+            names = kw.dec_metadata_request(r, v)
             if names is None:
                 with self._topics_lock:
                     listing = {t: len(p) for t, p in self.topics.items()}
@@ -567,18 +546,9 @@ class KafkaBroker:
                                         create=self.auto_create_topics)
                     listing[name] = ((3, 0) if t is None  # UNKNOWN_TOPIC
                                      else len(t))
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_metadata_response_v9(
-                        self.host, self.port, listing))
-            return kw.frame_response(
-                corr, kw.enc_metadata_response(self.host, self.port, listing)
-            )
+            return reply(kw.enc_metadata_response(v, self.host, self.port, listing))
         if api_key == kw.API_PRODUCE:
-            flex = api_version >= 9
-            _txn, acks, _timeout, topic_data = (
-                kw.dec_produce_request_v9(r) if flex
-                else kw.dec_produce_request(r))
+            _txn, acks, _timeout, topic_data = kw.dec_produce_request(r, v)
             self.seen_produce_acks.append(acks)
             results: dict[str, dict[int, tuple[int, int]]] = {}
             for topic, parts in topic_data.items():
@@ -608,14 +578,9 @@ class KafkaBroker:
                 # acks=0 — replying would desynchronize correlation ids
                 # on a spec-conforming client (sendall(b"") is a no-op)
                 return b""
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_produce_response_v9(results))
-            return kw.frame_response(corr, kw.enc_produce_response(results))
+            return reply(kw.enc_produce_response(v, results))
         if api_key == kw.API_INIT_PRODUCER_ID:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_INIT_PRODUCER_ID]
-            txn_id, _timeout = (kw.dec_init_producer_id_request_v2(r) if flex
-                                else kw.dec_init_producer_id_request(r))
+            txn_id, _timeout = kw.dec_init_producer_id_request(r, v)
             with self._topics_lock:
                 if txn_id is not None:
                     # transactional: same pid, BUMPED epoch — re-init
@@ -634,17 +599,9 @@ class KafkaBroker:
                 else:
                     pid, epoch = self._next_pid, 0
                     self._next_pid += 1
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_init_producer_id_response_v2(pid, epoch))
-            return kw.frame_response(
-                corr, kw.enc_init_producer_id_response(pid, epoch))
+            return reply(kw.enc_init_producer_id_response(v, pid, epoch))
         if api_key == kw.API_ADD_PARTITIONS_TO_TXN:
-            flex = (api_version
-                    >= kw.FLEXIBLE_SINCE[kw.API_ADD_PARTITIONS_TO_TXN])
-            txn_id, pid, epoch, tps = (
-                kw.dec_add_partitions_to_txn_request_v3(r) if flex
-                else kw.dec_add_partitions_to_txn_request(r))
+            txn_id, pid, epoch, tps = kw.dec_add_partitions_to_txn_request(r, v)
             st = self._txns.get(txn_id)
             results = {}
             for topic, parts in tps.items():
@@ -664,28 +621,14 @@ class KafkaBroker:
                 results[topic] = {p: err for p in parts}
                 if not err:
                     st["partitions"].update((topic, p) for p in parts)
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_add_partitions_to_txn_response_v3(results))
-            return kw.frame_response(
-                corr, kw.enc_add_partitions_to_txn_response(results))
+            return reply(kw.enc_add_partitions_to_txn_response(v, results))
         if api_key == kw.API_END_TXN:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_END_TXN]
-            txn_id, pid, epoch, committed = (
-                kw.dec_end_txn_request_v3(r) if flex
-                else kw.dec_end_txn_request(r))
-
-            def _end_txn_res(err: int) -> bytes:
-                if flex:
-                    return kw.frame_response_flex(
-                        corr, kw.enc_end_txn_response_v3(err))
-                return kw.frame_response(corr, kw.enc_end_txn_response(err))
-
+            txn_id, pid, epoch, committed = kw.dec_end_txn_request(r, v)
             st = self._txns.get(txn_id)
             if st is None or st["pid"] != pid:
-                return _end_txn_res(kw.ERR_INVALID_TXN_STATE)
+                return reply(kw.enc_end_txn_response(v, kw.ERR_INVALID_TXN_STATE))
             if st["epoch"] != epoch:
-                return _end_txn_res(kw.ERR_INVALID_PRODUCER_EPOCH)
+                return reply(kw.enc_end_txn_response(v, kw.ERR_INVALID_PRODUCER_EPOCH))
             marker = kw.CONTROL_COMMIT if committed else kw.CONTROL_ABORT
             for topic, p in sorted(st["partitions"]):
                 # registered partitions always exist (AddPartitionsToTxn
@@ -695,13 +638,10 @@ class KafkaBroker:
                 if t is not None and p in t:
                     t[p].append_control(pid, epoch, marker)
             st["partitions"] = set()
-            return _end_txn_res(0)
+            return reply(kw.enc_end_txn_response(v, 0))
         if api_key == kw.API_LIST_OFFSETS:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_LIST_OFFSETS]
-            wants = (kw.dec_list_offsets_request_v7(r) if flex
-                     else kw.dec_list_offsets_request(r))
             results = []
-            for topic, partition, ts in wants:
+            for topic, partition, ts in kw.dec_list_offsets_request(r, v):
                 t = self._get_topic(topic, create=False)
                 if t is None or partition not in t:
                     results.append((topic, partition, 3, -1, -1))
@@ -717,12 +657,9 @@ class KafkaBroker:
                     # log scans its batches)
                     found_ts, off = t[partition].offset_for_timestamp(ts)
                     results.append((topic, partition, 0, found_ts, off))
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_list_offsets_response_v7(results))
-            return kw.frame_response(corr, kw.enc_list_offsets_response(results))
+            return reply(kw.enc_list_offsets_response(v, results))
         if api_key == kw.API_CREATE_TOPICS:
-            topics, validate_only = kw.dec_create_topics_request(r)
+            topics, validate_only = kw.dec_create_topics_request(r, v)
             results = {}
             for name, n_parts, repl, configs in topics:
                 with self._topics_lock:
@@ -753,11 +690,10 @@ class KafkaBroker:
                         tc.update(configs)
                         self.topic_configs[name] = tc
                     results[name] = (0, None)
-            return kw.frame_response(corr, kw.enc_create_topics_response(results))
+            return reply(kw.enc_create_topics_response(v, results))
         if api_key == kw.API_DESCRIBE_CONFIGS:
-            wants = kw.dec_describe_configs_request(r)
             results = []
-            for rtype, name, keys in wants:
+            for rtype, name, keys in kw.dec_describe_configs_request(r, v):
                 if rtype == kw.RESOURCE_BROKER:
                     cfg = dict(self.broker_configs)
                 elif rtype == kw.RESOURCE_TOPIC:
@@ -772,86 +708,49 @@ class KafkaBroker:
                 if keys is not None:
                     cfg = {k: cfg.get(k) for k in keys}
                 results.append((0, None, rtype, name, cfg))
-            return kw.frame_response(corr, kw.enc_describe_configs_response(results))
+            return reply(kw.enc_describe_configs_response(v, results))
         if api_key == kw.API_FIND_COORDINATOR:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_FIND_COORDINATOR]
-            if flex:
-                kw.dec_find_coordinator_request_v3(r)
-                # single-node: this broker coordinates every group
-                return kw.frame_response_flex(
-                    corr, kw.enc_find_coordinator_response_v3(
-                        0, self.host, self.port))
-            kw.dec_find_coordinator_request(r)
-            return kw.frame_response(
-                corr, kw.enc_find_coordinator_response(0, self.host, self.port))
+            kw.dec_find_coordinator_request(r, v)
+            # single-node: this broker coordinates every group
+            return reply(kw.enc_find_coordinator_response(v, 0, self.host, self.port))
         if api_key == kw.API_JOIN_GROUP:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_JOIN_GROUP]
-            req = (kw.dec_join_group_request_v6(r) if flex
-                   else kw.dec_join_group_request(r))
+            req = kw.dec_join_group_request(r, v)
             g = self._get_group(req["group_id"])
             res = g.join(req["member_id"], req["protocols"][0][1],
-                         instance_id=req.get("group_instance_id"))
-            enc = (kw.enc_join_group_response_v6 if flex
-                   else kw.enc_join_group_response)
+                         instance_id=req["group_instance_id"])
             if res["error"]:
-                body = enc(res["error"], -1, "", "", res["member_id"], [])
-            else:
-                body = enc(0, res["generation"], "range", res["leader"],
-                           res["member_id"], res["members"])
-            if flex:
-                return kw.frame_response_flex(corr, body)
-            return kw.frame_response(corr, body)
+                return reply(kw.enc_join_group_response(
+                    v, res["error"], -1, "", "", res["member_id"], []))
+            return reply(kw.enc_join_group_response(
+                v, 0, res["generation"], "range", res["leader"],
+                res["member_id"], res["members"]))
         if api_key == kw.API_SYNC_GROUP:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_SYNC_GROUP]
-            req = (kw.dec_sync_group_request_v4(r) if flex
-                   else kw.dec_sync_group_request(r))
+            req = kw.dec_sync_group_request(r, v)
             g = self._get_group(req["group_id"])
-            err = g.fence_check(req["member_id"],
-                                req.get("group_instance_id"))
+            err = g.fence_check(req["member_id"], req["group_instance_id"])
             assignment = b""
             if not err:
                 err, assignment = g.sync(
                     req["member_id"], req["generation"],
                     req["assignments"])
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_sync_group_response_v4(err, assignment))
-            return kw.frame_response(corr, kw.enc_sync_group_response(err, assignment))
+            return reply(kw.enc_sync_group_response(v, err, assignment))
         if api_key == kw.API_HEARTBEAT:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_HEARTBEAT]
-            if flex:
-                (group_id, generation, member_id,
-                 instance_id) = kw.dec_heartbeat_request_v4(r)
-            else:
-                group_id, generation, member_id = kw.dec_heartbeat_request(r)
-                instance_id = None
+            group_id, generation, member_id, instance_id = (
+                kw.dec_heartbeat_request(r, v))
             g = self._get_group(group_id)
             err = (g.fence_check(member_id, instance_id)
                    or g.heartbeat(member_id, generation))
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_error_only_response_flex(err))
-            return kw.frame_response(corr, kw.enc_error_only_response(err))
+            return reply(kw.enc_heartbeat_response(v, err))
         if api_key == kw.API_LEAVE_GROUP:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_LEAVE_GROUP]
-            if flex:
-                group_id, members = kw.dec_leave_group_request_v4(r)
-                g = self._get_group(group_id)
-                errs = [(mid, g.leave(mid)) for mid in members]
-                top = next((e for _, e in errs if e), 0)
-                return kw.frame_response_flex(
-                    corr, kw.enc_leave_group_response_v4(
-                        top, [mid for mid, _ in errs]))
-            group_id, member_id = kw.dec_leave_group_request(r)
-            err = self._get_group(group_id).leave(member_id)
-            return kw.frame_response(corr, kw.enc_error_only_response(err))
+            group_id, members = kw.dec_leave_group_request(r, v)
+            g = self._get_group(group_id)
+            errs = [g.leave(mid) for mid in members]
+            top = next((e for e in errs if e), 0)
+            return reply(kw.enc_leave_group_response(v, top, members))
         if api_key == kw.API_OFFSET_COMMIT:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_OFFSET_COMMIT]
-            req = (kw.dec_offset_commit_request_v8(r) if flex
-                   else kw.dec_offset_commit_request(r))
+            req = kw.dec_offset_commit_request(r, v)
             g = self._get_group(req["group_id"])
-            fence = g.fence_check(req["member_id"],
-                                  req.get("group_instance_id"))
+            fence = g.fence_check(req["member_id"], req["group_instance_id"])
             results = {}
             with g.lock:
                 for tp, off in req["offsets"].items():
@@ -863,37 +762,24 @@ class KafkaBroker:
                     else:
                         g.offsets[tp] = off
                         results[tp] = 0
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_offset_commit_response_v8(results))
-            return kw.frame_response(corr, kw.enc_offset_commit_response(results))
+            return reply(kw.enc_offset_commit_response(v, results))
         if api_key == kw.API_OFFSET_FETCH:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_OFFSET_FETCH]
-            group_id, wants = (kw.dec_offset_fetch_request_v6(r) if flex
-                               else kw.dec_offset_fetch_request(r))
+            group_id, wants = kw.dec_offset_fetch_request(r, v)
             g = self._get_group(group_id)
             out = {}
             with g.lock:
                 for t, parts in wants.items():
                     for p in parts:
                         out[(t, p)] = g.offsets.get((t, p), -1)
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_offset_fetch_response_v6(out))
-            return kw.frame_response(corr, kw.enc_offset_fetch_response(out))
+            return reply(kw.enc_offset_fetch_response(v, out))
         if api_key == kw.API_FETCH:
-            flex = api_version >= kw.FLEXIBLE_SINCE[kw.API_FETCH]
-            if flex:
-                (isolation, sid, epoch, wants,
-                 forgotten) = kw.dec_fetch_request_v12_session(r)
-            else:
-                isolation, wants = kw.dec_fetch_request(r)
-                sid, epoch, forgotten = 0, -1, []
-            # KIP-227 session resolution (epoch -1 = sessionless,
-            # 0 = full request opening a session, >0 = incremental)
+            isolation, sid, epoch, wants, forgotten = kw.dec_fetch_request(r, v)
+            # KIP-227 session resolution (epoch -1 = sessionless, the
+            # only shape of a classic request; 0 = full request opening
+            # a session, >0 = incremental)
             resp_sid = 0
             incremental = False
-            if flex and epoch == 0:
+            if epoch == 0:
                 with self._fetch_sessions_lock:
                     resp_sid = self._next_fetch_session
                     self._next_fetch_session += 1
@@ -902,19 +788,16 @@ class KafkaBroker:
                         "parts": {(t, p): [off, pmax]
                                   for t, p, off, pmax in wants},
                     }
-            elif flex and epoch > 0:
+            elif epoch > 0:
                 with self._fetch_sessions_lock:
                     sess = self._fetch_sessions.get(sid)
                     if sess is None:
-                        return kw.frame_response_flex(
-                            corr, kw.enc_fetch_response_v12(
-                                [], error_code=(
-                                    kw.ERR_FETCH_SESSION_ID_NOT_FOUND)))
+                        return reply(kw.enc_fetch_response(
+                            v, [], error_code=kw.ERR_FETCH_SESSION_ID_NOT_FOUND))
                     if epoch != sess["epoch"]:
-                        return kw.frame_response_flex(
-                            corr, kw.enc_fetch_response_v12(
-                                [], session_id=sid, error_code=(
-                                    kw.ERR_INVALID_FETCH_SESSION_EPOCH)))
+                        return reply(kw.enc_fetch_response(
+                            v, [], session_id=sid,
+                            error_code=kw.ERR_INVALID_FETCH_SESSION_EPOCH))
                     sess["epoch"] += 1
                     for t, p, off, pmax in wants:  # add/update
                         sess["parts"][(t, p)] = [off, pmax]
@@ -947,13 +830,8 @@ class KafkaBroker:
             # position moved in its next incremental request (that is
             # FetchSession.poll's rule); the cached offset only changes
             # when a request lists the partition.
-            if flex:
-                return kw.frame_response_flex(
-                    corr, kw.enc_fetch_response_v12(
-                        parts, session_id=resp_sid))
-            return kw.frame_response(corr, kw.enc_fetch_response(parts))
+            return reply(kw.enc_fetch_response(v, parts, session_id=resp_sid))
         raise AssertionError("unreachable")
-
 
 
 def _recv_exact(sock: socket.socket, n: int) -> bytes | None:

@@ -2,9 +2,10 @@
 
 The producer path mirrors what the reference's sarama/franz-go clients do
 on behalf of `pkg/sink/kafka`: ApiVersions handshake, Metadata for the
-topic, then Produce v3 requests carrying v2 record batches (acks=-1).
-The consumer path is the storage-consumer analogue: Fetch v4 loops until
-the high watermark.
+topic, then Produce requests carrying v2 record batches (acks=-1). The
+consumer path is the storage-consumer analogue: Fetch loops until the
+high watermark. Every request goes out at the version the handshake
+negotiated from the codec's ``kw.VERSIONS``.
 
 Runs inside executor Python workers (each partition dials its own TCP
 connection) — see sink_queries.kafka_live_roundtrip for the distributed
@@ -96,17 +97,14 @@ class KafkaConn:
         the wire (replying would desynchronize correlation ids), so the
         sender must not wait — sarama's NoResponse path."""
         self._corr += 1
-        flex = kw.is_flexible(api_key, api_version)
-        frame = kw.frame_request_flex if flex else kw.frame_request
-        self.sock.sendall(frame(api_key, api_version, self._corr,
-                                self.client_id, body))
+        self.sock.sendall(kw.frame_request(api_key, api_version, self._corr,
+                                           self.client_id, body))
 
     def _call(self, api_key: int, api_version: int, body: bytes) -> kw.Reader:
         self._corr += 1
         corr = self._corr
-        flex = kw.is_flexible(api_key, api_version)
-        frame = kw.frame_request_flex if flex else kw.frame_request
-        self.sock.sendall(frame(api_key, api_version, corr, self.client_id, body))
+        self.sock.sendall(kw.frame_request(api_key, api_version, corr,
+                                           self.client_id, body))
         hdr = _recv_exact(self.sock, 4)
         if hdr is None:
             raise IOError("broker closed connection")
@@ -114,31 +112,32 @@ class KafkaConn:
         payload = _recv_exact(self.sock, size)
         if payload is None:
             raise IOError("broker closed connection mid-response")
-        r = kw.Reader(payload)
-        got_corr = r.i32()
+        got_corr, r = kw.parse_response_header(payload, api_key, api_version)
         if got_corr != corr:
             raise IOError(f"correlation id mismatch: sent {corr}, got {got_corr}")
-        if flex and api_key != kw.API_API_VERSIONS:
-            # response header v1 (ApiVersions responses stay header v0)
-            r.skip_tags()
         return r
+
+    def _rpc(self, api_key: int, enc, dec, *args, **kwargs):
+        """One request/response at the negotiated version of ``api_key``:
+        ``dec(reader, version)`` of the reply to ``enc(version, *args)``."""
+        ver = self._ver[api_key]
+        return dec(self._call(api_key, ver, enc(ver, *args, **kwargs)), ver)
 
     def _handshake(self) -> dict[int, tuple[int, int]]:
         """ApiVersions negotiation like a modern client: lead with v3
         (flexible); a broker that caps lower answers UNSUPPORTED_VERSION
-        in v0 format with its ranges, and we re-probe with v0.  Then pin
-        the highest implemented version per hot API."""
-        r = self._call(kw.API_API_VERSIONS, 3,
-                       kw.enc_api_versions_request_v3())
+        in v0 format with its ranges, and we re-probe with v0.  Then pin,
+        per API, the newest of the codec's versions the broker offers."""
+        r = self._call(kw.API_API_VERSIONS, 3, kw.enc_api_versions_request(3))
         err = r.i16()
         if err == kw.ERR_UNSUPPORTED_VERSION:
-            versions = kw.dec_api_versions_response(
-                self._call(kw.API_API_VERSIONS, 0, b""))
+            versions = kw.dec_api_versions_response(self._call(
+                kw.API_API_VERSIONS, 0, kw.enc_api_versions_request(0)), 0)
         elif err:
             raise IOError(f"ApiVersions error {err}")
         else:
             r.pos -= 2  # rewind the peeked error code
-            versions = kw.dec_api_versions_response_v3(r)
+            versions = kw.dec_api_versions_response(r, 3)
 
         # kafka-version downgrade: below 2.4.0 there are no flexible
         # (KIP-482) frames — an assigned old version pins the classic
@@ -146,49 +145,19 @@ class KafkaConn:
         classic = (self._version_cap is not None
                    and self._version_cap < (2, 4, 0))
 
-        def pick(api: int, prefer: int, floor: int) -> int:
-            if classic:
-                prefer = floor
-            lo, hi = versions.get(api, (-1, -2))
-            if lo <= prefer <= hi:
-                return prefer
-            if lo <= floor <= hi:
-                return floor
-            raise IOError(
-                f"broker doesn't support api {api} v{floor} or v{prefer} "
-                f"(offers {lo}..{hi})")
+        def pick(api: int) -> int:
+            ours = kw.VERSIONS[api]
+            if api not in versions:
+                # a minimal broker's map omits the api: assume the floor
+                return ours[0]
+            lo, hi = versions[api]
+            for v in (ours[:1] if classic else ours[::-1]):
+                if lo <= v <= hi:
+                    return v
+            raise IOError(f"broker doesn't support api {api} at any of "
+                          f"v{ours} (offers {lo}..{hi})")
 
-        def pick_opt(api: int, prefer: int, floor: int) -> int:
-            # group/txn family: a broker whose ApiVersions map omits the
-            # api (minimal test stand-ins) is assumed classic-floor
-            if classic:
-                prefer = floor
-            lo, hi = versions.get(api, (-1, -2))
-            if lo <= prefer <= hi:
-                return prefer
-            if lo <= floor <= hi:
-                return floor
-            return floor
-
-        self._ver = {
-            kw.API_PRODUCE: pick(kw.API_PRODUCE, 9, 3),
-            kw.API_FETCH: pick(kw.API_FETCH, 12, 4),
-            kw.API_LIST_OFFSETS: pick(kw.API_LIST_OFFSETS, 7, 1),
-            kw.API_METADATA: pick(kw.API_METADATA, 9, 1),
-            # KIP-482 flexible group/txn families, negotiated the same
-            # way a modern sarama/franz-go client does
-            kw.API_FIND_COORDINATOR: pick_opt(kw.API_FIND_COORDINATOR, 3, 1),
-            kw.API_JOIN_GROUP: pick_opt(kw.API_JOIN_GROUP, 6, 2),
-            kw.API_SYNC_GROUP: pick_opt(kw.API_SYNC_GROUP, 4, 1),
-            kw.API_HEARTBEAT: pick_opt(kw.API_HEARTBEAT, 4, 1),
-            kw.API_LEAVE_GROUP: pick_opt(kw.API_LEAVE_GROUP, 4, 1),
-            kw.API_OFFSET_COMMIT: pick_opt(kw.API_OFFSET_COMMIT, 8, 3),
-            kw.API_OFFSET_FETCH: pick_opt(kw.API_OFFSET_FETCH, 6, 3),
-            kw.API_INIT_PRODUCER_ID: pick_opt(kw.API_INIT_PRODUCER_ID, 2, 1),
-            kw.API_ADD_PARTITIONS_TO_TXN: pick_opt(
-                kw.API_ADD_PARTITIONS_TO_TXN, 3, 0),
-            kw.API_END_TXN: pick_opt(kw.API_END_TXN, 3, 1),
-        }
+        self._ver = {api: pick(api) for api in kw.VERSIONS}
         return versions
 
     def _sasl_auth(self, mechanism: str, username: str, password: str,
@@ -196,16 +165,18 @@ class KafkaConn:
         import base64
         import os as _os
 
-        err, offered = kw.dec_sasl_handshake_response(self._call(
-            kw.API_SASL_HANDSHAKE, 1, kw.enc_sasl_handshake_request(mechanism)))
+        err, offered = self._rpc(kw.API_SASL_HANDSHAKE,
+                                 kw.enc_sasl_handshake_request,
+                                 kw.dec_sasl_handshake_response, mechanism)
         if err:
             raise IOError(f"SASL mechanism {mechanism} rejected "
                           f"(error {err}; broker offers {offered})")
 
         def authenticate(payload: bytes) -> bytes:
-            aerr, msg, out = kw.dec_sasl_authenticate_response(self._call(
-                kw.API_SASL_AUTHENTICATE, 0,
-                kw.enc_sasl_authenticate_request(payload)))
+            aerr, msg, out = self._rpc(kw.API_SASL_AUTHENTICATE,
+                                       kw.enc_sasl_authenticate_request,
+                                       kw.dec_sasl_authenticate_response,
+                                       payload)
             if aerr:
                 raise IOError(f"SASL authentication failed: {msg}")
             return out
@@ -318,39 +289,23 @@ class KafkaConn:
     # -- api calls
 
     def metadata(self, topics: list[str] | None = None) -> dict:
-        ver = self._ver[kw.API_METADATA]
-        if ver >= 9:
-            return kw.dec_metadata_response_v9(self._call(
-                kw.API_METADATA, ver, kw.enc_metadata_request_v9(topics)))
-        return kw.dec_metadata_response(self._call(
-            kw.API_METADATA, ver, kw.enc_metadata_request(topics)))
+        return self._rpc(kw.API_METADATA, kw.enc_metadata_request,
+                         kw.dec_metadata_response, topics)
 
     def init_producer_id(self, txn_id: str | None = None) -> tuple[int, int]:
         """KIP-98: acquire a (producer_id, epoch) from the broker for
         idempotent produces; with ``txn_id``, register/fence the
         transactional producer (same pid, bumped epoch on re-init)."""
-        ver = self._ver[kw.API_INIT_PRODUCER_ID]
-        if ver >= kw.FLEXIBLE_SINCE[kw.API_INIT_PRODUCER_ID]:
-            return kw.dec_init_producer_id_response_v2(self._call(
-                kw.API_INIT_PRODUCER_ID, ver,
-                kw.enc_init_producer_id_request_v2(txn_id)))
-        return kw.dec_init_producer_id_response(self._call(
-            kw.API_INIT_PRODUCER_ID, ver,
-            kw.enc_init_producer_id_request(txn_id)))
+        return self._rpc(kw.API_INIT_PRODUCER_ID,
+                         kw.enc_init_producer_id_request,
+                         kw.dec_init_producer_id_response, txn_id)
 
     def add_partitions_to_txn(self, txn_id: str, producer: tuple[int, int],
                               topic_partitions: dict[str, list[int]]) -> None:
-        ver = self._ver[kw.API_ADD_PARTITIONS_TO_TXN]
-        if ver >= kw.FLEXIBLE_SINCE[kw.API_ADD_PARTITIONS_TO_TXN]:
-            res = kw.dec_add_partitions_to_txn_response_v3(self._call(
-                kw.API_ADD_PARTITIONS_TO_TXN, ver,
-                kw.enc_add_partitions_to_txn_request_v3(
-                    txn_id, producer[0], producer[1], topic_partitions)))
-        else:
-            res = kw.dec_add_partitions_to_txn_response(self._call(
-                kw.API_ADD_PARTITIONS_TO_TXN, ver,
-                kw.enc_add_partitions_to_txn_request(
-                    txn_id, producer[0], producer[1], topic_partitions)))
+        res = self._rpc(kw.API_ADD_PARTITIONS_TO_TXN,
+                        kw.enc_add_partitions_to_txn_request,
+                        kw.dec_add_partitions_to_txn_response,
+                        txn_id, producer[0], producer[1], topic_partitions)
         for topic, parts in res.items():
             for p, err in parts.items():
                 if err:
@@ -359,17 +314,9 @@ class KafkaConn:
 
     def end_txn(self, txn_id: str, producer: tuple[int, int],
                 commit: bool) -> None:
-        ver = self._ver[kw.API_END_TXN]
-        if ver >= kw.FLEXIBLE_SINCE[kw.API_END_TXN]:
-            err = kw.dec_end_txn_response_v3(self._call(
-                kw.API_END_TXN, ver,
-                kw.enc_end_txn_request_v3(txn_id, producer[0],
-                                          producer[1], commit)))
-        else:
-            err = kw.dec_end_txn_response(self._call(
-                kw.API_END_TXN, ver,
-                kw.enc_end_txn_request(txn_id, producer[0], producer[1],
-                                       commit)))
+        err = self._rpc(kw.API_END_TXN, kw.enc_end_txn_request,
+                        kw.dec_end_txn_response,
+                        txn_id, producer[0], producer[1], commit)
         if err:
             raise IOError(f"EndTxn: error {err}")
 
@@ -420,15 +367,12 @@ class KafkaConn:
         code -> the decoded response ``{topic: {partition: (err, base)}}``;
         acks=0 waits for nothing and returns None."""
         ver = self._ver[kw.API_PRODUCE]
-        enc = (kw.enc_produce_request_v9 if ver >= 9
-               else kw.enc_produce_request)
-        body = enc(topic_data, acks=acks)
+        body = kw.enc_produce_request(ver, topic_data, acks=acks)
         if acks == 0:
             self._send_only(kw.API_PRODUCE, ver, body)
             return None
-        dec = (kw.dec_produce_response_v9 if ver >= 9
-               else kw.dec_produce_response)
-        resp = dec(self._call(kw.API_PRODUCE, ver, body))
+        resp = kw.dec_produce_response(
+            self._call(kw.API_PRODUCE, ver, body), ver)
         for topic, parts in topic_data.items():
             for partition in parts:
                 err, _base = resp[topic][partition]
@@ -449,18 +393,12 @@ class KafkaConn:
         iso = 1 if isolation == "read_committed" else 0
         out: list[tuple[int, kw.Record]] = []
         offset = from_offset
-        ver = self._ver[kw.API_FETCH]
         while True:
-            if ver >= 12:
-                resp = kw.dec_fetch_response_v12(self._call(
-                    kw.API_FETCH, ver,
-                    kw.enc_fetch_request_v12(topic, partition, offset,
-                                             isolation=iso)))
-            else:
-                resp = kw.dec_fetch_response(self._call(
-                    kw.API_FETCH, ver,
-                    kw.enc_fetch_request(topic, partition, offset,
-                                         isolation=iso)))
+            top_err, _, resp = self._rpc(
+                kw.API_FETCH, kw.enc_fetch_request, kw.dec_fetch_response,
+                [(topic, partition, offset, 1 << 26)], isolation=iso)
+            if top_err:
+                raise IOError(f"fetch error {top_err}")
             (_, _, err, hw, lso, aborted, record_set) = resp[0]
             if err:
                 raise IOError(f"fetch {topic}/{partition}@{offset}: error_code={err}")
@@ -570,11 +508,10 @@ class FetchSession:
             for t, p in self._forgotten:
                 by_topic.setdefault(t, []).append(p)
             forgotten = sorted(by_topic.items())
-        body = kw.enc_fetch_request_v12_session(
-            self.session_id, self.epoch, wants, forgotten,
-            isolation=self.iso)
-        top_err, sid, parts = kw.dec_fetch_response_v12_session(
-            self._reader(body))
+        top_err, sid, parts = self.conn._rpc(
+            kw.API_FETCH, kw.enc_fetch_request, kw.dec_fetch_response, wants,
+            isolation=self.iso, session_id=self.session_id,
+            session_epoch=self.epoch, forgotten=forgotten)
         if top_err in (kw.ERR_FETCH_SESSION_ID_NOT_FOUND,
                        kw.ERR_INVALID_FETCH_SESSION_EPOCH):
             # session lost: retry as a full request (KIP-227 client rule)
@@ -650,10 +587,6 @@ class FetchSession:
                 self._pending[(topic, idx)] = new_pos
         return out
 
-    def _reader(self, body: bytes) -> kw.Reader:
-        return self.conn._call(kw.API_FETCH,
-                               self.conn._ver[kw.API_FETCH], body)
-
 
 class ConsumerGroupMember:
     """Consumer-group membership — the coordination loop the reference's
@@ -677,17 +610,10 @@ class ConsumerGroupMember:
         # FindCoordinator names the group's coordinator; dial it (here the
         # same single broker, but the redirect is honored like a client)
         with KafkaConn.from_bootstrap(bootstrap) as bootconn:
-            ver = bootconn._ver[kw.API_FIND_COORDINATOR]
-            if ver >= kw.FLEXIBLE_SINCE[kw.API_FIND_COORDINATOR]:
-                host, port = kw.dec_find_coordinator_response_v3(
-                    bootconn._call(
-                        kw.API_FIND_COORDINATOR, ver,
-                        kw.enc_find_coordinator_request_v3(group_id)))
-            else:
-                host, port = kw.dec_find_coordinator_response(
-                    bootconn._call(
-                        kw.API_FIND_COORDINATOR, ver,
-                        kw.enc_find_coordinator_request(group_id)))
+            host, port = bootconn._rpc(kw.API_FIND_COORDINATOR,
+                                       kw.enc_find_coordinator_request,
+                                       kw.dec_find_coordinator_response,
+                                       group_id)
         self.conn = KafkaConn(host, port, client_id=f"cg-{group_id}")
 
     def close(self):
@@ -702,21 +628,11 @@ class ConsumerGroupMember:
     # -- join/sync with rejoin-on-rebalance
 
     def join_and_sync(self, max_rejoins: int = 5) -> dict[str, list[int]]:
-        jver = self.conn._ver[kw.API_JOIN_GROUP]
-        jflex = jver >= kw.FLEXIBLE_SINCE[kw.API_JOIN_GROUP]
-        sver = self.conn._ver[kw.API_SYNC_GROUP]
-        sflex = sver >= kw.FLEXIBLE_SINCE[kw.API_SYNC_GROUP]
         for _ in range(max_rejoins):
-            if jflex:
-                resp = kw.dec_join_group_response_v6(self.conn._call(
-                    kw.API_JOIN_GROUP, jver,
-                    kw.enc_join_group_request_v6(
-                        self.group_id, self.member_id, self.topics,
-                        group_instance_id=self.instance_id)))
-            else:
-                resp = kw.dec_join_group_response(self.conn._call(
-                    kw.API_JOIN_GROUP, jver,
-                    kw.enc_join_group_request(self.group_id, self.member_id, self.topics)))
+            resp = self.conn._rpc(
+                kw.API_JOIN_GROUP, kw.enc_join_group_request,
+                kw.dec_join_group_response, self.group_id, self.member_id,
+                self.topics, group_instance_id=self.instance_id)
             self.member_id = resp["member_id"]
             if resp["error"] == kw.ERR_REBALANCE_IN_PROGRESS:
                 continue
@@ -726,18 +642,11 @@ class ConsumerGroupMember:
             assignments: list[tuple[str, bytes]] = []
             if resp["member_id"] == resp["leader"]:
                 assignments = self._range_assign(resp["members"])
-            if sflex:
-                err, blob = kw.dec_sync_group_response_v4(self.conn._call(
-                    kw.API_SYNC_GROUP, sver,
-                    kw.enc_sync_group_request_v4(
-                        self.group_id, self.generation,
-                        self.member_id, assignments,
-                        group_instance_id=self.instance_id)))
-            else:
-                err, blob = kw.dec_sync_group_response(self.conn._call(
-                    kw.API_SYNC_GROUP, sver,
-                    kw.enc_sync_group_request(self.group_id, self.generation,
-                                              self.member_id, assignments)))
+            err, blob = self.conn._rpc(
+                kw.API_SYNC_GROUP, kw.enc_sync_group_request,
+                kw.dec_sync_group_response, self.group_id, self.generation,
+                self.member_id, assignments,
+                group_instance_id=self.instance_id)
             if err in (kw.ERR_REBALANCE_IN_PROGRESS, kw.ERR_ILLEGAL_GENERATION):
                 continue
             if err:
@@ -780,45 +689,24 @@ class ConsumerGroupMember:
     # -- offsets + heartbeat + leave
 
     def heartbeat(self) -> int:
-        ver = self.conn._ver[kw.API_HEARTBEAT]
-        if ver >= kw.FLEXIBLE_SINCE[kw.API_HEARTBEAT]:
-            return kw.dec_error_only_response_flex(self.conn._call(
-                kw.API_HEARTBEAT, ver,
-                kw.enc_heartbeat_request_v4(
-                    self.group_id, self.generation, self.member_id,
-                    group_instance_id=self.instance_id)))
-        return kw.dec_error_only_response(self.conn._call(
-            kw.API_HEARTBEAT, ver,
-            kw.enc_heartbeat_request(self.group_id, self.generation, self.member_id)))
+        return self.conn._rpc(
+            kw.API_HEARTBEAT, kw.enc_heartbeat_request,
+            kw.dec_heartbeat_response, self.group_id, self.generation,
+            self.member_id, group_instance_id=self.instance_id)
 
     def commit_offsets(self, offsets: dict[tuple[str, int], int]) -> None:
-        ver = self.conn._ver[kw.API_OFFSET_COMMIT]
-        if ver >= kw.FLEXIBLE_SINCE[kw.API_OFFSET_COMMIT]:
-            res = kw.dec_offset_commit_response_v8(self.conn._call(
-                kw.API_OFFSET_COMMIT, ver,
-                kw.enc_offset_commit_request_v8(
-                    self.group_id, self.generation,
-                    self.member_id, offsets,
-                    group_instance_id=self.instance_id)))
-        else:
-            res = kw.dec_offset_commit_response(self.conn._call(
-                kw.API_OFFSET_COMMIT, ver,
-                kw.enc_offset_commit_request(self.group_id, self.generation,
-                                             self.member_id, offsets)))
+        res = self.conn._rpc(
+            kw.API_OFFSET_COMMIT, kw.enc_offset_commit_request,
+            kw.dec_offset_commit_response, self.group_id, self.generation,
+            self.member_id, offsets, group_instance_id=self.instance_id)
         bad = {tp: e for tp, e in res.items() if e}
         if bad:
             raise IOError(f"OffsetCommit errors: {bad}")
 
     def fetch_committed(self) -> dict[tuple[str, int], int]:
-        wants = {t: ps for t, ps in self.assignment.items()}
-        ver = self.conn._ver[kw.API_OFFSET_FETCH]
-        if ver >= kw.FLEXIBLE_SINCE[kw.API_OFFSET_FETCH]:
-            return kw.dec_offset_fetch_response_v6(self.conn._call(
-                kw.API_OFFSET_FETCH, ver,
-                kw.enc_offset_fetch_request_v6(self.group_id, wants)))
-        return kw.dec_offset_fetch_response(self.conn._call(
-            kw.API_OFFSET_FETCH, ver,
-            kw.enc_offset_fetch_request(self.group_id, wants)))
+        return self.conn._rpc(
+            kw.API_OFFSET_FETCH, kw.enc_offset_fetch_request,
+            kw.dec_offset_fetch_response, self.group_id, self.assignment)
 
     def poll_assigned(self) -> dict[tuple[str, int], list]:
         """Consume [committed, hw) for every assigned partition and commit
@@ -839,16 +727,9 @@ class ConsumerGroupMember:
         return out
 
     def leave(self) -> None:
-        ver = self.conn._ver[kw.API_LEAVE_GROUP]
-        if ver >= kw.FLEXIBLE_SINCE[kw.API_LEAVE_GROUP]:
-            kw.dec_leave_group_response_v4(self.conn._call(
-                kw.API_LEAVE_GROUP, ver,
-                kw.enc_leave_group_request_v4(self.group_id,
-                                              self.member_id)))
-            return
-        kw.dec_error_only_response(self.conn._call(
-            kw.API_LEAVE_GROUP, 1,
-            kw.enc_leave_group_request(self.group_id, self.member_id)))
+        self.conn._rpc(kw.API_LEAVE_GROUP, kw.enc_leave_group_request,
+                       kw.dec_leave_group_response, self.group_id,
+                       self.member_id)
 
 
 # -- admin calls (ClusterAdminClient parity: `pkg/sink/kafka/admin.go`)
@@ -857,11 +738,11 @@ class ConsumerGroupMember:
 def create_topic(conn: KafkaConn, name: str, num_partitions: int,
                  replication_factor: int = 1, configs: dict | None = None,
                  validate_only: bool = False) -> None:
-    res = kw.dec_create_topics_response(conn._call(
-        kw.API_CREATE_TOPICS, 2,
-        kw.enc_create_topics_request(
-            [(name, num_partitions, replication_factor, configs or {})],
-            validate_only=validate_only)))
+    res = conn._rpc(
+        kw.API_CREATE_TOPICS, kw.enc_create_topics_request,
+        kw.dec_create_topics_response,
+        [(name, num_partitions, replication_factor, configs or {})],
+        validate_only=validate_only)
     err, msg = res[name]
     if err and err != kw.ERR_TOPIC_ALREADY_EXISTS:
         raise IOError(f"CreateTopics {name}: error {err}: {msg}")
@@ -871,9 +752,9 @@ def create_topic(conn: KafkaConn, name: str, num_partitions: int,
 
 def describe_configs(conn: KafkaConn, resource_type: int, name: str,
                      keys: list[str] | None = None) -> dict[str, str | None]:
-    res = kw.dec_describe_configs_response(conn._call(
-        kw.API_DESCRIBE_CONFIGS, 0,
-        kw.enc_describe_configs_request([(resource_type, name, keys)])))
+    res = conn._rpc(kw.API_DESCRIBE_CONFIGS, kw.enc_describe_configs_request,
+                    kw.dec_describe_configs_response,
+                    [(resource_type, name, keys)])
     return res[0][2]
 
 
@@ -918,15 +799,8 @@ def adjust_options(
 def list_offset(conn: KafkaConn, topic: str, partition: int,
                 timestamp: int = kw.OFFSET_LATEST) -> int:
     """Earliest (-2) / latest (-1) offset — the consumer's seek call."""
-    ver = conn._ver[kw.API_LIST_OFFSETS]
-    if ver >= 6:
-        res = kw.dec_list_offsets_response_v7(conn._call(
-            kw.API_LIST_OFFSETS, ver,
-            kw.enc_list_offsets_request_v7(topic, partition, timestamp)))
-    else:
-        res = kw.dec_list_offsets_response(conn._call(
-            kw.API_LIST_OFFSETS, ver,
-            kw.enc_list_offsets_request(topic, partition, timestamp)))
+    res = conn._rpc(kw.API_LIST_OFFSETS, kw.enc_list_offsets_request,
+                    kw.dec_list_offsets_response, topic, partition, timestamp)
     return res[(topic, partition)][1]
 
 
@@ -943,7 +817,6 @@ def offset_for_timestamp(conn: KafkaConn, topic: str, partition: int,
         raise RuntimeError(
             "broker negotiated ListOffsets v%d; timestamp lookup needs "
             "the flexible v6+ semantics" % ver)
-    res = kw.dec_list_offsets_response_v7(conn._call(
-        kw.API_LIST_OFFSETS, ver,
-        kw.enc_list_offsets_request_v7(topic, partition, timestamp)))
+    res = conn._rpc(kw.API_LIST_OFFSETS, kw.enc_list_offsets_request,
+                    kw.dec_list_offsets_response, topic, partition, timestamp)
     return res[(topic, partition)]

@@ -3,11 +3,12 @@
 Composes the sink message frame (`sinks/kafka.py`) with the wire-protocol
 broker (`sinks/kafka_broker.py`) and client (`sinks/kafka_client.py`):
 
-- produce: every Spark partition dials the broker and sends Produce v3
-  requests with v2 record batches (acks=-1), exactly what the reference's
-  `pkg/sink/kafka` producers put on the wire. Runs as a construction-time
+- produce: every Spark partition dials the broker and sends Produce
+  requests at the negotiated version (v9 against ``start_broker``'s
+  flexible-only broker) with v2 record batches (acks=-1), exactly what
+  the reference's `pkg/sink/kafka` producers put on the wire. Runs as a construction-time
   job (trainer precedent — this is a sink flush, not a lazy view).
-- fetch: the returned DataFrame is a distributed Fetch v4 scan, one task
+- fetch: the returned DataFrame is a distributed Fetch scan, one task
   per (topic, partition), each verifying offset contiguity 0..hw-1 —
   a dropped or duplicated batch fails the query, so correctness of the
   broker log is checked inside the plan, not just by the oracle.

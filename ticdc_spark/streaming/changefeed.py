@@ -393,17 +393,9 @@ class Changefeed:
         mark the ts applied.  A crash between broadcast and record
         re-broadcasts on replay (at-least-once, consumer dedups), the
         same contract as the data path."""
-        from ticdc_spark.codec.canal_json import CANAL_DDL_EVENT_TYPE
+        from ticdc_spark.codec.canal_json import canal_ddl_message
 
-        etype = CANAL_DDL_EVENT_TYPE.get(ddl.get("ddl_type", ""), "QUERY")
-        self._broadcast(topics, (
-            '{"id":0,"database":"%s","table":"%s","pkNames":null,'
-            '"isDdl":true,"type":"%s","es":%d,"ts":0,"sql":"%s",'
-            '"sqlType":null,"mysqlType":null,"data":null,"old":null}'
-            % (ddl.get("schema_name", ""), ddl.get("table_name", ""),
-               etype, ddl["commit_ts"] // 1000,
-               ddl.get("query", "").replace('"', '\\"'))
-        ).encode())
+        self._broadcast(topics, canal_ddl_message(ddl))
         # chaos hook: crash AFTER the wire broadcast but BEFORE the
         # registry bump + DDLTsBook record (the reference's
         # checkpoint_race_ddl_crash window) — restart replays the epoch
@@ -425,12 +417,9 @@ class Changefeed:
         seen this epoch (the reference's kafka sink broadcasts checkpoint
         events exactly like DDLs — `canal_json_encoder.go:406-441` +
         broadcast; see canal_checkpoints / kafka_ddl_broadcast)."""
-        self._broadcast(topics, (
-            '{"id":0,"database":"","table":"","pkNames":null,"isDdl":false,'
-            '"type":"TIDB_WATERMARK","es":%d,"ts":0,"sql":"","sqlType":null,'
-            '"mysqlType":null,"data":null,"old":null,'
-            '"_tidb":{"watermarkTs":%d}}' % (resolved_ts // 1000, resolved_ts)
-        ).encode())
+        from ticdc_spark.codec.canal_json import canal_watermark_message
+
+        self._broadcast(topics, canal_watermark_message(resolved_ts))
 
     def _broadcast(self, topics: list[str], value: bytes) -> None:
         """One keyless control message to EVERY partition of ``topics``,

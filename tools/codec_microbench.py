@@ -1,5 +1,5 @@
-"""Codec microbenchmark: payload compression, the Kafka record batch and
-the Avro message codecs.
+"""Codec microbenchmark: payload compression, the Kafka record batch, the
+Kafka Produce request framing and the Avro message codecs.
 
     python tools/codec_microbench.py [--records N] [--repeat R]
 
@@ -13,6 +13,11 @@ same file run from two checkouts compares them.  Prints one JSON line:
   µs per record (best of R passes) over N records with 150-450 B
   canal-JSON-like values and 20 B keys, uncompressed, in batches of 512
   records as the live produce sends them;
+- ``kafka_produce``: µs per Produce request carrying the first 512-record
+  batch (best of R passes of 200 requests), at the classic and the
+  flexible version: ``encode_us`` builds the body and frames it (what
+  the client sends), ``decode_us`` parses the header and the body (what
+  the broker reads);
 - ``avro``: µs per row (best of R passes over N rows) for the native
   ``avro`` protocol's Confluent value encode, key encode and value
   decode, and for the debezium-avro codec cache's encode and decode of
@@ -67,6 +72,27 @@ def _best(fn, repeat: int) -> float:
         fn()
         best = min(best, time.perf_counter() - t)
     return best
+
+
+def _produce_framing(record_set: bytes, repeat: int, loops: int = 200) -> dict:
+    data = {"t": {0: record_set}}
+    out = {}
+    for v in kw.VERSIONS[kw.API_PRODUCE]:
+        def encode(v=v):
+            return kw.frame_request(kw.API_PRODUCE, v, 1, "bench",
+                                    kw.enc_produce_request(v, data))
+
+        frame = encode()
+
+        def decode(v=v):
+            return kw.dec_produce_request(kw.parse_request_header(frame[4:])[4], v)
+
+        assert decode()[3] == data
+        out[f"v{v}"] = {
+            name: round(_best(lambda: [fn() for _ in range(loops)], repeat)
+                        / loops * 1e6, 1)
+            for name, fn in (("encode_us", encode), ("decode_us", decode))}
+    return out
 
 
 def _avro(n: int, repeat: int) -> dict:
@@ -154,6 +180,8 @@ def main(argv=None) -> None:
             "encode_us_per_record": round(encode_s * us, 2),
             "decode_us_per_record": round(decode_s * us, 2),
         },
+        "kafka_produce": _produce_framing(kw.encode_record_batch(chunks[0]),
+                                          args.repeat),
         "avro": _avro(args.records, args.repeat),
         "crc32c": "native" if kw.crc32c is not kw._crc32c_py else "python",
     }))
