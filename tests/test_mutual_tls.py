@@ -1,4 +1,5 @@
-"""Mutual TLS on all four live listeners.
+"""Mutual TLS on the live listeners: Kafka, MySQL, Pulsar and the HTTPS
+endpoints (S3, GCS, Azure Blob, the control-plane API).
 
 Reference shape: connectors take the full Credential triple
 {CAPath, CertPath, KeyPath} (pkg/security/credential.go:107-110) —
@@ -14,8 +15,12 @@ import ssl
 
 import pytest
 
+from ticdc_spark.api import ApiServer
+from ticdc_spark.client import ApiClient
 from ticdc_spark.codec import tlsutil
 from ticdc_spark.codec.kafka_wire import Record
+from ticdc_spark.sinks.azblob_server import AzBlobClient, MiniAzureBlobServer
+from ticdc_spark.sinks.gcs_server import GCSClient, MiniGCSServer
 from ticdc_spark.sinks.kafka_broker import KafkaBroker
 from ticdc_spark.sinks.kafka_client import KafkaConn
 from ticdc_spark.sinks.mysql_client import MySQLConn
@@ -24,6 +29,7 @@ from ticdc_spark.sinks.pulsar_broker import PulsarBroker
 from ticdc_spark.sinks.pulsar_client import PulsarConn
 from ticdc_spark.sinks.s3_client import S3Client
 from ticdc_spark.sinks.s3_server import MiniS3Server
+from ticdc_spark.streaming.registry import ChangefeedRegistry
 
 _HANDSHAKE_ERRORS = (ssl.SSLError, OSError, IOError, ConnectionError)
 
@@ -88,17 +94,56 @@ def test_pulsar_mtls_roundtrip_and_rejections():
             PulsarConn.from_service_url(b.service_url, tls_ca=b.ca_pem)
 
 
-def test_s3_mtls_roundtrip_and_rejections():
-    with MiniS3Server(tls=True, mutual_tls=True) as s:
-        cert, key = s.issue_client_cert()
-        with S3Client(s.endpoint, "AKIDTEST", "s3cr3t", tls_ca=s.ca_pem,
-                      tls_client_cert=(cert, key)) as c:
-            c.put_object("b", "k", b"data")
-            assert c.get_object("b", "k") == b"data"
+def _s3_roundtrip(srv, cert):
+    with S3Client(srv.endpoint, "AKIDTEST", "s3cr3t", tls_ca=srv.ca_pem,
+                  tls_client_cert=cert) as c:
+        c.put_object("b", "k", b"data")
+        assert c.get_object("b", "k") == b"data"
+
+
+def _gcs_roundtrip(srv, cert):
+    with GCSClient(srv.endpoint, srv.token, tls_ca=srv.ca_pem,
+                   tls_client_cert=cert) as c:
+        c.put_object("b", "k", b"data")
+        assert c.get_object("b", "k") == b"data"
+
+
+def _azblob_roundtrip(srv, cert):
+    with AzBlobClient(srv.endpoint, srv.account, srv.key_b64,
+                      tls_ca=srv.ca_pem, tls_client_cert=cert) as c:
+        c.put_object("ct", "k", b"data")
+        assert c.get_object("ct", "k") == b"data"
+
+
+def _api_roundtrip(srv, cert):
+    cert_pem, key_pem = cert or (None, None)
+    assert ApiClient(srv.endpoint, timeout_s=5, ca_pem=srv.ca_pem,
+                     cert_pem=cert_pem, key_pem=key_pem).health()
+
+
+# the HTTPS listeners: (server factory, one authenticated round trip)
+_HTTPS_MTLS = {
+    "s3": (lambda tmp_path: MiniS3Server(tls=True, mutual_tls=True),
+           _s3_roundtrip),
+    "gcs": (lambda tmp_path: MiniGCSServer(tls=True, mutual_tls=True),
+            _gcs_roundtrip),
+    "azblob": (lambda tmp_path: MiniAzureBlobServer(tls=True,
+                                                    mutual_tls=True),
+               _azblob_roundtrip),
+    "api": (lambda tmp_path: ApiServer(
+        ChangefeedRegistry(str(tmp_path / "reg")), tls=True,
+        mutual_tls=True), _api_roundtrip),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_HTTPS_MTLS))
+def test_https_mtls_roundtrip_and_rejections(name, tmp_path):
+    make, roundtrip = _HTTPS_MTLS[name]
+    with make(tmp_path) as srv:
+        roundtrip(srv, srv.issue_client_cert())
+        # no client cert -> handshake rejected
         with pytest.raises(_HANDSHAKE_ERRORS):
-            with S3Client(s.endpoint, "AKIDTEST", "s3cr3t",
-                          tls_ca=s.ca_pem) as c2:
-                c2.put_object("b", "k2", b"data")
+            roundtrip(srv, None)
 
 
 def test_hostname_verification_rejects_wrong_identity():

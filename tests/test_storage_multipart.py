@@ -199,6 +199,55 @@ def test_azblob_block_errors(az):
     assert c.get_object("ct", "k2") == b"direct"
 
 
+# ------------------------------------------- one resume handle per scheme
+
+P512 = 2 * K256  # a part size every scheme accepts
+
+_RESUME = {
+    # (server, client, name of the method that sends one part,
+    #  send the object's first part under the resume handle)
+    "s3": (MiniS3Server,
+           lambda srv: S3Client(srv.endpoint, srv.access_key,
+                                srv.secret_key),
+           "upload_part",
+           lambda c, h: c.upload_part("b", "k", h, 1, BODY[:P512])),
+    "gcs": (MiniGCSServer,
+            lambda srv: GCSClient(srv.endpoint, srv.token),
+            "put_chunk",
+            lambda c, h: c.put_chunk(h, BODY[:P512], 0, len(BODY))),
+    "azblob": (MiniAzureBlobServer,
+               lambda srv: AzBlobClient(srv.endpoint, srv.account,
+                                        srv.key_b64),
+               "put_block",
+               lambda c, h: c.put_block("b", "k", c.block_id(0, BODY[:P512]),
+                                        BODY[:P512])),
+}
+
+
+@pytest.mark.parametrize("scheme", sorted(_RESUME))
+def test_resume_handle_sends_only_missing_parts(scheme):
+    """``open_large`` gives the handle ``put_object_large`` resumes from
+    (the sink's retry path on every scheme): with the first part already
+    on the server, a fresh client sends only the remaining parts."""
+    server, client, part_call, first_part = _RESUME[scheme]
+    with server() as srv:
+        with client(srv) as c:
+            handle = c.open_large("b", "k")
+            first_part(c, handle)
+        with client(srv) as c2:
+            sent = []
+            send_part = getattr(c2, part_call)
+
+            def counting(*a):
+                sent.append(next(x for x in a if isinstance(x, bytes)))
+                return send_part(*a)
+
+            setattr(c2, part_call, counting)
+            c2.put_object_large("b", "k", BODY, P512, handle)
+            assert c2.get_object("b", "k") == BODY
+        assert [len(x) for x in sent] == [P512, len(BODY) - 2 * P512]
+
+
 # ---------------------------------------------- sink threshold switch
 
 def test_put_files_multipart_threshold(spark):

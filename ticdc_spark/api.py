@@ -33,7 +33,7 @@ Routes implemented (reference handler in parens):
 - ``GET    /api/v2/unsafe/metadata``              (CDCMetaData — registry KV dump)
 - ``DELETE /api/v2/unsafe/service_gc_safepoint``  (DeleteServiceGcSafePoint)
 
-The server is stdlib ``ThreadingHTTPServer`` — the control plane is
+The server is the shared threaded HTTP listener (`endpoint.py`) — the control plane is
 driver-side and tiny; the data plane never touches it. Responses follow
 the reference's JSON shapes loosely (``{"error_msg": ...}`` on failure,
 HTTP status codes per REST convention).
@@ -46,10 +46,10 @@ import os
 import re
 import threading
 import time
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs
 
 from ticdc_spark import failpoint
+from ticdc_spark.endpoint import HttpEndpoint, HttpHandler
 from ticdc_spark.operators.table_filter import _wildcard_to_regex
 from ticdc_spark.plans.schema_store import SchemaStore
 from ticdc_spark.sources.changelog import _EVENT_MAP
@@ -158,7 +158,7 @@ def default_schema_store() -> SchemaStore:
     return st
 
 
-class ApiServer:
+class ApiServer(HttpEndpoint):
     """Bind the registry to an ephemeral HTTP port. ``start()`` returns
     the bound port; ``stop()`` shuts the listener down."""
 
@@ -195,28 +195,11 @@ class ApiServer:
             raise ValueError(
                 "client-allowed-user should not be empty when "
                 "client-user-required is true")
+        super().__init__(host, tls, mutual_tls)
         self.registry = registry
-        self.host = host
-        self.tls = tls
-        self.mutual_tls = mutual_tls
         self.client_user_required = client_user_required
         self.client_allowed_user = list(client_allowed_user or [])
         self.verify_password = verify_password
-        self.ca_pem = None
-        self._ca_key = None
-        self._tls_ctx = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
-        elif mutual_tls:
-            raise ValueError("mutual_tls requires tls=True")
         self.schema_store = schema_store or default_schema_store()
         self.log_level = "info"
         self.redact_mode = "off"
@@ -225,19 +208,15 @@ class ApiServer:
         # failpoints enabled over HTTP, tracked separately from env-armed
         # ones so List shows exactly what the API set (`failpoint.go:70`)
         self.http_failpoints: dict[str, str] = {}
-        self._httpd: ThreadingHTTPServer | None = None
-        self._thread: threading.Thread | None = None
 
     def start(self, port: int = 0) -> int:
+        """Listen on ``port`` (0: ephemeral) -> the bound port."""
+        if self._thread is not None:
+            return self.port
         registry = self.registry
         server = self
 
-        class Handler(BaseHTTPRequestHandler):
-            disable_nagle_algorithm = True  # no 40ms delayed-ACK stalls
-
-            def log_message(self, *a):  # silence per-request stderr noise
-                pass
-
+        class Handler(HttpHandler):
             def _send(self, code: int, payload: dict | list) -> None:
                 if (isinstance(payload, dict) and "error_msg" in payload
                         and "error_code" not in payload):
@@ -843,33 +822,6 @@ class ApiServer:
                     pass
                 return self._send(200, {})
 
-        class _Srv(ThreadingHTTPServer):
-            # burst connects from clients/tests; stdlib backlog of 5
-            # drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._httpd = _Srv((self.host, port), Handler)
-        if self._tls_ctx is not None:
-            self._httpd.socket = self._tls_ctx.wrap_socket(
-                self._httpd.socket, server_side=True)
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, name="ticdc-api", daemon=True
-        )
-        self._thread.start()
-        return self._httpd.server_address[1]
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client identity chained to the mTLS CA (cert-allowed
-        clients present these — Credential.CertPath/KeyPath)."""
-        if not self.mutual_tls:
-            raise ValueError("server is not in mutual-TLS mode")
-        from ticdc_spark.codec import tlsutil
-
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name,
-                                  client=True)
-
-    def stop(self) -> None:
-        if self._httpd is not None:
-            self._httpd.shutdown()
-            self._httpd.server_close()
-            self._httpd = None
+        self._listen(Handler, port)
+        super().start()
+        return self.port

@@ -244,18 +244,27 @@ def encode_canal_json_ddl(ddl: DataFrame) -> DataFrame:
         etype = F.when(F.col("ddl_type") == label, F.lit(name)).otherwise(etype)
     value = F.concat(
         F.lit('{"id":0,"database":"'),
-        F.col("schema_name"),
+        _json_text(F.col("schema_name")),
         F.lit('","table":"'),
-        F.col("table_name"),
+        _json_text(F.col("table_name")),
         F.lit('","pkNames":null,"isDdl":true,"type":"'),
         etype,
         F.lit('","es":'),
         F.floor(F.col("commit_ts") / 1000).cast("long").cast("string"),
         F.lit(',"ts":0,"sql":"'),
-        F.col("query"),
+        _json_text(F.col("query")),
         F.lit('","sqlType":null,"mysqlType":null,"data":null,"old":null}'),
     )
     return ddl.withColumn("value", value)
+
+
+def _json_text(col: Column) -> Column:
+    """``col`` as the body of a JSON string, escaped exactly as
+    ``_json_message`` escapes it: backslash and quote, and every control
+    character (short forms, else ``\\u00xx``); non-ASCII stays UTF-8."""
+    for ch in ("\\", '"', *map(chr, range(32))):
+        col = F.replace(col, F.lit(ch), F.lit(json.dumps(ch)[1:-1]))
+    return col
 
 
 def canal_checkpoints(cl: DataFrame, interval_us: int = 3_600_000_000) -> DataFrame:

@@ -21,6 +21,8 @@ import hashlib
 import hmac
 import struct
 
+from ticdc_spark.endpoint import recv_exact
+
 # capability flags (protocol constants from the public docs)
 CLIENT_LONG_PASSWORD = 0x00000001
 CLIENT_CONNECT_WITH_DB = 0x00000008
@@ -63,35 +65,17 @@ def write_packet(sock, seq: int, payload: bytes) -> int:
 
 
 def read_packet(sock) -> tuple[int, bytes] | None:
-    read_exact = getattr(sock, "read_exact", None)
-    if read_exact is not None:  # buffered fast path (mysql_client)
-        hdr = read_exact(4)
-        if hdr is None:
-            return None
-        length = hdr[0] | (hdr[1] << 8) | (hdr[2] << 16)
-        payload = read_exact(length) if length else b""
-        if payload is None:
-            return None
-        return hdr[3], payload
-    hdr = _recv_exact(sock, 4)
+    # mysql_client's buffered socket brings its own read_exact
+    read_exact = (getattr(sock, "read_exact", None)
+                  or (lambda n: recv_exact(sock, n)))
+    hdr = read_exact(4)
     if hdr is None:
         return None
     length = hdr[0] | (hdr[1] << 8) | (hdr[2] << 16)
-    seq = hdr[3]
-    payload = _recv_exact(sock, length) if length else b""
+    payload = read_exact(length) if length else b""
     if payload is None:
         return None
-    return seq, payload
-
-
-def _recv_exact(sock, n: int) -> bytes | None:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return bytes(buf)
+    return hdr[3], payload
 
 
 # ---------------------------------------------------------------- lenenc

@@ -15,9 +15,9 @@ import base64
 import hashlib
 import hmac
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs
+
+from ticdc_spark.endpoint import HttpEndpoint, HttpHandler
 
 
 def _b64url(data: bytes) -> str:
@@ -69,7 +69,7 @@ def parse_oauthbearer_response(data: bytes) -> str | None:
     return None
 
 
-class MiniOAuth2Server:
+class MiniOAuth2Server(HttpEndpoint):
     """Token endpoint: POST /token with grant_type=client_credentials +
     client_id/client_secret -> {"access_token": <HS256 JWT>, ...}."""
 
@@ -81,6 +81,7 @@ class MiniOAuth2Server:
         # resource-indicator style, the `audience` form field Pulsar's
         # OAuth2 flow sends) and the issued JWT carries it as `aud` —
         # a consumer for a different audience is refused invalid_target
+        super().__init__(host)
         self.client_id = client_id
         self.client_secret = client_secret
         self.jwt_secret = jwt_secret
@@ -89,12 +90,7 @@ class MiniOAuth2Server:
         self.audience = audience
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
-            disable_nagle_algorithm = True  # no 40ms delayed-ACK stalls
-
-            def log_message(self, *a):
-                pass
-
+        class Handler(HttpHandler):
             def _json(self, code: int, payload: dict):
                 data = json.dumps(payload).encode()
                 self.send_response(code)
@@ -127,33 +123,11 @@ class MiniOAuth2Server:
                     "access_token": token, "token_type": "Bearer",
                     "expires_in": srv.ttl_s})
 
-        class _Srv(ThreadingHTTPServer):
-            # burst connects from executor tasks; stdlib backlog of 5
-            # drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = _Srv((host, 0), Handler)
-        self.host = host
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
+        self._listen(Handler)
 
     @property
     def token_url(self) -> str:
-        return f"http://{self.host}:{self.port}/token"
-
-    def start(self) -> "MiniOAuth2Server":
-        self._thread.start()
-        return self
-
-    def stop(self):
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
+        return f"{self.endpoint}/token"
 
 
 def fetch_token(token_url: str, client_id: str, client_secret: str,

@@ -33,6 +33,8 @@ import urllib.request
 import uuid as _uuid
 from dataclasses import dataclass, field
 
+from ticdc_spark.endpoint import HttpEndpoint, HttpHandler
+
 
 # ---------------------------------------------------------------------------
 # Subject naming strategies (helper.go:143)
@@ -314,21 +316,15 @@ class ConfluentSchemaManager:
 # Stdlib HTTP server over the in-memory registry (socket-level tests)
 # ---------------------------------------------------------------------------
 
-class registry_http_server:
+class registry_http_server(HttpEndpoint):
     """Context manager: serve an InMemoryConfluentRegistry over real HTTP
     on 127.0.0.1:<ephemeral>; yields the base URL."""
 
     def __init__(self, registry: InMemoryConfluentRegistry) -> None:
+        super().__init__()
         self.registry = registry
 
-    def __enter__(self) -> str:
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        registry = self.registry
-
-        class Handler(BaseHTTPRequestHandler):
-            disable_nagle_algorithm = True  # no 40ms delayed-ACK stalls
-
+        class Handler(HttpHandler):
             def _serve(self, method: str) -> None:
                 n = int(self.headers.get("Content-Length") or 0)
                 body = self.rfile.read(n).decode() if n else None
@@ -350,24 +346,11 @@ class registry_http_server:
             def do_DELETE(self):  # noqa: N802
                 self._serve("DELETE")
 
-            def log_message(self, *a):  # quiet
-                pass
+        self._listen(Handler)
 
-        class _Srv(ThreadingHTTPServer):
-            # executor tasks connect in one burst per wave; the stdlib
-            # backlog of 5 drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._srv = _Srv(("127.0.0.1", 0), Handler)
-        self._thread = threading.Thread(target=self._srv.serve_forever, daemon=True)
-        self._thread.start()
-        host, port = self._srv.server_address[:2]
-        return f"http://{host}:{port}"
-
-    def __exit__(self, *exc) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
-        self._thread.join(timeout=5)
+    def __enter__(self) -> str:
+        self.start()
+        return self.endpoint
 
 
 # ---------------------------------------------------------------------------

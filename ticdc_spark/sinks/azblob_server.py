@@ -31,8 +31,11 @@ import base64
 import hashlib
 import hmac
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, quote, unquote, urlsplit
+from xml.sax.saxutils import escape, quoteattr, unescape
+
+from ticdc_spark.endpoint import HttpEndpoint, HttpHandler
+from ticdc_spark.sinks.http_wire import StoreClient
 
 _XML = 'application/xml'
 
@@ -75,31 +78,16 @@ def sign(key_b64: str, sts: str) -> str:
     return base64.b64encode(mac.digest()).decode()
 
 
-class MiniAzureBlobServer:
+class MiniAzureBlobServer(HttpEndpoint):
     def __init__(self, account: str = "cdcaccount",
                  key_b64: str | None = None, host: str = "127.0.0.1",
                  tls: bool = False, mutual_tls: bool = False):
         # tls=True: an https:// endpoint (fresh self-signed cert, pinned
         # via server.ca_pem); mutual_tls demands a chained client cert
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._ca_key = None
-        self._tls_ctx = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
+        super().__init__(host, tls, mutual_tls)
         self.account = account
         self.key_b64 = key_b64 or base64.b64encode(
             b"azure-test-shared-key-32-bytes!!").decode()
-        self.host = host
         self.containers: dict[str, dict[str, bytes]] = {}
         # staged (uncommitted) blocks: (container, blob) -> {block_id: bytes}
         self.uncommitted: dict[tuple[str, str], dict[str, bytes]] = {}
@@ -109,15 +97,8 @@ class MiniAzureBlobServer:
         self._lock = threading.Lock()
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
+        class Handler(HttpHandler):
             protocol_version = "HTTP/1.1"
-            # one response can flush in 2 TCP segments (headers,
-            # body); with Nagle on, the second segment waits for the
-            # client's delayed ACK — a flat ~40ms per request.
-            disable_nagle_algorithm = True
-
-            def log_message(self, *a):
-                pass
 
             def _send(self, status: int, body: bytes = b"",
                       ctype: str = _XML) -> None:
@@ -235,7 +216,7 @@ class MiniAzureBlobServer:
                     page = keys[start:start + maxresults]
                     rest = keys[start + maxresults:]
                     blobs = "".join(
-                        f"<Blob><Name>{k}</Name><Properties>"
+                        f"<Blob><Name>{escape(k)}</Name><Properties>"
                         f"<Content-Length>"
                         f"{len(srv.containers[container][k])}"
                         f"</Content-Length></Properties></Blob>"
@@ -246,8 +227,8 @@ class MiniAzureBlobServer:
                             page[-1].encode()).decode()
                         marker = f"<NextMarker>{nm}</NextMarker>"
                     xml = (f'<?xml version="1.0" encoding="utf-8"?>'
-                           f'<EnumerationResults ContainerName='
-                           f'"{container}"><Blobs>{blobs}</Blobs>'
+                           f"<EnumerationResults ContainerName="
+                           f"{quoteattr(container)}><Blobs>{blobs}</Blobs>"
                            f"{marker}</EnumerationResults>")
                     return self._send(200, xml.encode())
                 if blob and q.get("comp") == "blocklist":
@@ -278,49 +259,10 @@ class MiniAzureBlobServer:
                                            b"</Code></Error>")
                 self._send(200, body, ctype="application/octet-stream")
 
-        class _Srv(ThreadingHTTPServer):
-            # burst connects from executor tasks; stdlib backlog of 5
-            # drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = _Srv((host, 0), Handler)
-        if self._tls_ctx is not None:
-            self._server.socket = self._tls_ctx.wrap_socket(
-                self._server.socket, server_side=True)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True)
-
-    @property
-    def endpoint(self) -> str:
-        scheme = "https" if self.tls else "http"
-        return f"{scheme}://{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("server is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name,
-                                  client=True)
-
-    def start(self) -> "MiniAzureBlobServer":
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
+        self._listen(Handler)
 
 
-class AzBlobClient:
+class AzBlobClient(StoreClient):
     """SharedKey-signing client with the S3Client surface (put/get/list),
     so the storage sink is scheme-generic."""
 
@@ -328,24 +270,11 @@ class AzBlobClient:
                  x_ms_date: str = "Thu, 01 Jan 2026 00:00:00 GMT",
                  tls_ca: bytes | None = None,
                  tls_client_cert: tuple[bytes, bytes] | None = None):
-        from ticdc_spark.sinks.http_wire import HttpWire
-
-        u = urlsplit(endpoint)
-        self.host, self.port = u.hostname, u.port
+        super().__init__(endpoint, tls_ca, tls_client_cert)
         self.account = account
         self.key_b64 = key_b64
         # deterministic clock, like the S3 client's amz_date
         self.x_ms_date = x_ms_date
-        if u.scheme == "https":
-            from ticdc_spark.codec.tlsutil import client_context
-
-            if tls_ca is None:
-                raise ValueError("https endpoint needs tls_ca (pinned CA)")
-            cert, key = tls_client_cert or (None, None)
-            self.conn = HttpWire(self.host, self.port,
-                                 context=client_context(tls_ca, cert, key))
-        else:
-            self.conn = HttpWire(self.host, self.port)
 
     def _build_req(self, method: str, path: str, query: dict[str, str],
                    body: bytes = b"",
@@ -371,63 +300,21 @@ class AzBlobClient:
     def _request(self, method: str, path: str, query: dict[str, str],
                  body: bytes = b"",
                  extra: dict[str, str] | None = None) -> tuple[int, bytes]:
-        method, url, body, headers = self._build_req(
-            method, path, query, body, extra)
-        self.conn.request(method, url, body=body or None, headers=headers)
-        resp = self.conn.getresponse()
+        resp = self._send(self._build_req(method, path, query, body, extra))
         return resp.status, resp.read()
 
-    def get_objects(self, container: str, keys: list,
-                    max_in_flight: int = 16) -> list:
-        """Pipelined GETs -> bodies in ``keys`` order (http_wire)."""
-        out: list = []
-        for i in range(0, len(keys), max_in_flight):
-            chunk = keys[i:i + max_in_flight]
-            reqs = [self._build_req("GET", f"/{container}/{k}", {})
-                    for k in chunk]
-            for k, resp in zip(chunk, self.conn.pipeline(reqs)):
-                data = resp.read()
-                if resp.status != 200:
-                    raise IOError(f"azblob get {k}: {resp.status} "
-                                  f"{data[:200]!r}")
-                out.append(data)
-        return out
+    def _get_req(self, container: str, key: str) -> tuple:
+        return self._build_req("GET", f"/{container}/{key}", {})
 
-    def put_objects(self, container: str, items: list,
-                    max_in_flight: int = 16,
-                    max_bytes: int = 4 * 1024 * 1024) -> None:
-        """Pipelined single-shot Put Blob for ``[(key, body)]``."""
-        i = 0
-        while i < len(items):
-            reqs, j, nbytes = [], i, 0
-            while (j < len(items) and len(reqs) < max_in_flight
-                   and (not reqs or nbytes < max_bytes)):
-                k, b = items[j]
-                reqs.append(self._build_req(
-                    "PUT", f"/{container}/{k}", {}, b,
-                    extra={"x-ms-blob-type": "BlockBlob"}))
-                nbytes += len(b)
-                j += 1
-            for (k, _b), resp in zip(items[i:j], self.conn.pipeline(reqs)):
-                data = resp.read()
-                if resp.status != 201:
-                    raise IOError(f"azblob put {k}: {resp.status} "
-                                  f"{data[:200]!r}")
-            i = j
+    def _put_req(self, container: str, key: str, body: bytes) -> tuple:
+        return self._build_req("PUT", f"/{container}/{key}", {}, body,
+                               extra={"x-ms-blob-type": "BlockBlob"})
 
-    def put_object(self, container: str, key: str, body: bytes) -> None:
-        status, data = self._request(
-            "PUT", f"/{container}/{key}", {}, body,
-            extra={"x-ms-blob-type": "BlockBlob"})
-        if status != 201:
-            raise IOError(f"azblob put {key}: {status} {data[:200]!r}")
-
-    def get_object(self, container: str, key: str) -> bytes:
-        status, data = self._request(
-            "GET", f"/{container}/{key}", {})
-        if status != 200:
-            raise IOError(f"azblob get {key}: {status} {data[:200]!r}")
-        return data
+    @staticmethod
+    def _check(op: str, key: str, resp) -> None:
+        if resp.status != (201 if op == "put" else 200):
+            raise IOError(f"azblob {op} {key}: {resp.status} "
+                          f"{resp.read()[:200]!r}")
 
     # -- block-blob staged upload (the large-object path: a single Put
     # Blob caps out; blocks stage independently and commit atomically)
@@ -489,6 +376,13 @@ class AzBlobClient:
 
         return blocks("CommittedBlocks"), blocks("UncommittedBlocks")
 
+    @staticmethod
+    def open_large(container: str, key: str) -> bool:
+        """The resume handle of a large upload.  Azure keeps it server
+        side — the blob's staged block list, probed on resume — so
+        opening one creates nothing."""
+        return True
+
     def put_object_large(self, container: str, key: str, body: bytes,
                          part_size: int = 8 * 1024 * 1024,
                          resume: bool = False) -> None:
@@ -530,17 +424,8 @@ class AzBlobClient:
             for m in re.finditer(
                     r"<Blob><Name>(.*?)</Name><Properties>"
                     r"<Content-Length>(\d+)</Content-Length>", xml):
-                out.append((m.group(1), int(m.group(2))))
+                out.append((unescape(m.group(1)), int(m.group(2))))
             nm = re.search(r"<NextMarker>(.*?)</NextMarker>", xml)
             if not nm:
                 return out
             marker = nm.group(1)
-
-    def close(self) -> None:
-        self.conn.close()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.close()

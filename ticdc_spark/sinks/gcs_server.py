@@ -29,34 +29,21 @@ import base64
 import hashlib
 import json
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, quote, unquote, urlsplit
 
+from ticdc_spark.endpoint import HttpEndpoint, HttpHandler
+from ticdc_spark.sinks.http_wire import StoreClient
 
-class MiniGCSServer:
+
+class MiniGCSServer(HttpEndpoint):
     def __init__(self, token: str = "gcs-test-token",
                  host: str = "127.0.0.1", tls: bool = False,
                  mutual_tls: bool = False):
         # tls=True: an https:// endpoint with a fresh self-signed cert
         # (clients pin it via server.ca_pem); mutual_tls additionally
         # demands a client certificate chained to the server's CA
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._ca_key = None
-        self._tls_ctx = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
+        super().__init__(host, tls, mutual_tls)
         self.token = token
-        self.host = host
         self.buckets: dict[str, dict[str, bytes]] = {}
         # resumable sessions: upload_id -> {bucket, name, data, total}
         self.sessions: dict[str, dict] = {}
@@ -64,15 +51,8 @@ class MiniGCSServer:
         self._lock = threading.Lock()
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
+        class Handler(HttpHandler):
             protocol_version = "HTTP/1.1"
-            # one response can flush in 2 TCP segments (headers,
-            # body); with Nagle on, the second segment waits for the
-            # client's delayed ACK — a flat ~40ms per request.
-            disable_nagle_algorithm = True
-
-            def log_message(self, *a):  # quiet
-                pass
 
             def _json(self, status: int, obj) -> None:
                 body = json.dumps(obj).encode()
@@ -130,9 +110,7 @@ class MiniGCSServer:
                         # scheme — a conformant client follows this URL
                         # verbatim, so a hardcoded http:// would
                         # downgrade TLS sessions
-                        scheme = "https" if srv.tls else "http"
-                        loc = (f"{scheme}://{srv.host}:{srv.port}"
-                               f"/upload/storage/v1/b/{bucket}/o"
+                        loc = (f"{srv.endpoint}/upload/storage/v1/b/{bucket}/o"
                                f"?uploadType=resumable&upload_id={uid}")
                         self.send_response(200)
                         self.send_header("Location", loc)
@@ -280,101 +258,49 @@ class MiniGCSServer:
                         return self._bytes(200, body)
                 self._err(404, "unknown path")
 
-        class _Srv(ThreadingHTTPServer):
-            # burst connects from executor tasks; stdlib backlog of 5
-            # drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = _Srv((host, 0), Handler)
-        if self._tls_ctx is not None:
-            self._server.socket = self._tls_ctx.wrap_socket(
-                self._server.socket, server_side=True)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True)
-
-    @property
-    def endpoint(self) -> str:
-        scheme = "https" if self.tls else "http"
-        return f"{scheme}://{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("server is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name,
-                                  client=True)
-
-    def start(self) -> "MiniGCSServer":
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
+        self._listen(Handler)
 
 
-class GCSClient:
+class GCSClient(StoreClient):
     """JSON-API client for the subset above: put/get/list with Bearer
     auth — the S3Client surface so the storage sink is scheme-generic."""
 
     def __init__(self, endpoint: str, token: str,
                  tls_ca: bytes | None = None,
                  tls_client_cert: tuple[bytes, bytes] | None = None):
-        from ticdc_spark.sinks.http_wire import HttpWire
-
-        u = urlsplit(endpoint)
-        self.host, self.port = u.hostname, u.port
+        super().__init__(endpoint, tls_ca, tls_client_cert)
         self.token = token
-        if u.scheme == "https":
-            from ticdc_spark.codec.tlsutil import client_context
 
-            if tls_ca is None:
-                raise ValueError("https endpoint needs tls_ca (pinned CA)")
-            cert, key = tls_client_cert or (None, None)
-            self.conn = HttpWire(self.host, self.port,
-                                 context=client_context(tls_ca, cert, key))
-        else:
-            self.conn = HttpWire(self.host, self.port)
-
-    def _request(self, method: str, path: str,
-                 body: bytes = b"") -> tuple[int, bytes]:
-        self.conn.request(method, path, body=body or None, headers={
-            "Authorization": f"Bearer {self.token}",
-            "Content-Length": str(len(body)),
-        })
-        resp = self.conn.getresponse()
-        data = resp.read()
-        return resp.status, data
-
-    def put_object(self, bucket: str, key: str, body: bytes) -> None:
-        status, data = self._request(
-            "POST",
-            f"/upload/storage/v1/b/{bucket}/o?uploadType=media"
-            f"&name={quote(key, safe='')}", body)
-        if status != 200:
-            raise IOError(f"gcs put {key}: {status} {data[:200]!r}")
-
-    # -- resumable upload (uploadType=resumable; the scale path for
-    # large objects — media upload is single-shot like S3's single PUT)
-
-    def _request_h(self, method: str, path: str, body: bytes = b"",
-                   extra: dict | None = None) -> tuple[int, dict, bytes]:
+    def _req(self, method: str, path: str, body: bytes = b"",
+             extra: dict | None = None) -> tuple:
         headers = {"Authorization": f"Bearer {self.token}",
                    "Content-Length": str(len(body))}
         if extra:
             headers.update(extra)
-        self.conn.request(method, path, body=body or None, headers=headers)
-        resp = self.conn.getresponse()
+        return method, path, body, headers
+
+    def _get_req(self, bucket: str, key: str) -> tuple:
+        return self._req(
+            "GET", f"/storage/v1/b/{bucket}/o/{quote(key, safe='')}?alt=media")
+
+    def _put_req(self, bucket: str, key: str, body: bytes) -> tuple:
+        return self._req(
+            "POST", f"/upload/storage/v1/b/{bucket}/o?uploadType=media"
+                    f"&name={quote(key, safe='')}", body)
+
+    @staticmethod
+    def _check(op: str, key: str, resp) -> None:
+        if resp.status != 200:
+            raise IOError(f"gcs {op} {key}: {resp.status} "
+                          f"{resp.read()[:200]!r}")
+
+    def _request_h(self, method: str, path: str, body: bytes = b"",
+                   extra: dict | None = None) -> tuple[int, dict, bytes]:
+        resp = self._send(self._req(method, path, body, extra))
         return resp.status, dict(resp.getheaders()), resp.read()
+
+    # -- resumable upload (uploadType=resumable; the scale path for
+    # large objects — media upload is single-shot like S3's single PUT)
 
     def create_resumable(self, bucket: str, key: str) -> str:
         """Open a resumable session -> the session path (relative URI
@@ -387,6 +313,9 @@ class GCSClient:
             raise IOError(f"gcs resumable open: {status} {data[:200]!r}")
         loc = headers["Location"]
         return loc[loc.index("/upload/"):]
+
+    # a large upload's resume handle (StoreClient) is its session
+    open_large = create_resumable
 
     def resumable_status(self, session: str, total: int) -> int:
         """bytes */T probe -> number of bytes the server has (the
@@ -437,58 +366,6 @@ class GCSClient:
             pos = self.put_chunk(session, body[pos:pos + part_size],
                                  pos, total)
 
-    def get_object(self, bucket: str, key: str) -> bytes:
-        status, data = self._request(
-            "GET",
-            f"/storage/v1/b/{bucket}/o/{quote(key, safe='')}?alt=media")
-        if status != 200:
-            raise IOError(f"gcs get {key}: {status} {data[:200]!r}")
-        return data
-
-    def get_objects(self, bucket: str, keys: list,
-                    max_in_flight: int = 16) -> list:
-        """Pipelined GETs -> bodies in ``keys`` order (http_wire)."""
-        out: list = []
-        hdrs = {"Authorization": f"Bearer {self.token}",
-                "Content-Length": "0"}
-        for i in range(0, len(keys), max_in_flight):
-            chunk = keys[i:i + max_in_flight]
-            reqs = [("GET",
-                     f"/storage/v1/b/{bucket}/o/{quote(k, safe='')}"
-                     "?alt=media", b"", hdrs) for k in chunk]
-            for k, resp in zip(chunk, self.conn.pipeline(reqs)):
-                data = resp.read()
-                if resp.status != 200:
-                    raise IOError(f"gcs get {k}: {resp.status} "
-                                  f"{data[:200]!r}")
-                out.append(data)
-        return out
-
-    def put_objects(self, bucket: str, items: list,
-                    max_in_flight: int = 16,
-                    max_bytes: int = 4 * 1024 * 1024) -> None:
-        """Pipelined single-shot media uploads for ``[(key, body)]``."""
-        i = 0
-        while i < len(items):
-            reqs, j, nbytes = [], i, 0
-            while (j < len(items) and len(reqs) < max_in_flight
-                   and (not reqs or nbytes < max_bytes)):
-                k, b = items[j]
-                reqs.append((
-                    "POST",
-                    f"/upload/storage/v1/b/{bucket}/o?uploadType=media"
-                    f"&name={quote(k, safe='')}", b,
-                    {"Authorization": f"Bearer {self.token}",
-                     "Content-Length": str(len(b))}))
-                nbytes += len(b)
-                j += 1
-            for (k, _b), resp in zip(items[i:j], self.conn.pipeline(reqs)):
-                data = resp.read()
-                if resp.status != 200:
-                    raise IOError(f"gcs put {k}: {resp.status} "
-                                  f"{data[:200]!r}")
-            i = j
-
     def list_objects(self, bucket: str,
                      max_keys: int = 1000) -> list[tuple[str, int]]:
         out: list[tuple[str, int]] = []
@@ -497,7 +374,7 @@ class GCSClient:
             path = f"/storage/v1/b/{bucket}/o?maxResults={max_keys}"
             if token:
                 path += f"&pageToken={token}"
-            status, data = self._request("GET", path)
+            status, _, data = self._request_h("GET", path)
             if status != 200:
                 raise IOError(f"gcs list: {status} {data[:200]!r}")
             doc = json.loads(data)
@@ -506,12 +383,3 @@ class GCSClient:
             token = doc.get("nextPageToken")
             if not token:
                 return out
-
-    def close(self) -> None:
-        self.conn.close()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.close()

@@ -18,13 +18,13 @@ bytes target a real cluster; nothing here sits on the data path.
 
 from __future__ import annotations
 
-import socket
 import socketserver
 import struct
 import threading
 import time
 
 from ticdc_spark.codec import kafka_wire as kw
+from ticdc_spark.endpoint import Endpoint, recv_exact
 
 
 class OutOfOrderSequence(Exception):
@@ -184,7 +184,7 @@ class _Log:
 #  producerEpoch 2 | baseSequence 4  => 8+4+4+1+4+2+4+8+8+8+2+4 = 57
 
 
-class KafkaBroker:
+class KafkaBroker(Endpoint):
     """Threaded single-node broker bound to 127.0.0.1:<ephemeral port>."""
 
     def __init__(self, host: str = "127.0.0.1", default_partitions: int = 4,
@@ -203,22 +203,7 @@ class KafkaBroker:
         # mutual_tls=True additionally demands a client certificate
         # chained to the broker's CA (the reference Credential's
         # cert-path/key-path half); mint one via issue_client_cert().
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._tls_ctx = None
-        self._ca_key = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
-        self.host = host
+        super().__init__(host, tls, mutual_tls)
         self.default_partitions = default_partitions
         # advertised version ranges span the codec's versions per API;
         # flexible_only floors every API that has a flexible version at
@@ -288,30 +273,20 @@ class KafkaBroker:
 
         class Handler(socketserver.BaseRequestHandler):
             def handle(self):
-                import socket as _s
-
                 from ticdc_spark import failpoint
-
-                # multi-frame responses must not wait out delayed ACKs
-                self.request.setsockopt(_s.IPPROTO_TCP, _s.TCP_NODELAY, 1)
 
                 conn_state = {"authenticated": broker.sasl_users is None,
                               "mechanism": None, "scram": None}
-                sock = self.request
-                if broker._tls_ctx is not None:
-                    import ssl as _ssl
-
-                    try:
-                        sock = broker._tls_ctx.wrap_socket(sock, server_side=True)
-                    except (_ssl.SSLError, OSError):
-                        return  # failed handshake (plaintext client, bad ciphers)
+                sock = broker._accept_tls(self.request)
+                if sock is None:
+                    return  # failed handshake (plaintext client, bad ciphers)
                 try:
                     while True:
-                        hdr = _recv_exact(sock, 4)
+                        hdr = recv_exact(sock, 4)
                         if hdr is None:
                             return
                         (size,) = struct.unpack(">i", hdr)
-                        payload = _recv_exact(sock, size)
+                        payload = recv_exact(sock, size)
                         if payload is None:
                             return
                         # chaos hook: kill the connection mid-conversation
@@ -325,45 +300,11 @@ class KafkaBroker:
                 except (ConnectionResetError, BrokenPipeError):
                     return
 
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-            # executor tasks connect in one burst per wave; the stdlib
-            # backlog of 5 drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = Server((host, 0), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    # -- lifecycle
-
-    def start(self) -> "KafkaBroker":
-        self._thread.start()
-        return self
-
-    def stop(self):
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
+        self._listen(Handler)
 
     @property
     def bootstrap(self) -> str:
         return f"{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts
-        (-> (cert_pem, key_pem), chained to broker.ca_pem)."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("broker is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name, client=True)
 
     # -- log access
 
@@ -832,16 +773,6 @@ class KafkaBroker:
             # when a request lists the partition.
             return reply(kw.enc_fetch_response(v, parts, session_id=resp_sid))
         raise AssertionError("unreachable")
-
-
-def _recv_exact(sock: socket.socket, n: int) -> bytes | None:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return bytes(buf)
 
 
 class _Group:

@@ -18,7 +18,7 @@ import socket
 import struct
 
 from ticdc_spark.codec import kafka_wire as kw
-from ticdc_spark.sinks.kafka_broker import _recv_exact
+from ticdc_spark.endpoint import recv_exact
 
 # GSSAPI credentials cache (see _sasl_auth): full-credentials key ->
 # (service ticket, session key).  Worker processes are reused across
@@ -105,11 +105,11 @@ class KafkaConn:
         corr = self._corr
         self.sock.sendall(kw.frame_request(api_key, api_version, corr,
                                            self.client_id, body))
-        hdr = _recv_exact(self.sock, 4)
+        hdr = recv_exact(self.sock, 4)
         if hdr is None:
             raise IOError("broker closed connection")
         (size,) = struct.unpack(">i", hdr)
-        payload = _recv_exact(self.sock, size)
+        payload = recv_exact(self.sock, size)
         if payload is None:
             raise IOError("broker closed connection mid-response")
         got_corr, r = kw.parse_response_header(payload, api_key, api_version)
@@ -405,55 +405,63 @@ class KafkaConn:
             end = lso if iso else hw
             if not record_set:
                 return out
-            # pending aborted ranges per pid (sorted first offsets);
-            # an entry is consumed by that txn's ABORT marker
-            abort_pending: dict[int, list[int]] = {}
-            for pid_a, first in sorted(aborted, key=lambda x: x[1]):
-                abort_pending.setdefault(pid_a, []).append(first)
-            start = offset  # emit only records at/after this position
-            advanced = False
-            pos = 0
-            while pos + 12 <= len(record_set):
-                blen = struct.unpack_from(">i", record_set, pos + 8)[0]
-                bend = pos + 12 + blen
-                if blen < 0 or bend > len(record_set):
-                    break  # partial tail
-                batch = record_set[pos:bend]
-                pos = bend
-                base = struct.unpack_from(">q", batch, 0)[0]
-                attrs = kw.batch_attributes(batch)
-                pid = kw.batch_producer_meta(batch)[0]
-                if base >= end:
-                    continue
-                n = struct.unpack_from(">i", batch, 57)[0]
-                last_off = base + n - 1
-                if last_off >= offset:
-                    advanced = True
-                    offset = max(offset, last_off + 1)
-                if attrs & kw.ATTR_CONTROL:
-                    # markers never surface; an ABORT marker consumes the
-                    # pid's oldest pending abort entry (commits don't)
-                    if iso and abort_pending.get(pid):
-                        [(_, recs0)] = kw.decode_record_batches(batch)
-                        if (kw.dec_control_record(recs0[0])
-                                == kw.CONTROL_ABORT
-                                and base > abort_pending[pid][0]):
-                            abort_pending[pid].pop(0)
-                    continue
-                if (iso and (attrs & kw.ATTR_TRANSACTIONAL)
-                        and abort_pending.get(pid)
-                        and base >= abort_pending[pid][0]):
-                    # inside an aborted transaction — only transactional
-                    # batches filter; an idempotent-only batch from the
-                    # same pid interleaved in the range stays visible
-                    continue
-                for b2, records in kw.decode_record_batches(batch):
-                    for rec in records:
-                        off = b2 + rec.offset_delta
-                        if start <= off < end:
-                            out.append((off, rec))
-            if not advanced or offset >= end:
+            recs, nxt = _fold_record_set(record_set, offset, end, aborted,
+                                         iso)
+            out += recs
+            if nxt == offset or nxt >= end:
                 return out
+            offset = nxt
+
+
+def _fold_record_set(record_set: bytes, start: int, end: int, aborted,
+                     iso: int) -> tuple[list[tuple[int, kw.Record]], int]:
+    """The READ_COMMITTED fold of one partition's fetched record set ->
+    ([(offset, record)] within [start, end), the next fetch position).
+
+    Control batches (txn markers) never surface.  Under ``iso=1`` the
+    scan stops at ``end`` (the LSO) and transactional batches inside the
+    response's ``aborted`` ranges [(pid, first offset)] are dropped; an
+    ABORT marker consumes its pid's oldest pending range (commits
+    don't).  A partial tail batch ends the scan."""
+    abort_pending: dict[int, list[int]] = {}
+    for pid_a, first in sorted(aborted or (), key=lambda x: x[1]):
+        abort_pending.setdefault(pid_a, []).append(first)
+    out: list[tuple[int, kw.Record]] = []
+    nxt = start
+    pos = 0
+    while pos + 12 <= len(record_set):
+        blen = struct.unpack_from(">i", record_set, pos + 8)[0]
+        bend = pos + 12 + blen
+        if blen < 0 or bend > len(record_set):
+            break  # partial tail
+        batch = record_set[pos:bend]
+        pos = bend
+        base = struct.unpack_from(">q", batch, 0)[0]
+        if base >= end:
+            continue
+        attrs = kw.batch_attributes(batch)
+        pid = kw.batch_producer_meta(batch)[0]
+        nxt = max(nxt, base + struct.unpack_from(">i", batch, 57)[0])
+        if attrs & kw.ATTR_CONTROL:
+            if iso and abort_pending.get(pid):
+                [(_, recs0)] = kw.decode_record_batches(batch)
+                if (kw.dec_control_record(recs0[0]) == kw.CONTROL_ABORT
+                        and base > abort_pending[pid][0]):
+                    abort_pending[pid].pop(0)
+            continue
+        if (iso and (attrs & kw.ATTR_TRANSACTIONAL)
+                and abort_pending.get(pid)
+                and base >= abort_pending[pid][0]):
+            # inside an aborted transaction — only transactional batches
+            # filter; an idempotent-only batch from the same pid
+            # interleaved in the range stays visible
+            continue
+        for b2, records in kw.decode_record_batches(batch):
+            for rec in records:
+                off = b2 + rec.offset_delta
+                if start <= off < end:
+                    out.append((off, rec))
+    return out, nxt
 
 
 class FetchSession:
@@ -533,50 +541,8 @@ class FetchSession:
             if not rs:
                 continue
             old_pos = self.positions.get((topic, idx), 0)
-            # same READ_COMMITTED fold as KafkaConn.fetch: control
-            # batches (txn markers) never surface; under iso=1 the scan
-            # stops at the LSO and transactional batches inside the
-            # response's aborted ranges are dropped (an ABORT marker
-            # consumes its pid's oldest pending range)
-            end = lso if self.iso else hw
-            abort_pending: dict[int, list[int]] = {}
-            for pid_a, first in sorted(aborted or (),
-                                       key=lambda x: x[1]):
-                abort_pending.setdefault(pid_a, []).append(first)
-            recs: list[tuple[int, kw.Record]] = []
-            new_pos = old_pos
-            pos = 0
-            while pos + 12 <= len(rs):
-                blen = struct.unpack_from(">i", rs, pos + 8)[0]
-                bend = pos + 12 + blen
-                if blen < 0 or bend > len(rs):
-                    break  # partial tail
-                batch = rs[pos:bend]
-                pos = bend
-                base = struct.unpack_from(">q", batch, 0)[0]
-                if base >= end:
-                    continue
-                attrs = kw.batch_attributes(batch)
-                pid = kw.batch_producer_meta(batch)[0]
-                n = struct.unpack_from(">i", batch, 57)[0]
-                new_pos = max(new_pos, base + n)
-                if attrs & kw.ATTR_CONTROL:
-                    if self.iso and abort_pending.get(pid):
-                        [(_, recs0)] = kw.decode_record_batches(batch)
-                        if (kw.dec_control_record(recs0[0])
-                                == kw.CONTROL_ABORT
-                                and base > abort_pending[pid][0]):
-                            abort_pending[pid].pop(0)
-                    continue
-                if (self.iso and (attrs & kw.ATTR_TRANSACTIONAL)
-                        and abort_pending.get(pid)
-                        and base >= abort_pending[pid][0]):
-                    continue  # aborted transaction data
-                for b2, records in kw.decode_record_batches(batch):
-                    for rec in records:
-                        off = b2 + rec.offset_delta
-                        if old_pos <= off < end:
-                            recs.append((off, rec))
+            recs, new_pos = _fold_record_set(
+                rs, old_pos, lso if self.iso else hw, aborted, self.iso)
             if recs:
                 out[(topic, idx)] = recs
             if new_pos != old_pos:

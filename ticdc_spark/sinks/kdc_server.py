@@ -19,20 +19,20 @@ from __future__ import annotations
 
 import socketserver
 import struct
-import threading
 
 from ticdc_spark.codec import krb5 as k
 from ticdc_spark.codec import krb5crypto as kc
+from ticdc_spark.endpoint import Endpoint, recv_exact
 
 
-class MiniKDC:
+class MiniKDC(Endpoint):
     def __init__(self, realm: str = "TEST.REALM",
                  principals: dict[str, str] | None = None,
                  host: str = "127.0.0.1"):
+        super().__init__(host)
         self.realm = realm
         self.principals = dict(principals or {})
         self.principals.setdefault(f"krbtgt/{realm}", "kdc-master-secret")
-        self.host = host
         kdc = self
 
         class Handler(socketserver.BaseRequestHandler):
@@ -40,11 +40,11 @@ class MiniKDC:
                 sock = self.request
                 try:
                     while True:
-                        hdr = _recv_exact(sock, 4)
+                        hdr = recv_exact(sock, 4)
                         if hdr is None:
                             return
                         (size,) = struct.unpack(">I", hdr)
-                        req = _recv_exact(sock, size)
+                        req = recv_exact(sock, size)
                         if req is None:
                             return
                         resp = kdc._dispatch(req)
@@ -52,35 +52,11 @@ class MiniKDC:
                 except (ConnectionResetError, BrokenPipeError):
                     return
 
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-            # executor tasks connect in one burst per wave; the stdlib
-            # backlog of 5 drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = Server((host, 0), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True)
+        self._listen(Handler)
 
     @property
     def address(self) -> str:
         return f"{self.host}:{self.port}"
-
-    def start(self) -> "MiniKDC":
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
 
     # -- keys
 
@@ -164,16 +140,6 @@ class MiniKDC:
                        rep_part))
 
 
-def _recv_exact(sock, n: int) -> bytes | None:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return bytes(buf)
-
-
 # ------------------------------------------------------------- client side
 
 
@@ -183,11 +149,11 @@ def _kdc_call(kdc_addr: str, req: bytes) -> bytes:
     host, port = kdc_addr.rsplit(":", 1)
     with socket.create_connection((host, int(port)), timeout=30) as sock:
         sock.sendall(struct.pack(">I", len(req)) + req)
-        hdr = _recv_exact(sock, 4)
+        hdr = recv_exact(sock, 4)
         if hdr is None:
             raise IOError("KDC closed connection")
         (size,) = struct.unpack(">I", hdr)
-        resp = _recv_exact(sock, size)
+        resp = recv_exact(sock, size)
         if resp is None:
             raise IOError("KDC closed mid-response")
         return resp

@@ -30,6 +30,7 @@ import sqlite3
 import threading
 
 from ticdc_spark.codec import mysql_wire as mw
+from ticdc_spark.endpoint import Endpoint
 
 _FLOAT_RE = re.compile(r"^-?\d+\.\d+$")
 
@@ -57,7 +58,7 @@ class _BufSock:
             self._buf.clear()
 
 
-class MiniMySQLServer:
+class MiniMySQLServer(Endpoint):
     def __init__(
         self,
         user: str = "root",
@@ -74,24 +75,9 @@ class MiniMySQLServer:
         # mutual_tls=True makes the upgrade demand a client certificate
         # chained to the server's CA (ssl-cert/ssl-key client options);
         # mint one with issue_client_cert().
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._tls_ctx = None
-        self._ca_key = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
+        super().__init__(host, tls, mutual_tls)
         self.user = user
         self.password = password
-        self.host = host
         # default auth plugin, like MySQL 8's default_authentication_plugin.
         # caching_sha2_password keeps only the double-SHA256 digest cache
         # (populated on the first FULL auth, hit by the fast path after);
@@ -131,50 +117,17 @@ class MiniMySQLServer:
 
         class Handler(socketserver.BaseRequestHandler):
             def handle(self):
-                import socket as _s
-
-                self.request.setsockopt(_s.IPPROTO_TCP, _s.TCP_NODELAY, 1)
                 try:
                     srv._serve(self.request)
                 except (ConnectionResetError, BrokenPipeError):
                     return
 
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-            # executor tasks connect in one burst per wave; the stdlib
-            # backlog of 5 drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
+        self._listen(Handler)
 
-        self._server = Server((host, 0), Handler)
-        self.port = self._server.server_address[1]
-        self._accept_thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS upgrade accepts
-        (-> (cert_pem, key_pem), chained to server.ca_pem)."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("server is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name, client=True)
-
-    # -- lifecycle
-
-    def start(self) -> "MiniMySQLServer":
-        self._accept_thread.start()
-        return self
-
-    def stop(self):
-        self._server.shutdown()
-        self._server.server_close()
-        self._db.close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
+    def stop(self) -> None:
+        if self._thread is not None:
+            super().stop()
+            self._db.close()
 
     # -- auth
 
@@ -280,11 +233,8 @@ class MiniMySQLServer:
                         3159, "SSL is required but the server doesn't support it",
                         "HY000"))
                     return
-                import ssl as _ssl
-
-                try:
-                    sock = self._tls_ctx.wrap_socket(sock, server_side=True)
-                except (_ssl.SSLError, OSError):
+                sock = self._accept_tls(sock)
+                if sock is None:
                     return
                 got = mw.read_packet(sock)
                 if got is None:

@@ -17,10 +17,10 @@ import struct
 import threading
 
 from ticdc_spark.codec import pulsar_wire as pw
-from ticdc_spark.sinks.kafka_broker import _recv_exact
+from ticdc_spark.endpoint import Endpoint, recv_exact
 
 
-class PulsarBroker:
+class PulsarBroker(Endpoint):
     def __init__(self, host: str = "127.0.0.1", token: str | None = None,
                  tls: bool = False, mutual_tls: bool = False,
                  oauth2_jwt_secret: str | None = None,
@@ -31,21 +31,7 @@ class PulsarBroker:
         # tls=True: a pulsar+ssl:// listener with a fresh self-signed cert;
         # mutual_tls=True demands a client certificate chained to the
         # broker's CA (pulsar's tlsRequireTrustedClientCertOnConnect shape)
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._tls_ctx = None
-        self._ca_key = None
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, self._tls_ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                self._tls_ctx = tlsutil.server_context(cert_pem, key_pem)
+        super().__init__(host, tls, mutual_tls)
         # token auth (the reference's `authentication-token` pulsar config,
         # `pkg/sink/pulsar/config.go`): CONNECT must carry
         # auth_method_name="token" + the exact credential
@@ -72,7 +58,6 @@ class PulsarBroker:
         self.require_tls_auth = require_tls_auth
         if require_tls_auth and not mutual_tls:
             raise ValueError("require_tls_auth needs mutual_tls=True")
-        self.host = host
         # topic -> list of (metadata, payload, crc, checked); index ==
         # entryId. crc/checked cached at append so FLOW re-framing per
         # consumer is pure concat (the CRC doesn't cover the command).
@@ -82,60 +67,20 @@ class PulsarBroker:
 
         class Handler(socketserver.BaseRequestHandler):
             def handle(self):
-                import socket as _s
-
-                sock = self.request
-                sock.setsockopt(_s.IPPROTO_TCP, _s.TCP_NODELAY, 1)
-                if broker._tls_ctx is not None:
-                    import ssl as _ssl
-
-                    try:
-                        sock = broker._tls_ctx.wrap_socket(sock, server_side=True)
-                    except (_ssl.SSLError, OSError):
-                        return
+                sock = broker._accept_tls(self.request)
+                if sock is None:
+                    return
                 try:
                     broker._serve(sock)
                 except (ConnectionResetError, BrokenPipeError):
                     return
 
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-            # executor tasks connect in one burst per wave; the stdlib
-            # backlog of 5 drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = Server((host, 0), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def start(self) -> "PulsarBroker":
-        self._thread.start()
-        return self
-
-    def stop(self):
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
+        self._listen(Handler)
 
     @property
     def service_url(self) -> str:
         scheme = "pulsar+ssl" if self.tls else "pulsar"
         return f"{scheme}://{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts
-        (-> (cert_pem, key_pem), chained to broker.ca_pem)."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("broker is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name, client=True)
 
     def topic_size(self, topic: str) -> int:
         with self._lock:
@@ -148,11 +93,11 @@ class PulsarBroker:
         consumers: dict[int, tuple[str, int]] = {}  # consumer_id -> (topic, next_entry)
         connected = False
         while True:
-            hdr = _recv_exact(sock, 4)
+            hdr = recv_exact(sock, 4)
             if hdr is None:
                 return
             (total,) = struct.unpack(">I", hdr)
-            body = _recv_exact(sock, total)
+            body = recv_exact(sock, total)
             if body is None:
                 return
             # chaos hook: kill the connection mid-conversation (arm

@@ -13,7 +13,7 @@ import socket
 import struct
 
 from ticdc_spark.codec import pulsar_wire as pw
-from ticdc_spark.sinks.kafka_broker import _recv_exact
+from ticdc_spark.endpoint import recv_exact
 
 _NEG_ONE = (1 << 64) - 1
 
@@ -101,11 +101,11 @@ class PulsarConn:
     # -- framing
 
     def _read_frame(self) -> tuple[bytes, bytes | None, bytes | None]:
-        hdr = _recv_exact(self.sock, 4)
+        hdr = recv_exact(self.sock, 4)
         if hdr is None:
             raise IOError("broker closed connection")
         (total,) = struct.unpack(">I", hdr)
-        body = _recv_exact(self.sock, total)
+        body = recv_exact(self.sock, total)
         if body is None:
             raise IOError("broker closed mid-frame")
         return pw.parse_frame(body)

@@ -12,7 +12,7 @@ import urllib.parse
 import xml.etree.ElementTree as ET
 
 from ticdc_spark.codec import awssig
-from ticdc_spark.sinks.http_wire import HttpWire
+from ticdc_spark.sinks.http_wire import StoreClient
 
 
 class S3Error(Exception):
@@ -22,47 +22,28 @@ class S3Error(Exception):
         self.code = code
 
 
-class S3Client:
+class S3Client(StoreClient):
     def __init__(self, endpoint: str, access_key: str, secret_key: str,
                  region: str = "us-east-1", amz_date: str = "20260101T000000Z",
                  tls_ca: bytes | None = None,
                  tls_client_cert: tuple[bytes, bytes] | None = None):
-        u = urllib.parse.urlsplit(endpoint)
-        self.host = u.hostname
-        self.port = u.port
+        super().__init__(endpoint, tls_ca, tls_client_cert)
         self.access_key = access_key
         self.secret_key = secret_key
         self.region = region
         # deterministic clock: the mini server doesn't enforce skew; a
         # real deployment stamps wall time here
         self.amz_date = amz_date
-        if u.scheme == "https":
-            from ticdc_spark.codec.tlsutil import client_context
 
-            if tls_ca is None:
-                raise ValueError("https endpoint needs tls_ca (pinned CA)")
-            cert, key = tls_client_cert or (None, None)
-            self.conn = HttpWire(self.host, self.port,
-                                 context=client_context(tls_ca, cert, key))
-        else:
-            self.conn = HttpWire(self.host, self.port)
-
-    def close(self):
-        self.conn.close()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.close()
-
-    def _headers_for(self, method: str, path: str, query: str,
-                     body: bytes) -> dict:
+    def _req(self, method: str, path: str, query: str = "",
+             body: bytes = b"") -> tuple:
+        """A SigV4-signed (method, url, body, headers)."""
         host_hdr = f"{self.host}:{self.port}"
         auth, payload_hash = awssig.sign(
             method, path, query, {"host": host_hdr}, body,
             self.access_key, self.secret_key, self.amz_date, self.region)
-        return {
+        url = path + (f"?{query}" if query else "")
+        return method, url, body, {
             "Host": host_hdr,
             "x-amz-date": self.amz_date,
             "x-amz-content-sha256": payload_hash,
@@ -70,8 +51,17 @@ class S3Client:
             "Content-Length": str(len(body)),
         }
 
+    def _get_req(self, bucket: str, key: str) -> tuple:
+        return self._req("GET", f"/{bucket}/{key}")
+
+    def _put_req(self, bucket: str, key: str, body: bytes) -> tuple:
+        return self._req("PUT", f"/{bucket}/{key}", body=body)
+
     @staticmethod
-    def _raise_s3(status: int, data: bytes):
+    def _check(op: str, key: str, resp) -> None:
+        if resp.status < 400:
+            return
+        data = resp.read()
         code, msg = "Unknown", data.decode("utf-8", "replace")
         try:
             root = ET.fromstring(data)
@@ -79,70 +69,15 @@ class S3Client:
             msg = root.findtext("Message", msg)
         except ET.ParseError:
             pass
-        raise S3Error(status, code, msg)
+        raise S3Error(resp.status, code, msg)
 
     def _request(self, method: str, path: str, query: str = "",
                  body: bytes = b"") -> tuple[int, dict, bytes]:
-        headers = self._headers_for(method, path, query, body)
-        url = path + (f"?{query}" if query else "")
-        self.conn.request(method, url, body=body, headers=headers)
-        resp = self.conn.getresponse()
-        data = resp.read()
-        if resp.status >= 400:
-            self._raise_s3(resp.status, data)
-        return resp.status, dict(resp.getheaders()), data
-
-    # -- pipelined batch ops (http_wire.pipeline): one round trip per
-    # in-flight window instead of one per object — removes the
-    # request/response convoy against the single-GIL test endpoint
-
-    def get_objects(self, bucket: str, keys: list,
-                    max_in_flight: int = 16) -> list:
-        """Pipelined GETs -> bodies in ``keys`` order."""
-        out: list = []
-        for i in range(0, len(keys), max_in_flight):
-            chunk = keys[i:i + max_in_flight]
-            reqs = [("GET", f"/{bucket}/{k}", b"",
-                     self._headers_for("GET", f"/{bucket}/{k}", "", b""))
-                    for k in chunk]
-            for resp in self.conn.pipeline(reqs):
-                data = resp.read()
-                if resp.status >= 400:
-                    self._raise_s3(resp.status, data)
-                out.append(data)
-        return out
-
-    def put_objects(self, bucket: str, items: list,
-                    max_in_flight: int = 16,
-                    max_bytes: int = 4 * 1024 * 1024) -> None:
-        """Pipelined single-shot PUTs for ``[(key, body)]``; the window
-        is bounded by count AND bytes so huge objects don't buffer."""
-        i = 0
-        while i < len(items):
-            reqs, j, nbytes = [], i, 0
-            while (j < len(items) and len(reqs) < max_in_flight
-                   and (not reqs or nbytes < max_bytes)):
-                k, b = items[j]
-                path = f"/{bucket}/{k}"
-                reqs.append(("PUT", path, b,
-                             self._headers_for("PUT", path, "", b)))
-                nbytes += len(b)
-                j += 1
-            for resp in self.conn.pipeline(reqs):
-                data = resp.read()
-                if resp.status >= 400:
-                    self._raise_s3(resp.status, data)
-            i = j
+        resp = self._send(self._req(method, path, query, body))
+        self._check(method, path, resp)
+        return resp.status, dict(resp.getheaders()), resp.read()
 
     # -- object ops
-
-    def put_object(self, bucket: str, key: str, body: bytes) -> str:
-        _, headers, _ = self._request("PUT", f"/{bucket}/{key}", body=body)
-        return headers.get("ETag", "")
-
-    def get_object(self, bucket: str, key: str) -> bytes:
-        _, _, data = self._request("GET", f"/{bucket}/{key}")
-        return data
 
     def head_object(self, bucket: str, key: str) -> int:
         _, headers, _ = self._request("HEAD", f"/{bucket}/{key}")
@@ -201,6 +136,9 @@ class S3Client:
                                upload_id: str) -> None:
         q = urllib.parse.urlencode({"uploadId": upload_id})
         self._request("DELETE", f"/{bucket}/{key}", query=q)
+
+    # a large upload's resume handle (StoreClient) is its upload id
+    open_large = create_multipart_upload
 
     def put_object_large(self, bucket: str, key: str, body: bytes,
                          part_size: int = 8 * 1024 * 1024,

@@ -144,22 +144,16 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
         max_retry = 5  # connector retry budget (kafka/pulsar parity)
 
         def upload(key: str, data: bytes, retry: int = max_retry) -> None:
-            upload_id = None  # survives reconnects: multipart RESUMES
+            handle = None  # survives reconnects: a large upload RESUMES
             for attempt in range(retry + 1):
                 try:
                     client = _pooled_client(endpoint, access_key,
                                             secret_key, scheme)
                     if len(data) > multipart_threshold:
-                        if scheme == "s3":
-                            if upload_id is None:
-                                upload_id = client.create_multipart_upload(
-                                    BUCKET, key)
-                            client.put_object_large(
-                                BUCKET, key, data, part_size=part_size,
-                                upload_id=upload_id)
-                        else:
-                            client.put_object_large(
-                                BUCKET, key, data, part_size=part_size)
+                        if handle is None:
+                            handle = client.open_large(BUCKET, key)
+                        client.put_object_large(BUCKET, key, data,
+                                                part_size, handle)
                     else:
                         client.put_object(BUCKET, key, data)
                     return

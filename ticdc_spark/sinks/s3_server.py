@@ -22,28 +22,29 @@ import base64
 import hashlib
 import socket
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlsplit
+from xml.sax.saxutils import escape
 
 from ticdc_spark.codec import awssig
+from ticdc_spark.endpoint import HttpEndpoint, HttpHandler
 
 _XMLNS = "http://s3.amazonaws.com/doc/2006-03-01/"
 
 
-class MiniS3Server:
+def _bucket_key(bucket: str, key: str) -> str:
+    return f"<Bucket>{escape(bucket)}</Bucket><Key>{escape(key)}</Key>"
+
+
+class MiniS3Server(HttpEndpoint):
     def __init__(self, access_key: str = "AKIDTEST", secret_key: str = "s3cr3t",
                  host: str = "127.0.0.1", tls: bool = False,
                  mutual_tls: bool = False):
         # tls=True: an https:// endpoint with a fresh self-signed cert;
         # mutual_tls=True demands a client certificate chained to the
         # server's CA (mint one with issue_client_cert())
-        self.tls = tls
-        self.mutual_tls = mutual_tls
-        self.ca_pem = None
-        self._ca_key = None
+        super().__init__(host, tls, mutual_tls)
         self.access_key = access_key
         self.secret_key = secret_key
-        self.host = host
         self.buckets: dict[str, dict[str, bytes]] = {}
         # open multipart uploads: upload_id -> {bucket, key, parts{n: bytes}}
         self.uploads: dict[str, dict] = {}
@@ -51,15 +52,8 @@ class MiniS3Server:
         self._lock = threading.Lock()
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
+        class Handler(HttpHandler):
             protocol_version = "HTTP/1.1"
-            # one response can flush in 2 TCP segments (headers,
-            # body); with Nagle on, the second segment waits for the
-            # client's delayed ACK — a flat ~40ms per request.
-            disable_nagle_algorithm = True
-
-            def log_message(self, *a):  # quiet
-                pass
 
             def _xml(self, code: int, body: str):
                 data = ('<?xml version="1.0" encoding="UTF-8"?>\n' + body).encode()
@@ -71,7 +65,7 @@ class MiniS3Server:
 
             def _error(self, code: int, s3_code: str, message: str):
                 self._xml(code, f"<Error><Code>{s3_code}</Code>"
-                                f"<Message>{message}</Message></Error>")
+                                f"<Message>{escape(message)}</Message></Error>")
 
             def _authed(self, body: bytes) -> bool:
                 auth = self.headers.get("Authorization", "")
@@ -181,7 +175,7 @@ class MiniS3Server:
                                             "parts": {}}
                     return self._xml(200, (
                         f'<InitiateMultipartUploadResult xmlns="{_XMLNS}">'
-                        f"<Bucket>{bucket}</Bucket><Key>{key}</Key>"
+                        f"{_bucket_key(bucket, key)}"
                         f"<UploadId>{uid}</UploadId>"
                         "</InitiateMultipartUploadResult>"))
                 if "uploadId" in q:
@@ -233,7 +227,7 @@ class MiniS3Server:
                            + f"-{len(listed)}")
                 self._xml(200, (
                     f'<CompleteMultipartUploadResult xmlns="{_XMLNS}">'
-                    f"<Bucket>{bucket}</Bucket><Key>{key}</Key>"
+                    f"{_bucket_key(bucket, key)}"
                     f"<ETag>&quot;{mp_etag}&quot;</ETag>"
                     "</CompleteMultipartUploadResult>"))
 
@@ -253,7 +247,7 @@ class MiniS3Server:
                             for pn, b in sorted(up["parts"].items()))
                     return self._xml(200, (
                         f'<ListPartsResult xmlns="{_XMLNS}">'
-                        f"<Bucket>{bucket}</Bucket><Key>{key}</Key>"
+                        f"{_bucket_key(bucket, key)}"
                         f"<UploadId>{uid}</UploadId>{parts}"
                         "</ListPartsResult>"))
                 with srv._lock:
@@ -314,7 +308,7 @@ class MiniS3Server:
                               and k > start_after)
                 page, rest = keys[:max_keys], keys[max_keys:]
                 contents = "".join(
-                    f"<Contents><Key>{k}</Key><Size>{len(objs[k])}</Size>"
+                    f"<Contents><Key>{escape(k)}</Key><Size>{len(objs[k])}</Size>"
                     f"<ETag>&quot;{hashlib.md5(objs[k]).hexdigest()}&quot;</ETag>"
                     "<LastModified>1970-01-01T00:00:00.000Z</LastModified>"
                     "</Contents>"
@@ -325,56 +319,9 @@ class MiniS3Server:
                     next_tok = f"<NextContinuationToken>{nt}</NextContinuationToken>"
                 self._xml(200, (
                     f'<ListBucketResult xmlns="{_XMLNS}">'
-                    f"<Name>{bucket}</Name><Prefix>{prefix}</Prefix>"
+                    f"<Name>{escape(bucket)}</Name><Prefix>{escape(prefix)}</Prefix>"
                     f"<KeyCount>{len(page)}</KeyCount><MaxKeys>{max_keys}</MaxKeys>"
                     f"<IsTruncated>{'true' if rest else 'false'}</IsTruncated>"
                     f"{next_tok}{contents}</ListBucketResult>"))
 
-        class _Srv(ThreadingHTTPServer):
-            # burst connects from executor tasks; stdlib backlog of 5
-            # drops SYNs -> 1 s retransmit per connect
-            request_queue_size = 128
-
-        self._server = _Srv((host, 0), Handler)
-        if tls:
-            from ticdc_spark.codec import tlsutil
-
-            if mutual_tls:
-                self.ca_pem, self._ca_key, ctx = (
-                    tlsutil.mutual_server_material(host))
-            else:
-                cert_pem, key_pem = tlsutil.make_self_signed(host)
-                self.ca_pem = cert_pem
-                ctx = tlsutil.server_context(cert_pem, key_pem)
-            self._server.socket = ctx.wrap_socket(
-                self._server.socket, server_side=True)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def start(self) -> "MiniS3Server":
-        self._thread.start()
-        return self
-
-    def stop(self):
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self):
-        return self.start()
-
-    def __exit__(self, *exc):
-        self.stop()
-
-    @property
-    def endpoint(self) -> str:
-        scheme = "https" if self.tls else "http"
-        return f"{scheme}://{self.host}:{self.port}"
-
-    def issue_client_cert(self, name: str = "client") -> tuple[bytes, bytes]:
-        """Mint a client certificate the mTLS listener accepts
-        (-> (cert_pem, key_pem), chained to server.ca_pem)."""
-        from ticdc_spark.codec import tlsutil
-
-        if self._ca_key is None:
-            raise ValueError("server is not in mutual_tls mode")
-        return tlsutil.issue_cert(self.ca_pem, self._ca_key, name, client=True)
+        self._listen(Handler)
