@@ -57,3 +57,15 @@ def test_stop_before_start_and_twice_after(name, tmp_path):
     _within(ep.stop)  # already stopped: a no-op
     with socket.socket() as s:
         s.bind(("127.0.0.1", port))
+
+
+@pytest.mark.parametrize("name", sorted(_ENDPOINTS))
+def test_start_then_stop_is_prompt(name, tmp_path):
+    """stop() does not wait out a long serve-loop poll interval."""
+    import time
+
+    ep = _ENDPOINTS[name](tmp_path)
+    t0 = time.perf_counter()
+    ep.start()
+    ep.stop()
+    assert time.perf_counter() - t0 < 0.25

@@ -69,17 +69,21 @@ _STORES = {
 
 @pytest.mark.parametrize("scheme", sorted(_STORES))
 def test_xml_special_key_put_list_get(scheme):
-    """A key holding XML-special characters survives put, list and get:
-    the XML listings escape it and the clients unescape it."""
+    """Keys holding XML- or URL-special characters survive put, list and
+    get: the clients percent-encode the path, the XML listings escape the
+    key and the clients unescape it."""
     server, client = _STORES[scheme]
-    key = "db/t&x<1>/a.csv"
+    keys = ["db/t&x<1>/a.csv", "db/a b.csv", "db/a%41.csv", "db/q?x.csv"]
     with server() as srv, client(srv) as c:
-        c.put_object("b", key, b"1,2\n")
-        c.put_objects("b", [("db/plain.csv", b"3\n")])
+        for i, key in enumerate(keys):
+            c.put_object("b", key, b"%d\n" % i)
+        c.put_objects("b", [("db/plain.csv", b"p\n")])
         assert [k for k, _ in c.list_objects("b")] == sorted(
-            [key, "db/plain.csv"])
-        assert c.get_object("b", key) == b"1,2\n"
-        assert c.get_objects("b", [key]) == [b"1,2\n"]
+            [*keys, "db/plain.csv"])
+        for i, key in enumerate(keys):
+            assert c.get_object("b", key) == b"%d\n" % i
+        assert c.get_objects("b", keys) == [b"%d\n" % i
+                                            for i in range(len(keys))]
         if scheme == "azblob":
             # the client reads the listing by regex: check that the
             # server's XML itself is well formed and carries the key
@@ -88,7 +92,7 @@ def test_xml_special_key_put_list_get(scheme):
             _, xml = c._request("GET", "/b", {"restype": "container",
                                               "comp": "list"})
             assert [n.text for n in ET.fromstring(xml).iter("Name")] == (
-                sorted([key, "db/plain.csv"]))
+                sorted([*keys, "db/plain.csv"]))
 
 
 def test_http_wire_header_lookup_and_head():

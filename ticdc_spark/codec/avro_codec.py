@@ -17,7 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType, StringType, StructType
 
-from ticdc_spark.functions.render import json_escape
+from ticdc_spark.functions.render import (json_case, json_image, json_object,
+                                          json_str)
 
 _AVRO_BRANCH = {"long": "long", "bigint": "long", "double": "double", "string": "string"}
 
@@ -25,44 +26,24 @@ _AVRO_BRANCH = {"long": "long", "bigint": "long", "double": "double", "string": 
 def _union_value(col: Column, dtype) -> Column:
     if isinstance(dtype, (DoubleType, FloatType)):
         # Avro JSON prints doubles; pin %.2f for cross-engine determinism.
-        rendered = F.when(col.isNotNull(), F.format_string("%.2f", col))
+        rendered = F.format_string("%.2f", col)
     elif isinstance(dtype, StringType):
-        rendered = F.when(
-            col.isNotNull(), F.concat(F.lit('"'), json_escape(col), F.lit('"'))
-        )
+        rendered = json_str(col)
     else:
         rendered = col.cast("string")
     branch = _AVRO_BRANCH[dtype.simpleString()]
-    return F.when(
-        col.isNotNull(),
-        F.concat(F.lit('{"' + branch + '":'), rendered, F.lit("}")),
-    ).otherwise(F.lit("null"))
-
-
-def _record_json(image: str, schema: StructType) -> Column:
-    parts: list[Column] = [F.lit("{")]
-    for i, f in enumerate(schema.fields):
-        if i:
-            parts.append(F.lit(","))
-        parts.append(F.lit(f'"{f.name}":'))
-        parts.append(_union_value(F.col(f"{image}.{f.name}"), f.dataType))
-    parts.append(F.lit("}"))
-    return F.when(F.col(image).isNotNull(), F.concat(*parts)).otherwise(F.lit("null"))
+    return F.when(col.isNotNull(), json_object([(branch, rendered)])) \
+        .otherwise(F.lit("null"))
 
 
 def encode_avro_json(cl: DataFrame) -> DataFrame:
     """Avro JSON-encoded value: the row record + op/commitTs metadata
     fields (mirroring the reference's tidbOp/commitTs extension fields)."""
     schema: StructType = cl.schema["after"].dataType
-    value = F.concat(
-        F.lit('{"op":"'),
-        F.col("op"),
-        F.lit('","commitTs":'),
-        F.col("commit_ts").cast("string"),
-        F.lit(',"before":'),
-        _record_json("before", schema),
-        F.lit(',"after":'),
-        _record_json("after", schema),
-        F.lit("}"),
-    )
+    value = json_object([
+        ("op", json_case(F.col("op"), {"I": "I", "U": "U"}, "D")),
+        ("commitTs", F.col("commit_ts").cast("string")),
+        ("before", json_image(F.col("before"), schema, _union_value)),
+        ("after", json_image(F.col("after"), schema, _union_value)),
+    ])
     return cl.withColumn("value", value)

@@ -30,6 +30,12 @@ def _uri_encode(s: str, encode_slash: bool) -> str:
     return urllib.parse.quote(s, safe=safe)
 
 
+def canonical_uri(path: str) -> str:
+    """The request path as SigV4 canonicalizes it — and as a client must
+    send it: each segment percent-encoded once, slashes kept."""
+    return _uri_encode(path, False) or "/"
+
+
 def canonical_request(
     method: str, path: str, query: str, headers: dict[str, str],
     signed_headers: list[str], payload_hash: str,
@@ -44,7 +50,7 @@ def canonical_request(
     canon_h = "".join(f"{h}:{lower[h]}\n" for h in signed_headers)
     return "\n".join([
         method.upper(),
-        _uri_encode(path, False) or "/",
+        canonical_uri(path),
         canon_q,
         canon_h,
         ";".join(signed_headers),

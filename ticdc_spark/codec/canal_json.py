@@ -5,10 +5,11 @@ Reference message shape: `pkg/sink/codec/canal/canal_json_message.go:40-61`
 ts, sql, sqlType, mysqlType, data, old``; values rendered as JSON strings
 per the Java type map (`pkg/sink/codec/common/java.go:70-146`).
 
-Spark-first: the message is ONE string column assembled by ``concat`` of
-literals and canonically-rendered fields — fixed field order, fixed float
-format — so the bytes are deterministic (reproducible by the DuckDB
-oracle) and the whole encode stays inside whole-stage codegen. ``ts``
+Spark-first: the message is ONE string column written by the shared JSON
+writer (``render.json_object``/``json_str``) over canonically-rendered
+fields — fixed field order, fixed float format, every string escaped —
+so the bytes are deterministic (reproducible by the DuckDB oracle) and
+the whole encode stays inside whole-stage codegen. ``ts``
 (processing time) is emitted as 0 for determinism; ``es`` is the commit
 ts in milliseconds as in the reference.
 
@@ -17,13 +18,12 @@ Java SQL types (java.go): BIGINT → -5, DOUBLE → 8.
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ticdc_spark.functions.render import json_string_or_null
+from ticdc_spark.functions.render import (json_case, json_dumps, json_image,
+                                          json_object, json_str)
 
 # java.go:70-146: BIGINT=-5, DOUBLE=8, VARCHAR=12, DATE=91, TIMESTAMP=93
 _JAVA_TYPE = {"long": -5, "bigint": -5, "double": 8, "string": 12,
@@ -52,37 +52,24 @@ def content_compatible_overrides(
     }
 
 
-def _image_json(image: str, schema: StructType) -> Column:
-    """``[{"col": "v", ...}]`` — single-row array, canal data/old shape."""
-    parts: list[Column] = [F.lit("[{")]
-    for i, f in enumerate(schema.fields):
-        if i:
-            parts.append(F.lit(","))
-        parts.append(F.lit(f'"{f.name}":'))
-        parts.append(json_string_or_null(F.col(f"{image}.{f.name}"), f.dataType))
-    parts.append(F.lit("}]"))
-    return F.when(F.col(image).isNotNull(), F.concat(*parts)).otherwise(F.lit("null"))
-
-
 def _type_maps(
     schema: StructType,
     overrides: dict[str, tuple[int, str]] | None = None,
-) -> tuple[str, str]:
+) -> tuple[dict, dict]:
     """Per-column (JavaSQLType, mysqlType) maps. ``overrides`` carries
     columns whose MySQL type is not derivable from the Spark dtype —
     ENUM (4/"enum"), SET (-7/"set"), BIT (-7/"bit"), VECTOR
     (12/"vector") per `java.go:68-151` + `helper.go:38-46` TypeToStr."""
     ov = overrides or {}
+    sql_t, mysql_t = {}, {}
+    for f in schema.fields:
+        t = f.dataType.simpleString()
+        sql_t[f.name], mysql_t[f.name] = (
+            ov[f.name] if f.name in ov else (_JAVA_TYPE[t], _MYSQL_TYPE[t]))
+    return sql_t, mysql_t
 
-    def java(f):
-        return ov[f.name][0] if f.name in ov else _JAVA_TYPE[f.dataType.simpleString()]
 
-    def mysql(f):
-        return ov[f.name][1] if f.name in ov else _MYSQL_TYPE[f.dataType.simpleString()]
-
-    sql_t = ",".join(f'"{f.name}":{java(f)}' for f in schema.fields)
-    mysql_t = ",".join(f'"{f.name}":"{mysql(f)}"' for f in schema.fields)
-    return "{" + sql_t + "}", "{" + mysql_t + "}"
+_CANAL_DML_TYPE = {"I": "INSERT", "U": "UPDATE"}
 
 
 _SIGN_MASK = -(1 << 63)  # int64 sign bit, the memcomparable flip
@@ -133,25 +120,24 @@ def encode_canal_json(
     """
     schema: StructType = cl.schema["after"].dataType
     sql_types, mysql_types = _type_maps(schema, type_overrides)
-    canal_type = (
-        F.when(F.col("op") == "I", F.lit("INSERT"))
-        .when(F.col("op") == "U", F.lit("UPDATE"))
-        .otherwise(F.lit("DELETE"))
-    )
-    pk_json = "[" + ",".join(f'"{p}"' for p in pk_names) + "]"
+    op = F.col("op")
+    before = json_image(F.col("before"), schema, array=True)
     # DELETE carries the before image in `data` (canal semantics); UPDATE
     # carries after in `data` and before in `old`; INSERT has old = null.
-    data_json = (
-        F.when(F.col("op") == "D", _image_json("before", schema))
-        .otherwise(_image_json("after", schema))
-    )
-    old_json = F.when(F.col("op") == "U", _image_json("before", schema)).otherwise(
-        F.lit("null")
-    )
-    ext: list = []
+    data = F.when(op == "D", before).otherwise(
+        json_image(F.col("after"), schema, array=True))
+    old = F.when(op == "U", before).otherwise(F.lit("null"))
+    pairs = [
+        ("id", 0), ("database", json_str(F.col("schema_name"))),
+        ("table", json_str(F.col("table_name"))),
+        ("pkNames", list(pk_names)), ("isDdl", False),
+        ("type", json_case(op, _CANAL_DML_TYPE, "DELETE")),
+        ("es", F.expr("commit_ts div 1000").cast("string")), ("ts", 0),
+        ("sql", ""), ("sqlType", sql_types), ("mysqlType", mysql_types),
+        ("data", data), ("old", old),
+    ]
     if tidb_extension:
-        ext = [F.lit(',"_tidb":{"commitTs":'),
-               F.col("commit_ts").cast("string")]
+        ext = [("commitTs", F.col("commit_ts").cast("string"))]
         # Only when both enable-tidb-extension AND output-row-key are
         # true is the rowkey output (`canal_json_encoder.go:340-345`).
         if output_row_key:
@@ -160,29 +146,12 @@ def encode_canal_json(
                     "output-row-key needs a table_id column on the frame "
                     "to build the TiKV record key")
             pk = pk_names[0]
-            handle = F.when(F.col("op") == "D", F.col(f"before.{pk}")) \
-                .otherwise(F.col(f"after.{pk}"))
-            ext += [F.lit(',"rowkey":"'),
-                    F.base64(F.unhex(_record_key_hex(
-                        F.col("table_id"), handle))),
-                    F.lit('"')]
-        ext.append(F.lit("}"))
-    value = F.concat(
-        F.lit('{"id":0,"database":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","pkNames":' + pk_json + ',"isDdl":false,"type":"'),
-        canal_type,
-        F.lit('","es":'),
-        F.expr("commit_ts div 1000").cast("string"),
-        F.lit(',"ts":0,"sql":"","sqlType":' + sql_types + ',"mysqlType":' + mysql_types + ',"data":'),
-        data_json,
-        F.lit(',"old":'),
-        old_json,
-        *ext,
-        F.lit("}"),
-    )
+            handle = F.when(op == "D", F.col("before").getField(pk)) \
+                .otherwise(F.col("after").getField(pk))
+            ext.append(("rowkey", json_str(F.base64(F.unhex(
+                _record_key_hex(F.col("table_id"), handle))))))
+        pairs.append(("_tidb", json_object(ext)))
+    value = json_object(pairs)
     return cl.withColumn("value", value)
 
 
@@ -204,33 +173,26 @@ CANAL_DDL_EVENT_TYPE = {
 }
 
 
-def _json_message(fields: dict) -> bytes:
-    # escapes what the SQL text needs; text that needs no escape keeps
-    # the bytes of the concatenated frames below
-    return json.dumps(fields, separators=(",", ":"),
-                      ensure_ascii=False).encode()
-
-
 def canal_ddl_message(ddl: dict) -> bytes:
     """The DDL message a live changefeed broadcasts at a DDL barrier:
     ``encode_canal_json_ddl``'s frame for one DDL event dict
     (schema_name, table_name, commit_ts, query, ddl_type)."""
-    return _json_message({
+    return json_dumps({
         "id": 0, "database": ddl.get("schema_name", ""),
         "table": ddl.get("table_name", ""), "pkNames": None, "isDdl": True,
         "type": CANAL_DDL_EVENT_TYPE.get(ddl.get("ddl_type", ""), "QUERY"),
         "es": ddl["commit_ts"] // 1000, "ts": 0, "sql": ddl.get("query", ""),
-        "sqlType": None, "mysqlType": None, "data": None, "old": None})
+        "sqlType": None, "mysqlType": None, "data": None, "old": None}).encode()
 
 
 def canal_watermark_message(resolved_ts: int) -> bytes:
     """The TIDB_WATERMARK message a live changefeed broadcasts after each
     epoch: ``canal_checkpoints``' frame for one resolved ts."""
-    return _json_message({
+    return json_dumps({
         "id": 0, "database": "", "table": "", "pkNames": None,
         "isDdl": False, "type": "TIDB_WATERMARK", "es": resolved_ts // 1000,
         "ts": 0, "sql": "", "sqlType": None, "mysqlType": None, "data": None,
-        "old": None, "_tidb": {"watermarkTs": resolved_ts}})
+        "old": None, "_tidb": {"watermarkTs": resolved_ts}}).encode()
 
 
 def encode_canal_json_ddl(ddl: DataFrame) -> DataFrame:
@@ -239,32 +201,16 @@ def encode_canal_json_ddl(ddl: DataFrame) -> DataFrame:
     ``isDdl:true``, ``sql`` carries the query, and pkNames/sqlType/
     mysqlType/data/old are null. Input frame carries
     (schema_name, table_name, commit_ts, query, ddl_type)."""
-    etype = F.lit("QUERY")
-    for label, name in CANAL_DDL_EVENT_TYPE.items():
-        etype = F.when(F.col("ddl_type") == label, F.lit(name)).otherwise(etype)
-    value = F.concat(
-        F.lit('{"id":0,"database":"'),
-        _json_text(F.col("schema_name")),
-        F.lit('","table":"'),
-        _json_text(F.col("table_name")),
-        F.lit('","pkNames":null,"isDdl":true,"type":"'),
-        etype,
-        F.lit('","es":'),
-        F.floor(F.col("commit_ts") / 1000).cast("long").cast("string"),
-        F.lit(',"ts":0,"sql":"'),
-        _json_text(F.col("query")),
-        F.lit('","sqlType":null,"mysqlType":null,"data":null,"old":null}'),
-    )
+    value = json_object([
+        ("id", 0), ("database", json_str(F.col("schema_name"))),
+        ("table", json_str(F.col("table_name"))), ("pkNames", None),
+        ("isDdl", True),
+        ("type", json_case(F.col("ddl_type"), CANAL_DDL_EVENT_TYPE, "QUERY")),
+        ("es", F.floor(F.col("commit_ts") / 1000).cast("long").cast("string")),
+        ("ts", 0), ("sql", json_str(F.col("query"))), ("sqlType", None),
+        ("mysqlType", None), ("data", None), ("old", None),
+    ])
     return ddl.withColumn("value", value)
-
-
-def _json_text(col: Column) -> Column:
-    """``col`` as the body of a JSON string, escaped exactly as
-    ``_json_message`` escapes it: backslash and quote, and every control
-    character (short forms, else ``\\u00xx``); non-ASCII stays UTF-8."""
-    for ch in ("\\", '"', *map(chr, range(32))):
-        col = F.replace(col, F.lit(ch), F.lit(json.dumps(ch)[1:-1]))
-    return col
 
 
 def canal_checkpoints(cl: DataFrame, interval_us: int = 3_600_000_000) -> DataFrame:
@@ -284,17 +230,13 @@ def canal_checkpoints(cl: DataFrame, interval_us: int = 3_600_000_000) -> DataFr
         .groupBy("boundary_ts")
         .agg(F.max("commit_ts").alias("resolved_ts"))
     )
-    value = F.concat(
-        F.lit(
-            '{"id":0,"database":"","table":"","pkNames":null,"isDdl":false,'
-            '"type":"TIDB_WATERMARK","es":'
-        ),
-        F.expr("resolved_ts div 1000").cast("string"),
-        F.lit(
-            ',"ts":0,"sql":"","sqlType":null,"mysqlType":null,'
-            '"data":null,"old":null,"_tidb":{"watermarkTs":'
-        ),
-        F.col("resolved_ts").cast("string"),
-        F.lit("}}"),
-    )
+    value = json_object([
+        ("id", 0), ("database", ""), ("table", ""), ("pkNames", None),
+        ("isDdl", False), ("type", "TIDB_WATERMARK"),
+        ("es", F.expr("resolved_ts div 1000").cast("string")), ("ts", 0),
+        ("sql", ""), ("sqlType", None), ("mysqlType", None), ("data", None),
+        ("old", None),
+        ("_tidb", json_object([
+            ("watermarkTs", F.col("resolved_ts").cast("string"))])),
+    ])
     return wm.withColumn("value", value)

@@ -4,36 +4,53 @@ Reference: `pkg/sink/codec/debezium/encoder.go` / `codec.go` — the
 standard Debezium envelope ``{"before":…, "after":…, "source":{…},
 "op":"c|u|d", "ts_ms":…}``; source carries connector/db/table metadata.
 
-Deterministic concat assembly; ``ts_ms`` = commit ts millis (processing
-time fields pinned to 0).
+Messages are written by the shared JSON writer (``render.json_object``/
+``json_str``); ``ts_ms`` = commit ts millis (processing time fields
+pinned to 0).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, FloatType, StringType, StructType
 
-from ticdc_spark.functions.render import json_number, json_string_or_null
-from pyspark.sql.types import DoubleType, FloatType, StringType
+from ticdc_spark.functions.render import (json_case, json_dumps, json_image,
+                                          json_number, json_object, json_str,
+                                          json_string_or_null, json_text)
 
 
-def _image_obj(image: str, schema: StructType) -> Column:
-    parts: list[Column] = [F.lit("{")]
-    for i, f in enumerate(schema.fields):
-        if i:
-            parts.append(F.lit(","))
-        parts.append(F.lit(f'"{f.name}":'))
-        if isinstance(f.dataType, (StringType, DoubleType, FloatType)):
-            # Debezium renders doubles as JSON numbers; we pin the float
-            # format via the canonical renderer for determinism.
-            parts.append(json_string_or_null(F.col(f"{image}.{f.name}"), f.dataType)
-                         if isinstance(f.dataType, StringType)
-                         else json_number(F.round(F.col(f"{image}.{f.name}"), 2)))
-        else:
-            parts.append(json_number(F.col(f"{image}.{f.name}")))
-    parts.append(F.lit("}"))
-    return F.when(F.col(image).isNotNull(), F.concat(*parts)).otherwise(F.lit("null"))
+def _column_value(col: Column, dtype) -> Column:
+    """Strings as JSON strings; doubles as JSON numbers at the canonical
+    2 decimals (determinism); other scalars as JSON numbers."""
+    if isinstance(dtype, StringType):
+        return json_string_or_null(col, dtype)
+    if isinstance(dtype, (DoubleType, FloatType)):
+        return json_number(F.round(col, 2))
+    return json_number(col)
+
+
+def _op() -> Column:
+    return json_case(F.col("op"), {"I": "c", "U": "u"}, "d")
+
+
+def _ms(ts: str) -> Column:
+    return F.expr(f"{ts} div 1000").cast("string")
+
+
+def _connector_source(connector: str) -> Column:
+    """The compact source block: connector, db, table, commit_ts."""
+    return json_object([
+        ("connector", connector), ("db", json_str(F.col("schema_name"))),
+        ("table", json_str(F.col("table_name"))),
+        ("commit_ts", F.col("commit_ts").cast("string"))])
+
+
+def _without_before_on_update(with_before: Column,
+                              without_before: Column) -> Column:
+    """``output-old-value=false`` skips ``before`` for UPDATEs only
+    (`debezium/codec.go:1122-1124`); deletes keep their before image."""
+    return F.when(F.col("op") == "U", without_before).otherwise(with_before)
 
 
 def encode_debezium(cl: DataFrame, connector: str = "ticdc-spark",
@@ -43,38 +60,14 @@ def encode_debezium(cl: DataFrame, connector: str = "ticdc-spark",
     for UPDATEs only (`debezium/codec.go:1122-1124`); deletes keep
     their before image."""
     schema: StructType = cl.schema["after"].dataType
-    dbz_op = (
-        F.when(F.col("op") == "I", F.lit("c"))
-        .when(F.col("op") == "U", F.lit("u"))
-        .otherwise(F.lit("d"))
-    )
-    source = F.concat(
-        F.lit('{"connector":"' + connector + '","db":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","commit_ts":'),
-        F.col("commit_ts").cast("string"),
-        F.lit("}"),
-    )
-    before_seg = F.concat(
-        F.lit('"before":'), _image_obj("before", schema), F.lit(","))
+    rest = [("after", json_image(F.col("after"), schema, _column_value)),
+            ("source", _connector_source(connector)), ("op", _op()),
+            ("ts_ms", _ms("commit_ts"))]
+    value = json_object(
+        [("before", json_image(F.col("before"), schema, _column_value))]
+        + rest)
     if not output_old_value:
-        before_seg = F.when(
-            F.col("op") == "U", F.lit("")).otherwise(before_seg)
-    value = F.concat(
-        F.lit("{"),
-        before_seg,
-        F.lit('"after":'),
-        _image_obj("after", schema),
-        F.lit(',"source":'),
-        source,
-        F.lit(',"op":"'),
-        dbz_op,
-        F.lit('","ts_ms":'),
-        F.expr("commit_ts div 1000").cast("string"),
-        F.lit("}"),
-    )
+        value = _without_before_on_update(value, json_object(rest))
     return cl.withColumn("value", value)
 
 
@@ -97,47 +90,25 @@ def encode_debezium_ddl(ddl: DataFrame, connector: str = "ticdc-spark") -> DataF
     an empty tableChanges array, DROP TABLE a null table descriptor.
     (The per-column ``table`` descriptor is carried by the simple
     protocol's TableSchema / avro registry docs in this engine.)"""
-    change_type = F.lit("ALTER")
-    for label, name in DBZ_DDL_TYPE.items():
-        change_type = F.when(F.col("ddl_type") == label, F.lit(name)).otherwise(
-            change_type
-        )
-    key = F.concat(
-        F.lit('{"payload":{"databaseName":"'),
-        F.col("schema_name"),
-        F.lit('"}}'),
-    )
-    tid = F.concat(F.lit('\\"'), F.col("schema_name"), F.lit('\\".\\"'),
-                   F.col("table_name"), F.lit('\\"'))
+    schema_name = json_str(F.col("schema_name"))
+    key = json_object([("payload", json_object([("databaseName", schema_name)]))])
+    tid = json_str(F.concat(F.lit('"'), F.col("schema_name"), F.lit('"."'),
+                            F.col("table_name"), F.lit('"')))
+    change = json_object([
+        ("type", json_case(F.col("ddl_type"), DBZ_DDL_TYPE, "ALTER")),
+        ("id", tid)])
+    dropped = json_object([("type", "DROP"), ("id", tid), ("table", None)])
     table_changes = (
         F.when(F.col("ddl_type") == "truncate-table", F.lit("[]"))
-        .when(
-            F.col("ddl_type") == "drop-table",
-            F.concat(F.lit('[{"type":"DROP","id":"'), tid,
-                     F.lit('","table":null}]')),
-        )
-        .otherwise(
-            F.concat(F.lit('[{"type":"'), change_type, F.lit('","id":"'), tid,
-                     F.lit('"}]'))
-        )
+        .when(F.col("ddl_type") == "drop-table",
+              F.concat(F.lit("["), dropped, F.lit("]")))
+        .otherwise(F.concat(F.lit("["), change, F.lit("]")))
     )
-    value = F.concat(
-        F.lit('{"payload":{"source":{"connector":"' + connector + '","db":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","commit_ts":'),
-        F.col("commit_ts").cast("string"),
-        F.lit('},"ts_ms":'),
-        F.expr("commit_ts div 1000").cast("string"),
-        F.lit(',"databaseName":"'),
-        F.col("schema_name"),
-        F.lit('","schemaName":null,"ddl":"'),
-        F.col("query"),
-        F.lit('","tableChanges":'),
-        table_changes,
-        F.lit("}}"),
-    )
+    value = json_object([("payload", json_object([
+        ("source", _connector_source(connector)), ("ts_ms", _ms("commit_ts")),
+        ("databaseName", schema_name), ("schemaName", None),
+        ("ddl", json_str(F.col("query"))), ("tableChanges", table_changes),
+    ]))])
     return ddl.withColumn("key", key).withColumn("value", value)
 
 
@@ -153,53 +124,50 @@ def encode_debezium_ddl(ddl: DataFrame, connector: str = "ticdc-spark") -> DataF
 DBZ_VERSION = "2.4.0.Final"
 
 
-def _dbz_field_descriptor(name: str, mysql_type: str, optional: bool) -> str:
+def _dbz_field_descriptor(name: str, mysql_type: str, optional: bool) -> dict:
     """One Kafka Connect field descriptor, key order exactly as the
     reference's switch writes it (`codec.go:163-350`)."""
     t = mysql_type.lower()
-    opt = "true" if optional else "false"
+
+    def desc(kind, logical=None, parameters=None):
+        out = {"type": kind, "optional": optional}
+        if logical:
+            out |= {"name": logical, "version": 1}
+        if parameters:
+            out["parameters"] = parameters
+        out["field"] = name
+        return out
+
     if t in ("tinyint", "smallint", "mediumint", "int", "integer", "year"):
-        return f'{{"type":"int32","optional":{opt},"field":"{name}"}}'
+        return desc("int32")
     if t == "bigint":
-        return f'{{"type":"int64","optional":{opt},"field":"{name}"}}'
+        return desc("int64")
     if t == "float":
-        return f'{{"type":"float","optional":{opt},"field":"{name}"}}'
+        return desc("float")
     if t in ("double", "real"):
-        return f'{{"type":"double","optional":{opt},"field":"{name}"}}'
+        return desc("double")
     if t in ("date",):
-        return (f'{{"type":"int32","optional":{opt},'
-                f'"name":"io.debezium.time.Date","version":1,'
-                f'"field":"{name}"}}')
+        return desc("int32", "io.debezium.time.Date")
     if t.startswith("datetime"):
-        return (f'{{"type":"int64","optional":{opt},'
-                f'"name":"io.debezium.time.Timestamp","version":1,'
-                f'"field":"{name}"}}')
+        return desc("int64", "io.debezium.time.Timestamp")
     if t.startswith("timestamp"):
-        return (f'{{"type":"string","optional":{opt},'
-                f'"name":"io.debezium.time.ZonedTimestamp","version":1,'
-                f'"field":"{name}"}}')
+        return desc("string", "io.debezium.time.ZonedTimestamp")
     if t.startswith("enum("):
-        allowed = t[5:-1].replace("'", "")
-        return (f'{{"type":"string","optional":{opt},'
-                f'"name":"io.debezium.data.Enum","version":1,'
-                f'"parameters":{{"allowed":"{allowed}"}},"field":"{name}"}}')
+        return desc("string", "io.debezium.data.Enum",
+                    {"allowed": t[5:-1].replace("'", "")})
     if t.startswith("set("):
-        allowed = t[4:-1].replace("'", "")
-        return (f'{{"type":"string","optional":{opt},'
-                f'"name":"io.debezium.data.EnumSet","version":1,'
-                f'"parameters":{{"allowed":"{allowed}"}},"field":"{name}"}}')
+        return desc("string", "io.debezium.data.EnumSet",
+                    {"allowed": t[4:-1].replace("'", "")})
     if t.startswith("bit(") and t != "bit(1)":
-        n = t[4:-1]
-        return (f'{{"type":"bytes","optional":{opt},'
-                f'"name":"io.debezium.data.Bits","version":1,'
-                f'"parameters":{{"length":"{n}"}},"field":"{name}"}}')
+        return desc("bytes", "io.debezium.data.Bits", {"length": t[4:-1]})
     if t == "bit(1)":
-        return f'{{"type":"boolean","optional":{opt},"field":"{name}"}}'
+        return desc("boolean")
     # varchar/char/text/blob/json/decimal-as-string/vector
-    return f'{{"type":"string","optional":{opt},"field":"{name}"}}'
+    return desc("string")
 
 
-_DBZ_SOURCE_SCHEMA_FIELDS = (
+_DBZ_SOURCE_SCHEMA = (
+    '{"type":"struct","fields":['
     '{"type":"string","optional":false,"field":"version"},'
     '{"type":"string","optional":false,"field":"connector"},'
     '{"type":"string","optional":false,"field":"name"},'
@@ -219,43 +187,51 @@ _DBZ_SOURCE_SCHEMA_FIELDS = (
     '{"type":"string","optional":true,"field":"query"},'
     '{"type":"int64","optional":false,"field":"commit_ts"},'
     '{"type":"string","optional":false,"field":"cluster_id"}'
+    '],"optional":false,"name":"io.debezium.connector.mysql.Source",'
+    '"field":"source"}'
 )
 
-_DBZ_TXN_SCHEMA = (
+# the envelope's fields after the images: source, op, ts_ms, transaction
+_DBZ_ENVELOPE_TAIL = (
+    _DBZ_SOURCE_SCHEMA
+    + ',{"type":"string","optional":false,"field":"op"},'
+    '{"type":"int64","optional":true,"field":"ts_ms"},'
     '{"type":"struct","fields":['
     '{"type":"string","optional":false,"field":"id"},'
     '{"type":"int64","optional":false,"field":"total_order"},'
     '{"type":"int64","optional":false,"field":"data_collection_order"}],'
     '"optional":true,"name":"event.block","version":1,'
-    '"field":"transaction"}'
+    '"field":"transaction"}]'
 )
 
 
-def debezium_envelope_schema(
-    cluster_id: str, schema_name: str, table_name: str,
-    fields: list[tuple[str, str, bool]],
-) -> str:
-    """The value message's ``schema`` block for one table.
-    ``fields`` = (column, mysql_type, optional)."""
-    cols = ",".join(_dbz_field_descriptor(n, t, o) for n, t, o in fields)
-    topic = f"{cluster_id}.{schema_name}.{table_name}"
-    image = ('{{"type":"struct","optional":true,"name":"{v}",'
-             '"field":"{f}","fields":[{c}]}}')
-    source = ('{"type":"struct","fields":[' + _DBZ_SOURCE_SCHEMA_FIELDS
-              + '],"optional":false,'
-              '"name":"io.debezium.connector.mysql.Source",'
-              '"field":"source"}')
-    parts = [
-        image.format(v=f"{topic}.Value", f="before", c=cols),
-        image.format(v=f"{topic}.Value", f="after", c=cols),
-        source,
-        '{"type":"string","optional":false,"field":"op"}',
-        '{"type":"int64","optional":true,"field":"ts_ms"}',
-        _DBZ_TXN_SCHEMA,
-    ]
-    return ('{"type":"struct","optional":false,"name":"'
-            + topic + '.Envelope","version":1,"fields":['
-            + ",".join(parts) + "]}")
+def _source(cluster_id: str, ts: str, db, table) -> Column:
+    """The MySQL-connector source block, binlog-position fields pinned as
+    the reference pins them for TiDB upstreams (`codec.go:1058-1088`)."""
+    return json_object([
+        ("version", DBZ_VERSION), ("connector", "TiCDC"), ("name", cluster_id),
+        ("ts_ms", _ms(ts)), ("snapshot", "false"), ("db", db),
+        ("table", table), ("server_id", 0), ("gtid", None), ("file", ""),
+        ("pos", 0), ("row", 0), ("thread", 0), ("query", None),
+        ("commit_ts", F.col(ts).cast("string")), ("cluster_id", cluster_id),
+    ])
+
+
+def _mysql_types(schema: StructType,
+                 mysql_types: dict[str, str] | None) -> dict[str, str]:
+    if mysql_types is not None:
+        return mysql_types
+    default = {"bigint": "bigint", "double": "double", "string": "varchar"}
+    return {f.name: default.get(f.dataType.simpleString(), "varchar")
+            for f in schema.fields}
+
+
+def _connect_name(cluster_id: str, suffix: str) -> Column:
+    """``<cluster>.<schema>.<table><suffix>``, the row's Connect name."""
+    return F.concat(
+        F.lit(json_dumps(cluster_id + ".")[:-1]),
+        json_text(F.col("schema_name")), F.lit("."),
+        json_text(F.col("table_name")), F.lit(json_dumps(suffix)[1:]))
 
 
 def encode_debezium_full(
@@ -278,93 +254,49 @@ def encode_debezium_full(
     millis so the output is deterministic and oracle-checkable.
 
     With ``disable_schema=False`` each message carries the Kafka Connect
-    schema envelope — plan-time metadata built once per (schema, table)
-    and attached as a literal, never per-row Python.
+    schema envelope (`writeDebeziumFieldSchema :163`, `writeSourceSchema
+    :889`, envelope assembly `:1131-1220`). Its column descriptors are
+    plan-time text; only the three Connect names depend on the row's
+    (schema_name, table_name), so the plan size is constant in the
+    number of tables — no collect, lookup table or join.
     """
     schema: StructType = cl.schema["after"].dataType
-    if mysql_types is None:
-        _DEFAULT = {"bigint": "bigint", "double": "double", "string": "varchar"}
-        mysql_types = {
-            f.name: _DEFAULT.get(f.dataType.simpleString(), "varchar")
-            for f in schema.fields
-        }
-    dbz_op = (
-        F.when(F.col("op") == "I", F.lit("c"))
-        .when(F.col("op") == "U", F.lit("u"))
-        .otherwise(F.lit("d"))
-    )
-    ms = F.expr("commit_ts div 1000").cast("string")
-    source = F.concat(
-        F.lit('{"version":"' + DBZ_VERSION + '","connector":"TiCDC",'
-              '"name":"' + cluster_id + '","ts_ms":'),
-        ms,
-        F.lit(',"snapshot":"false","db":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","server_id":0,"gtid":null,"file":"","pos":0,"row":0,'
-              '"thread":0,"query":null,"commit_ts":'),
-        F.col("commit_ts").cast("string"),
-        F.lit(',"cluster_id":"' + cluster_id + '"}'),
-    )
-    before = F.when(F.col("op") == "I", F.lit("null")).otherwise(
-        _image_obj("before", schema))
-    after = F.when(F.col("op") == "D", F.lit("null")).otherwise(
-        _image_obj("after", schema))
-    before_seg = F.concat(F.lit(',"before":'), before)
+    mysql_types = _mysql_types(schema, mysql_types)
+    op = F.col("op")
+    head = [("source", _source(cluster_id, "commit_ts",
+                               json_str(F.col("schema_name")),
+                               json_str(F.col("table_name")))),
+            ("ts_ms", _ms("commit_ts")), ("transaction", None),
+            ("op", _op())]
+    after = [("after", F.when(op == "D", F.lit("null")).otherwise(
+        json_image(F.col("after"), schema, _column_value)))]
+    before = [("before", F.when(op == "I", F.lit("null")).otherwise(
+        json_image(F.col("before"), schema, _column_value)))]
+    payload = json_object(head + before + after)
     if not output_old_value:
-        # DebeziumOutputOldValue=false skips before for UPDATEs only
-        # (`debezium/codec.go:1122-1124`)
-        before_seg = F.when(
-            F.col("op") == "U", F.lit("")).otherwise(before_seg)
-    payload = F.concat(
-        F.lit('{"source":'), source,
-        F.lit(',"ts_ms":'), ms,
-        F.lit(',"transaction":null,"op":"'), dbz_op, F.lit('"'),
-        before_seg,
-        F.lit(',"after":'), after,
-        F.lit("}"),
-    )
-    if disable_schema:
-        value = F.concat(F.lit('{"payload":'), payload, F.lit("}"))
-    else:
-        fields = [
-            (f.name, mysql_types[f.name], f.name not in pk_fields)
-            for f in schema.fields
-        ]
-        value = F.concat(
-            F.lit('{"payload":'), payload,
-            F.lit(',"schema":'), _schema_block_col(cluster_id, fields),
-            F.lit("}"),
-        )
-    return cl.withColumn("value", value)
+        payload = _without_before_on_update(payload, json_object(head + after))
+    pairs = [("payload", payload)]
+    if not disable_schema:
+        cols = [_dbz_field_descriptor(f.name, mysql_types[f.name],
+                                      f.name not in pk_fields)
+                for f in schema.fields]
+        value_name = _connect_name(cluster_id, ".Value")
+        images = [json_object([
+            ("type", "struct"), ("optional", True), ("name", value_name),
+            ("field", field), ("fields", cols)]) for field in ("before", "after")]
+        pairs.append(("schema", json_object([
+            ("type", "struct"), ("optional", False),
+            ("name", _connect_name(cluster_id, ".Envelope")), ("version", 1),
+            ("fields", F.concat(F.lit("["), images[0], F.lit(","), images[1],
+                                F.lit("," + _DBZ_ENVELOPE_TAIL))),
+        ])))
+    return cl.withColumn("value", json_object(pairs))
 
 
-def _schema_block_col(cluster_id: str,
-                      fields: list[tuple[str, str, bool]]) -> Column:
-    """Per-row envelope schema block as a pure concat PROJECTION.
-
-    The schema doc depends on (schema_name, table_name) only through
-    the topic interpolated into the three Connect names, so the doc is
-    a string template of the row's own columns — no plan-time table
-    collect, no literal CASE chain, no join.  This is the
-    >1M-table-safe form the scheduler's ``LIT_FOLD_MAX_NODES`` hybrid
-    approximates for lookups that genuinely need a table (here none
-    does): plan size is constant in the number of tables.
-    """
-    import re
-
-    s_tok, t_tok = "\x01SCHEMA\x01", "\x01TABLE\x01"
-    template = debezium_envelope_schema(cluster_id, s_tok, t_tok, fields)
-    parts: list[Column] = []
-    for piece in re.split(f"({s_tok}|{t_tok})", template):
-        if piece == s_tok:
-            parts.append(F.col("schema_name"))
-        elif piece == t_tok:
-            parts.append(F.col("table_name"))
-        elif piece:
-            parts.append(F.lit(piece))
-    return F.concat(*parts)
+def _key_value(col: Column, dtype) -> Column:
+    if isinstance(dtype, StringType):
+        return json_string_or_null(col, dtype)
+    return json_number(col)
 
 
 def encode_debezium_key(
@@ -380,40 +312,18 @@ def encode_debezium_key(
     optional, fields — the reference's writer order differs from the
     envelope's)."""
     schema: StructType = cl.schema["after"].dataType
-    if mysql_types is None:
-        _DEFAULT = {"bigint": "bigint", "double": "double", "string": "varchar"}
-        mysql_types = {
-            f.name: _DEFAULT.get(f.dataType.simpleString(), "varchar")
-            for f in schema.fields
-        }
+    mysql_types = _mysql_types(schema, mysql_types)
+    pk = StructType([f for f in schema.fields if f.name in pk_fields])
     img = F.when(F.col("op") == "D", F.col("before")).otherwise(F.col("after"))
-    parts: list[Column] = [F.lit('{"payload":{')]
-    pk_schema_fields = []
-    first = True
-    for f in schema.fields:
-        if f.name not in pk_fields:
-            continue
-        if not first:
-            parts.append(F.lit(","))
-        first = False
-        parts.append(F.lit(f'"{f.name}":'))
-        parts.append(json_number(img.getField(f.name))
-                     if not isinstance(f.dataType, StringType)
-                     else json_string_or_null(img.getField(f.name), f.dataType))
-        pk_schema_fields.append(
-            _dbz_field_descriptor(f.name, mysql_types[f.name], False))
-    parts.append(F.lit("}"))
+    pairs = [("payload", json_image(img, pk, _key_value))]
     if not disable_schema:
-        key_schema = F.concat(
-            F.lit(',"schema":{"type":"struct","name":"'),
-            F.lit(cluster_id + "."), F.col("schema_name"), F.lit("."),
-            F.col("table_name"),
-            F.lit('.Key","optional":false,"fields":['
-                  + ",".join(pk_schema_fields) + "]}"),
-        )
-        parts.append(key_schema)
-    parts.append(F.lit("}"))
-    return cl.withColumn("key", F.concat(*parts))
+        pairs.append(("schema", json_object([
+            ("type", "struct"), ("name", _connect_name(cluster_id, ".Key")),
+            ("optional", False),
+            ("fields", [_dbz_field_descriptor(f.name, mysql_types[f.name],
+                                              False) for f in pk.fields]),
+        ])))
+    return cl.withColumn("key", json_object(pairs))
 
 
 def debezium_watermark_messages(
@@ -427,43 +337,18 @@ def debezium_watermark_messages(
     the full source block with empty db/table, op "m", and the
     watermark Envelope schema. Input: one row per watermark with a
     ``resolved_ts`` column (µs)."""
-    ms = F.expr("resolved_ts div 1000").cast("string")
-    key = (
-        '{"payload":{}}' if disable_schema else
-        '{"payload":{},"schema":{"type":"struct","name":"'
-        + cluster_id + '.watermark.Key","optional":false,"fields":[]}}'
-    )
-    source = F.concat(
-        F.lit('{"version":"' + DBZ_VERSION + '","connector":"TiCDC",'
-              '"name":"' + cluster_id + '","ts_ms":'),
-        ms,
-        F.lit(',"snapshot":"false","db":"","table":"","server_id":0,'
-              '"gtid":null,"file":"","pos":0,"row":0,"thread":0,'
-              '"query":null,"commit_ts":'),
-        F.col("resolved_ts").cast("string"),
-        F.lit(',"cluster_id":"' + cluster_id + '"}'),
-    )
-    payload = F.concat(
-        F.lit('{"source":'), source,
-        F.lit(',"ts_ms":'), ms,
-        F.lit(',"transaction":null,"op":"m"}'),
-    )
-    if disable_schema:
-        value = F.concat(F.lit('{"payload":'), payload, F.lit("}"))
-    else:
-        wm_schema = (
-            '{"type":"struct","optional":false,"name":"' + cluster_id
-            + '.watermark.Envelope","version":1,"fields":['
-            '{"type":"struct","fields":[' + _DBZ_SOURCE_SCHEMA_FIELDS
-            + '],"optional":false,'
-            '"name":"io.debezium.connector.mysql.Source",'
-            '"field":"source"},'
-            '{"type":"string","optional":false,"field":"op"},'
-            '{"type":"int64","optional":true,"field":"ts_ms"},'
-            + _DBZ_TXN_SCHEMA + "]}"
-        )
-        value = F.concat(
-            F.lit('{"payload":'), payload,
-            F.lit(',"schema":' + wm_schema + "}"),
-        )
-    return watermarks.withColumn("key", F.lit(key)).withColumn("value", value)
+    key = {"payload": {}}
+    payload = json_object([
+        ("source", _source(cluster_id, "resolved_ts", "", "")),
+        ("ts_ms", _ms("resolved_ts")), ("transaction", None), ("op", "m")])
+    pairs = [("payload", payload)]
+    if not disable_schema:
+        key["schema"] = {"type": "struct",
+                         "name": cluster_id + ".watermark.Key",
+                         "optional": False, "fields": []}
+        pairs.append(("schema", F.lit(
+            '{"type":"struct","optional":false,"name":'
+            + json_dumps(cluster_id + ".watermark.Envelope")
+            + ',"version":1,"fields":[' + _DBZ_ENVELOPE_TAIL + "}")))
+    return watermarks.withColumn("key", F.lit(json_dumps(key))) \
+        .withColumn("value", json_object(pairs))

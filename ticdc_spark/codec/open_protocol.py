@@ -6,8 +6,8 @@ value. Key: ``{"ts": commitTs, "scm": schema, "tbl": table, "t": 1}``
 upsert images, ``"d"`` for delete images; per-column objects carry the
 MySQL type byte.
 
-Emitted as two string columns ``key`` and ``value`` via deterministic
-concat (same rationale as canal_json.py).
+Emitted as two string columns ``key`` and ``value`` written by the
+shared JSON writer (same rationale as canal_json.py).
 
 MySQL type bytes (tidb mysql.Type*): LONGLONG=8, DOUBLE=5, VARCHAR=15.
 """
@@ -18,36 +18,28 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ticdc_spark.functions.render import json_string_or_null
+from ticdc_spark.functions.render import (json_image, json_object, json_str,
+                                          json_string_or_null)
 
 _MYSQL_TYPE_BYTE = {"long": 8, "bigint": 8, "double": 5, "string": 15}
 
 
-def _image_obj(image: str, schema: StructType) -> Column:
-    parts: list[Column] = [F.lit("{")]
-    for i, f in enumerate(schema.fields):
-        if i:
-            parts.append(F.lit(","))
-        tbyte = _MYSQL_TYPE_BYTE[f.dataType.simpleString()]
-        parts.append(F.lit(f'"{f.name}":{{"t":{tbyte},"v":'))
-        parts.append(json_string_or_null(F.col(f"{image}.{f.name}"), f.dataType))
-        parts.append(F.lit("}"))
-    parts.append(F.lit("}"))
-    return F.when(F.col(image).isNotNull(), F.concat(*parts))
+def _column_value(col: Column, dtype) -> Column:
+    """``{"t": <mysql type byte>, "v": <value>}``."""
+    return json_object([("t", _MYSQL_TYPE_BYTE[dtype.simpleString()]),
+                        ("v", json_string_or_null(col, dtype))])
+
+
+def _key(ts: Column, msg_type: int) -> Column:
+    return json_object([
+        ("ts", ts.cast("string")), ("scm", json_str(F.col("schema_name"))),
+        ("tbl", json_str(F.col("table_name"))), ("t", msg_type)])
 
 
 def open_protocol_key() -> Column:
     """The open-protocol message key (`open/message.go:28-40`) — also used
     as the kafka message key for other protocols."""
-    return F.concat(
-        F.lit('{"ts":'),
-        F.col("commit_ts").cast("string"),
-        F.lit(',"scm":"'),
-        F.col("schema_name"),
-        F.lit('","tbl":"'),
-        F.col("table_name"),
-        F.lit('","t":1}'),
-    )
+    return _key(F.col("commit_ts"), 1)
 
 
 def encode_open_protocol(cl: DataFrame,
@@ -60,17 +52,14 @@ def encode_open_protocol(cl: DataFrame,
     ``"p"``; the consumer then reconstructs deletes-by-key only."""
     schema: StructType = cl.schema["after"].dataType
     key = open_protocol_key()
-    upsert = _image_obj("after", schema)
-    delete = _image_obj("before", schema)
-    if output_old_value:
-        update = F.concat(F.lit('{"u":'), upsert,
-                          F.lit(',"p":'), delete, F.lit("}"))
-    else:
-        update = F.concat(F.lit('{"u":'), upsert, F.lit("}"))
+    upsert = json_image(F.col("after"), schema, _column_value)
+    delete = json_image(F.col("before"), schema, _column_value)
+    update = json_object([("u", upsert), ("p", delete)]
+                         if output_old_value else [("u", upsert)])
     value = (
-        F.when(F.col("op") == "D", F.concat(F.lit('{"d":'), delete, F.lit("}")))
+        F.when(F.col("op") == "D", json_object([("d", delete)]))
         .when(F.col("op") == "U", update)
-        .otherwise(F.concat(F.lit('{"u":'), upsert, F.lit("}")))
+        .otherwise(json_object([("u", upsert)]))
     )
     return cl.withColumn("key", key).withColumn("value", value)
 
@@ -80,22 +69,9 @@ def encode_open_protocol_ddl(ddl: DataFrame) -> DataFrame:
     ``{"ts":finishedTs,"scm":schema,"tbl":table,"t":2}`` (type 2 = DDL),
     value ``{"q":query,"t":<tidb action type>}``. Input frame carries
     (schema_name, table_name, commit_ts, query, action_type)."""
-    key = F.concat(
-        F.lit('{"ts":'),
-        F.col("commit_ts").cast("string"),
-        F.lit(',"scm":"'),
-        F.col("schema_name"),
-        F.lit('","tbl":"'),
-        F.col("table_name"),
-        F.lit('","t":2}'),
-    )
-    value = F.concat(
-        F.lit('{"q":"'),
-        F.col("query"),
-        F.lit('","t":'),
-        F.col("action_type").cast("string"),
-        F.lit("}"),
-    )
+    key = _key(F.col("commit_ts"), 2)
+    value = json_object([("q", json_str(F.col("query"))),
+                         ("t", F.col("action_type").cast("string"))])
     return ddl.withColumn("key", key).withColumn("value", value)
 
 
@@ -112,9 +88,7 @@ def open_protocol_checkpoints(cl: DataFrame, interval_us: int = 3_600_000_000) -
         .groupBy("boundary_ts")
         .agg(F.max("commit_ts").alias("resolved_ts"))
     )
-    key = F.concat(
-        F.lit('{"ts":'), F.col("resolved_ts").cast("string"), F.lit(',"t":3}')
-    )
+    key = json_object([("ts", F.col("resolved_ts").cast("string")), ("t", 3)])
     return wm.withColumn("key", key).withColumn("value", F.lit(""))
 
 

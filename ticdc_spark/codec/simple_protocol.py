@@ -9,7 +9,9 @@ DML message: ``{"version":1,"type":"INSERT","commitTs":…,"buildTs":0,
 "schema":…,"table":…,"data":{…},"old":{…}}``; WATERMARK:
 ``{"version":1,"type":"WATERMARK","commitTs":…,"buildTs":0}``.
 BOOTSTRAP messages (periodic schema rows, `pkg/config/sink.go:190-201`)
-carry the table schema — produced per table from the registry.
+carry the table schema — one per table, ``encode_simple_bootstrap``.
+Every message is written by the shared JSON writer
+(``render.json_object``/``json_str``).
 """
 
 from __future__ import annotations
@@ -18,42 +20,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ticdc_spark.functions.render import json_string_or_null
+from ticdc_spark.functions.render import (json_case, json_image, json_object,
+                                          json_str)
 
 
-def _image_obj(image: str, schema: StructType) -> Column:
-    parts: list[Column] = [F.lit("{")]
-    for i, f in enumerate(schema.fields):
-        if i:
-            parts.append(F.lit(","))
-        parts.append(F.lit(f'"{f.name}":'))
-        parts.append(json_string_or_null(F.col(f"{image}.{f.name}"), f.dataType))
-    parts.append(F.lit("}"))
-    return F.when(F.col(image).isNotNull(), F.concat(*parts)).otherwise(F.lit("null"))
+def _head(msg_type, commit_ts: Column | None) -> list:
+    """The members every simple message starts with."""
+    pairs = [("version", 1), ("type", msg_type)]
+    if commit_ts is not None:
+        pairs.append(("commitTs", commit_ts.cast("string")))
+    return pairs + [("buildTs", 0), ("schema", json_str(F.col("schema_name"))),
+                    ("table", json_str(F.col("table_name")))]
 
 
 def encode_simple(cl: DataFrame) -> DataFrame:
     schema: StructType = cl.schema["after"].dataType
-    mtype = (
-        F.when(F.col("op") == "I", F.lit("INSERT"))
-        .when(F.col("op") == "U", F.lit("UPDATE"))
-        .otherwise(F.lit("DELETE"))
-    )
-    value = F.concat(
-        F.lit('{"version":1,"type":"'),
-        mtype,
-        F.lit('","commitTs":'),
-        F.col("commit_ts").cast("string"),
-        F.lit(',"buildTs":0,"schema":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","data":'),
-        F.when(F.col("op") == "D", F.lit("null")).otherwise(_image_obj("after", schema)),
-        F.lit(',"old":'),
-        F.when(F.col("op") == "I", F.lit("null")).otherwise(_image_obj("before", schema)),
-        F.lit("}"),
-    )
+    op = F.col("op")
+    mtype = json_case(op, {"I": "INSERT", "U": "UPDATE"}, "DELETE")
+    value = json_object(_head(mtype, F.col("commit_ts")) + [
+        ("data", F.when(op == "D", F.lit("null")).otherwise(
+            json_image(F.col("after"), schema))),
+        ("old", F.when(op == "I", F.lit("null")).otherwise(
+            json_image(F.col("before"), schema))),
+    ])
     return cl.withColumn("value", value)
 
 
@@ -61,20 +50,23 @@ def encode_simple_ddl(ddl: DataFrame) -> DataFrame:
     """simple-protocol DDL message (`simple/message.go:38-273`, type DDL
     with the post-DDL TableSchema embedded): input frame carries
     (schema_name, table_name, commit_ts, query, table_schema_json)."""
-    value = F.concat(
-        F.lit('{"version":1,"type":"DDL","commitTs":'),
-        F.col("commit_ts").cast("string"),
-        F.lit(',"buildTs":0,"schema":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","sql":"'),
-        F.col("query"),
-        F.lit('","tableSchema":'),
-        F.col("table_schema_json"),
-        F.lit("}"),
-    )
+    value = json_object(_head("DDL", F.col("commit_ts")) + [
+        ("sql", json_str(F.col("query"))),
+        ("tableSchema", F.col("table_schema_json")),
+    ])
     return ddl.withColumn("value", value)
+
+
+def encode_simple_bootstrap(cl: DataFrame,
+                            pk_names: tuple[str, ...] = ("id",)) -> DataFrame:
+    """One BOOTSTRAP message per (schema_name, table_name) of ``cl``
+    (`simple/message.go:44`): the table schema, its columns taken from
+    the frame's ``after`` image and its handle key ``pk_names``."""
+    columns = [f.name for f in cl.schema["after"].dataType.fields]
+    value = json_object(_head("BOOTSTRAP", None) + [
+        ("tableSchema", {"columns": columns, "pk": list(pk_names)})])
+    return (cl.select("schema_name", "table_name").distinct()
+            .withColumn("value", value))
 
 
 def watermark_messages(cl: DataFrame, interval_us: int = 3_600_000_000) -> DataFrame:
@@ -87,13 +79,5 @@ def watermark_messages(cl: DataFrame, interval_us: int = 3_600_000_000) -> DataF
         .groupBy("schema_name", "table_name", "boundary_ts")
         .agg(F.max("commit_ts").alias("resolved_ts"))
     )
-    value = F.concat(
-        F.lit('{"version":1,"type":"WATERMARK","commitTs":'),
-        F.col("resolved_ts").cast("string"),
-        F.lit(',"buildTs":0,"schema":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('"}'),
-    )
-    return wm.withColumn("value", value)
+    return wm.withColumn(
+        "value", json_object(_head("WATERMARK", F.col("resolved_ts"))))

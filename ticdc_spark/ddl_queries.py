@@ -171,8 +171,8 @@ def q_ddl_handlers_version_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     SchemaStore — exactly how the engine runs it in production.
 
     Scale note (VERDICT r2 "what's wrong" #2): unlike the Debezium
-    schema block (now a pure projection, `codec/debezium.py
-    _schema_block_col`), this collect cannot become a broadcast join —
+    schema block (a pure projection in `codec/debezium.py
+    encode_debezium_full`), this collect cannot become a broadcast join —
     the list does not attach per-row values, it drives the driver-side
     SchemaStore state machine, which is O(n_tables) driver memory by
     design (the reference's schema storage is owner-resident the same

@@ -29,6 +29,7 @@ import ssl
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+_POLL_S = 0.02  # serve-loop poll interval: the most stop() waits
 
 class _Listener:
     allow_reuse_address = True
@@ -120,8 +121,11 @@ class Endpoint:
 
     def start(self):
         if self._thread is None:
+            # the serve loop notices shutdown() once per poll interval,
+            # so the interval bounds how long stop() waits
             self._thread = threading.Thread(
-                target=self._server.serve_forever, daemon=True)
+                target=self._server.serve_forever,
+                kwargs={"poll_interval": _POLL_S}, daemon=True)
             self._thread.start()
         return self
 

@@ -20,6 +20,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ticdc_spark.functions.render import json_object, json_str
+
 
 def apply_handle_key_only(
     cl_encoded: DataFrame,
@@ -105,7 +107,7 @@ def with_claim_check(
             "value",
             F.when(
                 is_large,
-                F.concat(F.lit('{"claimCheckLocation":"'), location, F.lit('"}')),
+                json_object([("claimCheckLocation", json_str(location))]),
             ).otherwise(F.col("value")),
         )
     )

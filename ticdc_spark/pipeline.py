@@ -590,25 +590,19 @@ def compile_bootstrap(cl: DataFrame,
     micro-batch the frame set is this DataFrame."""
     from pyspark.sql import functions as F
 
+    from ticdc_spark.codec.simple_protocol import encode_simple_bootstrap
+
     if cfg.protocol != "simple" or cfg.send_bootstrap_interval_s <= 0:
         return None
-    tabs = (apply_table_filter(cl, cfg.filter_rules,
-                               case_sensitive=cfg.case_sensitive)
-            .select("schema_name", "table_name").distinct())
-    value = F.concat(
-        F.lit('{"version":1,"type":"BOOTSTRAP","buildTs":0,"schema":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","tableSchema":{"columns":["id","val","k"],'
-              '"pk":["id"]}}'),
-    )
+    tabs = encode_simple_bootstrap(
+        apply_table_filter(cl, cfg.filter_rules,
+                           case_sensitive=cfg.case_sensitive),
+        tuple(cfg.handle_key_fields))
     parts = (list(range(cfg.n_partitions))
              if cfg.send_bootstrap_to_all_partition else [0])
-    return (tabs.withColumn("value", value)
-            .crossJoin(F.broadcast(
-                cl.sparkSession.createDataFrame(
-                    [(p,) for p in parts], "partition int"))))
+    return tabs.crossJoin(F.broadcast(
+        cl.sparkSession.createDataFrame(
+            [(p,) for p in parts], "partition int")))
 
 
 def build_pipeline_uncoded(cl: DataFrame, cfg: ChangefeedConfig) -> DataFrame:

@@ -285,7 +285,11 @@ def q_kafka_messages(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # simple protocol + watermark messages (W1)
 # ---------------------------------------------------------------------------
-from ticdc_spark.codec.simple_protocol import encode_simple, watermark_messages  # noqa: E402
+from ticdc_spark.codec.simple_protocol import (  # noqa: E402
+    encode_simple,
+    encode_simple_bootstrap,
+    watermark_messages,
+)
 
 
 def _simple_img_sql(img: str) -> str:
@@ -680,15 +684,7 @@ def q_topic_sanitization(spark, sf_dir):
     "AS value FROM changelog",
 )
 def q_bootstrap_messages(spark, sf_dir):
-    cl = events_changelog(spark, sf_dir)
-    value = F.concat(
-        F.lit('{"version":1,"type":"BOOTSTRAP","buildTs":0,"schema":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","tableSchema":{"columns":["id","val","k"],"pk":["id"]}}'),
-    )
-    return cl.select("schema_name", "table_name", value.alias("value")).distinct()
+    return encode_simple_bootstrap(events_changelog(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

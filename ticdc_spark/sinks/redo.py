@@ -46,7 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ticdc_spark.codec.canal_json import _image_json
+from ticdc_spark.functions.render import json_image, json_object, json_str
 
 
 def _uuid8(*cols: Column) -> Column:
@@ -85,21 +85,14 @@ def redo_log_files(
         ),
     )
     img_schema = cl.schema["after"].dataType
-    record = F.concat(
-        F.lit('{"type":"row","row":{"startTs":'),
-        F.col("start_ts").cast("string"),
-        F.lit(',"commitTs":'),
-        F.col("commit_ts").cast("string"),
-        F.lit(',"schema":"'),
-        F.col("schema_name"),
-        F.lit('","table":"'),
-        F.col("table_name"),
-        F.lit('","columns":'),
-        _image_json("after", img_schema),
-        F.lit(',"preColumns":'),
-        _image_json("before", img_schema),
-        F.lit("}}"),
-    )
+    record = json_object([("type", "row"), ("row", json_object([
+        ("startTs", F.col("start_ts").cast("string")),
+        ("commitTs", F.col("commit_ts").cast("string")),
+        ("schema", json_str(F.col("schema_name"))),
+        ("table", json_str(F.col("table_name"))),
+        ("columns", json_image(F.col("after"), img_schema, array=True)),
+        ("preColumns", json_image(F.col("before"), img_schema, array=True)),
+    ]))])
     return out.withColumn("file_name", file_name).withColumn("value", record)
 
 

@@ -42,7 +42,7 @@ class S3Client(StoreClient):
         auth, payload_hash = awssig.sign(
             method, path, query, {"host": host_hdr}, body,
             self.access_key, self.secret_key, self.amz_date, self.region)
-        url = path + (f"?{query}" if query else "")
+        url = awssig.canonical_uri(path) + (f"?{query}" if query else "")
         return method, url, body, {
             "Host": host_hdr,
             "x-amz-date": self.amz_date,
