@@ -5,7 +5,14 @@ Every row cites the reference definition."""
 
 from __future__ import annotations
 
-from ticdc_spark.config import parse_changefeed_config, parse_duration_us
+from ticdc_spark.config import KEYS, parse_changefeed_config, parse_duration_us
+
+
+def _key(name: str):
+    """The key-table row spelled ``name`` (a TOML path or its last
+    part, or a URI param)."""
+    return next(k for k in KEYS if name in k.uri or any(
+        p == name or p.endswith("." + name) for p in k.toml))
 
 
 def test_empty_toml_matches_reference_defaults():
@@ -20,8 +27,6 @@ def test_empty_toml_matches_reference_defaults():
         "enable_sync_point": False,
         # replica_config.go:59 SyncPointInterval=10m
         "sync_point_interval_us": 10 * 60 * 1_000_000,
-        # replica_config.go:60 SyncPointRetention=24h
-        "sync_point_retention_us": 24 * 3600 * 1_000_000,
         # replica_config.go:61 BDRMode=false
         "bdr_mode": False,
         # sink.go:60 CRLF terminator (replica_config.go:76)
@@ -38,8 +43,6 @@ def test_empty_toml_matches_reference_defaults():
         "integrity_check_level": "none",
         # scheduler block (replica_config.go:107-118)
         "enable_table_across_nodes": False,
-        "region_threshold": 10_000,
-        "write_key_threshold": 0,
         # filter.go NewDefaultFilterConfig: rules=['*.*']
         "filter_rules": ["*.*"],
         # force-replicate defaults false (changefeed.go ForceReplicate)
@@ -48,13 +51,21 @@ def test_empty_toml_matches_reference_defaults():
     for attr, want in expected.items():
         got = getattr(cfg, attr)
         assert got == want, f"{attr}: {got!r} != reference default {want!r}"
+    # replica_config.go:60 SyncPointRetention=24h: nothing prunes the
+    # syncpoint ledger, so only that default is accepted
+    assert parse_duration_us(_key("sync-point-retention").default) == \
+        24 * 3600 * 1_000_000
+    # the split thresholds are Spark's (repartition/AQE): the table
+    # carries their reference defaults (replica_config.go:109-110)
+    assert _key("scheduler.region-threshold").default == 10_000
+    assert _key("scheduler.write-key-threshold").default == 0
 
 
 def test_scheduler_region_threshold_not_legacy_value():
     """Guard against regressing to the legacy 100k threshold — the
     reference splits tables at 10k regions (`replica_config.go:109`)."""
-    cfg = parse_changefeed_config("[scheduler]\n")
-    assert cfg.region_threshold == 10_000
+    parse_changefeed_config("[scheduler]\n")
+    assert _key("scheduler.region-threshold").default == 10_000
 
 
 def test_explicit_values_override_defaults():
@@ -63,7 +74,6 @@ def test_explicit_values_override_defaults():
 memory-quota = 2147483648
 enable-sync-point = true
 sync-point-interval = "30s"
-sync-point-retention = "1h"
 [sink]
 terminator = "\\n"
 date-separator = "month"
@@ -76,12 +86,16 @@ region-threshold = 777
     assert cfg.memory_quota == 2 * 1024 ** 3
     assert cfg.enable_sync_point is True
     assert cfg.sync_point_interval_us == parse_duration_us("30s")
-    assert cfg.sync_point_retention_us == parse_duration_us("1h")
+    import pytest
+
+    with pytest.raises(ValueError, match="sync-point-retention"):
+        parse_changefeed_config('sync-point-retention = "1h"\n')
     assert cfg.terminator == "\n"
     assert cfg.date_separator == "month"
     assert cfg.file_index_width == 8
     assert cfg.enable_table_across_nodes is True
-    assert cfg.region_threshold == 777
+    # region-threshold = 777 was accepted: a Spark key, checked and dropped
+    assert _key("scheduler.region-threshold").disposition == "spark"
 
 
 def test_csv_defaults_match_reference_constants():
@@ -121,7 +135,9 @@ def test_sink_uri_query_params():
         'sink-uri = "mysql://u:p@h:4000/?safe-mode=true'
         '&worker-count=9999&max-txn-row=64&transaction-atomicity=table"')
     assert my.safe_mode is True
-    assert my.worker_count == 1024  # clamped at maxWorkerCount
+    # worker-count=9999 was accepted: Spark's tasks write the statements
+    assert _key("worker-count").disposition == "spark"
+    assert _key("worker-count").default == 16
     assert my.max_txn_row == 64
     assert my.transaction_atomicity == "table"
 
@@ -150,24 +166,27 @@ def test_sink_uri_params_apply_on_create_override(tmp_path):
 def test_remaining_top_level_defaults():
     cfg = parse_changefeed_config("")
     # replica_config.go:52 PerformanceModeThroughput
-    assert cfg.performance_mode == "throughput"
-    # replica_config.go:55 CheckGCSafePoint=true
-    assert cfg.check_gc_safe_point is True
+    assert _key("performance-mode").default == "throughput"
+    # replica_config.go:55 CheckGCSafePoint=true: the API's create
+    # always checks, so only that default is accepted
+    assert _key("check-gc-safe-point").default is True
     # replica_config.go:58 EnableTableMonitor=false
-    assert cfg.enable_table_monitor is False
+    assert _key("enable-table-monitor").default is False
     assert cfg.ignore_ineligible_table is False
-    assert cfg.sql_mode == ""
+    assert _key("sql-mode").default == ""
     # replica_config.go:122 ChangefeedErrorStuckDuration=30m
     assert cfg.changefeed_error_stuck_duration_us == 30 * 60 * 1_000_000
     # replica_config.go:123-126 SyncedStatusConfig{300, 15}
     assert cfg.synced_check_interval_s == 300
     assert cfg.synced_checkpoint_interval_s == 15
     # replica_config.go:63,127-128 active-active defaults
-    assert cfg.enable_active_active is False
-    assert cfg.active_active_progress_interval_us == 30 * 60 * 1_000_000
-    assert cfg.active_active_sync_stats_interval_us == 60 * 1_000_000
+    assert _key("enable-active-active").default is False
+    assert parse_duration_us(_key(
+        "active-active-progress-interval").default) == 30 * 60 * 1_000_000
+    assert parse_duration_us(_key(
+        "active-active-sync-stats-interval").default) == 60 * 1_000_000
     # mounter.go:17-19 WorkerNum=16
-    assert cfg.mounter_worker_num == 16
+    assert _key("mounter.worker-num").default == 16
     # consistent defaults (replica_config.go:91-104, redo/config.go)
     c = cfg.consistent
     assert c["level"] == "none"
@@ -215,10 +234,10 @@ def test_top_level_validation_errors():
 
     with pytest.raises(ValueError, match="unknown performance mode"):
         parse_changefeed_config('performance-mode = "balanced"\n')
-    # low-latency is the other legal mode (replica_config.go:36)
-    assert parse_changefeed_config(
-        'performance-mode = "low-latency"\n'
-    ).performance_mode == "low-latency"
+    # low-latency is the other legal mode (replica_config.go:36), but
+    # the epoch pipeline has one mode: it is refused by name
+    with pytest.raises(ValueError, match="performance-mode"):
+        parse_changefeed_config('performance-mode = "low-latency"\n')
     # min 30m stuck duration (replica_config.go:42,374-381)
     with pytest.raises(ValueError, match="1800"):
         parse_changefeed_config(
@@ -231,35 +250,39 @@ def test_top_level_validation_errors():
         parse_changefeed_config('event-collector-batch-count = -1\n')
     with pytest.raises(ValueError, match="not larger than 8192"):
         parse_changefeed_config('event-collector-batch-count = 9000\n')
-    cfg = parse_changefeed_config(
+    # in-bounds values are accepted: Spark's micro-batch does the batching
+    parse_changefeed_config(
         'event-collector-batch-count = 0\n'
         'event-collector-batch-bytes = 1048576\n')
-    assert cfg.event_collector_batch_count == 0
-    assert cfg.event_collector_batch_bytes == 1048576
-    # encoder max-batch-size URI form param (codec/common/config.go:34)
-    assert parse_changefeed_config('').max_batch_size == 16
-    assert parse_changefeed_config(
-        'sink-uri = "kafka://b/t?max-batch-size=64"\n').max_batch_size == 64
+    assert _key("event-collector-batch-count").disposition == "spark"
+    # encoder max-batch-size URI form param (codec/common/config.go:34):
+    # nothing batches messages, so only the default is accepted
+    assert _key("max-batch-size").default == 16
+    parse_changefeed_config('sink-uri = "kafka://b/t?max-batch-size=16"\n')
+    with pytest.raises(ValueError, match="max-batch-size"):
+        parse_changefeed_config('sink-uri = "kafka://b/t?max-batch-size=64"\n')
 
 
 def test_synced_status_and_active_active_blocks():
+    import pytest
+
     cfg = parse_changefeed_config(
-        'enable-active-active = true\n'
-        'active-active-progress-interval = "1h"\n'
-        'active-active-sync-stats-interval = "30s"\n'
-        'sql-mode = "ANSI_QUOTES"\n'
         'ignore-ineligible-table = true\n'
         '[synced-status]\nsynced-check-interval = 120\n'
         'checkpoint-interval = 20\n'
         '[mounter]\nworker-num = 8\n')
-    assert cfg.enable_active_active is True
-    assert cfg.active_active_progress_interval_us == 3600 * 1_000_000
-    assert cfg.active_active_sync_stats_interval_us == 30 * 1_000_000
-    assert cfg.sql_mode == "ANSI_QUOTES"
     assert cfg.ignore_ineligible_table is True
     assert cfg.synced_check_interval_s == 120
     assert cfg.synced_checkpoint_interval_s == 20
-    assert cfg.mounter_worker_num == 8
+    # worker-num = 8 was accepted: decode runs in Spark's tasks
+    assert _key("mounter.worker-num").disposition == "spark"
+    # nothing honours active-active or a configured sql-mode: refused
+    for toml in ('enable-active-active = true\n',
+                 'active-active-progress-interval = "1h"\n',
+                 'active-active-sync-stats-interval = "30s"\n',
+                 'sql-mode = "ANSI_QUOTES"\n'):
+        with pytest.raises(ValueError, match=toml.split(" ")[0]):
+            parse_changefeed_config(toml)
 
 
 def test_sink_subblock_toggles_parse():
@@ -292,18 +315,22 @@ def test_avro_sink_fields_parse_and_validate():
 
     cfg = parse_changefeed_config("")
     assert cfg.avro_enable_watermark is False
-    assert cfg.avro_decimal_handling_mode == "precise"
-    assert cfg.avro_bigint_unsigned_handling_mode == "long"
-    assert cfg.schema_registry == ""
+    assert _key("avro-decimal-handling-mode").default == "precise"
+    assert _key("avro-bigint-unsigned-handling-mode").default == "long"
+    assert _key("schema-registry").default == ""
     cfg = parse_changefeed_config(
         '[sink]\navro-enable-watermark = true\n'
-        'avro-decimal-handling-mode = "string"\n'
-        'avro-bigint-unsigned-handling-mode = "string"\n'
-        'schema-registry = "http://registry:8081"\n')
+        'avro-decimal-handling-mode = "precise"\n'
+        'avro-bigint-unsigned-handling-mode = "long"\n')
     assert cfg.avro_enable_watermark is True
-    assert cfg.avro_decimal_handling_mode == "string"
-    assert cfg.avro_bigint_unsigned_handling_mode == "string"
-    assert cfg.schema_registry == "http://registry:8081"
+    # no Avro column is a decimal or an unsigned bigint, and each Arrow
+    # batch registers its schemas in a fresh in-memory registry: the
+    # string modes and a schema-registry URL are refused by name
+    for toml in ('avro-decimal-handling-mode = "string"\n',
+                 'avro-bigint-unsigned-handling-mode = "string"\n',
+                 'schema-registry = "http://registry:8081"\n'):
+        with pytest.raises(ValueError, match=toml.split(" ")[0]):
+            parse_changefeed_config("[sink]\n" + toml)
     with pytest.raises(ValueError, match="avro-decimal-handling-mode"):
         parse_changefeed_config(
             '[sink]\navro-decimal-handling-mode = "exact"\n')
@@ -314,12 +341,14 @@ def test_avro_sink_fields_parse_and_validate():
     # URI form params override (`codec/common/config.go:173-181`)
     cfg = parse_changefeed_config(
         'sink-uri = "kafka://b:9092/t?protocol=avro'
-        '&avro-enable-watermark=true'
-        '&avro-decimal-handling-mode=string&schema-registry=http%3A%2F%2Fr"\n')
+        '&avro-enable-watermark=true&avro-decimal-handling-mode=precise"\n')
     assert cfg.protocol == "avro"
     assert cfg.avro_enable_watermark is True
-    assert cfg.avro_decimal_handling_mode == "string"
-    assert cfg.schema_registry == "http://r"
+    for param in ("avro-decimal-handling-mode=string",
+                  "schema-registry=http%3A%2F%2Fr"):
+        with pytest.raises(ValueError, match=param.split("=")[0]):
+            parse_changefeed_config(
+                f'sink-uri = "kafka://b:9092/t?protocol=avro&{param}"\n')
     with pytest.raises(ValueError, match="avro-decimal-handling-mode"):
         parse_changefeed_config(
             'sink-uri = "kafka://b:9092/t?avro-decimal-handling-mode=x"\n')
@@ -331,10 +360,10 @@ def test_bootstrap_and_cloud_storage_config():
     cfg = parse_changefeed_config("")
     # sink.go:36-37,87-96 defaults
     assert cfg.send_bootstrap_interval_s == 120
-    assert cfg.send_bootstrap_in_msg_count == 10_000
+    assert _key("send-bootstrap-in-msg-count").default == 10_000
     assert cfg.send_bootstrap_to_all_partition is True
-    assert cfg.send_all_bootstrap_at_start is False
-    assert cfg.advance_timeout_s == 150
+    assert _key("send-all-bootstrap-at-start").default is False
+    assert _key("advance-timeout-in-sec").default == 150
     # cloudstorage/config.go:38-60 defaults
     c = cfg.cloud_storage_config
     assert c["flush-interval"] == "5s"
@@ -343,13 +372,15 @@ def test_bootstrap_and_cloud_storage_config():
     assert c["file-expiration-days"] == 0
     cfg = parse_changefeed_config(
         '[sink]\nsend-bootstrap-interval-in-sec = 30\n'
-        'send-all-bootstrap-at-start = true\n'
-        'advance-timeout-in-sec = 300\n'
         '[sink.cloud-storage-config]\nflush-interval = "10s"\n'
         'file-size = 134217728\nfile-expiration-days = 7\n')
     assert cfg.send_bootstrap_interval_s == 30
-    assert cfg.send_all_bootstrap_at_start is True
-    assert cfg.advance_timeout_s == 300
+    # BOOTSTRAP goes out per epoch and nothing watches for a sink
+    # stall: the other values are refused by name
+    for toml in ("send-all-bootstrap-at-start = true\n",
+                 "advance-timeout-in-sec = 300\n"):
+        with pytest.raises(ValueError, match=toml.split(" ")[0]):
+            parse_changefeed_config("[sink]\n" + toml)
     assert cfg.cloud_storage_config["file-size"] == 134217728
     assert cfg.cloud_storage_config["file-expiration-days"] == 7
     # bounds (`cloudstorage/config.go:38-57`)

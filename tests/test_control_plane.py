@@ -200,7 +200,7 @@ force-replicate = true
 memory-quota = 536870912
 enable-sync-point = true
 sync-point-interval = "10m"
-sync-point-retention = "1h30m"
+sync-point-retention = "24h"
 
 [filter]
 rules = ['*.*']
@@ -229,7 +229,11 @@ def test_replica_config_full_surface():
     assert cfg.memory_quota == 512 * 1024 * 1024
     assert cfg.enable_sync_point is True
     assert cfg.sync_point_interval_us == 600 * 1_000_000
-    assert cfg.sync_point_retention_us == 5400 * 1_000_000
+    # nothing prunes the syncpoint ledger: a retention other than the
+    # reference's 24h is refused by name
+    with pytest.raises(ValueError, match="sync-point-retention"):
+        parse_changefeed_config(
+            FULL_TOML.replace('"24h"', '"1h30m"'))
     assert cfg.safe_mode is True
     assert cfg.terminator == "\n"
     assert cfg.date_separator == "month"

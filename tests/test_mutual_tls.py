@@ -181,8 +181,8 @@ def test_hostname_verification_rejects_wrong_identity():
 
 def test_sink_uri_tls_params():
     """Sink-URI credential triple parsing: kafka ca/cert/key +
-    enable-tls, mysql ssl-* aliases, +ssl scheme implication, and the
-    cert-without-key rejection."""
+    enable-tls, the refused mysql ssl-* aliases, +ssl scheme
+    implication, and the cert-without-key rejection."""
     from ticdc_spark.config import parse_changefeed_config
 
     cfg = parse_changefeed_config(
@@ -191,9 +191,11 @@ def test_sink_uri_tls_params():
     assert cfg.enable_tls and cfg.tls_ca_path == "/ca.pem"
     assert (cfg.tls_cert_path, cfg.tls_key_path) == ("/c.pem", "/k.pem")
 
-    cfg = parse_changefeed_config(
-        'sink-uri = "mysql://u:p@h:3306/?ssl-ca=/ca.pem"')
-    assert cfg.enable_tls and cfg.tls_ca_path == "/ca.pem"
+    # no task dials the MySQL downstream from the changefeed config, so
+    # its ssl-* aliases are refused by name rather than ignored
+    with pytest.raises(ValueError, match="ssl-ca"):
+        parse_changefeed_config(
+            'sink-uri = "mysql://u:p@h:3306/?ssl-ca=/ca.pem"')
 
     cfg = parse_changefeed_config('sink-uri = "kafka+ssl://h:9092/t"')
     assert cfg.enable_tls

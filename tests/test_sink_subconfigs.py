@@ -51,14 +51,16 @@ def test_no_sasl_returns_none():
 
 
 def test_mysql_uri_knobs():
+    # no task dials the MySQL downstream from the changefeed config:
+    # the reference defaults are accepted, other values refused by name
     cfg = parse_changefeed_config(
-        'sink-uri = "mysql://u:p@h:4000/?read-timeout=2m&timeout=30s'
-        '&tidb-txn-mode=optimistic&time-zone=UTC"\n')
-    mc = cfg.mysql_config
-    assert mc["read-timeout"] == "2m"
-    assert mc["timeout"] == "30s"
-    assert mc["tidb-txn-mode"] == "optimistic"
-    assert mc["time-zone"] == "UTC"
+        'sink-uri = "mysql://u:p@h:4000/?read-timeout=2m&timeout=2m'
+        '&tidb-txn-mode=optimistic"\n')
+    assert cfg.mysql_config is None
+    for param in ("timeout=30s", "time-zone=UTC"):
+        with pytest.raises(ValueError, match=param.split("=")[0]):
+            parse_changefeed_config(
+                f'sink-uri = "mysql://u:p@h:4000/?{param}"\n')
 
 
 def test_mysql_invalid_txn_mode_keeps_default():
@@ -78,10 +80,12 @@ def test_mysql_config_toml_section_parses():
     cfg = parse_changefeed_config(
         'sink-uri = "mysql://u:p@h:4000/"\n'
         "[sink.mysql-config]\n"
-        "enable-batch-dml = true\n"
-        'tidb-txn-mode = "pessimistic"\n')
+        "enable-batch-dml = true\n")
     assert cfg.mysql_config["enable-batch-dml"] is True
-    assert cfg.mysql_config["tidb-txn-mode"] == "pessimistic"
+    with pytest.raises(ValueError, match="tidb-txn-mode"):
+        parse_changefeed_config(
+            'sink-uri = "mysql://u:p@h:4000/"\n'
+            '[sink.mysql-config]\ntidb-txn-mode = "pessimistic"\n')
 
 
 def test_pulsar_auth_token_and_oauth(tmp_path):
@@ -161,14 +165,17 @@ def test_live_sasl_plain_from_parsed_config():
 def test_kafka_uri_timeouts_route_to_kafka_config():
     """kafka's read-timeout/write-timeout/dial-timeout are kafka params
     (`pkg/sink/kafka/options.go:119-121`), NOT mysql durations — they
-    must land in kafka_config, and mysql_config must stay untouched."""
+    are checked as Kafka's, and mysql_config must stay untouched.  The
+    Kafka connections keep their fixed socket timeout, so only the
+    reference defaults (10s) are accepted."""
     cfg = parse_changefeed_config(
-        'sink-uri = "kafka://b:9092/t?read-timeout=10s&write-timeout=5s'
-        '&dial-timeout=3s"\n')
-    assert cfg.kafka_config["read-timeout"] == "10s"
-    assert cfg.kafka_config["write-timeout"] == "5s"
-    assert cfg.kafka_config["dial-timeout"] == "3s"
+        'sink-uri = "kafka://b:9092/t?read-timeout=10s&write-timeout=10s'
+        '&dial-timeout=10s"\n')
     assert cfg.mysql_config is None
+    for param in ("write-timeout=5s", "dial-timeout=3s"):
+        with pytest.raises(ValueError, match="Kafka connections"):
+            parse_changefeed_config(
+                f'sink-uri = "kafka://b:9092/t?{param}"\n')
 
 
 def test_mysql_knobs_do_not_apply_to_kafka_scheme():

@@ -143,6 +143,70 @@ dispatchers = [{{matcher = ["test.tp_*"], partition = "index-value", topic = "cd
         assert cf.checkpoint_ts() is not None
 
 
+@pytest.mark.parametrize("secure", ["sasl", "tls"])
+def test_changefeed_dials_with_its_own_connection_options(
+        spark, sf_dir, tmp_path, secure):
+    """A broker that demands SASL, or TLS, is reached through the
+    changefeed config's own options — on every produce and on the
+    watermark broadcast.  Without the credentials or the CA the same
+    changefeed fails its first epoch instead of producing."""
+    from ticdc_spark.config import parse_changefeed_config
+    from ticdc_spark.sinks.kafka_live import conn_options
+    from ticdc_spark.streaming.changefeed import bootstrap_from_sink_uri
+
+    kw = {"sasl_users": {"alice": "pw"}} if secure == "sasl" else {"tls": True}
+    with KafkaBroker(default_partitions=16, **kw) as broker:
+        bare_uri = f"kafka://{broker.bootstrap}/cdc?protocol=canal-json"
+        if secure == "sasl":
+            uri = bare_uri + (
+                "&sasl-mechanism=plain&sasl-user=alice&sasl-password=pw")
+        else:
+            ca = tmp_path / "ca.pem"
+            ca.write_bytes(broker.ca_pem)
+            uri = (f"kafka+ssl://{broker.bootstrap}/cdc"
+                   f"?protocol=canal-json&ca={ca}")
+
+        def feed(name, sink_uri):
+            cfg = parse_changefeed_config(f"""
+sink-uri = "{sink_uri}"
+[sink]
+dispatchers = [{{matcher = ["test.tp_*"], partition = "index-value", topic = "cdc_{{schema}}_{{table}}"}}]
+""")
+            cf = Changefeed(name, cfg, str(tmp_path),
+                            live_bootstrap=bootstrap_from_sink_uri(cfg))
+            cf.start(spark, sf_dir, available_now=True)
+            return cf
+
+        bare = feed("cf_bare", bare_uri)
+        with pytest.raises(Exception):
+            bare.wait(240)
+        assert bare.checkpoint_ts() is None
+        if secure == "tls":
+            # TLS with no CA to verify against is refused, not dialed plain
+            with pytest.raises(ValueError, match="enable-tls"):
+                feed("cf_no_ca", uri.replace(f"&ca={ca}", ""))
+        cf = feed("cf_opts", uri)
+        cf.wait(240)
+        data, marks = [], 0
+        with KafkaConn.from_bootstrap(
+                broker.bootstrap, **conn_options(cf.produce_opts)) as c:
+            for topic, parts in broker.topics.items():
+                for p in parts:
+                    for _, rec in c.fetch_all(topic, p):
+                        v = rec.value.decode()
+                        if '"TIDB_WATERMARK"' in v:
+                            marks += 1
+                        else:
+                            data.append((topic, p, v))
+        batch = build_pipeline(events_changelog(spark, sf_dir),
+                               ChangefeedConfig(**CFG))
+        assert sorted(data) == sorted(
+            (r["topic"], r["partition"], r["value"])
+            for r in batch.select("topic", "partition", "value").collect())
+        assert marks == sum(len(parts) for parts in broker.topics.values())
+        assert cf.checkpoint_ts() is not None
+
+
 def test_http_api_created_changefeed_streams_to_live_broker(spark, sf_dir, tmp_path):
     """The full control-plane story: POST /api/v2/changefeeds with a
     sink-uri naming the live broker, then registry.run streams the

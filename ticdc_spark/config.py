@@ -1,15 +1,21 @@
-"""Changefeed config parsing — TOML/JSON with the reference's field names.
+"""Changefeed config parsing — TOML/JSON and sink-URI params with the
+reference's names (`pkg/config/replica_config.go:151` ReplicaConfig,
+`pkg/config/sink.go:139` SinkConfig, `pkg/config/filter.go:21-47`).
 
-Reference surface: `pkg/config/replica_config.go:151` (ReplicaConfig:
-``filter``, ``sink``, ``mounter`` …), `pkg/config/sink.go:139`
-(SinkConfig: ``protocol``, ``dispatchers``, ``column-selectors``,
-``safe-mode``, ``only-output-updated-columns``,
-``delete-only-output-handle-key``…), `pkg/config/filter.go:21-47`
-(``rules``, ``event-filters`` with matcher / ignore-event /
-ignore-txn-start-ts / ignore-sql / ignore-*-value-expr).
+Every key the engine knows is one row of ``KEYS``: its TOML paths, its
+sink-URI param and the schemes that read it, its validator, its
+reference citation and its disposition —
 
-A TOML document a TiCDC user writes today compiles into the engine's
-``ChangefeedConfig`` (pipeline.py) unchanged.
+- ``read``: it fills a ``ChangefeedConfig`` field (or a key of a
+  sub-config dict) that the named reader consumes;
+- ``spark``: a Spark mechanism does its job (SURVEY line cited); the
+  value is checked, then dropped;
+- ``refused``: nothing honours it, so only the reference default is
+  accepted and any other value raises, naming the key.
+
+``parse_changefeed_config`` and ``apply_sink_uri_params`` are one loop
+each over the table: the TOML first, then the URI params over it, the
+reference's Apply order.  Unknown keys are ignored.
 """
 
 from __future__ import annotations
@@ -17,6 +23,8 @@ from __future__ import annotations
 import json
 import re
 import tomllib
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from ticdc_spark.pipeline import ChangefeedConfig
 
@@ -87,11 +95,9 @@ def parse_consistent_config(block: dict | None) -> dict:
         raise ValueError(
             f"The consistent.compression:{c['compression']} "
             "must be 'none' or 'lz4'")
-    bc = c.get("event-collector-batch-count")
-    if bc is not None and not 0 <= bc <= _MAX_EVENT_COLLECTOR_BATCH:
-        raise ValueError(
-            "consistent.event-collector-batch-count must be in "
-            f"[0, {_MAX_EVENT_COLLECTOR_BATCH}], got {bc}")
+    if (bc := c.get("event-collector-batch-count")) is not None:
+        _batch_bound(_MAX_EVENT_COLLECTOR_BATCH)(
+            "consistent.event-collector-batch-count", bc)
     return c
 
 
@@ -131,480 +137,91 @@ def parse_cloud_storage_config(block: dict | None) -> dict:
     return c
 
 
-def parse_changefeed_config(text: str, fmt: str = "toml") -> ChangefeedConfig:
-    doc = tomllib.loads(text) if fmt == "toml" else json.loads(text)
-    filt = doc.get("filter", {})
-    sink = doc.get("sink", {})
-    integrity = doc.get("integrity", {})
-    sched = doc.get("scheduler", {})
+#: `pkg/security/sasl.go:43-58` SASLMechanismFromString
+SASL_MECHANISMS = ("plain", "scram-sha-256", "scram-sha-512", "gssapi",
+                   "oauthbearer")
+_MIN_ERROR_STUCK_US = 30 * 60 * 1_000_000  # `replica_config.go:42`
 
-    event_filters: list[dict] = []
-    expr_filter: dict | None = None
-    for ef in filt.get("event-filters", []):
-        expr_keys = {
-            "ignore-insert-value-expr", "ignore-update-new-value-expr",
-            "ignore-update-old-value-expr", "ignore-delete-value-expr",
-        }
-        plain = {k: v for k, v in ef.items() if k not in expr_keys}
-        exprs = {k: v for k, v in ef.items() if k in expr_keys}
-        if set(plain) - {"matcher"}:
-            event_filters.append(plain)
-        if exprs:
-            expr_filter = {"matcher": ef.get("matcher", ["*.*"]), **exprs}
-
-    column_selectors = [
-        {"matcher": cs.get("matcher", ["*.*"]), "columns": cs.get("columns", [])}
-        for cs in sink.get("column-selectors", [])
-    ]
-    dispatchers = [
-        {
-            "matcher": d.get("matcher", ["*.*"]),
-            "partition": d.get("partition", d.get("dispatcher")),
-            "topic": d.get("topic"),
-            "columns": d.get("columns"),
-        }
-        for d in sink.get("dispatchers", [])
-    ]
-
-    sync_interval = doc.get("sync-point-interval")
-    sync_retention = doc.get("sync-point-retention")
-    cfg = ChangefeedConfig(
-        filter_rules=filt.get("rules", ["*.*"]),
-        event_filters=event_filters,
-        expr_filter=expr_filter,
-        column_selectors=column_selectors,
-        dispatchers=dispatchers,
-        protocol=sink.get("protocol", "canal-json"),
-        encoding_format=(sink.get("codec") or {}).get(
-            "encoding-format", "json"),
-        only_output_updated_columns=sink.get("only-output-updated-columns", False),
-        # reference spelling is `delete-only-output-handle-key-columns`
-        # (pkg/config/sink.go:167); the short form is kept for back-compat
-        delete_only_output_handle_key=sink.get(
-            "delete-only-output-handle-key-columns",
-            sink.get("delete-only-output-handle-key", False)),
-        case_sensitive=doc.get("case-sensitive", False),
-        force_replicate=doc.get("force-replicate", False),
-        memory_quota=doc.get("memory-quota", 1024 * 1024 * 1024),
-        enable_sync_point=doc.get("enable-sync-point", False),
-        safe_mode=sink.get("safe-mode", False),
-        terminator=sink.get("terminator", "\r\n"),
-        date_separator=sink.get("date-separator", "day"),
-        enable_partition_separator=sink.get(
-            "enable-partition-separator", True),
-        file_index_width=sink.get("file-index-width", 20),
-        csv_config=sink.get("csv") or None,
-        integrity_check_level=integrity.get("integrity-check-level", "none"),
-        sink_uri=doc.get("sink-uri", "blackhole://"),
-        transaction_atomicity=sink.get("transaction-atomicity", "none"),
-        bdr_mode=doc.get("bdr-mode", False),
-        enable_table_across_nodes=sched.get("enable-table-across-nodes", False),
-        region_threshold=sched.get("region-threshold", 10_000),
-        write_key_threshold=sched.get("write-key-threshold", 0),
-        start_ts=int(doc.get("start-ts", 0)),
-        target_ts=int(doc.get("target-ts", 0)),
-        performance_mode=doc.get("performance-mode") or "throughput",
-        check_gc_safe_point=doc.get("check-gc-safe-point", True),
-        enable_table_monitor=doc.get("enable-table-monitor", False),
-        ignore_ineligible_table=doc.get("ignore-ineligible-table", False),
-        sql_mode=doc.get("sql-mode", ""),
-        enable_active_active=doc.get("enable-active-active", False),
-        event_collector_batch_count=doc.get("event-collector-batch-count"),
-        event_collector_batch_bytes=doc.get("event-collector-batch-bytes"),
-        mounter_worker_num=(doc.get("mounter") or {}).get("worker-num", 16),
-        consistent=parse_consistent_config(doc.get("consistent")),
-        # [sink.open]/[sink.debezium] sub-blocks (`sink.go:88-89`
-        # defaults OutputOldValue: true)
-        open_output_old_value=(sink.get("open") or {}).get(
-            "output-old-value", True),
-        debezium_output_old_value=(sink.get("debezium") or {}).get(
-            "output-old-value", True),
-        debezium_disable_schema=sink.get("debezium-disable-schema", False),
-        content_compatible=sink.get("content-compatible", False),
-        # avro sink fields (`sink.go:147-149,453-455`; codec defaults
-        # `codec/common/config.go:130-132`)
-        avro_enable_watermark=sink.get("avro-enable-watermark", False),
-        avro_decimal_handling_mode=sink.get(
-            "avro-decimal-handling-mode") or "precise",
-        avro_bigint_unsigned_handling_mode=sink.get(
-            "avro-bigint-unsigned-handling-mode") or "long",
-        schema_registry=sink.get("schema-registry", ""),
-        # bootstrap knobs + sink watchdog (`sink.go:36-37,87-96`)
-        send_bootstrap_interval_s=sink.get(
-            "send-bootstrap-interval-in-sec", 120),
-        send_bootstrap_in_msg_count=sink.get(
-            "send-bootstrap-in-msg-count", 10_000),
-        send_bootstrap_to_all_partition=sink.get(
-            "send-bootstrap-to-all-partition", True),
-        send_all_bootstrap_at_start=sink.get(
-            "send-all-bootstrap-at-start", False),
-        advance_timeout_s=sink.get("advance-timeout-in-sec", 150),
-        cloud_storage_config=parse_cloud_storage_config(
-            sink.get("cloud-storage-config")),
-        # connector sub-configs (`pkg/config/sink.go` KafkaConfig /
-        # PulsarConfig / MySQLConfig TOML tables)
-        kafka_config=(dict(sink["kafka-config"])
-                      if sink.get("kafka-config") else None),
-        pulsar_config=(dict(sink["pulsar-config"])
-                       if sink.get("pulsar-config") else None),
-        mysql_config=(dict(sink["mysql-config"])
-                      if sink.get("mysql-config") else None),
-    )
-    # avro handling-mode validation (`codec/common/config.go:414-421`)
-    if cfg.avro_decimal_handling_mode not in ("precise", "string"):
-        raise ValueError(
-            "avro-decimal-handling-mode must be 'precise' or 'string', "
-            f"got {cfg.avro_decimal_handling_mode!r}")
-    if cfg.avro_bigint_unsigned_handling_mode not in ("long", "string"):
-        raise ValueError(
-            "avro-bigint-unsigned-handling-mode must be 'long' or "
-            f"'string', got {cfg.avro_bigint_unsigned_handling_mode!r}")
-    # CSV always renders all delete columns (`pkg/config/sink.go:867-871`)
-    if cfg.delete_only_output_handle_key and cfg.protocol == "csv":
-        raise ValueError(
-            "CSV protocol always output all columns for the delete event, "
-            "do not set `delete-only-output-handle-key-columns` to true")
-    # [sink.csv] validation (`pkg/config/sink.go:292-345`
-    # CSVConfig.validateAndAdjust)
-    if cfg.csv_config is not None:
-        c = cfg.csv_config
-        cquote = c.get("quote", '"')
-        if len(cquote) > 1:
-            raise ValueError("csv config quote contains more than one character")
-        if cquote in ("\r", "\n"):
-            raise ValueError("csv config quote cannot be line break character")
-        delim = c.get("delimiter", ",")
-        if not delim:
-            raise ValueError("csv config delimiter cannot be empty")
-        if len(delim) > 3:
-            raise ValueError(
-                "csv config delimiter contains more than three characters")
-        if "\r" in delim or "\n" in delim:
-            raise ValueError(
-                "csv config delimiter contains line break characters")
-        if cquote and any(ch in cquote for ch in delim):
-            raise ValueError(
-                "csv config quote and delimiter has common characters "
-                "which is not allowed")
-        if c.get("binary-encoding-method", "base64") not in ("base64", "hex"):
-            raise ValueError(
-                "csv config binary-encoding-method can only be hex or base64")
-    # [sink.kafka-config] large-message-handle
-    # (`pkg/config/large_message.go:22-35`)
-    lm = (sink.get("kafka-config") or {}).get("large-message-handle")
-    if lm:
-        cfg.large_message_handle = dict(lm)
-        # AdjustAndValidate (`large_message.go:52-59`): compression can
-        # be enabled INDEPENDENTLY of the handle option; the supported
-        # set is compression.Supported = none/snappy/lz4
-        comp = lm.get("large-message-handle-compression", "none") or "none"
-        if comp not in ("none", "snappy", "lz4"):
-            raise ValueError(
-                "large message handle compression is not supported, "
-                f"got {comp}")
-    # ErrTargetTsBeforeStartTs (`api/v2/changefeed.go` verification)
-    if cfg.target_ts and cfg.start_ts and cfg.target_ts < cfg.start_ts:
-        raise ValueError(
-            f"target-ts {cfg.target_ts} must be >= start-ts {cfg.start_ts}")
-    # unknown performance mode (`replica_config.go:290-296`)
-    if cfg.performance_mode not in ("throughput", "low-latency"):
-        raise ValueError(
-            f"unknown performance mode: {cfg.performance_mode}")
-    # event-collector batch bounds (`replica_config.go:384-392`;
-    # 0 disables batching)
-    for name, v in (("event-collector-batch-count",
-                     cfg.event_collector_batch_count),
-                    ("event-collector-batch-bytes",
-                     cfg.event_collector_batch_bytes)):
-        if v is not None and v < 0:
-            raise ValueError(f"{name} must be set not smaller than 0")
-    if (cfg.event_collector_batch_count is not None
-            and cfg.event_collector_batch_count
-            > _MAX_EVENT_COLLECTOR_BATCH):
-        raise ValueError(
-            "event-collector-batch-count must be set not larger than "
-            f"{_MAX_EVENT_COLLECTOR_BATCH}")
-    # synced-status thresholds, seconds (`synced_status_config.go`)
-    synced = doc.get("synced-status") or {}
-    cfg.synced_check_interval_s = synced.get("synced-check-interval", 300)
-    cfg.synced_checkpoint_interval_s = synced.get(
-        "checkpoint-interval", 15)
-    # [sink.kafka-config.codec-config] (`pkg/config/sink.go:449-458`
-    # CodecConfig), merged BEFORE the URI params so URL values override
-    # the file like the reference's mergeConfig+Apply
-    # (`codec/common/config.go:195-212`)
-    kc_toml = sink.get("kafka-config") or {}
-    # TLS knobs from the TOML kafka block (`pkg/config/sink.go:490-494`
-    # EnableTLS / InsecureSkipVerify; URI params override below)
-    if "enable-tls" in kc_toml:
-        cfg.enable_tls = bool(kc_toml["enable-tls"])
-    if "insecure-skip-verify" in kc_toml:
-        cfg.insecure_skip_verify = bool(kc_toml["insecure-skip-verify"])
-    cc = kc_toml.get("codec-config") or {}
-    if "enable-tidb-extension" in cc:
-        cfg.tidb_extension = bool(cc["enable-tidb-extension"])
-    if "output-row-key" in cc:
-        cfg.output_row_key = bool(cc["output-row-key"])
-    if "encoding-format" in cc:
-        if cc["encoding-format"] not in ("json", "avro"):
-            raise ValueError(
-                f"invalid encoding-format {cc['encoding-format']!r}")
-        cfg.encoding_format = cc["encoding-format"]
-    apply_sink_uri_params(cfg)
-    # output-raw-change-event (`pkg/config/sink.go:499-500,744-747`;
-    # consumed per sink type in `downstreamadapter/dispatchermanager/
-    # dispatcher_manager.go:313-320`): suppress the pk/uk update split
-    # for the Kafka and cloud-storage sinks.  Pulsar's spelling parses
-    # but is not in the reference's sink-type switch (ignored there
-    # too); the reference's own cloudstorage sink carries a "todo:
-    # this field is not take effects yet" note (`downstreamadapter/
-    # sink/cloudstorage/sink.go:55-56`) yet the dispatcher manager DOES
-    # gate the split on it — we follow the dispatcher manager.
-    from ticdc_spark.pipeline import STORAGE_SCHEMES, sink_scheme
-
-    _scheme = sink_scheme(cfg).split("+")[0]
-    if _scheme == "kafka":
-        raw = (cfg.kafka_config or {}).get("output-raw-change-event", False)
-    elif _scheme in STORAGE_SCHEMES:
-        raw = (cfg.cloud_storage_config or {}).get(
-            "output-raw-change-event", False)
-    else:
-        raw = False
-    if raw:
-        cfg.split_updates = False
-    if sync_interval:
-        cfg.sync_point_interval_us = parse_duration_us(sync_interval)
-    if sync_retention:
-        cfg.sync_point_retention_us = parse_duration_us(sync_retention)
-    if (stuck := doc.get("changefeed-error-stuck-duration")) is not None:
-        us = parse_duration_us(stuck)
-        # min 30 minutes (`replica_config.go:42,374-381`)
-        if us < 30 * 60 * 1_000_000:
-            raise ValueError(
-                f"The ChangefeedErrorStuckDuration:{us / 1e6} must be "
-                "larger than 1800 Seconds")
-        cfg.changefeed_error_stuck_duration_us = us
-    for name, attr in (
-            ("active-active-progress-interval",
-             "active_active_progress_interval_us"),
-            ("active-active-sync-stats-interval",
-             "active_active_sync_stats_interval_us")):
-        if (v := doc.get(name)) is not None:
-            setattr(cfg, attr, parse_duration_us(v))
-    return cfg
+# -- validators: (key name, raw value) -> value | SKIP, or raise -------------
+SKIP = object()  # an absent key, or a value the reference ignores
 
 
-# -- sink-URI query parameters ----------------------------------------------
-# The reference configures sinks through the URI's query string (mysql:
-# `pkg/sink/mysql/config.go:529-676` worker-count/max-txn-row/safe-mode;
-# kafka: `pkg/sink/kafka/options.go:111-138` form tags; storage/pulsar
-# similar). The params our engine models fold into ChangefeedConfig;
-# unknown params are ignored like gin's form binding.
-_MAX_WORKER_COUNT = 1024  # `config.go:59`, clamp with a warning
+def _pass(name, v):
+    return v
 
 
-def apply_sink_uri_params(cfg) -> None:
-    """Mutates ``cfg`` with the modeled sink-URI query parameters."""
-    from urllib.parse import parse_qs, urlsplit
+def _bool(name, v):
+    return v.lower() == "true" if isinstance(v, str) else bool(v)
 
-    u = urlsplit(cfg.sink_uri)
-    # an +ssl scheme implies TLS even without query params
-    if u.scheme.lower().endswith("+ssl") or u.scheme.lower() == "https":
-        cfg.enable_tls = True
-    query = u.query
-    if not query:
-        return
-    q = {k: v[-1] for k, v in parse_qs(query).items()}
 
-    def _pos_int(name: str) -> int | None:
-        if name not in q:
-            return None
-        try:
-            v = int(q[name])
-        except ValueError:
-            raise ValueError(
-                f"invalid {name} {q[name]!r}: not an integer") from None
-        if v <= 0:
-            raise ValueError(
-                f"invalid {name} {v}, which must be greater than 0")
+def _text(name, v):
+    """A string whose empty spelling means unset."""
+    return v or SKIP
+
+
+def _int(name, v) -> int:
+    try:
+        return int(v)
+    except (TypeError, ValueError):
+        raise ValueError(f"invalid {name} {v!r}: not an integer") from None
+
+
+def _at_least(lo: int, cap: int | None = None):
+    """An integer >= ``lo``, clamped down to ``cap`` like the reference."""
+    bound = "greater than 0" if lo == 1 else f"greater than or equal to {lo}"
+
+    def check(name, v):
+        n = _int(name, v)
+        if n < lo:
+            raise ValueError(f"invalid {name} {n}, which must be {bound}")
+        return n if cap is None else min(n, cap)
+    return check
+
+
+_positive = _at_least(1)
+
+
+def _enum(*choices, error="invalid {name} {v!r}", blank=False):
+    def check(name, v):
+        if blank and not v:
+            return SKIP
+        if v not in choices:
+            raise ValueError(error.format(name=name, v=v))
         return v
-
-    if "protocol" in q:
-        cfg.protocol = q["protocol"]
-    if "encoding-format" in q:
-        if q["encoding-format"] not in ("json", "avro"):
-            raise ValueError(
-                f"invalid encoding-format {q['encoding-format']!r}")
-        cfg.encoding_format = q["encoding-format"]
-    if (v := _pos_int("partition-num")) is not None:
-        cfg.n_partitions = v
-    if (v := _pos_int("max-message-bytes")) is not None:
-        cfg.max_message_bytes = v
-        if cfg.large_message_handle:
-            cfg.large_message_handle.setdefault("max-message-bytes", v)
-    if (v := _pos_int("worker-count")) is not None:
-        cfg.worker_count = min(v, _MAX_WORKER_COUNT)
-    if (v := _pos_int("max-txn-row")) is not None:
-        cfg.max_txn_row = v
-    if (v := _pos_int("max-batch-size")) is not None:
-        cfg.max_batch_size = v
-    if "compression" in q and q["compression"] not in ("", "none"):
-        cfg.compression = q["compression"]
-    if "safe-mode" in q:
-        cfg.safe_mode = q["safe-mode"].lower() == "true"
-    if "enable-tidb-extension" in q:
-        cfg.tidb_extension = q["enable-tidb-extension"].lower() == "true"
-    if "output-row-key" in q:
-        # canal-json only (`codec/common/config.go:190-192` form tag)
-        cfg.output_row_key = q["output-row-key"].lower() == "true"
-    if "transaction-atomicity" in q:
-        cfg.transaction_atomicity = q["transaction-atomicity"]
-    # avro form params (`codec/common/config.go:173-181,224-229`)
-    if "avro-enable-watermark" in q:
-        cfg.avro_enable_watermark = (
-            q["avro-enable-watermark"].lower() == "true")
-    if q.get("avro-decimal-handling-mode"):
-        if q["avro-decimal-handling-mode"] not in ("precise", "string"):
-            raise ValueError(
-                "avro-decimal-handling-mode must be 'precise' or "
-                f"'string', got {q['avro-decimal-handling-mode']!r}")
-        cfg.avro_decimal_handling_mode = q["avro-decimal-handling-mode"]
-    if q.get("avro-bigint-unsigned-handling-mode"):
-        if q["avro-bigint-unsigned-handling-mode"] not in (
-                "long", "string"):
-            raise ValueError(
-                "avro-bigint-unsigned-handling-mode must be 'long' or "
-                f"'string', got "
-                f"{q['avro-bigint-unsigned-handling-mode']!r}")
-        cfg.avro_bigint_unsigned_handling_mode = (
-            q["avro-bigint-unsigned-handling-mode"])
-    if q.get("schema-registry"):
-        cfg.schema_registry = q["schema-registry"]
-    # TLS credential triple (`pkg/security/credential.go:107-110`):
-    # kafka spells it ca/cert/key + enable-tls (`pkg/sink/kafka/
-    # options.go`), mysql ssl-ca/ssl-cert/ssl-key (`pkg/sink/mysql/
-    # config.go`); both normalize to the same Credential
-    if "enable-tls" in q:
-        cfg.enable_tls = q["enable-tls"].lower() == "true"
-    if "insecure-skip-verify" in q:
-        # "Only set InsecureSkipVerify when enable the TLS"
-        # (`pkg/sink/kafka/options.go:423-425`) — the knob is parsed
-        # here and gated on enable_tls at the dialer
-        cfg.insecure_skip_verify = (
-            q["insecure-skip-verify"].lower() == "true")
-    ca = q.get("ca") or q.get("ssl-ca") or ""
-    cert = q.get("cert") or q.get("ssl-cert") or ""
-    key = q.get("key") or q.get("ssl-key") or ""
-    if bool(cert) != bool(key):
-        raise ValueError(
-            "TLS client credential needs BOTH cert and key "
-            f"(got cert={cert!r}, key={key!r})")
-    if ca:
-        cfg.tls_ca_path = ca
-        cfg.enable_tls = True
-    cfg.tls_cert_path = cert or cfg.tls_cert_path
-    cfg.tls_key_path = key or cfg.tls_key_path
-
-    # kafka SASL family (`pkg/sink/kafka/options.go:123-135` form tags;
-    # mechanism set `pkg/security/sasl.go:43-58`) — URI params override
-    # the [sink.kafka-config] TOML section, like the reference's Apply
-    sasl_keys = [k for k in q if k.startswith("sasl-")]
-    if sasl_keys:
-        kc = dict(cfg.kafka_config or {})
-        for k in sasl_keys:
-            kc[k] = q[k]
-        cfg.kafka_config = kc
-    mech = (cfg.kafka_config or {}).get("sasl-mechanism")
-    if mech and mech.lower() not in SASL_MECHANISMS:
-        raise ValueError(f"unknown {mech} SASL mechanism")
-
-    scheme = u.scheme.lower().split("+")[0]
-    if scheme in ("kafka", "kafkas"):
-        # kafka producer-semantics form tags (`options.go:111-138`):
-        # these route into the kafka sub-config, NOT the mysql knobs —
-        # kafka's read-timeout/write-timeout are legitimate kafka
-        # params (`options.go:120-121`), previously mis-bucketed
-        kc = dict(cfg.kafka_config or {})
-        kc_changed = False
-        for k in ("dial-timeout", "read-timeout", "write-timeout"):
-            if k in q:
-                parse_duration_us(q[k])  # raises on bad duration
-                kc[k] = q[k]
-                kc_changed = True
-        for k in ("kafka-version", "kafka-client-id"):
-            if q.get(k):
-                kc[k] = q[k]
-                kc_changed = True
-        if "auto-create-topic" in q:
-            kc["auto-create-topic"] = q["auto-create-topic"].lower() == "true"
-            kc_changed = True
-        if "replication-factor" in q:
-            rf = int(q["replication-factor"])
-            if rf <= 0:
-                raise ValueError(f"invalid replication-factor {rf}")
-            kc["replication-factor"] = rf
-            kc_changed = True
-        if "required-acks" in q:
-            kc["required-acks"] = int(q["required-acks"])
-            kc_changed = True
-        if kc_changed:
-            cfg.kafka_config = kc
-        validate_required_acks(cfg.kafka_config)
-    elif scheme in ("mysql", "tidb"):
-        # mysql sink knobs (`pkg/sink/mysql/config.go:277-283,624-700`),
-        # gated on the URI scheme like the reference's per-sink option
-        # parsing: durations validated, invalid tidb-txn-mode ignored
-        # with the reference's warning semantics (default kept)
-        mc = dict(cfg.mysql_config or {})
-        mc_changed = False
-        for k in ("read-timeout", "write-timeout", "timeout"):
-            if k in q:
-                parse_duration_us(q[k])  # raises on bad duration
-                mc[k] = q[k]
-                mc_changed = True
-        if q.get("tidb-txn-mode"):
-            if q["tidb-txn-mode"] in ("pessimistic", "optimistic"):
-                mc["tidb-txn-mode"] = q["tidb-txn-mode"]
-                mc_changed = True
-            # else: reference logs "invalid tidb-txn-mode, should be
-            # pessimistic or optimistic" and keeps the default
-        if "time-zone" in q:
-            mc["time-zone"] = q["time-zone"]
-            mc_changed = True
-        for k in ("max-multi-update-row", "max-txn-row"):
-            if k in q:
-                v = int(q[k])
-                if v <= 0:
-                    raise ValueError(
-                        f"invalid {k} {v}, which must be greater than 0")
-                mc[k] = v
-                mc_changed = True
-        if "max-multi-update-row-size" in q:
-            # getMaxMultiUpdateRowSize (`pkg/sink/mysql/config.go:599-621`)
-            # accepts 0 — "multi-row UPDATE off": the size gate
-            # size < 0*len(rows) never passes, forcing per-row UPDATEs.
-            # Only negatives are invalid.
-            v = int(q["max-multi-update-row-size"])
-            if v < 0:
-                raise ValueError(
-                    f"invalid max-multi-update-row-size {v}, which must "
-                    "be greater than or equal to 0")
-            mc["max-multi-update-row-size"] = v
-            mc_changed = True
-        for k in ("enable-batch-dml", "enable-multi-statement",
-                  "enable-cache-prepared-statement"):
-            if k in q:
-                mc[k] = q[k].lower() == "true"
-                mc_changed = True
-        if mc_changed:
-            cfg.mysql_config = mc
+    return check
 
 
-def validate_required_acks(kafka_config: dict | None) -> int:
-    """required-acks (`pkg/sink/kafka/options.go:95-108`
-    requireAcksFromString): only -1 (WaitForAll, default), 0
-    (NoResponse) and 1 (WaitForLocal) are legal."""
-    acks = (kafka_config or {}).get("required-acks", -1)
+def _duration(name, v):
+    return parse_duration_us(v)
+
+
+def _stuck_duration(name, v):
+    us = parse_duration_us(v)
+    if us < _MIN_ERROR_STUCK_US:
+        raise ValueError(f"The ChangefeedErrorStuckDuration:{us / 1e6} must "
+                         "be larger than 1800 Seconds")
+    return us
+
+
+def _batch_bound(cap: int | None = None):
+    """event-collector batching bounds (`replica_config.go:384-392`;
+    0 disables batching)."""
+    def check(name, v):
+        if v < 0:
+            raise ValueError(f"{name} must be set not smaller than 0")
+        if cap is not None and v > cap:
+            raise ValueError(f"{name} must be set not larger than {cap}")
+        return v
+    return check
+
+
+def _compression(name, v):
+    return None if v in ("", "none") else v
+
+
+def _acks(name, v):
+    """requireAcksFromString (`pkg/sink/kafka/options.go:95-108`)."""
+    acks = _int(name, v)
     if acks not in (-1, 0, 1):
         raise ValueError(
             f"invalid required acks {acks}, only support these values: "
@@ -612,21 +229,449 @@ def validate_required_acks(kafka_config: dict | None) -> int:
     return acks
 
 
-#: `pkg/security/sasl.go:43-58` SASLMechanismFromString
-SASL_MECHANISMS = ("plain", "scram-sha-256", "scram-sha-512", "gssapi",
-                   "oauthbearer")
+def _sasl_mechanism(name, v):
+    if v.lower() not in SASL_MECHANISMS:
+        raise ValueError(f"unknown {v} SASL mechanism")
+    return v
+
+
+def _txn_mode(name, v):
+    # an invalid mode keeps the default with a warning
+    # (`pkg/sink/mysql/config.go:624-636`)
+    return v if v in ("pessimistic", "optimistic") else SKIP
+
+
+_EXPR_KEYS = {"ignore-insert-value-expr", "ignore-update-new-value-expr",
+              "ignore-update-old-value-expr", "ignore-delete-value-expr"}
+
+
+def _event_filters(name, efs):
+    """[filter] event-filters → (event_filters, expr_filter): the
+    ignore-*-value-expr keys form the one expression filter."""
+    event_filters, expr_filter = [], None
+    for ef in efs:
+        plain = {k: v for k, v in ef.items() if k not in _EXPR_KEYS}
+        exprs = {k: v for k, v in ef.items() if k in _EXPR_KEYS}
+        if set(plain) - {"matcher"}:
+            event_filters.append(plain)
+        if exprs:
+            expr_filter = {"matcher": ef.get("matcher", ["*.*"]), **exprs}
+    return event_filters, expr_filter
+
+
+def _column_selectors(name, css):
+    return [{"matcher": cs.get("matcher", ["*.*"]),
+             "columns": cs.get("columns", [])} for cs in css]
+
+
+def _dispatchers(name, ds):
+    return [{"matcher": d.get("matcher", ["*.*"]),
+             "partition": d.get("partition", d.get("dispatcher")),
+             "topic": d.get("topic"), "columns": d.get("columns")}
+            for d in ds]
+
+
+def _csv(name, c):
+    """[sink.csv] (`pkg/config/sink.go:292-345` CSVConfig.validateAndAdjust)."""
+    if not c:
+        return None
+    quote, delim = c.get("quote", '"'), c.get("delimiter", ",")
+    for bad, what in (
+            (len(quote) > 1, "quote contains more than one character"),
+            (quote in ("\r", "\n"), "quote cannot be line break character"),
+            (not delim, "delimiter cannot be empty"),
+            (len(delim) > 3, "delimiter contains more than three characters"),
+            ("\r" in delim or "\n" in delim,
+             "delimiter contains line break characters"),
+            (quote and any(ch in quote for ch in delim), "quote and "
+             "delimiter has common characters which is not allowed"),
+            (c.get("binary-encoding-method", "base64") not in (
+                "base64", "hex"), "binary-encoding-method can only be hex "
+             "or base64")):
+        if bad:
+            raise ValueError(f"csv config {what}")
+    return c
+
+
+def _large_message_handle(name, lm):
+    """AdjustAndValidate (`pkg/config/large_message.go:52-59`): the
+    compression, independent of the handle option, is none/snappy/lz4."""
+    if not lm:
+        return SKIP
+    comp = lm.get("large-message-handle-compression", "none") or "none"
+    if comp not in ("none", "snappy", "lz4"):
+        raise ValueError(
+            f"large message handle compression is not supported, got {comp}")
+    return dict(lm)
+
+
+# -- the key table -----------------------------------------------------------
+READ, SPARK, REFUSED = "read", "spark", "refused"
+
+
+@dataclass(frozen=True)
+class Key:
+    """One changefeed config key and what becomes of it."""
+
+    toml: tuple[str, ...]   # dotted TOML paths; a later spelling wins
+    uri: tuple[str, ...]    # sink-URI params; the first present wins
+    check: Callable         # (name, raw) -> value | SKIP, or raises
+    ref: str                # the reference's definition
+    disposition: str        # READ | SPARK | REFUSED
+    note: str               # the reader | Spark mechanism | why refused
+    # the ChangefeedConfig field ("field.sub-key" in a sub-config dict)
+    field: str | tuple | None = None
+    default: object = None  # spark/refused: the reference default
+    schemes: tuple[str, ...] = ()  # URI schemes reading the param; () = all
+    always: bool = False    # normalize the section even when it is absent
+
+
+def _seq(x) -> tuple:
+    return () if x is None else (x,) if isinstance(x, str) else x
+
+
+def _read(toml, uri, field, check, ref, reader, **kw) -> Key:
+    return Key(_seq(toml), _seq(uri), check, ref, READ, reader, field, **kw)
+
+
+def _spark(toml, uri, check, default, ref, mechanism, **kw) -> Key:
+    return Key(_seq(toml), _seq(uri), check, ref, SPARK, mechanism,
+               default=default, **kw)
+
+
+def _refused(toml, uri, check, default, ref, why, **kw) -> Key:
+    return Key(_seq(toml), _seq(uri), check, ref, REFUSED, why,
+               default=default, **kw)
+
+
+_KAFKA, _MYSQL = ("kafka", "kafkas"), ("mysql", "tidb")
+_KC, _MC, _PC = "sink.kafka-config.", "sink.mysql-config.", "sink.pulsar-config."
+_CODEC = _KC + "codec-config."
+_BUILD = "pipeline.build_pipeline"
+_ENCODE = "pipeline._encode"
+_TAIL = "pipeline.compile_sink_tail"
+_PRODUCE = "kafka_live.produce_options"
+_API = "api create (ineligible tables)"
+_BOOTSTRAP = "pipeline.compile_bootstrap"
+
+KEYS: list[Key] = [
+    # --- ReplicaConfig top level (`pkg/config/replica_config.go:51-130`)
+    # and SinkConfig (`pkg/config/sink.go:139`) keys that pass through
+    *[_read(toml, None, field_, _pass, ref, reader)
+      for toml, field_, ref, reader in (
+          ("filter.rules", "filter_rules", "filter.go:21", _BUILD),
+          ("case-sensitive", "case_sensitive", "replica_config.go:54", _BUILD),
+          ("force-replicate", "force_replicate", "changefeed.go ForceReplicate",
+           _API),
+          ("ignore-ineligible-table", "ignore_ineligible_table",
+           "replica_config.go IgnoreIneligibleTable", _API),
+          # a positive integer, checked by ChangefeedConfig itself
+          ("memory-quota", "memory_quota", "server.go:45", "Changefeed.start"),
+          ("enable-sync-point", "enable_sync_point", "replica_config.go:57",
+           "Changefeed._commit_epoch"),
+          ("bdr-mode", "bdr_mode", "replica_config.go:61", _BUILD),
+          ("sink-uri", "sink_uri", "changefeed.go:252", "pipeline.sink_scheme"),
+          ("integrity.integrity-check-level", "integrity_check_level",
+           "integrity.go:24-43", _BUILD),
+          ("scheduler.enable-table-across-nodes", "enable_table_across_nodes",
+           "scheduler_config.go:36", "api changefeed detail"),
+          ("synced-status.synced-check-interval", "synced_check_interval_s",
+           "synced_status_config.go:17-23", "api /synced"),
+          ("synced-status.checkpoint-interval", "synced_checkpoint_interval_s",
+           "synced_status_config.go:17-23", "api /synced"),
+          ("sink.only-output-updated-columns", "only_output_updated_columns",
+           "sink.go:139", _BUILD),
+          ("sink.terminator", "terminator", "sink.go:60", _ENCODE),
+          ("sink.date-separator", "date_separator", "replica_config.go:77", _TAIL),
+          ("sink.enable-partition-separator", "enable_partition_separator",
+           "sink.go:157", _TAIL),
+          ("sink.file-index-width", "file_index_width", "sink.go:68-73", _TAIL),
+          ("sink.open.output-old-value", "open_output_old_value",
+           "replica_config.go:88", _ENCODE),
+          ("sink.debezium.output-old-value", "debezium_output_old_value",
+           "replica_config.go:89", _ENCODE),
+          ("sink.debezium-disable-schema", "debezium_disable_schema",
+           "replica_config.go:87", _ENCODE),
+          ("sink.content-compatible", "content_compatible", "replica_config.go:80",
+           _ENCODE),
+          ("sink.send-bootstrap-interval-in-sec", "send_bootstrap_interval_s",
+           "sink.go:87-96", _BOOTSTRAP),
+          ("sink.send-bootstrap-to-all-partition", "send_bootstrap_to_all_partition",
+           "sink.go:87-96", _BOOTSTRAP))],
+    _read("filter.event-filters", None, ("event_filters", "expr_filter"),
+          _event_filters, "filter.go:27-47", _BUILD),
+    _read("sink.column-selectors", None, "column_selectors", _column_selectors,
+          "sink.go:139", _BUILD),
+    _read("sink.dispatchers", None, "dispatchers", _dispatchers, "sink.go:139", _BUILD),
+    # the reference spells the second; the first is kept for back-compat
+    _read(("sink.delete-only-output-handle-key",
+           "sink.delete-only-output-handle-key-columns"), None,
+          "delete_only_output_handle_key", _pass, "sink.go:167", _BUILD),
+    _read("sync-point-interval", None, "sync_point_interval_us", _duration,
+          "replica_config.go:59", "Changefeed._write_syncpoints"),
+    *[_read(k, None, k.replace("-", "_"), _int, "changefeed.go:252-281",
+            "pipeline.apply_replication_window") for k in ("start-ts", "target-ts")],
+    _read("changefeed-error-stuck-duration", None,
+          "changefeed_error_stuck_duration_us", _stuck_duration,
+          "replica_config.go:42,374-381", "registry.run (ChangefeedBackoff)"),
+    _read("consistent", None, "consistent", lambda n, v: parse_consistent_config(v),
+          "consistent.go:28-141", "Changefeed._write_sink (redo WAL)", always=True),
+    _read("sink.csv", None, "csv_config", _csv, "sink.go:292-345",
+          f"{_ENCODE}, s3_live"),
+    _read("sink.cloud-storage-config", None, "cloud_storage_config",
+          lambda n, v: parse_cloud_storage_config(v), "sink.go:733-740",
+          f"{_TAIL}, s3_live (spool)", always=True),
+    _read("sink.protocol", "protocol", "protocol", _pass, "sink_protocol.go:33-44",
+          _ENCODE),
+    _read(("sink.codec.encoding-format", _CODEC + "encoding-format"),
+          "encoding-format", "encoding_format", _enum("json", "avro"),
+          "sink.go:449-458", _ENCODE),
+    _read("sink.safe-mode", "safe-mode", "safe_mode", _bool, "sink.go:139", _TAIL),
+    _read("sink.transaction-atomicity", "transaction-atomicity",
+          "transaction_atomicity", _pass, "sink.go:140", _TAIL),
+    _read("sink.avro-enable-watermark", "avro-enable-watermark",
+          "avro_enable_watermark", _bool, "sink.go:147", _ENCODE),
+    _read(_CODEC + "enable-tidb-extension", "enable-tidb-extension", "tidb_extension",
+          _bool, "codec/common/config.go:173-181", _ENCODE),
+    _read(_CODEC + "output-row-key", "output-row-key", "output_row_key", _bool,
+          "codec/common/config.go:190-192", _ENCODE),
+    # sink-URI form params (`pkg/sink/kafka/options.go:111-138`,
+    # `pkg/sink/mysql/config.go:529-676`)
+    _read(None, "partition-num", "n_partitions", _positive, "kafka/options.go:111-138",
+          _BUILD),
+    _read(None, "max-message-bytes", "max_message_bytes", _positive, "sink.go:35",
+          _BUILD),
+    _read(None, "compression", "compression", _compression, "kafka/options.go:111-138",
+          "Changefeed._write_sink, pipeline"),
+    _read(_MC + "max-txn-row", "max-txn-row", "max_txn_row", _at_least(1, cap=2048),
+          "mysql/config.go:49-50", _TAIL),
+    # --- delegated to Spark: checked, then dropped
+    _spark("mounter.worker-num", None, _pass, 16, "mounter.go:17",
+           "decode runs in Spark tasks (SURVEY.md:376 task scheduling)"),
+    # worker-count parses on every scheme (`mysql/config.go:59`)
+    _spark(_MC + "worker-count", "worker-count", _positive, 16, "mysql/config.go:59",
+           "statements are written by Spark tasks (SURVEY.md:376 task scheduling)"),
+    *[_spark("scheduler." + k, None, _pass, default, ref, "hot tables spread by "
+             "repartition and AQE skew handling (SURVEY.md:226)")
+      for k, default, ref in (("region-threshold", 10_000, "replica_config.go:109"),
+                              ("write-key-threshold", 0, "replica_config.go:107-118"))],
+    *[_spark(k, None, _batch_bound(cap), None, "replica_config.go:48,384-392",
+             "each epoch is one micro-batch sized by memory-quota "
+             "(SURVEY.md:379 maxOffsetsPerTrigger)")
+      for k, cap in (("event-collector-batch-count", _MAX_EVENT_COLLECTOR_BATCH),
+                     ("event-collector-batch-bytes", None))],
+    # --- refused: nothing honours them
+    _refused("performance-mode", None, _enum(
+             "throughput", "low-latency", blank=True,
+             error="unknown performance mode: {v}"), "throughput",
+             "replica_config.go:35-36,290-296", "the epoch pipeline has one mode"),
+    _refused("check-gc-safe-point", None, _bool, True, "replica_config.go:55",
+             "the API's create always checks start-ts against the GC safepoint"),
+    _refused("sync-point-retention", None, _duration, "24h", "replica_config.go:60",
+             "the syncpoint ledger keeps every record"),
+    _refused("enable-table-monitor", None, _bool, False, "replica_config.go:58",
+             "no per-table monitor exists"),
+    _refused("sql-mode", None, _pass, "", "replica_config.go SQLMode",
+             "no upstream DDL is parsed under a configured SQL mode"),
+    *[_refused(k, None, check, default, ref,
+               "active-active replication is not implemented (bdr-mode is)")
+      for k, check, default, ref in (
+          ("enable-active-active", _bool, False, "replica_config.go:43"),
+          ("active-active-progress-interval", _duration, "30m",
+           "replica_config.go:127"),
+          ("active-active-sync-stats-interval", _duration, "1m",
+           "replica_config.go:128"))],
+    *[_refused("sink." + k, k, _enum(default, "string", blank=True), default,
+               "codec/common/config.go:130-132,414-421",
+               f"the Avro encoders have no {kind} column to write as a string")
+      for k, default, kind in (
+          ("avro-decimal-handling-mode", "precise", "decimal"),
+          ("avro-bigint-unsigned-handling-mode", "long", "unsigned bigint"))],
+    _refused("sink.schema-registry", "schema-registry", _text, "", "sink.go:147-149",
+             "the Avro encoders register each Arrow batch's schemas in a fresh "
+             "in-memory registry, so no schema id would come from this registry"),
+    _refused(None, "max-batch-size", _positive, 16, "codec/common/config.go:34-35",
+             "the open-protocol frame is one message per row; nothing batches "
+             "messages"),
+    *[_refused("sink." + k, None, check, default, ref, why)
+      for k, check, default, ref, why in (
+          ("send-bootstrap-in-msg-count", _pass, 10_000, "sink.go:87-96",
+           "BOOTSTRAP frames go out per epoch, not by message count"),
+          ("send-all-bootstrap-at-start", _bool, False, "sink.go:87-96",
+           "BOOTSTRAP frames go out per epoch, not all at start"),
+          ("advance-timeout-in-sec", _pass, 150, "sink.go:36-37",
+           "no sink-stall watchdog restarts the sink"))],
+    # --- [sink.kafka-config] (`pkg/config/sink.go:460-500`)
+    _read(_KC + "large-message-handle", None, "large_message_handle",
+          _large_message_handle, "large_message.go:22-59", _BUILD),
+    _read(_KC + "output-raw-change-event", None, "kafka_config.output-raw-change-event",
+          _bool, "sink.go:499-500", "config.parse_changefeed_config (split_updates)"),
+    *[_read(_KC + k if toml else None, k, field_, check, ref, _PRODUCE, schemes=_KAFKA)
+      for k, toml, field_, check, ref in (
+          ("enable-tls", True, "enable_tls", _bool, "sink.go:490"),
+          ("insecure-skip-verify", True, "insecure_skip_verify", _bool,
+           "sink.go:494, kafka/options.go:423-425"),
+          ("ca", False, "tls_ca_path", _text, "credential.go:107-110"),
+          ("cert", False, "tls_cert_path", _text, "credential.go:107-110"),
+          ("key", False, "tls_key_path", _text, "credential.go:107-110"),
+          ("kafka-version", True, "kafka_config.kafka-version", _text,
+           "kafka/options.go:253-255"),
+          ("kafka-client-id", True, "kafka_config.kafka-client-id", _text,
+           "sink.go:467"),
+          ("required-acks", True, "kafka_config.required-acks", _acks,
+           "kafka/options.go:95-108"))],
+    *[_read(_KC + k, k, "kafka_config." + k, check, "kafka/options.go:287,555-568",
+            "kafka_live.ensure_topics_from_config", schemes=_KAFKA)
+      for k, check in (("auto-create-topic", _bool),
+                       ("replication-factor", _positive))],
+    *[_refused(_KC + k, k, _duration, "10s", "kafka/options.go:119-121",
+               "Kafka connections keep their fixed socket timeout", schemes=_KAFKA)
+      for k in ("dial-timeout", "read-timeout", "write-timeout")],
+    # SASL (`pkg/config/sink.go:469-489`, URI `kafka/options.go:123-135`)
+    *[_read(_KC + k, k, "kafka_config." + k, check, "sink.go:469-489, sasl.go:43-58",
+            "config.kafka_sasl_spec", schemes=_KAFKA)
+      for k, check in (
+          ("sasl-mechanism", _sasl_mechanism),
+          ("sasl-gssapi-disable-pafxfast", _bool),
+          *[(k, _pass) for k in (
+              "sasl-user", "sasl-password", "sasl-gssapi-auth-type",
+              "sasl-gssapi-keytab-path", "sasl-gssapi-kerberos-config-path",
+              "sasl-gssapi-service-name", "sasl-gssapi-user", "sasl-gssapi-password",
+              "sasl-gssapi-realm", "sasl-oauth-client-id", "sasl-oauth-client-secret",
+              "sasl-oauth-token-url", "sasl-oauth-scopes", "sasl-oauth-grant-type",
+              "sasl-oauth-audience")])],
+    # --- [sink.mysql-config] (`pkg/sink/mysql/config.go:49-85,215-228`);
+    # the clamps are `config.go:59-65`, and a size of 0 turns multi-row
+    # UPDATE off (`config.go:599-621`)
+    *[_read(_MC + k, k, "mysql_config." + k, check, "mysql/config.go:49-85",
+            "config.mysql_batch_options", schemes=_MYSQL)
+      for k, check in (("max-multi-update-row", _at_least(1, cap=256)),
+                       ("max-multi-update-row-size", _at_least(0, cap=8192)),
+                       ("enable-batch-dml", _bool), ("enable-multi-statement", _bool),
+                       ("enable-cache-prepared-statement", _bool))],
+    *[_refused(_MC + k, k, check, default, "mysql/config.go:277-283,529-676",
+               "no task dials the MySQL downstream from the changefeed config: "
+               "the changefeed writes compiled statements", schemes=_MYSQL)
+      for k, check, default in (
+          ("read-timeout", _duration, "2m"), ("write-timeout", _duration, "2m"),
+          ("timeout", _duration, "2m"), ("tidb-txn-mode", _txn_mode, "optimistic"),
+          ("time-zone", _pass, ""), ("ssl-ca", _text, ""), ("ssl-cert", _text, ""),
+          ("ssl-key", _text, ""))],
+    # --- [sink.pulsar-config] (`pkg/config/sink.go:606-676`; tuning
+    # defaults `pkg/sink/pulsar/config.go:25-38`)
+    *[_read(_PC + k, None, "pulsar_config." + k, check, "sink.go:606-676", reader)
+      for k, check, reader in (
+          *[(k, _pass, "config.pulsar_auth") for k in (
+              "authentication-token", "token-from-file", "basic-user-name",
+              "basic-password", "oauth2", "auth-tls-certificate-path",
+              "auth-tls-private-key-path")],
+          *[(k, _positive, "config.pulsar_client_options") for k in (
+              "connection-timeout", "operation-timeout", "batching-max-messages",
+              "batching-max-publish-delay", "send-timeout")],
+          ("pulsar-version", _pass, "config.pulsar_client_options"))],
+]
+
+
+def _lookup(doc: dict, path: str):
+    node = doc
+    for part in path.split("."):
+        if not isinstance(node, dict) or part not in node:
+            return SKIP
+        node = node[part]
+    return node
+
+
+def _apply(target: dict, key: Key, name: str, raw) -> None:
+    """Check one key's value and, for a ``read`` key, store it into
+    ``target`` (a ChangefeedConfig's fields)."""
+    v = key.check(name, raw)
+    if v is SKIP:
+        return
+    if key.disposition == REFUSED and v != key.check(name, key.default):
+        raise ValueError(
+            f"{name} = {raw!r} is refused: {key.note}; only the reference "
+            f"default {key.default!r} is accepted")
+    if key.disposition != READ:
+        return
+    multi = isinstance(key.field, tuple)
+    for field_, value in zip(key.field if multi else (key.field,),
+                             v if multi else (v,)):
+        attr, _, sub = field_.partition(".")
+        target[attr] = {**(target.get(attr) or {}), sub: value} if sub \
+            else value
+
+
+def parse_changefeed_config(text: str, fmt: str = "toml") -> ChangefeedConfig:
+    """A TOML (or JSON) replica config, then its sink URI's params."""
+    doc = tomllib.loads(text) if fmt == "toml" else json.loads(text)
+    fields: dict = {}
+    for key in KEYS:
+        for path in key.toml:
+            raw = _lookup(doc, path)
+            if raw is not SKIP or key.always:
+                _apply(fields, key, path.rsplit(".", 1)[-1],
+                       None if raw is SKIP else raw)
+    cfg = ChangefeedConfig(**fields)
+    # CSV always renders all delete columns (`pkg/config/sink.go:867-871`)
+    if cfg.delete_only_output_handle_key and cfg.protocol == "csv":
+        raise ValueError(
+            "CSV protocol always output all columns for the delete event, "
+            "do not set `delete-only-output-handle-key-columns` to true")
+    # ErrTargetTsBeforeStartTs (`api/v2/changefeed.go` verification)
+    if cfg.target_ts and cfg.start_ts and cfg.target_ts < cfg.start_ts:
+        raise ValueError(
+            f"target-ts {cfg.target_ts} must be >= start-ts {cfg.start_ts}")
+    apply_sink_uri_params(cfg)
+    # output-raw-change-event (`pkg/config/sink.go:499-500,744-747`):
+    # the dispatcher manager suppresses the pk/uk update split for the
+    # Kafka and cloud-storage sinks (`dispatcher_manager.go:313-320`)
+    from ticdc_spark.pipeline import STORAGE_SCHEMES, sink_scheme
+
+    scheme = sink_scheme(cfg).split("+")[0]
+    section = (cfg.kafka_config if scheme == "kafka" else
+               cfg.cloud_storage_config if scheme in STORAGE_SCHEMES else None)
+    if (section or {}).get("output-raw-change-event", False):
+        cfg.split_updates = False
+    return cfg
+
+
+def apply_sink_uri_params(cfg) -> None:
+    """Fold the sink URI's query params into ``cfg`` over what the TOML
+    set, each param gated on the schemes whose sink reads it (mysql:
+    `pkg/sink/mysql/config.go:529-676`; kafka: `pkg/sink/kafka/
+    options.go:111-138`); unknown params are ignored like gin's form
+    binding."""
+    from urllib.parse import parse_qs, urlsplit
+
+    u = urlsplit(cfg.sink_uri)
+    scheme = u.scheme.lower()
+    # an +ssl scheme implies TLS even without query params
+    if scheme.endswith("+ssl") or scheme == "https":
+        cfg.enable_tls = True
+    q = {k: v[-1] for k, v in parse_qs(u.query).items()}
+    scheme = scheme.split("+")[0]
+    for key in KEYS:
+        if key.schemes and scheme not in key.schemes:
+            continue
+        name = next((p for p in key.uri if p in q), None)
+        if name is not None:
+            _apply(vars(cfg), key, name, q[name])
+    # a CA implies TLS; a client identity needs both halves
+    # (`pkg/security/credential.go:107-110`)
+    if cfg.tls_ca_path:
+        cfg.enable_tls = True
+    if bool(cfg.tls_cert_path) != bool(cfg.tls_key_path):
+        raise ValueError(
+            "TLS client credential needs BOTH cert and key (got "
+            f"cert={cfg.tls_cert_path!r}, key={cfg.tls_key_path!r})")
 
 
 def kafka_sasl(cfg) -> tuple[str, str, str] | None:
     """(mechanism, user, password) for ``KafkaConn`` from the merged
-    kafka sub-config, mechanism in the broker's upper-case spelling
-    (`pkg/sink/kafka/options.go:63-71`); None when SASL is off."""
-    kc = cfg.kafka_config or {}
-    mech = kc.get("sasl-mechanism")
-    if not mech:
-        return None
-    return (mech.upper(), kc.get("sasl-user", ""),
-            kc.get("sasl-password", ""))
+    kafka sub-config (`pkg/sink/kafka/options.go:63-71`); None when SASL
+    is off."""
+    spec = kafka_sasl_spec(cfg)
+    return spec and (spec["mechanism"], spec["user"], spec["password"])
 
 
 #: `pkg/security/sasl.go:117-127` AuthTypeFromString
@@ -634,21 +679,12 @@ GSSAPI_AUTH_TYPES = ("user", "keytab")
 
 
 def kafka_sasl_spec(cfg) -> dict | None:
-    """The FULL SASL spec from the merged kafka sub-config — the
-    reference's `options.applySASL` (`pkg/sink/kafka/options.go:431-545`)
-    over the TOML spellings `pkg/config/sink.go:475-489`:
-
-    - ``sasl-gssapi-*`` octet → ``spec["gssapi"]`` (auth-type validated
-      via AuthTypeFromString — user|keytab; keytab/krb5-conf paths pass
-      through for the dialer to resolve);
-    - ``sasl-oauth-*`` family → ``spec["oauth2"]`` with the reference's
-      validation: client-id/client-secret/token-url must be non-empty,
-      the secret is base64-decoded (`options.go:495-508`), OAuth2 is
-      only legal with mechanism oauthbearer (`options.go:519-523`), and
-      grant-type defaults to client_credentials (`sasl.go:96-97`
-      SetDefault).
-
-    Returns None when SASL is off; otherwise
+    """The full SASL spec from the merged kafka sub-config, the
+    reference's `options.applySASL` (`pkg/sink/kafka/options.go:431-545`):
+    ``sasl-gssapi-*`` → ``spec["gssapi"]`` (auth-type user|keytab), and
+    ``sasl-oauth-*`` → ``spec["oauth2"]`` (non-empty client id, base64
+    secret and token url; oauthbearer only; grant-type defaults to
+    client_credentials).  None when SASL is off; otherwise
     ``{"mechanism", "user", "password", "gssapi"?, "oauth2"?}``."""
     import base64 as _b64
 
@@ -656,8 +692,6 @@ def kafka_sasl_spec(cfg) -> dict | None:
     mech = kc.get("sasl-mechanism")
     if not mech:
         return None
-    if mech.lower() not in SASL_MECHANISMS:
-        raise ValueError(f"unknown {mech} SASL mechanism")
     spec: dict = {"mechanism": mech.upper(),
                   "user": kc.get("sasl-user", ""),
                   "password": kc.get("sasl-password", "")}
@@ -675,8 +709,7 @@ def kafka_sasl_spec(cfg) -> dict | None:
             "user": kc.get("sasl-gssapi-user", ""),
             "password": kc.get("sasl-gssapi-password", ""),
             "realm": kc.get("sasl-gssapi-realm", ""),
-            "disable_pafxfast": bool(
-                kc.get("sasl-gssapi-disable-pafxfast", False)),
+            "disable_pafxfast": kc.get("sasl-gssapi-disable-pafxfast", False),
         }
 
     oauth_present = any(k.startswith("sasl-oauth-") for k in kc)
@@ -747,22 +780,13 @@ def parse_krb5_conf(path: str) -> dict[str, str]:
 
 
 def pulsar_auth(cfg) -> dict:
-    """Pulsar client auth kwargs from [sink.pulsar-config]
-    (`pkg/config/sink.go:606-676` PulsarConfig: authentication-token /
-    token-from-file / basic-user-name+basic-password / oauth2 sub-table /
-    auth-tls-certificate-path+auth-tls-private-key-path).
-
-    Provider PRIORITY follows the reference's setupAuthentication
-    (`pkg/sink/pulsar/factory.go:95-125`, first match wins):
-    token > token-from-file > basic > oauth2 > mTLS.
-
-    oauth2-private-key (`sink.go:587-588`) is the PATH of the client's
-    key file — the reference passes it as the pulsar lib's
-    ConfigParamKeyFile (`pkg/sink/pulsar/factory.go:115`), whose JSON
-    carries the client credentials for the client-credentials grant —
-    NOT a literal client secret.  Validation mirrors `OAuth2.validate`
-    (`sink.go:595-603`): issuer-url, audience, private-key and
-    client-id must all be set."""
+    """Pulsar client auth kwargs from [sink.pulsar-config], first match
+    wins as in setupAuthentication (`pkg/sink/pulsar/factory.go:95-125`):
+    token > token-from-file > basic > oauth2 > mTLS.  oauth2-private-key
+    is the PATH of the client's key file, whose JSON carries the client
+    credentials (`factory.go:115` ConfigParamKeyFile); `OAuth2.validate`
+    (`sink.go:595-603`) wants issuer-url, audience, private-key and
+    client-id all set."""
     import json as _json
 
     pc = cfg.pulsar_config or {}
@@ -806,63 +830,33 @@ def pulsar_auth(cfg) -> dict:
     return {}
 
 
-# clamps from `pkg/sink/mysql/config.go:59-65`
-_MAX_MULTI_UPDATE_ROW_COUNT_CAP = 256   # maxMaxMultiUpdateRowCount
-_MAX_MULTI_UPDATE_ROW_SIZE_CAP = 8192   # maxMaxMultiUpdateRowSize
-
-
-def _clamped_size(v) -> int:
-    """max-multi-update-row-size clamp: 0 is a VALID value (disable
-    multi-row UPDATE); negatives/non-ints fall back to the 1024 default;
-    values above maxMaxMultiUpdateRowSize clamp down."""
-    if not isinstance(v, int) or v < 0:
-        return 1024
-    return min(v, _MAX_MULTI_UPDATE_ROW_SIZE_CAP)
+# `pkg/sink/mysql/config.go:49-85`; a row size of 0 turns multi-row
+# UPDATE off: the writer's size*len gate then forces per-row UPDATEs
+_MYSQL_BATCH_DEFAULTS = {
+    "max-multi-update-row": 40,
+    "max-multi-update-row-size": 1024,
+    "enable-batch-dml": True,
+    "enable-multi-statement": True,
+    "enable-cache-prepared-statement": True,
+}
 
 
 def mysql_batch_options(cfg) -> dict:
     """The MySQL writer batching knobs from the merged
     [sink.mysql-config] + sink-URI params
-    (`pkg/sink/mysql/config.go:49-85,181-191,215-228`), reference
-    defaults applied and the documented clamps enforced (values above
-    the max clamp down with a warning in the reference; <=0 falls back
-    to the default)."""
+    (`pkg/sink/mysql/config.go:49-85,181-191,215-228`) with the
+    reference defaults; the key table already clamped them."""
     mc = cfg.mysql_config or {}
-
-    def clamped(key: str, default: int, cap: int) -> int:
-        v = mc.get(key, default)
-        if not isinstance(v, int) or v <= 0:
-            return default
-        return min(v, cap)
-
-    return {
-        "max_txn_row": clamped("max-txn-row", getattr(
-            cfg, "max_txn_row", 256) or 256, 2048),
-        "max_multi_update_row": clamped(
-            "max-multi-update-row", 40, _MAX_MULTI_UPDATE_ROW_COUNT_CAP),
-        # size accepts 0 = disable multi-row UPDATE (getMaxMultiUpdateRowSize
-        # rejects only <0, `pkg/sink/mysql/config.go:609-613`): 0 must pass
-        # through so the writer's size*len gate forces per-row UPDATEs
-        "max_multi_update_row_size": _clamped_size(
-            mc.get("max-multi-update-row-size", 1024)),
-        "enable_batch_dml": bool(mc.get("enable-batch-dml", True)),
-        "enable_multi_statement": bool(
-            mc.get("enable-multi-statement", True)),
-        "enable_cache_prepared_statement": bool(
-            mc.get("enable-cache-prepared-statement", True)),
-    }
+    return {"max_txn_row": cfg.max_txn_row,
+            **{key.replace("-", "_"): mc.get(key, default)
+               for key, default in _MYSQL_BATCH_DEFAULTS.items()}}
 
 
 def large_message_compression(cfg) -> str | None:
-    """The value-compression codec from [sink.kafka-config.
-    large-message-handle] large-message-handle-compression
-    (`pkg/config/large_message.go:33`), or None when off.  The
-    reference applies it to EVERY encoded message value (canal/open/
-    simple encoders call common.Compress unconditionally), so the
-    max-message-bytes gates measure compressed sizes.  The names are
-    `codec/compression.py` codec names: snappy is a raw block
-    (klauspost snappy.Encode) and lz4 the LZ4 frame format (pierrec
-    lz4.NewWriter), as in `pkg/compression/compress.go`."""
+    """The value-compression codec (`codec/compression.py` names) from
+    large-message-handle-compression (`pkg/config/large_message.go:33`),
+    or None when off.  The reference compresses EVERY encoded value, so
+    the max-message-bytes gates measure compressed sizes."""
     comp = (cfg.large_message_handle or {}).get(
         "large-message-handle-compression", "none") or "none"
     return None if comp == "none" else comp
@@ -881,18 +875,10 @@ _PULSAR_TUNING_DEFAULTS = {
 
 def pulsar_client_options(cfg) -> dict:
     """Pulsar client/producer tuning from [sink.pulsar-config]
-    (`pkg/config/sink.go:615-643` PulsarConfig; defaults
-    `pkg/sink/pulsar/config.go:25-38`; consumed into
-    pulsar.ClientOptions at `factory.go:31-40`).  ``pulsar-version``
-    parses and passes through — the reference only logs it
-    (`sink.go:615-616` "print the version of pulsar")."""
+    (`pkg/config/sink.go:615-643`, consumed at `factory.go:31-40`);
+    ``pulsar-version`` passes through, the reference only logs it."""
     pc = cfg.pulsar_config or {}
-    out = {}
-    for key, default in _PULSAR_TUNING_DEFAULTS.items():
-        v = pc.get(key, default)
-        if not isinstance(v, int) or v <= 0:
-            raise ValueError(f"invalid pulsar {key}: {v!r} "
-                             "(must be a positive integer)")
-        out[key.replace("-", "_")] = v
+    out = {key.replace("-", "_"): pc.get(key, default)
+           for key, default in _PULSAR_TUNING_DEFAULTS.items()}
     out["pulsar_version"] = pc.get("pulsar-version")
     return out

@@ -70,7 +70,8 @@ ENCODERS = {
 
 @dataclass
 class ChangefeedConfig:
-    """Subset of the reference ReplicaConfig surface, same names."""
+    """Subset of the reference ReplicaConfig surface, same names; the
+    keys that fill it are ``config.KEYS``."""
 
     filter_rules: list[str] = field(default_factory=lambda: ["*.*"])
     event_filters: list[dict] = field(default_factory=list)
@@ -97,7 +98,6 @@ class ChangefeedConfig:
     memory_quota: int = 1024 * 1024 * 1024  # DefaultChangefeedMemoryQuota
     enable_sync_point: bool = False
     sync_point_interval_us: int = 600 * 1_000_000  # 10m default
-    sync_point_retention_us: int = 24 * 3600 * 1_000_000  # 24h default
     # --- SinkConfig extras (`pkg/config/sink.go:139`) ---
     safe_mode: bool = False
     terminator: str = "\r\n"  # CRLF default (`pkg/config/sink.go`)
@@ -123,24 +123,16 @@ class ChangefeedConfig:
     bdr_mode: bool = False
     # [scheduler] (`pkg/config/scheduler_config.go:36-46`)
     enable_table_across_nodes: bool = False
-    region_threshold: int = 10_000  # `replica_config.go:109`
-    write_key_threshold: int = 0
     # --- the replication window (`pkg/config/changefeed.go:252-281`
     # ChangeFeedInfo.StartTs/TargetTs): rows with commit_ts <= start_ts
     # are already replicated; target_ts > 0 bounds the feed, which
     # FINISHES once the checkpoint reaches it. 0 = unset.
     start_ts: int = 0
     target_ts: int = 0
-    # --- sink-URI query-parameter surface (the reference parses these
-    # per scheme: `pkg/sink/mysql/config.go:49-59,529-560`, kafka
-    # `options.go` form tags) — folded in by
-    # `config.apply_sink_uri_params` ---
-    worker_count: int = 16       # DefaultWorkerCount (MySQL)
+    # --- sink-URI params (`pkg/sink/mysql/config.go:49-59,529-560`,
+    # kafka `options.go` form tags) ---
     max_txn_row: int = 256       # DefaultMaxTxnRow
     max_message_bytes: int = 10 * 1024 * 1024  # `pkg/config/sink.go:35`
-    # encoder max-batch-size (`codec/common/config.go:34-35` default 16)
-    # — consumed by the open-protocol batch framer
-    max_batch_size: int = 16
     tidb_extension: bool = False  # enable-tidb-extension
     # output-row-key (`pkg/config/sink.go:457` CodecConfig / form tag
     # `codec/common/config.go:190-192`): canal-json only; the rowkey is
@@ -148,32 +140,14 @@ class ChangefeedConfig:
     output_row_key: bool = False
     # --- remaining ReplicaConfig top level (`replica_config.go:51-128`
     # defaults; validation `:288-385`) ---
-    # throughput | low-latency (`replica_config.go:35-36`)
-    performance_mode: str = "throughput"
-    check_gc_safe_point: bool = True
-    enable_table_monitor: bool = False
     ignore_ineligible_table: bool = False
-    # forwarded to DDL normalization/execution downstream (TiDB session
-    # variable); empty = downstream default
-    sql_mode: str = ""
-    # min 30m (`replica_config.go:42,374-381`)
+    # how long a failing changefeed retries before it is failed; min 30m
+    # (`replica_config.go:42,374-381`)
     changefeed_error_stuck_duration_us: int = 30 * 60 * 1_000_000
     # [synced-status] seconds (`synced_status_config.go:17-23`,
     # defaults `replica_config.go:123-126`) — drives GET /synced
     synced_check_interval_s: int = 300
     synced_checkpoint_interval_s: int = 15
-    # active-active (`replica_config.go:43-44,127-128`)
-    enable_active_active: bool = False
-    active_active_progress_interval_us: int = 30 * 60 * 1_000_000
-    active_active_sync_stats_interval_us: int = 60 * 1_000_000
-    # event-collector batching; 0 disables, cap 8192
-    # (`replica_config.go:48,384-392`)
-    event_collector_batch_count: int | None = None
-    event_collector_batch_bytes: int | None = None
-    # [mounter] decode parallelism hint (`pkg/config/mounter.go:17`);
-    # on Spark the actual parallelism is the scan/shuffle partitioning —
-    # carried for config parity and used as the Arrow batch hint
-    mounter_worker_num: int = 16
     # [consistent] — redo log; normalized + validated by
     # config.parse_consistent_config (None = level "none")
     consistent: dict | None = None
@@ -189,35 +163,24 @@ class ChangefeedConfig:
     # carries the display-width descriptor official canal consumers
     # parse (`canal_json_encoder.go:250`)
     content_compatible: bool = False
-    # avro sink fields (`sink.go:147-149,453-455`; codec defaults
-    # `codec/common/config.go:130-132`): watermark gate changes DELETE
-    # framing (tombstone vs 9-byte marker), handling modes select the
-    # schema forms in codec/avro_protocol.mysql_col
+    # avro-enable-watermark (`sink.go:147-149,453-455`): the watermark
+    # gate changes DELETE framing (tombstone vs 9-byte marker)
     avro_enable_watermark: bool = False
-    avro_decimal_handling_mode: str = "precise"   # precise | string
-    avro_bigint_unsigned_handling_mode: str = "long"  # long | string
-    schema_registry: str = ""  # "" = per-partition in-memory registry
     # simple-protocol bootstrap knobs (`sink.go:87-96` defaults)
     send_bootstrap_interval_s: int = 120
-    send_bootstrap_in_msg_count: int = 10_000
     send_bootstrap_to_all_partition: bool = True
-    send_all_bootstrap_at_start: bool = False
-    # advance-timeout-in-sec (`sink.go:36-37`): sink-stall watchdog
-    advance_timeout_s: int = 150
     # [sink.cloud-storage-config] — normalized + validated by
     # config.parse_cloud_storage_config (None = defaults)
     cloud_storage_config: dict | None = None
     # --- connector sub-configs ([sink.kafka-config]/[sink.pulsar-config]/
-    # [sink.mysql-config], `pkg/config/sink.go` KafkaConfig/PulsarConfig/
-    # MySQLConfig): normalized TOML sections; sink-URI params override
-    # matching keys (the reference's Apply order) ---
+    # [sink.mysql-config], `pkg/config/sink.go`): their keys' values, the
+    # sink-URI params over the TOML (the reference's Apply order) ---
     kafka_config: dict | None = None
     pulsar_config: dict | None = None
     mysql_config: dict | None = None
-    # --- TLS credential triple (`pkg/security/credential.go:107-110`;
-    # sink-URI params `ca`/`cert`/`key`, mysql aliases
-    # `ssl-ca`/`ssl-cert`/`ssl-key`, kafka `enable-tls`): ca verifies
-    # the endpoint, cert+key present a client identity (mutual TLS) ---
+    # --- Kafka TLS credential triple (`pkg/security/credential.go:107-110`;
+    # sink-URI params `ca`/`cert`/`key`, `enable-tls`): ca verifies the
+    # endpoint, cert+key present a client identity (mutual TLS) ---
     enable_tls: bool = False
     tls_ca_path: str = ""
     tls_cert_path: str = ""

@@ -634,19 +634,21 @@ printf('%.2f', val) || '","k":"' || k::VARCHAR || '"}]}'
     bench="plan",
 )
 def q_codec_canal_lineitem(spark, sf_dir):
+    from ticdc_spark.functions.render import (json_case, json_image,
+                                              json_object, json_str)
+
     cl = scale_out(_lineitem_changelog(spark, sf_dir))
-    value = F.concat(
-        F.lit('{"id":0,"database":"'), F.col("schema_name"),
-        F.lit('","table":"'), F.col("table_name"),
-        F.lit('","pkNames":["id"],"isDdl":false,"type":"'),
-        F.when(F.col("op") == "I", F.lit("INSERT"))
-        .when(F.col("op") == "U", F.lit("UPDATE")).otherwise(F.lit("DELETE")),
-        F.lit('","es":'), F.expr("commit_ts div 1000").cast("string"),
-        F.lit(',"ts":0,"data":[{"id":"'), F.col("pk").cast("string"),
-        F.lit('","val":"'), F.format_string("%.2f", F.col("val")),
-        F.lit('","k":"'), F.col("k").cast("string"),
-        F.lit('"}]}'),
-    )
+    image = F.struct(F.col("pk").alias("id"), "val", "k")
+    value = json_object([
+        ("id", 0), ("database", json_str(F.col("schema_name"))),
+        ("table", json_str(F.col("table_name"))), ("pkNames", ["id"]),
+        ("isDdl", False),
+        ("type", json_case(F.col("op"), {"I": "INSERT", "U": "UPDATE"},
+                           "DELETE")),
+        ("es", F.expr("commit_ts div 1000").cast("string")), ("ts", 0),
+        ("data", json_image(image, cl.select(image.alias("i")).schema[
+            "i"].dataType, array=True)),
+    ])
     return cl.select("pk", "commit_ts", value.alias("value"))
 
 

@@ -87,6 +87,7 @@ def produce_frame(
     sasl: tuple[str, str, str] | None = None, tls_ca: bytes | None = None,
     client_id: str = "ticdc-spark", acks: int = -1,
     kafka_version: str | None = None, tls_insecure: bool = False,
+    tls_client_cert: tuple[bytes, bytes] | None = None,
 ) -> list:
     """Distributed produce of a (topic, partition, key, value) frame;
     returns the tasks' SUMMARY_SCHEMA rows (a few per task).
@@ -147,7 +148,8 @@ def produce_frame(
                             bootstrap, sasl=sasl, tls_ca=tls_ca,
                             client_id=client_id,
                             kafka_version=kafka_version,
-                            tls_insecure=tls_insecure)
+                            tls_insecure=tls_insecure,
+                            tls_client_cert=tls_client_cert)
                         if state["pid"] is None and acks == -1:
                             # KIP-98 idempotence demands acks=all —
                             # sarama refuses an idempotent producer at
@@ -490,57 +492,72 @@ def sasl_from_spec(spec: dict | None,
     return (mech, spec["user"], spec["password"])
 
 
-def kafka_live_config_roundtrip(frame: DataFrame, cfg,
-                                broker) -> DataFrame:
-    """Produce/fetch roundtrip whose authentication comes ENTIRELY from
-    the changefeed config — the TOML's [sink.kafka-config] sasl keys
-    (`pkg/config/sink.go:469-489`) compile through ``kafka_sasl_spec``
-    + ``sasl_from_spec`` into every executor connection's SASL
-    exchange.  The client id also honors kafka-client-id
-    (`sink.go:467`)."""
+def produce_options(cfg, broker_host: str = "127.0.0.1") -> dict:
+    """A changefeed config's Kafka connection options as ``produce_frame``
+    keywords (``KafkaConn``'s plus ``acks``): SASL, required-acks,
+    kafka-client-id, kafka-version (`pkg/sink/kafka/options.go:80-138`)
+    and, with enable-tls, the ``ca``, insecure-skip-verify and the
+    ``cert``/``key`` identity.  An empty config gives the plain wire."""
     from ticdc_spark.config import kafka_sasl_spec
 
-    from ticdc_spark.config import validate_required_acks
+    def pem(path: str) -> bytes:
+        with open(path, "rb") as f:
+            return f.read()
 
-    spark = frame.sparkSession
-    host = broker.bootstrap.rsplit(":", 1)[0]
-    sasl = sasl_from_spec(kafka_sasl_spec(cfg), broker_host=host)
     kc = cfg.kafka_config or {}
-    client_id = kc.get("kafka-client-id", "ticdc-spark")
-    acks = validate_required_acks(kc)
+    opts = {"sasl": sasl_from_spec(kafka_sasl_spec(cfg), broker_host),
+            "client_id": kc.get("kafka-client-id", "ticdc-spark"),
+            "acks": kc.get("required-acks", -1),
+            "kafka_version": kc.get("kafka-version"),
+            "tls_ca": None, "tls_insecure": False, "tls_client_cert": None}
+    if cfg.enable_tls:
+        opts["tls_insecure"] = cfg.insecure_skip_verify
+        if cfg.tls_ca_path:
+            opts["tls_ca"] = pem(cfg.tls_ca_path)
+        elif not cfg.insecure_skip_verify:
+            # no system trust store here: refuse rather than dial plain
+            raise ValueError("enable-tls needs a ca or insecure-skip-verify")
+        if cfg.tls_cert_path:
+            opts["tls_client_cert"] = (pem(cfg.tls_cert_path),
+                                       pem(cfg.tls_key_path))
+    return opts
+
+
+def conn_options(opts: dict) -> dict:
+    """``produce_options`` without ``acks``: ``KafkaConn``'s keywords."""
+    return {k: v for k, v in opts.items() if k != "acks"}
+
+
+def kafka_live_config_roundtrip(frame: DataFrame, cfg,
+                                broker) -> DataFrame:
+    """Produce/fetch roundtrip whose connection options come ENTIRELY
+    from the changefeed config (``produce_options``)."""
+    spark = frame.sparkSession
+    opts = produce_options(cfg, broker.bootstrap.rsplit(":", 1)[0])
     if not getattr(broker, "auto_create_topics", True):
         # bounded control-plane collect: |topics| = filtered table count
         topics = [r.topic for r in frame.select("topic").distinct().collect()]
         ensure_topics_from_config(broker.bootstrap, cfg, topics,
-                                  sasl=sasl, n_partitions=16)
-    produce_frame(frame, broker.bootstrap, sasl=sasl,
-                  client_id=client_id, acks=acks,
-                  kafka_version=kc.get("kafka-version"))
+                                  n_partitions=16)
+    produce_frame(frame, broker.bootstrap, **opts)
     pairs = [(t, p) for t, parts in broker.topics.items() for p in parts]
-    return fetch_df(spark, broker.bootstrap, pairs, sasl=sasl,
-                    client_id=client_id)
+    return fetch_df(spark, broker.bootstrap, pairs, sasl=opts["sasl"],
+                    client_id=opts["client_id"])
 
 
 def ensure_topics_from_config(bootstrap: str, cfg, topics: list[str],
-                              sasl=None, n_partitions: int = 16) -> None:
-    """The reference's topic-provisioning step
-    (`pkg/sink/kafka/options.go:555-568` DeriveTopicConfig +
-    `admin.go` CreateTopic): probe Metadata for each sink topic; a
-    missing topic is CREATED when auto-create-topic is true (with the
-    configured partition-num/replication-factor) and is an error when
-    false.  Driver-side: one admin connection, |topics| is the filtered
-    table count (bounded control-plane work)."""
-    from ticdc_spark.config import validate_required_acks
+                              n_partitions: int = 16) -> None:
+    """The reference's topic-provisioning step (`pkg/sink/kafka/
+    options.go:555-568`): a missing sink topic is CREATED when
+    auto-create-topic is true and is an error when false.  Driver-side:
+    one admin connection over the config's ``produce_options``."""
     from ticdc_spark.sinks.kafka_client import KafkaConn, create_topic
 
     kc = cfg.kafka_config or {}
-    validate_required_acks(kc)
     auto = kc.get("auto-create-topic", True)
-    rf = int(kc.get("replication-factor", 1))
-    with KafkaConn.from_bootstrap(
-            bootstrap, sasl=sasl,
-            client_id=kc.get("kafka-client-id", "ticdc-spark"),
-            kafka_version=kc.get("kafka-version")) as conn:
+    rf = kc.get("replication-factor", 1)
+    opts = produce_options(cfg, bootstrap.rsplit(":", 1)[0])
+    with KafkaConn.from_bootstrap(bootstrap, **conn_options(opts)) as conn:
         md = conn.metadata(list(topics))
         for t in topics:
             info = md["topics"].get(t)

@@ -50,14 +50,15 @@ from ticdc_spark.sources.changelog import stream_changelog
 
 
 def bootstrap_from_sink_uri(cfg) -> str | None:
-    """host:port from a kafka:// sink URI — what a deployment passes as
-    ``live_bootstrap`` so the changefeed config alone selects the live
-    endpoint (first server of a comma-separated bootstrap list)."""
+    """host:port from a kafka:// or kafka+ssl:// sink URI — what a
+    deployment passes as ``live_bootstrap`` so the changefeed config
+    alone selects the live endpoint (first server of a comma-separated
+    bootstrap list)."""
     from urllib.parse import urlsplit
 
     uri = getattr(cfg, "sink_uri", None) or ""
     u = urlsplit(uri)
-    if u.scheme != "kafka" or not u.netloc:
+    if u.scheme not in ("kafka", "kafka+ssl") or not u.netloc:
         return None
     return u.netloc.split(",")[0]
 
@@ -150,8 +151,15 @@ class Changefeed:
         self.epoch_offset = epoch_offset
         # live MQ mode: produce epochs to a Kafka wire endpoint instead of
         # the filesystem sink (at-least-once like the reference; replays
-        # append duplicates the consumer's idempotent apply absorbs)
+        # append duplicates the consumer's idempotent apply absorbs),
+        # over the connection options of the changefeed's own config
         self.live_bootstrap = live_bootstrap
+        self.produce_opts = None
+        if live_bootstrap is not None:
+            from ticdc_spark.sinks.kafka_live import produce_options
+
+            self.produce_opts = produce_options(
+                cfg, live_bootstrap.rsplit(":", 1)[0])
         # planted DDL events (the logservice/schemastore feed in the
         # reference; a deployment wires the DDL job fetcher here): each
         # {"commit_ts", "schema_name", "table_name", "query", "ddl_type"}.
@@ -282,7 +290,8 @@ class Changefeed:
             if c in cols])
         barriers, topics = self._pending_ddl_barriers(frame)
         if not barriers:
-            return produce_frame(frame, self.live_bootstrap)
+            return produce_frame(frame, self.live_bootstrap,
+                                 **self.produce_opts)
         from ticdc_spark.streaming.barrier import split_batch_at_ddl
 
         by_ts = {d["commit_ts"]: d for d in self.ddl_events}
@@ -293,8 +302,8 @@ class Changefeed:
         # bumped schema version (W3 on the live wire)
         split_batch_at_ddl(
             frame, barriers,
-            lambda seg, _i: summary.extend(
-                produce_frame(seg, self.live_bootstrap)),
+            lambda seg, _i: summary.extend(produce_frame(
+                seg, self.live_bootstrap, **self.produce_opts)),
             lambda ts: self._apply_live_ddl(by_ts[ts], topics, book),
         )
         return summary
@@ -426,8 +435,11 @@ class Changefeed:
         sent as ONE Produce request (every partition's error checked)."""
         from ticdc_spark.codec.kafka_wire import Record
         from ticdc_spark.sinks.kafka_client import KafkaConn
+        from ticdc_spark.sinks.kafka_live import conn_options
 
-        with KafkaConn.from_bootstrap(self.live_bootstrap) as conn:
+        with KafkaConn.from_bootstrap(
+                self.live_bootstrap,
+                **conn_options(self.produce_opts)) as conn:
             md = conn.metadata(topics)
             conn.produce_all({
                 t: {pt["index"]: [Record(None, value)]

@@ -126,8 +126,8 @@ class ChangefeedRegistry:
                 is_unretryable,
             )
 
-            bo = self._backoffs.setdefault(
-                changefeed_id, ChangefeedBackoff())
+            bo = self._backoffs.setdefault(changefeed_id, ChangefeedBackoff(
+                cf.cfg.changefeed_error_stuck_duration_us / 1e6))
             code = _rfc_code(400, str(e))
             if is_unretryable(e):
                 bo.failed = True
