@@ -251,11 +251,13 @@ def test_live_concurrent_producers(broker):
     assert [o for o, _ in got] == list(range(160))  # contiguous under contention
 
 
-def test_producer_retry_survives_connection_drops(spark_noop_guard=None):
+def test_producer_retry_survives_connection_drops():
     """Chaos: the broker kills connections mid-conversation; the produce
-    path's retry budget (reference defaultMaxRetry=5) reconnects and
-    resends — every message lands at least once, offsets stay contiguous."""
+    task's writer (``kafka_live.producer``, reference defaultMaxRetry=5)
+    reconnects and resends — every message lands at least once, offsets
+    stay contiguous."""
     from ticdc_spark import failpoint
+    from ticdc_spark.sinks.kafka_live import producer
 
     failpoint.disable_all()
     try:
@@ -263,28 +265,11 @@ def test_producer_retry_survives_connection_drops(spark_noop_guard=None):
             # drop 4 requests: under the 5-retry budget even in the worst
             # case where every reconnect handshake eats a drop too
             failpoint.enable("kafka/drop-connection", "4*return(1)")
-
-            import time
-
-            def produce_with_retry(conn_holder, batch, max_retry=5):
-                for attempt in range(max_retry + 1):
-                    try:
-                        if conn_holder[0] is None:
-                            conn_holder[0] = KafkaConn.from_bootstrap(broker.bootstrap)
-                        return conn_holder[0].produce("t", 0, batch)
-                    except (IOError, OSError):
-                        if conn_holder[0] is not None:
-                            conn_holder[0].close()
-                            conn_holder[0] = None
-                        if attempt == max_retry:
-                            raise
-                        time.sleep(0.01 * (2 ** attempt))
-
-            holder = [None]
-            for i in range(20):
-                produce_with_retry(holder, [Record(b"k%d" % i, b"v%d" % i)])
-            if holder[0] is not None:
-                holder[0].close()
+            # acks=1: the plain (non-idempotent) at-least-once path
+            with producer(broker.bootstrap, acks=1) as w:
+                w.sleep = lambda s: None
+                for i in range(20):
+                    w.send((("t", 0), [Record(b"k%d" % i, b"v%d" % i)]))
             failpoint.disable_all()
 
             with KafkaConn.from_bootstrap(broker.bootstrap) as c:
@@ -745,46 +730,24 @@ def test_idempotent_producer_dedups_retry(broker):
 
 def test_idempotent_produce_exactly_once_under_drops():
     """Chaos: connection drops force resends; with idempotent sequences
-    the broker log holds each record EXACTLY once (the plain retry path
-    would duplicate)."""
+    (``kafka_live.producer`` at acks=-1 keeps its pid across reconnects
+    and resends the same base sequence) the broker log holds each record
+    EXACTLY once (the plain retry path would duplicate)."""
     from ticdc_spark import failpoint
-    from ticdc_spark.sinks.kafka_live import produce_frame  # noqa: F401
+    from ticdc_spark.sinks.kafka_live import producer
 
     failpoint.disable_all()
     try:
         with KafkaBroker(default_partitions=1) as b:
-            import time
-
-            state = {"conn": None, "pid": None}
-
-            def send(seq, batch, max_retry=6):
-                for attempt in range(max_retry + 1):
-                    try:
-                        if state["conn"] is None:
-                            state["conn"] = KafkaConn.from_bootstrap(b.bootstrap)
-                            if state["pid"] is None:
-                                state["pid"] = state["conn"].init_producer_id()
-                        state["conn"].produce("t", 0, batch,
-                                              producer=state["pid"],
-                                              base_sequence=seq)
-                        return
-                    except (IOError, OSError):
-                        if state["conn"] is not None:
-                            state["conn"].close()
-                            state["conn"] = None
-                        if attempt == max_retry:
-                            raise
-                        time.sleep(0.02)
-
-            send(0, [Record(b"k", b"a%d" % i) for i in range(4)])
-            # drop the next TWO requests mid-flight: the produce may or
-            # may not have appended before the cut — the resend must not
-            # double-append either way
-            failpoint.enable("kafka/drop-connection", "2*return(1)")
-            send(4, [Record(b"k", b"b%d" % i) for i in range(4)])
-            send(8, [Record(b"k", b"c0")])
-            if state["conn"] is not None:
-                state["conn"].close()
+            with producer(b.bootstrap) as w:
+                w.sleep = lambda s: None
+                w.send((("t", 0), [Record(b"k", b"a%d" % i) for i in range(4)]))
+                # drop the next TWO requests mid-flight: the produce may
+                # or may not have appended before the cut — the resend
+                # must not double-append either way
+                failpoint.enable("kafka/drop-connection", "2*return(1)")
+                w.send((("t", 0), [Record(b"k", b"b%d" % i) for i in range(4)]))
+                w.send((("t", 0), [Record(b"k", b"c0")]))
             with KafkaConn.from_bootstrap(b.bootstrap) as c:
                 vals = [r.value for _, r in c.fetch_all("t", 0)]
             assert vals == [b"a0", b"a1", b"a2", b"a3",

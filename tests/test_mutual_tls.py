@@ -260,3 +260,30 @@ def test_insecure_skip_verify_kafka_roundtrip(spark):
         got = fetch_df(spark, b.bootstrap, [("t0", 0)],
                        tls_insecure=insecure)
         assert got.count() == 20
+
+
+def test_kafka_config_roundtrip_fetches_over_mutual_tls(spark, tmp_path):
+    """``kafka_live_config_roundtrip`` dials the fetch with the config's
+    whole connection options, so an mTLS broker that refuses a client
+    without the config's cert/key serves the fetch too."""
+    import pyspark.sql.functions as F
+
+    from ticdc_spark.config import parse_changefeed_config
+    from ticdc_spark.sinks.kafka_live import kafka_live_config_roundtrip
+
+    with KafkaBroker(tls=True, mutual_tls=True,
+                     default_partitions=1) as b:
+        cert, key = b.issue_client_cert()
+        for name, pem in (("ca", b.ca_pem), ("cert", cert), ("key", key)):
+            (tmp_path / f"{name}.pem").write_bytes(pem)
+        cfg = parse_changefeed_config(
+            f'sink-uri = "kafka://{b.bootstrap}/t?enable-tls=true'
+            f'&ca={tmp_path}/ca.pem&cert={tmp_path}/cert.pem'
+            f'&key={tmp_path}/key.pem"\n')
+        frame = spark.range(20).select(
+            F.lit("t0").alias("topic"), F.lit(0).alias("partition"),
+            F.col("id").cast("string").alias("key"),
+            F.concat(F.lit("v"), F.col("id")).cast("string").alias("value"))
+        got = kafka_live_config_roundtrip(frame, cfg, b)
+        assert sorted(r.value for r in got.collect()) == sorted(
+            f"v{i}" for i in range(20))

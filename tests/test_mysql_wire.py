@@ -216,41 +216,21 @@ def test_prepared_param_codec_edge_values():
 
 def test_applier_retry_survives_connection_drops(server):
     """Chaos: the server kills connections mid-batch; the safe-mode
-    applier reconnects and re-runs the batch — idempotent, final state
-    exact."""
+    applier's writer (``mysql_live.applier``) reconnects and re-runs the
+    batch — idempotent, final state exact."""
     from ticdc_spark import failpoint
+    from ticdc_spark.sinks.mysql_live import applier
 
     failpoint.disable_all()
     try:
         with _conn(server) as c:
             c.query("CREATE TABLE `test`.`r` (`id` BIGINT PRIMARY KEY, `v` BIGINT)")
         failpoint.enable("mysql/drop-connection", "3*return(1)")
-        import time
-
-        state = {"conn": None}
-
-        def run_batch(batch, max_retry=5):
-            for attempt in range(max_retry + 1):
-                try:
-                    if state["conn"] is None:
-                        state["conn"] = _conn(server)
-                    state["conn"].execute_batch(batch)
-                    return
-                except mw.MySQLError:
-                    raise
-                except (IOError, OSError):
-                    if state["conn"] is not None:
-                        state["conn"].close()
-                        state["conn"] = None
-                    if attempt == max_retry:
-                        raise
-                    time.sleep(0.01 * (2 ** attempt))
-
-        for i in range(5):
-            run_batch([f"REPLACE INTO `test`.`r` (`id`, `v`) VALUES ({j}, {i})"
-                       for j in range(i * 4, i * 4 + 4)])
-        if state["conn"] is not None:
-            state["conn"].close()
+        with applier(server.host, server.port, "root", "pw") as w:
+            w.sleep = lambda s: None
+            for i in range(5):
+                w.send([f"REPLACE INTO `test`.`r` (`id`, `v`) VALUES ({j}, {i})"
+                        for j in range(i * 4, i * 4 + 4)])
         failpoint.disable_all()
         with _conn(server) as c:
             assert c.query("SELECT count(*) FROM `test`.`r`").rows == [[20]]

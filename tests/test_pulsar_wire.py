@@ -161,46 +161,21 @@ def test_live_concurrent_producers(broker):
 
 def test_producer_retry_survives_connection_drops():
     """Chaos: the broker kills connections mid-conversation; the produce
-    flush path reconnects, re-registers its producer, and resends —
-    at-least-once delivery (duplicates possible when the drop lands
-    between append and receipt)."""
+    task's writer (``pulsar_live.producer``) reconnects, re-registers its
+    producer, and resends — at-least-once delivery (duplicates possible
+    when the drop lands between append and receipt)."""
     from ticdc_spark import failpoint
-    from ticdc_spark.sinks.pulsar_live import produce_frame  # noqa: F401
+    from ticdc_spark.sinks.pulsar_live import producer
 
     failpoint.disable_all()
     try:
         with PulsarBroker() as broker:
             failpoint.enable("pulsar/drop-connection", "3*return(1)")
-            import time
-
-            # drive the same flush-with-retry shape produce_frame uses
-            state = {"conn": None}
-            pids = {}
-
-            def flush(msgs, max_retry=5):
-                for attempt in range(max_retry + 1):
-                    try:
-                        if state["conn"] is None:
-                            state["conn"] = PulsarConn.from_service_url(
-                                broker.service_url)
-                            pids.clear()
-                        if "t" not in pids:
-                            pids["t"] = state["conn"].create_producer("t")
-                        state["conn"].send_pipelined(pids["t"], msgs,
-                                                     batch_size=4)
-                        return
-                    except (IOError, OSError):
-                        if state["conn"] is not None:
-                            state["conn"].close()
-                            state["conn"] = None
-                        if attempt == max_retry:
-                            raise
-                        time.sleep(0.01 * (2 ** attempt))
-
-            for i in range(6):
-                flush([(b"m%d-%d" % (i, j), None) for j in range(8)])
-            if state["conn"] is not None:
-                state["conn"].close()
+            with producer(broker.service_url, batching_max_messages=4) as w:
+                w.sleep = lambda s: None
+                for i in range(6):
+                    w.send(("t", [(b"m%d-%d" % (i, j), None)
+                                  for j in range(8)]))
             failpoint.disable_all()
 
             with PulsarConn.from_service_url(broker.service_url) as c:

@@ -344,3 +344,22 @@ def test_output_raw_change_event_gates_update_split():
         'sink-uri = "mysql://u:p@h:4000/"\n'
         "[sink.kafka-config]\noutput-raw-change-event = true\n")
     assert cfg3.split_updates is True
+
+
+def test_registry_override_uri_replaces_the_config_uri(tmp_path):
+    """A sink URI given to the registry beside the config replaces the
+    config's own: the config URI's params do not stick, and the update
+    split is decided from the override's scheme — on create, and when a
+    fresh registry parses the persisted entry again."""
+    from ticdc_spark.streaming.registry import ChangefeedRegistry
+
+    toml = ('sink-uri = "kafka://b:9092/t?enable-tls=true'
+            '&insecure-skip-verify=true"\n'
+            "[sink.kafka-config]\noutput-raw-change-event = true\n")
+    created = ChangefeedRegistry(str(tmp_path)).create(
+        "cf", toml, sink_uri="mysql://u:p@h:4000/").cfg
+    reloaded = ChangefeedRegistry(str(tmp_path)).get("cf").cfg
+    for cfg in (created, reloaded):
+        assert cfg.sink_uri == "mysql://u:p@h:4000/"
+        assert cfg.split_updates is True
+        assert cfg.enable_tls is False

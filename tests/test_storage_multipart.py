@@ -383,3 +383,31 @@ def test_client_pool_evicts_oldest(monkeypatch):
     assert keys[-1][1] == "http://h:65"
     assert s3_live._CLIENT_POOL[keys[-1]] is clients[-1]
     assert not any(c.closed for c in clients[1:])
+
+
+def test_storage_writer_raises_permanent_errors_at_once(monkeypatch):
+    """A ValueError is permanent: GCS refusing a part size that is not a
+    256 KiB multiple surfaces after one attempt, with no backoff (the
+    storage writer retries OSError and S3Error only)."""
+    from ticdc_spark.sinks import s3_live
+
+    calls = []
+    put_large = GCSClient.put_object_large
+
+    def counted(self, *args):
+        calls.append(args[1])
+        return put_large(self, *args)
+
+    monkeypatch.setattr(GCSClient, "put_object_large", counted)
+    monkeypatch.setattr(s3_live, "_CLIENT_POOL", {})
+    with MiniGCSServer() as srv:
+        w = s3_live.uploader(srv.endpoint, srv.token, "", "gcs",
+                             multipart_threshold=K256,
+                             part_size=K256 + 1)
+        sleeps = []
+        w.sleep = sleeps.append
+        with pytest.raises(ValueError, match="256 KiB"):
+            w.send([("big.bin", BODY)])
+        w.drop()
+    assert calls == ["big.bin"]
+    assert sleeps == []

@@ -601,8 +601,11 @@ def _apply(target: dict, key: Key, name: str, raw) -> None:
             else value
 
 
-def parse_changefeed_config(text: str, fmt: str = "toml") -> ChangefeedConfig:
-    """A TOML (or JSON) replica config, then its sink URI's params."""
+def parse_changefeed_config(text: str, fmt: str = "toml",
+                            sink_uri: str | None = None) -> ChangefeedConfig:
+    """A TOML (or JSON) replica config, then its sink URI's params.  A
+    ``sink_uri`` given beside the config replaces the config's own, so
+    neither that URI's params nor its scheme's decisions apply."""
     doc = tomllib.loads(text) if fmt == "toml" else json.loads(text)
     fields: dict = {}
     for key in KEYS:
@@ -611,6 +614,8 @@ def parse_changefeed_config(text: str, fmt: str = "toml") -> ChangefeedConfig:
             if raw is not SKIP or key.always:
                 _apply(fields, key, path.rsplit(".", 1)[-1],
                        None if raw is SKIP else raw)
+    if sink_uri:
+        fields["sink_uri"] = sink_uri
     cfg = ChangefeedConfig(**fields)
     # CSV always renders all delete columns (`pkg/config/sink.go:867-871`)
     if cfg.delete_only_output_handle_key and cfg.protocol == "csv":

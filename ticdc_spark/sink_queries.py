@@ -3284,7 +3284,8 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
         registry_http_server,
     )
     from ticdc_spark.queries import _flatten
-    from ticdc_spark.sinks.kafka_live import start_broker
+    from ticdc_spark.sinks.kafka_live import producer, start_broker
+    from ticdc_spark.sinks.writer import SUMMARY_SCHEMA
     from ticdc_spark.sources.changelog import events_changelog
 
     server = registry_http_server(InMemoryConfluentRegistry())
@@ -3299,19 +3300,15 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
         return None if pd.isna(v) else v
 
     def _produce(batches):
-        import pandas as _pd
-
         from ticdc_spark.codec.avro_protocol import encode_row_key, encode_row_value
         from ticdc_spark.codec.kafka_wire import Record
         from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
-        from ticdc_spark.sinks.kafka_client import KafkaConn
 
         mgr = ConfluentSchemaManager(registry_url)  # real HTTP registration
-        conn = KafkaConn.from_bootstrap(bootstrap)
         pending: dict[tuple[str, int], list] = {}
-        sent = 0
-        try:
+        with producer(bootstrap) as w:
             for pdf in batches:
+                w.tally(pdf)
                 for r in pdf.itertuples(index=False):
                     topic = f"{r.schema_name}.{r.table_name}"
                     img = "before" if r.op == "D" else "after"
@@ -3329,16 +3326,13 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
                     batch = pending.setdefault((topic, part), [])
                     batch.append(Record(kblob, vblob,
                                         [("seq", str(r.seq).encode())]))
-                    sent += 1
                     if len(batch) >= 256:
-                        conn.produce(topic, part, batch)
+                        w.send(((topic, part), batch))
                         pending[(topic, part)] = []
-            for (topic, part), batch in pending.items():
+            for tp, batch in pending.items():
                 if batch:
-                    conn.produce(topic, part, batch)
-        finally:
-            conn.close()
-        yield _pd.DataFrame({"n": [sent]})
+                    w.send((tp, batch))
+        yield from w.summary()
 
     # round-robin over every core, not repartition("table_name"): five
     # tables hash to five tasks and the per-row avro encode runs at
@@ -3349,8 +3343,7 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
     # compares the decoded row SET (seq rides a header; offsets are
     # never emitted), so the split is free to follow the cluster size.
     par = cl.sparkSession.sparkContext.defaultParallelism
-    (cl.repartition(par).mapInPandas(_produce, "n long")
-     .write.format("noop").mode("overwrite").save())
+    cl.repartition(par).mapInPandas(_produce, SUMMARY_SCHEMA).collect()
 
     pairs = [(t, p) for t, parts in broker.topics.items() for p in parts]
     seats = spark.createDataFrame(pairs, "topic string, partition int").repartition(

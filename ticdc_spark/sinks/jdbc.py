@@ -18,30 +18,13 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ticdc_spark.operators.conflict import with_conflict_slots
 from ticdc_spark.sinks.mysql import sql_for_rows
-
-
-@dataclass(frozen=True)
-class RetryPolicy:
-    """Reference defaults: BackoffBaseDelay=100ms, BackoffMaxDelay=5s
-    (`pkg/sink/mysql/config.go:77-79`); exponential doubling between
-    tries, capped at max_delay."""
-    max_tries: int = 8
-    base_delay: float = 0.1
-    max_delay: float = 5.0
-
-    def delays(self) -> list[float]:
-        out, d = [], self.base_delay
-        for _ in range(self.max_tries - 1):
-            out.append(min(d, self.max_delay))
-            d *= 2
-        return out
+from ticdc_spark.sinks.writer import RetryPolicy, TaskWriter
 
 
 def with_retry(
@@ -50,24 +33,15 @@ def with_retry(
     retryable: Callable[[Exception], bool] = lambda e: True,
     sleep: Callable[[float], None] = time.sleep,
 ) -> Callable[[str], None]:
-    """Wrap a statement executor with the reference's retry/backoff.
+    """Wrap a statement executor with the reference's retry/backoff
+    (the sinks' one retry loop, ``TaskWriter.send``; the executor owns
+    its connection).
 
     Non-retryable errors (syntax, constraint violations — anything the
     classifier rejects) propagate immediately; transient ones retry up
     to max_tries with exponential backoff."""
-    delays = policy.delays()
-
-    def run(stmt: str) -> None:
-        for attempt in range(policy.max_tries):
-            try:
-                execute(stmt)
-                return
-            except Exception as e:  # noqa: BLE001 — classifier decides
-                if not retryable(e) or attempt == policy.max_tries - 1:
-                    raise
-                sleep(delays[attempt])
-
-    return run
+    return TaskWriter(lambda: None, lambda _conn, stmt: execute(stmt),
+                      retryable, policy, sleep).send
 
 
 def apply_txn_with_retry(

@@ -23,6 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ticdc_spark.sinks.writer import (SUMMARY_SCHEMA, RetryPolicy, TaskWriter,
+                                      transient)
+
 # keep brokers alive for the lifetime of the process: the driver evaluates
 # the returned fetch plan (possibly several times) after construction returns
 _LIVE_BROKERS: list = []
@@ -43,66 +46,59 @@ def start_broker(n_partitions: int = 16, flexible_only: bool = True):
     return broker
 
 
-#: what each produce task reports per topic it sent: the row count and
-#: the commit-ts range (null where the frame does not carry commit_ts) —
-#: a changefeed's checkpoint is built from these
-SUMMARY_SCHEMA = "topic string, rows long, min_ts long, max_ts long"
-_SUMMARY_FIELDS = [f.split() for f in SUMMARY_SCHEMA.split(", ")]
-_SUMMARY_COLS = [name for name, _ in _SUMMARY_FIELDS]
-_SUMMARY_KEYS = ("topic",)
-#: summary column -> (frame column, aggregate), besides the row count
-_SUMMARY_AGGS = {"min_ts": ("commit_ts", "min"),
-                 "max_ts": ("commit_ts", "max")}
+#: the producer retry budget: `pkg/sink/kafka` defaultMaxRetry=5
+RETRY = RetryPolicy(max_tries=6, base_delay=0.1, max_delay=2.0)
 
 
-def _summarize(pdf):
-    """One pandas batch's SUMMARY_SCHEMA rows."""
-    aggs = {"rows": (pdf.columns[0], "size")}
-    aggs.update({out: agg for out, agg in _SUMMARY_AGGS.items()
-                 if agg[0] in pdf})
-    keys = [c for c in _SUMMARY_KEYS if c in pdf]
-    out = pdf.groupby(keys, sort=False, dropna=False).agg(**aggs).reset_index()
-    for c in _SUMMARY_COLS:
-        if c not in out:
-            out[c] = None
-    return out[_SUMMARY_COLS]
+def producer(bootstrap: str, compression: str = "none", acks: int = -1,
+             **conn_kw) -> TaskWriter:
+    """A produce task's writer; ``send(((topic, partition), records))``
+    produces one batch.  At acks=-1 it is an idempotent producer
+    (KIP-98): the pid is KEPT across reconnects and a (topic, partition)
+    sequence advances only after a confirmed produce, so a retry resends
+    the SAME base sequence and the broker dedups it.  sarama refuses
+    idempotence at acks 0/1; those run at-least-once (the consumer's
+    idempotent apply absorbs a duplicated batch)."""
+    from ticdc_spark.sinks.kafka_client import KafkaConn
 
+    pid = None
+    seqs: dict[tuple[str, int], int] = {}
 
-def summarize(frame: DataFrame) -> list:
-    """SUMMARY_SCHEMA rows of a frame that is not produced here (the file
-    and DB sinks' epoch), from one aggregate grouped like a produce task's."""
-    cols = set(frame.columns)
-    out = frame.groupBy(*[c for c in _SUMMARY_KEYS if c in cols]).agg(
-        F.count(F.lit(1)).alias("rows"),
-        *[getattr(F, fn)(c).alias(name)
-          for name, (c, fn) in _SUMMARY_AGGS.items() if c in cols])
-    return out.select(*[
-        F.col(name) if name in out.columns
-        else F.lit(None).cast(typ).alias(name)
-        for name, typ in _SUMMARY_FIELDS]).collect()
+    def send(conn, item) -> None:
+        nonlocal pid
+        (topic, partition), records = item
+        if acks != -1:
+            conn.produce(topic, partition, records, compression=compression,
+                         acks=acks)
+            return
+        if pid is None:
+            pid = conn.init_producer_id()
+        seq = seqs.get((topic, partition), 0)
+        conn.produce(topic, partition, records, compression=compression,
+                     producer=pid, base_sequence=seq)
+        seqs[(topic, partition)] = seq + len(records)
+
+    return TaskWriter(lambda: KafkaConn.from_bootstrap(bootstrap, **conn_kw),
+                      send, transient(OSError), RETRY)
 
 
 def produce_frame(
-    frame: DataFrame, bootstrap: str, compression: str = "none", max_retry: int = 5,
+    frame: DataFrame, bootstrap: str, compression: str = "none",
     sasl: tuple[str, str, str] | None = None, tls_ca: bytes | None = None,
     client_id: str = "ticdc-spark", acks: int = -1,
     kafka_version: str | None = None, tls_insecure: bool = False,
     tls_client_cert: tuple[bytes, bytes] | None = None,
 ) -> list:
     """Distributed produce of a (topic, partition, key, value) frame;
-    returns the tasks' SUMMARY_SCHEMA rows (a few per task).
+    returns the tasks' SUMMARY_SCHEMA rows (one per task and topic).
 
     The frame is clustered by (topic, partition) and, on whichever of the
     replay keys (``commit_ts, start_ts, dml_order, seq``) it carries,
     sorted inside each partition AFTER that shuffle, so every partition's
     log is in commit order.  Each task groups its rows by (topic,
-    partition) and sends batches of ≤512 records per Produce request over
-    its own connection. A dropped connection reconnects and resends the
-    in-flight batch with capped exponential backoff, ``max_retry``
-    attempts per batch — the reference's producer retry budget
-    (`pkg/sink/kafka` defaultMaxRetry=5; at-least-once: a drop between
-    append and receipt duplicates the batch, which the consumer's
-    idempotent apply absorbs)."""
+    partition) and sends batches of ≤512 records per Produce request
+    through its ``producer`` writer: a dropped connection reconnects and
+    resends the in-flight batch under ``RETRY``."""
     from ticdc_spark.operators.ordering import SORT_KEYS, ordered
 
     cols = dict(frame.dtypes)
@@ -123,66 +119,20 @@ def produce_frame(
         # co-locate each (topic, partition) so batches aren't 1-row sprays
         ["topic", "partition"],
     ).select("topic", "partition", "key", "value", *summarized)
+    conn_kw = dict(sasl=sasl, tls_ca=tls_ca, client_id=client_id,
+                   kafka_version=kafka_version, tls_insecure=tls_insecure,
+                   tls_client_cert=tls_client_cert)
 
     def _send(batches):
-        import time as _time
-
         from ticdc_spark.codec.kafka_wire import Record
-        from ticdc_spark.sinks.kafka_client import KafkaConn
-
-        # Idempotent producer (KIP-98): one pid per task, acquired on
-        # the first connection and KEPT across reconnects; per-(topic,
-        # partition) sequence counters advance only after a confirmed
-        # produce, so a retry resends the SAME sequence and the broker
-        # dedups it — the at-least-once drop-retry duplicate becomes
-        # exactly-once on the wire.
-        state = {"conn": None, "pid": None}
-        seqs: dict[tuple[str, int], int] = {}
-
-        def produce_with_retry(topic, partition, batch):
-            seq = seqs.get((topic, partition), 0)
-            for attempt in range(max_retry + 1):
-                try:
-                    if state["conn"] is None:
-                        state["conn"] = KafkaConn.from_bootstrap(
-                            bootstrap, sasl=sasl, tls_ca=tls_ca,
-                            client_id=client_id,
-                            kafka_version=kafka_version,
-                            tls_insecure=tls_insecure,
-                            tls_client_cert=tls_client_cert)
-                        if state["pid"] is None and acks == -1:
-                            # KIP-98 idempotence demands acks=all —
-                            # sarama refuses an idempotent producer at
-                            # acks 0/1; those run plain (the reference
-                            # surfaces the same constraint)
-                            state["pid"] = state["conn"].init_producer_id()
-                    if acks == -1:
-                        state["conn"].produce(topic, partition, batch,
-                                              compression=compression,
-                                              producer=state["pid"],
-                                              base_sequence=seq)
-                    else:
-                        state["conn"].produce(topic, partition, batch,
-                                              compression=compression,
-                                              acks=acks)
-                    seqs[(topic, partition)] = seq + len(batch)
-                    return
-                except (IOError, OSError):
-                    if state["conn"] is not None:
-                        state["conn"].close()
-                        state["conn"] = None
-                    if attempt == max_retry:
-                        raise
-                    _time.sleep(min(0.1 * (2 ** attempt), 2.0))
 
         pending: dict[tuple[str, int], list] = {}
-        summaries = []
-        try:
+        with producer(bootstrap, compression, acks, **conn_kw) as w:
             # rows arrive as Arrow/pandas batches (guide §4.1: batch the
             # boundary, not the rows); binary cells come through as
             # bytes already — same Record payloads as the pickled path
             for pdf in batches:
-                summaries.append(_summarize(pdf))
+                w.tally(pdf)
                 for t, p, k, v in zip(pdf["topic"].tolist(),
                                       pdf["partition"].tolist(),
                                       pdf["key"].tolist(),
@@ -193,12 +143,12 @@ def produce_frame(
                         bytes(k) if k is not None else None,
                         bytes(v) if v is not None else None))
                     if len(batch) >= _BATCH_RECORDS:
-                        produce_with_retry(tp[0], tp[1], batch)
+                        w.send((tp, batch))
                         pending[tp] = []
-            for (topic, partition), batch in pending.items():
+            for tp, batch in pending.items():
                 if batch:
-                    produce_with_retry(topic, partition, batch)
-            if acks == 0 and state["conn"] is not None:
+                    w.send((tp, batch))
+            if acks == 0 and w.conn is not None:
                 # acks=0 produces are fire-and-forget: the broker may not
                 # have processed buffered requests when this task returns,
                 # and an immediate fetch could miss tail records.  One
@@ -206,23 +156,19 @@ def produce_frame(
                 # — the broker handles a connection's requests in order,
                 # so the Metadata response implies every earlier produce
                 # was appended.
-                state["conn"].metadata([])
-        finally:
-            if state["conn"] is not None:
-                state["conn"].close()
+                w.conn.metadata([])
         # reported only once every batch is acknowledged
-        yield from summaries
+        yield from w.summary()
 
     return shaped.mapInPandas(_send, SUMMARY_SCHEMA).collect()
 
 
-def fetch_df(spark: SparkSession, bootstrap: str, topic_partitions: list[tuple[str, int]],
-             sasl: tuple[str, str, str] | None = None,
-             tls_ca: bytes | None = None,
-             client_id: str = "ticdc-spark",
-             tls_insecure: bool = False) -> DataFrame:
+def fetch_df(spark: SparkSession, bootstrap: str,
+             topic_partitions: list[tuple[str, int]], **conn_kw) -> DataFrame:
     """Distributed fetch: one task per (topic, partition); verifies offset
-    contiguity 0..hw-1 inside the kernel (raises on gaps/dups)."""
+    contiguity 0..hw-1 inside the kernel (raises on gaps/dups).
+    ``conn_kw`` are ``KafkaConn``'s connection options (``conn_options``
+    of a config's ``produce_options``)."""
     pairs = spark.createDataFrame(topic_partitions, "topic string, partition int").repartition(
         max(1, min(len(topic_partitions), 64)), "topic", "partition"
     )
@@ -237,9 +183,8 @@ def fetch_df(spark: SparkSession, bootstrap: str, topic_partitions: list[tuple[s
             for pdf in batches:
                 for topic, partition in zip(pdf["topic"], pdf["partition"]):
                     if conn is None:
-                        conn = KafkaConn.from_bootstrap(
-                            bootstrap, sasl=sasl, tls_ca=tls_ca,
-                            client_id=client_id, tls_insecure=tls_insecure)
+                        conn = KafkaConn.from_bootstrap(bootstrap,
+                                                        **conn_kw)
                     got = conn.fetch_all(topic, int(partition))
                     offsets = [o for o, _ in got]
                     if offsets != list(range(len(offsets))):
@@ -541,8 +486,7 @@ def kafka_live_config_roundtrip(frame: DataFrame, cfg,
                                   n_partitions=16)
     produce_frame(frame, broker.bootstrap, **opts)
     pairs = [(t, p) for t, parts in broker.topics.items() for p in parts]
-    return fetch_df(spark, broker.bootstrap, pairs, sasl=opts["sasl"],
-                    client_id=opts["client_id"])
+    return fetch_df(spark, broker.bootstrap, pairs, **conn_options(opts))
 
 
 def ensure_topics_from_config(bootstrap: str, cfg, topics: list[str],

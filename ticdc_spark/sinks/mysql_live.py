@@ -20,6 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ticdc_spark.sinks.writer import (SUMMARY_SCHEMA, RetryPolicy, TaskWriter,
+                                      transient)
+
 # keep servers alive until the driver finishes evaluating the readback
 _LIVE_SERVERS: list = []
 
@@ -52,85 +55,89 @@ def create_tables(host: str, port: int, user: str, password: str,
             )
 
 
+#: the applier's retry budget (the Kafka producer's, defaultMaxRetry=5)
+RETRY = RetryPolicy(max_tries=6, base_delay=0.1, max_delay=2.0)
+
+
+def applier(host: str, port: int, user: str, password: str,
+            multi_stmt: bool = True) -> TaskWriter:
+    """An apply task's writer over connections that run the session-init
+    statements first; ``send(stmts)`` applies a flush batch as ONE
+    transaction, so a retry re-runs the whole batch (idempotent in safe
+    mode: REPLACE/DELETE are full-row writes).  ``multi_stmt`` mirrors
+    enable-multi-statement (`mysql_writer_dml_exec.go:58`): one
+    multi-statement COM_QUERY, or one per statement (sequenceExecute).
+    SQL errors (``MySQLError``) are permanent."""
+    from ticdc_spark.sinks.mysql import session_init_statements
+    from ticdc_spark.sinks.mysql_client import MySQLConn
+
+    init = session_init_statements()
+
+    def open_():
+        conn = MySQLConn(host, port, user, password)
+        try:
+            for s in init:
+                conn.query(s)
+        except BaseException:
+            conn.close()
+            raise
+        return conn
+
+    def send(conn, stmts) -> None:
+        txn = ["START TRANSACTION", *stmts, "COMMIT"]
+        if multi_stmt:
+            conn.execute_batch(txn)
+        else:
+            for s in txn:
+                conn.query(s)
+
+    return TaskWriter(open_, send, transient(OSError), RETRY)
+
+
+def _apply_stmts(shaped: DataFrame, host: str, port: int, user: str,
+                 password: str, multi_stmt: bool, batch_stmts: int) -> list:
+    """Apply the ``stmt`` column, ``batch_stmts`` statements per
+    transaction; returns the tasks' SUMMARY_SCHEMA rows."""
+
+    def _apply(batches):
+        buf: list[str] = []
+        with applier(host, port, user, password, multi_stmt) as w:
+            # statement strings cross as Arrow batches (guide §4.1),
+            # not pickled Rows
+            for pdf in batches:
+                w.tally(pdf)
+                for s in pdf["stmt"].tolist():
+                    buf.append(s)
+                    if len(buf) >= batch_stmts:
+                        w.send(buf)
+                        buf = []
+            if buf:
+                w.send(buf)
+        yield from w.summary()
+
+    return shaped.mapInPandas(_apply, SUMMARY_SCHEMA).collect()
+
+
 def apply_over_wire(
     cl_split: DataFrame, host: str, port: int, user: str, password: str,
     n_slots: int = 16, generated_columns: frozenset[str] = frozenset(),
     pk_fields: tuple[str, ...] = ("id",),
-) -> None:
+) -> list:
     """Per-slot concurrent distributed apply of the safe-mode statement
     stream; each Spark partition holds one connection, session-init
-    first, then 256-statement multi-statement batches.
+    first, then 256-statement multi-statement batches.  Returns the
+    tasks' SUMMARY_SCHEMA rows.
     ``generated_columns`` are skipped in the generated DML column lists
     (multi_row.go:124-127) — the endpoint rejects writes to them.
     ``pk_fields`` drive the DELETE WHERE; a conflict key over a STORED
     generated column is legal here (its value rides the row images)."""
     from ticdc_spark.sinks.jdbc import statements_for_batch
-    from ticdc_spark.sinks.mysql import session_init_statements
 
     stmts = statements_for_batch(cl_split, safe_mode=True, n_slots=n_slots,
                                  pk_fields=pk_fields,
                                  generated_columns=generated_columns)
-    init = session_init_statements()
-
-    def _apply(batches):
-        import time as _time
-
-        from ticdc_spark.codec.mysql_wire import MySQLError
-        from ticdc_spark.sinks.mysql_client import MySQLConn
-
-        state = {"conn": None}
-        max_retry = 5
-
-        def run_batch(batch):
-            """Reconnect-and-retry like the reference's backoff applier;
-            re-running a safe-mode batch is idempotent (REPLACE/DELETE
-            are full-row writes). SQL errors (MySQLError) are permanent
-            and surface immediately."""
-            for attempt in range(max_retry + 1):
-                try:
-                    if state["conn"] is None:
-                        state["conn"] = MySQLConn(host, port, user, password)
-                        for s in init:
-                            state["conn"].query(s)
-                    state["conn"].execute_batch(batch)
-                    return
-                except MySQLError:
-                    raise
-                except (IOError, OSError):
-                    if state["conn"] is not None:
-                        state["conn"].close()
-                        state["conn"] = None
-                    if attempt == max_retry:
-                        raise
-                    _time.sleep(min(0.1 * (2 ** attempt), 2.0))
-
-        buf: list[str] = []
-        n_stmts = 0
-        try:
-            # statement strings cross as Arrow batches (guide §4.1),
-            # not pickled Rows; batching/transaction shape unchanged
-            for pdf in batches:
-                for s in pdf["stmt"].tolist():
-                    buf.append(s)
-                    n_stmts += 1
-                    if len(buf) >= _BATCH_STMTS:
-                        # each flush batch is one transaction (the
-                        # reference's transaction-atomicity: a mid-batch
-                        # failure applies nothing; the retry re-runs the
-                        # whole batch)
-                        run_batch(["START TRANSACTION", *buf, "COMMIT"])
-                        buf = []
-            if buf:
-                run_batch(["START TRANSACTION", *buf, "COMMIT"])
-        finally:
-            if state["conn"] is not None:
-                state["conn"].close()
-        import pandas as _pd
-
-        yield _pd.DataFrame({"n_stmts": [n_stmts]})
-
-    stmts.mapInPandas(_apply, "n_stmts long").write.format("noop").mode(
-        "overwrite").save()
+    return _apply_stmts(stmts, host, port, user, password, True,
+                        _BATCH_STMTS)
 
 
 def read_state_df(
@@ -373,74 +380,15 @@ def mysql_live_apply_prepared(
 
 def apply_stmt_frame(stmts: DataFrame, host: str, port: int, user: str,
                      password: str, multi_stmt: bool = True,
-                     batch_stmts: int = 256) -> None:
+                     batch_stmts: int = 256) -> list:
     """Apply an arbitrary ``stmt``-column frame (e.g. multirow batch
-    SQL) over the wire.  ``multi_stmt`` mirrors enable-multi-statement
-    (`pkg/sink/mysql/mysql_writer_dml_exec.go:58`): True sends each
-    flush batch as ONE multi-statement COM_QUERY; False executes the
-    statements sequentially inside the transaction (sequenceExecute).
-    Partitioned by table so one connection owns a table's stream."""
-    from ticdc_spark.sinks.mysql import session_init_statements
-
-    init = session_init_statements()
+    SQL) over the wire through ``applier`` (``multi_stmt`` as there).
+    Partitioned by table so one connection owns a table's stream.
+    Returns the tasks' SUMMARY_SCHEMA rows."""
     shaped = stmts.select("schema_name", "table_name", "stmt").repartition(
         "schema_name", "table_name")
-
-    def _apply(batches):
-        import time as _time
-
-        from ticdc_spark.codec.mysql_wire import MySQLError
-        from ticdc_spark.sinks.mysql_client import MySQLConn
-
-        state = {"conn": None}
-        max_retry = 5
-
-        def run_batch(batch):
-            for attempt in range(max_retry + 1):
-                try:
-                    if state["conn"] is None:
-                        state["conn"] = MySQLConn(host, port, user, password)
-                        for s in init:
-                            state["conn"].query(s)
-                    if multi_stmt:
-                        state["conn"].execute_batch(batch)
-                    else:
-                        # sequenceExecute: one COM_QUERY per statement
-                        for s in batch:
-                            state["conn"].query(s)
-                    return
-                except MySQLError:
-                    raise
-                except (IOError, OSError):
-                    if state["conn"] is not None:
-                        state["conn"].close()
-                        state["conn"] = None
-                    if attempt == max_retry:
-                        raise
-                    _time.sleep(min(0.1 * (2 ** attempt), 2.0))
-
-        buf: list[str] = []
-        n_stmts = 0
-        try:
-            # Arrow batches across the boundary (guide §4.1)
-            for pdf in batches:
-                for s in pdf["stmt"].tolist():
-                    buf.append(s)
-                    n_stmts += 1
-                    if len(buf) >= batch_stmts:
-                        run_batch(["START TRANSACTION", *buf, "COMMIT"])
-                        buf = []
-            if buf:
-                run_batch(["START TRANSACTION", *buf, "COMMIT"])
-        finally:
-            if state["conn"] is not None:
-                state["conn"].close()
-        import pandas as _pd
-
-        yield _pd.DataFrame({"n_stmts": [n_stmts]})
-
-    shaped.mapInPandas(_apply, "n_stmts long").write.format("noop").mode(
-        "overwrite").save()
+    return _apply_stmts(shaped, host, port, user, password, multi_stmt,
+                        batch_stmts)
 
 
 def mysql_live_apply_multirow_from_config(

@@ -11,6 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ticdc_spark.sinks.writer import (SUMMARY_SCHEMA, RetryPolicy, TaskWriter,
+                                      transient)
+
 _LIVE_BROKERS: list = []
 
 
@@ -43,12 +46,42 @@ def start_broker_oauth2():
     return broker, conf
 
 
+#: producer retry budget, the Kafka producer's (defaultMaxRetry=5)
+RETRY = RetryPolicy(max_tries=6, base_delay=0.1, max_delay=2.0)
+
+
+def producer(service_url: str, oauth2: dict | None = None,
+             batching_max_messages: int = 500, **conn_kw) -> TaskWriter:
+    """A produce task's writer; ``send((topic, messages))`` sends one
+    buffer of ``(payload, key)`` pairs pipelined, awaiting receipts.
+    Producers die with their connection, so a reconnect registers each
+    topic's producer again before it resends."""
+    from ticdc_spark.sinks.pulsar_client import PulsarConn
+
+    producer_ids: dict[str, int] = {}
+
+    def open_():
+        producer_ids.clear()
+        return PulsarConn.from_service_url(service_url, oauth2=oauth2,
+                                           **conn_kw)
+
+    def send(conn, item) -> None:
+        topic, msgs = item
+        pid = producer_ids.get(topic)
+        if pid is None:
+            pid = producer_ids[topic] = conn.create_producer(topic)
+        conn.send_pipelined(pid, msgs, batch_size=batching_max_messages)
+
+    return TaskWriter(open_, send, transient(OSError), RETRY)
+
+
 def produce_frame(frame: DataFrame, service_url: str,
                   oauth2: dict | None = None,
                   batching_max_messages: int = 500,
-                  **conn_kw) -> None:
+                  **conn_kw) -> list:
     """Distributed produce: tasks register one producer per topic they see
-    and send each row as a payload frame, awaiting receipts."""
+    and send each row as a payload frame, awaiting receipts; returns the
+    tasks' SUMMARY_SCHEMA rows."""
     shaped = frame.select(
         "topic",
         F.col("key").cast("string").alias("key"),
@@ -56,65 +89,28 @@ def produce_frame(frame: DataFrame, service_url: str,
     ).repartition("topic")
 
     def _send(batches):
-        import time as _time
-
-        from ticdc_spark.sinks.pulsar_client import PulsarConn
-
-        state = {"conn": None}
-        producer_ids: dict[str, int] = {}
         buffers: dict[str, list] = {}
         flush_at = 2000
-        max_retry = 5  # producer retry budget, kafka defaultMaxRetry parity
-
-        def flush(topic):
-            for attempt in range(max_retry + 1):
-                try:
-                    if state["conn"] is None:
-                        state["conn"] = PulsarConn.from_service_url(
-                            service_url, oauth2=oauth2, **conn_kw)
-                        producer_ids.clear()  # producers die with the conn
-                    pid = producer_ids.get(topic)
-                    if pid is None:
-                        pid = state["conn"].create_producer(topic)
-                        producer_ids[topic] = pid
-                    state["conn"].send_pipelined(
-                        pid, buffers[topic],
-                        batch_size=batching_max_messages)
-                    buffers[topic] = []
-                    return
-                except (IOError, OSError):
-                    if state["conn"] is not None:
-                        state["conn"].close()
-                        state["conn"] = None
-                    if attempt == max_retry:
-                        raise
-                    _time.sleep(min(0.1 * (2 ** attempt), 2.0))
-
-        n_sent = 0
-        try:
+        with producer(service_url, oauth2, batching_max_messages,
+                      **conn_kw) as w:
             # Arrow/pandas batches across the boundary (guide §4.1),
             # not pickled Rows; payload tuples identical
             for pdf in batches:
-                n_sent += len(pdf)
+                w.tally(pdf)
                 for t, k, v in zip(pdf["topic"].tolist(),
                                    pdf["key"].tolist(),
                                    pdf["value"].tolist()):
                     buf = buffers.setdefault(t, [])
                     buf.append((bytes(v) if v is not None else b"", k))
                     if len(buf) >= flush_at:
-                        flush(t)
-            for topic in list(buffers):
-                if buffers[topic]:
-                    flush(topic)
-        finally:
-            if state["conn"] is not None:
-                state["conn"].close()
-        import pandas as _pd
+                        w.send((t, buf))
+                        buffers[t] = []
+            for topic, buf in buffers.items():
+                if buf:
+                    w.send((topic, buf))
+        yield from w.summary()
 
-        yield _pd.DataFrame({"n_sent": [n_sent]})
-
-    shaped.mapInPandas(_send, "n_sent long").write.format("noop").mode(
-        "overwrite").save()
+    return shaped.mapInPandas(_send, SUMMARY_SCHEMA).collect()
 
 
 def read_df(spark: SparkSession, service_url: str, topics: list[str],

@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ticdc_spark.sinks.writer import (SUMMARY_SCHEMA, RetryPolicy, TaskWriter,
+                                      transient)
+
 _LIVE_SERVERS: list = []
 
 BUCKET = "cdc"
@@ -81,25 +84,58 @@ def _pooled_client(endpoint: str, cred1: str, cred2: str, scheme: str):
     if c is None:
         if len(_CLIENT_POOL) > 64:  # bound sockets held by a long worker
             # dicts keep insertion order: evict the oldest client
-            old = _CLIENT_POOL.pop(next(iter(_CLIENT_POOL)))
-            try:
-                old.close()
-            except Exception:  # noqa: BLE001
-                pass
+            _CLIENT_POOL.pop(next(iter(_CLIENT_POOL))).close()
         c = _client(endpoint, cred1, cred2, scheme)
         _CLIENT_POOL[key] = c
     return c
 
 
-def _drop_pooled(endpoint: str, cred1: str, cred2: str, scheme: str) -> None:
-    import os as _os
+#: the connectors' retry budget, with a shorter backoff
+RETRY = RetryPolicy(max_tries=6, base_delay=0.05, max_delay=1.0)
 
-    c = _CLIENT_POOL.pop((_os.getpid(), endpoint, cred1, cred2, scheme), None)
-    if c is not None:
+
+def uploader(endpoint: str, cred1: str, cred2: str, scheme: str,
+             multipart_threshold: int, part_size: int) -> TaskWriter:
+    """A storage task's writer; ``send([(key, data), ...])`` PUTs the
+    objects pipelined.  An object above ``multipart_threshold``, sent
+    alone, goes multi-part, and its resume handle survives reconnects."""
+    from ticdc_spark.sinks.s3_client import S3Error
+
+    handles: dict = {}  # key -> resume handle of its large upload
+
+    def send(client, items) -> None:
+        if len(items) > 1 or len(items[0][1]) <= multipart_threshold:
+            client.put_objects(BUCKET, items)
+            return
+        (key, data), = items
+        if key not in handles:
+            handles[key] = client.open_large(BUCKET, key)
         try:
-            c.close()
-        except Exception:  # noqa: BLE001
-            pass
+            client.put_object_large(BUCKET, key, data, part_size,
+                                    handles[key])
+        except S3Error as exc:
+            if exc.code != "NoSuchUpload":
+                raise
+            # the Complete committed but its response was lost: verify
+            # on a fresh connection that the object landed whole
+            # instead of failing (idempotent completion)
+            with _client(endpoint, cred1, cred2, scheme) as fresh:
+                if fresh.head_object(BUCKET, key) != len(data):
+                    raise
+        del handles[key]
+
+    return _store_writer(endpoint, cred1, cred2, scheme, send)
+
+
+def _store_writer(endpoint: str, cred1: str, cred2: str, scheme: str,
+                  send) -> TaskWriter:
+    """A writer over the worker's pooled client.  It retries ``OSError``
+    (the wire, GCS and Azure errors) and ``S3Error`` (a 503 SlowDown);
+    anything else (a bad part size's ``ValueError``) is permanent."""
+    from ticdc_spark.sinks.s3_client import S3Error
+
+    return TaskWriter(lambda: _pooled_client(endpoint, cred1, cred2, scheme),
+                      send, transient(OSError, S3Error), RETRY)
 
 
 def put_files(files: DataFrame, endpoint: str, access_key: str,
@@ -107,9 +143,11 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
               multipart_threshold: int = 8 * 1024 * 1024,
               part_size: int = 8 * 1024 * 1024,
               header: str | None = None,
-              spool_conf: dict | None = None) -> None:
+              spool_conf: dict | None = None) -> list:
     """files: rows carrying (path, file_name, value [, ordering cols]).
-    One object per (path, file_name), rows joined in replay-key order.
+    One object per (path, file_name), rows joined in replay-key order;
+    returns the tasks' SUMMARY_SCHEMA rows.  Each task uploads through
+    its ``uploader`` writer.
 
     Objects above ``multipart_threshold`` go through the scheme's
     multi-part path (S3 CreateMultipartUpload/UploadPart/Complete, GCS
@@ -137,47 +175,11 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
     )
 
     def _put(batches):
-        import time as _time
-
         cur: tuple[str, str] | None = None
         buf: list[str] = []
-        max_retry = 5  # connector retry budget (kafka/pulsar parity)
-
-        def upload(key: str, data: bytes, retry: int = max_retry) -> None:
-            handle = None  # survives reconnects: a large upload RESUMES
-            for attempt in range(retry + 1):
-                try:
-                    client = _pooled_client(endpoint, access_key,
-                                            secret_key, scheme)
-                    if len(data) > multipart_threshold:
-                        if handle is None:
-                            handle = client.open_large(BUCKET, key)
-                        client.put_object_large(BUCKET, key, data,
-                                                part_size, handle)
-                    else:
-                        client.put_object(BUCKET, key, data)
-                    return
-                except Exception as exc:  # noqa: BLE001 — reconnect+retry
-                    from ticdc_spark.sinks.s3_client import S3Error
-
-                    if (isinstance(exc, S3Error)
-                            and exc.code == "NoSuchUpload"):
-                        # the Complete committed but its response was
-                        # lost: verify the object landed whole instead
-                        # of failing (idempotent completion)
-                        try:
-                            fresh = _client(endpoint, access_key,
-                                            secret_key, scheme)
-                            if fresh.head_object(BUCKET, key) == len(data):
-                                fresh.close()
-                                return
-                            fresh.close()
-                        except Exception:  # noqa: BLE001
-                            pass
-                    _drop_pooled(endpoint, access_key, secret_key, scheme)
-                    if attempt == retry:
-                        raise
-                    _time.sleep(min(0.05 * (2 ** attempt), 1.0))
+        # not entered as a context: the pooled client outlives the task
+        w = uploader(endpoint, access_key, secret_key, scheme,
+                     multipart_threshold, part_size)
 
         # ---- spool-backed writer ------------------------------------
         sp = None
@@ -200,13 +202,13 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
                 segment_capacity=int(
                     spool_conf.get("segment-capacity", 0)))
 
-        def drain(retry: int = max_retry):
+        def drain(tries: int | None = None):
             """Upload every spooled entry, releasing its quota."""
             while queued:
                 key, entry = queued[0]
                 msgs = sp.read_messages(entry)
                 for _k, value, _rows in msgs:
-                    upload(key, value, retry=retry)
+                    w.send([(key, value)], tries)
                 sp.release(entry)
                 queued.pop(0)
 
@@ -223,14 +225,13 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
                 return
             items, pending, pending_bytes = pending, [], 0
             try:
-                client = _pooled_client(endpoint, access_key, secret_key,
-                                        scheme)
-                client.put_objects(BUCKET, items)
-            except Exception:  # noqa: BLE001 — fall back per item with
-                # the full reconnect+retry budget
-                _drop_pooled(endpoint, access_key, secret_key, scheme)
-                for key, data in items:
-                    upload(key, data)
+                w.send(items, tries=1)
+            except Exception as exc:  # noqa: BLE001 — fall back per item
+                # with the full retry budget
+                if not w.retryable(exc):
+                    raise
+                for item in items:
+                    w.send([item])
 
         def flush():
             nonlocal pending_bytes
@@ -243,7 +244,7 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
             if sp is None:
                 if len(data) > multipart_threshold:
                     flush_pending()  # keep object order within the task
-                    upload(key, data)
+                    w.send([(key, data)])
                 else:
                     pending.append((key, data))
                     pending_bytes += len(data)
@@ -272,17 +273,17 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
             # but absorb (keep spooling) while it stalls — one attempt,
             # no backoff; the final drain carries the full retry budget
             try:
-                drain(retry=0)
+                drain(tries=1)
             except Exception:  # noqa: BLE001 — stalled store: park it
                 pass
 
-        n_files = 0
         try:
             # rows arrive as Arrow/pandas batches (not pickled Row
             # objects — guide §4.1: the boundary crossing scales with
             # row count, Arrow is the cheap way across); group
             # boundaries carry over between batches via cur/buf
             for pdf in batches:
+                w.tally(pdf)
                 vals = pdf["value"].tolist()
                 paths = pdf["path"].tolist()
                 fnames = pdf["file_name"].tolist()
@@ -290,27 +291,22 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
                     key = (p, fn)
                     if key != cur:
                         flush()
-                        n_files += cur is not None
                         cur = key
                         buf = []
                     buf.append(v)
             flush()
-            n_files += cur is not None
             flush_pending()
             if sp is not None:
                 drain()  # final drain must succeed (full retry budget)
         finally:
             if sp is not None:
                 sp.close()
-        import pandas as _pd
+        yield from w.summary()
 
-        yield _pd.DataFrame({"n_files": [n_files]})
-
-    # the summary count materializes every partition (the upload is the
-    # side effect, exactly as foreachPartition ran it — but rows cross
-    # the JVM→Python boundary as Arrow batches instead of pickled Rows)
-    shaped.mapInPandas(_put, "n_files long").write.format("noop").mode(
-        "overwrite").save()
+    # the summary materializes every partition (the upload is the side
+    # effect, exactly as foreachPartition ran it — but rows cross the
+    # JVM→Python boundary as Arrow batches instead of pickled Rows)
+    return shaped.mapInPandas(_put, SUMMARY_SCHEMA).collect()
 
 
 def get_files_df(
@@ -334,20 +330,15 @@ def get_files_df(
     def _get(batches):
         import pandas as pd
 
+        reader = _store_writer(
+            endpoint, access_key, secret_key, scheme,
+            lambda client, keys: client.get_objects(BUCKET, keys))
         for pdf in batches:
             batch_keys = list(pdf["key"])
             if not batch_keys:
                 continue
-            try:
-                client = _pooled_client(endpoint, access_key, secret_key,
-                                        scheme)
-                bodies = client.get_objects(BUCKET, batch_keys)
-            except Exception:  # noqa: BLE001 — stale pooled socket:
-                # reconnect once with a fresh client
-                _drop_pooled(endpoint, access_key, secret_key, scheme)
-                client = _pooled_client(endpoint, access_key, secret_key,
-                                        scheme)
-                bodies = client.get_objects(BUCKET, batch_keys)
+            # a stale pooled socket reconnects once
+            bodies = reader.send(batch_keys, tries=2)
             paths, values = [], []
             for key, body in zip(batch_keys, bodies):
                 path = key.rsplit("/", 1)[0]

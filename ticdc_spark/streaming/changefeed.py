@@ -201,7 +201,7 @@ class Changefeed:
             # advance for MySQL sinks (the reference advances checkpointTs
             # for every sink); otherwise /synced stays false, syncpoints
             # skip, and gc_safepoint ignores the changefeed
-            from ticdc_spark.sinks.kafka_live import summarize
+            from ticdc_spark.sinks.writer import summarize
 
             summary = summarize(batch_df)
             if not sum(r["rows"] for r in summary):
@@ -311,7 +311,7 @@ class Changefeed:
     def _commit_epoch(self, epoch_id: int, summary: list,
                       live_mq: bool) -> None:
         """Checkpoint bookkeeping from the flush's summary rows
-        (``kafka_live.SUMMARY_SCHEMA``, a few per task): the progress
+        (``sinks.writer.SUMMARY_SCHEMA``, a few per task): the progress
         entry, the syncpoints and, on the live wire, the watermark
         broadcast.  No Spark job runs here."""
         rows = [r.asDict() for r in summary]

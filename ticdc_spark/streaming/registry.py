@@ -57,20 +57,24 @@ class ChangefeedRegistry:
         state = self._load()
         if changefeed_id in state and state[changefeed_id]["state"] != "removed":
             raise ValueError(f"changefeed {changefeed_id} already exists")
-        cfg = parse_changefeed_config(config_toml, fmt=fmt)
-        if sink_uri:
-            cfg.sink_uri = sink_uri
-            from ticdc_spark.config import apply_sink_uri_params
-
-            apply_sink_uri_params(cfg)  # the override URI's params win
-        state[changefeed_id] = {"state": "normal", "config_toml": config_toml,
-                                "config_fmt": fmt,
-                                "sink_uri": cfg.sink_uri}
+        entry = {"state": "normal", "config_toml": config_toml,
+                 "config_fmt": fmt, "sink_uri": sink_uri}
+        cfg = self._config(entry)
+        entry["sink_uri"] = cfg.sink_uri
+        state[changefeed_id] = entry
         self._save(state)
         cf = Changefeed(changefeed_id, cfg, self.work_dir,
                         live_bootstrap=self._bootstrap(cfg))
         self._live[changefeed_id] = cf
         return cf
+
+    @staticmethod
+    def _config(entry: dict) -> ChangefeedConfig:
+        """A registry entry's config, parsed once with its override sink
+        URI (if any) in place of the config's own."""
+        return parse_changefeed_config(
+            entry["config_toml"], fmt=entry.get("config_fmt", "toml"),
+            sink_uri=entry.get("sink_uri"))
 
     def _bootstrap(self, cfg) -> str | None:
         if not self.live:
@@ -87,14 +91,7 @@ class ChangefeedRegistry:
         if changefeed_id not in state:
             raise KeyError(changefeed_id)
         if changefeed_id not in self._live:
-            cfg = parse_changefeed_config(
-                state[changefeed_id]["config_toml"],
-                fmt=state[changefeed_id].get("config_fmt", "toml"))
-            if state[changefeed_id].get("sink_uri"):
-                cfg.sink_uri = state[changefeed_id]["sink_uri"]
-                from ticdc_spark.config import apply_sink_uri_params
-
-                apply_sink_uri_params(cfg)
+            cfg = self._config(state[changefeed_id])
             if state[changefeed_id].get("overwrite_checkpoint_ts"):
                 # a rewound changefeed starts from the overwritten ts:
                 # rows with commit_ts <= ts count as already replicated
