@@ -5,8 +5,12 @@ module (`codec/avro.py`): the per-table Confluent key/value of the native
 ``avro`` protocol (with and without the TiDB extension, tombstone and
 delete marker), the flat-record DataFrame path in its Confluent and Glue
 envelopes, ``debezium-avro`` payloads and simple-protocol Avro messages.
+The DataFrame encoders are pinned too: ``encode_simple_avro_values``,
+``encode_simple_avro_dml``, ``encode_debezium_avro_df``, the gated-on
+``debezium_avro_watermarks`` and ``compress_values`` (zlib and lz4).
 Inputs are generated from fixed seeds, so a digest changes only when a
-wire byte does.
+wire byte does. Each frame is coalesced to one partition, so the
+per-batch in-memory registry assigns the same ids on every run.
 """
 
 from __future__ import annotations
@@ -332,3 +336,78 @@ def test_flat_record_frame_digest(spark):
 def test_avro_protocol_frame_digest(spark):
     assert events_frame_digest(spark) == (
         "863b95ffe7774fddbc28effd1628c9c162d0ddc7c7a7c3ce093ef9d698bd42a7")
+
+
+def _named_flat_frame(spark):
+    from pyspark.sql import functions as F
+
+    return (_flat_frame(spark)
+            .withColumn("schema_name", F.lit("tpch"))
+            .withColumn("table_name", F.lit("orders"))
+            .withColumn("table_id", F.col("seq") % 4 + 100))
+
+
+def simple_avro_frames_digest(spark) -> str:
+    from ticdc_spark.codec.simple_avro import (
+        encode_simple_avro_dml,
+        encode_simple_avro_values,
+    )
+
+    out = [r["value"] for r in encode_simple_avro_values(
+        _events_frame(spark)).orderBy("seq").collect()]
+    out += [r["value"] for r in encode_simple_avro_dml(
+        _named_flat_frame(spark), _FLAT_FIELDS,
+        _FLAT_TYPES).orderBy("seq").collect()]
+    return _digest(out)
+
+
+def debezium_avro_frames_digest(spark) -> str:
+    from pyspark.sql import functions as F
+
+    from ticdc_spark.codec.debezium_avro import (
+        debezium_avro_watermarks,
+        encode_debezium_avro_df,
+    )
+
+    out = []
+    for r in encode_debezium_avro_df(_events_frame(spark)) \
+            .orderBy("seq").collect():
+        out += [r["key"], r["value"]]
+    wm = _events_frame(spark).select(
+        (F.lit(1704067200000000) + F.col("seq") * 1_000_003)
+        .alias("resolved_ts"))
+    for r in debezium_avro_watermarks(
+            wm, tidb_extension=True, avro_enable_watermark=True) \
+            .orderBy("resolved_ts").collect():
+        out += [r["key"], r["value"]]
+    return _digest(out)
+
+
+def compressed_values_digest(spark) -> str:
+    from ticdc_spark.operators.large_message import compress_values
+
+    rng = random.Random(16)
+    rows = [(i, None if i % 9 == 0 else
+             "v%d-" % i + "ab" * rng.randrange(200) + "✓")
+            for i in range(90)]
+    df = spark.createDataFrame(rows, "seq long, value string").coalesce(1)
+    out = []
+    for codec in ("zlib", "lz4"):
+        out += [r["value"] for r in compress_values(df, codec)
+                .orderBy("seq").collect()]
+    return _digest(out)
+
+
+def test_simple_avro_frames_digest(spark):
+    assert simple_avro_frames_digest(spark) == (
+        "00b912b4e4b1e38bb073ac54ff2ff1cc6ea214da123c90452d8499a306046d2b")
+
+
+def test_debezium_avro_frames_digest(spark):
+    assert debezium_avro_frames_digest(spark) == (
+        "118a2fa864d66b95fc8b9a93dac6cc24dfc652f3e4cb2effecc97d4493369e3d")
+
+
+def test_compressed_values_digest(spark):
+    assert compressed_values_digest(spark) == (
+        "391bc3379f9b5cb40e9d00e68607b4b66d4ca289a6465602d3ab3f28adc77649")
