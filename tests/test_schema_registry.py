@@ -87,6 +87,26 @@ def test_confluent_gives_up_after_max_retries():
         mgr.register("s-value", SCHEMA_A)
 
 
+def test_confluent_no_sleep_after_last_try(monkeypatch):
+    """The backoff runs between tries only: three failed tries sleep
+    twice, on the doubling schedule."""
+    from ticdc_spark.codec import schema_registry
+
+    class Down:
+        def request(self, method, url, body, headers):
+            if url.endswith(".local/"):  # the constructor's probe
+                return 200, "{}"
+            raise OSError("connection refused")
+
+    sleeps = []
+    monkeypatch.setattr(schema_registry.time, "sleep", sleeps.append)
+    mgr = ConfluentSchemaManager("http://registry.local", transport=Down(),
+                                 max_retries=3, backoff_s=0.05)
+    with pytest.raises(RegistryError):
+        mgr.register("s-value", SCHEMA_A)
+    assert sleeps == [0.05, 0.1]
+
+
 def test_confluent_client_error_is_final_no_retry():
     calls = []
 

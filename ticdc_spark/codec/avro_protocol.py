@@ -247,9 +247,6 @@ _SPARK_TO_AVRO = {
     "binary": "bytes", "date": "int", "boolean": "boolean",
 }
 _SPARK_TO_TIDB = {"string": "varchar", "binary": "blob"}
-# Python value per Avro primitive, for Arrow-batched encoders
-_TO_NATIVE = {"long": int, "int": int, "double": float, "float": float,
-              "string": str, "bytes": bytes, "boolean": bool}
 
 
 def struct_columns(payload, mysql_types: dict | None = None,
@@ -370,65 +367,58 @@ def encode_avro_binary_df(cl, tidb_extension: bool = True,
                           pk_fields: tuple[str, ...] = ("id",)):
     """DataFrame encoder (``ENCODERS["avro"]``): binary key/value
     columns over the columns of the frame's ``after`` struct
-    (:func:`struct_columns`, ``pk_fields`` the handle); Arrow-batched,
-    per-batch in-memory registry (deployments swap in the REST/Glue
-    managers from codec/schema_registry.py)."""
-    import pandas as pd
+    (:func:`struct_columns`, ``pk_fields`` the handle); one
+    ``arrow_rows.binary_column`` each, with an in-memory registry per
+    batch (deployments swap in the REST/Glue managers from
+    codec/schema_registry.py)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+
+    from ticdc_spark.functions.arrow_rows import binary_column
 
     columns = struct_columns(cl.schema["after"].dataType,
                              pk_fields=pk_fields)
 
     def _make(mode: str, cols: tuple):
-        native = [(c["name"], _TO_NATIVE[c["avro"]]) for c in cols]
+        names = [c["name"] for c in cols]
 
-        def conv(schema_name, table_name, op, commit_ts, image):
+        def conv(f):
             mgr = ConfluentSchemaManager.in_memory()
-            # plain lists once per batch instead of .iloc per cell —
-            # per-row Series.iloc calls otherwise cost more than the
-            # avro encode itself (guide §4.2: keep the per-row loop
-            # over native containers)
-            sn_l, tn_l = schema_name.tolist(), table_name.tolist()
-            op_l, cts_l = op.tolist(), commit_ts.tolist()
-            cols_l = [(n, [None if pd.isna(v) else to(v)
-                           for v in image[n].tolist()])
-                      for n, to in native]
+            image = f["image"]
             out = []
-            for i in range(len(op_l)):
-                row = {n: vals[i] for n, vals in cols_l}
-                topic = f"{sn_l[i]}.{tn_l[i]}"
+            for i, (sn, tn, op, cts) in enumerate(zip(
+                    f["schema_name"], f["table_name"], f["op"],
+                    f["commit_ts"])):
+                row = {n: image[n][i] for n in names}
+                topic = f"{sn}.{tn}"
                 if mode == "key":
                     out.append(encode_row_key(
-                        mgr, topic, sn_l[i], tn_l[i], row, columns,
+                        mgr, topic, sn, tn, row, columns,
                         keyspace=keyspace))
                 else:
                     out.append(encode_row_value(
-                        mgr, topic, sn_l[i], tn_l[i], row, op_l[i],
-                        int(cts_l[i]), columns,
+                        mgr, topic, sn, tn, row, op, cts, columns,
                         tidb_extension=tidb_extension,
                         avro_enable_watermark=avro_enable_watermark,
                         keyspace=keyspace))
-            return pd.Series(out, dtype=object)
+            return out
 
-        conv.__annotations__ = {
-            "schema_name": pd.Series, "table_name": pd.Series,
-            "op": pd.Series, "commit_ts": pd.Series,
-            "image": pd.DataFrame, "return": pd.Series}
-        return pandas_udf(conv, "binary")
+        return conv
 
     # key uses the pre-image for deletes; value uses the after image
     img_key = F.when(F.col("op") == "D", F.col("before")) \
         .otherwise(F.col("after"))
     handle = tuple(c for c in columns if c.get("handle"))
-    meta = [F.col("schema_name"), F.col("table_name"), F.col("op"),
-            F.col("commit_ts")]
-    return (cl.withColumn("key", _make("key", handle)(*meta, F.struct(*[
-                img_key.getField(c["name"]).alias(c["name"])
-                for c in handle])))
-            .withColumn("value", _make("value", columns)(*meta, F.struct(*[
-                F.col("after").getField(c["name"]).alias(c["name"])
-                for c in columns]))))
+    meta = ["schema_name", "table_name", "op", "commit_ts"]
+
+    def _image(img, cols):
+        return F.struct(*[img.getField(c["name"]).alias(c["name"])
+                          for c in cols]).alias("image")
+
+    return (cl.withColumn("key", binary_column(
+                _make("key", handle), *meta, _image(img_key, handle)))
+            .withColumn("value", binary_column(
+                _make("value", columns), *meta,
+                _image(F.col("after"), columns))))
 
 
 # -- flat-record path: key/value Avro records over ``before_*``/``after_*``
@@ -462,6 +452,8 @@ def encode_avro_binary(flat, fields: list[str], types: dict[str, str],
 
     from pyspark.sql.types import StructType
 
+    from ticdc_spark.functions.arrow_rows import map_batches
+
     ids = (key_schema_id, value_schema_id)
     if registry == "glue":
         khdr, vhdr = (GlueSchemaManager.get_msg_header(
@@ -476,27 +468,24 @@ def encode_avro_binary(flat, fields: list[str], types: dict[str, str],
     ffields = list(fields)
 
     def _encode_batches(batches):
-        import pandas as pd
-
         kenc = compile_avro_encoder(key_schema, {})
         venc = compile_avro_encoder(value_schema, {})
-        for pdf in batches:
-            images = {img: [[None if pd.isna(v) else v
-                             for v in pdf[f"{img}_{f}"].tolist()]
-                            for f in ffields]
+        for c in batches:
+            images = {img: [c[f"{img}_{f}"] for f in ffields]
                       for img in ("before", "after")}
-            keys, vals = [], []
-            for i, op in enumerate(pdf["op"].tolist()):
+            rows = []
+            passed = zip(*(c[p] for p in _PASS))
+            for i, (op, pas) in enumerate(zip(c["op"], passed)):
                 cols = images["before" if op == "D" else "after"]
-                rec = {f: c[i] for f, c in zip(ffields, cols)}
-                keys.append(khdr + kenc(rec))
-                vals.append(None if op == "D" else vhdr + venc(rec))
-            out = pdf[_PASS].copy()
-            out["key"] = keys
-            out["value"] = vals
-            yield out
+                rec = {f: col[i] for f, col in zip(ffields, cols)}
+                rows.append((*pas, khdr + kenc(rec),
+                             None if op == "D" else vhdr + venc(rec)))
+            yield rows
 
-    return flat.mapInPandas(_encode_batches, schema=out_schema)
+    return map_batches(
+        flat.select(*_PASS, *(f"{img}_{f}" for img in ("before", "after")
+                              for f in ffields)),
+        _encode_batches, out_schema)
 
 
 def decode_avro_binary(encoded, fields: list[str], types: dict[str, str],
@@ -505,6 +494,8 @@ def decode_avro_binary(encoded, fields: list[str], types: dict[str, str],
     recover only the handle key; other columns come back NULL."""
     from pyspark.sql.types import StructType
 
+    from ticdc_spark.functions.arrow_rows import map_batches
+
     out_schema = StructType([encoded.schema[c] for c in _PASS])
     for f in fields:
         out_schema.add(f, types[f])
@@ -512,22 +503,20 @@ def decode_avro_binary(encoded, fields: list[str], types: dict[str, str],
     ffields = list(fields)
 
     def _decode_batches(batches):
-        import pandas as pd
-
         kdec = compile_avro_decoder(key_schema, {})
         vdec = compile_avro_decoder(value_schema, {})
-        for pdf in batches:
+        for c in batches:
             rows = []
-            passed = zip(*(pdf[c].tolist() for c in _PASS))
-            for pas, k, v in zip(passed, pdf["key"].tolist(),
-                                 pdf["value"].tolist()):
-                buf, dec = (bytes(k), kdec) if v is None else (bytes(v), vdec)
+            for *pas, k, v in zip(*(c[p] for p in _PASS), c["key"],
+                                  c["value"]):
+                buf, dec = (k, kdec) if v is None else (v, vdec)
                 _, pos = parse_msg_header(buf)
                 rec = read_whole(dec, buf, pos, "avro")
-                rows.append([*pas, *(rec.get(f) for f in ffields)])
-            yield pd.DataFrame(rows, columns=_PASS + ffields)
+                rows.append((*pas, *(rec.get(f) for f in ffields)))
+            yield rows
 
-    return encoded.mapInPandas(_decode_batches, schema=out_schema)
+    return map_batches(encoded.select(*_PASS, "key", "value"),
+                       _decode_batches, out_schema)
 
 
 # -- non-row events (`encoder.go:105-147`): magic-byte framed ----------------

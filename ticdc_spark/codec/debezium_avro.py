@@ -431,20 +431,19 @@ def decode_debezium_avro_payload(data: bytes, schema_manager,
 # (`encoder.go:56-58,91-92` routes to the avro path when a schema
 # manager is configured).  Spark shape: the JSON envelope assembly
 # stays column algebra (codec/debezium.py); only the JSON→Avro byte
-# conversion runs in an Arrow-batched pandas UDF, with an in-memory
-# registry per batch (a deployment swaps in the REST/Glue manager —
-# both wire clients live in codec/schema_registry.py).
+# conversion runs per batch in ``arrow_rows.binary_column``, with an
+# in-memory registry per batch (a deployment swaps in the REST/Glue
+# manager — both wire clients live in codec/schema_registry.py).
 
 
 def encode_debezium_avro_df(cl, cluster_id: str = "ticdc-spark"):
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
     from ticdc_spark.codec.debezium import (
         encode_debezium_full,
         encode_debezium_key,
     )
+    from ticdc_spark.functions.arrow_rows import binary_column
 
     msgs = encode_debezium_key(
         encode_debezium_full(cl, cluster_id=cluster_id,
@@ -453,25 +452,20 @@ def encode_debezium_avro_df(cl, cluster_id: str = "ticdc-spark"):
     )
 
     def _converter(suffix: str):
-        def conv(json_col, topic):
-            import json as _json
-
+        def conv(c):
             codec = DebeziumAvroCodecCache(ConfluentSchemaManager.in_memory())
-            return pd.Series([
-                codec.encode(_json.loads(j), t, suffix)
-                for j, t in zip(json_col, topic)], dtype=object)
-
-        # explicit (non-string) annotations: the module's deferred
-        # annotations would otherwise defeat pandas_udf hint inference
-        conv.__annotations__ = {"json_col": pd.Series, "topic": pd.Series,
-                                "return": pd.Series}
-        return pandas_udf(conv, "binary")
+            return [codec.encode(json.loads(j), t, suffix)
+                    for j, t in zip(c["json"], c["topic"])]
+        return conv
 
     topic = F.concat_ws(".", F.lit(cluster_id), "schema_name",
-                        "table_name")
+                        "table_name").alias("topic")
     return (msgs
-            .withColumn("key", _converter(KEY_SUFFIX)("key", topic))
-            .withColumn("value", _converter(VALUE_SUFFIX)("value", topic)))
+            .withColumn("key", binary_column(
+                _converter(KEY_SUFFIX), F.col("key").alias("json"), topic))
+            .withColumn("value", binary_column(
+                _converter(VALUE_SUFFIX), F.col("value").alias("json"),
+                topic)))
 
 
 def debezium_avro_watermarks(watermarks, cluster_id: str = "ticdc-spark",
@@ -485,11 +479,10 @@ def debezium_avro_watermarks(watermarks, cluster_id: str = "ticdc-spark",
     messages convert through the same Connect→Avro path with topic ""
     so the subject falls back to the message's own schema name
     (``<cluster>.watermark.Key`` / ``.Envelope``)."""
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql import functions as F
 
     from ticdc_spark.codec.debezium import debezium_watermark_messages
+    from ticdc_spark.functions.arrow_rows import binary_column
 
     msgs = debezium_watermark_messages(watermarks, cluster_id=cluster_id,
                                        disable_schema=False)
@@ -497,23 +490,19 @@ def debezium_avro_watermarks(watermarks, cluster_id: str = "ticdc-spark",
         return msgs.limit(0).select("resolved_ts", "key", "value")
 
     def _conv(suffix: str):
-        def conv(json_col):
-            import json as _json
-
+        def conv(c):
             mgr = ConfluentSchemaManager.in_memory()
-            return pd.Series([
-                encode_debezium_avro_payload(_json.loads(j), "", suffix,
-                                             mgr)
-                for j in json_col], dtype=object)
-
-        conv.__annotations__ = {"json_col": pd.Series,
-                                "return": pd.Series}
-        return pandas_udf(conv, "binary")
+            return [encode_debezium_avro_payload(json.loads(j), "", suffix,
+                                                 mgr)
+                    for j in c["json"]]
+        return conv
 
     return msgs.select(
         "resolved_ts",
-        _conv(KEY_SUFFIX)("key").alias("key"),
-        _conv(VALUE_SUFFIX)("value").alias("value"))
+        binary_column(_conv(KEY_SUFFIX), F.col("key").alias("json"))
+        .alias("key"),
+        binary_column(_conv(VALUE_SUFFIX), F.col("value").alias("json"))
+        .alias("value"))
 
 
 class DebeziumAvroCodecCache:

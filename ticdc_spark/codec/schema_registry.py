@@ -243,7 +243,8 @@ class ConfluentSchemaManager:
                 if status < 500:
                     return status, text
                 last = (status, text)
-            time.sleep(self.backoff_s * (2 ** attempt))
+            if attempt + 1 < self.max_retries:
+                time.sleep(self.backoff_s * (2 ** attempt))
         return last
 
     def register(self, subject: str, schema_definition: str) -> int:

@@ -11,7 +11,8 @@ decode through the shared Avro interpreter (`codec/avro.py`), which
 resolves those names; the per-row DML path has its own compiled pair,
 pinned byte-identical to the interpreter.
 
-DataFrame path: Arrow-batched ``mapInPandas`` — byte assembly is not
+DataFrame path: the per-row stages of ``functions/arrow_rows.py``
+(``mapInArrow`` and one ``arrow_udf``) — byte assembly is not
 expressible as column algebra, and per-batch Python over Arrow is the
 sanctioned shape for wire codecs.
 """
@@ -294,43 +295,31 @@ def encode_simple_avro_dml(
     """Flat changelog (before_*/after_* columns) → binary simple-avro
     DML messages.  insert: data only; update: data+old; delete: old
     only — matching the JSON twin (`simple_protocol.py:35`)."""
-    import pandas as pd
+    from pyspark.sql import functions as F
 
-    out_schema = "seq long, op string, commit_ts long, value binary"
+    from ticdc_spark.functions.arrow_rows import map_batches
+
     enc = compile_dml_encoder(fields, types)
+    tid_col = (F.col("table_id") if "table_id" in flat.columns
+               else F.lit(0)).cast("long").alias("table_id")
+    images = [f"{img}_{f}" for img in ("after", "before") for f in fields]
 
-    def _cols(pdf, prefix):
-        """Per-field python lists with NaN→None (object conversion once
-        per column, not per row)."""
-        out = []
-        for f in fields:
-            col = pdf[f"{prefix}_{f}"]
-            out.append([None if pd.isna(v) else v for v in col.tolist()])
-        return out
+    def _encode(batches: Iterator[dict]) -> Iterator[list]:
+        for c in batches:
+            after = [c[f"after_{f}"] for f in fields]
+            before = [c[f"before_{f}"] for f in fields]
+            yield [
+                (seq, op, cts,
+                 enc(op, db, tbl, tid, cts, [a[i] for a in after],
+                     [b[i] for b in before]))
+                for i, (seq, op, db, tbl, tid, cts) in enumerate(zip(
+                    c["seq"], c["op"], c[database_col], c[table_col],
+                    c["table_id"], c["commit_ts"]))]
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ops = pdf["op"].tolist()
-            dbs = pdf[database_col].tolist()
-            tbls = pdf[table_col].tolist()
-            tids = (pdf["table_id"].tolist() if "table_id" in pdf
-                    else [0] * len(pdf))
-            ctss = pdf["commit_ts"].tolist()
-            after = _cols(pdf, "after")
-            before = _cols(pdf, "before")
-            vals = [
-                enc(ops[i], dbs[i], tbls[i], int(tids[i]), int(ctss[i]),
-                    [c[i] for c in after], [c[i] for c in before])
-                for i in range(len(ops))
-            ]
-            yield pd.DataFrame({
-                "seq": pdf["seq"].astype("int64"),
-                "op": pdf["op"],
-                "commit_ts": pdf["commit_ts"].astype("int64"),
-                "value": vals,
-            })
-
-    return flat.mapInPandas(_encode, out_schema)
+    return map_batches(
+        flat.select("seq", "op", database_col, table_col, tid_col,
+                    "commit_ts", *images),
+        _encode, "seq long, op string, commit_ts long, value binary")
 
 
 def decode_simple_avro_dml(
@@ -340,7 +329,7 @@ def decode_simple_avro_dml(
 ) -> DataFrame:
     """Consumer side: binary messages → recovered row images (data for
     I/U, old for D — the image a replicator applies)."""
-    import pandas as pd
+    from ticdc_spark.functions.arrow_rows import map_batches
 
     spark_t = {"long": "long", "double": "double", "string": "string"}
     out_schema = "seq long, op string, commit_ts long, " + ", ".join(
@@ -348,38 +337,31 @@ def decode_simple_avro_dml(
 
     dec = compile_dml_decoder(fields, types)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {f: [] for f in fields}
-            for v in pdf["value"]:
-                _op, img = dec(bytes(v))
-                for f in fields:
-                    cols[f].append(None if img is None else img.get(f))
-            out = {
-                "seq": pdf["seq"].astype("int64"),
-                "op": pdf["op"],
-                "commit_ts": pdf["commit_ts"].astype("int64"),
-            }
-            for f in fields:
-                s = pd.Series(cols[f])
-                if types[f] in ("long",):
-                    s = s.astype("Int64")
-                out[f] = s
-            yield pd.DataFrame(out)
+    def _decode(batches: Iterator[dict]) -> Iterator[list]:
+        for c in batches:
+            rows = []
+            for seq, op, cts, v in zip(c["seq"], c["op"], c["commit_ts"],
+                                       c["value"]):
+                _op, img = dec(v)
+                rows.append((seq, op, cts,
+                             *(None if img is None else img.get(f)
+                               for f in fields)))
+            yield rows
 
-    return msgs.mapInPandas(_decode, out_schema)
+    return map_batches(msgs.select("seq", "op", "commit_ts", "value"),
+                       _decode, out_schema)
 
 
 def encode_simple_avro_values(cl: DataFrame) -> DataFrame:
     """Pipeline-shape encoder (``protocol=simple`` with
     ``encoding-format=avro``, `pkg/config/sink.go:456` CodecConfig):
     keeps EVERY frame column (routing, images, ts) and adds the binary
-    simple-avro DML ``value`` via an Arrow-batched pandas UDF over the
-    compiled codec — the hot path `test_simple_avro` pins byte-identical
-    to the generic kernel."""
-    import pandas as pd
+    simple-avro DML ``value`` through ``arrow_rows.binary_column`` over
+    the compiled codec — the hot path `test_simple_avro` pins
+    byte-identical to the generic kernel."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+
+    from ticdc_spark.functions.arrow_rows import binary_column
 
     schema = cl.schema["after"].dataType
     fields = [f.name for f in schema.fields]
@@ -387,38 +369,18 @@ def encode_simple_avro_values(cl: DataFrame) -> DataFrame:
     types = {f.name: simple.get(f.dataType.simpleString(), "string")
              for f in schema.fields}
     enc = compile_dml_encoder(fields, types)
-    n = len(fields)
 
-    def _impl(*cols):
-        # plain lists once per batch instead of .iloc per cell — the
-        # per-row Series.iloc chain otherwise costs more than the
-        # compiled avro encode itself (guide §4.2)
-        op, db, tbl, tid, cts = (c.tolist() for c in cols[:5])
-        before = [[None if pd.isna(v) else v for v in c.tolist()]
-                  for c in cols[5:5 + n]]
-        after = [[None if pd.isna(v) else v for v in c.tolist()]
-                 for c in cols[5 + n:]]
-        out = []
-        for i in range(len(op)):
-            out.append(enc(op[i], db[i], tbl[i],
-                           int(tid[i]), int(cts[i]),
-                           [c[i] for c in after], [c[i] for c in before]))
-        return pd.Series(out, dtype=object)
+    def conv(c):
+        after = [c["after"][f] for f in fields]
+        before = [c["before"][f] for f in fields]
+        return [enc(op, db, tbl, tid, cts, [a[i] for a in after],
+                    [b[i] for b in before])
+                for i, (op, db, tbl, tid, cts) in enumerate(zip(
+                    c["op"], c["schema_name"], c["table_name"],
+                    c["table_id"], c["commit_ts"]))]
 
-    # pandas_udf needs a fixed named signature; generate one of the
-    # right arity (the module's deferred annotations rule out hints)
-    params = (["op", "db", "tbl", "tid", "cts"]
-              + [f"b{i}" for i in range(n)] + [f"a{i}" for i in range(n)])
-    ns: dict = {"_impl": _impl}
-    exec(f"def _conv({', '.join(params)}):\n"
-         f"    return _impl({', '.join(params)})", ns)
-    conv = ns["_conv"]
-    conv.__annotations__ = {p: pd.Series for p in params + ["return"]}
-    udf = pandas_udf(conv, "binary")
     tid_col = (F.col("table_id") if "table_id" in cl.columns
-               else F.lit(0)).cast("long")
-    args = ([F.col("op"), F.col("schema_name"), F.col("table_name"),
-             tid_col, F.col("commit_ts")]
-            + [F.col(f"before.{f}") for f in fields]
-            + [F.col(f"after.{f}") for f in fields])
-    return cl.withColumn("value", udf(*args))
+               else F.lit(0)).cast("long").alias("table_id")
+    return cl.withColumn("value", binary_column(
+        conv, "op", "schema_name", "table_name", tid_col, "commit_ts",
+        "before", "after"))

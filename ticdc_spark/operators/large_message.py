@@ -159,47 +159,36 @@ def resolve_claim_check(msgs: DataFrame, claim_store: DataFrame,
 
 def compress_values(df: DataFrame, codec: str = "zlib",
                     col: str = "value") -> DataFrame:
-    """Compress a string/binary message column → binary. Arrow-batched
-    pandas UDF (the payload bytes can't be expressed as column algebra);
-    sits at the very end of the sink path so nothing downstream of it
-    needs codegen."""
-    from pyspark.sql.functions import pandas_udf
-
+    """Compress a string/binary message column → binary, per batch in
+    ``arrow_rows.binary_column`` (the payload bytes can't be expressed
+    as column algebra); sits at the very end of the sink path so nothing
+    downstream of it needs codegen."""
     from ticdc_spark.codec import compression
+    from ticdc_spark.functions.arrow_rows import binary_column
 
     compression.check_codec(codec)
 
-    @pandas_udf("binary")
-    def _compress(s):
-        import pandas as pd
+    def _compress(c):
+        return [None if v is None
+                else compression.compress(
+                    codec, v.encode() if isinstance(v, str) else v)
+                for v in c[col]]
 
-        return pd.Series([
-            None if v is None
-            else compression.compress(
-                codec, v.encode() if isinstance(v, str) else v)
-            for v in s
-        ])
-
-    return df.withColumn(col, _compress(F.col(col)))
+    return df.withColumn(col, binary_column(_compress, col))
 
 
 def decompress_values(df: DataFrame, codec: str = "zlib",
                       col: str = "value") -> DataFrame:
-    """Inverse of ``compress_values`` (consumer side): binary → string."""
-    from pyspark.sql.functions import pandas_udf
-
+    """Inverse of ``compress_values`` (consumer side): binary → string
+    (the decompressed bytes are UTF-8 text)."""
     from ticdc_spark.codec import compression
+    from ticdc_spark.functions.arrow_rows import binary_column
 
     compression.check_codec(codec)
 
-    @pandas_udf("string")
-    def _decompress(s):
-        import pandas as pd
+    def _decompress(c):
+        return [None if v is None else compression.decompress(codec, v)
+                for v in c[col]]
 
-        return pd.Series([
-            None if v is None
-            else compression.decompress(codec, bytes(v)).decode()
-            for v in s
-        ])
-
-    return df.withColumn(col, _decompress(F.col(col)))
+    return df.withColumn(col, binary_column(_decompress, col)
+                         .cast("string"))

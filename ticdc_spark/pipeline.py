@@ -43,31 +43,6 @@ from ticdc_spark.operators import (
 )
 
 
-def _debezium_avro(df):
-    from ticdc_spark.codec.debezium_avro import encode_debezium_avro_df
-
-    return encode_debezium_avro_df(df)
-
-
-def _avro_confluent(df):
-    from ticdc_spark.codec.avro_protocol import encode_avro_binary_df
-
-    return encode_avro_binary_df(df)
-
-
-# protocol enum per `pkg/config/sink_protocol.go:33-44`
-ENCODERS = {
-    "canal-json": encode_canal_json,
-    "csv": encode_csv,
-    "open-protocol": encode_open_protocol,
-    "debezium": encode_debezium,
-    "simple": encode_simple,
-    "avro": _avro_confluent,  # confluent-framed binary (the wire shape)
-    "avro-json": encode_avro_json,  # Avro JSON-encoding debug twin
-    "debezium-avro": _debezium_avro,  # confluent-framed Avro binary
-}
-
-
 @dataclass
 class ChangefeedConfig:
     """Subset of the reference ReplicaConfig surface, same names; the
@@ -214,63 +189,83 @@ def apply_replication_window(cl: DataFrame,
     return cl
 
 
+def _csv(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
+    from ticdc_spark.codec.csv_codec import csv_encode_kwargs
+
+    return encode_csv(df, terminator=cfg.terminator,  # per-message, csv/txt
+                      **csv_encode_kwargs(cfg.csv_config))
+
+
+def _canal_json(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
+    from ticdc_spark.codec.canal_json import content_compatible_overrides
+
+    overrides = (content_compatible_overrides(df.schema["after"].dataType)
+                 if cfg.content_compatible else None)
+    return encode_canal_json(df, tidb_extension=cfg.tidb_extension,
+                             type_overrides=overrides,
+                             output_row_key=cfg.output_row_key)
+
+
+def _debezium(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
+    if cfg.debezium_disable_schema:
+        return encode_debezium(
+            df, output_old_value=cfg.debezium_output_old_value)
+    # reference default: the Connect schema envelope rides every
+    # message (`replica_config.go:87`)
+    from ticdc_spark.codec.debezium import encode_debezium_full
+
+    return encode_debezium_full(
+        df, disable_schema=False,
+        output_old_value=cfg.debezium_output_old_value)
+
+
+def _simple(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
+    if cfg.encoding_format != "avro":
+        return encode_simple(df)
+    # [sink.codec] encoding-format (pkg/config/sink.go:456): the simple
+    # protocol's second wire shape
+    from ticdc_spark.codec.simple_avro import encode_simple_avro_values
+
+    return encode_simple_avro_values(df)
+
+
+def _avro(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
+    from ticdc_spark.codec.avro_protocol import encode_avro_binary_df
+
+    return encode_avro_binary_df(
+        df, tidb_extension=cfg.tidb_extension,
+        avro_enable_watermark=cfg.avro_enable_watermark,
+        pk_fields=tuple(cfg.handle_key_fields))
+
+
+def _debezium_avro(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
+    from ticdc_spark.codec.debezium_avro import encode_debezium_avro_df
+
+    return encode_debezium_avro_df(df)
+
+
+# protocol enum per `pkg/config/sink_protocol.go:33-44`; each entry
+# applies its own options from the changefeed config
+ENCODERS = {
+    "canal-json": _canal_json,
+    "csv": _csv,
+    "open-protocol": lambda df, cfg: encode_open_protocol(
+        df, output_old_value=cfg.open_output_old_value),
+    "debezium": _debezium,
+    "simple": _simple,
+    "avro": _avro,  # confluent-framed binary (the wire shape)
+    "avro-json": lambda df, cfg: encode_avro_json(df),  # JSON debug twin
+    "debezium-avro": _debezium_avro,  # confluent-framed Avro binary
+}
+
+
 def _encode(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
-    """Protocol encode with the stream's protocol options applied
-    ([sink.csv], canal-json extension, debezium schema envelope, avro
-    extension/watermark, simple encoding-format)."""
+    """Protocol encode with the stream's protocol options applied."""
     if cfg.protocol not in ENCODERS:
         raise ValueError(
             f"unknown protocol: {cfg.protocol} (known: {sorted(ENCODERS)})"
         )
-    if cfg.protocol == "csv":
-        from ticdc_spark.codec.csv_codec import csv_encode_kwargs
-
-        return encode_csv(
-            df,
-            terminator=cfg.terminator,  # per-message, csv/txt only
-            **csv_encode_kwargs(cfg.csv_config),
-        )
-    if cfg.protocol == "canal-json" and (
-            cfg.tidb_extension or cfg.content_compatible):
-        from ticdc_spark.codec.canal_json import (
-            content_compatible_overrides,
-            encode_canal_json,
-        )
-
-        overrides = (content_compatible_overrides(
-            df.schema["after"].dataType) if cfg.content_compatible
-            else None)
-        return encode_canal_json(df, tidb_extension=cfg.tidb_extension,
-                                 type_overrides=overrides,
-                                 output_row_key=cfg.output_row_key)
-    if cfg.protocol == "open-protocol":
-        return encode_open_protocol(
-            df, output_old_value=cfg.open_output_old_value)
-    if cfg.protocol == "avro":
-        from ticdc_spark.codec.avro_protocol import encode_avro_binary_df
-
-        return encode_avro_binary_df(
-            df, tidb_extension=cfg.tidb_extension,
-            avro_enable_watermark=cfg.avro_enable_watermark,
-            pk_fields=tuple(cfg.handle_key_fields))
-    if cfg.protocol == "debezium":
-        if not cfg.debezium_disable_schema:
-            # reference default: the Connect schema envelope rides
-            # every message (`replica_config.go:87`)
-            from ticdc_spark.codec.debezium import encode_debezium_full
-
-            return encode_debezium_full(
-                df, disable_schema=False,
-                output_old_value=cfg.debezium_output_old_value)
-        return encode_debezium(
-            df, output_old_value=cfg.debezium_output_old_value)
-    if cfg.protocol == "simple" and cfg.encoding_format == "avro":
-        # [sink.codec] encoding-format (pkg/config/sink.go:456): the
-        # simple protocol's second wire shape
-        from ticdc_spark.codec.simple_avro import encode_simple_avro_values
-
-        return encode_simple_avro_values(df)
-    return ENCODERS[cfg.protocol](df)
+    return ENCODERS[cfg.protocol](df, cfg)
 
 
 def build_pipeline(cl: DataFrame, cfg: ChangefeedConfig) -> DataFrame:

@@ -2428,8 +2428,9 @@ def q_mysql_index_name_restore(spark, sf_dir):
 # changelog serialized into version-prefixed msgpack RedoLog records
 # inside 8-byte-aligned WAL frames, then unframed and decoded back.
 # Identity oracle (pk/seq are not part of the redo format; multiset
-# equality over the remaining columns is exact).  Arrow-batched
-# mapInPandas — the per-row byte codec is the sanctioned slow path.
+# equality over the remaining columns is exact).  A mapInArrow row
+# stage (arrow_rows.map_batches) — the per-row byte codec is the
+# sanctioned slow path.
 # ---------------------------------------------------------------------------
 _REDO_V2_COLS = ("schema_name, table_name, table_id, op, commit_ts, "
                  "start_ts, before_id, before_val, before_k, "
@@ -2442,14 +2443,13 @@ _REDO_V2_ORACLE = (
 
 @register("redo_v2_roundtrip", _REDO_V2_ORACLE, bench="plan")
 def q_redo_v2_roundtrip(spark, sf_dir):
-    import pandas as pd
-
     from ticdc_spark.codec.msgpack_redo import (
         frame_records,
         marshal_redo_dml,
         unframe_records,
         unmarshal_redo_log,
     )
+    from ticdc_spark.functions.arrow_rows import map_batches
     from ticdc_spark.queries import _flatten
     from ticdc_spark.sources.changelog import events_changelog
 
@@ -2461,19 +2461,19 @@ def q_redo_v2_roundtrip(spark, sf_dir):
     names = ["id", "val", "k"]
 
     def run(batches):
-        for pdf in batches:
+        for c in batches:
             recs = []
-            for r in pdf.itertuples(index=False):
-                d = r._asdict()
-                cols = ([{"value": d[f"after_{n}"], "flag": 0}
-                         for n in names] if d["op"] in ("I", "U") else None)
-                pre = ([{"value": d[f"before_{n}"], "flag": 0}
-                        for n in names] if d["op"] in ("U", "D") else None)
+            for i, op in enumerate(c["op"]):
+                cols = ([{"value": c[f"after_{n}"][i], "flag": 0}
+                         for n in names] if op in ("I", "U") else None)
+                pre = ([{"value": c[f"before_{n}"][i], "flag": 0}
+                        for n in names] if op in ("U", "D") else None)
                 recs.append(marshal_redo_dml({
-                    "start_ts": d["start_ts"], "commit_ts": d["commit_ts"],
-                    "table": {"schema": d["schema_name"],
-                              "table": d["table_name"],
-                              "table_id": d["table_id"],
+                    "start_ts": c["start_ts"][i],
+                    "commit_ts": c["commit_ts"][i],
+                    "table": {"schema": c["schema_name"][i],
+                              "table": c["table_name"][i],
+                              "table_id": c["table_id"][i],
                               "is_partition": False},
                     "columns": cols, "pre_columns": pre,
                 }))
@@ -2486,20 +2486,17 @@ def q_redo_v2_roundtrip(spark, sf_dir):
                 inner = row["row"]
                 cols, pre = row["columns"], row["pre-columns"]
                 op = "U" if (cols and pre) else ("I" if cols else "D")
-                a = [c["column"] for c in cols] if cols else [None] * 3
-                b = [c["column"] for c in pre] if pre else [None] * 3
+                a = [x["column"] for x in cols] if cols else [None] * 3
+                b = [x["column"] for x in pre] if pre else [None] * 3
                 out.append((
                     inner["table"]["db-name"], inner["table"]["tbl-name"],
                     inner["table"]["tbl-id"], op,
                     inner["commit-ts"], inner["start-ts"],
                     b[0], b[1], b[2], a[0], a[1], a[2],
                 ))
-            yield pd.DataFrame(out, columns=[
-                "schema_name", "table_name", "table_id", "op",
-                "commit_ts", "start_ts", "before_id", "before_val",
-                "before_k", "after_id", "after_val", "after_k"])
+            yield out
 
-    return cl.mapInPandas(run, schema)
+    return map_batches(cl.select(*_REDO_V2_COLS.split(", ")), run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2511,7 +2508,7 @@ def q_redo_v2_roundtrip(spark, sf_dir):
 # Connect view purely from the registered Avro schema's connect.*
 # metadata and the identity columns are extracted from it.  Identity
 # oracle (val rides rounded to 2dp — the envelope's pinned rendering).
-# Arrow-batched mapInPandas; per-partition in-memory registry (the
+# A mapInArrow row stage; per-partition in-memory registry (the
 # REST/Glue wire clients are socket-tested in codec/schema_registry.py).
 # ---------------------------------------------------------------------------
 _DBZ_AVRO_ORACLE = f"""
@@ -2528,14 +2525,13 @@ FROM changelog
 
 @register("debezium_avro_roundtrip", _DBZ_AVRO_ORACLE, bench="plan")
 def q_debezium_avro_roundtrip(spark, sf_dir):
-    import json as _json
-
-    import pandas as pd
-
-    from ticdc_spark.codec.debezium import encode_debezium_full
+    from ticdc_spark.codec.debezium import (
+        encode_debezium_full,
+        encode_debezium_key,
+    )
     from ticdc_spark.codec.debezium_avro import DebeziumAvroCodecCache
     from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
-    from ticdc_spark.codec.debezium import encode_debezium_key
+    from ticdc_spark.functions.arrow_rows import map_batches
 
     cl = scale_out(events_changelog(spark, sf_dir))
     msgs = encode_debezium_key(
@@ -2549,15 +2545,14 @@ def q_debezium_avro_roundtrip(spark, sf_dir):
 
     def run(batches):
         codec = DebeziumAvroCodecCache(ConfluentSchemaManager.in_memory())
-        cols = ["seq", "schema_name", "table_name", "commit_ts", "op",
-                "ts_ms", "key_id", "before_id", "before_val", "before_k",
-                "after_id", "after_val", "after_k"]
-        for pdf in batches:
+        for c in batches:
             out = []
-            for r in pdf.itertuples(index=False):
-                topic = f"{r.schema_name}.{r.table_name}"
-                kblob = codec.encode_wire_json(r.key, topic, "-key")
-                vblob = codec.encode_wire_json(r.value, topic, "-value")
+            for seq, sn, tn, key, value in zip(
+                    c["seq"], c["schema_name"], c["table_name"], c["key"],
+                    c["value"]):
+                topic = f"{sn}.{tn}"
+                kblob = codec.encode_wire_json(key, topic, "-key")
+                vblob = codec.encode_wire_json(value, topic, "-value")
                 kmsg = codec.decode(kblob, topic + "-key")
                 vmsg = codec.decode(vblob, topic + "-value")
                 p = vmsg["payload"]
@@ -2565,14 +2560,14 @@ def q_debezium_avro_roundtrip(spark, sf_dir):
                 b = p["before"] or {}
                 a = p["after"] or {}
                 out.append((
-                    r.seq, src["db"], src["table"], src["commit_ts"],
+                    seq, src["db"], src["table"], src["commit_ts"],
                     p["op"], p["ts_ms"], kmsg["payload"]["id"],
                     b.get("id"), b.get("val"), b.get("k"),
                     a.get("id"), a.get("val"), a.get("k"),
                 ))
-            yield pd.DataFrame(out, columns=cols)
+            yield out
 
-    return msgs.mapInPandas(run, schema)
+    return map_batches(msgs, run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2607,8 +2602,6 @@ FROM wm
 def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
     import json as _json
 
-    import pandas as pd
-
     from ticdc_spark.codec.debezium import debezium_watermark_messages
     from ticdc_spark.codec.debezium_avro import (
         KEY_SUFFIX,
@@ -2618,6 +2611,7 @@ def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
         subject_for,
     )
     from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
+    from ticdc_spark.functions.arrow_rows import map_batches
 
     cl = events_changelog(spark, sf_dir)
     boundary = ((F.col("commit_ts")
@@ -2634,10 +2628,11 @@ def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
     def run(batches):
         mgr = ConfluentSchemaManager.in_memory()
         codec = DebeziumAvroCodecCache(mgr)
-        for pdf in batches:
+        for c in batches:
             out = []
-            for r in pdf.itertuples(index=False):
-                kmsg, vmsg = _json.loads(r.key), _json.loads(r.value)
+            for resolved_ts, key, value in zip(c["resolved_ts"], c["key"],
+                                               c["value"]):
+                kmsg, vmsg = _json.loads(key), _json.loads(value)
                 kblob = encode_debezium_avro_payload(
                     kmsg, "", KEY_SUFFIX, mgr)
                 vblob = encode_debezium_avro_payload(
@@ -2648,15 +2643,13 @@ def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
                     "", VALUE_SUFFIX, vmsg["schema"]["name"]))
                 p = vdec["payload"]
                 src = p["source"]
-                out.append((r.resolved_ts, p["op"], p["ts_ms"],
+                out.append((resolved_ts, p["op"], p["ts_ms"],
                             src["commit_ts"], src["db"], src["table"],
                             src["cluster_id"],
                             len(kdec["payload"] or {})))
-            yield pd.DataFrame(out, columns=[
-                "resolved_ts", "op", "ts_ms", "commit_ts", "db", "tbl",
-                "cluster_id", "key_fields"])
+            yield out
 
-    return msgs.mapInPandas(run, schema)
+    return map_batches(msgs, run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2689,13 +2682,12 @@ FROM tabs
 
 @register("avro_checkpoint_ddl_events", _AVRO_CP_DDL_ORACLE, bench="plan")
 def q_avro_checkpoint_ddl_events(spark, sf_dir):
-    import pandas as pd
-
     from ticdc_spark.codec.avro_protocol import (
         decode_event,
         encode_checkpoint,
         encode_ddl,
     )
+    from ticdc_spark.functions.arrow_rows import map_batches
 
     cl = events_changelog(spark, sf_dir)
     boundary = ((F.col("commit_ts")
@@ -2710,31 +2702,23 @@ def q_avro_checkpoint_ddl_events(spark, sf_dir):
                   "action_type int")
 
     def run_cp(batches):
-        for pdf in batches:
-            out = []
-            for ts in pdf["resolved_ts"].tolist():
-                kind, dec = decode_event(encode_checkpoint(int(ts)))
-                out.append((kind, dec, None, None, None, None))
-            yield pd.DataFrame(out, columns=[
-                "kind", "ts", "query", "schema_name", "table_name",
-                "action_type"])
+        for c in batches:
+            yield [(*decode_event(encode_checkpoint(ts)), None, None, None,
+                    None) for ts in c["resolved_ts"]]
 
     def run_ddl(batches):
-        for pdf in batches:
+        for c in batches:
             out = []
-            for r in pdf.itertuples(index=False):
-                q = (f"CREATE TABLE {r.schema_name}.{r.table_name}"
-                     " (id BIGINT PRIMARY KEY)")
-                kind, doc = decode_event(encode_ddl(
-                    q, 3, r.schema_name, r.table_name, int(r.commit_ts)))
+            for sn, tn, cts in zip(c["schema_name"], c["table_name"],
+                                   c["commit_ts"]):
+                q = f"CREATE TABLE {sn}.{tn} (id BIGINT PRIMARY KEY)"
+                kind, doc = decode_event(encode_ddl(q, 3, sn, tn, cts))
                 out.append((kind, doc["commitTs"], doc["query"],
                             doc["schema"], doc["table"], doc["type"]))
-            yield pd.DataFrame(out, columns=[
-                "kind", "ts", "query", "schema_name", "table_name",
-                "action_type"])
+            yield out
 
-    return (wm.select("resolved_ts").mapInPandas(run_cp, out_schema)
-            .unionByName(tabs.mapInPandas(run_ddl, out_schema)))
+    return (map_batches(wm.select("resolved_ts"), run_cp, out_schema)
+            .unionByName(map_batches(tabs, run_ddl, out_schema)))
 
 
 # ---------------------------------------------------------------------------
@@ -2844,7 +2828,7 @@ def q_claim_check_raw_value_roundtrip(spark, sf_dir):
 # _tidb_commit_physical_time = ts>>18), key = handle columns, DELETE =
 # the 9-byte deleteByte|commitTs marker (avro-enable-watermark on so
 # deletes have positive support instead of tombstones).  Identity
-# oracle; Arrow-batched mapInPandas with a per-partition registry.
+# oracle; a mapInArrow row stage with a per-partition registry.
 # ---------------------------------------------------------------------------
 _AVRO_RT_ORACLE = f"""
 WITH {CHANGELOG_SQL}
@@ -2861,14 +2845,13 @@ FROM changelog
 
 @register("avro_confluent_roundtrip", _AVRO_RT_ORACLE, bench="plan")
 def q_avro_confluent_roundtrip(spark, sf_dir):
-    import pandas as pd
-
     from ticdc_spark.codec.avro_protocol import (
         decode_message,
         encode_row_key,
         encode_row_value,
     )
     from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
+    from ticdc_spark.functions.arrow_rows import map_batches
     from ticdc_spark.queries import _flatten
     from ticdc_spark.sources.changelog import events_changelog
 
@@ -2876,45 +2859,37 @@ def q_avro_confluent_roundtrip(spark, sf_dir):
     schema = ("seq long, schema_name string, table_name string, "
               "op string, commit_ts long, physical_time long, "
               "key_id long, id long, val double, k long, dec_op string")
-
-    def _n(v):
-        return None if pd.isna(v) else v
+    names = ("id", "val", "k")
 
     def run(batches):
         mgr = ConfluentSchemaManager.in_memory()
-        for pdf in batches:
+        for c in batches:
             out = []
-            for r in pdf.itertuples(index=False):
-                topic = f"{r.schema_name}.{r.table_name}"
-                img = "before" if r.op == "D" else "after"
-                row = {"id": _n(getattr(r, f"{img}_id")),
-                       "val": _n(getattr(r, f"{img}_val")),
-                       "k": _n(getattr(r, f"{img}_k"))}
-                row = {k2: (int(v) if v is not None and k2 != "val"
-                            else v) for k2, v in row.items()}
-                kblob = encode_row_key(mgr, topic, r.schema_name,
-                                       r.table_name, row)
-                vblob = encode_row_value(
-                    mgr, topic, r.schema_name, r.table_name, row, r.op,
-                    int(r.commit_ts), avro_enable_watermark=True)
+            for i, (seq, sn, tn, op, cts) in enumerate(zip(
+                    c["seq"], c["schema_name"], c["table_name"], c["op"],
+                    c["commit_ts"])):
+                topic = f"{sn}.{tn}"
+                img = "before" if op == "D" else "after"
+                row = {n: c[f"{img}_{n}"][i] for n in names}
+                kblob = encode_row_key(mgr, topic, sn, tn, row)
+                vblob = encode_row_value(mgr, topic, sn, tn, row, op, cts,
+                                         avro_enable_watermark=True)
                 kd = decode_message(mgr, topic + "-key", kblob)
                 vd = decode_message(mgr, topic + "-value", vblob)
-                if r.op == "D":
-                    out.append((r.seq, r.schema_name, r.table_name,
-                                r.op, vd["_delete_commit_ts"],
-                                int(r.commit_ts) >> 18, kd["id"],
-                                None, None, None, "d"))
+                if op == "D":
+                    out.append((seq, sn, tn, op, vd["_delete_commit_ts"],
+                                cts >> 18, kd["id"], None, None, None, "d"))
                 else:
-                    out.append((r.seq, r.schema_name, r.table_name,
-                                r.op, vd["_tidb_commit_ts"],
+                    out.append((seq, sn, tn, op, vd["_tidb_commit_ts"],
                                 vd["_tidb_commit_physical_time"],
                                 kd["id"], vd["id"], vd["val"], vd["k"],
                                 vd["_tidb_op"]))
-            yield pd.DataFrame(out, columns=[
-                "seq", "schema_name", "table_name", "op", "commit_ts",
-                "physical_time", "key_id", "id", "val", "k", "dec_op"])
+            yield out
 
-    return cl.mapInPandas(run, schema)
+    images = [f"{img}_{n}" for img in ("before", "after") for n in names]
+    return map_batches(
+        cl.select("seq", "schema_name", "table_name", "op", "commit_ts",
+                  *images), run, schema)
 
 
 # ---------------------------------------------------------------------------

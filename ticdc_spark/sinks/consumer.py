@@ -363,10 +363,11 @@ def explode_open_protocol_batch(batches: DataFrame) -> DataFrame:
     """Batched open-protocol consumer front half: split each batch
     payload's netstring framing (``len:key len:value`` repeated) back
     into (key, value) message rows — the inverse of
-    `codec/open_protocol.py::encode_open_protocol_batch`.  Arrow-batched
-    mapInPandas (byte-offset parsing isn't column algebra); feed the
-    output to :func:`decode_open_protocol`."""
-    import pandas as pd
+    `codec/open_protocol.py::encode_open_protocol_batch`.  A
+    ``mapInArrow`` row stage (``arrow_rows.map_batches``; byte-offset
+    parsing isn't column algebra); feed the output to
+    :func:`decode_open_protocol`."""
+    from ticdc_spark.functions.arrow_rows import map_batches
 
     def _parse(blob: str) -> list[tuple[str, str]]:
         out, pos, n = [], 0, len(blob)
@@ -382,13 +383,9 @@ def explode_open_protocol_batch(batches: DataFrame) -> DataFrame:
             out.append((key, value))
         return out
 
-    def _explode(pdfs):
-        for pdf in pdfs:
-            keys, vals = [], []
-            for blob in pdf["batch"]:
-                for k, v in _parse(blob):
-                    keys.append(k)
-                    vals.append(v)
-            yield pd.DataFrame({"key": keys, "value": vals})
+    def _explode(batches):
+        for c in batches:
+            yield [kv for blob in c["batch"] for kv in _parse(blob)]
 
-    return batches.mapInPandas(_explode, "key string, value string")
+    return map_batches(batches.select("batch"), _explode,
+                       "key string, value string")
