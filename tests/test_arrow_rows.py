@@ -5,10 +5,18 @@ conversion makes the column ``float64``, so ``2**60 + 1`` came back as
 ``2**60``. A NULL struct parent must null its fields. The golden frame
 puts ``k = 2**60 + 1`` next to a NULL ``k`` and an insert with a NULL
 ``before``, then runs it through every binary encoder that reads the
-boundary and decodes exactly.
+boundary and decodes exactly, and through a live Kafka produce, whose
+flush summary must carry the exact commit-ts range.  The live sinks
+run on the boundary alone: no sink module or preloaded worker module
+imports pandas.
 """
 
 from __future__ import annotations
+
+import os
+import pkgutil
+import subprocess
+import sys
 
 import pyarrow as pa
 
@@ -29,7 +37,8 @@ from ticdc_spark.codec.simple_avro import (
     encode_simple_avro_dml,
     encode_simple_avro_values,
 )
-from ticdc_spark.functions.arrow_rows import pylist
+from ticdc_spark.functions.arrow_rows import map_batches, pylist
+from ticdc_spark.sinks.writer import RetryPolicy, TaskWriter
 
 BIG = 2**60 + 1
 FIELDS = ["id", "val", "k"]
@@ -150,3 +159,90 @@ def test_avro_binary_roundtrip_exact(spark):
             assert (r["id"], r["val"], r["k"]) == (before[0], None, None)
         else:
             assert [r[f] for f in FIELDS] == list(after)
+
+
+def test_map_batches_builds_exact_columns(spark):
+    rows = [(BIG, 7, 0.25, True, "中", b"\x00\xff"),
+            (None, None, None, None, None, None),
+            (-BIG, -1, -2.5, False, "", b"")]
+
+    def run(batches):
+        for _ in batches:
+            yield rows
+
+    got = map_batches(
+        spark.range(0, 1, 1, 1), run,
+        "b long, i int, d double, f boolean, s string, y binary").collect()
+    assert [tuple(r) for r in got] == [
+        (b, i, d, f, s, None if y is None else bytearray(y))
+        for b, i, d, f, s, y in rows]
+
+
+# one (topic, partition) whose commit_ts holds 2**60 + 1 beside a NULL
+_PRODUCED = [("t", 0, "k0", "v0", BIG), ("t", 0, "k1", "v1", None),
+             ("t", 0, "k2", "v2", 5)]
+_PRODUCED_SCHEMA = ("topic string, partition int, key string, "
+                    "value string, commit_ts long")
+
+
+def test_task_writer_tally_exact():
+    batch = pa.RecordBatch.from_pylist(
+        [dict(zip(["topic", "partition", "key", "value", "commit_ts"], r))
+         for r in _PRODUCED])
+    w = TaskWriter(lambda: None, lambda conn, b: None, lambda exc: False,
+                   RetryPolicy())
+    w.tally({n: pylist(c) for n, c in zip(batch.schema.names,
+                                           batch.columns)})
+    w.tally({"topic": ["u"], "commit_ts": [None]})
+    assert list(w.summary()) == [("t", 3, 5, BIG), ("u", 1, None, None)]
+    # a frame without topic or commit_ts: one null-topic row per task
+    w = TaskWriter(lambda: None, lambda conn, b: None, lambda exc: False,
+                   RetryPolicy())
+    w.tally({"path": ["a", "b"]})
+    w.tally({"path": []})
+    assert list(w.summary()) == [(None, 2, None, None)]
+
+
+def test_produce_frame_summary_is_exact(spark):
+    from ticdc_spark.sinks.kafka_broker import KafkaBroker
+    from ticdc_spark.sinks.kafka_live import produce_frame
+
+    frame = spark.createDataFrame(_PRODUCED, _PRODUCED_SCHEMA).coalesce(1)
+    with KafkaBroker(default_partitions=1) as b:
+        got = produce_frame(frame, b.bootstrap)
+    assert [tuple(r) for r in got] == [("t", 3, 5, BIG)]
+
+
+def test_sinks_and_preload_import_no_pandas():
+    import ticdc_spark.sinks as sinks
+
+    root = os.path.dirname(sinks.__file__)
+    names = [f"ticdc_spark.sinks.{m.name}"
+             for m in pkgutil.iter_modules([root])]
+    # a fresh interpreter: this one has imported pandas long ago.  It
+    # also runs the boundary both ways and a tally, since pyarrow
+    # imports pandas on pa.array, pa.scalar and to_numpy
+    probe = f"""
+import importlib, sys
+import pyarrow as pa
+from ticdc_spark import worker_daemon
+for name in {names!r} + list(worker_daemon.PRELOAD):
+    importlib.import_module(name)
+from ticdc_spark.functions.arrow_rows import _array, pylist
+from ticdc_spark.sinks.writer import RetryPolicy, TaskWriter
+w = TaskWriter(None, None, None, RetryPolicy())
+w.tally({{"topic": pylist(_array(["t", None], pa.string())),
+         "commit_ts": pylist(_array([{BIG}, None], pa.int64()))}})
+assert list(w.summary()) == [("t", 1, {BIG}, {BIG}), (None, 1, None, None)]
+print(sorted(m for m in sys.modules if m.split(".")[0] == "pandas"))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(root)), check=True)
+    assert out.stdout.strip() == "[]", out.stdout
+    for name in os.listdir(root):
+        if name.endswith(".py"):
+            with open(os.path.join(root, name)) as f:
+                text = f.read()
+            assert "mapInPandas" not in text and "pandas_udf" not in text, \
+                name

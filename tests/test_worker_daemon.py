@@ -105,8 +105,8 @@ def test_spark_workers_fork_with_preload(spark):
 
 
 def test_live_produce_on_preloaded_workers(spark):
-    """The produce path (sockets, the ctypes crc32c kernel, Arrow and
-    pandas) works in workers forked after the daemon loaded it."""
+    """The produce path (sockets, the ctypes crc32c kernel, the Arrow
+    row boundary) works in workers forked after the daemon loaded it."""
     import pyspark.sql.functions as F
 
     from ticdc_spark.sinks.kafka_broker import KafkaBroker

@@ -1,10 +1,11 @@
 """The Arrow row boundary of the per-row Python stages.
 
 The binary wire codecs (avro, debezium-avro, simple with
-``encoding-format=avro``, value compression) and a few byte-level round
-trips cannot be written as column algebra, so they run a Python loop
-over rows. This module is the only code that turns an Arrow column into
-Python values for those loops, and the only code that runs them:
+``encoding-format=avro``, value compression), a few byte-level round
+trips and the live sinks' produce, apply and fetch tasks cannot be
+written as column algebra, so they run a Python loop over rows. This
+module is the only code that turns an Arrow column into Python values
+for those loops, and the only code that runs them:
 
 - :func:`pylist` extracts a column exactly. A nullable ``bigint`` stays
   ``int`` next to a NULL (a pandas conversion makes it ``float64``, so
@@ -15,16 +16,20 @@ Python values for those loops, and the only code that runs them:
 - :func:`binary_column` runs a stage as one ``arrow_udf("binary")``
   over one struct argument.
 
-Extraction stays columnar: fixed-width types go through numpy with the
-NULL positions patched in, strings and binary through
-``to_numpy(zero_copy_only=False)``. Both are several times cheaper than
-``to_pylist`` or a ``pd.isna`` loop; other types fall back to
-``to_pylist``, which is exact too.
+Both directions work on the Arrow buffers: extraction through numpy
+over the values, offsets and validity bitmap (several times cheaper than
+``to_pylist``), building through ``array`` and ``Array.from_buffers``.
+Neither calls ``pa.array``, ``pa.scalar`` or ``to_numpy``: with pandas
+installed, pyarrow imports it on those calls, and a worker that never
+runs a pandas UDF should not pay for it.  Other types fall back to
+``to_pylist``/``pa.array``, exact too.
 """
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+import array
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,6 +37,30 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 _T = pa.types
+_INT = {8: "b", 16: "h", 32: "i", 64: "q"}  # ``array`` codes by bit width
+_FLOAT = {32: "f", 64: "d"}
+
+
+def _code(t: pa.DataType) -> str | None:
+    """The ``array`` type code of a fixed-width number type, else None."""
+    if _T.is_signed_integer(t):
+        return _INT[t.bit_width]
+    if _T.is_unsigned_integer(t):
+        return _INT[t.bit_width].upper()
+    return _FLOAT.get(t.bit_width) if _T.is_floating(t) else None
+
+
+def _varwidth(t: pa.DataType) -> str | None:
+    """The offset code of a string or binary type, else None."""
+    if _T.is_large_string(t) or _T.is_large_binary(t):
+        return "q"
+    return "i" if _T.is_string(t) or _T.is_binary(t) else None
+
+
+def _bits(buf: pa.Buffer, offset: int, n: int) -> np.ndarray:
+    """Bits ``offset .. offset + n`` of an Arrow bitmap, as bools."""
+    return np.unpackbits(np.frombuffer(buf, np.uint8), count=offset + n,
+                         bitorder="little")[offset:].view(bool)
 
 
 def pylist(arr: pa.Array) -> list | dict:
@@ -43,16 +72,56 @@ def pylist(arr: pa.Array) -> list | dict:
     t = arr.type
     if _T.is_struct(t):
         return {f.name: pylist(child) for f, child in zip(t, arr.flatten())}
-    if (_T.is_string(t) or _T.is_large_string(t) or _T.is_binary(t)
-            or _T.is_large_binary(t)):
-        return arr.to_numpy(zero_copy_only=False).tolist()
-    if not (_T.is_integer(t) or _T.is_floating(t) or _T.is_boolean(t)):
+    n, at, bufs = len(arr), arr.offset, arr.buffers()
+    code, offs = _code(t), _varwidth(t)
+    if offs is not None:
+        o = np.frombuffer(bufs[1], offs, n + 1,
+                          at * np.dtype(offs).itemsize).tolist()
+        data = bufs[2].to_pybytes() if bufs[2] is not None else b""
+        out = [data[a:b] for a, b in zip(o, o[1:])]
+        if _T.is_string(t) or _T.is_large_string(t):
+            out = [v.decode() for v in out]
+    elif _T.is_boolean(t):
+        out = _bits(bufs[1], at, n).tolist()
+    elif code is not None:
+        out = np.frombuffer(bufs[1], code, n,
+                            at * np.dtype(code).itemsize).tolist()
+    else:
         return arr.to_pylist()
-    out = arr.fill_null(pa.scalar(0).cast(t)) \
-        .to_numpy(zero_copy_only=False).tolist()
-    for i in arr.is_null().to_numpy(zero_copy_only=False).nonzero()[0]:
-        out[i] = None
+    if arr.null_count:
+        for i in np.flatnonzero(~_bits(bufs[0], at, n)).tolist():
+            out[i] = None
     return out
+
+
+def _array(values: Sequence, t: pa.DataType) -> pa.Array:
+    """The Arrow column of ``values`` (``None`` as NULL): the inverse of
+    :func:`pylist`.  A value of the wrong type raises, as in ``pa.array``."""
+    n = len(values)
+    valid = np.fromiter((v is not None for v in values), bool, n)
+    nulls = n - int(np.count_nonzero(valid))
+    vbuf = (pa.py_buffer(np.packbits(valid, bitorder="little"))
+            if nulls else None)
+    code, offs = _code(t), _varwidth(t)
+    if offs is not None:
+        cells = [b"" if v is None else v.encode() if isinstance(v, str)
+                 else v for v in values]
+        ends = np.zeros(n + 1, np.int64)
+        np.cumsum(np.fromiter(map(len, cells), np.int64, n), out=ends[1:])
+        if ends[-1] >= 2**31 and offs == "i":  # past 32-bit offsets
+            return pa.array(values, t)
+        data = [pa.py_buffer(ends.astype(offs)),
+                pa.py_buffer(b"".join(cells))]
+    elif _T.is_boolean(t):
+        data = [pa.py_buffer(np.packbits(
+            np.fromiter((bool(v) for v in values), bool, n),
+            bitorder="little"))]
+    elif code is not None:
+        data = [pa.py_buffer(array.array(
+            code, [0 if v is None else v for v in values]))]
+    else:
+        return pa.array(values, t)
+    return pa.Array.from_buffers(t, n, [vbuf, *data], nulls)
 
 
 def map_batches(df: DataFrame,
@@ -74,7 +143,7 @@ def map_batches(df: DataFrame,
         for rows in fn(cols):
             by_col = list(zip(*rows)) if rows else [()] * len(arrow)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(v, f.type) for v, f in zip(by_col, arrow)],
+                [_array(v, f.type) for v, f in zip(by_col, arrow)],
                 schema=arrow)
 
     return df.mapInArrow(run, struct)
@@ -85,6 +154,6 @@ def binary_column(fn: Callable[[dict], list], *cols) -> Column:
     ``{field: values}`` over ``F.struct(*cols)`` (so each column needs
     a name) and returns one ``bytes`` or ``None`` per row."""
     def run(arr):  # unhinted: arrow_udf defaults to the scalar form
-        return pa.array(fn(pylist(arr)), pa.binary())
+        return _array(fn(pylist(arr)), pa.binary())
 
     return F.arrow_udf(run, "binary")(F.struct(*cols))

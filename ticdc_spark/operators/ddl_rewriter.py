@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 # previous significant token after which a bare identifier is a TABLE name
@@ -156,7 +155,7 @@ def apply_ddl_rewrite(
     """Add ``routed_query`` to a DDL event frame."""
     items = sorted(bindings.items())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):  # pandas batches; pandas loads in the worker
         b = dict(items)
         for pdf in batches:
             pdf = pdf.copy()

@@ -11,13 +11,13 @@ Python task (each ``mapInPandas``/``mapInArrow``/RDD stage, including
 a live epoch's Kafka produce) re-reads the whole directory of
 ``pyspark.zip``, the py4j zip and the spark-core jar before touching a
 row: ~180 ms of fixed cost per task on CPython < 3.13.  The daemon also
-imports the engine's task modules (``worker_daemon.PRELOAD``: pyarrow,
-pandas, the live Kafka produce path) before its first fork, so a worker
-starts warm.  That matters whenever a worker is new: a stage that runs
+imports the engine's task modules (``worker_daemon.PRELOAD``: pyarrow
+and the live Kafka produce path; no pandas) before its first fork, so a
+worker starts warm.  That matters whenever a worker is new: a stage that runs
 more Python tasks than there are idle workers forks one mid-stage (a
 backlog epoch's produce split in two), and Spark stops workers left idle
 for a minute, so the epoch after a quiet minute forks again.  A cold
-fork would import ~380 modules in its first task.
+fork would import ~70 modules in its first produce task.
 """
 
 from __future__ import annotations

@@ -3252,12 +3252,11 @@ _LIVE_REGISTRIES: list = []
 
 @register("avro_live_registry_roundtrip", _AVRO_RT_ORACLE, bench="endpoint")
 def q_avro_live_registry_roundtrip(spark, sf_dir):
-    import pandas as pd
-
     from ticdc_spark.codec.schema_registry import (
         InMemoryConfluentRegistry,
         registry_http_server,
     )
+    from ticdc_spark.functions.arrow_rows import map_batches
     from ticdc_spark.queries import _flatten
     from ticdc_spark.sinks.kafka_live import producer, start_broker
     from ticdc_spark.sinks.writer import SUMMARY_SCHEMA
@@ -3270,9 +3269,7 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
     bootstrap = broker.bootstrap
 
     cl = _flatten(scale_out(events_changelog(spark, sf_dir)))
-
-    def _n(v):
-        return None if pd.isna(v) else v
+    names = ("id", "val", "k")
 
     def _produce(batches):
         from ticdc_spark.codec.avro_protocol import encode_row_key, encode_row_value
@@ -3282,32 +3279,28 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
         mgr = ConfluentSchemaManager(registry_url)  # real HTTP registration
         pending: dict[tuple[str, int], list] = {}
         with producer(bootstrap) as w:
-            for pdf in batches:
-                w.tally(pdf)
-                for r in pdf.itertuples(index=False):
-                    topic = f"{r.schema_name}.{r.table_name}"
-                    img = "before" if r.op == "D" else "after"
-                    row = {"id": _n(getattr(r, f"{img}_id")),
-                           "val": _n(getattr(r, f"{img}_val")),
-                           "k": _n(getattr(r, f"{img}_k"))}
-                    row = {k2: (int(v) if v is not None and k2 != "val" else v)
-                           for k2, v in row.items()}
-                    kblob = encode_row_key(mgr, topic, r.schema_name,
-                                           r.table_name, row)
-                    vblob = encode_row_value(
-                        mgr, topic, r.schema_name, r.table_name, row,
-                        r.op, int(r.commit_ts), avro_enable_watermark=True)
-                    part = int(row["id"] or 0) % 4
+            for c in batches:
+                w.tally(c)
+                for i, (seq, sn, tn, op, cts) in enumerate(zip(
+                        c["seq"], c["schema_name"], c["table_name"], c["op"],
+                        c["commit_ts"])):
+                    topic = f"{sn}.{tn}"
+                    img = "before" if op == "D" else "after"
+                    row = {n: c[f"{img}_{n}"][i] for n in names}
+                    kblob = encode_row_key(mgr, topic, sn, tn, row)
+                    vblob = encode_row_value(mgr, topic, sn, tn, row, op, cts,
+                                             avro_enable_watermark=True)
+                    part = (row["id"] or 0) % 4
                     batch = pending.setdefault((topic, part), [])
                     batch.append(Record(kblob, vblob,
-                                        [("seq", str(r.seq).encode())]))
+                                        [("seq", str(seq).encode())]))
                     if len(batch) >= 256:
                         w.send(((topic, part), batch))
                         pending[(topic, part)] = []
             for tp, batch in pending.items():
                 if batch:
                     w.send((tp, batch))
-        yield from w.summary()
+        yield list(w.summary())
 
     # round-robin over every core, not repartition("table_name"): five
     # tables hash to five tasks and the per-row avro encode runs at
@@ -3318,7 +3311,10 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
     # compares the decoded row SET (seq rides a header; offsets are
     # never emitted), so the split is free to follow the cluster size.
     par = cl.sparkSession.sparkContext.defaultParallelism
-    cl.repartition(par).mapInPandas(_produce, SUMMARY_SCHEMA).collect()
+    images = [f"{img}_{n}" for img in ("before", "after") for n in names]
+    map_batches(cl.select("seq", "schema_name", "table_name", "op",
+                          "commit_ts", *images).repartition(par),
+                _produce, SUMMARY_SCHEMA).collect()
 
     pairs = [(t, p) for t, parts in broker.topics.items() for p in parts]
     seats = spark.createDataFrame(pairs, "topic string, partition int").repartition(
@@ -3337,13 +3333,13 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
         conn = None
         op_of = {"c": "I", "u": "U", "d": "D"}
         try:
-            for pdf in batches:
-                for topic, part in zip(pdf["topic"], pdf["partition"]):
+            for c in batches:
+                for topic, part in zip(c["topic"], c["partition"]):
                     if conn is None:
                         conn = KafkaConn.from_bootstrap(bootstrap)
                     schema_name, table_name = topic.split(".", 1)
                     out = []
-                    for _, rec in conn.fetch_all(topic, int(part)):
+                    for _, rec in conn.fetch_all(topic, part):
                         seq = int(dict(rec.headers)["seq"])
                         kd = decode_message(mgr, topic + "-key", rec.key)
                         vd = decode_message(mgr, topic + "-value", rec.value)
@@ -3360,15 +3356,12 @@ def q_avro_live_registry_roundtrip(spark, sf_dir):
                                         kd["id"], vd["id"], vd["val"],
                                         vd["k"], vd["_tidb_op"]))
                     if out:
-                        yield pd.DataFrame(out, columns=[
-                            "seq", "schema_name", "table_name", "op",
-                            "commit_ts", "physical_time", "key_id", "id",
-                            "val", "k", "dec_op"])
+                        yield out
         finally:
             if conn is not None:
                 conn.close()
 
-    return seats.mapInPandas(_consume, out_schema)
+    return map_batches(seats, _consume, out_schema)
 
 
 # ---------------------------------------------------------------------------

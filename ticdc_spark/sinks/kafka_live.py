@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ticdc_spark.functions.arrow_rows import map_batches
 from ticdc_spark.sinks.writer import (SUMMARY_SCHEMA, RetryPolicy, TaskWriter,
                                       transient)
 
@@ -128,20 +129,15 @@ def produce_frame(
 
         pending: dict[tuple[str, int], list] = {}
         with producer(bootstrap, compression, acks, **conn_kw) as w:
-            # rows arrive as Arrow/pandas batches (guide §4.1: batch the
-            # boundary, not the rows); binary cells come through as
-            # bytes already — same Record payloads as the pickled path
-            for pdf in batches:
-                w.tally(pdf)
-                for t, p, k, v in zip(pdf["topic"].tolist(),
-                                      pdf["partition"].tolist(),
-                                      pdf["key"].tolist(),
-                                      pdf["value"].tolist()):
-                    tp = (t, int(p))
+            # rows arrive as Arrow batches of exact Python values
+            # (``arrow_rows.pylist``): binary cells are ``bytes`` already
+            for c in batches:
+                w.tally(c)
+                for t, p, k, v in zip(c["topic"], c["partition"],
+                                      c["key"], c["value"]):
+                    tp = (t, p)
                     batch = pending.setdefault(tp, [])
-                    batch.append(Record(
-                        bytes(k) if k is not None else None,
-                        bytes(v) if v is not None else None))
+                    batch.append(Record(k, v))
                     if len(batch) >= _BATCH_RECORDS:
                         w.send((tp, batch))
                         pending[tp] = []
@@ -158,9 +154,9 @@ def produce_frame(
                 # was appended.
                 w.conn.metadata([])
         # reported only once every batch is acknowledged
-        yield from w.summary()
+        yield list(w.summary())
 
-    return shaped.mapInPandas(_send, SUMMARY_SCHEMA).collect()
+    return map_batches(shaped, _send, SUMMARY_SCHEMA).collect()
 
 
 def fetch_df(spark: SparkSession, bootstrap: str,
@@ -174,18 +170,16 @@ def fetch_df(spark: SparkSession, bootstrap: str,
     )
 
     def _fetch(batches):
-        import pandas as pd
-
         from ticdc_spark.sinks.kafka_client import KafkaConn
 
         conn = None
         try:
-            for pdf in batches:
-                for topic, partition in zip(pdf["topic"], pdf["partition"]):
+            for c in batches:
+                for topic, partition in zip(c["topic"], c["partition"]):
                     if conn is None:
                         conn = KafkaConn.from_bootstrap(bootstrap,
                                                         **conn_kw)
-                    got = conn.fetch_all(topic, int(partition))
+                    got = conn.fetch_all(topic, partition)
                     offsets = [o for o, _ in got]
                     if offsets != list(range(len(offsets))):
                         raise ValueError(
@@ -193,17 +187,16 @@ def fetch_df(spark: SparkSession, bootstrap: str,
                             f"{offsets[:5]}..{offsets[-5:]} (n={len(offsets)})")
                     if not got:
                         continue
-                    yield pd.DataFrame({
-                        "topic": topic,
-                        "partition": int(partition),
-                        "key": [r.key.decode("utf-8") if r.key is not None else None for _, r in got],
-                        "value": [r.value.decode("utf-8") if r.value is not None else None for _, r in got],
-                    })
+                    yield [(topic, partition,
+                            r.key.decode("utf-8") if r.key is not None else None,
+                            r.value.decode("utf-8") if r.value is not None else None)
+                           for _, r in got]
         finally:
             if conn is not None:
                 conn.close()
 
-    return pairs.mapInPandas(_fetch, "topic string, partition int, key string, value string")
+    return map_batches(pairs, _fetch,
+                       "topic string, partition int, key string, value string")
 
 
 def consumer_group_fetch_df(
@@ -225,12 +218,10 @@ def consumer_group_fetch_df(
     def _consume(batches):
         import time as _time
 
-        import pandas as pd
-
         from ticdc_spark.sinks.kafka_client import ConsumerGroupMember
 
-        for pdf in batches:
-            for _ in pdf["seat"]:
+        for c in batches:
+            for _ in c["seat"]:
                 with ConsumerGroupMember(bootstrap, group_id, topics) as m:
                     m.join_and_sync()
                     # brief stabilization so concurrently-scheduled seats
@@ -253,24 +244,19 @@ def consumer_group_fetch_df(
                             settle_until = _time.monotonic() + 0.5
                         else:
                             _time.sleep(0.02)
-                    rows = {"topic": [], "partition": [], "offset": [],
-                            "key": [], "value": []}
-                    for topic, parts in m.assignment.items():
-                        for p in parts:
-                            for off, rec in m.conn.fetch_all(topic, p):
-                                rows["topic"].append(topic)
-                                rows["partition"].append(p)
-                                rows["offset"].append(off)
-                                rows["key"].append(
-                                    rec.key.decode() if rec.key is not None else None)
-                                rows["value"].append(
-                                    rec.value.decode() if rec.value is not None else None)
+                    rows = [
+                        (topic, p, off,
+                         rec.key.decode() if rec.key is not None else None,
+                         rec.value.decode() if rec.value is not None else None)
+                        for topic, parts in m.assignment.items()
+                        for p in parts
+                        for off, rec in m.conn.fetch_all(topic, p)]
                     m.leave()
-                    if rows["topic"]:
-                        yield pd.DataFrame(rows)
+                    if rows:
+                        yield rows
 
-    fetched = seats.mapInPandas(
-        _consume,
+    fetched = map_batches(
+        seats, _consume,
         "topic string, partition int, offset long, key string, value string")
     return fetched.dropDuplicates(["topic", "partition", "offset"])
 
@@ -313,15 +299,12 @@ def kafka_list_offsets_by_ts(cl: DataFrame, n_probes: int = 8) -> DataFrame:
     )
 
     def _produce(batches):
-        import pandas as _pd
-
         from ticdc_spark.codec.kafka_wire import Record
         from ticdc_spark.sinks.kafka_client import KafkaConn
 
         batch: list = []
         n = 0
-        conn = KafkaConn.from_bootstrap(bootstrap)
-        try:
+        with KafkaConn.from_bootstrap(bootstrap) as conn:
             def flush():
                 if not batch:
                     return
@@ -331,19 +314,16 @@ def kafka_list_offsets_by_ts(cl: DataFrame, n_probes: int = 8) -> DataFrame:
                     for ts in batch], base_timestamp=base)
                 batch.clear()
 
-            for pdf in batches:
-                n += len(pdf)
-                for ts in pdf["ts"].tolist():
+            for c in batches:
+                n += len(c["ts"])
+                for ts in c["ts"]:
                     batch.append(ts)
                     if len(batch) >= _BATCH_RECORDS:
                         flush()
             flush()
-        finally:
-            conn.close()
-        yield _pd.DataFrame({"n": [n]})
+        yield [(n,)]
 
-    rows.mapInPandas(_produce, "n long").write.format("noop").mode(
-        "overwrite").save()
+    map_batches(rows, _produce, "n long").collect()
 
     # probe bounds: a 1-row aggregate (metadata, not a data collect)
     mn, mx = cl.agg(F.min("commit_ts"), F.max("commit_ts")).first()
@@ -353,25 +333,16 @@ def kafka_list_offsets_by_ts(cl: DataFrame, n_probes: int = 8) -> DataFrame:
         [(p,) for p in probes], "probe_ts long").repartition(1)
 
     def _lookup(batches):
-        import pandas as pd
-
         from ticdc_spark.sinks.kafka_client import (KafkaConn,
                                                     offset_for_timestamp)
 
         with KafkaConn.from_bootstrap(bootstrap) as conn:
-            for pdf in batches:
-                found, offs = [], []
-                for p in pdf["probe_ts"]:
-                    ts, off = offset_for_timestamp(conn, topic, 0, int(p))
-                    found.append(ts)
-                    offs.append(off)
-                pdf = pdf.copy()
-                pdf["found_ts"] = pd.Series(found, dtype="int64")
-                pdf["log_offset"] = pd.Series(offs, dtype="int64")
-                yield pdf
+            for c in batches:
+                yield [(p, *offset_for_timestamp(conn, topic, 0, p))
+                       for p in c["probe_ts"]]
 
-    return probe_df.mapInPandas(
-        _lookup, "probe_ts long, found_ts long, log_offset long")
+    return map_batches(
+        probe_df, _lookup, "probe_ts long, found_ts long, log_offset long")
 
 
 def kafka_live_gssapi_roundtrip(frame: DataFrame,

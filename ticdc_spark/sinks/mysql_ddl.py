@@ -24,18 +24,20 @@ tokenizer in ``operators/ddl_rewriter.py`` keeps strings/comments
 opaque, so names inside literals never rewrite.
 
 Scale shape: DDL is control-plane traffic (a handful of rows per
-schema change), so the per-row Python tokenizer runs Arrow-batched in
-``mapInPandas`` — the sanctioned slow path, never on DML rows.
+schema change), so the per-row Python tokenizer runs Arrow-batched as
+an ``arrow_rows.map_batches`` stage — the sanctioned slow path, never
+on DML rows.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType, StructField, StructType
 
+from ticdc_spark.functions.arrow_rows import map_batches
 from ticdc_spark.operators.ddl_rewriter import _tokens
 
 _SIG = ("ident", "qident", "string", "op")  # significant token kinds
@@ -204,19 +206,27 @@ def restore_anonymous_index_names(
     return "".join(out) if changed else sql
 
 
+def _with_column(ddl: DataFrame, name: str, fn: Callable[..., str],
+                 *args: str) -> DataFrame:
+    """``ddl`` plus a string column ``name``, ``fn`` of the row's
+    ``args`` columns.  The DDL frames are flat: a struct column would
+    reach the stage as ``{field: values}``, not one value per row."""
+    names = ddl.columns
+    at = [names.index(a) for a in args]
+
+    def run(batches):
+        for c in batches:
+            yield [(*row, fn(*(row[i] for i in at)))
+                   for row in zip(*(c[n] for n in names))]
+
+    return map_batches(ddl, run, StructType(
+        [*ddl.schema.fields, StructField(name, StringType())]))
+
+
 def apply_mysql_ddl_format(ddl: DataFrame,
                            query_col: str = "query") -> DataFrame:
     """Add ``formatted_query`` (vector-type rewrite) to a DDL frame."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["formatted_query"] = [
-                format_ddl_query(q) for q in pdf[query_col]]
-            yield pdf
-
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ddl.schema.fields)
-    return ddl.mapInPandas(run, f"{fields}, formatted_query string")
+    return _with_column(ddl, "formatted_query", format_ddl_query, query_col)
 
 
 def apply_index_name_restore(
@@ -225,20 +235,10 @@ def apply_index_name_restore(
 ) -> DataFrame:
     """Add ``restored_query``; per-row table-info index map arrives as
     a JSON object column {index_id: name} plus an id-list column."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["restored_query"] = [
-                restore_anonymous_index_names(
-                    q,
-                    {int(k): v for k, v in json.loads(nm or "{}").items()},
-                    [int(x) for x in (ids if ids is not None else [])],
-                )
-                for q, nm, ids in zip(
-                    pdf[query_col], pdf[names_col], pdf[ids_col])
-            ]
-            yield pdf
+    def restore(q, nm, ids):
+        return restore_anonymous_index_names(
+            q, {int(k): v for k, v in json.loads(nm or "{}").items()},
+            ids or [])
 
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ddl.schema.fields)
-    return ddl.mapInPandas(run, f"{fields}, restored_query string")
+    return _with_column(ddl, "restored_query", restore,
+                        query_col, names_col, ids_col)

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ticdc_spark.functions.arrow_rows import map_batches
 from ticdc_spark.sinks.writer import (SUMMARY_SCHEMA, RetryPolicy, TaskWriter,
                                       transient)
 
@@ -103,19 +104,19 @@ def _apply_stmts(shaped: DataFrame, host: str, port: int, user: str,
         buf: list[str] = []
         with applier(host, port, user, password, multi_stmt) as w:
             # statement strings cross as Arrow batches (guide §4.1),
-            # not pickled Rows
-            for pdf in batches:
-                w.tally(pdf)
-                for s in pdf["stmt"].tolist():
+            # not pickled Rows, and arrive as Python lists
+            for c in batches:
+                w.tally(c)
+                for s in c["stmt"]:
                     buf.append(s)
                     if len(buf) >= batch_stmts:
                         w.send(buf)
                         buf = []
             if buf:
                 w.send(buf)
-        yield from w.summary()
+        yield list(w.summary())
 
-    return shaped.mapInPandas(_apply, SUMMARY_SCHEMA).collect()
+    return map_batches(shaped, _apply, SUMMARY_SCHEMA).collect()
 
 
 def apply_over_wire(
@@ -324,22 +325,19 @@ def apply_over_wire_prepared(
 
         n_rows = 0
         try:
-            # pyarrow batches across the boundary (guide §4.1) instead
-            # of pickled Rows; .to_pylist() hands back EXACT Python
-            # ints/floats/None for the nullable long/double columns —
-            # the pandas route would NaN-promote int64 to float64 and
-            # flip the binary-protocol arg tags (_param_type), which is
-            # why this path stayed pickled until now.
-            for b in batches:
-                if b.num_rows == 0:
+            # Arrow batches across the boundary (guide §4.1) instead of
+            # pickled Rows; ``arrow_rows.pylist`` hands back EXACT Python
+            # ints/floats/None for the nullable long/double columns, so
+            # the binary-protocol arg tags (_param_type) follow the
+            # column types
+            for c in batches:
+                if not c["op"]:
                     continue
                 if conn is None:
                     conn = MySQLConn(host, port, user, password)
-                cols = [b.column(name).to_pylist()
-                        for name in ("table_name", "op", "b_id", "a_id",
-                                     "a_val", "a_k")]
-                n_rows += b.num_rows
-                for row in zip(*cols):
+                n_rows += len(c["op"])
+                for row in zip(c["table_name"], c["op"], c["b_id"],
+                               c["a_id"], c["a_val"], c["a_k"]):
                     window.append(row)
                     if len(window) >= 4 * batch_rows:
                         flush()
@@ -349,12 +347,9 @@ def apply_over_wire_prepared(
                 for sid in stmt_cache.values():
                     close_prepared(conn, sid)
                 conn.close()
-        import pyarrow as pa
+        yield [(n_rows,)]
 
-        yield pa.RecordBatch.from_pydict({"n_rows": [n_rows]})
-
-    shaped.mapInArrow(_apply, "n_rows long").write.format("noop").mode(
-        "overwrite").save()
+    map_batches(shaped, _apply, "n_rows long").collect()
 
 
 def mysql_live_apply_prepared(

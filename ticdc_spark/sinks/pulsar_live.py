@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ticdc_spark.functions.arrow_rows import map_batches
 from ticdc_spark.sinks.writer import (SUMMARY_SCHEMA, RetryPolicy, TaskWriter,
                                       transient)
 
@@ -93,24 +94,22 @@ def produce_frame(frame: DataFrame, service_url: str,
         flush_at = 2000
         with producer(service_url, oauth2, batching_max_messages,
                       **conn_kw) as w:
-            # Arrow/pandas batches across the boundary (guide §4.1),
-            # not pickled Rows; payload tuples identical
-            for pdf in batches:
-                w.tally(pdf)
-                for t, k, v in zip(pdf["topic"].tolist(),
-                                   pdf["key"].tolist(),
-                                   pdf["value"].tolist()):
+            # Arrow batches across the boundary (guide §4.1), not
+            # pickled Rows; binary cells arrive as ``bytes``
+            for c in batches:
+                w.tally(c)
+                for t, k, v in zip(c["topic"], c["key"], c["value"]):
                     buf = buffers.setdefault(t, [])
-                    buf.append((bytes(v) if v is not None else b"", k))
+                    buf.append((b"" if v is None else v, k))
                     if len(buf) >= flush_at:
                         w.send((t, buf))
                         buffers[t] = []
             for topic, buf in buffers.items():
                 if buf:
                     w.send((topic, buf))
-        yield from w.summary()
+        yield list(w.summary())
 
-    return shaped.mapInPandas(_send, SUMMARY_SCHEMA).collect()
+    return map_batches(shaped, _send, SUMMARY_SCHEMA).collect()
 
 
 def read_df(spark: SparkSession, service_url: str, topics: list[str],
@@ -121,14 +120,12 @@ def read_df(spark: SparkSession, service_url: str, topics: list[str],
     )
 
     def _read(batches):
-        import pandas as pd
-
         from ticdc_spark.sinks.pulsar_client import PulsarConn
 
         conn = None
         try:
-            for pdf in batches:
-                for topic in pdf["topic"]:
+            for c in batches:
+                for topic in c["topic"]:
                     if conn is None:
                         conn = PulsarConn.from_service_url(
                             service_url, oauth2=oauth2, **conn_kw)
@@ -143,16 +140,13 @@ def read_df(spark: SparkSession, service_url: str, topics: list[str],
                         raise ValueError(f"non-contiguous entries on {topic}")
                     if not msgs:
                         continue
-                    yield pd.DataFrame({
-                        "topic": topic,
-                        "key": [m["partition_key"] for m in msgs],
-                        "value": [m["payload"].decode("utf-8") for m in msgs],
-                    })
+                    yield [(topic, m["partition_key"],
+                            m["payload"].decode("utf-8")) for m in msgs]
         finally:
             if conn is not None:
                 conn.close()
 
-    return tdf.mapInPandas(_read, "topic string, key string, value string")
+    return map_batches(tdf, _read, "topic string, key string, value string")
 
 
 def pulsar_live_roundtrip(frame: DataFrame) -> DataFrame:

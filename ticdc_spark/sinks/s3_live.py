@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ticdc_spark.functions.arrow_rows import map_batches
 from ticdc_spark.sinks.writer import (SUMMARY_SCHEMA, RetryPolicy, TaskWriter,
                                       transient)
 
@@ -278,16 +279,13 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
                 pass
 
         try:
-            # rows arrive as Arrow/pandas batches (not pickled Row
-            # objects — guide §4.1: the boundary crossing scales with
-            # row count, Arrow is the cheap way across); group
+            # rows arrive as Arrow batches of Python lists (not pickled
+            # Row objects — guide §4.1: the boundary crossing scales
+            # with row count, Arrow is the cheap way across); group
             # boundaries carry over between batches via cur/buf
-            for pdf in batches:
-                w.tally(pdf)
-                vals = pdf["value"].tolist()
-                paths = pdf["path"].tolist()
-                fnames = pdf["file_name"].tolist()
-                for p, fn, v in zip(paths, fnames, vals):
+            for c in batches:
+                w.tally(c)
+                for p, fn, v in zip(c["path"], c["file_name"], c["value"]):
                     key = (p, fn)
                     if key != cur:
                         flush()
@@ -301,12 +299,12 @@ def put_files(files: DataFrame, endpoint: str, access_key: str,
         finally:
             if sp is not None:
                 sp.close()
-        yield from w.summary()
+        yield list(w.summary())
 
     # the summary materializes every partition (the upload is the side
     # effect, exactly as foreachPartition ran it — but rows cross the
     # JVM→Python boundary as Arrow batches instead of pickled Rows)
-    return shaped.mapInPandas(_put, SUMMARY_SCHEMA).collect()
+    return map_batches(shaped, _put, SUMMARY_SCHEMA).collect()
 
 
 def get_files_df(
@@ -328,28 +326,22 @@ def get_files_df(
     kdf = spark.createDataFrame([(k,) for k in keys], "key string")
 
     def _get(batches):
-        import pandas as pd
-
         reader = _store_writer(
             endpoint, access_key, secret_key, scheme,
             lambda client, keys: client.get_objects(BUCKET, keys))
-        for pdf in batches:
-            batch_keys = list(pdf["key"])
+        for c in batches:
+            batch_keys = c["key"]
             if not batch_keys:
                 continue
             # a stale pooled socket reconnects once
             bodies = reader.send(batch_keys, tries=2)
-            paths, values = [], []
-            for key, body in zip(batch_keys, bodies):
-                path = key.rsplit("/", 1)[0]
-                for ln in body.decode("utf-8").split("\n"):
-                    if ln:
-                        paths.append(path)
-                        values.append(ln)
-            if values:
-                yield pd.DataFrame({"path": paths, "value": values})
+            rows = [(key.rsplit("/", 1)[0], ln)
+                    for key, body in zip(batch_keys, bodies)
+                    for ln in body.decode("utf-8").split("\n") if ln]
+            if rows:
+                yield rows
 
-    return kdf.mapInPandas(_get, "path string, value string")
+    return map_batches(kdf, _get, "path string, value string")
 
 
 def storage_live_roundtrip(cl_split: DataFrame,

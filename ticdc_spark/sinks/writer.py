@@ -14,6 +14,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
+from itertools import repeat
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -23,37 +24,20 @@ from pyspark.sql import functions as F
 #: does not carry commit_ts) — a changefeed's checkpoint is built from these
 SUMMARY_SCHEMA = "topic string, rows long, min_ts long, max_ts long"
 _SUMMARY_FIELDS = [f.split() for f in SUMMARY_SCHEMA.split(", ")]
-_SUMMARY_COLS = [name for name, _ in _SUMMARY_FIELDS]
-_SUMMARY_KEYS = ("topic",)
-#: summary column -> (frame column, aggregate), besides the row count
-_SUMMARY_AGGS = {"min_ts": ("commit_ts", "min"),
-                 "max_ts": ("commit_ts", "max")}
-
-
-def _summarize(pdf):
-    """One pandas batch's SUMMARY_SCHEMA rows."""
-    import numpy as np
-
-    aggs = {"rows": (pdf.columns[0], "size")}
-    aggs.update({out: agg for out, agg in _SUMMARY_AGGS.items()
-                 if agg[0] in pdf})
-    # no topic column: the whole batch is one group
-    keys = [c for c in _SUMMARY_KEYS if c in pdf] or np.zeros(len(pdf), "i1")
-    out = pdf.groupby(keys, sort=False, dropna=False).agg(**aggs).reset_index()
-    for c in _SUMMARY_COLS:
-        if c not in out:
-            out[c] = None
-    return out[_SUMMARY_COLS]
+#: the frame columns a summary reads, each only where the frame has it:
+#: rows group by topic, and the ts range is taken over commit_ts
+_TOPIC, _TS = "topic", "commit_ts"
 
 
 def summarize(frame: DataFrame) -> list:
     """SUMMARY_SCHEMA rows of a frame that is not written here (the file
     and DB sinks' epoch), from one aggregate grouped like a task's."""
     cols = set(frame.columns)
-    out = frame.groupBy(*[c for c in _SUMMARY_KEYS if c in cols]).agg(
+    keys = [_TOPIC] if _TOPIC in cols else []
+    out = frame.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("rows"),
-        *[getattr(F, fn)(c).alias(name)
-          for name, (c, fn) in _SUMMARY_AGGS.items() if c in cols])
+        *([F.min(_TS).alias("min_ts"), F.max(_TS).alias("max_ts")]
+          if _TS in cols else []))
     return out.select(*[
         F.col(name) if name in out.columns
         else F.lit(None).cast(typ).alias(name)
@@ -125,22 +109,20 @@ class TaskWriter:
     def __exit__(self, *exc):
         self.drop()
 
-    def tally(self, pdf) -> None:
-        """Count one pandas batch of the task's frame into the summary."""
-        import pandas as pd
-
-        for topic, rows, lo, hi in _summarize(pdf).itertuples(
-                index=False, name=None):
+    def tally(self, batch: dict) -> None:
+        """Count one ``arrow_rows.map_batches`` batch of the task's frame
+        (``{column: values}``) into the summary."""
+        n = len(next(iter(batch.values()), ()))
+        topics = batch.get(_TOPIC) or repeat(None, n)
+        for topic, ts in zip(topics, batch.get(_TS) or repeat(None, n)):
             acc = self._summary.setdefault(topic, [0, None, None])
-            acc[0] += int(rows)
-            if not pd.isna(lo):
-                acc[1] = lo if acc[1] is None else min(acc[1], lo)
-                acc[2] = hi if acc[2] is None else max(acc[2], hi)
+            acc[0] += 1
+            if ts is not None:
+                acc[1] = ts if acc[1] is None else min(acc[1], ts)
+                acc[2] = ts if acc[2] is None else max(acc[2], ts)
 
     def summary(self):
-        """The task's SUMMARY_SCHEMA rows (no frame when it had none)."""
-        import pandas as pd
-
-        if self._summary:
-            yield pd.DataFrame([(t, *acc) for t, acc in self._summary.items()],
-                               columns=_SUMMARY_COLS)
+        """The task's SUMMARY_SCHEMA rows, one tuple per topic (none when
+        it had no rows)."""
+        for topic, acc in self._summary.items():
+            yield (topic, *acc)

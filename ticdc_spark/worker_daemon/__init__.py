@@ -24,11 +24,16 @@ workers (a backlog epoch whose produce stage AQE splits in two), and
 Spark's worker factory stops a worker left idle for a minute
 (``PythonWorkerFactory``'s idle timeout), so the next epoch after a
 quiet minute forks again.  Without ``PRELOAD`` such a worker imports
-pandas, pyarrow and the produce path (~380 modules, 0.12-0.18 s before
-the UDF's first row, ~0.4 s of task wall) in the middle of the epoch it
-holds up.  The daemon holds those modules once (~60 MB more RSS); a
-forked worker starts with them mapped copy-on-write.  Importing numpy and
-pyarrow starts native threads in the daemon (the BLAS pool, jemalloc's
+the produce path (~70 modules) in the middle of the epoch it holds up.
+With it, a forked worker's first ``produce_frame`` task imports no
+module: the daemon holds them once (98 MB RSS, 467 modules, on a
+4-vCPU x86 host with CPython 3.11, pyarrow 16.1 and PySpark 4.1) and a
+worker starts with them mapped copy-on-write (~72 MB RSS).  pandas is
+not among them (with it the daemon held 802 modules in 132 MB): the
+sink tasks cross the Arrow boundary in ``functions/arrow_rows.py``,
+which avoids the pyarrow calls that import it.  A query that runs a
+pandas UDF imports it in its own worker.  Importing numpy and pyarrow
+starts native threads in the daemon (the BLAS pool, jemalloc's
 background thread); both libraries register ``pthread_atfork``
 handlers, and a forked worker starts its own threads when it needs them.
 
@@ -45,20 +50,16 @@ from __future__ import annotations
 import os
 import zipimport
 
-# What a cold worker imports in its first produce task (~380 modules):
-# the Arrow-UDF runtime every mapInPandas/mapInArrow task loads
-# (pyarrow's pandas shim imports pyarrow.vendored.version lazily), the
-# live produce path (``kafka_live`` holds the produce UDF and pulls in
-# the ``sinks`` package; its ``_send`` imports ``kafka_client``, which
-# brings ``kafka_wire`` and ``native_accel``) and ``encodings.idna``,
-# which the socket layer loads to encode a host name.
+# What a cold worker imports in its first produce task: the Arrow
+# runtime every mapInArrow task loads, the live produce path
+# (``kafka_live`` holds the produce task and pulls in the ``sinks``
+# package and ``functions.arrow_rows``; its ``_send`` imports
+# ``kafka_client``, which brings ``kafka_wire`` and ``native_accel``) and
+# ``encodings.idna``, which the socket layer loads to encode a host name.
 # ``pyspark.sql.pandas.serializers`` is not listed: ``pyspark.worker``
 # already imports it in the daemon.
 PRELOAD = (
     "pyarrow",
-    "pandas",
-    "pyarrow.pandas_compat",
-    "pyarrow.vendored.version",
     "ticdc_spark.sinks.kafka_live",
     "ticdc_spark.sinks.kafka_client",
     "encodings.idna",
