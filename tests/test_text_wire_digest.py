@@ -58,6 +58,12 @@ def _open(**kw):
     return frame
 
 
+def _open_checkpoint(spark):
+    from ticdc_spark.codec.open_protocol import open_protocol_checkpoints
+
+    return open_protocol_checkpoints(_cl(spark)).select("key", "value")
+
+
 def _simple(spark):
     from ticdc_spark.codec.simple_protocol import encode_simple
 
@@ -134,6 +140,7 @@ FRAMES = {
     "open_dml_no_old": _open(output_old_value=False),
     "open_ddl": _registered("open_protocol_ddl"),
     "open_checkpoint": _registered("open_protocol_checkpoint"),
+    "open_checkpoint_frame": _open_checkpoint,
     "simple_dml": _simple,
     "simple_ddl": _registered("simple_ddl_messages"),
     "simple_watermark": _simple_watermark,
@@ -177,6 +184,8 @@ DIGESTS = {
         "c02a82add1e4381be785fa2bd53106d4b1525785bd41a49ca9d4d0d31a95fc20",
     "open_checkpoint":
         "0b18a116285947e3d080bb64c63e880a93de2095da4042070078aa853345ef65",
+    "open_checkpoint_frame":
+        "f6334944ccd3f6bd1788f5e7dfa6d03dfa8ad65a1668ee4f24ea06bddc91669d",
     "simple_dml":
         "c42975cd816ec0d18ade1b9fbf4874186cabe879e1becb8ed4af28c449cc75a9",
     "simple_ddl":
