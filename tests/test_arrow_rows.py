@@ -220,7 +220,8 @@ def test_sinks_and_preload_import_no_pandas():
     names = [f"ticdc_spark.sinks.{m.name}"
              for m in pkgutil.iter_modules([root])]
     # a fresh interpreter: this one has imported pandas long ago.  It
-    # also runs the boundary both ways and a tally, since pyarrow
+    # also runs the boundary both ways (a list<bigint> column with a
+    # NULL row and a NULL element too) and a tally, since pyarrow
     # imports pandas on pa.array, pa.scalar and to_numpy
     probe = f"""
 import importlib, sys
@@ -234,6 +235,9 @@ w = TaskWriter(None, None, None, RetryPolicy())
 w.tally({{"topic": pylist(_array(["t", None], pa.string())),
          "commit_ts": pylist(_array([{BIG}, None], pa.int64()))}})
 assert list(w.summary()) == [("t", 1, {BIG}, {BIG}), (None, 1, None, None)]
+lists = _array([[1, None, {BIG}], None, []], pa.list_(pa.int64()))
+assert pylist(lists) == [[1, None, {BIG}], None, []]
+assert pylist(lists.slice(1)) == [None, []]
 print(sorted(m for m in sys.modules if m.split(".")[0] == "pandas"))
 """
     out = subprocess.run(

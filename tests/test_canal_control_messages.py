@@ -4,8 +4,9 @@ that needs no escape."""
 
 import json
 
-from ticdc_spark.codec.canal_json import (canal_ddl_message,
-                                          canal_watermark_message)
+from ticdc_spark.codec.canal_json import ddl_message as canal_ddl_message
+from ticdc_spark.codec.canal_json import \
+    watermark_message as canal_watermark_message
 
 
 def test_ddl_message_is_valid_json_for_any_sql():

@@ -29,12 +29,12 @@ def test_canal_roundtrip_state_equality(spark, sf_dir):
     )
 
     encoded = encode_canal_json(cl).select("value")
-    decoded = decode_canal_json(encoded)
+    decoded = decode_canal_json(encoded, cl.schema["after"].dataType)
     # millisecond es collisions would break ordering — assert the fixture
     # is collision-free per key before trusting the comparison
     dup = (
-        decoded.groupBy("schema_name", "table_name", "commit_ts_ms",
-                        F.coalesce("after_id", "before_id"))
+        decoded.groupBy("schema_name", "table_name", "commit_ts",
+                        F.coalesce("after.id", "before.id"))
         .count().filter("count > 2")
     )
     assert dup.count() == 0
@@ -67,7 +67,7 @@ def test_open_protocol_roundtrip_state_equality(spark, sf_dir):
         "schema_name", "table_name", "id", "val", "k"
     )
     encoded = encode_open_protocol(cl).select("key", "value")
-    decoded = decode_open_protocol(encoded)
+    decoded = decode_open_protocol(encoded, cl.schema["after"].dataType)
     replayed = replay_to_state(decoded, order_col="commit_ts")
     assert _state_key(direct) == _state_key(replayed)
 
@@ -80,7 +80,8 @@ def test_debezium_roundtrip_state_equality(spark, sf_dir):
     direct = materialize_state(cl).select(
         "schema_name", "table_name", "id", "val", "k"
     )
-    decoded = decode_debezium(encode_debezium(cl).select("value"))
+    decoded = decode_debezium(encode_debezium(cl).select("value"),
+                              cl.schema["after"].dataType)
     replayed = replay_to_state(decoded, order_col="commit_ts")
     assert _state_key(direct) == _state_key(replayed)
 
@@ -93,7 +94,8 @@ def test_simple_roundtrip_state_equality(spark, sf_dir):
     direct = materialize_state(cl).select(
         "schema_name", "table_name", "id", "val", "k"
     )
-    decoded = decode_simple(encode_simple(cl).select("value"))
+    decoded = decode_simple(encode_simple(cl).select("value"),
+                            cl.schema["after"].dataType)
     replayed = replay_to_state(decoded, order_col="commit_ts")
     assert _state_key(direct) == _state_key(replayed)
 
@@ -118,7 +120,8 @@ def test_csv_old_value_storage_roundtrip(spark, sf_dir):
     # a line-oriented reader: split multi-line messages into csv lines
     lines = files.select(
         "path", F.explode(F.split("value", "\r\n")).alias("value"))
-    decoded = decode_csv_storage(lines, output_old_value=True)
+    decoded = decode_csv_storage(lines, cl.schema["after"].dataType,
+                                 output_old_value=True)
     replayed = replay_to_state(decoded, order_col="commit_ts")
     assert _state_key(direct) == _state_key(replayed)
 
@@ -127,7 +130,7 @@ def test_csv_consumer_header_dropped_null_op_survives(spark):
     """ADVICE r7: the header filter must be null-safe — only the
     output-field-header line is dropped; a malformed line (op parses
     as NULL) surfaces as a null row instead of silently vanishing."""
-    import pyspark.sql.functions as F
+    import pyspark.sql.types as T
 
     from ticdc_spark.sinks.consumer import decode_csv_storage
 
@@ -137,7 +140,9 @@ def test_csv_consumer_header_dropped_null_op_survives(spark):
          ("s/t/1/CDC000001.csv", "I,t,s,100,7,2.5,1"),
          ("s/t/1/CDC000001.csv", "")],
         "path string, value string")
-    out = decode_csv_storage(files).collect()
+    out = decode_csv_storage(
+        files, T.StructType.fromDDL("id bigint, val double, k bigint")
+    ).collect()
     assert len(out) == 2  # header dropped, malformed line kept
     ops = sorted((r.op or "NULL") for r in out)
     assert ops == ["I", "NULL"]

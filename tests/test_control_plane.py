@@ -138,11 +138,11 @@ def test_pipeline_all_protocols_and_knobs(spark, sf_dir):
     unknown names raise."""
     import pytest
 
-    from ticdc_spark.pipeline import ENCODERS, ChangefeedConfig, build_pipeline
+    from ticdc_spark.pipeline import PROTOCOLS, ChangefeedConfig, build_pipeline
     from ticdc_spark.sources.changelog import events_changelog
 
     cl = events_changelog(spark, sf_dir).limit(200)
-    for proto in sorted(ENCODERS):
+    for proto in sorted(PROTOCOLS):
         out = build_pipeline(cl, ChangefeedConfig(protocol=proto))
         n = out.filter(out["value"].isNotNull()).count()
         assert n > 0, proto

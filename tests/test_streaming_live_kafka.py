@@ -109,11 +109,12 @@ def test_changefeed_live_kafka_crash_replay_idempotent(spark, sf_dir, tmp_path):
         assert len(data) > n_distinct, "expected duplicate delivery after replay"
 
         msgs = spark.createDataFrame([(v,) for _, _, v in data], "value string")
-        state = replay_to_state(decode_canal_json(msgs), order_col="commit_ts")
+        cl = events_changelog(spark, sf_dir)
+        image = cl.schema["after"].dataType
+        state = replay_to_state(decode_canal_json(msgs, image),
+                                order_col="commit_ts")
         clean = replay_to_state(
-            decode_canal_json(
-                build_pipeline(events_changelog(spark, sf_dir), cfg)
-                .select("value")),
+            decode_canal_json(build_pipeline(cl, cfg).select("value"), image),
             order_col="commit_ts")
         got = {tuple(r) for r in state.collect()}
         want = {tuple(r) for r in clean.collect()}
@@ -476,10 +477,11 @@ def test_crash_between_ddl_broadcast_and_checkpoint_commit(
         rows = spark.createDataFrame(
             [(v,) for _, _, v in data if '"isDdl":true' not in v
              and '"TIDB_WATERMARK"' not in v], "value string")
-        state = replay_to_state(decode_canal_json(rows),
+        image = cl.schema["after"].dataType
+        state = replay_to_state(decode_canal_json(rows, image),
                                 order_col="commit_ts")
         clean = replay_to_state(
-            decode_canal_json(build_pipeline(cl, cfg)),
+            decode_canal_json(build_pipeline(cl, cfg), image),
             order_col="commit_ts")
         assert state.exceptAll(clean).count() == 0
         assert clean.exceptAll(state).count() == 0

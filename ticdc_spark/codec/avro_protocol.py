@@ -365,7 +365,7 @@ def encode_avro_binary_df(cl, tidb_extension: bool = True,
                           avro_enable_watermark: bool = False,
                           keyspace: str = "default",
                           pk_fields: tuple[str, ...] = ("id",)):
-    """DataFrame encoder (``ENCODERS["avro"]``): binary key/value
+    """DataFrame encoder (``PROTOCOLS["avro"].dml``): binary key/value
     columns over the columns of the frame's ``after`` struct
     (:func:`struct_columns`, ``pk_fields`` the handle); one
     ``arrow_rows.binary_column`` each, with an in-memory registry per

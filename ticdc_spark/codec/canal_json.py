@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ticdc_spark.functions.render import (json_case, json_dumps, json_image,
-                                          json_object, json_str)
+                                          json_object, json_str, with_frames)
+from ticdc_spark.functions.tso import tumbling_marks
 
 # java.go:70-146: BIGINT=-5, DOUBLE=8, VARCHAR=12, DATE=91, TIMESTAMP=93
 _JAVA_TYPE = {"long": -5, "bigint": -5, "double": 8, "string": 12,
@@ -173,10 +174,12 @@ CANAL_DDL_EVENT_TYPE = {
 }
 
 
-def canal_ddl_message(ddl: dict) -> bytes:
-    """The DDL message a live changefeed broadcasts at a DDL barrier:
-    ``encode_canal_json_ddl``'s frame for one DDL event dict
-    (schema_name, table_name, commit_ts, query, ddl_type)."""
+def ddl_message(ddl: dict) -> bytes:
+    """canal-json DDL message (`canal_json_encoder.go:384-399`
+    newJSONMessageForDDL) for one DDL event dict (schema_name,
+    table_name, commit_ts, query, ddl_type): the same FlatMessage frame
+    as DML but ``isDdl:true``, ``sql`` carries the query, and
+    pkNames/sqlType/mysqlType/data/old are null."""
     return json_dumps({
         "id": 0, "database": ddl.get("schema_name", ""),
         "table": ddl.get("table_name", ""), "pkNames": None, "isDdl": True,
@@ -185,9 +188,14 @@ def canal_ddl_message(ddl: dict) -> bytes:
         "sqlType": None, "mysqlType": None, "data": None, "old": None}).encode()
 
 
-def canal_watermark_message(resolved_ts: int) -> bytes:
-    """The TIDB_WATERMARK message a live changefeed broadcasts after each
-    epoch: ``canal_checkpoints``' frame for one resolved ts."""
+def watermark_message(resolved_ts: int) -> bytes:
+    """canal-json checkpoint/watermark message
+    (`canal_json_encoder.go:406-441` newJSONMessage4CheckpointEvent +
+    EncodeCheckpointEvent): a full JSONMessage with empty
+    database/table, ``type`` TIDB_WATERMARK, ``es`` = watermark in canal
+    ms, and ``"_tidb":{"watermarkTs":<exact ts>}``. The reference stamps
+    BuildTime with wall clock; pinned 0 here like every other ``ts``
+    field (determinism)."""
     return json_dumps({
         "id": 0, "database": "", "table": "", "pkNames": None,
         "isDdl": False, "type": "TIDB_WATERMARK", "es": resolved_ts // 1000,
@@ -196,47 +204,13 @@ def canal_watermark_message(resolved_ts: int) -> bytes:
 
 
 def encode_canal_json_ddl(ddl: DataFrame) -> DataFrame:
-    """canal-json DDL message (`canal_json_encoder.go:384-399`
-    newJSONMessageForDDL): same FlatMessage frame as DML but
-    ``isDdl:true``, ``sql`` carries the query, and pkNames/sqlType/
-    mysqlType/data/old are null. Input frame carries
-    (schema_name, table_name, commit_ts, query, ddl_type)."""
-    value = json_object([
-        ("id", 0), ("database", json_str(F.col("schema_name"))),
-        ("table", json_str(F.col("table_name"))), ("pkNames", None),
-        ("isDdl", True),
-        ("type", json_case(F.col("ddl_type"), CANAL_DDL_EVENT_TYPE, "QUERY")),
-        ("es", F.floor(F.col("commit_ts") / 1000).cast("long").cast("string")),
-        ("ts", 0), ("sql", json_str(F.col("query"))), ("sqlType", None),
-        ("mysqlType", None), ("data", None), ("old", None),
-    ])
-    return ddl.withColumn("value", value)
+    """:func:`ddl_message` as a ``value`` column, one per DDL row."""
+    return with_frames(ddl, lambda r: (ddl_message(r),), ("value",))
 
 
 def canal_checkpoints(cl: DataFrame, interval_us: int = 3_600_000_000) -> DataFrame:
-    """canal-json checkpoint/watermark messages
-    (`canal_json_encoder.go:406-441` newJSONMessage4CheckpointEvent +
-    EncodeCheckpointEvent): emitted ONLY under enable-tidb-extension;
-    a full JSONMessage with empty database/table, ``type``
-    TIDB_WATERMARK, ``es`` = watermark in canal ms, and
-    ``"_tidb":{"watermarkTs":<exact ts>}``. The reference stamps
-    BuildTime with wall clock; pinned 0 here like every other ``ts``
-    field (determinism). One message per tumbling resolved-ts boundary
-    (the reference emits one per checkpoint advance and the kafka sink
-    broadcasts it to all partitions — see kafka_ddl_broadcast)."""
-    boundary = (F.col("commit_ts") - F.col("commit_ts") % interval_us) + interval_us
-    wm = (
-        cl.withColumn("boundary_ts", boundary)
-        .groupBy("boundary_ts")
-        .agg(F.max("commit_ts").alias("resolved_ts"))
-    )
-    value = json_object([
-        ("id", 0), ("database", ""), ("table", ""), ("pkNames", None),
-        ("isDdl", False), ("type", "TIDB_WATERMARK"),
-        ("es", F.expr("resolved_ts div 1000").cast("string")), ("ts", 0),
-        ("sql", ""), ("sqlType", None), ("mysqlType", None), ("data", None),
-        ("old", None),
-        ("_tidb", json_object([
-            ("watermarkTs", F.col("resolved_ts").cast("string"))])),
-    ])
-    return wm.withColumn("value", value)
+    """:func:`watermark_message` per tumbling resolved-ts boundary. The
+    reference emits them ONLY under enable-tidb-extension, one per
+    checkpoint advance, broadcast to all partitions."""
+    return with_frames(tumbling_marks(cl, interval_us), lambda r: (
+        watermark_message(r["resolved_ts"]),), ("value",))

@@ -17,7 +17,8 @@ from pyspark.sql.types import DoubleType, FloatType, StringType, StructType
 
 from ticdc_spark.functions.render import (json_case, json_dumps, json_image,
                                           json_number, json_object, json_str,
-                                          json_string_or_null, json_text)
+                                          json_string_or_null, json_text,
+                                          with_frames)
 
 
 def _column_value(col: Column, dtype) -> Column:
@@ -82,34 +83,34 @@ DBZ_DDL_TYPE = {
 }
 
 
-def encode_debezium_ddl(ddl: DataFrame, connector: str = "ticdc-spark") -> DataFrame:
-    """Debezium schema-change event (`codec.go:1224-1380` EncodeDDLEvent):
-    key = SchemaChangeKey (payload.databaseName), value = payload with
-    source block, ``databaseName``/``ddl``/``tableChanges`` — type
-    CREATE/ALTER/DROP per the reference's action mapping; TRUNCATE emits
-    an empty tableChanges array, DROP TABLE a null table descriptor.
-    (The per-column ``table`` descriptor is carried by the simple
-    protocol's TableSchema / avro registry docs in this engine.)"""
-    schema_name = json_str(F.col("schema_name"))
-    key = json_object([("payload", json_object([("databaseName", schema_name)]))])
-    tid = json_str(F.concat(F.lit('"'), F.col("schema_name"), F.lit('"."'),
-                            F.col("table_name"), F.lit('"')))
-    change = json_object([
-        ("type", json_case(F.col("ddl_type"), DBZ_DDL_TYPE, "ALTER")),
-        ("id", tid)])
-    dropped = json_object([("type", "DROP"), ("id", tid), ("table", None)])
-    table_changes = (
-        F.when(F.col("ddl_type") == "truncate-table", F.lit("[]"))
-        .when(F.col("ddl_type") == "drop-table",
-              F.concat(F.lit("["), dropped, F.lit("]")))
-        .otherwise(F.concat(F.lit("["), change, F.lit("]")))
-    )
-    value = json_object([("payload", json_object([
-        ("source", _connector_source(connector)), ("ts_ms", _ms("commit_ts")),
-        ("databaseName", schema_name), ("schemaName", None),
-        ("ddl", json_str(F.col("query"))), ("tableChanges", table_changes),
-    ]))])
-    return ddl.withColumn("key", key).withColumn("value", value)
+def ddl_frame(ddl: dict) -> tuple[bytes, bytes]:
+    """Debezium schema-change event (`codec.go:1224-1380` EncodeDDLEvent)
+    for one DDL event dict: key = SchemaChangeKey
+    (payload.databaseName), value = payload with source block,
+    ``databaseName``/``ddl``/``tableChanges`` — type CREATE/ALTER/DROP
+    per the reference's action mapping; TRUNCATE emits an empty
+    tableChanges array, DROP TABLE a null table descriptor. (The
+    per-column ``table`` descriptor is carried by the simple protocol's
+    TableSchema / avro registry docs in this engine.)"""
+    db, ts, kind = ddl.get("schema_name"), ddl["commit_ts"], ddl.get("ddl_type")
+    tid = f'"{db}"."{ddl.get("table_name")}"'
+    changes = ([] if kind == "truncate-table" else
+               [{"type": "DROP", "id": tid, "table": None}]
+               if kind == "drop-table" else
+               [{"type": DBZ_DDL_TYPE.get(kind, "ALTER"), "id": tid}])
+    source = {"connector": "ticdc-spark", "db": db,
+              "table": ddl.get("table_name"), "commit_ts": ts}
+    value = {"payload": {
+        "source": source, "ts_ms": ts // 1000, "databaseName": db,
+        "schemaName": None, "ddl": ddl.get("query"),
+        "tableChanges": changes}}
+    return (json_dumps({"payload": {"databaseName": db}}).encode(),
+            json_dumps(value).encode())
+
+
+def encode_debezium_ddl(ddl: DataFrame) -> DataFrame:
+    """:func:`ddl_frame` as ``key``/``value`` columns, one per DDL row."""
+    return with_frames(ddl, ddl_frame, ("key", "value"))
 
 
 # ---------------------------------------------------------------------------
@@ -326,29 +327,37 @@ def encode_debezium_key(
     return cl.withColumn("key", json_object(pairs))
 
 
-def debezium_watermark_messages(
-    watermarks: DataFrame,
-    cluster_id: str = "ticdc-spark",
-    disable_schema: bool = True,
-) -> DataFrame:
+def watermark_frame(resolved_ts: int, cluster_id: str,
+                    disable_schema: bool) -> tuple[bytes, bytes]:
     """Checkpoint/watermark event (`codec.go:1636-1760`
     EncodeCheckpointEvent, emitted under enable-tidb-extension): key has
     an empty payload (+ `<cluster>.watermark.Key` struct), value carries
     the full source block with empty db/table, op "m", and the
-    watermark Envelope schema. Input: one row per watermark with a
-    ``resolved_ts`` column (µs)."""
-    key = {"payload": {}}
-    payload = json_object([
-        ("source", _source(cluster_id, "resolved_ts", "", "")),
-        ("ts_ms", _ms("resolved_ts")), ("transaction", None), ("op", "m")])
-    pairs = [("payload", payload)]
+    watermark Envelope schema."""
+    key: dict = {"payload": {}}
+    source = {
+        "version": DBZ_VERSION, "connector": "TiCDC", "name": cluster_id,
+        "ts_ms": resolved_ts // 1000, "snapshot": "false", "db": "",
+        "table": "", "server_id": 0, "gtid": None, "file": "", "pos": 0,
+        "row": 0, "thread": 0, "query": None, "commit_ts": resolved_ts,
+        "cluster_id": cluster_id}
+    value = '{"payload":' + json_dumps({
+        "source": source, "ts_ms": resolved_ts // 1000,
+        "transaction": None, "op": "m"})
     if not disable_schema:
         key["schema"] = {"type": "struct",
                          "name": cluster_id + ".watermark.Key",
                          "optional": False, "fields": []}
-        pairs.append(("schema", F.lit(
-            '{"type":"struct","optional":false,"name":'
-            + json_dumps(cluster_id + ".watermark.Envelope")
-            + ',"version":1,"fields":[' + _DBZ_ENVELOPE_TAIL + "}")))
-    return watermarks.withColumn("key", F.lit(json_dumps(key))) \
-        .withColumn("value", json_object(pairs))
+        value += (',"schema":{"type":"struct","optional":false,"name":'
+                  + json_dumps(cluster_id + ".watermark.Envelope")
+                  + ',"version":1,"fields":[' + _DBZ_ENVELOPE_TAIL + "}")
+    return json_dumps(key).encode(), (value + "}").encode()
+
+
+def debezium_watermark_messages(watermarks: DataFrame,
+                                cluster_id: str = "ticdc-spark",
+                                disable_schema: bool = True) -> DataFrame:
+    """:func:`watermark_frame` as ``key``/``value`` columns, one per row
+    of ``watermarks`` (``resolved_ts``, µs)."""
+    return with_frames(watermarks, lambda r: watermark_frame(
+        r["resolved_ts"], cluster_id, disable_schema), ("key", "value"))

@@ -18,8 +18,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ticdc_spark.functions.render import (json_image, json_object, json_str,
-                                          json_string_or_null)
+from ticdc_spark.functions.render import (json_dumps, json_image, json_object,
+                                          json_str, json_string_or_null,
+                                          with_frames)
+from ticdc_spark.functions.tso import tumbling_marks
+from ticdc_spark.operators.ddl_filter import TIDB_ACTION_TYPE
 
 _MYSQL_TYPE_BYTE = {"long": 8, "bigint": 8, "double": 5, "string": 15}
 
@@ -30,16 +33,13 @@ def _column_value(col: Column, dtype) -> Column:
                         ("v", json_string_or_null(col, dtype))])
 
 
-def _key(ts: Column, msg_type: int) -> Column:
-    return json_object([
-        ("ts", ts.cast("string")), ("scm", json_str(F.col("schema_name"))),
-        ("tbl", json_str(F.col("table_name"))), ("t", msg_type)])
-
-
 def open_protocol_key() -> Column:
     """The open-protocol message key (`open/message.go:28-40`) — also used
     as the kafka message key for other protocols."""
-    return _key(F.col("commit_ts"), 1)
+    return json_object([
+        ("ts", F.col("commit_ts").cast("string")),
+        ("scm", json_str(F.col("schema_name"))),
+        ("tbl", json_str(F.col("table_name"))), ("t", 1)])
 
 
 def encode_open_protocol(cl: DataFrame,
@@ -64,32 +64,35 @@ def encode_open_protocol(cl: DataFrame,
     return cl.withColumn("key", key).withColumn("value", value)
 
 
+def ddl_frame(ddl: dict) -> tuple[bytes, bytes]:
+    """open-protocol DDL message (`open/codec.go:121-137`) for one DDL
+    event dict: key ``{"ts":finishedTs,"scm":schema,"tbl":table,"t":2}``
+    (type 2 = DDL), value ``{"q":query,"t":<tidb action type>}``."""
+    key = {"ts": ddl["commit_ts"], "scm": ddl.get("schema_name"),
+           "tbl": ddl.get("table_name"), "t": 2}
+    value = {"q": ddl.get("query"),
+             "t": TIDB_ACTION_TYPE.get(ddl.get("ddl_type"), 0)}
+    return json_dumps(key).encode(), json_dumps(value).encode()
+
+
+def watermark_frame(resolved_ts: int) -> tuple[bytes, bytes]:
+    """open-protocol resolved-ts (checkpoint) message
+    (`open/encoder.go:240-250` EncodeCheckpointEvent): key
+    ``{"ts":resolvedTs,"t":3}``, value EMPTY."""
+    return json_dumps({"ts": resolved_ts, "t": 3}).encode(), b""
+
+
 def encode_open_protocol_ddl(ddl: DataFrame) -> DataFrame:
-    """open-protocol DDL message (`open/codec.go:121-137`): key
-    ``{"ts":finishedTs,"scm":schema,"tbl":table,"t":2}`` (type 2 = DDL),
-    value ``{"q":query,"t":<tidb action type>}``. Input frame carries
-    (schema_name, table_name, commit_ts, query, action_type)."""
-    key = _key(F.col("commit_ts"), 2)
-    value = json_object([("q", json_str(F.col("query"))),
-                         ("t", F.col("action_type").cast("string"))])
-    return ddl.withColumn("key", key).withColumn("value", value)
+    """:func:`ddl_frame` as ``key``/``value`` columns, one per DDL row."""
+    return with_frames(ddl, ddl_frame, ("key", "value"))
 
 
 def open_protocol_checkpoints(cl: DataFrame, interval_us: int = 3_600_000_000) -> DataFrame:
-    """open-protocol resolved-ts (checkpoint) messages
-    (`open/encoder.go:240-250` EncodeCheckpointEvent): key
-    ``{"ts":resolvedTs,"t":3}``, value EMPTY — one per tumbling
-    resolved-ts boundary across the whole changefeed (the reference emits
-    one per checkpoint advance and broadcasts it to every partition).
-    Map-side partial max → single tiny final agg; no per-row state."""
-    boundary = (F.col("commit_ts") - F.col("commit_ts") % interval_us) + interval_us
-    wm = (
-        cl.withColumn("boundary_ts", boundary)
-        .groupBy("boundary_ts")
-        .agg(F.max("commit_ts").alias("resolved_ts"))
-    )
-    key = json_object([("ts", F.col("resolved_ts").cast("string")), ("t", 3)])
-    return wm.withColumn("key", key).withColumn("value", F.lit(""))
+    """:func:`watermark_frame` per tumbling resolved-ts boundary across
+    the whole changefeed (the reference emits one per checkpoint advance
+    and broadcasts it to every partition)."""
+    return with_frames(tumbling_marks(cl, interval_us), lambda r: (
+        watermark_frame(r["resolved_ts"])), ("key", "value"))
 
 
 def encode_open_protocol_batch(cl_routed: DataFrame,

@@ -20,8 +20,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ticdc_spark.functions.render import (json_case, json_image, json_object,
-                                          json_str)
+from ticdc_spark.functions.render import (json_case, json_dumps, json_image,
+                                          json_object, json_str, with_frames)
+from ticdc_spark.functions.tso import tumbling_marks
 
 
 def _head(msg_type, commit_ts: Column | None) -> list:
@@ -46,15 +47,33 @@ def encode_simple(cl: DataFrame) -> DataFrame:
     return cl.withColumn("value", value)
 
 
-def encode_simple_ddl(ddl: DataFrame) -> DataFrame:
+def ddl_message(ddl: dict) -> bytes:
     """simple-protocol DDL message (`simple/message.go:38-273`, type DDL
-    with the post-DDL TableSchema embedded): input frame carries
-    (schema_name, table_name, commit_ts, query, table_schema_json)."""
-    value = json_object(_head("DDL", F.col("commit_ts")) + [
-        ("sql", json_str(F.col("query"))),
-        ("tableSchema", F.col("table_schema_json")),
-    ])
-    return ddl.withColumn("value", value)
+    with the post-DDL TableSchema embedded) for one DDL event dict
+    (schema_name, table_name, commit_ts, query, and the JSON text
+    ``table_schema_json`` when the event carries one)."""
+    head = json_dumps({
+        "version": 1, "type": "DDL", "commitTs": ddl["commit_ts"],
+        "buildTs": 0, "schema": ddl.get("schema_name"),
+        "table": ddl.get("table_name"), "sql": ddl.get("query")})
+    return (head[:-1] + ',"tableSchema":'
+            + (ddl.get("table_schema_json") or "null") + "}").encode()
+
+
+def watermark_message(resolved_ts: int, schema_name, table_name) -> bytes:
+    """WATERMARK message (`message.go:42-43, 275-282`) carrying a resolved
+    ts; a per-table mark names its table, the broadcast one (both None)
+    names none, as in the reference."""
+    m = {"version": 1, "type": "WATERMARK", "commitTs": resolved_ts,
+         "buildTs": 0}
+    if schema_name is not None or table_name is not None:
+        m |= {"schema": schema_name, "table": table_name}
+    return json_dumps(m).encode()
+
+
+def encode_simple_ddl(ddl: DataFrame) -> DataFrame:
+    """:func:`ddl_message` as a ``value`` column, one per DDL row."""
+    return with_frames(ddl, lambda r: (ddl_message(r),), ("value",))
 
 
 def encode_simple_bootstrap(cl: DataFrame,
@@ -73,11 +92,8 @@ def watermark_messages(cl: DataFrame, interval_us: int = 3_600_000_000) -> DataF
     """Per-table watermark rows at tumbling resolved-ts boundaries (W1):
     one WATERMARK message per (table, interval) carrying the max commit
     ts seen — what the sink emits when the resolved ts advances."""
-    boundary = (F.col("commit_ts") - F.col("commit_ts") % interval_us) + interval_us
-    wm = (
-        cl.withColumn("boundary_ts", boundary)
-        .groupBy("schema_name", "table_name", "boundary_ts")
-        .agg(F.max("commit_ts").alias("resolved_ts"))
-    )
-    return wm.withColumn(
-        "value", json_object(_head("WATERMARK", F.col("resolved_ts"))))
+    return with_frames(
+        tumbling_marks(cl, interval_us, "schema_name", "table_name"),
+        lambda r: (watermark_message(r["resolved_ts"], r["schema_name"],
+                                     r["table_name"]),),
+        ("value",))

@@ -18,7 +18,8 @@ for those loops, and the only code that runs them:
 
 Both directions work on the Arrow buffers: extraction through numpy
 over the values, offsets and validity bitmap (several times cheaper than
-``to_pylist``), building through ``array`` and ``Array.from_buffers``.
+``to_pylist``), building through ``array`` and ``Array.from_buffers``;
+a list column is its offsets over a child column taken the same way.
 Neither calls ``pa.array``, ``pa.scalar`` or ``to_numpy``: with pandas
 installed, pyarrow imports it on those calls, and a worker that never
 runs a pandas UDF should not pay for it.  Other types fall back to
@@ -51,7 +52,11 @@ def _code(t: pa.DataType) -> str | None:
 
 
 def _varwidth(t: pa.DataType) -> str | None:
-    """The offset code of a string or binary type, else None."""
+    """The offset code of a string, binary or list type (but a list of
+    structs), else None."""
+    if _T.is_list(t) or _T.is_large_list(t):
+        return (None if _T.is_struct(t.value_type)
+                else "i" if _T.is_list(t) else "q")
     if _T.is_large_string(t) or _T.is_large_binary(t):
         return "q"
     return "i" if _T.is_string(t) or _T.is_binary(t) else None
@@ -77,7 +82,10 @@ def pylist(arr: pa.Array) -> list | dict:
     if offs is not None:
         o = np.frombuffer(bufs[1], offs, n + 1,
                           at * np.dtype(offs).itemsize).tolist()
-        data = bufs[2].to_pybytes() if bufs[2] is not None else b""
+        if _T.is_list(t) or _T.is_large_list(t):
+            data = pylist(arr.values)  # the offsets index the whole child
+        else:
+            data = bufs[2].to_pybytes() if bufs[2] is not None else b""
         out = [data[a:b] for a, b in zip(o, o[1:])]
         if _T.is_string(t) or _T.is_large_string(t):
             out = [v.decode() for v in out]
@@ -104,14 +112,19 @@ def _array(values: Sequence, t: pa.DataType) -> pa.Array:
             if nulls else None)
     code, offs = _code(t), _varwidth(t)
     if offs is not None:
-        cells = [b"" if v is None else v.encode() if isinstance(v, str)
-                 else v for v in values]
+        nested = _T.is_list(t) or _T.is_large_list(t)
+        cells = [(() if nested else b"") if v is None
+                 else v.encode() if isinstance(v, str) else v for v in values]
         ends = np.zeros(n + 1, np.int64)
         np.cumsum(np.fromiter(map(len, cells), np.int64, n), out=ends[1:])
         if ends[-1] >= 2**31 and offs == "i":  # past 32-bit offsets
             return pa.array(values, t)
-        data = [pa.py_buffer(ends.astype(offs)),
-                pa.py_buffer(b"".join(cells))]
+        offsets = pa.py_buffer(ends.astype(offs))
+        if nested:  # the child column holds every element, in order
+            return pa.Array.from_buffers(
+                t, n, [vbuf, offsets], nulls, children=[_array(
+                    [x for c in cells for x in c], t.value_type)])
+        data = [offsets, pa.py_buffer(b"".join(cells))]
     elif _T.is_boolean(t):
         data = [pa.py_buffer(np.packbits(
             np.fromiter((bool(v) for v in values), bool, n),

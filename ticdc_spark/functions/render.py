@@ -22,14 +22,15 @@ a per-column value renderer. Plan-time values go through
 ``json_dumps``. The output is byte-equal to ``json.dumps(...,
 ensure_ascii=False)`` with compact separators.
 
-All helpers return Column expressions — JVM-side, codegen'd.
+All helpers return Column expressions — JVM-side, codegen'd — but
+``with_frames``, which runs a Python control-frame builder over rows.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -177,6 +178,20 @@ def json_image(img: Column, schema: StructType,
     if array:
         obj = F.concat(F.lit("["), obj, F.lit("]"))
     return F.when(img.isNotNull(), obj).otherwise(F.lit("null"))
+
+
+def with_frames(df: DataFrame, build, names: tuple[str, ...]) -> DataFrame:
+    """``df`` with string columns ``names`` from ``build(row)``: the
+    bytes (or None) per name of a control frame the live changefeed
+    builds on the driver, here over each row (a dict) of ``df``."""
+    from ticdc_spark.functions.arrow_rows import binary_column
+
+    def part(i):
+        def run(c):
+            return [build(dict(zip(c, row)))[i] for row in zip(*c.values())]
+        return binary_column(run, *df.columns).cast("string")
+
+    return df.select("*", *[part(i).alias(n) for i, n in enumerate(names)])
 
 
 def mount_enum(ordinal: Column, names: tuple[str, ...]) -> Column:

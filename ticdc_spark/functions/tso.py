@@ -19,7 +19,7 @@ the DuckDB oracle, so every derived column is hash-exact.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TSO_LOGICAL_BITS = 18
@@ -60,3 +60,14 @@ def checkpoint_lag_ms(now_tso: Column, checkpoint_tso: Column) -> Column:
     reference divides by 1e3 for its lag gauges
     (`coordinator/controller.go:343-345`)."""
     return tso_physical_ms(now_tso) - tso_physical_ms(checkpoint_tso)
+
+
+def tumbling_marks(cl: DataFrame, interval_us: int, *by: str) -> DataFrame:
+    """Per tumbling ``interval_us`` window (and ``by`` group) of commit
+    ts: ``boundary_ts``, its upper edge, and ``resolved_ts``, its largest
+    commit ts — the marks watermark messages are built from."""
+    boundary = (F.col("commit_ts") - F.col("commit_ts") % interval_us
+                + interval_us)
+    return (cl.withColumn("boundary_ts", boundary)
+            .groupBy(*by, "boundary_ts")
+            .agg(F.max("commit_ts").alias("resolved_ts")))

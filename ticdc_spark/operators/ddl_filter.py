@@ -58,14 +58,6 @@ TIDB_ACTION_TYPE = {
 }
 
 
-def action_type(ddl_type_col: Column) -> Column:
-    """Map the classified kind to its TiDB action-type code."""
-    expr: Column = F.lit(0)
-    for label, code in TIDB_ACTION_TYPE.items():
-        expr = F.when(ddl_type_col == label, F.lit(code)).otherwise(expr)
-    return expr
-
-
 def classify_ddl(query_col: Column) -> Column:
     q = F.lower(query_col)
     expr: Column = F.lit("other")

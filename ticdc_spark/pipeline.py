@@ -18,18 +18,14 @@ possible: one exchange keyed by (table, pk).
 
 from __future__ import annotations
 
+from collections import namedtuple
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
-from ticdc_spark.codec import (
-    encode_canal_json,
-    encode_csv,
-    encode_debezium,
-    encode_open_protocol,
-)
+from ticdc_spark.codec import (canal_json, csv_codec, debezium, open_protocol,
+                               simple_protocol)
 from ticdc_spark.codec.avro_codec import encode_avro_json
-from ticdc_spark.codec.simple_protocol import encode_simple
 from ticdc_spark.operators import (
     apply_event_filters,
     apply_expr_filter,
@@ -41,6 +37,7 @@ from ticdc_spark.operators import (
     select_columns,
     split_updates,
 )
+from ticdc_spark.sinks import consumer
 
 
 @dataclass
@@ -190,38 +187,33 @@ def apply_replication_window(cl: DataFrame,
 
 
 def _csv(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
-    from ticdc_spark.codec.csv_codec import csv_encode_kwargs
-
-    return encode_csv(df, terminator=cfg.terminator,  # per-message, csv/txt
-                      **csv_encode_kwargs(cfg.csv_config))
+    return csv_codec.encode_csv(
+        df, terminator=cfg.terminator,  # per-message, csv/txt
+        **csv_codec.csv_encode_kwargs(cfg.csv_config))
 
 
 def _canal_json(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
-    from ticdc_spark.codec.canal_json import content_compatible_overrides
-
-    overrides = (content_compatible_overrides(df.schema["after"].dataType)
-                 if cfg.content_compatible else None)
-    return encode_canal_json(df, tidb_extension=cfg.tidb_extension,
-                             type_overrides=overrides,
-                             output_row_key=cfg.output_row_key)
+    overrides = (canal_json.content_compatible_overrides(
+        df.schema["after"].dataType) if cfg.content_compatible else None)
+    return canal_json.encode_canal_json(
+        df, tidb_extension=cfg.tidb_extension, type_overrides=overrides,
+        output_row_key=cfg.output_row_key)
 
 
 def _debezium(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
     if cfg.debezium_disable_schema:
-        return encode_debezium(
+        return debezium.encode_debezium(
             df, output_old_value=cfg.debezium_output_old_value)
     # reference default: the Connect schema envelope rides every
     # message (`replica_config.go:87`)
-    from ticdc_spark.codec.debezium import encode_debezium_full
-
-    return encode_debezium_full(
+    return debezium.encode_debezium_full(
         df, disable_schema=False,
         output_old_value=cfg.debezium_output_old_value)
 
 
 def _simple(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
     if cfg.encoding_format != "avro":
-        return encode_simple(df)
+        return simple_protocol.encode_simple(df)
     # [sink.codec] encoding-format (pkg/config/sink.go:456): the simple
     # protocol's second wire shape
     from ticdc_spark.codec.simple_avro import encode_simple_avro_values
@@ -244,28 +236,59 @@ def _debezium_avro(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
     return encode_debezium_avro_df(df)
 
 
-# protocol enum per `pkg/config/sink_protocol.go:33-44`; each entry
-# applies its own options from the changefeed config
-ENCODERS = {
-    "canal-json": _canal_json,
-    "csv": _csv,
-    "open-protocol": lambda df, cfg: encode_open_protocol(
-        df, output_old_value=cfg.open_output_old_value),
-    "debezium": _debezium,
-    "simple": _simple,
-    "avro": _avro,  # confluent-framed binary (the wire shape)
-    "avro-json": lambda df, cfg: encode_avro_json(df),  # JSON debug twin
-    "debezium-avro": _debezium_avro,  # confluent-framed Avro binary
+# One record per protocol: ``dml(df, cfg)`` encodes with the changefeed's
+# protocol options; ``ddl(event)`` and ``watermark(ts)`` build the
+# (key, value) control frames the live changefeed broadcasts, and their
+# DataFrame forms run the same builders; ``decode(messages, image)`` is
+# the consumer, its images typed by the table's ``image``. None where the
+# protocol has no such piece here.
+Protocol = namedtuple("Protocol", "dml ddl watermark decode")
+
+
+def _keyless(build):
+    """A builder of a value alone as a ``(None, value)`` frame builder."""
+    return lambda event: (None, build(event))
+
+
+# protocol enum per `pkg/config/sink_protocol.go:33-44`. The avro
+# protocols' control frames need the schema registry a live changefeed
+# does not have yet (ROADMAP Fix-first #1); csv and avro-json have none.
+PROTOCOLS = {
+    "canal-json": Protocol(
+        _canal_json, _keyless(canal_json.ddl_message),
+        _keyless(canal_json.watermark_message), consumer.decode_canal_json),
+    "csv": Protocol(_csv, None, None, consumer.decode_csv_storage),
+    "open-protocol": Protocol(
+        lambda df, cfg: open_protocol.encode_open_protocol(
+            df, output_old_value=cfg.open_output_old_value),
+        open_protocol.ddl_frame, open_protocol.watermark_frame,
+        consumer.decode_open_protocol),
+    "debezium": Protocol(
+        _debezium, debezium.ddl_frame,
+        lambda ts: debezium.watermark_frame(ts, "ticdc-spark", True),
+        consumer.decode_debezium),
+    "simple": Protocol(
+        _simple, _keyless(simple_protocol.ddl_message),
+        _keyless(lambda ts: simple_protocol.watermark_message(ts, None,
+                                                              None)),
+        consumer.decode_simple),
+    # confluent-framed binary (the wire shape)
+    "avro": Protocol(_avro, None, None, None),
+    # JSON debug twin
+    "avro-json": Protocol(lambda df, cfg: encode_avro_json(df),
+                          None, None, None),
+    # confluent-framed Avro binary
+    "debezium-avro": Protocol(_debezium_avro, None, None, None),
 }
 
 
-def _encode(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
-    """Protocol encode with the stream's protocol options applied."""
-    if cfg.protocol not in ENCODERS:
+def protocol_record(cfg: ChangefeedConfig) -> Protocol:
+    """The changefeed's protocol record."""
+    if cfg.protocol not in PROTOCOLS:
         raise ValueError(
-            f"unknown protocol: {cfg.protocol} (known: {sorted(ENCODERS)})"
+            f"unknown protocol: {cfg.protocol} (known: {sorted(PROTOCOLS)})"
         )
-    return ENCODERS[cfg.protocol](df, cfg)
+    return PROTOCOLS[cfg.protocol]
 
 
 def build_pipeline(cl: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
@@ -294,7 +317,7 @@ def build_pipeline(cl: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
         raise ValueError(
             f"unknown integrity-check-level: {cfg.integrity_check_level}"
         )
-    df = _encode(df, cfg)
+    df = protocol_record(cfg).dml(df, cfg)
     # large-message-handle-compression (`pkg/config/large_message.go:33`):
     # the reference encoders call common.Compress on EVERY value, so it
     # applies before (and its output feeds) the max-message-bytes gates
@@ -339,7 +362,7 @@ def build_pipeline(cl: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
 
             hk = list(cfg.handle_key_fields)
             full = df.withColumnRenamed("value", "_value_full")
-            small = _encode(
+            small = protocol_record(cfg).dml(
                 select_columns_physical(full, hk, pk_fields=tuple(hk)),
                 cfg)
             if lm_codec:
@@ -446,7 +469,7 @@ def compile_sink_tail(df: DataFrame, cfg: ChangefeedConfig) -> DataFrame:
         file_size = storage.get("file-size", 64 * 1024 * 1024)
         rows_per_file = max(1, 4096 * file_size // (64 * 1024 * 1024))
         return storage_paths(
-            _encode(df, cfg),
+            protocol_record(cfg).dml(df, cfg),
             date_separator=cfg.date_separator,
             extension=ext,
             rows_per_file=rows_per_file,

@@ -320,6 +320,8 @@ def q_codec_simple(spark, sf_dir):
     return encode_simple(scale_out(events_changelog(spark, sf_dir))).select("seq", "value")
 
 
+from ticdc_spark.functions.tso import tumbling_marks  # noqa: E402
+
 _WM_INTERVAL = 3_600_000_000
 
 
@@ -694,7 +696,7 @@ def q_bootstrap_messages(spark, sf_dir):
 # ---------------------------------------------------------------------------
 from ticdc_spark.codec import encode_debezium  # noqa: E402
 
-_DBZ_IMG = (
+_DBZ_IMAGE_SQL = (
     "'{{\"id\":' || coalesce({img}_id::VARCHAR, 'null')"
     " || ',\"val\":' || coalesce(round({img}_val, 2)::VARCHAR, 'null')"
     " || ',\"k\":' || coalesce({img}_k::VARCHAR, 'null') || '}}'"
@@ -704,7 +706,7 @@ _DBZ_IMG = (
 def _dbz_img_sql(img: str) -> str:
     return (
         f"CASE WHEN {img}_id IS NULL THEN 'null' ELSE "
-        + _DBZ_IMG.format(img=img) + " END"
+        + _DBZ_IMAGE_SQL.format(img=img) + " END"
     )
 
 
@@ -1257,7 +1259,6 @@ from ticdc_spark.codec.open_protocol import (  # noqa: E402
     encode_open_protocol_ddl,
     open_protocol_checkpoints,
 )
-from ticdc_spark.operators.ddl_filter import action_type  # noqa: E402
 
 _OPEN_DDL_KEY = (
     "'{\"ts\":' || commit_ts::VARCHAR || ',\"scm\":\"' || schema_name || "
@@ -1281,7 +1282,6 @@ _OPEN_DDL_VALUE = (
 )
 def q_open_protocol_ddl(spark, sf_dir):
     ddl = apply_ddl_filter(_ddl_stream(spark, sf_dir), ignore_sql=["tp_error"])
-    ddl = ddl.withColumn("action_type", action_type(F.col("ddl_type")))
     return encode_open_protocol_ddl(ddl).select("seq", "key", "value")
 
 
@@ -1311,7 +1311,6 @@ def q_open_protocol_checkpoint(spark, sf_dir):
 )
 def q_kafka_ddl_broadcast(spark, sf_dir):
     ddl = apply_ddl_filter(_ddl_stream(spark, sf_dir), ignore_sql=["tp_error"])
-    ddl = ddl.withColumn("action_type", action_type(F.col("ddl_type")))
     enc = encode_open_protocol_ddl(ddl).withColumn(
         "topic",
         F.concat(F.lit("cdc_"), F.col("schema_name"), F.lit("_"),
@@ -1627,13 +1626,8 @@ def q_start_ts_gate(spark, sf_dir):
 # columns the consumer can't see).
 # ---------------------------------------------------------------------------
 from ticdc_spark.codec import encode_debezium  # noqa: E402
-from ticdc_spark.codec.simple_protocol import encode_simple  # noqa: E402
-from ticdc_spark.sinks.consumer import (  # noqa: E402
-    decode_debezium,
-    decode_open_protocol,
-    decode_simple,
-    replay_to_state,
-)
+from ticdc_spark.pipeline import PROTOCOLS, ChangefeedConfig  # noqa: E402
+from ticdc_spark.sinks.consumer import replay_to_state  # noqa: E402
 
 _REPLAY_STATE_ORACLE = f"""
 WITH {CHANGELOG_SQL},
@@ -1656,24 +1650,12 @@ FROM g WHERE last_op <> 'D'
 """
 
 
-@register("open_protocol_consumer_roundtrip", _REPLAY_STATE_ORACLE,
-    bench="plan",
-)
-def q_open_protocol_consumer_roundtrip(spark, sf_dir):
-    cl = split_updates(events_changelog(spark, sf_dir, parallel=True))
-    decoded = decode_open_protocol(encode_open_protocol(cl).select("key", "value"))
-    return replay_to_state(decoded, order_col="commit_ts")
-
-
-@register("open_protocol_batch_roundtrip", _REPLAY_STATE_ORACLE)
-def q_open_protocol_batch_roundtrip(spark, sf_dir):
+def _batched_open_protocol(cl):
     """The capped-batch wire is invertible: route -> frame into <=16
-    message batches -> netstring-split back -> decode -> replayed state
-    equals the direct apply."""
+    message batches -> netstring-split back."""
     from ticdc_spark.codec.open_protocol import encode_open_protocol_batch
     from ticdc_spark.sinks.consumer import explode_open_protocol_batch
 
-    cl = split_updates(events_changelog(spark, sf_dir, parallel=True))
     routed = route(
         cl,
         [{"matcher": ["test.tp_*"], "partition": "index-value",
@@ -1681,37 +1663,46 @@ def q_open_protocol_batch_roundtrip(spark, sf_dir):
         n_partitions=16,
     )
     batches = encode_open_protocol_batch(routed, max_batch_size=16)
-    decoded = decode_open_protocol(
-        explode_open_protocol_batch(batches.select("batch")))
-    return replay_to_state(decoded, order_col="commit_ts")
+    return explode_open_protocol_batch(batches.select("batch"))
 
 
-@register("debezium_consumer_roundtrip", _REPLAY_STATE_ORACLE)
-def q_debezium_consumer_roundtrip(spark, sf_dir):
-    cl = split_updates(events_changelog(spark, sf_dir, parallel=True))
-    decoded = decode_debezium(encode_debezium(cl).select("value"))
-    return replay_to_state(decoded, order_col="commit_ts")
+# canal-json rides with enable-tidb-extension so the consumer replays on
+# the exact µs commit ts (es alone is ms-truncated and would tie-break
+# nondeterministically); debezium without the Connect schema envelope
+_ROUNDTRIP_CFG = ChangefeedConfig(tidb_extension=True,
+                                  debezium_disable_schema=True)
 
 
-@register("simple_consumer_roundtrip", _REPLAY_STATE_ORACLE)
-def q_simple_consumer_roundtrip(spark, sf_dir):
-    cl = split_updates(events_changelog(spark, sf_dir, parallel=True))
-    decoded = decode_simple(encode_simple(cl).select("value"))
-    return replay_to_state(decoded, order_col="commit_ts")
+def _roundtrip(protocol: str, messages):
+    """encode -> ``messages`` (the frames a consumer reads; the
+    protocol's own encode when None) -> the protocol's decode ->
+    replay."""
+    rec = PROTOCOLS[protocol]
+
+    def query(spark, sf_dir):
+        cl = split_updates(events_changelog(spark, sf_dir, parallel=True))
+        msgs = (messages(cl) if messages is not None
+                else rec.dml(cl, _ROUNDTRIP_CFG))
+        return replay_to_state(rec.decode(msgs, cl.schema["after"].dataType))
+    return query
 
 
-@register("storage_consumer_roundtrip", _REPLAY_STATE_ORACLE, bench="plan")
-def q_storage_consumer_roundtrip(spark, sf_dir):
-    """K4 e2e: csv-encode → storage path layout → storage consumer
-    (path-derived table + sidecar columns) → replay. The file-layout
-    twin of the MQ consumer round-trips."""
-    from ticdc_spark.sinks.consumer import decode_csv_storage
-    from ticdc_spark.sinks.storage import storage_paths
-
-    cl = split_updates(events_changelog(spark, sf_dir, parallel=True))
-    files = storage_paths(encode_csv(cl)).select("path", "value")
-    decoded = decode_csv_storage(files)
-    return replay_to_state(decoded, order_col="commit_ts")
+# One round trip per consumer. storage_consumer_roundtrip is K4 e2e:
+# csv-encode -> storage path layout -> storage consumer (path-derived
+# table + sidecar columns), the file-layout twin of the MQ ones.
+for _name, _protocol, _messages, _bench in (
+    ("canal_consumer_roundtrip", "canal-json", None, None),
+    ("open_protocol_consumer_roundtrip", "open-protocol", None, "plan"),
+    ("open_protocol_batch_roundtrip", "open-protocol",
+     _batched_open_protocol, None),
+    ("debezium_consumer_roundtrip", "debezium", None, None),
+    ("simple_consumer_roundtrip", "simple", None, None),
+    ("storage_consumer_roundtrip", "csv",
+     lambda cl: storage_paths(PROTOCOLS["csv"].dml(cl, _ROUNDTRIP_CFG)),
+     "plan"),
+):
+    register(_name, _REPLAY_STATE_ORACLE, bench=_bench)(
+        _roundtrip(_protocol, _messages))
 
 
 # canal-json checkpoint (TIDB_WATERMARK, tidb-extension only) — the
@@ -1924,20 +1915,6 @@ def q_ddl_create_view_normalize(spark, sf_dir):
         query.alias("query"), stored.alias("stored_select"),
     )
     return normalize_create_view(ddl).select("seq", "query", "normalized_query")
-
-
-# canal-json consumer round-trip — with enable-tidb-extension so the
-# consumer replays on the exact µs commit ts (es alone is ms-truncated
-# and would tie-break nondeterministically).
-from ticdc_spark.sinks.consumer import decode_canal_json  # noqa: E402
-
-
-@register("canal_consumer_roundtrip", _REPLAY_STATE_ORACLE)
-def q_canal_consumer_roundtrip(spark, sf_dir):
-    cl = split_updates(events_changelog(spark, sf_dir, parallel=True))
-    decoded = decode_canal_json(
-        encode_canal_json(cl, tidb_extension=True).select("value"))
-    return replay_to_state(decoded, order_col="commit_ts")
 
 
 # ---------------------------------------------------------------------------
@@ -2613,13 +2590,8 @@ def q_debezium_avro_watermark_roundtrip(spark, sf_dir):
     from ticdc_spark.codec.schema_registry import ConfluentSchemaManager
     from ticdc_spark.functions.arrow_rows import map_batches
 
-    cl = events_changelog(spark, sf_dir)
-    boundary = ((F.col("commit_ts")
-                 - F.col("commit_ts") % _WM_INTERVAL)
-                + F.lit(_WM_INTERVAL)).alias("boundary_ts")
-    wm = (cl.groupBy(boundary)
-          .agg(F.max("commit_ts").alias("resolved_ts"))
-          .select("resolved_ts"))
+    wm = tumbling_marks(events_changelog(spark, sf_dir),
+                        _WM_INTERVAL).select("resolved_ts")
     msgs = debezium_watermark_messages(
         wm, disable_schema=False).select("resolved_ts", "key", "value")
     schema = ("resolved_ts long, op string, ts_ms long, commit_ts long, "
@@ -2690,11 +2662,7 @@ def q_avro_checkpoint_ddl_events(spark, sf_dir):
     from ticdc_spark.functions.arrow_rows import map_batches
 
     cl = events_changelog(spark, sf_dir)
-    boundary = ((F.col("commit_ts")
-                 - F.col("commit_ts") % _WM_INTERVAL)
-                + F.lit(_WM_INTERVAL)).alias("boundary_ts")
-    wm = (cl.groupBy(boundary)
-          .agg(F.max("commit_ts").alias("resolved_ts")))
+    wm = tumbling_marks(cl, _WM_INTERVAL)
     tabs = (cl.groupBy("schema_name", "table_name")
             .agg(F.max("commit_ts").alias("commit_ts")))
     out_schema = ("kind string, ts long, query string, "
@@ -3099,16 +3067,10 @@ def q_pipeline_live_end_to_end(spark, sf_dir):
         .select("topic", "partition", "key", "value")
     )
     fetched = kafka_live_roundtrip(frame, n_partitions=16, compression="lz4")
-    d = decode_canal_json(fetched)
+    d = decode_canal_json(fetched, cl.schema["after"].dataType)
     op = F.col("op")
     rebuilt = d.select(
-        "schema_name", "table_name", op.alias("op"), "commit_ts",
-        F.when(op != "I", F.struct(
-            F.col("before_id").alias("id"), F.col("before_val").alias("val"),
-            F.col("before_k").alias("k"))).alias("before"),
-        F.when(op != "D", F.struct(
-            F.col("after_id").alias("id"), F.col("after_val").alias("val"),
-            F.col("after_k").alias("k"))).alias("after"),
+        "*",
         F.when(op == "D", 1).when(op == "U", 2).otherwise(3).alias("dml_order"),
         F.monotonically_increasing_id().alias("seq"),
     )

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ticdc_spark.codec import encode_canal_json, encode_open_protocol
 from ticdc_spark.codec.open_protocol import open_protocol_key
 from ticdc_spark.operators.routing import route
 
@@ -23,13 +22,15 @@ def kafka_messages(
     protocol: str = "canal-json",
     n_partitions: int = 16,
 ) -> DataFrame:
-    routed = route(cl, dispatchers, n_partitions)
-    if protocol == "canal-json":
-        enc = encode_canal_json(routed).withColumn("key", open_protocol_key())
-    elif protocol == "open-protocol":
-        enc = encode_open_protocol(routed)
-    else:
-        raise ValueError(f"unsupported kafka protocol: {protocol}")
+    """Routed messages of ``protocol`` (its ``PROTOCOLS`` encoder at the
+    default options), keyed by the open-protocol key when the protocol
+    has no key of its own."""
+    from ticdc_spark.pipeline import ChangefeedConfig, protocol_record
+
+    cfg = ChangefeedConfig(protocol=protocol)
+    enc = protocol_record(cfg).dml(route(cl, dispatchers, n_partitions), cfg)
+    if "key" not in enc.columns:
+        enc = enc.withColumn("key", open_protocol_key())
     return enc.select("topic", "partition", "key", "value")
 
 

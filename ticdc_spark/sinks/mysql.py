@@ -306,18 +306,18 @@ def multirow_batches(
                            "batch_seq", "n_rows", "stmt")
 
 
-def sink_key() -> Column:
-    """Physical row key downstream: after image's handle for I/U, before
-    image's for D (valid post update-split, where U never changes it)."""
-    return F.coalesce(F.col("after.id"), F.col("before.id"))
-
-
 def materialize_state(cl_split: DataFrame) -> DataFrame:
     """Final downstream table state after applying the (post-split)
     changelog — the sync-diff oracle. Last write per key wins; a last
-    DELETE removes the row. Intra-commit-ts tiebreak via dml_order
-    (D=1 < I=3, the split pieces' order)."""
-    keyed = cl_split.withColumn("_key", sink_key()).withColumn(
+    DELETE removes the row. The key is the handle, the image's first
+    column: the after image's for I/U, the before image's for D (valid
+    post update-split, where U never changes it). Intra-commit-ts
+    tiebreak via dml_order (D=1 < I=3, the split pieces' order)."""
+    names = cl_split.schema["after"].dataType.names
+    after = F.col("after")
+    keyed = cl_split.withColumn(
+        "_key", F.coalesce(after[names[0]], F.col("before")[names[0]])
+    ).withColumn(
         # commit_ts µs * 4 stays far below int64; dml_order ∈ {1,2,3}
         "_ord", F.col("commit_ts") * 4 + F.col("dml_order")
     )
@@ -326,8 +326,8 @@ def materialize_state(cl_split: DataFrame) -> DataFrame:
     # the op survives as its dml_order code (D=1).
     g = keyed.groupBy("schema_name", "table_name", "_key").agg(
         F.max_by("dml_order", "_ord").alias("_last_code"),
-        F.max_by("after.val", "_ord").alias("last_val"),
-        F.max_by("after.k", "_ord").alias("last_k"),
+        *[F.max_by(after[n], "_ord").alias(f"_v{i}")
+          for i, n in enumerate(names[1:])],
         F.max("commit_ts").alias("last_commit_ts"),
         F.count(F.lit(1)).alias("n_changes"),
     )
@@ -335,9 +335,8 @@ def materialize_state(cl_split: DataFrame) -> DataFrame:
         g.filter(F.col("_last_code") != 1)
         .select(
             "schema_name", "table_name",
-            F.col("_key").alias("id"),
-            F.col("last_val").alias("val"),
-            F.col("last_k").alias("k"),
+            F.col("_key").alias(names[0]),
+            *[F.col(f"_v{i}").alias(n) for i, n in enumerate(names[1:])],
             "last_commit_ts", "n_changes",
         )
     )

@@ -381,7 +381,8 @@ def storage_live_roundtrip(cl_split: DataFrame,
               spool_conf=(spool_conf_from_cfg(cfg)
                           if cfg is not None else None))
     fetched = get_files_df(spark, srv.endpoint, cred1, cred2, scheme=scheme)
-    return replay_to_state(decode_csv_storage(fetched), order_col="commit_ts")
+    return replay_to_state(
+        decode_csv_storage(fetched, cl_split.schema["after"].dataType))
 
 
 def storage_live_s3_roundtrip(cl_split: DataFrame) -> DataFrame:

@@ -18,9 +18,11 @@ collapses into one ``StreamingQuery``:
   broadcast are built from those few rows with no further Spark job
   (file/DB sinks: one aggregate, ``kafka_live.summarize``, before the
   write).  The resolved ts reaches downstream through the progress
-  log's ``resolved_ts`` and the live WATERMARK broadcast.  One epoch is
-  one data pass, the Structured Streaming (SIGMOD 2018) micro-batch
-  model.
+  log's ``resolved_ts`` and the live WATERMARK broadcast.  The
+  watermark and DDL broadcasts carry the frames of the changefeed's own
+  protocol (its ``pipeline.PROTOCOLS`` record), built on the driver.
+  One epoch is one data pass, the Structured Streaming (SIGMOD 2018)
+  micro-batch model.
 - epoch size = the changefeed's ``memory-quota``
   (`pkg/config/server.go:44-45`, 1 GiB default): each epoch admits
   source files up to that many on-disk bytes (at least one file), so a
@@ -164,7 +166,7 @@ class Changefeed:
         # reference; a deployment wires the DDL job fetcher here): each
         # {"commit_ts", "schema_name", "table_name", "query", "ddl_type"}.
         # A DDL whose ts falls inside a micro-batch splits it at the
-        # barrier (W3), broadcasts the canal-json DDL message to every
+        # barrier (W3), broadcasts the protocol's DDL message to every
         # partition on the wire (reference MQ behavior), and bumps the
         # schema-version registry — exactly once across epoch replays
         # via the DDLTsBook.
@@ -174,6 +176,7 @@ class Changefeed:
         self.progress_path = os.path.join(work_dir, "progress", f"{changefeed_id}.jsonl")
         self.query = None
         self._sink_compile = None
+        self._protocol = None
 
     # -- sink --------------------------------------------------------------
     def _foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -395,16 +398,14 @@ class Changefeed:
         return [t for t in pending if t <= mx], sorted(topics)
 
     def _apply_live_ddl(self, ddl: dict, topics: list[str], book) -> None:
-        """Exactly-once DDL application at the barrier: broadcast the
-        canal-json DDL message (`canal_json_encoder.go:384-399` frame)
-        to EVERY partition of every routed topic — the reference MQ
-        sink's DDL broadcast — then bump the schema-version registry and
-        mark the ts applied.  A crash between broadcast and record
-        re-broadcasts on replay (at-least-once, consumer dedups), the
-        same contract as the data path."""
-        from ticdc_spark.codec.canal_json import canal_ddl_message
-
-        self._broadcast(topics, canal_ddl_message(ddl))
+        """Exactly-once DDL application at the barrier: broadcast the DDL
+        message of the changefeed's own protocol (its ``PROTOCOLS``
+        record's ``ddl`` frame) to EVERY partition of every routed topic
+        — the reference MQ sink's DDL broadcast — then bump the
+        schema-version registry and mark the ts applied.  A crash between
+        broadcast and record re-broadcasts on replay (at-least-once,
+        consumer dedups), the same contract as the data path."""
+        self._broadcast(topics, *self._protocol.ddl(ddl))
         # chaos hook: crash AFTER the wire broadcast but BEFORE the
         # registry bump + DDLTsBook record (the reference's
         # checkpoint_race_ddl_crash window) — restart replays the epoch
@@ -421,18 +422,19 @@ class Changefeed:
         book.record(ddl["commit_ts"])
 
     def _produce_live_watermarks(self, topics: list[str], resolved_ts: int) -> None:
-        """W1 live: after the flush, broadcast the epoch's resolved ts as a
-        canal-json TIDB_WATERMARK message to EVERY partition of every topic
-        seen this epoch (the reference's kafka sink broadcasts checkpoint
-        events exactly like DDLs — `canal_json_encoder.go:406-441` +
-        broadcast; see canal_checkpoints / kafka_ddl_broadcast)."""
-        from ticdc_spark.codec.canal_json import canal_watermark_message
+        """W1 live: after the flush, broadcast the epoch's resolved ts as
+        the watermark frame of the changefeed's own protocol to EVERY
+        partition of every topic seen this epoch (the reference's kafka
+        sink broadcasts checkpoint events exactly like DDLs).  Canal-json
+        broadcasts one every epoch, with or without
+        enable-tidb-extension."""
+        self._broadcast(topics, *self._protocol.watermark(resolved_ts))
 
-        self._broadcast(topics, canal_watermark_message(resolved_ts))
-
-    def _broadcast(self, topics: list[str], value: bytes) -> None:
-        """One keyless control message to EVERY partition of ``topics``,
-        sent as ONE Produce request (every partition's error checked)."""
+    def _broadcast(self, topics: list[str], key: bytes | None,
+                   value: bytes) -> None:
+        """One control message to EVERY partition of ``topics``, sent as
+        ONE Produce request (every partition's error checked); built on
+        the driver, so no Spark job runs."""
         from ticdc_spark.codec.kafka_wire import Record
         from ticdc_spark.sinks.kafka_client import KafkaConn
         from ticdc_spark.sinks.kafka_live import conn_options
@@ -442,7 +444,7 @@ class Changefeed:
                 **conn_options(self.produce_opts)) as conn:
             md = conn.metadata(topics)
             conn.produce_all({
-                t: {pt["index"]: [Record(None, value)]
+                t: {pt["index"]: [Record(key, value)]
                     for pt in md["topics"][t]["partitions"]}
                 for t in topics})
 
@@ -479,11 +481,19 @@ class Changefeed:
     def start(self, spark: SparkSession, sf_dir: str, available_now: bool = True):
         from ticdc_spark.pipeline import (
             DB_SCHEMES, STORAGE_SCHEMES, build_pipeline, build_pipeline_uncoded,
-            compile_sink_tail, sink_scheme,
+            compile_sink_tail, protocol_record, sink_scheme,
         )
 
-        cl = stream_changelog(spark, sf_dir, self.cfg.memory_quota)
         scheme = sink_scheme(self.cfg)
+        live_mq = (self.live_bootstrap is not None
+                   and scheme not in DB_SCHEMES
+                   and scheme not in STORAGE_SCHEMES)
+        if live_mq:  # the wire carries the protocol's own control frames
+            self._protocol = protocol_record(self.cfg)
+            if None in (self._protocol.ddl, self._protocol.watermark):
+                raise ValueError(f"protocol {self.cfg.protocol!r} has no live "
+                                 "DDL and watermark frames")
+        cl = stream_changelog(spark, sf_dir, self.cfg.memory_quota)
         if scheme in DB_SCHEMES or scheme in STORAGE_SCHEMES:
             # stream the streaming-safe filter prefix; the sink-specific
             # tail (compaction windows, SQL batching, file layout) runs
