@@ -128,9 +128,9 @@ def test_open_protocol(cl, ddl):
 
 
 def test_simple(cl, ddl):
-    from ticdc_spark.codec.simple_protocol import (encode_simple,
+    from ticdc_spark.codec.simple_protocol import (ddl_message,
+                                                   encode_simple,
                                                    encode_simple_bootstrap,
-                                                   encode_simple_ddl,
                                                    watermark_messages)
 
     head = {"version": 1, "buildTs": 0, "schema": SCHEMA, "table": TABLE}
@@ -139,7 +139,7 @@ def test_simple(cl, ddl):
         assert m == {
             **head, "type": {"I": "INSERT", "U": "UPDATE"}.get(op, "DELETE"),
             "commitTs": TS + i, "data": _text(a), "old": _text(b)}
-    (m,), = _rows(encode_simple_ddl(ddl), "value")
+    m = json.loads(ddl_message(ddl.first().asDict()))
     assert m == {**head, "type": "DDL", "commitTs": TS, "sql": DDL_SQL,
                  "tableSchema": {"columns": ["id"]}}
     m = json.loads(watermark_messages(cl).first().value)

@@ -71,11 +71,6 @@ def watermark_message(resolved_ts: int, schema_name, table_name) -> bytes:
     return json_dumps(m).encode()
 
 
-def encode_simple_ddl(ddl: DataFrame) -> DataFrame:
-    """:func:`ddl_message` as a ``value`` column, one per DDL row."""
-    return with_frames(ddl, lambda r: (ddl_message(r),), ("value",))
-
-
 def encode_simple_bootstrap(cl: DataFrame,
                             pk_names: tuple[str, ...] = ("id",)) -> DataFrame:
     """One BOOTSTRAP message per (schema_name, table_name) of ``cl``

@@ -272,13 +272,11 @@ PROTOCOLS = {
         _keyless(lambda ts: simple_protocol.watermark_message(ts, None,
                                                               None)),
         consumer.decode_simple),
-    # confluent-framed binary (the wire shape)
-    "avro": Protocol(_avro, None, None, None),
-    # JSON debug twin
-    "avro-json": Protocol(lambda df, cfg: encode_avro_json(df),
-                          None, None, None),
-    # confluent-framed Avro binary
-    "debezium-avro": Protocol(_debezium_avro, None, None, None),
+    "avro": Protocol(_avro, None, None, None),  # confluent-framed binary
+    "avro-json": Protocol(  # JSON debug twin
+        lambda df, cfg: encode_avro_json(df), None, None, None),
+    "debezium-avro": Protocol(  # confluent-framed Avro binary
+        _debezium_avro, None, None, None),
 }
 
 

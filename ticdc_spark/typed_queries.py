@@ -322,7 +322,8 @@ def q_lineitem_composite_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 import json as _json  # noqa: E402
 
-from ticdc_spark.codec.simple_protocol import encode_simple_ddl  # noqa: E402
+from ticdc_spark.codec.simple_protocol import ddl_message  # noqa: E402
+from ticdc_spark.functions.render import with_frames  # noqa: E402
 from ticdc_spark.plans.schema_registry import SCHEMA_VERSIONS  # noqa: E402
 
 _DDL_TEXT = {
@@ -379,32 +380,12 @@ def q_simple_ddl_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("schema_version").distinct()
         .filter(F.col("schema_version") >= 2)
     )
-    ddl = versions.select(
-        "schema_version",
-        F.lit("tpch").alias("schema_name"),
-        F.lit("orders").alias("table_name"),
-        F.element_at(
-            F.create_map(*[
-                x for v in (2, 3)
-                for x in (F.lit(v), F.lit(_VTS[v]))
-            ]),
-            F.col("schema_version"),
-        ).alias("commit_ts"),
-        F.element_at(
-            F.create_map(*[
-                x for v in (2, 3) for x in (F.lit(v), F.lit(_DDL_TEXT[v]))
-            ]),
-            F.col("schema_version"),
-        ).alias("query"),
-        F.element_at(
-            F.create_map(*[
-                x for v in (2, 3)
-                for x in (F.lit(v), F.lit(_table_schema_json(v)))
-            ]),
-            F.col("schema_version"),
-        ).alias("table_schema_json"),
-    )
-    return encode_simple_ddl(ddl).select("schema_version", "value")
+    frames = {v: ddl_message({
+        "schema_name": "tpch", "table_name": "orders", "commit_ts": _VTS[v],
+        "query": _DDL_TEXT[v], "table_schema_json": _table_schema_json(v)})
+        for v in (2, 3)}
+    return with_frames(versions, lambda r: (frames[r["schema_version"]],),
+                       ("value",))
 
 
 # ---------------------------------------------------------------------------
