@@ -252,7 +252,7 @@ def _keyless(build):
 
 # protocol enum per `pkg/config/sink_protocol.go:33-44`. The avro
 # protocols' control frames need the schema registry a live changefeed
-# does not have yet (ROADMAP Fix-first #1); csv and avro-json have none.
+# does not have yet; csv and avro-json have none.
 PROTOCOLS = {
     "canal-json": Protocol(
         _canal_json, _keyless(canal_json.ddl_message),

@@ -425,9 +425,8 @@ class Changefeed:
         """W1 live: after the flush, broadcast the epoch's resolved ts as
         the watermark frame of the changefeed's own protocol to EVERY
         partition of every topic seen this epoch (the reference's kafka
-        sink broadcasts checkpoint events exactly like DDLs).  Canal-json
-        broadcasts one every epoch, with or without
-        enable-tidb-extension."""
+        sink broadcasts checkpoint events exactly like DDLs), with or
+        without enable-tidb-extension."""
         self._broadcast(topics, *self._protocol.watermark(resolved_ts))
 
     def _broadcast(self, topics: list[str], key: bytes | None,
